@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   // 1-min loadavg: sampled BEFORE the session starts (ambient — other
   // processes on the box) and after the run (mostly us). Two rounds running,
@@ -56,28 +55,22 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val loadStart = loadAvg
     val ioStart = ioPressure
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Session.envCpus(4)
     // shuffle width defaults to the thread count (right at the gated SFs);
     // scale rehearsals override it — at 100× data a fixed 32-way shuffle
     // puts ~500 MB through each reducer in the array-verify joins and the
     // spill, not the algorithm, dominates the tail (a real cluster sizes
     // partitions to data; this knob is that sizing for the rehearsal)
     val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      // same timezone pin as Verify: the events view's NTZ->LTZ ts cast
-      // must mean the same instants the DuckDB oracle sees
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus.toString)
+    val spark = Session.local(cpus,
+      "spark.sql.shuffle.partitions" -> shufflePartitions,
       // the suite compiles ~260 distinct codegen stages (warmup + run); the
       // 100-entry default class cache evicts every warmed stage before its
       // measured run, so the measurement re-pays Janino compilation.
       // Env-overridable for the suite-length drift A/B (BASELINE.md r14).
-      .config("spark.sql.codegen.cache.maxEntries",
+      "spark.sql.codegen.cache.maxEntries" ->
         sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "2000"))
-      .getOrCreate()
     // ERROR, not WARN: a single WindowExec warning line costs ~140 chars of
     // the driver's 2000-char stdout tail that the metric line must survive in
     spark.sparkContext.setLogLevel("ERROR")

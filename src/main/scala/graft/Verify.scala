@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -20,17 +19,10 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     // optional 3rd+ args: run only these query names (debug aid)
     val only: Set[String] = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the 131-query sweep compiles >200 codegen stages; the 100-entry
-      // default class cache thrashes (see Bench.scala)
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.envCpus(4)
+    // the 131-query sweep compiles >200 codegen stages; the 100-entry
+    // default class cache thrashes (see Bench.scala)
+    val spark = Session.local(cpus, "spark.sql.codegen.cache.maxEntries" -> "2000")
     new java.io.File(outDir).mkdirs()
 
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -54,7 +46,7 @@ object Verify {
     val t0 = System.nanoTime()
     def log(m: String): Unit =
       System.err.println(f"[verify +${(System.nanoTime() - t0) / 1e9}%.1fs] $m")
-    val nThreads = math.max(2, math.min(8, cpus.toInt / 4))
+    val nThreads = math.max(2, math.min(8, cpus / 4))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(nThreads)
     val done = new java.util.concurrent.atomic.AtomicInteger(0)
     val tasks = selected.map { case (name, fn) =>

@@ -34,9 +34,16 @@ import org.apache.spark.unsafe.types.UTF8String
   *    (pure ASCII by construction), so it equals `md5()` of the built
   *    feature string without ever building it; the 256 two-char bucket
   *    strings are interned constants.
-  * The equality spec (FeatureBucketSpec) asserts array-identical output
-  * against the SQL pipeline on the documents fixture and adversarial
-  * inputs (empty, no-letter, unicode-case, single-token strings).
+  * The equality spec (OpsSpec, "fused feature_buckets kernel == the SQL
+  * composition") asserts array-identical output against the SQL pipeline
+  * on the documents fixture and adversarial inputs (empty, no-letter,
+  * unicode-case, single-token strings).
+  *
+  * Collation: assumes the default UTF8_BINARY collation. The kernel lowers
+  * with `UTF8String.toLowerCase`, which is what `lower()` computes under
+  * UTF8_BINARY; under another session collation Spark's `lower()` is
+  * collation-aware and may lower differently, so the equality no longer
+  * holds.
   */
 object FeatureBucketKernel {
   /** interned "00".."ff" bucket strings — outputs are references */

@@ -115,7 +115,9 @@ object VecHash {
     * `array_join(slice(split(lower(text)), i, k), ' ')` is literally a byte
     * RANGE of the lowered text (single-space separator), so the per-gram
     * FNV-1a base hashes in place; `array_distinct` is dropped because min
-    * is idempotent — duplicate grams cannot change any sig slot. */
+    * is idempotent — duplicate grams cannot change any sig slot.
+    * Assumes the default UTF8_BINARY collation, as [[ShingleKernel]] does:
+    * `UTF8String.toLowerCase` is `lower()` only under UTF8_BINARY. */
   def minhashText(text: org.apache.spark.unsafe.types.UTF8String,
                   k: Int, numHashes: Int): Array[Long] = {
     val lower = text.toLowerCase

@@ -33,6 +33,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * shingle oracle already carries). The equality spec asserts
   * array-identical output against the SQL pipeline on real and adversarial
   * fixtures.
+  *
+  * Collation: assumes the default UTF8_BINARY collation, as
+  * [[FeatureBucketKernel]] does — `UTF8String.toLowerCase` is `lower()`
+  * only under UTF8_BINARY.
   */
 object ShingleKernel {
   private val SEED = 42L // Spark's xxhash64 default seed

@@ -15,11 +15,11 @@ import org.apache.spark.sql.types._
   * WindowGroupLimit pushdown keeps the per-query exchange skinny, but its
   * Partial step still SORTS every candidate row per partition — at 100x
   * s20 that is a 424M-row local sort costing ~2/3 of the query while the
-  * join+cosine work costs 1/3 (S20Probe, measured). A grouped top-k is an
-  * O(n) streaming insert, not a sort: this aggregate keeps the k best
-  * (key DESC NULLS LAST, id ASC — exactly the window's order) in 2k
-  * mutable fixed-width buffer slots, so it hash-aggregates (never
-  * ObjectHashAggregate's 128-group sort fallback, never SortAggregate)
+  * join+cosine work costs 1/3 (OPTIMIZATION_r15.md "s20_knn_bucketed"). A
+  * grouped top-k is an O(n) streaming insert, not a sort: this aggregate
+  * keeps the k best (key DESC NULLS LAST, id ASC — exactly the window's
+  * order) in 2k mutable fixed-width buffer slots, so it hash-aggregates
+  * (never ObjectHashAggregate's 128-group sort fallback, never SortAggregate)
   * and reduces map-side: each partition sends at most k slots per group
   * into the exchange, the same volume WindowGroupLimit shipped, minus
   * both of its sorts.

@@ -194,7 +194,8 @@ object Dedup {
     // of lower(text) in place — bit-identical to
     // minhash_sig(shingles(text,k)) (OpsSpec pins it; min is idempotent so
     // dropping array_distinct changes nothing) and 7.4× faster at 100×
-    // (D02Probe: 9.78 → 1.33 s for the 500k-doc signature pass)
+    // (9.78 → 1.33 s for the 500k-doc signature pass; OPTIMIZATION_r16.md
+    // "minhash LSH family")
     base.withColumn("minhash_sig",
         graft.functions.MinHashFunctions
           .minhashSigText(col(textCol), shingleSize, numHashes))
@@ -605,8 +606,10 @@ object Dedup {
       // the surviving pair set is exactly the first-match-filtered one,
       // and completeness is untouched (only provably-below-threshold
       // pairs drop). At 100× this prunes the verify stream 31.0M →
-      // 12.5M candidates (D12Probe) — the verify joins ship shingle
-      // ARRAYS, so every pruned candidate saves ~1.5 KB of shuffle.
+      // 12.5M candidates (round 15; OPTIMIZATION_r16.md
+      // "d15_containment_pairs" carries the same bound to containment) —
+      // the verify joins ship shingle ARRAYS, so every pruned candidate
+      // saves ~1.5 KB of shuffle.
       .filter((lit(1) + least(col("sz_a") - col("p_a") - 1,
           col("sz_b") - col("p_b") - 1)).cast("double") >=
         lit(threshold / (1.0 + threshold)) * (col("sz_a") + col("sz_b")) -
@@ -731,8 +734,9 @@ object Dedup {
     // produces exactly the distinct xxhash64 values the old per-window
     // array_join/transform string construction built (sorted — irrelevant,
     // the groupBy keys on the value), with zero window-string allocation:
-    // 8.57 → 1.14 s for the 100× span explosion (D16Probe; identity
-    // check: same count + decimal hash sum on both paths)
+    // 8.57 → 1.14 s for the 100× span explosion (OPTIMIZATION_r16.md
+    // "d16_shared_spans"; identity check: same count + decimal hash sum
+    // on both paths)
     val spans = df.select(col(idCol).as("sid"),
       explode(graft.functions.ShingleFunctions
         .shingleHashes(col(textCol), spanTokens)).as("wh"))
@@ -765,7 +769,8 @@ object Dedup {
   def simhash64(df: DataFrame, textCol: String = "text"): DataFrame =
     // fused text→fingerprint kernel (opt round 16): per-token byte-range
     // hashing, bit-identical to simhash64(split(lower(text), ' ')) (OpsSpec
-    // pins it) — 4.7× faster fingerprint pass at 100× (D03bProbe)
+    // pins it) — fingerprint pass 10.1 → 1.7 s at 100× (OPTIMIZATION_r16.md
+    // "d03b_simhash_prod")
     df.withColumn("simhash",
       graft.functions.MinHashFunctions.simhash64Text(col(textCol)))
 
@@ -872,7 +877,7 @@ object Dedup {
     // the documented ~1e-13 64-bit collision tolerance every hashed-shingle
     // oracle already carries — without materializing the gram-string array
     // a second way (the composed fingerprint pass read 10.1 s at 100× vs
-    // 2.1 s fused, D03bProbe)
+    // 1.7 s fused, OPTIMIZATION_r16.md "d03b_simhash_prod")
     val fp = simhash64(base, textCol)
       .withColumn("sz", size(sortedHashedShingles(textCol, shingleSize)))
       .select(col(idCol).as("sv_id"), col("simhash"), col("sz"))
@@ -1293,19 +1298,21 @@ object Dedup {
     // (u, v, deg): reused every round. CACHED pre-partitioned on the join
     // key, not localCheckpointed — Spark 4's localCheckpoint drops
     // outputPartitioning (the LogicalRDD plans as partition-less,
-    // measured in D17Probe), which re-shuffled the WHOLE edge list into
-    // the rank join every round; a cached REPARTITION_BY_NUM leaf keeps
+    // BASELINE.md round 15 "d17 graphRank"), which re-shuffled the WHOLE
+    // edge list into the rank join every round; a cached REPARTITION_BY_NUM
+    // leaf keeps
     // hash(u, P) (AQE never coalesces an explicit count), so the
     // per-round join reads edges in place and only the contribution
     // aggregate exchanges. P = the session's shuffle parallelism.
     //
     // deg rides as a WINDOW count over the SAME u-keyed exchange the
-    // cache pins (opt round 16 — D17Probe2: edge prep was 48 s of d17's
+    // cache pins (opt round 16 — edge prep was 48 s of d17's
     // ~57 s at 100×, and 2 of its 3 full |2E|-row exchanges were the deg
     // groupBy's re-exchange + the deg join feeding the explicit
     // repartition; count(*) over (partition by u) on the repartitioned
     // stream is the same per-u row count with ZERO extra exchange, and
-    // the window's u-sort happens once, inside the cached frame).
+    // the window's u-sort happens once, inside the cached frame; the
+    // within-JVM A/B is VERDICT.md's d17 row).
     val nShuffle = spark.sessionState.conf.numShufflePartitions
     val edges = edges0
       .repartition(nShuffle, col("u"))
@@ -1466,8 +1473,8 @@ object Dedup {
     // key DESC NULLS LAST, id ASC is the same total order) but its
     // struct-typed buffer forced a SortAggregate, sorting the whole
     // cluster membership. (The r8 refutation only covered max_by, which
-    // ALSO SortAggregates — tools/PlanProbe; a fixed-width kernel is the
-    // shape neither builtin offers.)
+    // ALSO SortAggregates — COVERAGE.md "Round-8 plan notes"; a
+    // fixed-width kernel is the shape neither builtin offers.)
     val winners = member.groupBy("cluster_id")
       .agg(graft.functions.TopKFunctions
         .topkByKey(col("__q"), col("node"), 1).as("w"))

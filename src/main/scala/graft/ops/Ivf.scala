@@ -231,12 +231,13 @@ object Ivf {
     // persisted so the write and the counter count compute the assignment
     // once (the count previously re-derived every centroid distance)
     val toWrite = assigned.select((dataCols :+ "cell").map(col): _*).persist()
-    toWrite.write.mode("append").partitionBy("cell").parquet(s"$path/cells")
-    // advisory rowcount: increment by the batch (O(batch)); an index saved
-    // before counters existed seeds lazily on its first delete instead
-    readCounter(fs, path, "rowcount").foreach(n =>
-      writeCounter(fs, path, "rowcount", n + toWrite.count()))
-    toWrite.unpersist()
+    try {
+      toWrite.write.mode("append").partitionBy("cell").parquet(s"$path/cells")
+      // advisory rowcount: increment by the batch (O(batch)); an index saved
+      // before counters existed seeds lazily on its first delete instead
+      readCounter(fs, path, "rowcount").foreach(n =>
+        writeCounter(fs, path, "rowcount", n + toWrite.count()))
+    } finally toWrite.unpersist()
     load(spark, path)
   }
 
@@ -261,15 +262,16 @@ object Ivf {
     // cast-to-long would null out non-numeric ids and the anti-join would
     // match nothing — a delete that "succeeds" and removes nothing)
     val t = ids.select(col(idCol).as("n_id")).distinct().persist()
-    // one aggregate carries BOTH the null check and the batch size
-    // (count(col) skips nulls), and the persisted distinct is computed
-    // once instead of three times (null check, write, counter count)
-    val aggRow = t.agg(count(lit(1)), count(col("n_id"))).head()
-    val batchN = aggRow.getLong(0)
-    require(batchN == aggRow.getLong(1),
-      "deleteFromSaved: null ids in the delete batch")
-    t.write.mode("append").parquet(s"$path/tombstones")
-    t.unpersist()
+    val batchN = try {
+      // one aggregate carries BOTH the null check and the batch size
+      // (count(col) skips nulls), and the persisted distinct is computed
+      // once instead of three times (null check, write, counter count)
+      val aggRow = t.agg(count(lit(1)), count(col("n_id"))).head()
+      require(aggRow.getLong(0) == aggRow.getLong(1),
+        "deleteFromSaved: null ids in the delete batch")
+      t.write.mode("append").parquet(s"$path/tombstones")
+      aggRow.getLong(0)
+    } finally t.unpersist()
     // auto-compaction: the per-search anti-join costs grow with the
     // tombstone set, so once tombstones reach `autoCompactRatio` of the
     // layout's rows, fold them in now (semantically invisible — search

@@ -221,10 +221,10 @@ object Similarity {
     // insert that hash-aggregates and reduces map-side — replaces the
     // row_number window, whose WindowGroupLimit Partial step SORTS the
     // full candidate stream per partition (424M rows = ~2/3 of s20's 100x
-    // cost, S20Probe-measured; the aggregate keeps the same skinny
-    // exchange volume and the identical (sim DESC, n_id ASC) total order,
-    // so results are bit-equal — SimilaritySpec pins agg == window on
-    // tie-heavy data). k <= 4 plans the declarative kernel; above it the
+    // cost, OPTIMIZATION_r15.md "s20_knn_bucketed"; the aggregate keeps
+    // the same skinny exchange volume and the identical (sim DESC, n_id
+    // ASC) total order, so results are bit-equal — SimilaritySpec pins
+    // agg == window on tie-heavy data). k <= 4 plans the declarative kernel; above it the
     // loop-based imperative twin (opt round 16 — the old k-cap cliff where
     // k = 5 silently lost the whole optimization is gone) up to MaxAggK,
     // for fixed-width id types; the window form remains the fallback.

@@ -536,7 +536,7 @@ object TextOps {
       .filter(col("term") =!= "")
     val tf = toks.groupBy(col(idCol), col("term")).agg(count(lit(1)).as("tf"))
     val nDocs = df.agg(countDistinct(col(idCol)).as("n_docs"))
-    // REFUTED (opt round 16, T13Probe numbers): making this branch's
+    // REFUTED (OPTIMIZATION_r16.md "t13_tfidf"): making this branch's
     // aggregate reference tf's count (sum(when(tf>=1,1,0))) so both
     // branches canonicalize to the same (doc,term) aggregate does NOT get
     // the token explode+shuffle reused — AQE stage reuse never fired on
@@ -656,7 +656,7 @@ object TextOps {
     * [[hashedLinearScore]] and [[dsirWeights]]/[[dsirScore]].
     * Fused kernel (opt round 16): array-identical to the composed
     * `transform(concat(filter(split(lower(t),"[^a-z]+"),…), zip_with(…)),
-    * f -> substring(md5(f),1,2))` — FeatureBucketSpec pins the equality;
+    * f -> substring(md5(f),1,2))` — OpsSpec pins the equality;
     * the composed form materialized every token/bigram STRING just to
     * md5-prefix it (the d15/d16 shingle-string cost, same fix). */
   def hashedFeatureBuckets(textCol: Column): Column =

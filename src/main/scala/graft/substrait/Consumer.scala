@@ -1073,7 +1073,8 @@ object Consumer {
         // CreateArray carrying |vs| child literal nodes: every analyzer
         // pass over the rebuilt plan re-walks literal subtrees, and a
         // consumed codebook literal (16×64×4 doubles in s11) made
-        // Consumer.consume alone cost ~0.9 s (opt r15, SProbe measured;
+        // Consumer.consume alone cost ~0.9 s (OPTIMIZATION_r15.md "Wire
+        // consume: array literals";
         // encode/decode of the same plan is ~10 ms). Literal.create
         // converts the external value in one step; the elementwise
         // CreateArray stays as the fallback for any value the converter

@@ -59,31 +59,41 @@ object Wire {
       v
     }
     def fixed32(): Int = {
+      checkLen(4)
       val v = (buf(pos) & 0xff) | ((buf(pos + 1) & 0xff) << 8) |
         ((buf(pos + 2) & 0xff) << 16) | ((buf(pos + 3) & 0xff) << 24)
       pos += 4; v
     }
     def fixed64(): Long = {
+      checkLen(8)
       var v = 0L; var i = 0
       while (i < 8) { v |= (buf(pos + i) & 0xffL) << (8 * i); i += 1 }
       pos += 8; v
     }
     private def checkLen(len: Int): Unit =
-      if (len < 0 || pos + len > end) internalErr(s"truncated message: need $len bytes, have ${end - pos}")
+      if (len < 0 || len > end - pos) internalErr(s"truncated message: need $len bytes, have ${end - pos}")
+    /** A length prefix, bounded while still a Long: `toInt` first would
+      * wrap 2^32 + k to k and mis-parse the rest of the message. */
+    private def length(): Int = {
+      val len = varint()
+      if (len < 0 || len > end - pos)
+        internalErr(s"truncated message: length $len at byte offset $pos, have ${end - pos}")
+      len.toInt
+    }
     def lenDelim(): R = {
-      val len = varint().toInt; checkLen(len)
+      val len = length()
       val r = new R(buf, pos, pos + len); pos += len; r
     }
     def rawBytes(): Array[Byte] = {
-      val len = varint().toInt; checkLen(len)
+      val len = length()
       val a = java.util.Arrays.copyOfRange(buf, pos, pos + len); pos += len; a
     }
     def str(): String = new String(rawBytes(), "UTF-8")
     def skip(wt: Int): Unit = wt match {
       case 0 => varint()
-      case 1 => checkLen(8); pos += 8
-      case 2 => val len = varint().toInt; checkLen(len); pos += len
-      case 5 => checkLen(4); pos += 4
+      case 1 => fixed64()
+      case 2 => val len = length(); pos += len
+      case 5 => fixed32()
       case _ => internalErr(s"unknown wire type $wt")
     }
     /** Iterate (fieldNumber, wireType) handing this reader positioned at the value. */

@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.Session
 
 /** Round-11 verdict task 1: certify the blocked-Jaccard EXTREME-BLOCK escape
   * hatch at rehearsal scale — not just the forced bigBucket=10 unit fixture.
@@ -32,12 +33,7 @@ object BigBlockGate {
     val dir = args.headOption.getOrElse("/root/repo/tmp-sf3-fresh")
     val mode = if (args.length > 1) args(1) else "routed"
     val maxDocs = if (args.length > 2) args(2).toLong else 0L
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(Session.envCpus(8))
     spark.sparkContext.setLogLevel("ERROR")
 
     val base0 = spark.read.parquet(s"$dir/documents.parquet")

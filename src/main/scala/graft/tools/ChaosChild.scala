@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.Session
 import graft.sources.Sources
 
 /** Child-JVM workload for [[DriverKillGate]]: performs a REAL versioned /
@@ -79,16 +80,10 @@ object ChaosChild {
   def main(args: Array[String]): Unit = {
     val mode = args(0)
     val base = args(1)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-chaos-child")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
+    val spark = Session.local(4,
+      "spark.app.name" -> "graft-chaos-child",
+      "spark.sql.warehouse.dir" ->
         java.nio.file.Files.createTempDirectory("chaos_child_wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     mode match {
       case "delta" =>
         Sources.deltaCommit(spark, base, init(spark), "lang",

@@ -8,6 +8,8 @@ import scala.concurrent.duration._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Session
+
 /** Round-14 concurrency gate: the two load-bearing claims a shared driver
   * makes on day one, EXECUTED rather than argued:
   *
@@ -44,16 +46,11 @@ object ConcurrencyGate {
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.getOrElse("all")
     val sfDir = args.drop(1).headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .appName("graft-concurrency-gate")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
+    val spark = Session.local(Session.envCpus(16),
+      "spark.app.name" -> "graft-concurrency-gate",
+      "spark.sql.shuffle.partitions" -> "16",
+      "spark.sql.warehouse.dir" ->
         java.nio.file.Files.createTempDirectory("conc_wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     var failures = 0
     def run(name: String)(body: => (Boolean, String)): Unit =

@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import graft.Tables
+import graft.{Session, Tables}
 import graft.substrait.{Consumer, Serializer, Wire, Producer}
 
 /** Library-surface demo: SQL → Substrait bytes on disk → decode → DataFrame →
@@ -12,14 +11,7 @@ import graft.substrait.{Consumer, Serializer, Wire, Producer}
 object Demo {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(4, "spark.app.name" -> "graft-demo")
     Tables.register(spark, dir)
 
     val sql =

@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Session
 import graft.sources.Sources
 
 /** Round-14 driver-kill gate (r13 verdict item 6): the commit protocols'
@@ -44,16 +45,11 @@ object DriverKillGate {
 
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.getOrElse("all")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-driverkill-gate")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
+    val spark = Session.local(Session.envCpus(8),
+      "spark.app.name" -> "graft-driverkill-gate",
+      "spark.sql.shuffle.partitions" -> "8",
+      "spark.sql.warehouse.dir" ->
         java.nio.file.Files.createTempDirectory("dkg_wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     var failures = 0
     def run(name: String)(body: => (Boolean, String)): Unit =

@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.Session
 
 /** Pre-commit exactness check for the round-10 kernel rewrites, run on the
   * REAL gated fixtures (not synthetic spec corpora): s07's cluster-blocked
@@ -11,12 +12,7 @@ import org.apache.spark.sql.functions._
 object GateCheck {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(Session.envCpus(32))
     spark.sparkContext.setLogLevel("ERROR")
     var failed = false
 

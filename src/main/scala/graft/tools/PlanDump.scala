@@ -1,27 +1,29 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.{Session, SparkEntry}
 
-/** Dump the executed physical plan (and optionally run+time) any driver
-  * query: `runMain graft.tools.PlanDump <sfDir> <query> [run]`. The
-  * inspection loop the build instructions call for — explain, iterate.
+/** Dump the executed physical plan (and optionally run+time) of one or more
+  * driver queries in one JVM:
+  * `runMain graft.tools.PlanDump <sfDir> <query...> [run]`. Each plan
+  * follows a `######## <query>` header; redirect stdout to keep them.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: PlanDump <sfDir> <query> [run]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val df = graft.SparkEntry.queries(args(1))(spark, args(0))
-    println(df.queryExecution.executedPlan.toString)
-    if (args.length > 2 && args(2) == "run") {
-      val t0 = System.nanoTime()
-      val n = df.count()
-      println(s"rows=$n sec=${(System.nanoTime() - t0) / 1e9}")
+    require(args.length >= 2, "usage: PlanDump <sfDir> <query...> [run]")
+    val run = args.length > 2 && args.last == "run"
+    val queries = args.slice(1, if (run) args.length - 1 else args.length)
+    val unknown = queries.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
+    val spark = Session.local(Session.envCpus(32))
+    queries.foreach { q =>
+      println(s"######## $q")
+      val df = SparkEntry.queries(q)(spark, args(0))
+      println(df.queryExecution.executedPlan.toString)
+      if (run) {
+        val t0 = System.nanoTime()
+        val n = df.count()
+        println(s"rows=$n sec=${(System.nanoTime() - t0) / 1e9}")
+      }
     }
     spark.stop()
   }

@@ -2,9 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
-import graft.{SparkEntry, Tables}
+import graft.{Session, SparkEntry, Tables}
 
 /** Regenerates PLANS.md: the executed physical plans of flagship driver
   * queries (which include the substrait wire round-trip), annotated with the
@@ -99,10 +97,7 @@ object PlansDoc {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Session.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     Tables.register(spark, sfDir)
     val sb = new StringBuilder

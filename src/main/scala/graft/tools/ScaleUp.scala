@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Session
+
 /** Reproducible scale-rehearsal fixture generator: replicates an sf
   * directory N× with consistent key spaces, so any query can be re-run at
   * 10× (or 100×) data to measure its scaling exponent (see BASELINE.md
@@ -78,13 +80,9 @@ object ScaleUp {
     // reuse a live session (specs call main() in-process); stop only our own
     val ownSession = SparkSession.getActiveSession
       .orElse(SparkSession.getDefaultSession).isEmpty
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(32,
+      "spark.master" -> sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"),
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true")
 
     val frames: Map[String, DataFrame] =
       tables.map(t => t -> spark.read.parquet(s"$inDir/$t.parquet")).toMap

@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Session
+
 /** Round-13 skew gate: SKEW IS PLANTED AND OBSERVED, not reasoned about.
   * The r12 verdict's boundary 2 — "no rehearsal fixture plants a
   * Zipf-skewed join key (one language = 50% of corpus, one giant cluster
@@ -38,15 +40,8 @@ object SkewGate {
     val mode = args.headOption.getOrElse("all")
     val factRows = if (args.length > 1) args(1).toLong else 10000000L
     val clusterRows = if (args.length > 2) args(2).toLong else 2000000L
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-skew-gate")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.envCpus(8),
+      "spark.app.name" -> "graft-skew-gate")
 
     var failures = 0
     def run(name: String)(body: => (Boolean, String)): Unit =

@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Session
 import graft.streaming.{EventStream, Sinks, StateMetrics}
 
 /** Round-14 streaming state-store gate at rehearsal scale: the r12/r13
@@ -26,16 +26,11 @@ object StateMetricsGate {
 
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.getOrElse("all")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .appName("graft-state-gate")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
+    val spark = Session.local(Session.envCpus(16),
+      "spark.app.name" -> "graft-state-gate",
+      "spark.sql.shuffle.partitions" -> "16",
+      "spark.sql.warehouse.dir" ->
         java.nio.file.Files.createTempDirectory("smg_wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     val nBatches = 12
     val rows = 120000

@@ -575,7 +575,7 @@ class PlanQualitySpec extends SparkTestBase {
       // ≤ |Q|·nprobe·k skinny slot rows reach the per-query exchange,
       // and NO candidate-stream sort exists anywhere (the row_number
       // window's WindowGroupLimit Partial sorted all 424M candidates at
-      // 100×, S20Probe-measured as ~2/3 of the query)
+      // 100×, ~2/3 of the query: OPTIMIZATION_r15.md "s20_knn_bucketed")
       assert(p.contains("topk_by_key"),
         s"top-k hash aggregate missing:\n$p")
       assert(p.contains("partial_topk_by_key"),

@@ -147,6 +147,20 @@ class IvfSpec extends SparkTestBase {
     assert(backIn.assigned.filter(col("n_id") === 7).count() == 1)
   }
 
+  test("a failed delete batch releases its cached ids") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_null").toString
+    Ivf.save(Ivf.build(embs, nlist = 8), dir)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val withNull = embs.filter(col("vec_id") < 3)
+      .select(when(col("vec_id") =!= 0, col("vec_id")).as("vec_id"))
+    val e = intercept[IllegalArgumentException] {
+      Ivf.deleteFromSaved(spark, dir, withNull)
+    }
+    assert(e.getMessage.contains("null ids"))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before,
+      "the persisted delete batch outlived the failed call")
+  }
+
   test("append to a metaCols index conforms or fails loudly") {
     val idx = Ivf.build(embs.filter(col("vec_id") % 2 === 0), nlist = 8,
       metaCols = Seq("label"))

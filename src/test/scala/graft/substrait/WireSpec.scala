@@ -297,4 +297,74 @@ class WireSpec extends AnyFunSuite {
       intercept[Exception](Wire.decode(t))
     }
   }
+
+  // ---- malformed frames: every one must fail with the typed error
+
+  private def vint(v0: Long): Array[Byte] = {
+    val out = Array.newBuilder[Byte]; var v = v0
+    while ((v & ~0x7fL) != 0) { out += ((v & 0x7f) | 0x80).toByte; v >>>= 7 }
+    (out += v.toByte).result()
+  }
+  /** length-delimited field `f` whose length prefix declares `len` */
+  private def lenField(f: Int, body: Array[Byte], len: Long): Array[Byte] =
+    vint((f << 3 | 2).toLong) ++ vint(len) ++ body
+  private def lenField(f: Int, body: Array[Byte]): Array[Byte] =
+    lenField(f, body, body.length.toLong)
+  private val readT = Rel.Read(
+    NamedStruct(Seq("x"), Seq((SType.SI32, true))), Seq("t"), None)
+  private def relOnly(r: Rel): Array[Byte] =
+    Wire.encode(Plan(Nil, Seq(PlanRel.RelOnly(r))))
+
+  test("fixed32 never reads past its sub-message into the parent") {
+    // fp32 literal 0x00780000: Literal{10: fixed32} = 55 00 00 78 00. The
+    // Literal's length is cut from 5 to 3, so the last two value bytes
+    // (78 00, a valid varint field) belong to the enclosing Expression.
+    val lit = Array[Byte](0x0a, 0x05, 0x55, 0x00, 0x00, 0x78, 0x00)
+    val bytes = relOnly(Rel.Project(readT,
+      Seq(SExpr.Lit(LitVal.LFp32(java.lang.Float.intBitsToFloat(0x00780000))))))
+    val at = bytes.indexOfSlice(lit)
+    assert(at >= 0 && bytes.lastIndexOfSlice(lit) == at)
+    val cut = bytes.clone(); cut(at + 1) = 0x03
+    val e = intercept[SubstraitException](Wire.decode(cut))
+    assert(e.getMessage.contains("truncated"))
+  }
+
+  test("fixed64 at the end of the buffer fails typed, not out of bounds") {
+    // Plan{3: PlanRel{1: Rel{7: Project{3: Expression{1: Literal{11: 4 of
+    // 8 bytes}}}}}}: every length is honest, the buffer just ends
+    val lit = Array[Byte](0x59, 1, 2, 3, 4)
+    val bytes = lenField(3, lenField(1, lenField(7, lenField(3,
+      lenField(1, lit)))))
+    val e = intercept[SubstraitException](Wire.decode(bytes))
+    assert(e.getMessage.contains("truncated"))
+  }
+
+  private val wrap = 1L << 32
+
+  test("a sub-message length above Int.MaxValue is rejected, not wrapped") {
+    val planRel = relOnly(readT).drop(2) // strip Plan's 0x1a tag + 1-byte length
+    assert(Wire.decode(lenField(3, planRel)).relations.size == 1)
+    val e = intercept[SubstraitException](
+      Wire.decode(lenField(3, planRel, wrap + planRel.length)))
+    assert(e.getMessage.contains(s"length ${wrap + planRel.length} "))
+  }
+
+  test("a string length above Int.MaxValue is rejected, not wrapped") {
+    // extensions{3: ExtensionFunction{1: uri, 2: anchor, 3: name}}
+    def ext(nameLen: Long) = lenField(2, lenField(3,
+      vint(0x08) ++ vint(1) ++ vint(0x10) ++ vint(1) ++
+        lenField(3, "abc".getBytes("UTF-8"), nameLen)))
+    assert(Wire.decode(ext(3) ++ relOnly(readT)).extensions.head.name == "abc")
+    val e = intercept[SubstraitException](
+      Wire.decode(ext(wrap + 3) ++ relOnly(readT)))
+    assert(e.getMessage.contains(s"length ${wrap + 3} "))
+  }
+
+  test("a skipped field's length above Int.MaxValue is rejected, not wrapped") {
+    def unknown(len: Long) = lenField(15, Array[Byte](0x7f), len)
+    assert(Wire.decode(unknown(1) ++ relOnly(readT)).relations.size == 1)
+    val e = intercept[SubstraitException](
+      Wire.decode(unknown(wrap + 1) ++ relOnly(readT)))
+    assert(e.getMessage.contains(s"length ${wrap + 1} "))
+  }
 }
