@@ -1,27 +1,54 @@
 package graft.substrait
 
-import java.util.concurrent.atomic.AtomicInteger
+import scala.collection.mutable
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{plans => cp}
+import org.apache.spark.sql.catalyst.expressions.{Add, Alias, And, Ascending, Attribute,
+  CaseWhen, Cast, CreateArray, CreateMap, Descending, Divide, EqualNullSafe, EqualTo, ExprId,
+  Expression, GetStructField, GreaterThan, GreaterThanOrEqual, GroupingSets, IsNotNull, IsNull,
+  LessThan, LessThanOrEqual, Literal, Multiply, NamedExpression, Not, NullsFirst, NullsLast, Or,
+  Remainder, ScalarSubquery, SortOrder, Subtract, UnaryMinus}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateFunction, Average, Count,
+  Max, Min, Mode, PercentileDisc, Sum}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Deduplicate, Except, Intersect,
+  Join, JoinHint, Limit, LocalRelation, LogicalPlan, Offset, Repartition,
+  RepartitionByExpression, Sample, UnresolvedHint, Union, Project => PProject,
+  Filter => PFilter, Sort => PSort}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 import model._
 
 /** Substrait `Plan` → Spark `DataFrame`.
   *
-  * Spark-native rebuild of the reference consumer (src/consumer.rs:74-380):
-  * each Rel becomes a public DataFrame-API call — `spark.table` at the leaves,
-  * `.select/.filter/.join/.groupBy().agg/.orderBy/.offset/.limit` at inner
-  * nodes, `.toDF(rootNames)` at the root — and Catalyst then analyzes,
-  * optimizes (pushdown, pruning, join strategy) and executes the result.
+  * Spark-native rebuild of the reference consumer (src/consumer.rs:74-380),
+  * which turns each Rel into a DataFusion `LogicalPlan` node: here each Rel
+  * becomes a resolved Catalyst `LogicalPlan` node over its already-resolved
+  * children, and the root is wrapped ONCE with `Dataset.ofRows`; Catalyst
+  * then optimizes (pushdown, pruning, join strategy) and executes it.
   *
-  * Positional field references index the node's flattened output schema
-  * (consumer.rs:449-468). To make that robust across joins — including
-  * self-joins, where name-based resolution is ambiguous — every operator that
-  * introduces columns renames them to globally unique fresh names; the
-  * user-visible names are restored from `RelRoot.names` at the root
-  * (consumer.rs:92-111 / SURVEY.md §7.4).
+  * Positional field references index the node's flattened output
+  * (consumer.rs:449-468) and bind to the child's output ATTRIBUTES, so they
+  * resolve by exprId, never by name: self-joins and duplicate column names
+  * need no renaming. Every Read gets attributes no other Read of the same
+  * consume has (a second read of one table is re-aliased), which is what
+  * keeps the two sides of a self-join apart. The user-visible names come
+  * from `RelRoot.names` at the root (consumer.rs:92-111).
+  *
+  * Comparisons, arithmetic, boolean ops, null tests, literals and casts
+  * are built as Catalyst expressions directly. Everything else (registry
+  * and graft kernels, windows, lambdas, grouping sets, session windows)
+  * is built with the Column API over Columns that wrap the resolved
+  * arguments; a node holding such an expression, or one that comes out
+  * unresolved (a foreign plan that needs type coercion), is analyzed on
+  * its own against LocalRelation stubs of its children's output
+  * ([[ColumnBridge.analyzeNode]]). Analyzing each node once, instead of
+  * re-analyzing the growing plan at every DataFrame call, keeps consume
+  * linear in plan depth.
   */
 object Consumer {
 
@@ -61,51 +88,91 @@ object Consumer {
   private def consumeInternal(spark: SparkSession, plan: Plan,
                               binding: Option[DataFrame],
                               validate: Boolean,
-                              reliableIteration: Option[Boolean]): DataFrame = {
-    if (validate)
-      Validator.validateOrThrow(plan) // structural pre-flight: full issue report
-    val extMap: Map[Int, String] =
-      plan.extensions.map(e => e.functionAnchor -> e.name).toMap
-    if (plan.relations.size != 1)
-      internalErr(s"expected exactly one relation tree, got ${plan.relations.size}")
-    val ctx = new Ctx(spark, extMap, binding, reliableIteration)
-    plan.relations.head match {
-      case PlanRel.Root(input, names) =>
-        val b = ctx.build(input)
-        if (names.nonEmpty) {
-          if (names.size != b.df.columns.length)
-            internalErr(s"root names arity ${names.size} != plan arity ${b.df.columns.length}")
-          b.df.toDF(names: _*)
-        } else b.df
-      case PlanRel.RelOnly(rel) => ctx.build(rel).df
+                              reliableIteration: Option[Boolean]): DataFrame =
+    ColumnBridge.consuming(spark) {
+      if (validate)
+        Validator.validateOrThrow(plan) // structural pre-flight: full issue report
+      val extMap: Map[Int, String] =
+        plan.extensions.map(e => e.functionAnchor -> e.name).toMap
+      if (plan.relations.size != 1)
+        internalErr(s"expected exactly one relation tree, got ${plan.relations.size}")
+      val ctx = new Ctx(spark, extMap, binding, reliableIteration)
+      val root = plan.relations.head match {
+        case PlanRel.Root(input, names) =>
+          val b = ctx.build(input)
+          if (names.nonEmpty && names.size != b.output.size)
+            internalErr(s"root names arity ${names.size} != plan arity ${b.output.size}")
+          if (names.isEmpty || names == b.output.map(_.name)) b
+          else PProject(b.output.zip(names).map {
+            case (a, n) => if (a.name == n) a else Alias(a, n)()
+          }, b)
+        case PlanRel.RelOnly(rel) => ctx.build(rel)
+      }
+      ColumnBridge.ofRows(spark, root)
     }
-  }
-
-  private val freshCounter = new AtomicInteger(0)
-
-  /** df whose columns (all uniquely named) are the rel's flattened output. */
-  private final case class Built(df: DataFrame)
 
   private final class Ctx(spark: SparkSession, extMap: Map[Int, String],
                           stateBinding: Option[DataFrame] = None,
                           reliableIteration: Option[Boolean] = None) {
-    private def fresh(): String = s"_s${freshCounter.incrementAndGet()}"
-    private def freshNames(n: Int): Seq[String] = Seq.fill(n)(fresh())
     private def name(ref: Int): String =
       extMap.getOrElse(ref, internalErr(s"unregistered function anchor $ref"))
 
-    def build(rel: Rel): Built = rel match {
+    /** analyzed catalog reads, by table name: a table read twice is looked
+      * up (and analyzed) once */
+    private val tables = mutable.Map.empty[String, LogicalPlan]
+    /** every attribute a leaf of this consume has handed out */
+    private val leafIds = mutable.HashSet.empty[ExprId]
+    /** set when the node being built holds a Column-API expression */
+    private var viaColumns = false
+
+    /** `p` as a resolved node: as built when it already is, else analyzed
+      * on its own over stubs of its children. */
+    private def node(p: LogicalPlan): LogicalPlan = {
+      val columns = viaColumns
+      viaColumns = false
+      if (p.resolved && !columns) p else ColumnBridge.analyzeNode(spark, p)
+    }
+
+    /** A leaf whose attributes another leaf of this consume already uses
+      * (the same table read twice, the iteration state bound twice) is
+      * re-aliased, so positional refs on either side bind apart. The alias
+      * takes a new name: a same-name alias is optimized away, and the two
+      * leaves' shared exprIds would meet again above it. */
+    private def unique(leaf: LogicalPlan): LogicalPlan =
+      if (leaf.output.forall(a => !leafIds.contains(a.exprId))) {
+        leafIds ++= leaf.output.map(_.exprId); leaf
+      } else PProject(leaf.output.map(a => Alias(a, a.name + "_")()), leaf)
+
+    private def at(in: Seq[Attribute], i: Int, what: String = "field reference"): Attribute =
+      if (i < 0 || i >= in.size) internalErr(s"$what $i out of range ${in.size}")
+      else in(i)
+
+    /** output column `i`: an attribute passes through once, anything else
+      * (or a repeat) gets an alias. A repeat's alias never keeps the
+      * attribute's name: RemoveRedundantAliases would drop it, leaving one
+      * exprId twice in the output (an unresolved Union branch). */
+    private def named(es: Seq[Expression]): Seq[NamedExpression] = {
+      val seen = mutable.HashSet.empty[ExprId]
+      es.zipWithIndex.map {
+        case (a: Attribute, _) if seen.add(a.exprId) => a
+        case (a: Attribute, _) => Alias(a, a.name + "_")()
+        case (e, i) => Alias(e, s"_$i")()
+      }
+    }
+
+    private def structOf(schema: NamedStruct): StructType =
+      StructType(schema.names.zip(schema.types).map {
+        case (n, (t, nul)) => StructField(n, sparkType(t), nul)
+      })
+
+    def build(rel: Rel): LogicalPlan = rel match {
       case Rel.Read(schema, tableNames, projection, filter, virtualRows, localFiles) =>
-        val df0 = (virtualRows, localFiles) match {
+        val base = unique((virtualRows, localFiles) match {
           case (Some(rows), _) =>
-            // VirtualTable: materialize the struct-literal rows locally —
-            // a LocalRelation, exactly what the producer serialized
-            val st = StructType(schema.names.zip(schema.types).map {
-              case (n, (t, nul)) => StructField(n, sparkType(t), nul)
-            })
-            val jrows = new java.util.ArrayList[Row](rows.size)
-            rows.foreach(r => jrows.add(Row.fromSeq(r.map(litExternal))))
-            spark.createDataFrame(jrows, st)
+            // VirtualTable: the struct-literal rows as a LocalRelation,
+            // exactly what the producer serialized
+            LocalRelation.fromExternalRows(DataTypeUtils.toAttributes(structOf(schema)),
+              rows.map(r => Row.fromSeq(r.map(litExternal))))
           case (None, Some(items)) =>
             // LocalFiles: a file-backed scan with the DECLARED schema (the
             // wire contract, not re-inference — positional refs depend on
@@ -114,12 +181,9 @@ object Consumer {
             val formats = items.map(_.format).distinct
             if (formats.size != 1)
               notImplemented(s"LocalFiles with mixed formats $formats")
-            val st = StructType(schema.names.zip(schema.types).map {
-              case (n, (t, nul)) => StructField(n, sparkType(t), nul)
-            })
             val paths = items.map(_.path)
-            val reader = spark.read.schema(st)
-            formats.head match {
+            val reader = spark.read.schema(structOf(schema))
+            (formats.head match {
               case "parquet" => reader.parquet(paths: _*)
               case "orc" => reader.orc(paths: _*)
               case "csv" =>
@@ -131,93 +195,60 @@ object Consumer {
                   .option("sep", head.csvDelimiter.getOrElse(","))
                   .csv(paths: _*)
               case other => notImplemented(s"LocalFiles format $other")
-            }
+            }).queryExecution.analyzed
           case (None, None) =>
             // the reserved iteration-state leaf binds to the current loop
             // state when consumed inside an ExtIteration; anywhere else it
             // resolves like any named table (loud if absent)
             if (tableNames == Seq(IterationStateTable) && stateBinding.isDefined)
-              stateBinding.get
-            else spark.table(tableNames.mkString("."))
-        }
+              stateBinding.get.queryExecution.analyzed
+            else tables.getOrElseUpdate(tableNames.mkString("."),
+              spark.table(tableNames.mkString(".")).queryExecution.analyzed)
+        })
         if (schema != null && schema.names.nonEmpty &&
-            schema.names.size != df0.columns.length)
+            schema.names.size != base.output.size)
           internalErr(s"table ${tableNames.mkString(".")}: plan schema arity " +
-            s"${schema.names.size} != catalog arity ${df0.columns.length}")
+            s"${schema.names.size} != catalog arity ${base.output.size}")
         // scan filter references the BASE schema (pre-mask); Catalyst pushes
         // it into the parquet scan exactly as a FilterRel above would
-        val filtered = filter match {
-          case Some(f) => df0.filter(toColumn(f, df0))
-          case None => df0
-        }
-        val projected = projection match {
-          case Some(idxs) => filtered.select(idxs.map(i => filtered.col(df0.columns(i))): _*)
+        val filtered = filter.fold(base)(f => node(PFilter(toExpr(f, base.output), base)))
+        projection match {
+          case Some(idxs) => PProject(named(idxs.map(at(base.output, _, "read mask field"))), filtered)
           case None => filtered
         }
-        Built(projected.toDF(freshNames(projected.columns.length): _*))
 
-      // window project (the producer's Window encoding: pass-through refs +
-      // WindowFn columns): rename the pass-throughs FIRST so the window spec
-      // partitions/orders by the very attributes that flow downstream. The
-      // generic path would resolve the spec against the INPUT attributes,
-      // leaving the window's exchange keyed on an attribute the next project
-      // drops — alias-aware partitioning propagation cannot see through a
-      // sibling copy, so a second window/aggregate over the same key would
-      // pay a fresh exchange + sort (measured 2× wall on sessionization).
-      case Rel.Project(input, exprs)
-          if exprs.exists(_.isInstanceOf[SExpr.WindowFn]) &&
-            exprs.forall(e => e.isInstanceOf[SExpr.FieldRef] ||
-              e.isInstanceOf[SExpr.WindowFn]) && {
-            val refs = exprs.collect { case SExpr.FieldRef(i) => i }
-            refs.distinct.size == refs.size // unaliased dups would be ambiguous
-          } =>
-        val in = build(input)
-        val cols = exprs.map {
-          case SExpr.FieldRef(i) => in.df.col(in.df.columns(i))
-          case e => toColumn(e, in.df).as(fresh())
-        }
-        Built(in.df.select(cols: _*))
-
+      // a window function's partition/order attributes are the very
+      // attributes that flow downstream (pass-throughs keep their exprId),
+      // so a second window/aggregate over the same key reuses the exchange
       case Rel.Project(input, exprs) =>
         val in = build(input)
-        val cols = exprs.map(e => toColumn(e, in.df))
-        Built(in.df.select(cols.zip(freshNames(cols.size)).map { case (c, n) => c.as(n) }: _*))
+        node(PProject(named(exprs.map(toExpr(_, in.output))), in))
 
       case Rel.Filter(input, cond) =>
         val in = build(input)
-        Built(in.df.filter(toColumn(cond, in.df)))
+        node(PFilter(toExpr(cond, in.output), in))
 
       case Rel.Fetch(input, offset, count) =>
         val in = build(input)
-        val off = if (offset > 0) in.df.offset(offset.toInt) else in.df
+        val off = if (offset > 0) Offset(Literal(offset.toInt), in) else in
         // count=0 is the reference's encoding of "no fetch" (producer.rs:147-150)
-        Built(if (count > 0) off.limit(count.toInt) else off)
+        node(if (count > 0) Limit(Literal(count.toInt), off) else off)
 
       case Rel.Sort(input, sorts) =>
         val in = build(input)
-        val cols = sorts.map { s =>
-          val c = toColumn(s.expr, in.df)
-          s.direction match {
-            case SortDirection.AscNullsFirst => c.asc_nulls_first
-            case SortDirection.AscNullsLast => c.asc_nulls_last
-            case SortDirection.DescNullsFirst => c.desc_nulls_first
-            case SortDirection.DescNullsLast => c.desc_nulls_last
-            case other => notImplemented(s"sort direction $other")
-          }
-        }
-        Built(in.df.orderBy(cols: _*))
+        node(PSort(sorts.map(s => sortOrder(toExpr(s.expr, in.output), s.direction,
+          "sort direction")), global = true, in))
 
       case Rel.Join(left, right, expression, joinType) =>
         val l = build(left); val r = build(right)
-        val joined = l.df.join(r.df, toColumn(expression, l.df, Some(r.df)),
-          joinTypeName(joinType))
-        Built(joined)
+        node(Join(l, r, catalystJoinType(joinType),
+          Some(toExpr(expression, l.output ++ r.output)), JoinHint.NONE))
 
       case Rel.Cross(left, right) =>
         val l = build(left); val r = build(right)
         // A cross against a PROVABLY one-row side is the producer's lifted
         // scalar subquery (Producer.scala lifting: global Aggregate, maybe
-        // under Projects). Rebuild it as Dataset.scalar() columns instead
+        // under Projects). Rebuild it as scalar-subquery columns instead
         // of a physical join: the subquery value computes ONCE and lands in
         // the probe expression as a literal, where a 1-row broadcast
         // nested-loop join would re-evaluate the build row per PROBE row —
@@ -229,16 +260,16 @@ object Consumer {
           case Rel.Project(in, _) => oneRow(in)
           case _ => false
         }
-        if (oneRow(right)) {
-          val scalars = r.df.columns.toSeq.map(c => r.df.select(c).scalar().as(c))
-          Built(l.df.select(col("*") +: scalars: _*))
-        } else Built(l.df.crossJoin(r.df))
+        node(if (oneRow(right))
+          PProject(l.output ++ r.output.map(a =>
+            Alias(ScalarSubquery(PProject(Seq(a), r)), a.name)()), l)
+        else Join(l, r, cp.Cross, None, JoinHint.NONE))
 
       case Rel.Aggregate(input, groupings, measures) => buildAggregate(input, groupings, measures)
 
       case Rel.ExtGenerate(input, gen, arg, outer, genArity) =>
         val in = build(input)
-        val c = toColumn(arg, in.df)
+        val c = toCol(arg, in.output)
         val gcol = (gen, outer) match {
           case ("explode", false) => explode(c)
           case ("explode", true) => explode_outer(c)
@@ -248,49 +279,42 @@ object Consumer {
           case ("inline", true) => inline_outer(c)
           case other => notImplemented(s"generator $other")
         }
-        // generated columns get fresh names via multi-alias; output schema is
-        // input columns ++ generator columns, matching the producer's attrs
-        Built(in.df.select(col("*"), gcol.as(freshNames(genArity))))
+        // output schema is input columns ++ generator columns (one
+        // multi-alias), matching the producer's attrs
+        val names = Seq.tabulate(genArity)(j => s"_${in.output.size + j}")
+        node(PProject(in.output :+ fromCol(gcol.as(names)).asInstanceOf[NamedExpression], in))
 
       case Rel.ExtExchange(input, exprs, num, shuffle, rangeDirs) =>
         val in = build(input)
-        val cols = exprs.map(toColumn(_, in.df))
-        Built(
-          if (rangeDirs.nonEmpty) {
-            val ordered = cols.zip(rangeDirs).map { case (c, d) => d match {
-              case SortDirection.AscNullsFirst => c.asc_nulls_first
-              case SortDirection.AscNullsLast => c.asc_nulls_last
-              case SortDirection.DescNullsFirst => c.desc_nulls_first
-              case SortDirection.DescNullsLast => c.desc_nulls_last
-              case other => notImplemented(s"range partition direction $other")
-            }}
-            if (num > 0) in.df.repartitionByRange(num, ordered: _*)
-            else in.df.repartitionByRange(ordered: _*)
-          } else if (cols.nonEmpty)
-            if (num > 0) in.df.repartition(num, cols: _*)
-            else in.df.repartition(cols: _*)
-          else if (!shuffle) in.df.coalesce(math.max(num, 1))
-          else if (num > 0) in.df.repartition(num)
-          else in.df)
+        val es = exprs.map(toExpr(_, in.output))
+        val n = if (num > 0) Some(num) else None
+        node(
+          if (rangeDirs.nonEmpty)
+            RepartitionByExpression(es.zip(rangeDirs).map { case (e, d) =>
+              sortOrder(e, d, "range partition direction") }, in, n, None)
+          else if (es.nonEmpty) RepartitionByExpression(es, in, n, None)
+          else if (!shuffle) Repartition(math.max(num, 1), shuffle = false, in)
+          else if (num > 0) Repartition(num, shuffle = true, in)
+          else in)
 
       case Rel.ExtSample(input, lo, hi, wr, seed) =>
         val in = build(input)
         // Dataset.sample has no lower bound; Spark's own Sample node does —
         // reconstruct via the internal fraction on the standard API surface
         if (lo != 0.0) notImplemented("sample with non-zero lower bound")
-        Built(in.df.sample(wr, hi, seed))
+        node(Sample(0.0, hi, wr, seed, in))
 
       case Rel.ExtHint(input, hint) =>
         val in = build(input)
-        // Dataset.hint resolves through Catalyst's hint-alias table, so the
-        // canonical names the producer writes (broadcast / merge /
-        // shuffle_hash / shuffle_replicate_nl) all re-resolve; an unknown
-        // name would be dropped with Spark's own analyzer warning
-        Built(in.df.hint(hint))
+        // resolves through Catalyst's hint-alias table, so the canonical
+        // names the producer writes (broadcast / merge / shuffle_hash /
+        // shuffle_replicate_nl) all re-resolve; an unknown name would be
+        // dropped with Spark's own analyzer warning
+        node(UnresolvedHint(hint, Nil, in))
 
       case Rel.ExtSessionWindow(input, tsField, gapMicros, gapExpr) =>
         val in = build(input)
-        if (tsField < 0 || tsField >= in.df.columns.length)
+        if (tsField < 0 || tsField >= in.output.size)
           internalErr(s"session ts field $tsField out of range")
         if (gapExpr.isEmpty && gapMicros <= 0L)
           internalErr(s"non-positive session gap $gapMicros")
@@ -305,13 +329,13 @@ object Consumer {
         // the same CalendarIntervalType Spark's analyzer derives from the
         // user's string gap column, which also re-adds the end > start
         // guard for non-positive per-row gaps.
-        val tsCol = col(in.df.columns(tsField))
+        val tsCol = ColumnBridge.column(in.output(tsField))
         val sess = gapExpr match {
           case Some(ge) =>
-            session_window(tsCol, toColumn(ge, in.df).cast("interval"))
+            session_window(tsCol, toCol(ge, in.output).cast("interval"))
           case None => session_window(tsCol, s"$gapMicros microseconds")
         }
-        Built(in.df.select(col("*"), sess.as(freshNames(1).head)))
+        node(PProject(in.output :+ Alias(fromCol(sess), s"_${in.output.size}")(), in))
 
       case Rel.ExtIteration(input, bodyPlan, maxIters, checkFixpoint,
                             requireFixpoint) =>
@@ -348,8 +372,15 @@ object Consumer {
         if (reliable && spark.sparkContext.getCheckpointDir.isEmpty)
           internalErr("reliable iteration checkpoints requested but no " +
             "checkpoint dir is configured on the SparkContext")
-        def materialize(df: org.apache.spark.sql.DataFrame) =
-          if (reliable) df.checkpoint(true) else df.localCheckpoint(true)
+        // a checkpoint keeps its frame's output exprIds, so a state passing
+        // a read's attribute through would share it with that table's read
+        // in the next round's body. Renaming gives fresh exprIds; a NEW name
+        // keeps the optimizer from dropping the alias (and the checkpoint's
+        // constraints from landing on the old exprIds).
+        def materialize(df: org.apache.spark.sql.DataFrame) = {
+          val fresh = df.toDF(df.columns.toIndexedSeq.map(_ + "_"): _*)
+          if (reliable) fresh.checkpoint(true) else fresh.localCheckpoint(true)
+        }
         // a localCheckpoint pins MEMORY_AND_DISK blocks until the RDD is
         // garbage-collected, and a reliable checkpoint leaves rdd-N
         // directories on disk until the context stops; over a long
@@ -375,8 +406,8 @@ object Consumer {
                 .delete(path, true)
             }
         val init = build(input)
-        val width = init.df.columns.length
-        var state = materialize(init.df)
+        val width = init.output.size
+        var state = materialize(ColumnBridge.ofRows(spark, init))
         var k = 0
         var done = false
         while (k < maxIters && !done) {
@@ -414,42 +445,52 @@ object Consumer {
         if (requireFixpoint && checkFixpoint && !done)
           internalErr(s"iteration exhausted maxIters=$maxIters without " +
             "reaching the requested fixpoint (require_fixpoint is set)")
-        Built(state.toDF(freshNames(width): _*))
+        state.queryExecution.analyzed
 
       case Rel.ExtStage(input, stage) =>
         val in = build(input)
         val st = Stages.registry.getOrElse(stage,
           notImplemented(s"unknown typed stage '$stage'"))
-        if (in.df.columns.length != st.inputCols.size)
+        if (in.output.size != st.inputCols.size)
           internalErr(s"stage '$stage' expects ${st.inputCols.size} input " +
-            s"columns, got ${in.df.columns.length}")
-        // wire frames carry positional fresh names; the stage's input
-        // contract is positional, so rename by position before rebuilding
-        Built(st.rebuild(spark, in.df.toDF(st.inputCols: _*)))
+            s"columns, got ${in.output.size}")
+        // the stage's input contract is positional: name the columns by
+        // position before rebuilding
+        st.rebuild(spark, ColumnBridge.ofRows(spark, in).toDF(st.inputCols: _*))
+          .queryExecution.analyzed
 
       case Rel.Set(inputs, op) =>
-        val dfs = inputs.map(build(_).df)
-        if (dfs.size < 2) internalErr("SetRel needs at least two inputs")
-        val out = op match {
-          case SetOp.UnionAll => dfs.reduceLeft(_.unionAll(_))
-          case SetOp.UnionDistinct => dfs.reduceLeft(_.unionAll(_)).distinct()
-          case SetOp.IntersectionMultiset => dfs.reduceLeft(_.intersectAll(_))
-          case SetOp.IntersectionPrimary => dfs.reduceLeft(_.intersect(_))
-          case SetOp.MinusMultiset => dfs.reduceLeft(_.exceptAll(_))
-          case SetOp.MinusPrimary => dfs.reduceLeft(_.except(_))
+        val ins = inputs.map(build)
+        if (ins.size < 2) internalErr("SetRel needs at least two inputs")
+        op match {
+          case SetOp.UnionAll => node(Union(ins))
+          case SetOp.UnionDistinct =>
+            val u = node(Union(ins))
+            node(Deduplicate(u.output, u))
+          case SetOp.IntersectionMultiset => ins.reduceLeft((a, b) => node(Intersect(a, b, isAll = true)))
+          case SetOp.IntersectionPrimary => ins.reduceLeft((a, b) => node(Intersect(a, b, isAll = false)))
+          case SetOp.MinusMultiset => ins.reduceLeft((a, b) => node(Except(a, b, isAll = true)))
+          case SetOp.MinusPrimary => ins.reduceLeft((a, b) => node(Except(a, b, isAll = false)))
           case other => notImplemented(s"set op $other")
         }
-        Built(out)
     }
 
-    private def joinTypeName(t: Int): String = t match {
-      case JoinType.Inner => "inner"
-      case JoinType.Outer => "full"
-      case JoinType.Left => "left"
-      case JoinType.Right => "right"
-      case JoinType.Semi => "left_semi"
-      case JoinType.Anti => "left_anti"
+    private def catalystJoinType(t: Int): cp.JoinType = t match {
+      case JoinType.Inner => cp.Inner
+      case JoinType.Outer => cp.FullOuter
+      case JoinType.Left => cp.LeftOuter
+      case JoinType.Right => cp.RightOuter
+      case JoinType.Semi => cp.LeftSemi
+      case JoinType.Anti => cp.LeftAnti
       case other => notImplemented(s"join type $other") // Single etc. (consumer.rs:420-425)
+    }
+
+    private def sortOrder(e: Expression, d: Int, what: String): SortOrder = d match {
+      case SortDirection.AscNullsFirst => SortOrder(e, Ascending, NullsFirst, Nil)
+      case SortDirection.AscNullsLast => SortOrder(e, Ascending, NullsLast, Nil)
+      case SortDirection.DescNullsFirst => SortOrder(e, Descending, NullsFirst, Nil)
+      case SortDirection.DescNullsLast => SortOrder(e, Descending, NullsLast, Nil)
+      case other => notImplemented(s"$what $other")
     }
 
     /** AggregateRel: exactly one grouping set (consumer.rs:230-235); measures
@@ -459,7 +500,7 @@ object Consumer {
       * semantics; count(*) FILTER p becomes count(when(p, 1)).
       */
     private def buildAggregate(input: Rel, groupings: Seq[Seq[SExpr]],
-                               measures: Seq[Measure]): Built = {
+                               measures: Seq[Measure]): LogicalPlan = {
       val in = build(input)
 
       if (groupings.size > 1) {
@@ -470,17 +511,17 @@ object Consumer {
         // single hash aggregate, not one job per set.
         if (measures.isEmpty) notImplemented("multiple grouping sets without measures")
         val union = groupings.flatten.distinct
-        val names = freshNames(union.size)
-        val aliased = union.zip(names).map { case (e, n) => toColumn(e, in.df).as(n) }
-        val base = in.df.select(col("*") +: aliased: _*)
-        val sets = groupings.map(_.map(e => col(names(union.indexOf(e)))))
+        val base = node(PProject(in.output ++ union.zipWithIndex.map { case (e, j) =>
+          Alias(toExpr(e, in.output), s"_$j")() }, in))
+        val keys = base.output.drop(in.output.size)
+        val sets = groupings.map(_.map(e => keys(union.indexOf(e))))
         // a `grouping` MEASURE (reference consumer.rs:383-415 accepts the
-        // name) must reference the ALIASED grouping column — Spark's
-        // grouping() resolves only against the groupingSets expressions
-        val aggCols = measureCols(measures, in.df,
+        // name) must reference the grouping-set KEY — Spark's grouping()
+        // resolves only against the groupingSets expressions
+        val aggs = measureExprs(measures, in.output, union.size,
           e => union.indexOf(e) match {
             case -1 => None
-            case i => Some(col(names(i)))
+            case i => Some(keys(i))
           })
         // trailing i32 grouping-set index (wire convention): recovered from
         // Spark's grouping_id() bitmask over the union columns — bit j (MSB
@@ -490,40 +531,40 @@ object Consumer {
             case (e, j) if !g.contains(e) => 1L << (union.size - 1 - j)
           }.sum
         }
-        val gid = grouping_id(names.map(col): _*)
+        val gid = grouping_id(keys.map(ColumnBridge.column): _*)
         val setIdx = masks.zipWithIndex.tail
           .foldLeft(when(gid === masks.head, 0)) {
             case (acc, (m, i)) => acc.when(gid === m, i)
-          }.cast("int").as(fresh())
-        val grouped = base.groupingSets(sets, names.map(col): _*)
-        return Built(grouped.agg(aggCols.head, (aggCols.tail :+ setIdx): _*))
+          }.cast("int")
+        return node(Aggregate(Seq(GroupingSets(sets, keys)),
+          keys ++ aggs :+ Alias(fromCol(setIdx), s"_${keys.size + aggs.size}")(), base))
       }
 
-      val groupExprs = groupings.headOption.getOrElse(Nil).map(e => toColumn(e, in.df))
+      val groups = named(groupings.headOption.getOrElse(Nil).map(toExpr(_, in.output)))
 
       if (measures.isEmpty) {
         // DISTINCT-as-groupBy (consumer side of producer.rs:203-222)
-        val names = freshNames(groupExprs.size)
-        return Built(in.df.select(groupExprs.zip(names).map { case (c, n) => c.as(n) }: _*)
-          .distinct())
+        val keys = node(PProject(groups, in))
+        return node(Deduplicate(keys.output, keys))
       }
 
-      val groupNames = freshNames(groupExprs.size)
-      val groupCols = groupExprs.zip(groupNames).map { case (c, n) => c.as(n) }
-      val aggCols = measureCols(measures, in.df)
-      val grouped = in.df.groupBy(groupCols: _*)
-      Built(grouped.agg(aggCols.head, aggCols.tail: _*))
+      val groupExprs = groups.map {
+        case a: Alias => a.child
+        case a => a
+      }
+      node(Aggregate(groupExprs, groups ++ measureExprs(measures, in.output, groups.size), in))
     }
 
-    /** measure → named aggregate Column; FILTER p becomes agg(when(p, x)).
-      * `groupingResolve` rebinds a `grouping` measure's argument to the
-      * grouping-set alias column (multi-groupings path only — with a single
-      * grouping Spark rejects grouping() itself, loudly, as does DataFusion).
+    /** measure → named aggregate expression; FILTER p becomes
+      * agg(when(p, x)). `groupingResolve` rebinds a `grouping` measure's
+      * argument to the grouping-set key (multi-groupings path only — with
+      * a single grouping Spark rejects grouping() itself, loudly, as does
+      * DataFusion).
       */
-    private def measureCols(measures: Seq[Measure], df: DataFrame,
-                            groupingResolve: SExpr => Option[Column] =
-                              _ => None): Seq[Column] =
-      measures.map { m =>
+    private def measureExprs(measures: Seq[Measure], in: Seq[Attribute], from: Int,
+                             groupingResolve: SExpr => Option[Expression] =
+                               _ => None): Seq[NamedExpression] =
+      measures.zipWithIndex.map { case (m, j) =>
         val fname = name(m.function.functionReference).toLowerCase
         // grouping() is structural, not data-dependent: a FILTER clause
         // would wrap the rebound grouping column in when(p, col) and break
@@ -532,18 +573,42 @@ object Consumer {
           notImplemented("grouping measure with a FILTER clause")
         val rawArgs =
           if (fname == "grouping")
-            m.function.args.map(e => groupingResolve(e).getOrElse(toColumn(e, df)))
-          else m.function.args.map(e => toColumn(e, df))
+            m.function.args.map(e => groupingResolve(e).getOrElse(toExpr(e, in)))
+          else m.function.args.map(toExpr(_, in))
         val args = m.filter match {
           case Some(f) =>
-            val p = toColumn(f, df)
-            if (rawArgs.isEmpty) Seq(when(p, lit(1)))
-            else rawArgs.map(a => when(p, a))
-          case None => if (rawArgs.isEmpty) Seq(lit(1)) else rawArgs
+            val p = toExpr(f, in)
+            if (rawArgs.isEmpty) Seq(CaseWhen(Seq(p -> Literal(1))))
+            else rawArgs.map(a => CaseWhen(Seq(p -> a)))
+          case None => if (rawArgs.isEmpty) Seq(Literal(1)) else rawArgs
         }
         val distinct = m.function.invocation == AggInvocation.Distinct
-        aggColumn(fname, args, distinct).as(fresh())
+        Alias(aggExpr(fname, args, distinct), s"_${from + j}")()
       }
+
+    /** The core aggregates as Catalyst nodes; the rest through
+      * [[aggColumn]]'s Column table. */
+    private def aggExpr(fname: String, args: Seq[Expression], distinct: Boolean): Expression = {
+      def agg(f: AggregateFunction, d: Boolean = distinct) = f.toAggregateExpression(d)
+      (fname, distinct) match {
+        case ("count", true) => agg(Count(args))
+        case ("count", false) => agg(Count(args.take(1)))
+        case ("sum", _) => agg(Sum(args.head))
+        case ("min", _) => agg(Min(args.head), d = false) // DISTINCT is a no-op for min/max
+        case ("max", _) => agg(Max(args.head), d = false)
+        case ("avg" | "mean", false) => agg(Average(args.head))
+        // exact discrete percentile; the ASC-only contract is enforced by
+        // the producer (the DESC flag has no wire form). The SQL registry's
+        // builder takes only the percentage (WITHIN GROUP supplies the sort
+        // child via the parser), so consume through a direct constructor.
+        case (n @ ("percentile_disc" | "percentile_disc_desc"), false) =>
+          agg(new PercentileDisc(args(0), args(1), reverse = n == "percentile_disc_desc"))
+        // mode's within-group tie ordering, carried in the name (round 8)
+        case (n @ ("mode_asc" | "mode_desc"), false) =>
+          agg(Mode(args(0), 0, 0, Some(n == "mode_desc")))
+        case _ => fromCol(aggColumn(fname, args.map(ColumnBridge.column), distinct))
+      }
+    }
 
     /** DataFusion 15 aggregate names → Spark built-ins (consumer.rs:383-415 /
       * SURVEY.md §2.4 A2). All run as native partial-agg (map-side combine)
@@ -552,20 +617,11 @@ object Consumer {
     private def aggColumn(fname: String, args: Seq[Column], distinct: Boolean): Column = {
       def one: Column = args.head
       if (distinct) fname match {
-        case "count" => count_distinct(args.head, args.tail: _*)
-        case "sum" => sum_distinct(one)
-        case "min" => min(one) // DISTINCT is a no-op for min/max
-        case "max" => max(one)
         // array_agg(DISTINCT x) = the distinct value set in unspecified
         // order — exactly collect_set's contract
         case "array_agg" => collect_set(one)
         case other => notImplemented(s"DISTINCT aggregate $other")
       } else fname match {
-        case "count" => count(one)
-        case "sum" => sum(one)
-        case "min" => min(one)
-        case "max" => max(one)
-        case "avg" | "mean" => avg(one)
         case "median" => median(one)
         case "approx_distinct" => approx_count_distinct(one)
         case "approx_median" => percentile_approx(one, lit(0.5), lit(10000))
@@ -598,30 +654,6 @@ object Consumer {
                   "regr_avgx" | "regr_avgy" | "regr_count" | "every" | "any" |
                   "some") =>
           call_function(n, args: _*)
-        // exact discrete percentile; the ASC-only contract is enforced by
-        // the producer (the DESC flag has no wire form). The SQL registry's
-        // builder takes only the percentage (WITHIN GROUP supplies the sort
-        // child via the parser), so consume through a direct constructor.
-        case n @ ("percentile_disc" | "percentile_disc_desc") =>
-          val rev = n == "percentile_disc_desc"
-          val fname = s"graft_$n"
-          org.apache.spark.sql.SparkSession.active.sessionState.functionRegistry
-            .createOrReplaceTempFunction(fname,
-              es => new org.apache.spark.sql.catalyst.expressions.aggregate
-                .PercentileDisc(es(0), es(1), reverse = rev)
-                .toAggregateExpression(),
-              "scala_udf")
-          call_function(fname, args: _*)
-        // mode's within-group tie ordering, carried in the name (round 8)
-        case n @ ("mode_asc" | "mode_desc") =>
-          val rev = n == "mode_desc"
-          val fname = s"graft_$n"
-          org.apache.spark.sql.SparkSession.active.sessionState.functionRegistry
-            .createOrReplaceTempFunction(fname,
-              es => new org.apache.spark.sql.catalyst.expressions.aggregate
-                .Mode(es(0), 0, 0, Some(rev)).toAggregateExpression(),
-              "scala_udf")
-          call_function(fname, args: _*)
         case "first" => first(one)
         case "last" => last(one)
         case "first_ignore_nulls" => first(one, ignoreNulls = true)
@@ -662,24 +694,17 @@ object Consumer {
     }
 
     // ------------------------------------------------------------ expressions
-    /** FieldRef ordinals index the flattened child schema; for joins that is
-      * left.columns ++ right.columns (consumer.rs:282-317).
-      */
-    private def toColumn(e: SExpr, df: DataFrame, right: Option[DataFrame] = None): Column = {
-      val cols: Seq[Column] = right match {
-        case Some(r) => df.columns.map(df.col).toSeq ++ r.columns.map(r.col).toSeq
-        case None => df.columns.map(df.col).toSeq
-      }
-      // top-level column types, needed only to resolve NestedRef ordinals to
-      // struct field NAMES (the public Column.getField API is name-based)
-      refTypes = right match {
-        case Some(r) => df.schema.map(_.dataType).toSeq ++ r.schema.map(_.dataType).toSeq
-        case None => df.schema.map(_.dataType).toSeq
-      }
-      toColumnRec(e, cols)
+    private def toCol(e: SExpr, in: Seq[Attribute]): Column = ColumnBridge.column(toExpr(e, in))
+
+    /** A Column-API expression, converted; marks the node being built for
+      * analysis. */
+    private def fromCol(c: Column): Expression = {
+      viaColumns = true
+      ColumnBridge.expression(spark, c)
     }
 
-    private var refTypes: Seq[org.apache.spark.sql.types.DataType] = Nil
+    private def cast(e: Expression, t: DataType): Expression =
+      Cast(e, t, Option(SQLConf.get.sessionLocalTimeZone))
 
     private def litString(e: SExpr): String = e match {
       case SExpr.Lit(LitVal.LStr(s)) => s
@@ -719,7 +744,7 @@ object Consumer {
 
     // lambda-variable bindings for the __lambda/__lambda_var wire convention:
     // slots are assigned in depth-first scope order, mirroring the producer
-    private val lambdaEnv = scala.collection.mutable.Map.empty[Int, Column]
+    private val lambdaEnv = mutable.Map.empty[Int, Expression]
     private var lambdaDepth = 0
 
     /** arity of a wire lambda (__lambda(arity, body)), None if not one */
@@ -731,14 +756,14 @@ object Consumer {
     }
 
     /** Convert a wire lambda's body with `xs` bound to its variables. */
-    private def bindLambda(e: SExpr, cols: Seq[Column], xs: Seq[Column]): Column =
+    private def bindLambda(e: SExpr, in: Seq[Attribute], xs: Seq[Column]): Column =
       e match {
         case SExpr.ScalarFn(ref, Seq(_, body))
             if extMap.get(ref).contains("__lambda") =>
           val base = lambdaDepth
-          xs.zipWithIndex.foreach { case (x, i) => lambdaEnv(base + i) = x }
+          xs.zipWithIndex.foreach { case (x, i) => lambdaEnv(base + i) = fromCol(x) }
           lambdaDepth += xs.size
-          try toColumnRec(body, cols)
+          try toCol(body, in)
           finally {
             lambdaDepth -= xs.size
             xs.indices.foreach(i => lambdaEnv.remove(base + i))
@@ -746,263 +771,263 @@ object Consumer {
         case other => notImplemented(s"expected lambda argument, got $other")
       }
 
-    private def toColumnRec(e: SExpr, cols: Seq[Column]): Column = e match {
-      case SExpr.FieldRef(i) =>
-        if (i < 0 || i >= cols.size)
-          internalErr(s"field reference $i out of range ${cols.size}")
-        cols(i)
+    /** FieldRef ordinals index the flattened child output; for joins that
+      * is left.output ++ right.output (consumer.rs:282-317). */
+    private def toExpr(e: SExpr, in: Seq[Attribute]): Expression = e match {
+      case SExpr.FieldRef(i) => at(in, i)
 
       case SExpr.NestedRef(i, path) =>
-        if (i < 0 || i >= cols.size)
-          internalErr(s"nested reference base $i out of range ${cols.size}")
-        // walk the struct ordinals, resolving each to its field name from
-        // the input schema (ordinal-addressed per spec, name-accessed here)
-        var dt: org.apache.spark.sql.types.DataType =
-          if (i < refTypes.size) refTypes(i) else null
-        path.foldLeft(cols(i)) { (c, ord) => dt match {
-          case st: StructType if ord >= 0 && ord < st.fields.length =>
-            val f = st.fields(ord)
-            dt = f.dataType
-            c.getField(f.name)
-          case other =>
-            notImplemented(s"nested reference ordinal $ord into ${other}")
-        }}
+        // walk the struct ordinals (ordinal-addressed per spec)
+        path.foldLeft(at(in, i, "nested reference base"): Expression) { (c, ord) =>
+          c.dataType match {
+            case st: StructType if ord >= 0 && ord < st.fields.length =>
+              GetStructField(c, ord, Some(st.fields(ord).name))
+            case other =>
+              notImplemented(s"nested reference ordinal $ord into ${other}")
+          }
+        }
 
-      case SExpr.Lit(v) => literalColumn(v)
+      case SExpr.Lit(v) => literal(v)
 
-      case SExpr.Cast(t, _, in) => toColumnRec(in, cols).cast(sparkType(t))
+      case SExpr.Cast(t, _, x) => cast(toExpr(x, in), sparkType(t))
 
       case SExpr.IfThen(clauses, elseExpr) =>
         // base-expression CASE arrives as a first clause with then=None
         // (consumer.rs:474-489)
         val (base, rest) = clauses match {
-          case IfClause(b, None) +: tail => (Some(toColumnRec(b, cols)), tail)
+          case IfClause(b, None) +: tail => (Some(toExpr(b, in)), tail)
           case _ => (None, clauses)
         }
         if (rest.isEmpty) notImplemented("CASE without WHEN clauses")
         val branches = rest.map {
           case IfClause(c, Some(v)) =>
             val cond = base match {
-              case Some(b) => b === toColumnRec(c, cols)
-              case None => toColumnRec(c, cols)
+              case Some(b) => EqualTo(b, toExpr(c, in))
+              case None => toExpr(c, in)
             }
-            (cond, toColumnRec(v, cols))
+            (cond, toExpr(v, in))
           case IfClause(_, None) => notImplemented("misplaced base clause in CASE")
         }
-        val whenChain = branches.tail.foldLeft(when(branches.head._1, branches.head._2)) {
-          case (acc, (c, v)) => acc.when(c, v)
-        }
-        elseExpr.map(e2 => whenChain.otherwise(toColumnRec(e2, cols))).getOrElse(whenChain)
+        CaseWhen(branches, elseExpr.map(toExpr(_, in)))
 
-      case SExpr.WindowFn(ref, args, partitions, sorts, lower, upper, rowFrame) =>
-        import org.apache.spark.sql.expressions.{Window, WindowSpec}
-        val parts = partitions.map(toColumnRec(_, cols))
-        val sortCols = sorts.map { s =>
-          val c = toColumnRec(s.expr, cols)
-          s.direction match {
-            case SortDirection.AscNullsFirst => c.asc_nulls_first
-            case SortDirection.AscNullsLast => c.asc_nulls_last
-            case SortDirection.DescNullsFirst => c.desc_nulls_first
-            case SortDirection.DescNullsLast => c.desc_nulls_last
-            case other => notImplemented(s"window sort direction $other")
-          }
-        }
-        def bound(b: WBound, isLower: Boolean): Long = b match {
-          case WBound.Unbounded =>
-            if (isLower) Window.unboundedPreceding else Window.unboundedFollowing
-          case WBound.CurrentRow => Window.currentRow
-          case WBound.Preceding(n) => -n
-          case WBound.Following(n) => n
-        }
-        val base0 = Window.partitionBy(parts: _*)
-        val base = if (sortCols.nonEmpty) base0.orderBy(sortCols: _*) else base0
-        val fname = name(ref).toLowerCase
-        val ranking = Set("row_number", "rank", "dense_rank", "percent_rank",
-          "cume_dist", "ntile", "lag", "lead")
-        // ranking/offset functions reject explicit frames; aggregates need them
-        val spec: WindowSpec =
-          if (ranking.contains(fname)) base
-          else if (rowFrame) base.rowsBetween(bound(lower, true), bound(upper, false))
-          else base.rangeBetween(bound(lower, true), bound(upper, false))
-        val fnCol = fname match {
-          case "row_number" => row_number()
-          case "rank" => rank()
-          case "dense_rank" => dense_rank()
-          case "percent_rank" => percent_rank()
-          case "cume_dist" => cume_dist()
-          case "ntile" => ntile(litInt(args.head))
-          case "lag" =>
-            val off = if (args.size > 1) litInt(args(1)) else 1
-            if (args.size > 2) lag(toColumnRec(args.head, cols), off, lit2(args(2)))
-            else lag(toColumnRec(args.head, cols), off)
-          case "lead" =>
-            val off = if (args.size > 1) litInt(args(1)) else 1
-            if (args.size > 2) lead(toColumnRec(args.head, cols), off, lit2(args(2)))
-            else lead(toColumnRec(args.head, cols), off)
-          case "first_value" =>
-            first(toColumnRec(args.head, cols), ignoreNulls = litBool(args, 1))
-          case "last_value" =>
-            last(toColumnRec(args.head, cols), ignoreNulls = litBool(args, 1))
-          case "nth_value" =>
-            nth_value(toColumnRec(args.head, cols), litInt(args(1)),
-              ignoreNulls = litBool(args, 2))
-          case aggName => aggColumn(aggName, args.map(toColumnRec(_, cols)),
-            distinct = false)
-        }
-        fnCol.over(spec)
+      case w: SExpr.WindowFn => fromCol(windowColumn(w, in))
 
       case SExpr.ScalarFn(ref, args) =>
-        val n = name(ref)
-        def a0 = toColumnRec(args(0), cols)
-        def a1 = toColumnRec(args(1), cols)
-        def all = args.map(toColumnRec(_, cols))
-        n match {
-          // struct field access (producer's get_field extension): the field
-          // name is a string literal, consumed raw — not a Column
-          case "get_field" => args(1) match {
-            case SExpr.Lit(LitVal.LStr(fieldName)) => a0.getField(fieldName)
-            case other => notImplemented(s"get_field name $other")
-          }
-          case "get_array_field" => args(1) match {
-            case SExpr.Lit(LitVal.LStr(fieldName)) =>
-              transform(a0, x => x.getField(fieldName))
-            case other => notImplemented(s"get_array_field name $other")
-          }
-          case "get_array_item" => a0.getItem(a1)
-          // name_to_op's 26 operators (consumer.rs:37-71)
-          case "equal" => a0 === a1
-          case "not_equal" => a0 =!= a1
-          case "lt" => a0 < a1
-          case "lte" => a0 <= a1
-          case "gt" => a0 > a1
-          case "gte" => a0 >= a1
-          case "add" => a0 + a1
+        def x(i: Int) = toExpr(args(i), in)
+        name(ref) match {
+          // comparisons, arithmetic, boolean ops and null tests of
+          // name_to_op's 26 operators (consumer.rs:37-71), built directly
+          case "equal" => EqualTo(x(0), x(1))
+          case "not_equal" => Not(EqualTo(x(0), x(1)))
+          case "lt" => LessThan(x(0), x(1))
+          case "lte" => LessThanOrEqual(x(0), x(1))
+          case "gt" => GreaterThan(x(0), x(1))
+          case "gte" => GreaterThanOrEqual(x(0), x(1))
+          case "add" => Add(x(0), x(1))
           // accept the reference's "substract" typo (producer.rs:297)
-          case "subtract" | "substract" => a0 - a1
-          case "multiply" => a0 * a1
-          case "divide" => a0 / a1
-          // integer division — registry-resolved so operand types drive the
-          // IntegralDivide node exactly as SQL `a DIV b` would
-          case "div" => call_function("div", a0, a1)
-          case "mod" | "modulo" => a0 % a1
-          case "and" => a0 && a1
-          case "or" => a0 || a1
-          case "like" => a0.like(litString(args(1)))
-          case "not_like" => !a0.like(litString(args(1)))
-          case "regex_match" => a0.rlike(litString(args(1)))
-          case "regex_imatch" => a0.rlike("(?i)" + litString(args(1)))
-          case "regex_not_match" => !a0.rlike(litString(args(1)))
-          case "regex_not_imatch" => !a0.rlike("(?i)" + litString(args(1)))
-          case "is_distinct_from" => !(a0 <=> a1)
-          case "is_not_distinct_from" => a0 <=> a1
-          case "bitwise_and" => a0.bitwiseAND(a1)
-          case "bitwise_or" => a0.bitwiseOR(a1)
-          case "bitwise_xor" => a0.bitwiseXOR(a1)
-          // shift amounts may be expressions (e.g. a lambda variable), which
-          // the Int-typed functions API can't take — resolve via the registry
-          case "bitwise_shift_right" => call_function("shiftright", a0, a1)
-          case "bitwise_shift_left" => call_function("shiftleft", a0, a1)
-          case "str_concat" => concat(all: _*)
-          // unary / variadic extensions (Producer.scala)
-          case "not" => !a0
-          case "is_null" => a0.isNull
-          case "is_not_null" => a0.isNotNull
-          case "negate" => -a0
-          case "coalesce" => coalesce(all: _*)
-          case "raise_error" => raise_error(a0)
-          case "array" => array(all: _*)
-          case "map" => map(all: _*)
-          case "get_map_value" => a0.getItem(a1)
-
-          // higher-order functions: lambda args arrive as __lambda(arity,
-          // body) and bind positionally via bindLambda
-          case "__lambda" => notImplemented("lambda outside a higher-order function")
-          case "__lambda_var" =>
-            lambdaEnv.getOrElse(litInt(args.head),
-              internalErr(s"lambda variable slot ${litInt(args.head)} unbound"))
-          case "transform" => lambdaArity(args(1)) match {
-            case Some(1) => transform(a0, x => bindLambda(args(1), cols, Seq(x)))
-            case Some(2) => transform(a0, (x, i) => bindLambda(args(1), cols, Seq(x, i)))
-            case _ => notImplemented("transform lambda arity")
-          }
-          case "filter" => lambdaArity(args(1)) match {
-            case Some(1) => filter(a0, x => bindLambda(args(1), cols, Seq(x)))
-            case Some(2) => filter(a0, (x, i) => bindLambda(args(1), cols, Seq(x, i)))
-            case _ => notImplemented("filter lambda arity")
-          }
-          case "exists" => exists(a0, x => bindLambda(args(1), cols, Seq(x)))
-          case "forall" => forall(a0, x => bindLambda(args(1), cols, Seq(x)))
-          case "aggregate" =>
-            if (args.size == 4)
-              aggregate(a0, a1,
-                (acc, x) => bindLambda(args(2), cols, Seq(acc, x)),
-                fin => bindLambda(args(3), cols, Seq(fin)))
-            else aggregate(a0, a1,
-              (acc, x) => bindLambda(args(2), cols, Seq(acc, x)))
-          case "zip_with" =>
-            zip_with(a0, a1, (x, y) => bindLambda(args(2), cols, Seq(x, y)))
-          case "transform_keys" =>
-            transform_keys(a0, (k, v) => bindLambda(args(1), cols, Seq(k, v)))
-          case "transform_values" =>
-            transform_values(a0, (k, v) => bindLambda(args(1), cols, Seq(k, v)))
-          case "map_filter" =>
-            map_filter(a0, (k, v) => bindLambda(args(1), cols, Seq(k, v)))
-          case "map_zip_with" =>
-            map_zip_with(a0, a1,
-              (k, v1, v2) => bindLambda(args(2), cols, Seq(k, v1, v2)))
-          case "array_sort" if args.size == 2 && lambdaArity(args(1)).isDefined =>
-            array_sort(a0, (x, y) => bindLambda(args(1), cols, Seq(x, y)))
-
-          // graft's minhash kernel: numHashes rides as a literal argument
-          case "minhash_sig" =>
-            graft.functions.MinHashFunctions.ensureSessionRegistered()
-            call_function("minhash_sig", a0, lit(litInt(args(1))))
-          // graft's sign-LSH bucket kernel: (tables, planes, dim) literals
-          case "lsh_buckets" =>
-            graft.functions.VecFunctions.ensureSessionRegistered()
-            call_function("lsh_buckets", a0, lit(litInt(args(1))),
-              lit(litInt(args(2))), lit(litInt(args(3))))
-          // graft's top-k-nearest-centroid kernel: k rides as a literal
-          case "vec_top_cells" =>
-            graft.functions.VecFunctions.ensureSessionRegistered()
-            call_function("vec_top_cells", a0, a1,
-              toColumnRec(args(2), cols), lit(litInt(args(3))))
-          // named scalar functions (Producer.namedScalarFns) resolve through
-          // the session function registry; graft's vector kernels register
-          // themselves on first use so foreign plans naming them resolve too
-          case other if Producer.namedScalarFns.contains(other) =>
-            if (other.startsWith("vec_") || other == "cell_pairs")
-              graft.functions.VecFunctions.ensureSessionRegistered()
-            if (other == "simhash64" || other == "simhash64_text" ||
-                other == "minhash_sig_text")
-              graft.functions.MinHashFunctions.ensureSessionRegistered()
-            if (other == "sorted_jaccard_ge" || other == "sorted_containment_ge" ||
-                other == "bucket_jaccard_pairs")
-              graft.functions.JaccardFunctions.ensureSessionRegistered()
-            if (other == "shingle_hashes")
-              graft.functions.ShingleFunctions.ensureSessionRegistered()
-            if (other == "feature_buckets")
-              graft.functions.FeatureBucketFunctions.ensureSessionRegistered()
-            if (other.startsWith("bpe_count"))
-              graft.functions.BpeFunctions.ensureSessionRegistered()
-            if (other == "charlm_fold")
-              graft.functions.CharLmFunctions.ensureSessionRegistered()
-            if (other.startsWith("freq_"))
-              graft.functions.FreqFunctions.ensureSessionRegistered()
-            if (other.startsWith("pq_"))
-              graft.functions.PqFunctions.ensureSessionRegistered()
-            if (other == "might_contain")
-              graft.functions.BloomFunctions.ensureSessionRegistered()
-            if (other.startsWith("cms_"))
-              graft.functions.CmsFunctions.ensureSessionRegistered()
-            if (other.startsWith("theta_"))
-              graft.functions.ThetaFunctions.ensureSessionRegistered()
-            call_function(other, all: _*)
-          case other => notImplemented(s"scalar function $other")
+          case "subtract" | "substract" => Subtract(x(0), x(1))
+          case "multiply" => Multiply(x(0), x(1))
+          case "divide" => Divide(x(0), x(1))
+          case "mod" | "modulo" => Remainder(x(0), x(1))
+          case "and" => And(x(0), x(1))
+          case "or" => Or(x(0), x(1))
+          case "not" => Not(x(0))
+          case "is_null" => IsNull(x(0))
+          case "is_not_null" => IsNotNull(x(0))
+          case "is_distinct_from" => Not(EqualNullSafe(x(0), x(1)))
+          case "is_not_distinct_from" => EqualNullSafe(x(0), x(1))
+          case "negate" => UnaryMinus(x(0))
+          case n => fromCol(scalarColumn(n, args, in))
         }
     }
 
-    /** LitVal → external row value for spark.createDataFrame (VirtualTable) */
+    private def windowColumn(w: SExpr.WindowFn, in: Seq[Attribute]): Column = {
+      import org.apache.spark.sql.expressions.{Window, WindowSpec}
+      val SExpr.WindowFn(ref, args, partitions, sorts, lower, upper, rowFrame) = w
+      def c(e: SExpr) = toCol(e, in)
+      val sortCols = sorts.map { s =>
+        val o = c(s.expr)
+        s.direction match {
+          case SortDirection.AscNullsFirst => o.asc_nulls_first
+          case SortDirection.AscNullsLast => o.asc_nulls_last
+          case SortDirection.DescNullsFirst => o.desc_nulls_first
+          case SortDirection.DescNullsLast => o.desc_nulls_last
+          case other => notImplemented(s"window sort direction $other")
+        }
+      }
+      def bound(b: WBound, isLower: Boolean): Long = b match {
+        case WBound.Unbounded =>
+          if (isLower) Window.unboundedPreceding else Window.unboundedFollowing
+        case WBound.CurrentRow => Window.currentRow
+        case WBound.Preceding(n) => -n
+        case WBound.Following(n) => n
+      }
+      val base0 = Window.partitionBy(partitions.map(c): _*)
+      val base = if (sortCols.nonEmpty) base0.orderBy(sortCols: _*) else base0
+      val fname = name(ref).toLowerCase
+      val ranking = Set("row_number", "rank", "dense_rank", "percent_rank",
+        "cume_dist", "ntile", "lag", "lead")
+      // ranking/offset functions reject explicit frames; aggregates need them
+      val spec: WindowSpec =
+        if (ranking.contains(fname)) base
+        else if (rowFrame) base.rowsBetween(bound(lower, true), bound(upper, false))
+        else base.rangeBetween(bound(lower, true), bound(upper, false))
+      val fnCol = fname match {
+        case "row_number" => row_number()
+        case "rank" => rank()
+        case "dense_rank" => dense_rank()
+        case "percent_rank" => percent_rank()
+        case "cume_dist" => cume_dist()
+        case "ntile" => ntile(litInt(args.head))
+        case "lag" =>
+          val off = if (args.size > 1) litInt(args(1)) else 1
+          if (args.size > 2) lag(c(args.head), off, lit2(args(2)))
+          else lag(c(args.head), off)
+        case "lead" =>
+          val off = if (args.size > 1) litInt(args(1)) else 1
+          if (args.size > 2) lead(c(args.head), off, lit2(args(2)))
+          else lead(c(args.head), off)
+        case "first_value" => first(c(args.head), ignoreNulls = litBool(args, 1))
+        case "last_value" => last(c(args.head), ignoreNulls = litBool(args, 1))
+        case "nth_value" =>
+          nth_value(c(args.head), litInt(args(1)), ignoreNulls = litBool(args, 2))
+        case aggName => ColumnBridge.column(
+          aggExpr(aggName, args.map(toExpr(_, in)), distinct = false))
+      }
+      fnCol.over(spec)
+    }
+
+    /** The scalar functions outside the core operators: the Column table. */
+    private def scalarColumn(n: String, args: Seq[SExpr], in: Seq[Attribute]): Column = {
+      def a0 = toCol(args(0), in)
+      def a1 = toCol(args(1), in)
+      def all = args.map(toCol(_, in))
+      n match {
+        // struct field access (producer's get_field extension): the field
+        // name is a string literal, consumed raw — not a Column
+        case "get_field" => args(1) match {
+          case SExpr.Lit(LitVal.LStr(fieldName)) => a0.getField(fieldName)
+          case other => notImplemented(s"get_field name $other")
+        }
+        case "get_array_field" => args(1) match {
+          case SExpr.Lit(LitVal.LStr(fieldName)) =>
+            transform(a0, x => x.getField(fieldName))
+          case other => notImplemented(s"get_array_field name $other")
+        }
+        case "get_array_item" => a0.getItem(a1)
+        // integer division — registry-resolved so operand types drive the
+        // IntegralDivide node exactly as SQL `a DIV b` would
+        case "div" => call_function("div", a0, a1)
+        case "like" => a0.like(litString(args(1)))
+        case "not_like" => !a0.like(litString(args(1)))
+        case "regex_match" => a0.rlike(litString(args(1)))
+        case "regex_imatch" => a0.rlike("(?i)" + litString(args(1)))
+        case "regex_not_match" => !a0.rlike(litString(args(1)))
+        case "regex_not_imatch" => !a0.rlike("(?i)" + litString(args(1)))
+        case "bitwise_and" => a0.bitwiseAND(a1)
+        case "bitwise_or" => a0.bitwiseOR(a1)
+        case "bitwise_xor" => a0.bitwiseXOR(a1)
+        // shift amounts may be expressions (e.g. a lambda variable), which
+        // the Int-typed functions API can't take — resolve via the registry
+        case "bitwise_shift_right" => call_function("shiftright", a0, a1)
+        case "bitwise_shift_left" => call_function("shiftleft", a0, a1)
+        case "str_concat" => concat(all: _*)
+        // variadic extensions (Producer.scala)
+        case "coalesce" => coalesce(all: _*)
+        case "raise_error" => raise_error(a0)
+        case "array" => array(all: _*)
+        case "map" => map(all: _*)
+        case "get_map_value" => a0.getItem(a1)
+
+        // higher-order functions: lambda args arrive as __lambda(arity,
+        // body) and bind positionally via bindLambda
+        case "__lambda" => notImplemented("lambda outside a higher-order function")
+        case "__lambda_var" =>
+          ColumnBridge.column(lambdaEnv.getOrElse(litInt(args.head),
+            internalErr(s"lambda variable slot ${litInt(args.head)} unbound")))
+        case "transform" => lambdaArity(args(1)) match {
+          case Some(1) => transform(a0, x => bindLambda(args(1), in, Seq(x)))
+          case Some(2) => transform(a0, (x, i) => bindLambda(args(1), in, Seq(x, i)))
+          case _ => notImplemented("transform lambda arity")
+        }
+        case "filter" => lambdaArity(args(1)) match {
+          case Some(1) => filter(a0, x => bindLambda(args(1), in, Seq(x)))
+          case Some(2) => filter(a0, (x, i) => bindLambda(args(1), in, Seq(x, i)))
+          case _ => notImplemented("filter lambda arity")
+        }
+        case "exists" => exists(a0, x => bindLambda(args(1), in, Seq(x)))
+        case "forall" => forall(a0, x => bindLambda(args(1), in, Seq(x)))
+        case "aggregate" =>
+          if (args.size == 4)
+            aggregate(a0, a1,
+              (acc, x) => bindLambda(args(2), in, Seq(acc, x)),
+              fin => bindLambda(args(3), in, Seq(fin)))
+          else aggregate(a0, a1,
+            (acc, x) => bindLambda(args(2), in, Seq(acc, x)))
+        case "zip_with" =>
+          zip_with(a0, a1, (x, y) => bindLambda(args(2), in, Seq(x, y)))
+        case "transform_keys" =>
+          transform_keys(a0, (k, v) => bindLambda(args(1), in, Seq(k, v)))
+        case "transform_values" =>
+          transform_values(a0, (k, v) => bindLambda(args(1), in, Seq(k, v)))
+        case "map_filter" =>
+          map_filter(a0, (k, v) => bindLambda(args(1), in, Seq(k, v)))
+        case "map_zip_with" =>
+          map_zip_with(a0, a1,
+            (k, v1, v2) => bindLambda(args(2), in, Seq(k, v1, v2)))
+        case "array_sort" if args.size == 2 && lambdaArity(args(1)).isDefined =>
+          array_sort(a0, (x, y) => bindLambda(args(1), in, Seq(x, y)))
+
+        // graft's minhash kernel: numHashes rides as a literal argument
+        case "minhash_sig" =>
+          graft.functions.MinHashFunctions.ensureSessionRegistered()
+          call_function("minhash_sig", a0, lit(litInt(args(1))))
+        // graft's sign-LSH bucket kernel: (tables, planes, dim) literals
+        case "lsh_buckets" =>
+          graft.functions.VecFunctions.ensureSessionRegistered()
+          call_function("lsh_buckets", a0, lit(litInt(args(1))),
+            lit(litInt(args(2))), lit(litInt(args(3))))
+        // graft's top-k-nearest-centroid kernel: k rides as a literal
+        case "vec_top_cells" =>
+          graft.functions.VecFunctions.ensureSessionRegistered()
+          call_function("vec_top_cells", a0, a1,
+            toCol(args(2), in), lit(litInt(args(3))))
+        // named scalar functions (Producer.namedScalarFns) resolve through
+        // the session function registry; graft's vector kernels register
+        // themselves on first use so foreign plans naming them resolve too
+        case other if Producer.namedScalarFns.contains(other) =>
+          if (other.startsWith("vec_") || other == "cell_pairs")
+            graft.functions.VecFunctions.ensureSessionRegistered()
+          if (other == "simhash64" || other == "simhash64_text" ||
+              other == "minhash_sig_text")
+            graft.functions.MinHashFunctions.ensureSessionRegistered()
+          if (other == "sorted_jaccard_ge" || other == "sorted_containment_ge" ||
+              other == "bucket_jaccard_pairs")
+            graft.functions.JaccardFunctions.ensureSessionRegistered()
+          if (other == "shingle_hashes")
+            graft.functions.ShingleFunctions.ensureSessionRegistered()
+          if (other == "feature_buckets")
+            graft.functions.FeatureBucketFunctions.ensureSessionRegistered()
+          if (other.startsWith("bpe_count"))
+            graft.functions.BpeFunctions.ensureSessionRegistered()
+          if (other == "charlm_fold")
+            graft.functions.CharLmFunctions.ensureSessionRegistered()
+          if (other.startsWith("freq_"))
+            graft.functions.FreqFunctions.ensureSessionRegistered()
+          if (other.startsWith("pq_"))
+            graft.functions.PqFunctions.ensureSessionRegistered()
+          if (other == "might_contain")
+            graft.functions.BloomFunctions.ensureSessionRegistered()
+          if (other.startsWith("cms_"))
+            graft.functions.CmsFunctions.ensureSessionRegistered()
+          if (other.startsWith("theta_"))
+            graft.functions.ThetaFunctions.ensureSessionRegistered()
+          call_function(other, all: _*)
+        case other => notImplemented(s"scalar function $other")
+      }
+    }
+
+    /** LitVal → external row value for LocalRelation rows (VirtualTable) */
     private def litExternal(v: LitVal): Any = v match {
       case LitVal.LBool(b) => b
       case LitVal.LI8(i) => i.toByte
@@ -1038,56 +1063,28 @@ object Consumer {
         es.map { case (k, v) => litExternal(k) -> litExternal(v) }.toMap
     }
 
-    private def literalColumn(v: LitVal): Column = v match {
-      case LitVal.LBool(b) => lit(b)
-      case LitVal.LI8(i) => lit(i.toByte)
-      case LitVal.LI16(i) => lit(i.toShort)
-      case LitVal.LI32(i) => lit(i)
-      case LitVal.LI64(i) => lit(i)
-      case LitVal.LFp32(f) => lit(f)
-      case LitVal.LFp64(d) => lit(d)
-      case LitVal.LStr(s) => lit(s)
-      case LitVal.LBin(b) => lit(b)
-      case LitVal.LDate(days) => lit(java.time.LocalDate.ofEpochDay(days.toLong))
-      case LitVal.LTime(us) => lit(java.time.LocalTime.ofNanoOfDay(us * 1000L))
-      case LitVal.LTimestamp(us) =>
-        lit(java.time.LocalDateTime.ofEpochSecond(
-          Math.floorDiv(us, 1000000L), (Math.floorMod(us, 1000000L) * 1000L).toInt,
-          java.time.ZoneOffset.UTC))
-      case LitVal.LTimestampTz(us) =>
-        lit(java.time.Instant.ofEpochSecond(
-          Math.floorDiv(us, 1000000L), Math.floorMod(us, 1000000L) * 1000L))
+    /** LitVal → Catalyst literal, in the internal form `functions.lit` builds */
+    private def literal(v: LitVal): Expression = v match {
+      case LitVal.LDate(days) => Literal(days, DateType)
+      case LitVal.LTimestamp(us) => Literal(us, TimestampNTZType)
+      case LitVal.LTimestampTz(us) => Literal(us, TimestampType)
       case LitVal.LIntervalDay(d, s, us) =>
-        lit(java.time.Duration.ofSeconds(d.toLong * 86400L + s)
-          .plusNanos(us.toLong * 1000L))
-      case LitVal.LIntervalYear(y, m) =>
-        lit(java.time.Period.ofYears(y).plusMonths(m.toLong.toInt))
-      case LitVal.LDecimal(bytesLE, p, s) =>
-        // little-endian i128 → BigInteger (big-endian) → BigDecimal(unscaled, s)
-        val be = bytesLE.reverse
-        val bd = new java.math.BigDecimal(new java.math.BigInteger(be), s)
-        lit(bd).cast(DecimalType(p, s))
-      case LitVal.LNull(t) => lit(null).cast(sparkType(t))
+        Literal((d.toLong * 86400L + s) * 1000000L + us, DayTimeIntervalType())
+      case LitVal.LIntervalYear(y, m) => Literal(y * 12 + m, YearMonthIntervalType())
+      case LitVal.LDecimal(_, p, s) => cast(Literal(litExternal(v)), DecimalType(p, s))
+      case LitVal.LNull(t) => Literal(null, sparkType(t))
       case LitVal.LList(et, vs) =>
-        // ONE catalyst Literal (the shape typedLit builds) instead of a
-        // CreateArray carrying |vs| child literal nodes: every analyzer
-        // pass over the rebuilt plan re-walks literal subtrees, and a
-        // consumed codebook literal (16×64×4 doubles in s11) made
-        // Consumer.consume alone cost ~0.9 s (OPTIMIZATION_r15.md "Wire
-        // consume: array literals";
-        // encode/decode of the same plan is ~10 ms). Literal.create
-        // converts the external value in one step; the elementwise
-        // CreateArray stays as the fallback for any value the converter
-        // rejects, preserving the old semantics exactly.
-        try org.apache.spark.sql.graftbridge.ColumnBridge.column(
-          org.apache.spark.sql.catalyst.expressions.Literal.create(
-            litExternal(v), ArrayType(sparkType(et))))
+        // ONE catalyst Literal, not a CreateArray of |vs| literal children
+        // that every analyzer pass re-walks (a consumed s11 codebook cost
+        // ~0.9 s that way: OPTIMIZATION_r15.md "Wire consume: array
+        // literals"); CreateArray stays as the fallback for rejected values.
+        try Literal.create(litExternal(v), ArrayType(sparkType(et)))
         catch { case scala.util.control.NonFatal(_) =>
-          array(vs.map(literalColumn): _*).cast(ArrayType(sparkType(et))) }
+          cast(CreateArray(vs.map(literal)), ArrayType(sparkType(et))) }
       case LitVal.LMap(kt, vt, es) =>
-        map(es.flatMap { case (k, v) =>
-          Seq(literalColumn(k), literalColumn(v)) }: _*)
-          .cast(MapType(sparkType(kt), sparkType(vt)))
+        cast(CreateMap(es.flatMap { case (k, x) => Seq(literal(k), literal(x)) }),
+          MapType(sparkType(kt), sparkType(vt)))
+      case other => Literal(litExternal(other))
     }
   }
 

@@ -43,8 +43,18 @@ object Wire {
     }
   }
 
+  /** Deepest message nesting `decode` accepts. A nested-Rel (or nested
+    * expression) bomb fails here with `SubstraitException`, not as a
+    * `StackOverflowError`: on a 1 MiB thread stack the recursive reader
+    * itself overflowed near 1,100 levels. A Rel costs two levels (Rel + its
+    * XxxRel), so this admits about 320 nested rels, well above the
+    * 128-deep plans ConsumeScalingSpec consumes; an IN list costs three
+    * levels per element (a left-deep OR chain). */
+  val MaxNestingDepth = 640
+
   // ------------------------------------------------------------------ reader
-  private final class R(val buf: Array[Byte], var pos: Int, val end: Int) {
+  private final class R(val buf: Array[Byte], var pos: Int, val end: Int,
+                        val depth: Int) {
     def hasMore: Boolean = pos < end
     def varint(): Long = {
       var shift = 0; var v = 0L
@@ -81,8 +91,10 @@ object Wire {
       len.toInt
     }
     def lenDelim(): R = {
+      if (depth >= MaxNestingDepth)
+        internalErr(s"message nesting deeper than $MaxNestingDepth at byte offset $pos")
       val len = length()
-      val r = new R(buf, pos, pos + len); pos += len; r
+      val r = new R(buf, pos, pos + len, depth + 1); pos += len; r
     }
     def rawBytes(): Array[Byte] = {
       val len = length()
@@ -1175,7 +1187,7 @@ object Wire {
             }}
             res = url match {
               case `generateDetailUrl` =>
-                val dr = new R(detail, 0, detail.length)
+                val dr = new R(detail, 0, detail.length, rr.depth + 1)
                 var gen = ""; var arg: SExpr = null; var outer = false; var k = 1
                 dr.fields { (df, dwt) => (df, dwt) match {
                   case (1, 2) => gen = dr.str(); true
@@ -1186,7 +1198,7 @@ object Wire {
                 }}
                 Rel.ExtGenerate(in, gen, arg, outer, k)
               case `exchangeDetailUrl` =>
-                val dr = new R(detail, 0, detail.length)
+                val dr = new R(detail, 0, detail.length, rr.depth + 1)
                 val exprs = Seq.newBuilder[SExpr]; var num = 0; var sh = true
                 val dirs = Seq.newBuilder[Int]
                 dr.fields { (df, dwt) => (df, dwt) match {
@@ -1198,7 +1210,7 @@ object Wire {
                 }}
                 Rel.ExtExchange(in, exprs.result(), num, sh, dirs.result())
               case `sampleDetailUrl` =>
-                val dr = new R(detail, 0, detail.length)
+                val dr = new R(detail, 0, detail.length, rr.depth + 1)
                 var lo = 0.0; var hi = 1.0; var wr = false; var seed = 0L
                 dr.fields { (df, dwt) => (df, dwt) match {
                   case (1, 1) => lo = java.lang.Double.longBitsToDouble(dr.fixed64()); true
@@ -1209,7 +1221,7 @@ object Wire {
                 }}
                 Rel.ExtSample(in, lo, hi, wr, seed)
               case `stageDetailUrl` =>
-                val dr = new R(detail, 0, detail.length)
+                val dr = new R(detail, 0, detail.length, rr.depth + 1)
                 var stage = ""
                 dr.fields { (df, dwt) => (df, dwt) match {
                   case (1, 2) => stage = dr.str(); true
@@ -1217,11 +1229,11 @@ object Wire {
                 }}
                 Rel.ExtStage(in, stage)
               case `iterationDetailUrl` =>
-                val dr = new R(detail, 0, detail.length)
+                val dr = new R(detail, 0, detail.length, rr.depth + 1)
                 var bodyPlan: Plan = null; var maxIters = 0
                 var checkFixpoint = false; var requireFp = false
                 dr.fields { (df, dwt) => (df, dwt) match {
-                  case (1, 2) => bodyPlan = decode(dr.rawBytes()); true
+                  case (1, 2) => bodyPlan = decode(dr.rawBytes(), dr.depth + 1); true
                   case (2, 0) => maxIters = dr.varint().toInt; true
                   case (3, 0) => checkFixpoint = dr.varint() == 1L; true
                   case (4, 0) => requireFp = dr.varint() == 1L; true
@@ -1232,7 +1244,7 @@ object Wire {
                 Rel.ExtIteration(in, bodyPlan, maxIters, checkFixpoint,
                   requireFp)
               case `sessionWindowDetailUrl` =>
-                val dr = new R(detail, 0, detail.length)
+                val dr = new R(detail, 0, detail.length, rr.depth + 1)
                 // ts_field defaults 0 (column 0 is a legal ts position and
                 // proto3-canonical encoders omit zero-valued fields)
                 var tsField = 0; var gapMicros = 0L
@@ -1245,7 +1257,7 @@ object Wire {
                 }}
                 Rel.ExtSessionWindow(in, tsField, gapMicros, gapExpr)
               case `hintDetailUrl` =>
-                val dr = new R(detail, 0, detail.length)
+                val dr = new R(detail, 0, detail.length, rr.depth + 1)
                 var hint = ""
                 dr.fields { (df, dwt) => (df, dwt) match {
                   case (1, 2) => hint = dr.str(); true
@@ -1305,8 +1317,10 @@ object Wire {
     w.out.toByteArray
   }
 
-  def decode(bytes: Array[Byte]): Plan = {
-    val r = new R(bytes, 0, bytes.length)
+  def decode(bytes: Array[Byte]): Plan = decode(bytes, 0)
+
+  private def decode(bytes: Array[Byte], depth: Int): Plan = {
+    val r = new R(bytes, 0, bytes.length, depth)
     val exts = Seq.newBuilder[ExtensionFunction]
     val rels = Seq.newBuilder[PlanRel]
     r.fields { (f, wt) => (f, wt) match {

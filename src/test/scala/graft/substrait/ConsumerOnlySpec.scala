@@ -300,4 +300,37 @@ class ConsumerOnlySpec extends SparkTestBase {
     val got = consume(plan).collect().map(r => (r.getLong(0), Option(r.getString(1)))).toSet
     assert(got == Set((10L, Some("x")), (20L, None)))
   }
+
+  test("percentile_disc + mode_desc consume through a non-active session without registering functions") {
+    val other = spark.newSession()
+    assert(org.apache.spark.sql.SparkSession.active ne other)
+    val want = other.sql("SELECT percentile_disc(0.5) WITHIN GROUP (ORDER BY k) AS p50, " +
+      "mode() WITHIN GROUP (ORDER BY k) AS m_asc, " +
+      "mode() WITHIN GROUP (ORDER BY k DESC) AS m_desc " +
+      "FROM VALUES (1L), (2L), (2L), (3L), (3L), (5L) AS t(k)")
+    val plan = Producer.produce(want)
+    assert(Set("percentile_disc", "mode_asc", "mode_desc")
+      .subsetOf(plan.extensions.map(_.name).toSet), plan.extensions)
+    val got = Consumer.consume(other, Wire.decode(Wire.encode(plan)))
+    assert(got.sparkSession eq other)
+    assertSameRows(want, got)
+    for (s <- Seq(spark, other); f <- Seq("graft_percentile_disc", "graft_mode_asc", "graft_mode_desc"))
+      assert(!s.catalog.functionExists(f), s"$f registered as a side effect of consume")
+  }
+
+  test("an iteration body binding the state twice (pointer doubling) matches the DataFrame loop") {
+    import spark.implicits._
+    // parent pointers of two trees: 1→2→3→4→4 and 6→5→5
+    val init = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 4L), (5L, 5L), (6L, 5L)).toDF("k", "v")
+    def hop(s: org.apache.spark.sql.DataFrame) =
+      s.as("a").join(s.as("b"), col("a.v") === col("b.k"))
+        .select(col("a.k").as("k"), col("b.v").as("v"))
+    val plan = Producer.produceIteration(init, hop, maxIters = 10, checkFixpoint = true)
+    val got = Consumer.consume(spark, Wire.decode(Wire.encode(plan)))
+    var want = init
+    for (_ <- 1 to 3) want = hop(want)
+    assertSameRows(want, got)
+    assert(got.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      Map(1L -> 4L, 2L -> 4L, 3L -> 4L, 4L -> 4L, 5L -> 5L, 6L -> 5L))
+  }
 }

@@ -147,6 +147,15 @@ class RoundtripSpec extends SparkTestBase {
     sqlRt("SELECT d1.a, d1.b, d2.c FROM data d1 JOIN data d2 ON d1.a = d2.a")
   }
 
+  // the same table on both sides with identical column lists: the two reads
+  // bind positionally to distinct attributes, so neither side's refs can
+  // resolve to the other's (inner keeps both sides, left_anti the left one)
+  test("self-join of one table with identical columns, inner and left_anti") {
+    sqlRt("SELECT * FROM data l JOIN data r ON l.a = r.a AND l.b <= r.b")
+    sqlRt("SELECT * FROM data l JOIN data r ON l.a < r.a")
+    sqlRt("SELECT * FROM data l LEFT ANTI JOIN data r ON l.a > r.a")
+  }
+
   // --- tests/serialize.rs:13-36: wire-format file round-trip
   test("serialize_simple_select") {
     fixture

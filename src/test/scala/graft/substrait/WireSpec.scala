@@ -367,4 +367,40 @@ class WireSpec extends AnyFunSuite {
       Wire.decode(unknown(wrap + 1) ++ relOnly(readT)))
     assert(e.getMessage.contains(s"length ${wrap + 1} "))
   }
+
+  /** Plan bytes of a FilterRel chain `depth` deep over `readT`, built
+    * outside-in without recursion: Rel{2: FilterRel{2: Rel, 3: cond}}. */
+  private def filterChain(depth: Int): Array[Byte] = {
+    val leaf = relOnly(readT).drop(4) // strip Plan{3: PlanRel{1: …}} headers
+    val cond = lenField(3, lenField(1, Array[Byte](0x08, 0x01))) // literal true
+    val relSize = new Array[Long](depth + 1)
+    val filterSize = new Array[Long](depth + 1)
+    relSize(0) = leaf.length
+    for (k <- 1 to depth) {
+      filterSize(k) = 1 + vint(relSize(k - 1)).length + relSize(k - 1) + cond.length
+      relSize(k) = 1 + vint(filterSize(k)).length + filterSize(k)
+    }
+    val out = new java.io.ByteArrayOutputStream()
+    val top = relSize(depth)
+    out.write(vint(0x1a)); out.write(vint(1 + vint(top).length + top))
+    out.write(vint(0x0a)); out.write(vint(top))
+    for (k <- depth to 1 by -1) {
+      out.write(vint(0x12)); out.write(vint(filterSize(k)))
+      out.write(vint(0x12)); out.write(vint(relSize(k - 1)))
+    }
+    out.write(leaf)
+    for (_ <- 1 to depth) out.write(cond)
+    out.toByteArray
+  }
+
+  test("a nested-Rel bomb fails typed at the nesting cap, not with a stack overflow") {
+    def depthOf(r: Rel): Int = r match {
+      case Rel.Filter(in, _) => 1 + depthOf(in)
+      case _ => 0
+    }
+    val ok = Wire.decode(filterChain(128))
+    assert(depthOf(ok.relations.head.asInstanceOf[PlanRel.RelOnly].rel) == 128)
+    val e = intercept[SubstraitException](Wire.decode(filterChain(50000)))
+    assert(e.getMessage.contains(s"deeper than ${Wire.MaxNestingDepth}"))
+  }
 }
