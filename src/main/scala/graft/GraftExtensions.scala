@@ -2,21 +2,21 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+
+import graft.functions.Kernels
 
 /** Session-extension entry point: every graft kernel as a PERMANENT
   * session function, so a pure-SQL user (spark-sql, JDBC, a notebook with
   * `spark.sql.extensions=graft.GraftExtensions`) reaches the codegen'd
   * vector / sketch / PQ / jaccard kernels without touching the Column API.
   *
-  * The in-library Column entry points (`functions.*Functions`) register
-  * lazily into the ACTIVE session's temp registry — right for a library
-  * call-site, invisible to a session the library never touched. This class
-  * is the host-integration half the build plan's "registered via
-  * SparkSessionExtensions" escalation calls for: inject at session build,
-  * names resolve in any downstream context (including the substrait
-  * consumer's named-function lookups, which go through the same registry).
+  * The in-library Column entry points register the same table into a
+  * session's temp registry on their first call there ([[Kernels.call]]),
+  * which a session the library never touched does not see; the substrait
+  * consumer builds kernels without any registry. This class injects the
+  * table at session build, so the names resolve from pure SQL in any
+  * session the extension configures.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =
@@ -27,63 +27,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
-  import graft.functions._
-
-  /** name → builder for every kernel the library session-registers; the
-    * spec asserts these resolve and compute through a session built with
-    * the extension (and ONLY lazily elsewhere). */
-  val registrations: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "vec_dot" -> (es => VecDot(es(0), es(1))),
-    "vec_cosine" -> (es => VecCosine(es(0), es(1))),
-    "vec_l2sq" -> (es => VecL2Sq(es(0), es(1))),
-    "lsh_buckets" -> (es => {
-      def i(e: Expression, what: String): Int = e match {
-        case Literal(n: Int, _) => n
-        case other => throw new IllegalArgumentException(
-          s"lsh_buckets $what must be an integer literal, got $other")
-      }
-      LshBuckets(es(0), i(es(1), "tables"), i(es(2), "planesPerTable"),
-        i(es(3), "dim"))
-    }),
-    "simhash64" -> (es => SimHash64(es(0))),
-    "bpe_count" -> (es => BpeCount(es(0))),
-    "charlm_fold" -> (es => CharLmFold(es(0), es(1))),
-    "charlm_fit_agg" -> (es => CharLmFitAgg(es(0), es(1) match {
-      case Literal(n: Int, _) => n
-      case other => throw new IllegalArgumentException(
-        s"charlm_fit_agg maxEntries must be an integer literal, got $other")
-    }).toAggregateExpression()),
-    "minhash_sig" -> (es => MinHashSig(es(0), es(1) match {
-      case Literal(n: Int, _) => n
-      case other => throw new IllegalArgumentException(
-        s"minhash_sig numHashes must be an integer literal, got $other")
-    })),
-    "sorted_jaccard_ge" -> (es => SortedJaccardGe(es(0), es(1), es(2))),
-    "sorted_containment_ge" -> (es => SortedContainmentGe(es(0), es(1), es(2))),
-    "pq_encode" -> (es => PqEncode(es(0), es(1))),
-    "pq_adc" -> (es => PqAdc(es(0), es(1))),
-    "bloom_filter_agg" -> (es =>
-      BloomFilterAggregate(es(0), es(1), es(2), 0, 0).toAggregateExpression()),
-    "might_contain" -> (es => BloomMightContain(es(0), es(1))),
-    "cms_merge_agg" -> (es =>
-      CmsFunctions.CmsMergeAgg(es(0)).toAggregateExpression()),
-    "freq_sketch_agg_long" -> (es =>
-      FreqFunctions.FreqSketchAggLong(es(0), es(1)).toAggregateExpression()),
-    "freq_merge_agg" -> (es =>
-      FreqFunctions.FreqMergeAgg(es(0)).toAggregateExpression()),
-    "freq_estimate_long" -> (es => FreqFunctions.FreqProbeLong(es(0), es(1), "estimate")),
-    "freq_lower_bound_long" -> (es => FreqFunctions.FreqProbeLong(es(0), es(1), "lower_bound")),
-    "freq_upper_bound_long" -> (es => FreqFunctions.FreqProbeLong(es(0), es(1), "upper_bound")),
-    "freq_max_error" -> (es => FreqFunctions.FreqMaxError(es(0))),
-    "cms_estimate_long" -> (es => CmsFunctions.CmsEstimateLong(es(0), es(1))),
-    "cms_inner_product" -> (es => CmsFunctions.CmsInnerProduct(es(0), es(1))),
-    "theta_sketch_agg_long" -> (es => ThetaFunctions.ThetaSketchAggLong(es(0),
-      es.lift(1).getOrElse(Literal(1 << 14))).toAggregateExpression()),
-    "theta_union_agg" -> (es =>
-      ThetaFunctions.ThetaUnionAgg(es(0)).toAggregateExpression()),
-    "theta_estimate" -> (es => ThetaFunctions.ThetaEstimate(es(0))),
-    "theta_intersect_estimate" -> (es =>
-      ThetaFunctions.ThetaIntersectEstimate(es(0), es(1))),
-    "theta_anotb_estimate" -> (es =>
-      ThetaFunctions.ThetaANotBEstimate(es(0), es(1))))
+  /** name → builder for every kernel: the [[Kernels]] table. */
+  val registrations: Map[String, Kernels.Builder] = Kernels.all
 }

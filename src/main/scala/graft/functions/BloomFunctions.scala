@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 
 /** Bloom membership probe over (filterBytes BINARY, xxhash64-value BIGINT).
@@ -91,37 +90,16 @@ case class BloomMightContain(left: Expression, right: Expression)
   */
 object BloomFunctions {
 
-  /** public hook: the substrait consumer registers the kernels before
-    * resolving a foreign plan that names them as extension functions */
-  def ensureSessionRegistered(): Unit = ensureRegistered()
-
-  // once-per-live-session; synchronization lives in SessionRegistry
-  private def ensureRegistered(): Unit =
-    SessionRegistry.once("bloom") { spark =>
-      val reg = spark.sessionState.functionRegistry
-      reg.createOrReplaceTempFunction("bloom_filter_agg",
-        es => BloomFilterAggregate(es(0), es(1), es(2), 0, 0).toAggregateExpression(),
-        "scala_udf")
-      reg.createOrReplaceTempFunction("might_contain",
-        es => BloomMightContain(es(0), es(1)), "scala_udf")
-    }
-
   /** One binary Bloom filter over a LONG column (xxhash64 the values first).
     * `expectedItems` sizes the filter; `numBits` bounds memory
     * (bits ≈ −n·ln(fpp)/ln²2; 0.01 fpp ≈ 9.6 bits/item).
     */
-  def bloomFilterAgg(hashed: Column, expectedItems: Long, numBits: Long): Column = {
-    ensureRegistered()
-    call_function("bloom_filter_agg", hashed,
-      org.apache.spark.sql.functions.lit(expectedItems),
-      org.apache.spark.sql.functions.lit(numBits))
-  }
+  def bloomFilterAgg(hashed: Column, expectedItems: Long, numBits: Long): Column =
+    Kernels.call("bloom_filter_agg", hashed, lit(expectedItems), lit(numBits))
 
   /** Membership probe: false ⇒ DEFINITELY absent; true ⇒ maybe present. */
-  def mightContain(bloom: Column, hashed: Column): Column = {
-    ensureRegistered()
-    call_function("might_contain", bloom, hashed)
-  }
+  def mightContain(bloom: Column, hashed: Column): Column =
+    Kernels.call("might_contain", bloom, hashed)
 
   /** bits for a target false-positive probability */
   def bitsFor(expectedItems: Long, fpp: Double): Long =

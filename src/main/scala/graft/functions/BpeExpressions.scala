@@ -5,7 +5,6 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -253,10 +252,8 @@ case class BpeCountV2(child: Expression, table: Broadcast[BpeLookup])
     copy(child = c)
 }
 
-/** Column-level entry points + idempotent session registration (the
-  * VecFunctions convention; the substrait consumer calls the hook before
-  * resolving foreign plans that name bpe_count / bpe_count_v2).
-  */
+/** Column-level entry points (through [[Kernels.call]]) and the v2
+  * table's broadcast. */
 object BpeFunctions {
   // one broadcast of the v2 table per SparkContext (sessions of the same
   // context share it; entries die with the context in these single-context
@@ -268,22 +265,7 @@ object BpeFunctions {
     bcCache.computeIfAbsent(spark.sparkContext,
       sc => sc.broadcast(BpeV2.lookup))
 
-  def ensureSessionRegistered(): Unit = ensureRegistered()
+  def bpeCount(text: Column): Column = Kernels.call("bpe_count", text)
 
-  // once-per-live-session; synchronization lives in SessionRegistry
-  private def ensureRegistered(): Unit =
-    SessionRegistry.once("bpe") { spark =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "bpe_count", es => BpeCount(es(0)), "scala_udf")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "bpe_count_v2", es => BpeCountV2(es(0), tableV2(spark)), "scala_udf")
-    }
-
-  def bpeCount(text: Column): Column = {
-    ensureRegistered(); call_function("bpe_count", text)
-  }
-
-  def bpeCountV2(text: Column): Column = {
-    ensureRegistered(); call_function("bpe_count_v2", text)
-  }
+  def bpeCountV2(text: Column): Column = Kernels.call("bpe_count_v2", text)
 }

@@ -1,13 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.MapData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -242,33 +241,13 @@ object CharLmFunctions {
       Array[Any](n.toLong, sum))
   }
 
-  /** public hook: the substrait consumer registers the kernel before
-    * resolving a foreign plan that names it as an extension function.
-    * Keyed per live session via [[SessionRegistry]]: test suites rebuild
-    * sessions, and a stale boolean would skip re-registration. */
-  def ensureSessionRegistered(): Unit =
-    SessionRegistry.once("charlm") { spark =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "charlm_fold", es => CharLmFold(es(0), es(1)), "scala_udf")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "charlm_fit_agg", es => CharLmFitAgg(es(0), es(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(n: Int, _) => n
-          case other => throw new IllegalArgumentException(
-            s"charlm_fit_agg maxEntries must be an integer literal, got $other")
-        }).toAggregateExpression(), "scala_udf")
-    }
-
-  def charlmFold(text: Column, model: Column): Column = {
-    ensureSessionRegistered(); call_function("charlm_fold", text, model)
-  }
+  def charlmFold(text: Column, model: Column): Column =
+    Kernels.call("charlm_fold", text, model)
 
   /** one-pass bigram-count fit; NULL when the model exceeds maxEntries
     * distinct grams (caller falls back to the distributed-model path) */
-  def charlmFitAgg(text: Column, maxEntries: Int): Column = {
-    ensureSessionRegistered()
-    call_function("charlm_fit_agg", text,
-      org.apache.spark.sql.functions.lit(maxEntries))
-  }
+  def charlmFitAgg(text: Column, maxEntries: Int): Column =
+    Kernels.call("charlm_fit_agg", text, org.apache.spark.sql.functions.lit(maxEntries))
 
   /** test hook: the exact per-entry scaling the table build applies */
   def scaledLog(p: Double): Long =

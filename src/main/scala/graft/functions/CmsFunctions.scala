@@ -2,13 +2,12 @@ package graft.functions
 
 import java.io.ByteArrayInputStream
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.util.sketch.CountMinSketch
 
@@ -207,30 +206,9 @@ object CmsFunctions {
         l: Expression, r: Expression): Expression = copy(left = l, right = r)
   }
 
-
-  /** public hook: the substrait consumer registers the kernels before
-    * resolving a foreign plan that names them as extension functions */
-  def ensureSessionRegistered(): Unit = ensureRegistered()
-
-  // once-per-live-session; synchronization lives in SessionRegistry
-  private def ensureRegistered(): Unit =
-    SessionRegistry.once("cms") { spark =>
-      val reg = spark.sessionState.functionRegistry
-      reg.createOrReplaceTempFunction("cms_merge_agg",
-        es => CmsMergeAgg(es(0)).toAggregateExpression(), "scala_udf")
-      reg.createOrReplaceTempFunction("cms_estimate_long",
-        es => CmsEstimateLong(es(0), es(1)), "scala_udf")
-      reg.createOrReplaceTempFunction("cms_inner_product",
-        es => CmsInnerProduct(es(0), es(1)), "scala_udf")
-    }
-
-  def cmsMergeAgg(sketch: Column): Column = {
-    ensureRegistered(); call_function("cms_merge_agg", sketch)
-  }
-  def cmsEstimateLong(sketch: Column, key: Column): Column = {
-    ensureRegistered(); call_function("cms_estimate_long", sketch, key)
-  }
-  def cmsInnerProduct(a: Column, b: Column): Column = {
-    ensureRegistered(); call_function("cms_inner_product", a, b)
-  }
+  def cmsMergeAgg(sketch: Column): Column = Kernels.call("cms_merge_agg", sketch)
+  def cmsEstimateLong(sketch: Column, key: Column): Column =
+    Kernels.call("cms_estimate_long", sketch, key)
+  def cmsInnerProduct(a: Column, b: Column): Column =
+    Kernels.call("cms_inner_product", a, b)
 }

@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -129,19 +128,5 @@ case class FeatureBuckets(child: Expression) extends UnaryExpression {
 }
 
 object FeatureBucketFunctions {
-
-  /** public hook: the substrait consumer registers the kernel before
-    * resolving a foreign plan that names it as an extension function */
-  def ensureSessionRegistered(): Unit = ensureRegistered()
-
-  private def ensureRegistered(): Unit =
-    SessionRegistry.once("feature_buckets") { spark =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "feature_buckets", es => FeatureBuckets(es.head), "scala_udf")
-    }
-
-  def featureBuckets(text: Column): Column = {
-    ensureRegistered()
-    call_function("feature_buckets", text)
-  }
+  def featureBuckets(text: Column): Column = Kernels.call("feature_buckets", text)
 }

@@ -2,12 +2,12 @@ package graft.functions
 
 import org.apache.datasketches.frequencies.LongsSketch
 import org.apache.datasketches.memory.Memory
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 
 /** Frequent-items (heavy hitters) — the Misra-Gries-family member of the
@@ -204,47 +204,14 @@ object FreqFunctions {
       copy(child = c)
   }
 
-
-  /** public hook: the substrait consumer registers the kernels before
-    * resolving a foreign plan that names them as extension functions */
-  def ensureSessionRegistered(): Unit = ensureRegistered()
-
-  // once-per-live-session; synchronization lives in SessionRegistry
-  private def ensureRegistered(): Unit =
-    SessionRegistry.once("freq") { spark =>
-      val reg = spark.sessionState.functionRegistry
-      reg.createOrReplaceTempFunction("freq_sketch_agg_long",
-        es => FreqSketchAggLong(es(0), es(1)).toAggregateExpression(),
-        "scala_udf")
-      reg.createOrReplaceTempFunction("freq_merge_agg",
-        es => FreqMergeAgg(es(0)).toAggregateExpression(), "scala_udf")
-      reg.createOrReplaceTempFunction("freq_estimate_long",
-        es => FreqProbeLong(es(0), es(1), "estimate"), "scala_udf")
-      reg.createOrReplaceTempFunction("freq_lower_bound_long",
-        es => FreqProbeLong(es(0), es(1), "lower_bound"), "scala_udf")
-      reg.createOrReplaceTempFunction("freq_upper_bound_long",
-        es => FreqProbeLong(es(0), es(1), "upper_bound"), "scala_udf")
-      reg.createOrReplaceTempFunction("freq_max_error",
-        es => FreqMaxError(es(0)), "scala_udf")
-    }
-
-  def freqSketchAggLong(value: Column, maxMapSize: Int): Column = {
-    ensureRegistered()
-    call_function("freq_sketch_agg_long", value, lit(maxMapSize))
-  }
-  def freqMergeAgg(sketch: Column): Column = {
-    ensureRegistered(); call_function("freq_merge_agg", sketch)
-  }
-  def freqEstimateLong(sketch: Column, item: Column): Column = {
-    ensureRegistered(); call_function("freq_estimate_long", sketch, item)
-  }
-  def freqLowerBoundLong(sketch: Column, item: Column): Column = {
-    ensureRegistered(); call_function("freq_lower_bound_long", sketch, item)
-  }
-  def freqUpperBoundLong(sketch: Column, item: Column): Column = {
-    ensureRegistered(); call_function("freq_upper_bound_long", sketch, item)
-  }
-  def freqMaxError(sketch: Column): Column = {
-    ensureRegistered(); call_function("freq_max_error", sketch)
-  }
+  def freqSketchAggLong(value: Column, maxMapSize: Int): Column =
+    Kernels.call("freq_sketch_agg_long", value, lit(maxMapSize))
+  def freqMergeAgg(sketch: Column): Column = Kernels.call("freq_merge_agg", sketch)
+  def freqEstimateLong(sketch: Column, item: Column): Column =
+    Kernels.call("freq_estimate_long", sketch, item)
+  def freqLowerBoundLong(sketch: Column, item: Column): Column =
+    Kernels.call("freq_lower_bound_long", sketch, item)
+  def freqUpperBoundLong(sketch: Column, item: Column): Column =
+    Kernels.call("freq_upper_bound_long", sketch, item)
+  def freqMaxError(sketch: Column): Column = Kernels.call("freq_max_error", sketch)
 }

@@ -1,12 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 
 /** Exact Jaccard of two SORTED distinct long arrays, thresholded, with early
@@ -159,40 +159,14 @@ case class SortedContainmentGe(first: Expression, second: Expression,
 
 object JaccardFunctions {
 
-  /** public hook: the substrait consumer registers the kernel before
-    * resolving a foreign plan that names it as an extension function */
-  def ensureSessionRegistered(): Unit = ensureRegistered()
-
-  // once-per-live-session; synchronization lives in SessionRegistry
-  private def ensureRegistered(): Unit =
-    SessionRegistry.once("jaccard") { spark =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "sorted_jaccard_ge", es => SortedJaccardGe(es(0), es(1), es(2)), "scala_udf")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "sorted_containment_ge",
-        es => SortedContainmentGe(es(0), es(1), es(2)), "scala_udf")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "bucket_jaccard_pairs",
-        es => BucketJaccardPairs(es(0), es(1)), "scala_udf")
-    }
-
   /** per-(block, size-bucket) inline prefix-filtered qualifying pairs
     * (see BucketJaccardPairs) */
-  def bucketJaccardPairs(items: Column, threshold: Double): Column = {
-    ensureRegistered()
-    call_function("bucket_jaccard_pairs", items,
-      org.apache.spark.sql.functions.lit(threshold))
-  }
+  def bucketJaccardPairs(items: Column, threshold: Double): Column =
+    Kernels.call("bucket_jaccard_pairs", items, lit(threshold))
 
-  def sortedJaccardGe(a: Column, b: Column, threshold: Double): Column = {
-    ensureRegistered()
-    call_function("sorted_jaccard_ge", a, b,
-      org.apache.spark.sql.functions.lit(threshold))
-  }
+  def sortedJaccardGe(a: Column, b: Column, threshold: Double): Column =
+    Kernels.call("sorted_jaccard_ge", a, b, lit(threshold))
 
-  def sortedContainmentGe(a: Column, b: Column, threshold: Double): Column = {
-    ensureRegistered()
-    call_function("sorted_containment_ge", a, b,
-      org.apache.spark.sql.functions.lit(threshold))
-  }
+  def sortedContainmentGe(a: Column, b: Column, threshold: Double): Column =
+    Kernels.call("sorted_containment_ge", a, b, lit(threshold))
 }

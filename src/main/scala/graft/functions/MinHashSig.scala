@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
 
 /** Static hashing kernel, callable from generated Java (top-level object →
@@ -270,56 +270,15 @@ case class MinHashSig(child: Expression, numHashes: Int) extends UnaryExpression
 }
 
 object MinHashFunctions {
+  def minhashSig(shingles: Column, numHashes: Int): Column =
+    Kernels.call("minhash_sig", shingles, lit(numHashes))
 
-  /** public hook: the substrait consumer registers the kernels before
-    * resolving a foreign plan that names them as extension functions */
-  def ensureSessionRegistered(): Unit = ensureRegistered()
-
-  // once-per-live-session; synchronization lives in SessionRegistry
-  private def ensureRegistered(): Unit =
-    SessionRegistry.once("minhash") { spark =>
-      val reg = spark.sessionState.functionRegistry
-      reg.createOrReplaceTempFunction(
-        "minhash_sig",
-        es => MinHashSig(es(0), es(1) match {
-          case Literal(n: Int, _) => n
-          case other => throw model.badArg(other.toString)
-        }),
-        "scala_udf")
-      reg.createOrReplaceTempFunction(
-        "simhash64", es => SimHash64(es(0)), "scala_udf")
-      reg.createOrReplaceTempFunction(
-        "minhash_sig_text", es => MinHashSigText(es(0), es(1), es(2)), "scala_udf")
-      reg.createOrReplaceTempFunction(
-        "simhash64_text", es => SimHash64Text(es(0)), "scala_udf")
-    }
-
-  def minhashSig(shingles: Column, numHashes: Int): Column = {
-    ensureRegistered()
-    call_function("minhash_sig", shingles, org.apache.spark.sql.functions.lit(numHashes))
-  }
-
-  def simhash64(tokens: Column): Column = {
-    ensureRegistered()
-    call_function("simhash64", tokens)
-  }
+  def simhash64(tokens: Column): Column = Kernels.call("simhash64", tokens)
 
   /** fused text → MinHash signature (== minhashSig(shingles(text, k), n)) */
-  def minhashSigText(text: Column, shingleSize: Int, numHashes: Int): Column = {
-    ensureRegistered()
-    call_function("minhash_sig_text", text,
-      org.apache.spark.sql.functions.lit(shingleSize),
-      org.apache.spark.sql.functions.lit(numHashes))
-  }
+  def minhashSigText(text: Column, shingleSize: Int, numHashes: Int): Column =
+    Kernels.call("minhash_sig_text", text, lit(shingleSize), lit(numHashes))
 
   /** fused text → SimHash64 (== simhash64(split(lower(text), ' '))) */
-  def simhash64Text(text: Column): Column = {
-    ensureRegistered()
-    call_function("simhash64_text", text)
-  }
-
-  private object model {
-    def badArg(s: String) =
-      new IllegalArgumentException(s"minhash_sig numHashes must be an int literal, got $s")
-  }
+  def simhash64Text(text: Column): Column = Kernels.call("simhash64_text", text)
 }

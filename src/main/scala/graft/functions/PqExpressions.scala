@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 
 /** Native Catalyst kernels for product quantization (ops.Pq).
@@ -138,23 +137,6 @@ case class PqAdc(left: Expression, right: Expression) extends BinaryExpression {
 }
 
 object PqFunctions {
-
-  /** public hook: the substrait consumer registers the kernels before
-    * resolving a foreign plan that names them as extension functions */
-  def ensureSessionRegistered(): Unit = ensureRegistered()
-
-  // once-per-live-session; synchronization lives in SessionRegistry
-  private def ensureRegistered(): Unit =
-    SessionRegistry.once("pq") { spark =>
-      val reg = spark.sessionState.functionRegistry
-      reg.createOrReplaceTempFunction("pq_encode", es => PqEncode(es(0), es(1)), "scala_udf")
-      reg.createOrReplaceTempFunction("pq_adc", es => PqAdc(es(0), es(1)), "scala_udf")
-    }
-
-  def pqEncode(vec: Column, books: Column): Column = {
-    ensureRegistered(); call_function("pq_encode", vec, books)
-  }
-  def pqAdc(codes: Column, tables: Column): Column = {
-    ensureRegistered(); call_function("pq_adc", codes, tables)
-  }
+  def pqEncode(vec: Column, books: Column): Column = Kernels.call("pq_encode", vec, books)
+  def pqAdc(codes: Column, tables: Column): Column = Kernels.call("pq_adc", codes, tables)
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -119,20 +119,6 @@ case class ShingleHashes(left: Expression, right: Expression)
 }
 
 object ShingleFunctions {
-
-  /** public hook: the substrait consumer registers the kernel before
-    * resolving a foreign plan that names it as an extension function */
-  def ensureSessionRegistered(): Unit = ensureRegistered()
-
-  // once-per-live-session; synchronization lives in SessionRegistry
-  private def ensureRegistered(): Unit =
-    SessionRegistry.once("shingle") { spark =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "shingle_hashes", es => ShingleHashes(es(0), es(1)), "scala_udf")
-    }
-
-  def shingleHashes(text: Column, k: Int): Column = {
-    ensureRegistered()
-    call_function("shingle_hashes", text, lit(k))
-  }
+  def shingleHashes(text: Column, k: Int): Column =
+    Kernels.call("shingle_hashes", text, lit(k))
 }

@@ -3,12 +3,11 @@ package graft.functions
 import org.apache.datasketches.memory.Memory
 import org.apache.datasketches.theta.{CompactSketch, SetOperation, Sketch, Sketches, Union}
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /** Theta sketches — the SET-OPERATION member of the mergeable-sketch family
@@ -199,44 +198,13 @@ object ThetaFunctions {
         l: Expression, r: Expression): Expression = copy(left = l, right = r)
   }
 
-
-  /** public hook: the substrait consumer registers the kernels before
-    * resolving a foreign plan that names them as extension functions */
-  def ensureSessionRegistered(): Unit = ensureRegistered()
-
-  // once-per-live-session; synchronization lives in SessionRegistry
-  private def ensureRegistered(): Unit =
-    SessionRegistry.once("theta") { spark =>
-      val reg = spark.sessionState.functionRegistry
-      reg.createOrReplaceTempFunction("theta_sketch_agg_long",
-        es => ThetaSketchAggLong(es(0),
-          es.lift(1).getOrElse(Literal(1 << 14))).toAggregateExpression(),
-        "scala_udf")
-      reg.createOrReplaceTempFunction("theta_union_agg",
-        es => ThetaUnionAgg(es(0)).toAggregateExpression(), "scala_udf")
-      reg.createOrReplaceTempFunction("theta_estimate",
-        es => ThetaEstimate(es(0)), "scala_udf")
-      reg.createOrReplaceTempFunction("theta_intersect_estimate",
-        es => ThetaIntersectEstimate(es(0), es(1)), "scala_udf")
-      reg.createOrReplaceTempFunction("theta_anotb_estimate",
-        es => ThetaANotBEstimate(es(0), es(1)), "scala_udf")
-    }
-
-  def thetaSketchAggLong(value: Column, nominalEntries: Int = 1 << 14): Column = {
-    ensureRegistered()
-    call_function("theta_sketch_agg_long", value,
+  def thetaSketchAggLong(value: Column, nominalEntries: Int = 1 << 14): Column =
+    Kernels.call("theta_sketch_agg_long", value,
       org.apache.spark.sql.functions.lit(nominalEntries))
-  }
-  def thetaUnionAgg(sketch: Column): Column = {
-    ensureRegistered(); call_function("theta_union_agg", sketch)
-  }
-  def thetaEstimate(sketch: Column): Column = {
-    ensureRegistered(); call_function("theta_estimate", sketch)
-  }
-  def thetaIntersectEstimate(a: Column, b: Column): Column = {
-    ensureRegistered(); call_function("theta_intersect_estimate", a, b)
-  }
-  def thetaANotBEstimate(a: Column, b: Column): Column = {
-    ensureRegistered(); call_function("theta_anotb_estimate", a, b)
-  }
+  def thetaUnionAgg(sketch: Column): Column = Kernels.call("theta_union_agg", sketch)
+  def thetaEstimate(sketch: Column): Column = Kernels.call("theta_estimate", sketch)
+  def thetaIntersectEstimate(a: Column, b: Column): Column =
+    Kernels.call("theta_intersect_estimate", a, b)
+  def thetaANotBEstimate(a: Column, b: Column): Column =
+    Kernels.call("theta_anotb_estimate", a, b)
 }

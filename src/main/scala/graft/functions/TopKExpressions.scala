@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{DeclarativeAggregate, ImperativeAggregate}
 import org.apache.spark.sql.catalyst.util.{GenericArrayData, TypeUtils}
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 
 /** Grouped top-k as a FIXED-WIDTH DeclarativeAggregate (opt round 15).
@@ -313,18 +313,6 @@ object TopKFunctions {
     * MaxAggK] rides the loop twin. */
   val MaxDeclK = 4
 
-  def ensureSessionRegistered(): Unit =
-    SessionRegistry.once("topk") { spark =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "topk_by_key",
-        es => TopKByKey(es(0), es(1), es(2)).toAggregateExpression(),
-        "scala_udf")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "topk_by_key_loop",
-        es => TopKByKeyLoop(es(0), es(1), es(2)).toAggregateExpression(),
-        "scala_udf")
-    }
-
   /** Top-k (id, key) pairs per group by (key DESC NULLS LAST, id ASC) —
     * the row_number-window order — as array<struct<key,id>> with null-id
     * trailing padding.
@@ -337,9 +325,7 @@ object TopKFunctions {
     *
     * k <= 4 plans the declarative kernel; above that, the loop-based
     * imperative twin (fixed-width key/id types only) up to [[MaxAggK]]. */
-  def topkByKey(key: Column, id: Column, k: Int): Column = {
-    ensureSessionRegistered()
-    if (k <= MaxDeclK) call_function("topk_by_key", key, id, lit(k))
-    else call_function("topk_by_key_loop", key, id, lit(k))
-  }
+  def topkByKey(key: Column, id: Column, k: Int): Column =
+    if (k <= MaxDeclK) Kernels.call("topk_by_key", key, id, lit(k))
+    else Kernels.call("topk_by_key_loop", key, id, lit(k))
 }

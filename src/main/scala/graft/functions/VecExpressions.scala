@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
 /** Native Catalyst expressions for the embedding hot paths.
@@ -304,70 +304,23 @@ case class VecTopCells(first: Expression, second: Expression,
     copy(first = f, second = s, third = t)
 }
 
-/** Column-level entry points: expressions register in the active session's
-  * function registry (idempotent) and resolve through call_function — no
-  * private Column constructors needed.
-  */
+/** Column-level entry points: each resolves its kernel by name through
+  * [[Kernels.call]] — no private Column constructors needed. */
 object VecFunctions {
-
-  /** public hook: the substrait consumer registers the kernels before
-    * resolving a foreign plan that names them as extension functions */
-  def ensureSessionRegistered(): Unit = ensureRegistered()
-
-  // once-per-live-session; synchronization lives in SessionRegistry
-  private def ensureRegistered(): Unit =
-    SessionRegistry.once("vec") { spark =>
-      val reg = spark.sessionState.functionRegistry
-      reg.createOrReplaceTempFunction("vec_dot", es => VecDot(es(0), es(1)), "scala_udf")
-      reg.createOrReplaceTempFunction("vec_cosine", es => VecCosine(es(0), es(1)), "scala_udf")
-      reg.createOrReplaceTempFunction("vec_l2sq", es => VecL2Sq(es(0), es(1)), "scala_udf")
-      reg.createOrReplaceTempFunction("lsh_buckets", es => {
-        def i(e: Expression, what: String): Int = e match {
-          case Literal(n: Int, _) => n
-          case other => throw new IllegalArgumentException(
-            s"lsh_buckets $what must be an int literal, got $other")
-        }
-        LshBuckets(es(0), i(es(1), "tables"), i(es(2), "planesPerTable"),
-          i(es(3), "dim"))
-      }, "scala_udf")
-      reg.createOrReplaceTempFunction("vec_top_cells", es => {
-        val k = es(3) match {
-          case Literal(n: Int, _) => n
-          case other => throw new IllegalArgumentException(
-            s"vec_top_cells k must be an int literal, got $other")
-        }
-        VecTopCells(es(0), es(1), es(2), k)
-      }, "scala_udf")
-      reg.createOrReplaceTempFunction("cell_pairs",
-        es => CellPairs(es(0), es(1), es(2), es(3)), "scala_udf")
-    }
 
   /** per-quantizer-cell inline-verified qualifying pairs (see CellPairs) */
   def cellPairs(items: Column, threshold: Double, targetOcc: Int,
-                probeCells: Int): Column = {
-    ensureRegistered()
-    call_function("cell_pairs", items, lit(threshold), lit(targetOcc),
-      lit(probeCells))
-  }
+                probeCells: Int): Column =
+    Kernels.call("cell_pairs", items, lit(threshold), lit(targetOcc), lit(probeCells))
 
-  def vecTopCells(vec: Column, cents: Column, ids: Column, k: Int): Column = {
-    ensureRegistered()
-    call_function("vec_top_cells", vec, cents, ids, lit(k))
-  }
+  def vecTopCells(vec: Column, cents: Column, ids: Column, k: Int): Column =
+    Kernels.call("vec_top_cells", vec, cents, ids, lit(k))
 
   def lshBuckets(vec: Column, tables: Int, planesPerTable: Int,
-                 dim: Int): Column = {
-    ensureRegistered()
-    call_function("lsh_buckets", vec, lit(tables), lit(planesPerTable), lit(dim))
-  }
+                 dim: Int): Column =
+    Kernels.call("lsh_buckets", vec, lit(tables), lit(planesPerTable), lit(dim))
 
-  def vecDot(a: Column, b: Column): Column = {
-    ensureRegistered(); call_function("vec_dot", a, b)
-  }
-  def vecCosine(a: Column, b: Column): Column = {
-    ensureRegistered(); call_function("vec_cosine", a, b)
-  }
-  def vecL2Sq(a: Column, b: Column): Column = {
-    ensureRegistered(); call_function("vec_l2sq", a, b)
-  }
+  def vecDot(a: Column, b: Column): Column = Kernels.call("vec_dot", a, b)
+  def vecCosine(a: Column, b: Column): Column = Kernels.call("vec_cosine", a, b)
+  def vecL2Sq(a: Column, b: Column): Column = Kernels.call("vec_l2sq", a, b)
 }

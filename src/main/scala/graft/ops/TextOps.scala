@@ -523,10 +523,14 @@ object TextOps {
     * Scale shape: one shuffle for (doc, term) term frequencies, the
     * document-frequency table derives from it with map-side combine, and
     * the per-doc ranking is one window pass keyed by the same doc id the
-    * tf shuffle already established. The idf side of the join is
-    * vocabulary-sized — orders of magnitude under the corpus; AQE
-    * broadcasts it at moderate scale and a shuffle join still only moves
-    * (term, idf) pairs at web scale.
+    * tf shuffle already established. The idf side of the join is always
+    * broadcast: the code forces `broadcast(idf)`, whatever its size, so
+    * neither AQE nor a shuffle join ever takes over. That is safe only
+    * while the vocabulary (one (term, idf) row per distinct lower-cased
+    * token) fits every executor's memory and the broadcast limit; a
+    * corpus whose distinct-token count grows with its size (ids, hashes,
+    * URLs in the text) breaks the assumption and needs the hint removed
+    * or the vocabulary pruned first.
     */
   def tfidfTopTerms(df: DataFrame, idCol: String = "doc_id",
                     textCol: String = "text", k: Int = 5): DataFrame = {

@@ -21,6 +21,7 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
+import graft.functions.Kernels
 import model._
 
 /** Substrait `Plan` → Spark `DataFrame`.
@@ -39,16 +40,17 @@ import model._
   * keeps the two sides of a self-join apart. The user-visible names come
   * from `RelRoot.names` at the root (consumer.rs:92-111).
   *
-  * Comparisons, arithmetic, boolean ops, null tests, literals and casts
-  * are built as Catalyst expressions directly. Everything else (registry
-  * and graft kernels, windows, lambdas, grouping sets, session windows)
-  * is built with the Column API over Columns that wrap the resolved
-  * arguments; a node holding such an expression, or one that comes out
-  * unresolved (a foreign plan that needs type coercion), is analyzed on
-  * its own against LocalRelation stubs of its children's output
-  * ([[ColumnBridge.analyzeNode]]). Analyzing each node once, instead of
-  * re-analyzing the growing plan at every DataFrame call, keeps consume
-  * linear in plan depth.
+  * Comparisons, arithmetic, boolean ops, null tests, literals, casts and
+  * the graft kernels ([[Kernels]], straight from their bound arguments,
+  * with no registry write) are built as Catalyst expressions directly.
+  * Everything else (registry-resolved functions, windows, lambdas,
+  * grouping sets, session windows) is built with the Column API over
+  * Columns that wrap the resolved arguments; a node holding such an
+  * expression, or one that comes out unresolved (a foreign plan that
+  * needs type coercion), is analyzed on its own against LocalRelation
+  * stubs of its children's output ([[ColumnBridge.analyzeNode]]).
+  * Analyzing each node once, instead of re-analyzing the growing plan at
+  * every DataFrame call, keeps consume linear in plan depth.
   */
 object Consumer {
 
@@ -586,8 +588,8 @@ object Consumer {
         Alias(aggExpr(fname, args, distinct), s"_${from + j}")()
       }
 
-    /** The core aggregates as Catalyst nodes; the rest through
-      * [[aggColumn]]'s Column table. */
+    /** The core aggregates and the kernel table's aggregates as Catalyst
+      * nodes; the rest through [[aggColumn]]'s Column table. */
     private def aggExpr(fname: String, args: Seq[Expression], distinct: Boolean): Expression = {
       def agg(f: AggregateFunction, d: Boolean = distinct) = f.toAggregateExpression(d)
       (fname, distinct) match {
@@ -606,6 +608,7 @@ object Consumer {
         // mode's within-group tie ordering, carried in the name (round 8)
         case (n @ ("mode_asc" | "mode_desc"), false) =>
           agg(Mode(args(0), 0, 0, Some(n == "mode_desc")))
+        case (n, false) if Kernels.aggregates.contains(n) => kernel(Kernels.aggregates(n), args)
         case _ => fromCol(aggColumn(fname, args.map(ColumnBridge.column), distinct))
       }
     }
@@ -667,34 +670,18 @@ object Consumer {
                   "kll_merge_agg_double" | "kll_merge_agg_float" |
                   "count_min_sketch") =>
           call_function(n, args: _*)
-        case "bloom_filter_agg" =>
-          graft.functions.BloomFunctions.ensureSessionRegistered()
-          call_function("bloom_filter_agg", args: _*)
-        case "cms_merge_agg" =>
-          graft.functions.CmsFunctions.ensureSessionRegistered()
-          call_function("cms_merge_agg", args: _*)
-        case n @ ("theta_sketch_agg_long" | "theta_union_agg") =>
-          graft.functions.ThetaFunctions.ensureSessionRegistered()
-          call_function(n, args: _*)
-        case n @ ("freq_sketch_agg_long" | "freq_merge_agg") =>
-          graft.functions.FreqFunctions.ensureSessionRegistered()
-          call_function(n, args: _*)
-        // one-pass char-LM bigram-count fit (GraftExtensions registers it
-        // for wire parity; maxEntries rides as the second, literal arg)
-        case "charlm_fit_agg" =>
-          graft.functions.CharLmFunctions.ensureSessionRegistered()
-          call_function("charlm_fit_agg", args: _*)
-        // grouped top-k (sort-free kNN shortlist; k rides as literal arg);
-        // _loop = the k > 4 imperative twin, same order contract
-        case n @ ("topk_by_key" | "topk_by_key_loop") =>
-          graft.functions.TopKFunctions.ensureSessionRegistered()
-          call_function(n, args: _*)
         case other => notImplemented(s"aggregate function $other")
       }
     }
 
     // ------------------------------------------------------------ expressions
     private def toCol(e: SExpr, in: Seq[Attribute]): Column = ColumnBridge.column(toExpr(e, in))
+
+    /** A [[Kernels]] table entry built straight from its bound arguments
+      * (a bad constructor argument is the plan's fault). */
+    private def kernel(build: Kernels.Builder, args: Seq[Expression]): Expression =
+      try build(args)
+      catch { case e: IllegalArgumentException => notImplemented(e.getMessage) }
 
     /** A Column-API expression, converted; marks the node being built for
       * analysis. */
@@ -837,7 +824,10 @@ object Consumer {
           case "is_distinct_from" => Not(EqualNullSafe(x(0), x(1)))
           case "is_not_distinct_from" => EqualNullSafe(x(0), x(1))
           case "negate" => UnaryMinus(x(0))
-          case n => fromCol(scalarColumn(n, args, in))
+          case n => Kernels.scalars.get(n) match {
+            case Some(build) => kernel(build, args.map(toExpr(_, in)))
+            case None => fromCol(scalarColumn(n, args, in))
+          }
         }
     }
 
@@ -978,50 +968,9 @@ object Consumer {
         case "array_sort" if args.size == 2 && lambdaArity(args(1)).isDefined =>
           array_sort(a0, (x, y) => bindLambda(args(1), in, Seq(x, y)))
 
-        // graft's minhash kernel: numHashes rides as a literal argument
-        case "minhash_sig" =>
-          graft.functions.MinHashFunctions.ensureSessionRegistered()
-          call_function("minhash_sig", a0, lit(litInt(args(1))))
-        // graft's sign-LSH bucket kernel: (tables, planes, dim) literals
-        case "lsh_buckets" =>
-          graft.functions.VecFunctions.ensureSessionRegistered()
-          call_function("lsh_buckets", a0, lit(litInt(args(1))),
-            lit(litInt(args(2))), lit(litInt(args(3))))
-        // graft's top-k-nearest-centroid kernel: k rides as a literal
-        case "vec_top_cells" =>
-          graft.functions.VecFunctions.ensureSessionRegistered()
-          call_function("vec_top_cells", a0, a1,
-            toCol(args(2), in), lit(litInt(args(3))))
         // named scalar functions (Producer.namedScalarFns) resolve through
-        // the session function registry; graft's vector kernels register
-        // themselves on first use so foreign plans naming them resolve too
+        // the session function registry
         case other if Producer.namedScalarFns.contains(other) =>
-          if (other.startsWith("vec_") || other == "cell_pairs")
-            graft.functions.VecFunctions.ensureSessionRegistered()
-          if (other == "simhash64" || other == "simhash64_text" ||
-              other == "minhash_sig_text")
-            graft.functions.MinHashFunctions.ensureSessionRegistered()
-          if (other == "sorted_jaccard_ge" || other == "sorted_containment_ge" ||
-              other == "bucket_jaccard_pairs")
-            graft.functions.JaccardFunctions.ensureSessionRegistered()
-          if (other == "shingle_hashes")
-            graft.functions.ShingleFunctions.ensureSessionRegistered()
-          if (other == "feature_buckets")
-            graft.functions.FeatureBucketFunctions.ensureSessionRegistered()
-          if (other.startsWith("bpe_count"))
-            graft.functions.BpeFunctions.ensureSessionRegistered()
-          if (other == "charlm_fold")
-            graft.functions.CharLmFunctions.ensureSessionRegistered()
-          if (other.startsWith("freq_"))
-            graft.functions.FreqFunctions.ensureSessionRegistered()
-          if (other.startsWith("pq_"))
-            graft.functions.PqFunctions.ensureSessionRegistered()
-          if (other == "might_contain")
-            graft.functions.BloomFunctions.ensureSessionRegistered()
-          if (other.startsWith("cms_"))
-            graft.functions.CmsFunctions.ensureSessionRegistered()
-          if (other.startsWith("theta_"))
-            graft.functions.ThetaFunctions.ensureSessionRegistered()
           call_function(other, all: _*)
         case other => notImplemented(s"scalar function $other")
       }

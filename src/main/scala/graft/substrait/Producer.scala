@@ -1819,26 +1819,16 @@ object Producer {
     // TRY-eval-mode arithmetic (produced by the explicit EvalMode.TRY
     // cases, consumed via the session registry like any named fn)
     "try_add", "try_subtract", "try_multiply", "try_divide", "try_mod",
-    // graft's own codegen'd vector kernels — session-registered functions,
-    // carried as substrait extension functions by name
-    "vec_dot", "vec_cosine", "vec_l2sq", "cell_pairs", "simhash64",
-    "simhash64_text", "minhash_sig_text",
-    "sorted_jaccard_ge",
-    "sorted_containment_ge", "bucket_jaccard_pairs", "shingle_hashes",
-    "feature_buckets",
-    "bpe_count", "bpe_count_v2", "charlm_fold",
-    "pq_encode", "pq_adc",
-    "might_contain", "cms_estimate_long", "cms_inner_product",
-    "freq_estimate_long", "freq_lower_bound_long", "freq_upper_bound_long",
-    "freq_max_error",
-    "theta_estimate", "theta_intersect_estimate", "theta_anotb_estimate",
     // datasketches scalar companions of the mergeable-sketch aggregates
     // (ops.Sketches): estimate/merge/read over binary sketch columns
     "hll_sketch_estimate", "hll_union",
     "kll_sketch_get_quantile_bigint", "kll_sketch_get_rank_bigint",
     "kll_sketch_get_n_bigint",
     // struct construction (SQL-callable; get_field is its access twin)
-    "named_struct")
+    "named_struct") ++
+    // graft's own kernels, carried as substrait extension functions by name
+    // (the three with constructor parameters are matched above)
+    graft.functions.Kernels.scalars.keySet
 
   /** Higher-order functions whose Catalyst children order is
     * (collection args…, lambda args…), matching the SQL argument order.

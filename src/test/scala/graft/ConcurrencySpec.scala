@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 
 /** One SparkSession, many stateful queries AT ONCE — the shared-driver
   * usage a cluster sees on day one, and (until round 14) the only
-  * load-bearing claim never executed: SessionRegistry's once-per-session
+  * load-bearing claim never executed: Kernels.call's once-per-session
   * kernel registration, the consumers' per-call unique temp-view names,
   * and the versioned tables' per-table commit locks all promise that
   * concurrent queries neither corrupt each other nor deadlock.

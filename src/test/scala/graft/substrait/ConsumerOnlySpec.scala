@@ -333,4 +333,70 @@ class ConsumerOnlySpec extends SparkTestBase {
     assert(got.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
       Map(1L -> 4L, 2L -> 4L, 3L -> 4L, 4L -> 4L, 5L -> 5L, 6L -> 5L))
   }
+
+  private def ext(anchor: Int, name: String) = ExtensionFunction(0xffffffffL, anchor, name)
+
+  test("kernel plans consume through a fresh session without registering functions") {
+    val other = spark.newSession()
+    val rows = Rel.Read(
+      NamedStruct(Seq("id", "name"), Seq((SType.SI64, false), (SType.SStr, false))),
+      Nil, None, None,
+      Some(Seq((1L, "alpha"), (2L, "Beta"), (3L, "gamma"), (2L, "gamma"))
+        .map { case (i, n) => Seq(LitVal.LI64(i), LitVal.LStr(n)) }))
+    // (id, bpe_count(name)) → one group: freq sketch of id, top-2 ids by bpe count
+    val withBpe = Rel.Project(rows, Seq(SExpr.FieldRef(0), SExpr.ScalarFn(0, Seq(SExpr.FieldRef(1)))))
+    val agg = Rel.Aggregate(withBpe, Seq(Seq()), Seq(
+      Measure(AggFunction(1, Seq(SExpr.FieldRef(0), SExpr.Lit(LitVal.LI32(64))),
+        AggInvocation.All), None),
+      Measure(AggFunction(3, Seq(SExpr.FieldRef(1), SExpr.FieldRef(0), SExpr.Lit(LitVal.LI32(2))),
+        AggInvocation.All), None)))
+    val names = Seq("bpe_count", "freq_sketch_agg_long", "freq_estimate_long", "topk_by_key")
+    val plan = Plan(names.zipWithIndex.map { case (n, i) => ext(i, n) },
+      Seq(PlanRel.Root(Rel.Project(agg, Seq(
+        SExpr.ScalarFn(2, Seq(SExpr.FieldRef(0), SExpr.Lit(LitVal.LI64(2)))),
+        SExpr.FieldRef(1))), Seq("est_2", "top2"))))
+    val got = Consumer.consume(other, Wire.decode(Wire.encode(plan)))
+    assert(got.sparkSession eq other)
+    val r = got.collect().map(r => (r.getLong(0),
+      r.getSeq[org.apache.spark.sql.Row](1).map(t => (t.getInt(0), t.getLong(1)))))
+    // id 2 twice; bpe counts alpha 3, Beta 3, gamma 5 → (5, 2), (5, 3) by (key DESC, id ASC)
+    assert(r.toSeq == Seq((2L, Seq((5, 2L), (5, 3L)))))
+    for (f <- names)
+      assert(!other.catalog.functionExists(f), s"$f registered as a side effect of consume")
+  }
+
+  test("kernel constructor arguments accept integer literals of any width") {
+    import spark.implicits._
+    val data = Seq(
+      (1L, Seq(0.9, 0.1, -0.3, 0.4), Seq("ab", "bc", "cd")),
+      (2L, Seq(-0.2, 0.7, 0.5, -0.1), Seq("xy", "yz")))
+    val cents = Seq(Seq(1.0, 0.0, 0.0, 0.0), Seq(0.0, 1.0, 0.0, 0.0), Seq(0.0, 0.0, 1.0, 1.0))
+    val cellIds = Seq(7L, 8L, 9L)
+    def fp64s(vs: Seq[Double]) = LitVal.LList(SType.SFp64, vs.map(LitVal.LFp64(_)))
+    val read = Rel.Read(
+      NamedStruct(Seq("id", "v", "sh"), Seq((SType.SI64, false),
+        (SType.SList(SType.SFp64, false), false), (SType.SList(SType.SStr, false), false))),
+      Nil, None, None,
+      Some(data.map { case (i, v, sh) =>
+        Seq(LitVal.LI64(i), fp64s(v), LitVal.LList(SType.SStr, sh.map(LitVal.LStr(_))))
+      }))
+    val plan = Plan(
+      Seq(ext(0, "minhash_sig"), ext(1, "lsh_buckets"), ext(2, "vec_top_cells")),
+      Seq(PlanRel.Root(Rel.Project(read, Seq(
+        SExpr.FieldRef(0),
+        SExpr.ScalarFn(0, Seq(SExpr.FieldRef(2), SExpr.Lit(LitVal.LI64(8)))),
+        SExpr.ScalarFn(1, Seq(SExpr.FieldRef(1), SExpr.Lit(LitVal.LI16(2)),
+          SExpr.Lit(LitVal.LI16(3)), SExpr.Lit(LitVal.LI16(4)))),
+        SExpr.ScalarFn(2, Seq(SExpr.FieldRef(1),
+          SExpr.Lit(LitVal.LList(SType.SList(SType.SFp64, false), cents.map(fp64s))),
+          SExpr.Lit(LitVal.LList(SType.SI64, cellIds.map(LitVal.LI64(_)))),
+          SExpr.Lit(LitVal.LI64(2)))))),
+        Seq("id", "sig", "buckets", "cells"))))
+    val want = data.toDF("id", "v", "sh").select(col("id"),
+      graft.functions.MinHashFunctions.minhashSig(col("sh"), 8).as("sig"),
+      graft.functions.VecFunctions.lshBuckets(col("v"), 2, 3, 4).as("buckets"),
+      graft.functions.VecFunctions.vecTopCells(col("v"), typedlit(cents), typedlit(cellIds), 2)
+        .as("cells"))
+    assertSameRows(want, consume(plan))
+  }
 }
