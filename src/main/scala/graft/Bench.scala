@@ -53,6 +53,12 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // optional args = run only those queries (single-query scale debugging)
+    val selected = try SparkEntry.select(args.toSeq).toMap catch {
+      case e: IllegalArgumentException =>
+        System.err.println(s"Bench: ${e.getMessage}")
+        sys.exit(2)
+    }
     val loadStart = loadAvg
     val ioStart = ioPressure
     val cpus = Session.envCpus(4)
@@ -74,19 +80,6 @@ object Bench {
     // ERROR, not WARN: a single WindowExec warning line costs ~140 chars of
     // the driver's 2000-char stdout tail that the metric line must survive in
     spark.sparkContext.setLogLevel("ERROR")
-    // optional args = run only those queries (single-query scale debugging)
-    val only = args.toSet
-    val unknown = only -- SparkEntry.queries.keySet
-    if (unknown.nonEmpty) {
-      System.err.println(
-        s"Bench: unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}; " +
-          s"valid names: ${SparkEntry.queries.keySet.toSeq.sorted.mkString(", ")}")
-      spark.stop()
-      sys.exit(2)
-    }
-    val selected =
-      if (only.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.filter { case (n, _) => only.contains(n) }
     // uncounted warmup: session init, parquet listing, and — when a smaller
     // sibling scale factor exists — every query once at sf0.001, so each
     // query's generated code is JIT-compiled and cached before measurement
@@ -278,7 +271,7 @@ object Bench {
     // stdout gets truncated/interleaved by harnesses; the file is the durable
     // full-precision copy. Subset (single-query debug) runs write to a
     // -partial file so they never clobber the last full-run record.
-    val defaultOut = if (only.isEmpty) "bench-out.json" else "bench-out-partial.json"
+    val defaultOut = if (args.isEmpty) "bench-out.json" else "bench-out-partial.json"
     val outPath = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", defaultOut))
     java.nio.file.Files.write(outPath, (fullLine + "\n").getBytes("UTF-8"))

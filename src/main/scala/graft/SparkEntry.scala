@@ -11,9 +11,9 @@ import graft.substrait.Serializer
 /** Driver contract — one query per operator of SURVEY.md §2 (plus the
   * beyond-parity data-pipeline operators in graft.ops).
   *
-  * Every parity query is routed through the FULL substrait pipeline:
-  * DataFrame → Producer → wire bytes → Consumer → DataFrame
-  * (Serializer.roundtrip), so the driver's DuckDB oracle certifies the whole
+  * Every query rides the FULL substrait pipeline: DataFrame → Producer →
+  * wire bytes → Consumer → DataFrame (Serializer.roundtrip, applied by the
+  * query table below), so the driver's DuckDB oracle certifies the whole
   * library, not just the Spark query. Catalyst re-optimizes the consumed plan,
   * so pushdown/pruning/join-strategy selection still apply — the substrait hop
   * costs microseconds and no execution-plan quality.
@@ -29,8 +29,6 @@ import graft.substrait.Serializer
   */
 object SparkEntry {
 
-  private def rt(s: SparkSession, df: DataFrame): DataFrame = Serializer.roundtrip(s, df)
-
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.table(s, dir, name)
 
@@ -38,10 +36,15 @@ object SparkEntry {
     * hashCode (abs(Int.MinValue) stays negative) + pid, so concurrent
     * JVMs over the same sfDir (bench alongside correctness) never clobber
     * each other's table mid-commit. Deterministic WITHIN one JVM — bench
-    * REPS and verify reuse the same dir and delete-at-start. */
-  private def scratch(prefix: String, dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft-$prefix-" +
+    * REPS and verify reuse the same dir — and emptied on every call, so a
+    * stale table from an earlier run cannot interleave with this one. */
+  private def scratch(prefix: String, dir: String): String = {
+    val path = s"${System.getProperty("java.io.tmpdir")}/graft-$prefix-" +
       s"${Integer.toHexString(dir.hashCode)}-p${ProcessHandle.current().pid()}"
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration).delete(p, true)
+    path
+  }
 
   /** Rounds of BPE merge learning in t36 — the Spark trainer and the
     * generated DuckDB replay must agree on this. */
@@ -98,25 +101,114 @@ object SparkEntry {
     queries("q13_revenue_by_segment")(spark, "/root/testdata/sf0.001")
 
   // ------------------------------------------------------------------ queries
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    parityQueries ++ pipelineQueries
+  /** One driver query: its name, the DuckDB SQL that certifies its rows, and
+    * its builder. With `wire` (the default) the table sends the built frame
+    * through Serializer.roundtrip; the five `wire = false` queries carry their
+    * own hop (d08, d13, d17 and t36 ship their loop as one ExtIteration, d14
+    * round-trips its pair stage). */
+  final case class Query(name: String, oracle: String, wire: Boolean = true)(
+      val build: (SparkSession, String) => DataFrame) {
+    def frame(s: SparkSession, dir: String): DataFrame =
+      if (wire) Serializer.roundtrip(s, build(s, dir)) else build(s, dir)
+  }
 
-  /** Beyond-parity training-data pipeline operators (graft.ops): dedup,
-    * similarity search, text analysis, multimodal plumbing. These use the
-    * DataFrame API directly (they are new operators, not plan-interchange
-    * parity), with DuckDB oracles wherever the computation is expressible in
-    * both dialects; hash-based ops (xxhash64 LSH) get rows-only checks.
-    */
-  private def pipelineQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** d07 and d11: the Bloom prefilter must not change one row. */
+  private val IncrementalDedupOracle =
+    """WITH nd AS (SELECT doc_id,
+      |    md5(regexp_replace(lower(text), '\s+', ' ', 'g')) AS digest
+      |  FROM documents WHERE doc_id % 2 = 1),
+      |od AS (SELECT DISTINCT
+      |    md5(regexp_replace(lower(text), '\s+', ' ', 'g')) AS digest
+      |  FROM documents WHERE doc_id % 2 = 0)
+      |SELECT digest, min(doc_id) AS keep_id, count(*) AS n_dups
+      |FROM nd WHERE digest NOT IN (SELECT digest FROM od)
+      |GROUP BY digest ORDER BY digest""".stripMargin
+
+  /** d05 and s07: exact all-pairs cosine over the base ∪ perturbed-twin
+    * union — the only pairs ≥ 0.8 are the planted twins. */
+  private val EmbeddingTwinOracle =
+    """WITH base AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      |twin AS (SELECT vec_id + 100000000 AS vec_id,
+      |  [v[i] * (1.0 + 0.002 * (((i - 1) % 5) - 2)) for i in range(1, len(v) + 1)] AS v
+      |  FROM base),
+      |u AS (SELECT * FROM base UNION ALL SELECT * FROM twin),
+      |p AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+      |  list_dot_product(a.v, b.v)
+      |    / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))) AS s0
+      |  FROM u a JOIN u b ON a.vec_id < b.vec_id)
+      |SELECT id_a, id_b, ROUND(s0, 6) AS sim FROM p
+      |WHERE s0 >= 0.8 ORDER BY id_a, id_b""".stripMargin
+
+  /** Exact top-5 cosine neighbours of vec_id < 8: the ground truth every
+    * kNN/ANN entry point (brute, LSH, IVF, saved/grown IVF, PQ, SQ8,
+    * sign-bit, IVF-SQ, IVF-PQ) must reproduce. */
+  private val ExactKnnOracle =
+    """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      |q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 8),
+      |s AS (SELECT q_id, e.vec_id AS n_id,
+      |  list_dot_product(qv, e.v)
+      |    / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(e.v, e.v))) AS sim0
+      |  FROM q CROSS JOIN e WHERE e.vec_id <> q_id),
+      |r AS (SELECT q_id, n_id, sim0,
+      |  row_number() OVER (PARTITION BY q_id ORDER BY sim0 DESC, n_id ASC) AS rank
+      |  FROM s)
+      |SELECT q_id, n_id, rank, ROUND(sim0, 6) AS sim FROM r
+      |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin
+
+  /** p07 and p20: the exact top-20 suppliers by line count; a sketch-based
+    * answer must name the same suppliers with an in-bound estimate. */
+  private val SupplierCountsOracle =
+    """WITH c AS (SELECT l_suppkey, count(*) AS exact_n
+      |           FROM lineitem GROUP BY 1)
+      |SELECT l_suppkey, exact_n, TRUE AS est_ok FROM c
+      |ORDER BY exact_n DESC, l_suppkey ASC LIMIT 20""".stripMargin
+
+  /** p23 and p24: the two version states of the documents table, landed by
+    * batch delta commits (p23) and by a streaming ingest (p24). */
+  private val DeltaVersionsOracle =
+    """WITH v1 AS (SELECT doc_id, lang, n_chars FROM documents
+      |            WHERE doc_id % 3 <= 1),
+      |v2 AS (SELECT doc_id, lang,
+      |    CASE WHEN lang = 'en' AND doc_id % 3 = 1 AND doc_id % 5 = 0
+      |      THEN -n_chars ELSE n_chars END AS n_chars
+      |  FROM documents
+      |  WHERE (doc_id % 3 <= 1 AND NOT (lang = 'en' AND doc_id % 6 = 0))
+      |     OR (lang = 'en' AND doc_id % 3 = 2))
+      |SELECT doc_id, lang, n_chars, CAST(1 AS BIGINT) AS version FROM v1
+      |UNION ALL
+      |SELECT doc_id, lang, n_chars, CAST(2 AS BIGINT) AS version FROM v2
+      |ORDER BY version, doc_id""".stripMargin
+  /** Every driver query, each written once: name, oracle, builder. */
+  val table: Seq[Query] = Seq(
+    // ---- beyond-parity training-data pipeline operators (graft.ops): dedup,
+    // similarity search, text analysis, multimodal plumbing, table layouts.
+
     // exact dedup: digest group-by (shuffles md5 digests, not payloads)
-    "d01_dedup_exact" -> ((s, dir) => rt(s,
-      ops.Dedup.exactDedup(t(s, dir, "documents")).orderBy("digest"))),
+    Query("d01_dedup_exact",
+      """SELECT md5(regexp_replace(lower(text), '\s+', ' ', 'g')) AS digest,
+        |  min(doc_id) AS keep_id, count(*) AS n_dups
+        |FROM documents GROUP BY 1 ORDER BY digest""".stripMargin)((s, dir) =>
+      ops.Dedup.exactDedup(t(s, dir, "documents")).orderBy("digest")),
 
     // MinHash + banded LSH near-dup pairs, exact-jaccard verified
-    "d02_minhash_pairs" -> ((s, dir) => rt(s,
+    // exact oracle for the LSH path: the testdata plants near-dup pairs at
+    // jaccard >= 0.9 and keeps everything else < 0.1, so a full-recall LSH at
+    // threshold 0.5 must return EXACTLY the unblocked all-pairs >= 0.5 set
+    // (OpsSpec asserts recall == exact on the same data)
+    Query("d02_minhash_pairs",
+      """WITH s AS (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents),
+        |sh AS (SELECT doc_id, CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
+        |  ELSE list_distinct([array_to_string(toks[i:i+2], ' ') for i in range(1, len(toks)-1)]) END AS g
+        |  FROM s),
+        |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+        |  len(list_intersect(a.g, b.g))
+        |    / CAST(len(list_distinct(list_concat(a.g, b.g))) AS DOUBLE) AS j
+        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
+        |SELECT id_a, id_b, ROUND(j, 6) AS jaccard FROM p
+        |WHERE j >= 0.5 ORDER BY id_a, id_b""".stripMargin)((s, dir) =>
       ops.Dedup.minhashNearDups(t(s, dir, "documents"), threshold = 0.5)
         .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
-        .orderBy("id_a", "id_b"))),
+        .orderBy("id_a", "id_b")),
 
     // split-leakage audit (round 12): near-dup pairs that STRADDLE t31's
     // content-hash splits — the eval-contamination check a training
@@ -127,7 +219,29 @@ object SparkEntry {
     // splits side is a narrow two-column projection joined back by bare
     // ids; at 100 TB the near-dup pair generation dominates exactly as in
     // d02 and the audit adds two id-keyed hash joins.
-    "t33_split_leakage" -> ((s, dir) => rt(s, {
+    // t33: d02's exact-jaccard brute force composed with t31's md5 split
+    // replay; only cross-split pairs survive
+    Query("t33_split_leakage",
+      """WITH s AS (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents),
+        |sh AS (SELECT doc_id, CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
+        |  ELSE list_distinct([array_to_string(toks[i:i+2], ' ') for i in range(1, len(toks)-1)]) END AS g
+        |  FROM s),
+        |sp AS (SELECT doc_id,
+        |    CASE WHEN hh < 'cd' THEN 'train'
+        |         WHEN hh < 'e7' THEN 'val' ELSE 'test' END AS split
+        |  FROM (SELECT doc_id,
+        |      substring(md5(CAST(doc_id AS VARCHAR) || ':' || text), 1, 2) AS hh
+        |    FROM documents)),
+        |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+        |  len(list_intersect(a.g, b.g))
+        |    / CAST(len(list_distinct(list_concat(a.g, b.g))) AS DOUBLE) AS j
+        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
+        |SELECT p.id_a, p.id_b, ROUND(p.j, 6) AS jaccard,
+        |  sa.split AS split_a, sb.split AS split_b
+        |FROM p JOIN sp sa ON p.id_a = sa.doc_id
+        |       JOIN sp sb ON p.id_b = sb.doc_id
+        |WHERE p.j >= 0.5 AND sa.split <> sb.split
+        |ORDER BY id_a, id_b""".stripMargin)((s, dir) => {
       val d = t(s, dir, "documents")
       val splits = ops.TextOps.splitAssign(d).select(col("doc_id"), col("split"))
       ops.Dedup.minhashNearDups(d, threshold = 0.5)
@@ -140,7 +254,7 @@ object SparkEntry {
           round(col("jaccard"), 6).as("jaccard"),
           col("split_a"), col("split_b"))
         .orderBy("id_a", "id_b")
-    })),
+    }),
 
     // THE simhash driver query, at the PRODUCTION config — 16-bit chunks
     // (numChunks=4), radius 3 = numChunks−1 — where the pigeonhole
@@ -161,3365 +275,12 @@ object SparkEntry {
     // FIXTURE config (256 buckets → 29.8× at 10×; coverage was a per-
     // fixture measurement, not a guarantee) lives on as a spec-level
     // equality check against the exact AllPairs op — BloomDedupSpec.
-    "d03b_simhash_prod" -> ((s, dir) => rt(s, {
-      val salted = t(s, dir, "documents").filter(col("doc_id") % 5 === 0)
-        .select(col("doc_id"),
-          expr("array_join(flatten(transform(split(lower(text), ' '), " +
-            "w -> array(w, concat('s', cast(doc_id AS STRING))))), ' ')").as("text"))
-      val twins = salted.select((col("doc_id") + 100000000L).as("doc_id"), col("text"))
-      ops.Dedup.simhashVerifiedNearDups(salted.unionAll(twins),
-          threshold = 0.9, numChunks = 4, maxHamming = 3)
-        .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
-        .orderBy("id_a", "id_b")
-    })),
-
-    // blocked exact n-gram Jaccard (no hashing — DuckDB-checkable)
-    "d04_ngram_jaccard" -> ((s, dir) => rt(s,
-      ops.Dedup.ngramJaccardPairs(t(s, dir, "documents"), "doc_id", "text",
-        blockCols = Seq("lang", "source"), threshold = 0.3)
-        .select("blk", "id_a", "id_b", "jaccard").orderBy("blk", "id_a", "id_b"))),
-
-    // EXACT unblocked all-pairs jaccard via prefix filtering (AllPairs/
-    // PPJoin family): rarest-first global gram order, per-doc prefix join,
-    // exact kernel verify — deterministic completeness where d02's LSH is
-    // probabilistic and d04 needs a blocking key
-    "d12_prefix_jaccard" -> ((s, dir) => rt(s,
-      ops.Dedup.prefixFilterJaccardPairs(t(s, dir, "documents"),
-          "doc_id", "text", threshold = 0.5)
-        .orderBy("id_a", "id_b"))),
-
-    // composed corpus prep: quality filter → lang-ID → exact dedup
-    "d06_prepare_corpus" -> ((s, dir) => rt(s,
-      ops.Pipeline.prepareCorpus(t(s, dir, "documents")).orderBy("doc_id"))),
-
-    // incremental dedup: the "new batch" (odd ids) against the already-kept
-    // corpus (even ids) — digest anti-join, payloads never shuffle
-    "d07_incremental_dedup" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      rt(s, ops.Dedup.incrementalDedup(
-        d.filter(col("doc_id") % 2 === 1), d.filter(col("doc_id") % 2 === 0))
-        .orderBy("digest"))
-    }),
-
-    // d07 restructured for mostly-novel ingest: a broadcast Bloom filter of
-    // the kept corpus's digests drops the batch's definitely-new rows before
-    // the exact anti-join (no false negatives → byte-identical output,
-    // certified by the SAME oracle as d07). At 100 TB the anti-join probe
-    // side shrinks from |batch| to |dups| + fpp·|batch|.
-    "d11_bloom_incremental_dedup" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      rt(s, ops.Dedup.bloomIncrementalDedup(
-        d.filter(col("doc_id") % 2 === 1), d.filter(col("doc_id") % 2 === 0))
-        .orderBy("digest"))
-    }),
-
-    // near-dup clustering: connected components (pointer-doubling label
-    // propagation) over lang-blocked jaccard pairs — the "keep one per
-    // cluster" primitive. Round 10: the WHOLE fixpoint rides as ONE wire
-    // artifact (Rel.ExtIteration — init labels, double-hop body plan,
-    // round bound, multiset-fixpoint early exit all in the plan); the
-    // consumer runs the loop. substrait 0.3 itself has no iteration, so
-    // foreign consumers loud-reject the type_url — the extension contract.
-    "d08_neardup_clusters" -> ((s, dir) => {
-      // lang+source blocks keep pair generation bounded per block (the
-      // blocking contract) — lang-only blocks go quadratic at 10x the data
-      val pairs = ops.Dedup.ngramJaccardPairs(t(s, dir, "documents"),
-        "doc_id", "text", blockCols = Seq("lang", "source"), threshold = 0.1)
-      ops.Dedup.connectedComponents(pairs, stepThroughWire = true).orderBy("node")
-    }),
-
-    // incremental near-dup clustering: yesterday's cluster labels (from
-    // the even-doc corpus) fold star-edges + today's new-batch pairs into
-    // the SAME labels a from-scratch run over all pairs produces — the
-    // daily-ingest cluster maintenance path, cost ∝ batch not history
-    "d13_incremental_clusters" -> ((s, dir) => {
-      // the pair pipeline is referenced by both CC runs and both splits —
-      // localCheckpoint computes it once (a production ingest would read
-      // yesterday's labels and today's pairs from tables anyway)
-      val pairs = ops.Dedup.prefixFilterJaccardPairs(t(s, dir, "documents"),
-        "doc_id", "text", threshold = 0.5).localCheckpoint(true)
-      val oldPairs = pairs.filter(col("id_a") % 2 === 0 && col("id_b") % 2 === 0)
-      val newBatch = pairs.filter(!(col("id_a") % 2 === 0 && col("id_b") % 2 === 0))
-      val oldLabels = ops.Dedup.connectedComponents(oldPairs)
-      ops.Dedup.incrementalConnectedComponents(oldLabels, newBatch,
-        stepThroughWire = true).orderBy("node")
-    }),
-
-    // exact directed shingle-containment pairs (|A∩B|/|A| ≥ 0.9): the
-    // near-SUPERSET detector jaccard misses (B = A + extra content).
-    // Fixture plants supersets: every 7th doc gets an id+200000000 twin with
-    // an appended tail, so original→twin containment is exactly 1.0; the
-    // DuckDB all-ordered-pairs oracle certifies precision AND recall.
-    "d15_containment_pairs" -> ((s, dir) => rt(s, {
-      val base = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val ext = base.filter(col("doc_id") % 7 === 0)
-        .select((col("doc_id") + 200000000L).as("doc_id"),
-          concat(col("text"),
-            lit(" zq xv extension tail tokens appended here")).as("text"))
-      ops.Dedup.containmentPairs(base.unionAll(ext), "doc_id", "text",
-          threshold = 0.9)
-        .orderBy("id_a", "id_b")
-    })),
-
-    // exact duplicate-SPAN pairs (Lee et al. 2022 exact-substring signal):
-    // docs sharing any contiguous 20-token substring, with the count of
-    // distinct shared spans. Fixture plants quoters: every 11th doc gets an
-    // id+300000 twin whose text = the original's first 25 tokens + a salted
-    // tail → exactly 6 stride-1 spans shared per planted pair (when the
-    // source has ≥25 tokens); jaccard at these lengths is far below any
-    // near-dup threshold — the span detector is the only op that sees it.
-    "d16_shared_spans" -> ((s, dir) => rt(s, {
-      val base = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val quoters = base.filter(col("doc_id") % 11 === 0)
-        .select((col("doc_id") + 300000L).as("doc_id"),
-          concat(
-            expr("array_join(slice(split(text, ' '), 1, 25), ' ')"),
-            lit(" qz"), col("doc_id").cast("string"),
-            lit(" unrelated salted tail content follows here")).as("text"))
-      // onOverflow=fail: the DuckDB oracle has no bucket cap, so the
-      // certification run raises loudly if any fixture span bucket ever
-      // reaches maxBucket (it can't silently diverge from the oracle);
-      // production callers keep the default drop-the-hot-bucket guard
-      ops.Dedup.sharedSpanPairs(base.unionAll(quoters), "doc_id", "text",
-          spanTokens = 20, onOverflow = "fail")
-        .orderBy("id_a", "id_b")
-    })),
-
-    // damped centrality (exact fixed-point power iteration) over the
-    // supplier–part incidence graph — a naturally degree-skewed bipartite
-    // graph (suppliers touch many parts, parts few suppliers), so ranks
-    // genuinely separate hubs from periphery (the d08 near-dup graph is
-    // 2 regular nodes at this SF — vacuous for a rank test). The oracle
-    // unrolls the 3 rounds as plain SQL over the same edge list and
-    // matches bit-for-bit; every round's plan rides the wire (incl. the
-    // DIV operator). Same op over d08's pairs = content-farm scoring.
-    "d17_graph_rank" -> ((s, dir) => {
-      val pairs = t(s, dir, "lineitem")
-        .select(col("l_suppkey").cast("long").as("id_a"),
-          (col("l_partkey").cast("long") + 1000000000L).as("id_b"))
-        .distinct()
-      ops.Dedup.graphRank(pairs, stepThroughWire = true).orderBy("node")
-    }),
-
-    // fuzzy near-dup by BOUNDED EDIT DISTANCE over a short keyed field
-    // (here: the 64-char lowercase prefix — the fuzzy-title/header dedup
-    // real pipelines run where token Jaccard is too coarse). Two planted
-    // perturbation families certify both verify AND blocking: a
-    // substitution twin (same length) and an append twin (length +1 —
-    // exercises the cross-length chunk probe on every boundary straddle).
-    // The oracle brute-forces all in-block pairs with DuckDB's levenshtein
-    // — the op's PassJoin pigeonhole candidate set (share one of k+1
-    // chunks verbatim at shift ≤ k) is provably complete, so the sets
-    // match exactly.
-    // canonical-URL dedup (d19): the same page crawled five different ways
-    // — scheme/host case, default ports, utm_* tracking params, parameter
-    // order, trailing slashes, fragments — collapses to ONE canonical key.
-    // URLs are synthesized messy from doc_id (the corpus has no url
-    // column); the oracle CONSTRUCTS the expected canonical string
-    // independently from the group arithmetic, so any normalization bug
-    // (a kept port, a surviving utm param, unsorted query) breaks string
-    // equality, not just group counts. Group-by-key: one digest-width
-    // shuffle, counts + min only — d01's exact-dedup scale shape.
-    "d19_url_dedup" -> ((s, dir) => rt(s, {
-      val d2 = col("doc_id") % 2
-      val url = concat(
-        when(d2 === 0, "HTTP").otherwise("https"), lit("://"),
-        when(col("doc_id") % 4 < 2,
-          concat(lit("WWW.Site"), (col("doc_id") % 50).cast("string"), lit(".COM")))
-          .otherwise(
-            concat(lit("www.site"), (col("doc_id") % 50).cast("string"), lit(".com"))),
-        when(col("doc_id") % 5 === 0 && d2 === 0, ":80")
-          .when(col("doc_id") % 5 === 1 && d2 =!= 0, ":443")
-          .otherwise(""),
-        lit("/p/"), (col("doc_id") % 25).cast("string"),
-        when(col("doc_id") % 3 === 0, "/").otherwise(""),
-        when(col("doc_id") % 7 < 3, "?b=2&utm_source=feed&a=1")
-          .otherwise("?a=1&b=2"),
-        // the fragment carries its own '?': a parser that takes the first
-        // '?' anywhere as the query start canonicalizes these differently
-        // and breaks the oracle's constructed string (the r13 review bug)
-        when(col("doc_id") % 11 === 0, "#frag?fx=9").otherwise(""))
-      t(s, dir, "documents").select(col("doc_id"))
-        .withColumn("curl", ops.TextOps.canonicalUrl(url))
-        .groupBy("curl")
-        .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("first_doc"))
-        .filter(col("n_docs") >= 2)
-        .orderBy("curl")
-    })),
-
-    "d18_editdist_neardup" -> ((s, dir) => rt(s, {
-      val base = t(s, dir, "documents").filter(col("doc_id") % 7 === 0)
-        .select(col("doc_id"), col("lang"),
-          expr("substring(lower(text), 1, 64)").as("k"))
-      val sub = base.select((col("doc_id") + 100000000L).as("doc_id"),
-        col("lang"), concat(lit("x"), expr("substring(k, 2)")).as("k"))
-      val app = base.select((col("doc_id") + 200000000L).as("doc_id"),
-        col("lang"), concat(col("k"), lit("z")).as("k"))
-      ops.Dedup.editDistanceNearDups(base.unionAll(sub).unionAll(app),
-          "doc_id", "k", blockCols = Seq("lang"), maxDist = 2)
-        .orderBy("id_a", "id_b")
-    })),
-
-    // quality-aware cluster dedup: each near-dup cluster keeps its LONGEST
-    // member (ties → smallest id) instead of an arbitrary min-id keeper —
-    // the curation rule real pipelines want. One struct-max aggregate
-    // picks winners; only ids ride the anti-join.
-    // (CC materializes rounds, so no top-level rt; the heavy relational
-    // stage — exact pair generation — rides the wire instead, and the
-    // per-round wire hop is d08/d13's already-certified contract)
-    "d14_keep_best_per_cluster" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val pairs = rt(s, ops.Dedup.prefixFilterJaccardPairs(d, "doc_id", "text",
-        threshold = 0.5))
-      ops.Dedup.keepBestPerCluster(d, pairs, col("n_chars"))
-        .select("doc_id", "lang", "n_chars").orderBy("doc_id")
-    }),
-
-    // streaming-shaped incremental dedup as its batch twin: the new batch
-    // anti-joins a static kept-digest table, then dedups in-batch — the
-    // EXACT call EventStreamSpec runs on a readStream frame (stream-static
-    // left_anti). Output = the novel digest set (deterministic either way).
-    // streaming upsert sink, batch twin: the foreachBatch per-wave merges
-    // (bootstrap write, then a rewrite+insert wave) replayed sequentially —
-    // last writer wins per key; EventStreamSpec proves the ACTUAL
-    // readStream + Sinks.upsertSink path (incl. checkpoint restart) lands
-    // the identical final state
-    "e09_stream_upsert_sink" -> ((s, dir) => {
-      // hex hashCode (abs(Int.MinValue) stays negative) + pid so concurrent
-      // JVMs over the same sfDir (bench alongside correctness) never share
-      // a table dir; delete-at-start so stale state cannot interleave
-      val out = scratch("upsink", dir)
-      val outPath = new org.apache.hadoop.fs.Path(out)
-      val outFs = outPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (outFs.exists(outPath)) outFs.delete(outPath, true)
-      val docs = t(s, dir, "documents")
-        .withColumn("len_band", floor(col("n_chars") / 100).cast("int"))
-        .select("doc_id", "text", "lang", "len_band")
-      sources.Sources.writeRangePartitioned(docs, "len_band", out,
-        sortCols = Seq("doc_id")) // wave 1 = the sink's bootstrap write
-      val wave2 = docs.filter(col("doc_id") % 3 === 0)
-        .withColumn("text", upper(col("text")))
-        .unionByName(docs.filter(col("doc_id") % 97 === 5)
-          .withColumn("doc_id", col("doc_id") + 5000000L))
-      sources.Sources.upsertRangePartitioned(s, out, wave2,
-        "len_band", Seq("doc_id"), sortCols = Seq("doc_id"))
-      rt(s, s.read.parquet(out)
-        .select(col("doc_id"), col("lang"), md5(col("text")).as("text_md5"))
-        .orderBy("doc_id"))
-    }),
-
-    "e04_stream_incremental_dedup" -> ((s, dir) => rt(s, {
-      val d = t(s, dir, "documents")
-      streaming.EventStream.streamingIncrementalDedup(
-        d.filter(col("doc_id") % 2 === 1),
-        d.filter(col("doc_id") % 2 === 0)
-          .select(ops.TextOps.fingerprint(col("text")).as("digest")))
-        .select("digest").orderBy("digest")
-    })),
-
-    // incremental NEAR-dup: the new batch (odd ids) LSH-checked against the
-    // kept corpus (even ids) — the near-dup companion to d07's exact-digest
-    // ingest. Banding params match d02 (measured-complete on the planted
-    // pairs at threshold 0.5), so the exact cross-pairs oracle certifies.
-    "d10_incremental_neardup" -> ((s, dir) => rt(s, {
-      val d = t(s, dir, "documents")
-      ops.Dedup.incrementalNearDups(
-        d.filter(col("doc_id") % 2 === 1), d.filter(col("doc_id") % 2 === 0),
-        threshold = 0.5)
-        .select(col("new_id"), col("kept_id"),
-          round(col("jaccard"), 6).as("jaccard"))
-        .orderBy("new_id", "kept_id")
-    })),
-
-    // benchmark decontamination: corpus docs sharing any 5-gram with the
-    // pseudo eval set (doc_id % 7 == 0); the eval side's distinct grams
-    // broadcast, corpus grams stream — text never shuffles
-    "d09_decontaminate" -> ((s, dir) => rt(s, {
-      val d = t(s, dir, "documents")
-      ops.TextOps.contaminationHits(
-        d.filter(col("doc_id") % 7 =!= 0), d.filter(col("doc_id") % 7 === 0),
-        n = 5)
-        .orderBy("doc_id")
-    })),
-
-    // embedding-cosine near-dups via multi-table sign-LSH. The raw embeddings
-    // table has NO high-cosine pairs (max ≈ 0.51), so near-dups are PLANTED:
-    // each vector gets a deterministically perturbed twin (per-element scale
-    // 1 + 0.002·((i mod 5) − 2), identical double arithmetic in DuckDB), at
-    // cosine ≈ 0.99998 to its source. At threshold 0.8 the LSH output is
-    // exactly the 500 planted (id, id+100000000) pairs — certified against the
-    // exact all-pairs oracle; miss probability per pair ≈ 3e-12 with 6×6
-    // sign-LSH, and the seeded hyperplanes make the result deterministic.
-    "d05_embedding_neardup" -> ((s, dir) => rt(s, {
-      val e = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-      val twin = e.select((col("vec_id") + 100000000L).as("vec_id"),
-        expr("transform(embedding, (x, i) -> x * (1.0D + 0.002D * ((i % 5) - 2)))")
-          .as("embedding"))
-      // the plane-count sizing hint is a cheap COUNT(*) over the RAW parquet
-      // table (column-pruned metadata scan) — without it lshNearDups would
-      // run a full extra pass over the derived union+transform frame
-      val hint = 2L * t(s, dir, "embeddings").count()
-      ops.Dedup.embeddingNearDups(e.unionAll(twin), threshold = 0.8,
-          corpusSizeHint = hint)
-        .orderBy("id_a", "id_b")
-    })),
-
-    // exact brute-force cosine top-k (broadcast queries, one corpus scan) —
-    // wire-round-tripped: the codegen'd vec_cosine kernel travels as a named
-    // extension function, the broadcast hint re-derives on the consumer side
-    "s01_knn_brute" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      rt(s, ops.Similarity.bruteForceKnn(e, e.filter(col("vec_id") < 8), k = 5)
-        .orderBy("q_id", "rank"))
-    }),
-
-    // ANN top-k via multi-table sign-LSH (the 100 TB path). 16 tables × 3
-    // planes reach measured recall 1.0 on this fixture (verified at sf0.01
-    // AND sf0.1), so the output equals exact brute-force kNN and the s01
-    // oracle certifies it — tables is the recall/cost knob at scale.
-    // s02 uses the DERIVED index shape (occupancy + recall math, round 8):
-    // at this fixture's similarity floor the math proves sign-LSH cannot
-    // beat an exact scan (unclustered vectors → θ/π ≈ 1/3 → the recall-
-    // preserving table count saturates the candidate volume), so the
-    // builder's documented fallback takes the brute path — recall exactly
-    // 1.0, certified by the same exact-kNN oracle, and the 30× rehearsal
-    // cost follows the scan, not the saturated bucket explosion
-    "s02_knn_lsh" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      rt(s, ops.Similarity.lshKnn(e, e.filter(col("vec_id") < 8), k = 5,
-          planesPerTable = 0, corpusSizeHint = 0L)
-        .orderBy("q_id", "rank"))
-    }),
-
-    // the explicit-config LSH candidate path (tables=16, planes=3 —
-    // measured recall 1.0 on this fixture at both gated SFs) stays
-    // certified against the same exact-kNN oracle
-    "s14_knn_lsh_explicit" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      rt(s, ops.Similarity.lshKnn(e, e.filter(col("vec_id") < 8), k = 5,
-          tables = 16, planesPerTable = 3)
-        .orderBy("q_id", "rank"))
-    }),
-
-    // ANN top-k via IVF: KMeans coarse quantizer trained on a half sample
-    // (the 100 TB path — the quantizer never sees the full corpus).
-    // nprobe=12 of 16 cells reaches measured recall 1.0 on this fixture
-    // (both SFs), so the s01 exact-kNN oracle certifies the output; the
-    // high nprobe is a property of THIS fixture (uniform random embeddings
-    // have no cluster structure for the quantizer to exploit — real corpora
-    // cluster, and nprobe/nlist is the recall/latency knob).
-    "s03_knn_ivf" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val idx = ops.Ivf.build(e, nlist = 16, trainSampleFraction = 0.5)
-      // the KMeans TRAINING is imperative (no wire form), but the search
-      // query over the assigned index is a plain plan — that rides the wire
-      rt(s, ops.Ivf.search(idx, e.filter(col("vec_id") < 8), k = 5, nprobe = 12)
-        .orderBy("q_id", "rank"))
-    }),
-
-    // the SAVED-index IVF path — build, save partitioned-by-cell, load,
-    // probe: the parquet layout IS the inverted file. searchPruned applies
-    // the probed cell set as a literal partition filter, so the scan reads
-    // only the probed cell directories (PlanQualitySpec asserts the
-    // PartitionFilters + pruned file count) — at a production nlist of
-    // thousands, a probe touches a vanishing fraction of the corpus bytes.
-    // Same fixture/params as s03 (measured recall 1.0) → exact-kNN oracle.
-    "s06_knn_ivf_saved" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val idx = ops.Ivf.build(e, nlist = 16, trainSampleFraction = 0.5)
-      val path = scratch("ivf", dir)
-      ops.Ivf.save(idx, path)
-      idx.assigned.unpersist()
-      val loaded = ops.Ivf.load(s, path)
-      rt(s, ops.Ivf.searchPruned(loaded, e.filter(col("vec_id") < 8), k = 5, nprobe = 12)
-        .orderBy("q_id", "rank"))
-    }),
-
-    // MMR diversity rerank: greedy λ·rel − (1−λ)·max-sim-to-selected over
-    // each query's exact top-16 shortlist — the redundancy-suppressing
-    // rerank for RAG-style retrieval. Scaled-long integer scoring → the
-    // greedy trace is deterministic and the oracle replays it step by step
-    // (unrolled in SQL). The sequential loop runs as ONE per-query
-    // aggregate-HOF over ≤16-element arrays; queries parallelize freely.
-    "s12_mmr_rerank" -> ((s, dir) => rt(s,
-      ops.Similarity.mmrRerank(t(s, dir, "embeddings"),
-          t(s, dir, "embeddings").filter(col("vec_id") < 4),
-          shortlistK = 16, k = 6)
-        .orderBy("q_id", "mmr_rank"))),
-
-    // incremental IVF index ingest: build on half the corpus, save, APPEND
-    // the second half against the SAVED quantizer (no retraining, no
-    // re-assignment — old cell files untouched, ingest cost ∝ batch), then
-    // answer queries from the grown index. Certified against the exact
-    // brute-force kNN oracle over the FULL corpus at nprobe = nlist (all
-    // cells — exact by construction at any SF), so any row the ingest
-    // dropped or duplicated breaks the oracle; partition-PRUNED probing is
-    // s06's contract, ingest completeness is this one's.
-    "s13_ivf_incremental_ingest" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val idx = ops.Ivf.build(e.filter(col("vec_id") % 2 === 0),
-        nlist = 16, trainSampleFraction = 0.5)
-      val path = scratch("ivfgrow", dir)
-      ops.Ivf.save(idx, path)
-      idx.assigned.unpersist()
-      val grown = ops.Ivf.appendToSaved(s, path, e.filter(col("vec_id") % 2 === 1))
-      rt(s, ops.Ivf.searchPruned(grown, e.filter(col("vec_id") < 8),
-          k = 5, nprobe = 16)
-        .orderBy("q_id", "rank"))
-    }),
-
-    // tombstone DELETES on the saved index (s16): vectors retire by
-    // appending ids to a tombstone set — zero cell files touched (the
-    // delete twin of s13's append ingest); load anti-joins them out and
-    // compactSaved folds them in later. Full probe → the brute-force
-    // oracle over the corpus MINUS the deleted ids certifies exactness.
-    "s16_knn_tombstone_delete" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val path = scratch("ivfdel", dir)
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
-      val idx = ops.Ivf.build(e, nlist = 16, trainSampleFraction = 0.5)
-      ops.Ivf.save(idx, path)
-      idx.assigned.unpersist()
-      val afterDelete = ops.Ivf.deleteFromSaved(s, path,
-        e.filter(col("vec_id") % 3 === 0).select("vec_id"))
-      rt(s, ops.Ivf.search(afterDelete, e.filter(col("vec_id") < 8),
-          k = 5, nprobe = 16)
-        .orderBy("q_id", "rank"))
-    }),
-
-    // metadata-FILTERED ANN: nearest neighbors among only the vectors
-    // satisfying a predicate (label = 3 here) — the retrieval shape
-    // curation pipelines issue ("nearest docs in THIS language/source").
-    // The index carries the label via metaCols, so the predicate filters
-    // the assigned frame BEFORE the probe join (and pushes down beside the
-    // cell partition filters on the saved layout). A ~10%-selective filter
-    // needs a wider probe than the unfiltered 12/16 (recall note at
-    // Ivf.searchFiltered); exactness vs the brute-force filtered oracle is
-    // the gate.
-    "s15_filtered_knn" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val idx = ops.Ivf.build(e, nlist = 16, trainSampleFraction = 0.5,
-        metaCols = Seq("label"))
-      rt(s, ops.Ivf.searchFiltered(idx, e.filter(col("vec_id") < 8),
-          k = 5, nprobe = 16, pred = col("label") === 3)
-        .orderBy("q_id", "rank"))
-    }),
-
-    // ANN top-k via product quantization + exact rerank: the corpus scans
-    // as m=16 codes per vector (16x fewer bytes than raw floats — the
-    // bandwidth knob of the ANN family, composable with IVF's cell
-    // pruning); per-query ADC lookup tables shortlist 200 candidates, an
-    // exact-cosine rerank of the shortlist restores exact ordering
-    // (measured worst true-neighbor ADC rank: 49 at sf0.01, 71 at sf0.1 —
-    // ~3x margin), so the s01 exact-kNN oracle certifies the output.
-    // KMeans codebook training is imperative; the encode+search rides the
-    // wire as a plain plan.
-    "s08_knn_pq" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val model = ops.Pq.train(e, m = 16, k = 64)
-      val enc = ops.Pq.encode(e, model)
-      rt(s, ops.Pq.search(enc, e, model, e.filter(col("vec_id") < 8),
-          k = 5, shortlist = 200)
-        .orderBy("q_id", "rank"))
-    }),
-
-    // ANN top-k via scalar int8 quantization (s17, round 14): the corpus
-    // scans as array<tinyint> codes (4x fewer bytes than float32) against
-    // ONE global symmetric scale from a single max-abs aggregate — no
-    // codebook training, the first rung of the quantization ladder below
-    // s08's PQ. Quantized-cosine shortlist + exact rerank restores exact
-    // ordering (SqSpec measures the worst true-neighbor quantized rank:
-    // ~k on these fixtures, far under the 64 shortlist), so the s01
-    // exact-kNN oracle certifies the output.
-    "s17_knn_sq8" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val scale = ops.Sq.trainScale(e)
-      val enc = ops.Sq.encode(e, scale)
-      rt(s, ops.Sq.search(enc, e, e.filter(col("vec_id") < 8), scale,
-          k = 5, shortlist = 64)
-        .orderBy("q_id", "rank"))
-    }),
-
-    // ANN top-k via SIGN-BIT quantization (s18, round 14): the extreme
-    // rung of the ladder — 64-dim vectors pack into ONE bigint (32x fewer
-    // bytes than float32), candidates rank by Hamming distance (xor +
-    // bit_count, a monotone angular proxy for sign codes), and the exact
-    // rerank restores exact order. One-bit codes are a corpus-FRACTION
-    // pre-filter (worst true-neighbor Hamming rank a stable ~1/3 of the
-    // corpus across fixtures; SqSpec pins 40%): the economics are
-    // scanning 32x fewer bytes to halve exact-cosine work, so the
-    // shortlist is corpus/2 and s01's exact-kNN oracle certifies the
-    // output at every SF.
-    "s18_knn_signbit" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val signs = ops.Sq.signEncode(e)
-      val shortlist = math.max(128L, e.count() / 2).toInt
-      rt(s, ops.Sq.searchSign(signs, e, e.filter(col("vec_id") < 8),
-          k = 5, shortlist = shortlist)
-        .orderBy("q_id", "rank"))
-    }),
-
-    // IVF-SQ8 (s19, round 15): int8 codes INSIDE the cell-pruned inverted
-    // file — closes r14's "s17/s18 don't partition-prune" boundary. The
-    // saved layout partitions tinyint codes by cell, searchPruned applies
-    // the probed-cell set as a literal partition filter (PlanQualitySpec
-    // asserts PartitionFilters + a codes-only ReadSchema), the quantized-
-    // cosine shortlist ranks probed codes, exact rerank restores exact
-    // order → the s01 exact-kNN oracle certifies end-to-end (same
-    // nprobe-coverage fixture property as s03, same measured shortlist
-    // margin as s17 — IvfSqSpec pins it in-probe)
-    "s19_knn_ivfsq" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val idx = ops.IvfSq.build(e, nlist = 16, trainSampleFraction = 0.5)
-      val path = scratch("ivfsq", dir)
-      ops.IvfSq.save(idx, path)
-      val loaded = ops.IvfSq.load(s, path)
-      rt(s, ops.IvfSq.searchPruned(loaded, e, e.filter(col("vec_id") < 8),
-          k = 5, nprobe = 12, shortlist = 64)
-        .orderBy("q_id", "rank"))
-    }),
-
-    // large-queryset ANN (s20, round 15): the WHOLE corpus queries itself
-    // — the batch shape every other kNN entry point refuses (they
-    // broadcast the query side by contract; a 10^5-10^6-query batch needs
-    // the bucketed route). Corpus buckets to its nearest cell, queries to
-    // their nprobe cells, candidates meet in a plain shuffled cell join
-    // (neither side broadcast by construction), and rank-limit pushdown
-    // keeps the final per-query exchange at |Q|·nprobe·k skinny rows.
-    // Cells self-size from the corpus (s07's ~32/cell contract), so
-    // candidate volume stays LINEAR in |Q| as the corpus grows; at the
-    // oracle SF the self-sized nlist equals nprobe (full probe), so the
-    // exact-kNN oracle certifies EVERY query corpus-wide — above it the
-    // probe is partial and nprobe is the recall knob (the documented
-    // s02/s03 contract; BucketedKnnSpec's planted twins prove the
-    // partial-probe join).
-    "s20_knn_bucketed" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      rt(s, ops.Similarity.bucketedKnn(e, e, k = 3,
-          trainSampleFraction = 0.5)
-        .orderBy("q_id", "rank"))
-    }),
-
-    // weekly cohort retention (e18, round 14): users bucket into the week
-    // of their first event; each later activity week counts them at its
-    // offset, over the cohort's size. Integer epoch-weeks — no calendar
-    // convention for engines to disagree on; only narrow (user, week)
-    // pairs ever shuffle, and the cohort side joins user-keyed
-    "e18_cohort_retention" -> ((s, dir) => rt(s,
-      streaming.EventStream.cohortRetention(t(s, dir, "events"))
-        .orderBy("cohort_week", "week_offset"))),
-
-    // semantic near-dup pairs via k-means cluster blocking (the SemDeDup
-    // shape): same planted-twin fixture as d05, but candidates come from
-    // data-adaptive quantizer cells (multi-probe 2) instead of random
-    // hyperplanes — the complementary scale path, with nlist as the direct
-    // occupancy knob. The exact-cosine verify makes precision exact; twins
-    // at cosine ≈ 0.99998 co-cluster under any trained centroid set (and a
-    // boundary straddle still meets via the second probe cell), so the
-    // output equals the exact all-pairs oracle. KMeans training is
-    // imperative (no wire form); the blocked pair query rides the wire.
-    "s07_semantic_dedup" -> ((s, dir) => rt(s, {
-      val e = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-      val twin = e.select((col("vec_id") + 100000000L).as("vec_id"),
-        expr("transform(embedding, (x, i) -> x * (1.0D + 0.002D * ((i % 5) - 2)))")
-          .as("embedding"))
-      // corpus-derived nlist (~128 vectors/cell): the hint is a cheap
-      // metadata COUNT over the raw table; occupancy — and the quadratic
-      // in-cell pair count — stays bounded as the corpus grows
-      val hint = 2L * t(s, dir, "embeddings").count()
-      ops.Similarity.semanticNearDups(e.unionAll(twin), threshold = 0.8,
-          probeCells = 2, trainSampleFraction = 0.5, corpusSizeHint = hint)
-        .orderBy("id_a", "id_b")
-    })),
-
-    // language-ID heuristic + accuracy vs the labeled lang column
-    "t01_langid" -> ((s, dir) => rt(s,
-      ops.TextOps.langId(t(s, dir, "documents"))
-        .groupBy(col("lang"), col("lang_pred"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy("lang", "lang_pred"))),
-
-    // per-document quality metrics
-    "t02_text_quality" -> ((s, dir) => rt(s,
-      ops.TextOps.qualityScore(t(s, dir, "documents"))
-        .select("doc_id", "n_tokens", "n_punct", "n_stopwords",
-          "punct_ratio", "stopword_ratio", "avg_token_len", "quality_score")
-        .orderBy("doc_id"))),
-
-    // md5 fingerprint + whitespace and BPE-ish token counts
-    "t03_fingerprint" -> ((s, dir) => rt(s,
-      t(s, dir, "documents").select(
-        col("doc_id"),
-        ops.TextOps.fingerprint(col("text")).as("digest"),
-        ops.TextOps.tokenCount(col("text")).as("n_tokens"),
-        ops.TextOps.bpeTokenCount(col("text")).as("bpe_tokens")).orderBy("doc_id"))),
-
-    // top-k corpus vocabulary (map-side combined counts + TakeOrdered)
-    "t04_top_terms" -> ((s, dir) => rt(s,
-      ops.TextOps.topTerms(t(s, dir, "documents"), k = 50))),
-
-    // exact per-language length quantiles (R-7 interpolation, = quantile_cont;
-    // exact percentile rides the wire as percentile_cont)
-    "t05_length_quantiles" -> ((s, dir) => rt(s,
-      ops.TextOps.lengthQuantiles(t(s, dir, "documents")).orderBy("lang"))),
-
-    // PII scrubbing: placeholder substitution + per-doc audit counts,
-    // certified through the wire (pure regex projection)
-    "t06_redact" -> ((s, dir) => rt(s,
-      ops.TextOps.redact(t(s, dir, "documents"))
-        .select(col("doc_id"), col("n_emails"), col("n_phones"),
-          md5(col("text_redacted")).as("redacted_digest"))
-        .orderBy("doc_id"))),
-
-    // context-window chunking: fixed windows with overlap, chunk geometry
-    // and content both oracle-checked
-    "t07_chunking" -> ((s, dir) => rt(s,
-      ops.TextOps.chunk(t(s, dir, "documents"), chunkChars = 256, overlap = 64)
-        .select(col("doc_id"), col("chunk_id"),
-          length(col("chunk")).as("chunk_chars"), md5(col("chunk")).as("chunk_digest"))
-        .orderBy("doc_id", "chunk_id"))),
-
-    // per-group top-k curation: best 5 docs per language by quality score —
-    // the "keep the best N per stratum" selection step of corpus curation
-    "t08_top_docs_per_lang" -> ((s, dir) => rt(s, {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("lang").orderBy(col("quality_score").desc, col("doc_id").asc)
-      ops.TextOps.qualityScore(t(s, dir, "documents"))
-        .select(col("lang"), col("doc_id"), col("quality_score"),
-          row_number().over(w).as("rk"))
-        .filter(col("rk") <= 5)
-        .orderBy("lang", "rk")
-    })),
-
-    // sequence packing: deterministic (bin, token-offset) assignment in the
-    // per-language packed stream — the indexing step before writing packed
-    // pretraining shards; one window pass = one shuffle on the group key
-    "t09_pack_sequences" -> ((s, dir) => rt(s, {
-      val d = t(s, dir, "documents").select(col("doc_id"), col("lang"),
-        ops.TextOps.tokenCount(col("text")).as("n_tokens"))
-      ops.Pipeline.packSequences(d, "n_tokens", "doc_id",
-        budget = 1024, byCols = Seq("lang"))
-        .orderBy("lang", "doc_id")
-    })),
-
-    // Subword (BPE) tokenization (round 9): deterministic greedy merges
-    // over the compiled-in v1 table via the codegen'd bpe_count kernel
-    // (riding the wire as a named scalar fn), feeding packSequences so
-    // packing budgets count SUBWORDS, not whitespace tokens. The oracle
-    // replays the merge table as a recursive join-loop over the (bounded)
-    // distinct-word set — an independent SQL implementation of the same
-    // public algorithm.
-    "t29_bpe_tokens" -> ((s, dir) => rt(s, {
-      val d = t(s, dir, "documents").select(col("doc_id"), col("lang"),
-        graft.functions.BpeFunctions.bpeCount(col("text")).as("n_bpe"))
-      ops.Pipeline.packSequences(d, "n_bpe", "doc_id",
-          budget = 2048, byCols = Seq("lang"))
-        .select("lang", "doc_id", "n_bpe", "bin_id")
-        .orderBy("lang", "doc_id")
-    })),
-
-    // t29b: BPE counting at a PRODUCTION vocabulary (50,000 merges) — the
-    // table is deterministically generated (so the oracle regenerates the
-    // identical table in SQL), honors the same construction invariant as
-    // v1, and ships to executors as a Spark BROADCAST read by the
-    // codegen'd kernel — the side-channel pattern a real trained tokenizer
-    // needs at 1000 executors. Zero shuffle; the 50k-entry rank map
-    // exercises real hash-lookup behavior a 28-entry table never does.
-    "t29b_bpe_tokens_prod" -> ((s, dir) => rt(s,
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          graft.functions.BpeFunctions.bpeCountV2(col("text")).as("n_bpe2"))
-        .orderBy("doc_id"))),
-
-    // temperature-based domain rebalance (round 9): per-language keep
-    // rates DERIVED from the corpus (∝ √n_d, τ = 0.5 Pile/DoReMi style,
-    // scaled to a 50% target) — the cut column certifies the rate
-    // derivation itself, the kept set certifies the md5-draw decision
-    "t30_temperature_mix" -> ((s, dir) => rt(s,
-      ops.Pipeline.temperatureMix(
-          t(s, dir, "documents").select("doc_id", "lang"),
-          "doc_id", "lang", targetFraction = 0.5)
-        .select("lang", "doc_id", "cut")
-        .orderBy("lang", "doc_id"))),
-
-    // deterministic leakage-free train/val/test split: assignment is a
-    // pure function of (id, text) content (md5 → 256 buckets → 80/10/10),
-    // replayable bit-identically on any engine/partitioning — the split
-    // rule itself is the operator, certified by per-(lang, split) counts
-    // and char totals (sum over ~256 buckets: any misassigned row moves a
-    // total). Per-row map work only: no shuffle, no stored seed.
-    "t31_split_assign" -> ((s, dir) => rt(s,
-      ops.TextOps.splitAssign(t(s, dir, "documents"))
-        .groupBy("lang", "split")
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("chars"))
-        .orderBy("lang", "split"))),
-
-    // CCNet-style boilerplate removal — the inverse of t17: 3-token segments
-    // whose corpus document-frequency reaches 5 are dropped from EVERY doc
-    // (cross-doc repetition = boilerplate); docs reassemble from survivors
-    // in order, keeping a row (empty text_clean) even when fully stripped.
-    // Exact two-level doc-freq agg + one digest-keyed flag join + one
-    // reassembly shuffle; the boilerplate set is tiny by construction.
-    "t32_boilerplate_removal" -> ((s, dir) => rt(s,
-      ops.TextOps.removeBoilerplate(t(s, dir, "documents"))
-        .orderBy("doc_id"))),
-
-    // encoding-corruption screen (mojibake detector): corruption PLANTED
-    // deterministically on doc_id % 7 == 0 (the fixture corpus is clean
-    // ASCII, so unplanted rows certify the zero side) — one U+FFFD, one C0
-    // control, one Latin-1-mojibake lead, one windows-1252 pair appended.
-    // Counts are replace-diff arithmetic (length minus marker-stripped
-    // length), byte-identical across engines; a pure projection, zero
-    // shuffles at any scale.
-    "t34_encoding_quality" -> ((s, dir) => rt(s,
-      ops.TextOps.encodingQuality(
-        t(s, dir, "documents").withColumn("text",
-          when(col("doc_id") % 7 === 0,
-            concat(col("text"),
-              lit("\u00c3\u00a9 \u00e2\u20ac\u2122 \ufffd \u0001")))
-            .otherwise(col("text"))))
-        .orderBy("doc_id"))),
-
-    // Gopher-style quality rules (Rae et al. A1.1): word-count bounds,
-    // mean word length, symbol-to-word ratio, alphabetic-word fraction,
-    // stop-word minimum, and the conjunction verdict -- the public filter
-    // battery crawl pipelines apply before anything expensive. One split,
-    // HOF folds, zero shuffles; the oracle replays every fold with DuckDB
-    // list functions over the identical tokenization.
-    "t35_gopher_quality" -> ((s, dir) => rt(s,
-      ops.TextOps.gopherQuality(t(s, dir, "documents"))
-        .orderBy("doc_id"))),
-
-    // t36: distributed BPE vocabulary TRAINING (round 15 — closes the r14
-    // "merges are synthetic" boundary): ONE corpus pass builds the
-    // word-frequency table, then k rounds of freq-weighted pair-count →
-    // deterministic argmax → merge, all vocabulary-sized. The WHOLE
-    // training loop rides the wire as ONE Rel.ExtIteration — init state,
-    // the per-round plan (pair count, relational sort+fetch-1 argmax,
-    // constant-key-join merge application, merge append), and the round
-    // count; the consumer runs the loop with zero driver round-trips
-    // (and measures FASTER than the per-round-collect host loop, which
-    // BpeTrainSpec pins bit-identical). The oracle replays the SAME k
-    // rounds as unrolled SQL CTEs (identical seg-string representation,
-    // left-to-right replace semantics, and count-desc/lexicographic
-    // tie-break), certifying every rank, operand pair, and winning count.
-    "t36_bpe_train" -> ((s, dir) =>
-      ops.BpeTrain.trainMerges(t(s, dir, "documents"), "text",
-        numMerges = BpeTrainRounds, stepThroughWire = true)),
-
-    // Gopher-style repetition filters: zero-shuffle narrow fold per document
-    "t10_repetition" -> ((s, dir) => rt(s,
-      ops.TextOps.repetitionStats(t(s, dir, "documents"))
-        .orderBy("doc_id"))),
-
-    // one-pass ANALYZE-style column profile (corpus health check)
-    "t12_profile" -> ((s, dir) => rt(s,
-      ops.Pipeline.profile(t(s, dir, "documents"),
-        Seq("doc_id", "lang", "source", "n_chars"))
-        .orderBy("col_name"))),
-
-    // mixture-weighted resampling to a target language mix (md5-draw filter)
-    "t11_mixture_sample" -> ((s, dir) => rt(s,
-      ops.Pipeline.mixtureSample(t(s, dir, "documents"), "doc_id", "lang",
-        rates = Map("en" -> 0.5, "de" -> 0.25, "fr" -> 0.75, "zh" -> 1.0),
-        default = 0.125)
-        .select("doc_id", "lang", "source")
-        .orderBy("doc_id"))),
-
-    // segment-level dedup (RefinedWeb line-dedup): 20-token windows, each
-    // distinct window kept only at its first (doc, pos) occurrence, docs
-    // reassembled from their surviving segments
-    "t17_segment_dedup" -> ((s, dir) => rt(s,
-      ops.TextOps.dedupSegments(t(s, dir, "documents"))
-        .orderBy("doc_id"))),
-
-    // deterministic contrastive negative sampling: every doc draws 4
-    // hash-addressed partners (no RNG; stable across runs/partitionings).
-    // Properties certified in-query: every document anchors (n_anchors =
-    // |documents|, DuckDB-checked), no self-pairs, and every anchor keeps
-    // ≥ k−1 draws (self-collisions only). Raw pairs are hash-derived, so
-    // the oracle certifies the contract, not engine-specific hash values.
-    "t18_negative_pairs" -> ((s, dir) => rt(s, {
-      val pairs = ops.Pipeline.negativePairs(t(s, dir, "documents"), k = 4)
-      pairs.agg(
-        countDistinct(col("anchor_id")).as("n_anchors"),
-        (sum(when(col("anchor_id") === col("neg_id"), 1).otherwise(0)) === 0)
-          .as("no_self"),
-        (count(lit(1)) >= countDistinct(col("anchor_id")) * 3).as("coverage_ok"))
-    })),
-
-    // deterministic weighted (PPS) sampling: inclusion probability ∝
-    // n_tokens, expected 80 docs — decided by IEEE-exact multiply/compare
-    // on md5 draws (no ln/exp), so DuckDB replays the member set exactly
-    "t20_weighted_sample" -> ((s, dir) => rt(s,
-      ops.Pipeline.weightedSample(t(s, dir, "documents"), "n_chars",
-          expectedK = 80.0)
-        .select("doc_id", "lang", "n_chars")
-        .orderBy("doc_id"))),
-
-    // hashed linear classifier scoring (fastText shape): word uni+bigrams
-    // → 256 md5-prefix buckets → integer-weight sum from a literal map —
-    // zero-shuffle scoring whose exact integer score any engine replays
-    "t21_linear_classifier" -> ((s, dir) => rt(s,
-      ops.TextOps.hashedLinearScore(t(s, dir, "documents"))
-        .select("doc_id", "lang", "n_features", "score_num")
-        .orderBy("doc_id"))),
-
-    // per-stratum weighted PPS sample: ≈25 docs per language, probability
-    // ∝ n_chars — the balanced-mixture sampler; per-stratum totals are a
-    // 5-row broadcast, the keep rule the same portable-md5 filter as t20
-    "t26_stratified_pps" -> ((s, dir) => rt(s,
-      ops.Pipeline.stratifiedWeightedSample(t(s, dir, "documents"),
-          "n_chars", "lang", expectedKPerStratum = 25.0)
-        .select("doc_id", "lang", "n_chars")
-        .orderBy("doc_id"))),
-
-    // curriculum interleave: md5 rank within language; ORDER BY
-    // (rank, lang) is a round-robin mixture — every |strata|-window
-    // touches each stratum once, with no global window anywhere
-    "t25_curriculum_order" -> ((s, dir) => rt(s,
-      ops.Pipeline.curriculumOrder(t(s, dir, "documents"), "lang", "doc_id")
-        .select("doc_id", "lang", "rank_in_stratum")
-        .orderBy("rank_in_stratum", "lang"))),
-
-    // BM25 lexical top-k search: one tf shuffle, broadcast df/query sides,
-    // scalar-subquery corpus stats, scaled-long per-term scores → the
-    // ranking is integer-exact and the oracle replays it bit-for-bit
-    "t24_bm25_search" -> ((s, dir) => rt(s,
-      ops.TextOps.bm25TopK(t(s, dir, "documents"),
-          Seq("q_hash_join" -> Seq("hash", "join"),
-            "q_scan" -> Seq("columnar", "scan", "filter"),
-            "q_stream" -> Seq("stream", "window")), k = 10)
-        .orderBy("query_id", "rank"))),
-
-    // winsorized/trimmed robust stats per group: exact R-7 quantiles bound
-    // the trusted band (broadcast back), decimal-exact trimmed + clamped
-    // means — two aggregate passes, no wide join
-    "t23_winsorized_stats" -> ((s, dir) => rt(s,
-      ops.TextOps.winsorizedStats(t(s, dir, "documents"))
-        .orderBy("lang"))),
-
-    // DSIR-style importance scoring: per-bucket log-ratio weights of the
-    // target (en) vs raw feature distributions, fit as a 256-row sketch
-    // and collected into a literal map; scoring is the same zero-shuffle
-    // exact-integer fold as t21 (scaled-long ln, the t14 convention)
-    "t22_dsir_score" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val w = ops.TextOps.dsirWeights(d, col("lang") === "en")
-      rt(s, ops.TextOps.dsirScore(d, w)
-        .select(col("doc_id"), col("lang"), col("n_features"), col("score_num"),
-          round(col("score"), 6).as("avg_logratio"))
-        .orderBy("doc_id"))
-    }),
-
-    // deterministic global training-order shuffle into shards: md5-keyed
-    // shard + in-shard rank — reproducible across engines/cluster sizes
-    // (one hash exchange + per-shard local sort; no global window)
-    "t19_shuffle_shards" -> ((s, dir) => rt(s,
-      ops.Pipeline.shuffleShards(t(s, dir, "documents"), numShards = 8)
-        .select("doc_id", "shard", "pos")
-        .orderBy("shard", "pos"))),
-
-    // absolute token-budget mixture: md5-ordered prefix per language until
-    // each budget fills (the "build an N-token training mix" primitive)
-    "t16_token_budget" -> ((s, dir) => rt(s,
-      ops.Pipeline.tokenBudgetSample(t(s, dir, "documents"),
-        budgets = Map("en" -> 3000L, "de" -> 2000L, "fr" -> 1500L, "zh" -> 1000L))
-        .select("doc_id", "lang", "n_tokens", "cum_tokens")
-        .orderBy("doc_id"))),
-
-    // IVF-PQ: the composed billion-scale index — coarse cells cut touched
-    // vectors, residual PQ codes cut bytes per touched vector (16x); the
-    // saved layout partitions by cell so the probe partition-prunes, ADC
-    // shortlists via the codegen'd kernels, exact rerank restores exact
-    // ordering → the s01 exact-kNN oracle certifies end-to-end
-    "s11_knn_ivfpq" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val idx = ops.IvfPq.build(e, nlist = 16, m = 16, k = 64,
-        trainSampleFraction = 0.5)
-      val path = scratch("ivfpq", dir)
-      ops.IvfPq.save(idx, path)
-      val loaded = ops.IvfPq.load(s, path)
-      rt(s, ops.IvfPq.searchPruned(loaded, e, e.filter(col("vec_id") < 8),
-          k = 5, nprobe = 12, shortlist = 200)
-        .orderBy("q_id", "rank"))
-    }),
-
-    // retrieval evaluation: recall@k + reciprocal rank of the int8-
-    // quantized ranking against the exact one — the ANN tuning metric as
-    // a relational op, with BOTH rankings replayable by the oracle
-    "s10_ann_metrics" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val dq = ops.Embeddings.dequantized(ops.Embeddings.quantized(e))
-        .select(col("vec_id"), col("embedding_dq").as("embedding"))
-      val truth = ops.Similarity.bruteForceKnn(e, e.filter(col("vec_id") < 8), k = 5)
-      val pred = ops.Similarity.bruteForceKnn(dq, dq.filter(col("vec_id") < 8), k = 5)
-      rt(s, ops.Similarity.retrievalMetrics(pred, truth).orderBy("q_id"))
-    }),
-
-    // nearest-centroid (Rocchio) classification: decimal-exact per-label
-    // centroids rounded to 9 decimals (both engines classify against
-    // bit-identical literals), then one narrow codegen'd argmin pass
-    "s09_centroid_classify" -> ((s, dir) => rt(s,
-      ops.Embeddings.nearestCentroidClassify(t(s, dir, "embeddings"))
-        .select("vec_id", "label", "pred", "correct")
-        .orderBy("vec_id"))),
-
-    // element-wise per-label centroid vectors, decimal-exact accumulation
-    "s04_label_centroids" -> ((s, dir) => rt(s,
-      ops.Embeddings.centroids(t(s, dir, "embeddings"))
-        .select(col("label"), col("idx"), round(col("centroid"), 9).as("centroid"))
-        .orderBy("label", "idx"))),
-
-    // symmetric int8 quantization (4x storage cut for an embedding store)
-    "s05_quantize" -> ((s, dir) => rt(s,
-      ops.Embeddings.quantized(t(s, dir, "embeddings"))
-        .select(col("vec_id"), round(col("embedding_scale"), 9).as("scale"),
-          posexplode(col("embedding_q")).as(Seq("idx0", "q")))
-        .select(col("vec_id"), (col("idx0") + 1).as("idx"), col("q"), col("scale"))
-        .orderBy("vec_id", "idx"))),
-
-    // per-document TF-IDF top-k terms (smoothed idf, deterministic ranking)
-    "t13_tfidf" -> ((s, dir) => rt(s,
-      ops.TextOps.tfidfTopTerms(t(s, dir, "documents"), k = 3)
-        .orderBy("doc_id", "rk"))),
-
-    // CCNet-style LM quality score (char-bigram perplexity proxy)
-    "t14_lm_score" -> ((s, dir) => rt(s,
-      ops.TextOps.charLmScore(t(s, dir, "documents"))
-        .orderBy("doc_id"))),
-
-    // packing-efficiency report: per-bin fill and padding waste (the
-    // batch-efficiency audit over t09's packed stream)
-    "t15_pack_efficiency" -> ((s, dir) => rt(s, {
-      val d = t(s, dir, "documents").select(col("doc_id"), col("lang"),
-        ops.TextOps.tokenCount(col("text")).as("n_tokens"))
-      ops.Pipeline.packSequences(d, "n_tokens", "doc_id",
-        budget = 1024, byCols = Seq("lang"))
-        .groupBy("lang", "bin_id")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_tokens")).cast("long").as("n_tokens"))
-        .withColumn("fill_frac",
-          round(least(col("n_tokens"), lit(1024L)).cast("double") / 1024, 6))
-        .orderBy("lang", "bin_id")
-    })),
-
-    // CCNet-style perplexity bucketing: corpus char-LM fit splits every
-    // language into head/middle/tail thirds (ntile — integer-exact,
-    // engine-replayable); keep-head+middle is the standard pre-training
-    // curation gate. Scoring is t14's shuffle-free literal-model fold.
-    "t27_ppl_buckets" -> ((s, dir) => rt(s,
-      ops.TextOps.perplexityBuckets(t(s, dir, "documents"))
-        .orderBy("doc_id"))),
-
-    // corpus version diff by content digest (dataset-versioning audit)
-    "p03_corpus_diff" -> ((s, dir) => rt(s, {
-      val docs = t(s, dir, "documents")
-      ops.Dedup.corpusDiff(
-        docs.filter(col("doc_id") % 3 =!= 0),
-        docs.filter(col("doc_id") % 3 =!= 1))
-        .orderBy("digest")
-    })),
-
-    // heavy-hitter report: the pre-join skew diagnostic feeding saltedJoin
-    "p02_skew_report" -> ((s, dir) => rt(s,
-      ops.Pipeline.skewReport(t(s, dir, "lineitem"), "l_suppkey", k = 20))),
-
-    // co-located bucketed join: both sides pre-bucketed+sorted on the join
-    // key — the repeated-join layout for 100 TB fact tables (one shuffle
-    // paid at write, every later join on the key exchange-free on BOTH
-    // sides; PlanQualitySpec asserts the zero-exchange SMJ). Result is
-    // DuckDB-certified equal to the plain join.
-    "p04_bucketed_join" -> ((s, dir) => {
-      val base = scratch("buck", dir)
-      val ob = "orders_bucketed"; val cb = "customer_bucketed"
-      sources.Sources.writeBucketed(
-        t(s, dir, "orders").select("o_orderkey", "o_custkey", "o_totalprice"),
-        ob, Seq("o_custkey"), buckets = 8, path = Some(s"$base/$ob"))
-      sources.Sources.writeBucketed(
-        t(s, dir, "customer").select("c_custkey", "c_nationkey"),
-        cb, Seq("c_custkey"), buckets = 8, path = Some(s"$base/$cb"))
-      rt(s, s.table(ob).hint("merge")
-        .join(s.table(cb), col("o_custkey") === col("c_custkey"))
-        .groupBy("c_nationkey")
-        .agg(count(lit(1)).as("n_orders"),
-          dsum(col("o_totalprice")).as("total_price"))
-        .orderBy("c_nationkey"))
-    }),
-
-    // mergeable-sketch cardinality: per-(lang, ingestion-shard) HLL
-    // sketches merged to per-lang distinct-text estimates — the
-    // incremental-statistics pattern at 100 TB (per-shard sketches computed
-    // once when a shard lands; a corpus-wide refresh merges KB-sized sketch
-    // rows instead of re-scanning corpus bytes). exact_distinct is
-    // DuckDB-verified; est_ok certifies the estimate within 5% (HLL lgK=12
-    // ≈ 1.6% se, deterministic given the data). Sketch aggregates and the
-    // estimate scalar ride the wire by name.
-    "p05_sketch_cardinality" -> ((s, dir) => rt(s, {
-      val d = t(s, dir, "documents")
-      val est = ops.Sketches.distinctEstimate(d, "text",
-        shardCol = col("doc_id") % 16, groupCols = Seq("lang"))
-      val exact = d.groupBy("lang")
-        .agg(countDistinct(col("text")).as("exact_distinct"))
-      exact.join(est, "lang")
-        .select(col("lang"), col("exact_distinct"),
-          (abs(col("distinct_est") - col("exact_distinct")) <=
-            col("exact_distinct") * 0.05).as("est_ok"))
-        .orderBy("lang")
-    })),
-
-    // small-file compaction: the documents table rewritten into evenly-sized
-    // files (repartition, not coalesce — even output beats narrow-but-skewed)
-    // and read back; the oracle certifies the rewrite is row-lossless.
-    "p08_compaction" -> ((s, dir) => {
-      val out = scratch("compact", dir)
-      sources.Sources.compact(s, s"$dir/documents.parquet", out,
-        targetBytes = 4L * 1024 * 1024)
-      rt(s, s.read.parquet(out).select("doc_id", "lang", "n_chars")
-        .orderBy("doc_id"))
-    }),
-
-    // range-partitioned layout: documents laid out directory-per-length-band
-    // with in-file sort; the band filter prunes partitions at plan time
-    // (PlanQualitySpec asserts PartitionFilters + pruned file count) and the
-    // oracle certifies the surviving rows exactly.
-    "p09_range_layout" -> ((s, dir) => {
-      val out = scratch("layout", dir)
-      sources.Sources.writeRangePartitioned(
-        t(s, dir, "documents").withColumn("len_band",
-          floor(col("n_chars") / 100).cast("int")),
-        bucketCol = "len_band", path = out, sortCols = Seq("n_chars"))
-      rt(s, s.read.parquet(out).filter(col("len_band") === 2)
-        .select("doc_id", "lang", "n_chars").orderBy("doc_id"))
-    }),
-
-    // Z-ordered layout: rows clustered by the Morton interleave of per-column
-    // quantile ranks, so file/row-group min-max stats skip on BOTH box
-    // dimensions — p09's single-column answer generalized to multi-column
-    // selective queries. The oracle certifies the rewrite is row-lossless
-    // under a 2-D box filter; SourcesSpec asserts the actual file-level
-    // skipping beats a single-column sort on the second dimension.
-    "p10_zorder_layout" -> ((s, dir) => {
-      val out = scratch("zorder", dir)
-      sources.Sources.writeZOrdered(t(s, dir, "documents"),
-        Seq("doc_id", "n_chars"), out, numFiles = 16)
-      rt(s, s.read.parquet(out)
-        .filter(col("doc_id").between(100, 300) && col("n_chars").between(150, 350))
-        .select("doc_id", "lang", "n_chars").orderBy("doc_id"))
-    }),
-
-    // skipping-effectiveness report: per-band min/max envelope of the
-    // banded layout plus what a stats-pruning reader would scan for a
-    // range predicate — the quantitative "is this layout worth it" check
-    // before a 100 TB rewrite. One map-side-combining aggregate.
-    "p19_skipping_report" -> ((s, dir) => rt(s,
-      sources.Sources.skippingReport(
-        t(s, dir, "documents").withColumn("len_band",
-          floor(col("n_chars") / 100).cast("int")),
-        bandCol = "len_band", valueCol = "n_chars", lo = 250, hi = 449)
-        .orderBy("band"))),
-
-    // CMS inner-product join-size estimation (Cormode-Muthukrishnan §4.3):
-    // the size of lineitem ⨝ orders and the l_suppkey self-join size (the
-    // F₂ skew moment) estimated from KB-sized frequency sketches WITHOUT
-    // executing the joins — what prices a shuffle join before running it.
-    // Exact values are DuckDB-checked; the never-undercount + ε·N_a·N_b
-    // overcount bound is certified in-query (deterministic given the seed).
-    // schema-evolved corpus read: two generations written with drifted
-    // schemas (gen1 lacks `source` and stores n_chars as INT; gen2 is
-    // full-width) read back as ONE canonical frame — null back-fill +
-    // lossless widening casts, where bare mergeSchema would fail
-    "p17_schema_evolution" -> ((s, dir) => {
-      import org.apache.spark.sql.types._
-      val base = scratch("evolve", dir)
-      val docs = t(s, dir, "documents")
-      docs.filter(col("doc_id") % 2 === 0)
-        .select(col("doc_id"), col("text"), col("lang"),
-          col("n_chars").cast("int").as("n_chars"))
-        .write.mode("overwrite").parquet(s"$base/gen1")
-      docs.filter(col("doc_id") % 2 === 1)
-        .write.mode("overwrite").parquet(s"$base/gen2")
-      val canonical = StructType(Seq(
-        StructField("doc_id", LongType), StructField("text", StringType),
-        StructField("lang", StringType), StructField("source", StringType),
-        StructField("n_chars", LongType)))
-      rt(s, sources.Sources.readEvolved(s, Seq(s"$base/gen1", s"$base/gen2"), canonical)
-        .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
-          md5(col("text")).as("text_md5"))
-        .orderBy("doc_id"))
-    }),
-
-    // copy-on-write upsert: a daily batch (replacements + inserts) merges
-    // into a range-partitioned corpus layout rewriting ONLY the touched
-    // band directories — untouched directories are never read or written
-    // (SourcesSpec asserts byte-identical files). The oracle recomputes
-    // the post-merge corpus from scratch in DuckDB.
-    // MERGE INTO (round 12): one change batch with inserts, updates, AND
-    // deletes applied in a single partition-swap pass over the CoW layout
-    // — p14's upsert extended with the delete path (the full Delta/Iceberg
-    // MERGE contract on plain parquet). Only affected bands are read
-    // (literal PartitionFilters) and rewritten; a key carrying both U and
-    // D resolves deterministically (anti-join removes once, the non-delete
-    // row re-inserts) and the oracle replays that rule.
-    "p21_merge_into" -> ((s, dir) => {
-      val out = scratch("merge", dir)
-      val docs = t(s, dir, "documents")
-        .withColumn("len_band", floor(col("n_chars") / 100).cast("int"))
-      sources.Sources.writeRangePartitioned(docs, "len_band", out,
-        sortCols = Seq("doc_id"))
-      val upd = docs.filter(col("doc_id") % 13 === 3)
-        .withColumn("text", upper(col("text"))).withColumn("op", lit("U"))
-      val ins = docs.filter(col("doc_id") % 101 === 7)
-        .withColumn("doc_id", col("doc_id") + 10000000L)
-        .withColumn("op", lit("I"))
-      val del = docs.filter(col("doc_id") % 17 === 5)
-        .withColumn("op", lit("D"))
-      sources.Sources.mergeRangePartitioned(s, out,
-        upd.unionByName(ins).unionByName(del), "len_band", Seq("doc_id"))
-      rt(s, s.read.parquet(out)
-        .select(col("doc_id"), col("lang"), col("n_chars"),
-          md5(col("text")).as("text_md5"))
-        .orderBy("doc_id"))
-    }),
-
-    "p14_cow_upsert" -> ((s, dir) => {
-      val out = scratch("upsert", dir)
-      val docs = t(s, dir, "documents")
-        .withColumn("len_band", floor(col("n_chars") / 100).cast("int"))
-      sources.Sources.writeRangePartitioned(docs, "len_band", out,
-        sortCols = Seq("doc_id"))
-      val mods = docs.filter(col("doc_id") % 13 === 3)
-        .withColumn("text", upper(col("text")))
-      val ins = docs.filter(col("doc_id") % 101 === 7)
-        .withColumn("doc_id", col("doc_id") + 10000000L)
-      sources.Sources.upsertRangePartitioned(s, out, mods.unionByName(ins),
-        "len_band", Seq("doc_id"), sortCols = Seq("doc_id"))
-      rt(s, s.read.parquet(out)
-        .select(col("doc_id"), col("lang"), col("n_chars"),
-          md5(col("text")).as("text_md5"))
-        .orderBy("doc_id"))
-    }),
-
-    // versioned snapshots + TIME TRAVEL (p22): two commits land, then v1
-    // is read back AFTER v2 exists — the read that in-place CoW cannot
-    // serve. The gate reads BOTH versions (tagged) row-for-row: a commit
-    // that leaked into an old version's files, a manifest that lists the
-    // wrong files, or a reader that "helpfully" merged versions all break
-    // the row sets. The v1 plan also proves snapshot isolation: its file
-    // list resolved at build time, so v2's commit can't move it.
-    "p22_time_travel" -> ((s, dir) => {
-      val base = scratch("tt", dir)
-      val fs = new org.apache.hadoop.fs.Path(base)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-      sources.Sources.commitVersion(docs.filter(col("doc_id") % 3 === 0), base)
-      sources.Sources.commitVersion(docs.filter(col("doc_id") % 3 <= 1), base)
-      val v1 = sources.Sources.readVersion(s, base, Some(1L))
-        .withColumn("version", lit(1L))
-      val v2 = sources.Sources.readVersion(s, base, None)
-        .withColumn("version", lit(2L))
-      rt(s, v1.unionByName(v2).orderBy("version", "doc_id"))
-    }),
-
-    // DELTA commits (p23): the full lakehouse CoW contract — version 2
-    // touches ONLY the 'en' band, so every other band's v1 files are
-    // REUSED verbatim in v2's manifest (commit cost ∝ delta, not table,
-    // and SourcesSpec asserts the file-set reuse). Both versions then read
-    // back row-for-row after v2 landed: time travel + snapshot isolation
-    // on band-partitioned plain parquet.
-    "p23_delta_commits" -> ((s, dir) => {
-      val base = scratch("delta", dir)
-      val fs = new org.apache.hadoop.fs.Path(base)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-      val init = docs.filter(col("doc_id") % 3 <= 1).withColumn("op", lit("I"))
-      sources.Sources.deltaCommit(s, base, init, "lang", Seq("lang", "doc_id"))
-      val en = docs.filter(col("lang") === "en")
-      val dels = en.filter(col("doc_id") % 6 === 0).withColumn("op", lit("D"))
-      val upds = en.filter(col("doc_id") % 3 === 1 && col("doc_id") % 5 === 0)
-        .withColumn("n_chars", -col("n_chars")).withColumn("op", lit("U"))
-      val ins = en.filter(col("doc_id") % 3 === 2).withColumn("op", lit("I"))
-      sources.Sources.deltaCommit(s, base,
-        dels.unionByName(upds).unionByName(ins), "lang", Seq("lang", "doc_id"))
-      val v1 = sources.Sources.deltaRead(s, base, Some(1L))
-        .withColumn("version", lit(1L))
-      val v2 = sources.Sources.deltaRead(s, base, None)
-        .withColumn("version", lit(2L))
-      rt(s, v1.unionByName(v2)
-        .select("doc_id", "lang", "n_chars", "version")
-        .orderBy("version", "doc_id"))
-    }),
-
-    // manifest-level version DIFF (p25, round 14): rows added ('A') and
-    // removed ('R') between two published versions, scanning ONLY the
-    // files the two manifests do not share — commits are O(delta), so
-    // diffs are too (the untouched de/fr/zh bands' carried files are
-    // never read; SourcesSpec pins that via inputFiles). Unchanged rows
-    // inside the rewritten band cancel through the EXCEPT ALL pair.
-    // zero-copy SHALLOW CLONE (p26, round 15): fork a versioned table at a
-    // pinned version by publishing ONE manifest of absolute source-file
-    // paths — no data bytes move, cloning a petabyte costs a KB write.
-    // The query proves the full contract in one result: the clone reads
-    // the pinned snapshot, DIVERGES with its own commit (source never
-    // observes it), and the source's later commit never reaches the
-    // clone — four labeled reads, every row oracle-replayed from the
-    // base predicates
-    "p26_shallow_clone" -> ((s, dir) => {
-      val src = scratch("clsrc", dir)
-      val dst = scratch("cldst", dir)
-      val fs = new org.apache.hadoop.fs.Path(src)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(src), true)
-      fs.delete(new org.apache.hadoop.fs.Path(dst), true)
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-      sources.Sources.commitVersion(docs.filter(col("doc_id") % 3 === 0), src)
-      sources.Sources.cloneVersion(s, src, dst)
-      // clone diverges: its own v2 (full snapshot, local files only)
-      sources.Sources.commitVersion(
-        docs.filter(col("doc_id") % 3 === 0 || col("doc_id") % 7 === 1), dst)
-      // source moves on independently: its v2 never reaches the clone
-      sources.Sources.commitVersion(docs.filter(col("doc_id") % 3 <= 1), src)
-      def tag(df: DataFrame, t: String) = df.withColumn("which", lit(t))
-      rt(s, tag(sources.Sources.readVersion(s, dst, Some(1L)), "clone_v1")
-        .unionByName(tag(sources.Sources.readVersion(s, dst, None), "clone_v2"))
-        .unionByName(tag(sources.Sources.readVersion(s, src, Some(1L)), "src_v1"))
-        .unionByName(tag(sources.Sources.readVersion(s, src, None), "src_v2"))
-        .orderBy("which", "doc_id"))
-    }),
-
-    "p25_version_diff" -> ((s, dir) => {
-      val base = scratch("vdiff", dir)
-      val fs = new org.apache.hadoop.fs.Path(base)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-      val init = docs.filter(col("doc_id") % 3 <= 1).withColumn("op", lit("I"))
-      sources.Sources.deltaCommit(s, base, init, "lang", Seq("lang", "doc_id"))
-      val en = docs.filter(col("lang") === "en")
-      val dels = en.filter(col("doc_id") % 6 === 0).withColumn("op", lit("D"))
-      val upds = en.filter(col("doc_id") % 3 === 1 && col("doc_id") % 5 === 0)
-        .withColumn("n_chars", -col("n_chars")).withColumn("op", lit("U"))
-      val ins = en.filter(col("doc_id") % 3 === 2).withColumn("op", lit("I"))
-      sources.Sources.deltaCommit(s, base,
-        dels.unionByName(upds).unionByName(ins), "lang", Seq("lang", "doc_id"))
-      rt(s, sources.Sources.deltaDiff(s, base, 1L, 2L)
-        .select("doc_id", "lang", "n_chars", "change")
-        .orderBy("change", "doc_id"))
-    }),
-
-    // STREAMING ingestion into the versioned table (p24): each drained
-    // micro-batch lands as one immutable delta version through
-    // Sinks.deltaSink (foreachBatch + per-batch marker dedup), so the
-    // continuously-ingested table keeps the full time-travel/snapshot
-    // contract — the same I/U/D rules as p23, arriving as a stream, must
-    // produce the same two version states row-for-row.
-    "p24_stream_delta_ingest" -> ((s, dir) => {
-      val root = scratch("sdelta", dir)
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true)
-      val src = s"$root/changes"; val tbl = s"$root/tbl"; val ck = s"$root/ck"
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-      val b1 = docs.filter(col("doc_id") % 3 <= 1).withColumn("op", lit("I"))
-      val en = docs.filter(col("lang") === "en")
-      val b2 = en.filter(col("doc_id") % 6 === 0).withColumn("op", lit("D"))
-        .unionByName(en.filter(col("doc_id") % 3 === 1 && col("doc_id") % 5 === 0)
-          .withColumn("n_chars", -col("n_chars")).withColumn("op", lit("U")))
-        .unionByName(en.filter(col("doc_id") % 3 === 2).withColumn("op", lit("I")))
-      val schema = b1.schema
-      def drain(): Unit = streaming.Sinks.deltaSink(
-        s.readStream.schema(schema).parquet(src), tbl, ck,
-        "lang", Seq("lang", "doc_id")).awaitTermination()
-      b1.coalesce(1).write.mode("append").parquet(src); drain()
-      b2.coalesce(1).write.mode("append").parquet(src); drain()
-      val v1 = sources.Sources.deltaRead(s, tbl, Some(1L))
-        .withColumn("version", lit(1L))
-      val vLast = sources.Sources.deltaRead(s, tbl, None)
-        .withColumn("version", lit(2L))
-      rt(s, v1.unionByName(vLast)
-        .select("doc_id", "lang", "n_chars", "version")
-        .orderBy("version", "doc_id"))
-    }),
-
-    // one-call corpus card: the dataset-release summary row from one full
-    // scan + a tiny top-language aggregate, every number exact
-    "p18_corpus_card" -> ((s, dir) => rt(s,
-      ops.Pipeline.corpusCard(t(s, dir, "documents")))),
-
-    // CDC log → snapshot: latest state per user from the event log, error
-    // events acting as delete markers — one window pass, WindowGroupLimit
-    // keeps per-key winners before the exchange
-    "p16_cdc_snapshot" -> ((s, dir) => {
-      val ev = t(s, dir, "events").withColumn("ts", col("ts").cast("timestamp_ntz"))
-      rt(s, ops.Pipeline.cdcSnapshot(ev, Seq("user_id"), "ts",
-          deleteWhen = col("event_type") === "error", tieCols = Seq("event_id"))
-        .select("user_id", "event_id", "event_type", "value")
-        .orderBy("user_id"))
-    }),
-
-    // corpus drift report: per-bucket KL/JS divergence terms between two
-    // corpus versions' hashed-feature distributions — 256 integer rows
-    // (scaled-long ln, the t14 convention), one tagged-union aggregate,
-    // totals as scalar subqueries, bucket domain as an inline table
-    "p15_feature_drift" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      rt(s, ops.TextOps.featureDrift(
-          d.filter(col("doc_id") % 2 === 0), d.filter(col("doc_id") % 2 === 1))
-        .orderBy("b"))
-    }),
-
-    "p13_join_size_estimate" -> ((s, dir) => rt(s, {
-      val li = t(s, dir, "lineitem"); val ord = t(s, dir, "orders")
-      val estJoin = ops.Sketches.joinSizeEstimate(li, "l_orderkey", ord, "o_orderkey")
-      val estF2 = ops.Sketches.joinSizeEstimate(li, "l_suppkey", li, "l_suppkey")
-      val exactF2 = li.groupBy("l_suppkey").agg(count(lit(1)).as("c"))
-        .agg(sum(col("c") * col("c")).as("f2"))
-      val nL = li.agg(count(lit(1)).as("n"))
-      val nO = ord.agg(count(lit(1)).as("n"))
-      // eps 1e-4 → width ≥ 2/eps = 20000 cells → bound ≤ 1e-4·N_a·N_b
-      def bound(na: Column, nb: Column): Column =
-        ceil(lit(1e-4) * na.cast("double") * nb.cast("double")).cast("long")
-      li.join(ord, col("l_orderkey") === col("o_orderkey"))
-        .agg(count(lit(1)).as("exact_join"))
-        .select(col("exact_join"), exactF2.scalar().as("exact_f2"),
-          (estJoin.scalar() >= col("exact_join") &&
-            estJoin.scalar() <= col("exact_join") +
-              bound(nL.scalar(), nO.scalar())).as("join_ok"),
-          (estF2.scalar() >= exactF2.scalar() &&
-            estF2.scalar() <= exactF2.scalar() +
-              bound(nL.scalar(), nL.scalar())).as("f2_ok"))
-    })),
-
-    // theta-sketch corpus overlap: per-shard theta sketches of two corpus
-    // versions merge mergeably (KB-sized rows), then union/intersection/
-    // difference cardinalities evaluate BETWEEN the merged sketches — the
-    // "how much does crawl N+1 overlap crawl N" question without a join.
-    // Exact counts are DuckDB-checked; each estimate is certified in-query
-    // within 5% (theta is in EXACT mode below 16,384 distinct keys, so at
-    // driver SF the estimates equal the exact counts outright).
-    "p12_theta_overlap" -> ((s, dir) => rt(s, {
-      import graft.functions.ThetaFunctions._
-      val d = t(s, dir, "documents")
-      val verA = d.filter(col("doc_id") % 3 =!= 0)
-      val verB = d.filter(col("doc_id") % 2 === 0)
-      val skA = ops.Sketches.thetaMerge(
-        ops.Sketches.thetaShards(verA, "doc_id", col("doc_id") % 8))
-      val skB = ops.Sketches.thetaMerge(
-        ops.Sketches.thetaShards(verB, "doc_id", col("doc_id") % 8))
-      def ok(est: Column, exact: Column): Column =
-        abs(est - exact) <= greatest(lit(2.0), exact * 0.05)
-      d.agg(
-          sum(when(col("doc_id") % 3 =!= 0, 1).otherwise(0)).as("exact_a"),
-          sum(when(col("doc_id") % 2 === 0, 1).otherwise(0)).as("exact_b"),
-          sum(when(col("doc_id") % 3 =!= 0 && col("doc_id") % 2 === 0, 1)
-            .otherwise(0)).as("exact_common"))
-        .select(col("exact_a"), col("exact_b"), col("exact_common"),
-          ok(thetaEstimate(skA.scalar()), col("exact_a")).as("a_ok"),
-          ok(thetaEstimate(skB.scalar()), col("exact_b")).as("b_ok"),
-          ok(thetaIntersectEstimate(skA.scalar(), skB.scalar()),
-            col("exact_common")).as("common_ok"),
-          ok(thetaANotBEstimate(skA.scalar(), skB.scalar()),
-            col("exact_a") - col("exact_common")).as("removed_ok"))
-    })),
-
-    // runtime-filter join: a bloom over the selective dim side's keys
-    // (scalar subquery — never driver-side) prefilters lineitem BEFORE the
-    // join shuffle, so the shuffle carries only rows that can join — the
-    // semi-join reduction every 100 TB fact-dim join wants when the dim is
-    // too big to broadcast. Output provably equals the plain inner join
-    // (no false negatives; false positives die in the join itself).
-    "p11_bloom_join" -> ((s, dir) => rt(s, {
-      val li = t(s, dir, "lineitem")
-      val urgent = t(s, dir, "orders")
-        .filter(col("o_orderpriority") === "1-URGENT")
-        .select("o_orderkey", "o_orderpriority")
-      ops.Pipeline.bloomPrefilteredJoin(li, urgent, "l_orderkey", "o_orderkey")
-        .groupBy(col("l_returnflag"))
-        .agg(dsum4(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-          .as("revenue"), count(lit(1)).as("n_lines"))
-        .orderBy("l_returnflag")
-    })),
-
-    // mergeable-sketch heavy hitters: per-shard Count-Min frequency sketches
-    // merged (graft's cms_merge_agg) and probed for the exact top-20 keys —
-    // the refresh-without-rescan companion to p02's exact skew report.
-    // exact_n is DuckDB-verified; est_ok certifies the CMS guarantee
-    // exact ≤ est ≤ exact + ε·N in-query (deterministic given the seed).
-    // frequent-items sketch (round 9): DataSketches LongsSketch — the
-    // Misra-Gries member of the mergeable family; unlike p07's CMS it
-    // returns the heavy-hitter list itself (no probe universe). Per-shard
-    // sketches merge via freq_merge_agg; certification checks the
-    // deterministic contract on the exact top-20: lb ≤ exact ≤ ub and
-    // ub − lb ≤ the sketch's declared maximum error (the 64-counter map
-    // genuinely overflows on ~200 suppliers, so the bounds are non-trivial)
-    "p20_freq_items" -> ((s, dir) => rt(s, {
-      val li = t(s, dir, "lineitem")
-      val merged = ops.Sketches.freqMerge(ops.Sketches.freqShards(
-        li, "l_suppkey", col("l_orderkey") % 16, maxMapSize = 64))
-      val top = li.groupBy("l_suppkey").agg(count(lit(1)).as("exact_n"))
-        .orderBy(col("exact_n").desc, col("l_suppkey").asc).limit(20)
-      top.select(col("l_suppkey"), col("exact_n"),
-          graft.functions.FreqFunctions.freqLowerBoundLong(
-            merged.scalar(), col("l_suppkey")).as("lb"),
-          graft.functions.FreqFunctions.freqUpperBoundLong(
-            merged.scalar(), col("l_suppkey")).as("ub"),
-          graft.functions.FreqFunctions.freqMaxError(merged.scalar()).as("me"))
-        .select(col("l_suppkey"), col("exact_n"),
-          (col("lb") <= col("exact_n") && col("exact_n") <= col("ub") &&
-            col("ub") - col("lb") <= col("me")).as("est_ok"))
-        .orderBy(col("exact_n").desc, col("l_suppkey").asc)
-    })),
-
-    "p07_cms_heavy_hitters" -> ((s, dir) => rt(s, {
-      val li = t(s, dir, "lineitem")
-      val merged = ops.Sketches.cmsMerge(ops.Sketches.cmsShards(
-        li, "l_suppkey", col("l_orderkey") % 16))
-      val n = li.agg(count(lit(1)).as("n"))
-      val top = li.groupBy("l_suppkey").agg(count(lit(1)).as("exact_n"))
-        .orderBy(col("exact_n").desc, col("l_suppkey").asc).limit(20)
-      top.select(col("l_suppkey"), col("exact_n"),
-          graft.functions.CmsFunctions.cmsEstimateLong(
-            merged.scalar(), col("l_suppkey")).as("est"),
-          n.scalar().as("total"))
-        .select(col("l_suppkey"), col("exact_n"),
-          (col("est") >= col("exact_n") &&
-            col("est") <= col("exact_n") + ceil(col("total") * 1e-4)).as("est_ok"))
-        .orderBy(col("exact_n").desc, col("l_suppkey").asc)
-    })),
-
-    // mergeable-sketch quantiles: per-shard KLL sketches of the token-count
-    // distribution merged and read at p50/p95; certified by computing each
-    // estimate's EXACT rank interval in the same query. The KLL guarantee
-    // bounds the RANK of the returned item, and with duplicated values the
-    // item's rank is an INTERVAL [P(X<v), P(X≤v)] — the certification is
-    // that this interval overlaps target ± margin (k=200 ≈ 1.65% rank
-    // error; 2.5% margin), i.e. P(X<v) ≤ q+m AND P(X≤v) ≥ q−m. A strict
-    // CDF-at-v check would flag a correct sketch whenever ties at the
-    // quantile value exceed the margin. n itself is DuckDB-verified.
-    "p06_sketch_quantiles" -> ((s, dir) => rt(s, {
-      val docs = t(s, dir, "documents").select(col("doc_id"),
-        ops.TextOps.tokenCount(col("text")).as("n_tokens"))
-      val q = ops.Sketches.kllQuantiles(
-        ops.Sketches.kllShards(docs, "n_tokens", col("doc_id") % 16),
-        quantiles = Seq(0.5, 0.95))
-      def rankOk(v: Column, target: Double, m: Double): Column =
-        (avg(when(col("n_tokens") < v, 1.0).otherwise(0.0)) <= target + m) &&
-          (avg(when(col("n_tokens") <= v, 1.0).otherwise(0.0)) >= target - m)
-      docs.crossJoin(broadcast(q)).agg(
-        count(lit(1)).as("n"),
-        rankOk(col("p50"), 0.5, 0.025).as("p50_ok"),
-        rankOk(col("p95"), 0.95, 0.025).as("p95_ok"))
-    })),
-
-    // the round-4 curation stages COMPOSED as one declarative plan:
-    // exact dedup → repetition filter → mixture resample → sequence pack
-    "p01_curation_pipeline" -> ((s, dir) => rt(s, {
-      val docs = t(s, dir, "documents")
-      val kept = ops.Dedup.exactDedup(docs).select(col("keep_id").as("doc_id"))
-      val surviving = docs.join(kept, "doc_id")
-      val cleanIds = ops.TextOps.repetitionStats(surviving)
-        .filter(!col("repetitive")).select("doc_id")
-      val mixed = ops.Pipeline.mixtureSample(
-        surviving.join(cleanIds, "doc_id"), "doc_id", "lang",
-        rates = Map("en" -> 0.5, "zh" -> 1.0), default = 0.25)
-      val d = mixed.select(col("doc_id"), col("lang"),
-        ops.TextOps.tokenCount(col("text")).as("n_tokens"))
-      ops.Pipeline.packSequences(d, "n_tokens", "doc_id",
-        budget = 1024, byCols = Seq("lang"))
-        .orderBy("lang", "doc_id")
-    })),
-
-    // REAL image decode (round 8): deterministic synthetic PNGs (actual
-    // ImageIO PNG encode) decoded back through the actual ImageIO codec —
-    // width/height from IHDR, channels from the raster, mean luma from
-    // inflated IDAT pixels. Both stages cross the wire as NAMED typed
-    // stages (graft.png_encode_v1 → graft.image_decode_v1); the oracle
-    // recomputes geometry+luma from the generation rule, so a decoder that
-    // mis-parses the PNG fails certification.
-    "m01_media_features" -> ((s, dir) => rt(s,
-      ops.Multimodal.imageFeatures(s, t(s, dir, "documents"))
-        .orderBy("doc_id"))),
-
-    // REAL video decode (round 9, re-pointed from the byte-class stub):
-    // clip-level pooling over DECODED animated-GIF frames — frame count
-    // from the container's image descriptors, clip luma over real inflated
-    // LZW rasters; stages wire-named graft.gif_encode_v1 →
-    // graft.gif_frames_v1. The stub stage surface stays certified by the
-    // wire conformance specs (graft.media_features_v1 remains decodable).
-    "m05_video_clip_features" -> ((s, dir) => rt(s,
-      ops.Multimodal.videoClipFeatures(s, t(s, dir, "documents"))
-        .orderBy("doc_id"))),
-
-    // REAL multi-frame video decode (round 9): deterministic synthetic
-    // animated GIFs (actual JDK GIF ImageWriter sequence API — one LZW
-    // raster per frame) decoded back frame-by-frame through the actual
-    // multi-frame ImageReader (getNumImages walks image descriptors,
-    // read(f) inflates frame f); per-frame geometry + mean luma. The
-    // oracle replays the closed-form generation rule, so a codec that
-    // mis-parses descriptors, palettes, or LZW fails certification.
-    "m07_video_frames" -> ((s, dir) => rt(s,
-      ops.Multimodal.videoFrameFeatures(s, t(s, dir, "documents"))
-        .orderBy("doc_id", "frame_idx"))),
-
-    // scene-change detection over DECODED frames: per-clip luma-delta lag
-    // (one window pass; only per-frame scalars shuffle) — frame 0 opens a
-    // scene, later frames cut when the mean luma jumps ≥ 90; the oracle
-    // replays the closed-form pixel rule and the lag
-    "m09_scene_cuts" -> ((s, dir) => rt(s,
-      ops.Multimodal.videoSceneCuts(s, t(s, dir, "documents"))
-        .orderBy("doc_id", "frame_idx"))),
-
-    // REAL audio decode (round 8): deterministic synthetic PCM signals
-    // encoded as actual RIFF/WAVE (AudioSystem.write) and decoded back
-    // through the actual container parser — sample rate/channels from the
-    // fmt chunk, sample count + mean |amplitude| from the PCM frames; both
-    // stages wire-named (graft.wav_encode_v1 → graft.audio_decode_v1)
-    "m06_audio_features" -> ((s, dir) => rt(s,
-      ops.Multimodal.audioFeatures(s, t(s, dir, "documents"))
-        .orderBy("doc_id"))),
-
-    // REAL image resize (round 9): synth PNG → decode → stride-2 resample
-    // → re-encode as PNG → decode AGAIN; three wire-named codec stages
-    // (graft.png_encode_v1 → graft.image_resize_v1 → graft.image_decode_v1).
-    // The oracle replays the sampling rule (out(x,y) = in(2x,2y)) over the
-    // generation rule, so mis-indexed rasters or lossy re-encodes fail.
-    "m08_image_resize" -> ((s, dir) => rt(s,
-      ops.Multimodal.resizedImageFeatures(s, t(s, dir, "documents"))
-        .orderBy("doc_id"))),
-
-    // FIRST LOSSY codec (round 10): real baseline JPEG at pinned quality
-    // 0.85 (graft.jpeg_encode_v1 → graft.image_decode_v1). Bit-exact
-    // replay is impossible BY DESIGN for a lossy codec, so certification
-    // is tolerance-based: geometry/channels exact, decoded mean luma
-    // within ±2.0 of the closed-form gradient mean as an in-plan boolean
-    // (the oracle emits TRUE; decode drift flips the hash) — the oracle
-    // methodology real JPEG/MP3/H.264 corpora need at 100 TB.
-    "m10_jpeg_lossy" -> ((s, dir) => rt(s,
-      ops.Multimodal.jpegImageFeatures(s, t(s, dir, "documents"))
-        .orderBy("doc_id"))),
-
-    // SECOND lossy codec (round 10): G.711 μ-law telephony audio
-    // (graft.ulaw_encode_v1 → graft.ulaw_decode_v1, RIFF fmt tag 7 with a
-    // fact chunk). Unlike JPEG, companding is a FIXED piecewise mapping,
-    // so the oracle replays encode∘decode closed-form and certification is
-    // EXACT — together m10/m11 cover both lossy-oracle methodologies.
-    // Probe found a real JDK defect (|pcm| ≥ 32636 overflows the bias add:
-    // full-scale samples encode as SILENCE) — the encode stage loud-rejects
-    // that region; the JDK codec canaries every partition in-range.
-    "m11_ulaw_audio" -> ((s, dir) => rt(s,
-      ops.Multimodal.ulawAudioFeatures(s, t(s, dir, "documents"))
-        .orderBy("doc_id"))),
-
-    // corpus-level duplicate-AUDIO detection (round 12): m12's re-upload
-    // model through the LOSSY μ-law codec — the methodology point a
-    // lossless codec can't make: content-exact dedup survives a
-    // deterministic lossy roundtrip, because the decoded (quantized)
-    // signal is hashable even though the original PCM is not recoverable.
-    // Clips decode through the real container walk + G.711 expansion and
-    // fingerprint by FNV-1a 64 over decoded samples; the oracle groups by
-    // the closed-form content key (n_samples = 64 + c % 129 is injective
-    // for c < 128, so (n_samples, digest) ≡ content).
-    "m13_dup_audio" -> ((s, dir) => rt(s,
-      ops.Multimodal.audioDuplicateClips(s, t(s, dir, "documents"))
-        .orderBy("n_samples", "first_doc"))),
-
-    // PERCEPTUAL near-dup images across resolutions (m14): content keyed
-    // doc_id % 8, alternating doc blocks carry a REAL half-resolution
-    // re-encode — different bytes, dimensions, and raster; only the
-    // perceptual content matches, which is exactly what exact digests
-    // (m12) cannot catch. Decoded pixels pool into a 9x8 grid whose
-    // gradient signs form the 63-bit dHash; a group spanning two
-    // geometries (n_geoms = 2) is a cross-resolution catch. The oracle
-    // replays the cell rule and all 63 comparisons in SQL integer
-    // arithmetic — any decode/pooling corruption breaks the hash equality.
-    "m14_phash_neardup" -> ((s, dir) => rt(s,
-      ops.Multimodal.imageNearDupsPHash(s, t(s, dir, "documents"))
-        .orderBy("dhash"))),
-
-    // corpus-level duplicate-FRAME detection (round 12): every doc carries
-    // a real GIF whose content is keyed doc_id % 256 (the re-upload model),
-    // frames are DECODED and fingerprinted (FNV-1a 64 over the raw raster),
-    // and (geometry, digest) groups with >= 2 members are the duplicate
-    // sets — d01 exact dedup, but over decoded video frames. Payloads never
-    // shuffle; only per-frame scalars ride the one grouping exchange. The
-    // oracle replays the closed-form pixel rule: content c = doc % 256,
-    // frames are pixel-identical iff (17c + 101f) mod 256 collides at the
-    // same geometry, so any decode/hash corruption breaks the match.
-    "m12_dup_frames" -> ((s, dir) => rt(s,
-      ops.Multimodal.videoDuplicateFrames(s, t(s, dir, "documents"))
-        .orderBy("width", "height", "first_doc", "first_frame"))),
-
-    // GPU-inference batch packing: media rows pack into per-modality
-    // batches under a byte budget (t09's greedy streaming pack over binary
-    // payload sizes) — the batch-boundary layer between a media corpus and
-    // accelerator inference; one window pass per modality, payloads never
-    // shuffle (only their sizes do)
-    "m04_media_batches" -> ((s, dir) => rt(s, {
-      val media = ops.Multimodal.asMediaTable(t(s, dir, "documents"))
-        .withColumn("n_bytes", octet_length(col("payload")).cast("long"))
-      ops.Pipeline.packSequences(media, "n_bytes", "doc_id",
-          budget = 4096, byCols = Seq("media_type"))
-        .groupBy("media_type", "bin_id")
-        .agg(count(lit(1)).as("n_items"),
-          sum("n_bytes").cast("long").as("total_bytes"))
-        .withColumn("fill_frac",
-          round(least(col("total_bytes").cast("double"), lit(4096.0)) / 4096.0, 6))
-        .orderBy("media_type", "bin_id")
-    })),
-
-    // per-scanline stats over DECODED pixels (round 8): one row per image
-    // row of the real PNG decode — line byte-width from the raster band
-    // count, per-line mean luma from actual pixel values. The byte-level
-    // frame slicer remains certified through m03's frame geometry.
-    "m02_frame_stats" -> ((s, dir) => rt(s,
-      ops.Multimodal.imageScanlines(s, t(s, dir, "documents"))
-        .orderBy("doc_id", "y"))),
-
-    // clip-level pooling over sampled frames: per-frame features (byte-
-    // class ratio over the m02 frame geometry) mean-pooled per clip with
-    // decimal-exact accumulation — the frame→clip aggregation layer of a
-    // video pipeline; frames never leave their partition before the one
-    // grouping exchange
-    "m03_clip_pooling" -> ((s, dir) => rt(s, {
-      val frames = ops.Multimodal.frameSample(
-        ops.Multimodal.asMediaTable(t(s, dir, "documents")),
-        frameLen = 256, stride = 192)
-      frames.select(col("doc_id"), col("media_type"),
-          octet_length(col("frame")).cast("long").as("fb"),
-          regexp_count(decode(col("frame"), "UTF-8"), lit("[\\x60-\\x6f]"))
-            .cast("long").as("c6"))
-        .groupBy("doc_id", "media_type")
-        .agg(count(lit(1)).as("n_frames"),
-          round(sum(col("fb").cast("double").cast(DecimalType(27, 15)))
-            .cast("double") / count(lit(1)), 6).as("avg_frame_bytes"),
-          round(sum((col("c6").cast("double") /
-              greatest(col("fb"), lit(1L)).cast("double"))
-            .cast(DecimalType(27, 15))).cast("double") / count(lit(1)), 6)
-            .as("clip_b6"))
-        .orderBy("doc_id")
-    })),
-
-    // as-of join: each click enriched with the user's most recent preceding
-    // purchase (union + running-max window: one shuffle, no join explosion)
-    "j01_asof_join" -> ((s, dir) => {
-      val ev = t(s, dir, "events").withColumn("ts", col("ts").cast("timestamp_ntz"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select("event_id", "user_id", "ts")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select("user_id", "ts", "event_id", "value")
-      rt(s, ops.AsOfJoin.asofJoin(clicks, purchases, Seq("user_id"), "ts", "ts",
-        payload = Seq("event_id", "value"), prefix = "p_")
-        .orderBy("event_id"))
-    }),
-
-    // as-of join with a staleness bound (feature-store read): enrichment
-    // older than 2 hours nulls out — consumers can never see an expired
-    // feature value; same join-free single-shuffle plan as j01
-    "j04_asof_within" -> ((s, dir) => {
-      val ev = t(s, dir, "events").withColumn("ts", col("ts").cast("timestamp_ntz"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select("event_id", "user_id", "ts")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select("user_id", "ts", "event_id", "value")
-      rt(s, ops.AsOfJoin.asofJoinWithin(clicks, purchases, Seq("user_id"),
-          "ts", "ts", payload = Seq("event_id", "value"),
-          maxAgeSeconds = 7200L, prefix = "p_")
-        .orderBy("event_id"))
-    }),
-
-    // binned range join: clicks within the hour before each error event
-    // (equi-join on (user, time-bin) + residual filter — never nested-loop)
-    "j02_range_join" -> ((s, dir) => {
-      val hourUs = 3600L * 1000000L
-      val ev = t(s, dir, "events").withColumn("ts", col("ts").cast("timestamp_ntz"))
-      val us = (c: Column) => unix_micros(c.cast("timestamp_ltz"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("event_id").as("c_id"),
-          us(col("ts")).as("pt"))
-      val errors = ev.filter(col("event_type") === "error")
-        .select(col("user_id"), col("event_id").as("e_id"),
-          col("ts").as("e_ts"), (us(col("ts")) - hourUs).as("lo"),
-          us(col("ts")).as("hi"))
-      val matched = ops.RangeJoin.pointInInterval(
-          clicks, errors, Seq("user_id"), "pt", "lo", "hi", binWidth = hourUs)
-        .groupBy("e_id", "user_id", "e_ts")
-        .agg(count(lit(1)).as("n_clicks_1h"))
-      rt(s, errors.select("e_id", "user_id", "e_ts")
-        .join(matched, Seq("e_id", "user_id", "e_ts"), "left")
-        .select(col("e_id"), col("user_id"), col("e_ts"),
-          coalesce(col("n_clicks_1h"), lit(0L)).as("n_clicks_1h"))
-        .orderBy("e_id"))
-    }),
-
-    // argmin/argmax + boolean/bit folds + regression aggregates through the
-    // wire (the composite key makes max_by/min_by tie-free → deterministic;
-    // skewness/kurtosis stay out of the ORACLE — DuckDB uses bias-corrected
-    // sample estimators where Spark uses population moments)
-    "q46_agg_extras" -> ((s, dir) => rt(s,
-      t(s, dir, "documents")
-        .groupBy("lang")
-        .agg(
-          expr("max_by(doc_id, n_chars * 10000000 + doc_id)").as("longest_doc"),
-          expr("min_by(doc_id, n_chars * 10000000 + doc_id)").as("shortest_doc"),
-          expr("bool_and(n_chars > 10)").as("all_nontrivial"),
-          expr("bool_or(n_chars > 900)").as("any_huge"),
-          expr("count_if(n_chars > 300)").as("n_long"),
-          expr("bit_xor(doc_id)").as("xor_ids"),
-          round(expr("regr_slope(n_chars, doc_id)"), 6).as("slope"))
-        .orderBy("lang"))),
-
-    // q46-family: percentile_disc with BOTH within-group directions on the
-    // wire (ASC is the plain name; DESC rides as percentile_disc_desc —
-    // the first_ignore_nulls convention; a silent ASC flip would corrupt a
-    // consumer, so the direction is explicit). Oracle replays both via the
-    // cume_dist definition, so the wire decode is value-certified.
-    "q56_percentile_disc" -> ((s, dir) => rt(s,
-      t(s, dir, "documents")
-        .groupBy("lang")
-        .agg(
-          expr("percentile_disc(0.25) WITHIN GROUP (ORDER BY n_chars)")
-            .as("p25_asc"),
-          expr("percentile_disc(0.25) WITHIN GROUP (ORDER BY n_chars DESC)")
-            .as("p25_desc"),
-          expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY n_chars)")
-            .as("p50_asc"),
-          expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY n_chars DESC)")
-            .as("p50_desc"),
-          expr("percentile_disc(0.9) WITHIN GROUP (ORDER BY n_chars DESC)")
-            .as("p90_desc"))
-        .orderBy("lang"))),
-
-    // time-INTERVAL RANGE window frame (trailing 1-hour per-user totals —
-    // THE sliding-metric shape): the bound has no i64 substrait form, so
-    // the producer re-keys the spec on unix_micros(ts) (monotone bijection;
-    // identical partitions/order/range sets) and ships microsecond offsets
-    "q45_time_range_window" -> ((s, dir) => rt(s,
-      t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("ts"),
-          expr("""count(*) OVER (PARTITION BY user_id ORDER BY ts
-                 |  RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)"""
-            .stripMargin).as("n_1h"),
-          expr("""sum(cast(round(value * 100) AS BIGINT)) OVER (
-                 |  PARTITION BY user_id ORDER BY ts
-                 |  RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)"""
-            .stripMargin).as("cents_1h"))
-        .orderBy("user_id", "ts", "event_id"))),
-
-    // semi-structured JSON payloads: extract + aggregate over the events
-    // props column — get_json_object rides the wire as a named scalar fn
-    "q43_json_ops" -> ((s, dir) => rt(s,
-      t(s, dir, "events")
-        .withColumn("k", get_json_object(col("props"), "$.k").cast("long"))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"), sum(col("k")).as("sum_k"),
-          min(col("k")).as("min_k"), max(col("k")).as("max_k"))
-        .orderBy("event_type"))),
-
-    // interval-overlap join: purchase attention windows × error windows per
-    // user. Both sides replicate to time bins; the ownership-bin filter
-    // (bin of the intersection's left edge) emits each overlapping pair
-    // exactly once, so the result streams out of one equi-join shuffle
-    // with no dedup pass — never nested-loop.
-    "j03_interval_join" -> ((s, dir) => {
-      val us = (c: Column) => unix_micros(c.cast("timestamp_ltz"))
-      val ev = t(s, dir, "events").withColumn("ts", col("ts").cast("timestamp_ntz"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id").as("p_id"),
-          (us(col("ts")) - 1800000000L).as("p_lo"), us(col("ts")).as("p_hi"))
-      val errors = ev.filter(col("event_type") === "error")
-        .select(col("user_id"), col("event_id").as("e_id"),
-          (us(col("ts")) - 2700000000L).as("e_lo"), us(col("ts")).as("e_hi"))
-      rt(s, ops.RangeJoin.intervalOverlapJoin(purchases, errors, Seq("user_id"),
-          "p_lo", "p_hi", "e_lo", "e_hi", binWidth = 1800000000L)
-        .select("user_id", "p_id", "e_id")
-        .orderBy("p_id", "e_id"))
-    }),
-
-    // event-stream analytics, batch form (the same transformations run under
-    // Structured Streaming — graft.streaming.EventStream + its specs). Both
-    // round-trip through substrait: window functions (lag + running sum) and
-    // named scalar fns (date_trunc) are wire-representable.
-    "e01_sessions" -> ((s, dir) => rt(s,
-      streaming.EventStream.sessionizeBatch(
-        t(s, dir, "events").withColumn("ts", col("ts").cast("timestamp_ntz")),
-        gapMinutes = 120)
-        .orderBy("user_id", "session_start"))),
-    // native session_window sessionization (built-in-first twin of e01's
-    // custom-state path): input rides the wire, the session aggregate runs
-    // on the consumed frame (session merging hangs off attribute metadata
-    // the wire can't carry — see EventStream.sessionWindowAgg)
-    // the session AGGREGATE itself crosses the wire (ExtSessionWindow +
-    // plain AggregateRel + struct-field result projection), not just its
-    // input — a foreign consumer receives the full sessionization plan
-    "e08_session_window" -> ((s, dir) => rt(s,
-      streaming.EventStream.sessionWindowAgg(
-        t(s, dir, "events")
-          .withColumn("ts", col("ts").cast("timestamp_ntz"))
-          .select("event_id", "ts", "user_id", "value"))
-        .orderBy("user_id", "session_start"))),
-
-    "e02_windowed_counts" -> ((s, dir) => rt(s,
-      t(s, dir, "events")
-        .withColumn("ts", col("ts").cast("timestamp_ntz"))
-        .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"), dsum4(col("value")).as("total_value"))
-        .orderBy("hour", "event_type"))),
-
-    // hourly resample + forward-fill: each user's sparse event stream
-    // densified over its own hour range (per-key sequence generator, no
-    // driver calendar), gaps marked, value forward-filled by an IGNORE
-    // NULLS running last — the series shape time-series models assume
-    "e06_resample_ff" -> ((s, dir) => rt(s,
-      streaming.EventStream.resampleHourlyFF(
-          t(s, dir, "events").withColumn("ts", col("ts").cast("timestamp_ntz")))
-        .orderBy("user_id", "h"))),
-
-    // behavior-sequence training windows: per-user event-type stream
-    // sliced into overlapping len-8/stride-4 windows — the sequence-model
-    // training-example builder, one groupBy shuffle + streamed generator
-    "e05_behavior_sequences" -> ((s, dir) => rt(s,
-      streaming.EventStream.behaviorSequences(
-          t(s, dir, "events").withColumn("ts", col("ts").cast("timestamp_ntz")))
-        .orderBy("user_id", "win_idx"))),
-
-    // streaming exact dedup, batch twin: at-least-once redelivery (every
-    // event arrives twice) restored to exactly-once. idCols = the full
-    // event identity, so the Deduplicate rides the wire as the
-    // groupBy-all AggregateRel; the watermark node encodes transparently.
-    "e03_stream_dedup" -> ((s, dir) => rt(s, {
-      val ev = t(s, dir, "events")
-        .withColumn("ts", col("ts").cast("timestamp_ntz"))
-        .select("event_id", "ts", "user_id", "event_type", "value")
-      streaming.EventStream.streamingDedup(ev.unionAll(ev),
-        Seq("event_id", "user_id", "event_type", "value"))
-        .orderBy("event_id")
-    })),
-
-    // stream-static dimension enrichment: events left-join the customer
-    // dim (unmatched → 'unknown'), totals per (segment, type) accumulate
-    // as scaled longs — order-independent, so streaming == batch == oracle
-    // (EventStreamSpec drives the same op through readStream)
-    "e07_stream_enrich" -> ((s, dir) => rt(s, {
-      val dim = t(s, dir, "customer")
-        .select(col("c_custkey").as("user_id"),
-          col("c_mktsegment").as("segment"))
-      streaming.EventStream.enrichedTypeTotals(t(s, dir, "events"), dim)
-        .orderBy("segment", "event_type")
-    })),
-
-    // within-watermark dedup, batch twin (round 9): the at-least-once →
-    // exactly-once shape tolerant of replays with jittered timestamps —
-    // state keys on the id ONLY (EventStreamSpec proves the streaming path
-    // drops +5-minute-skewed duplicates that ts-keyed dedup keeps); Spark
-    // forbids the within-watermark form on batch frames, so the twin
-    // dispatches to plain dropDuplicates(ids), riding the wire through the
-    // Deduplicate encoding
-    "e12_dedup_within_watermark" -> ((s, dir) => rt(s, {
-      val ev = t(s, dir, "events")
-      val doubled = ev.unionByName(
-        ev.withColumn("ts", col("ts") + expr("INTERVAL 5 MINUTES")))
-      streaming.EventStream.streamingDedupWithinWatermark(doubled, Seq("event_id"))
-        .select("event_id").orderBy("event_id")
-    })),
-
-    // SLIDING windowed counts (batch twin): 2-hour windows sliding hourly —
-    // each event lands in 2 windows via Catalyst's Expand rewrite, which
-    // rides the wire as a union-of-projects SetRel; the oracle replays the
-    // two window starts per event with unnest
-    "e14_sliding_counts" -> ((s, dir) => rt(s,
-      streaming.EventStream.slidingTypeCounts(t(s, dir, "events"))
-        .orderBy("window_start", "event_type"))),
-
-    // streaming windowed heavy-hitters (batch twin): one Misra–Gries
-    // sketch per hour window (bounded state: ≤64 counters per window
-    // regardless of user cardinality), certified like p20 — the top-5
-    // exact users per window must land inside the sketch's [lb, ub] with
-    // ub−lb ≤ maxError (the oracle pins est_ok ≡ true; sketch bytes are
-    // merge-order-dependent, bounds are the contract). EventStreamSpec
-    // drives the same sketch through readStream and re-certifies.
-    "e13_stream_heavy_hitters" -> ((s, dir) => rt(s, {
-      val ev = t(s, dir, "events")
-      val sk = streaming.EventStream.windowedHeavyHitters(ev)
-      val exact = ev.groupBy(window(col("ts"), "1 hour"), col("user_id"))
-        .agg(count(lit(1)).as("exact_n"))
-        .select(col("window.start").as("window_start"), col("user_id"),
-          col("exact_n"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("window_start")
-        .orderBy(col("exact_n").desc, col("user_id"))
-      val top = exact.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 5).drop("rn")
-      val F = graft.functions.FreqFunctions
-      val item = col("user_id").cast("long")
-      top.join(sk, "window_start")
-        .select(col("window_start"), col("user_id"), col("exact_n"),
-          (F.freqLowerBoundLong(col("sketch"), item) <= col("exact_n") &&
-            col("exact_n") <= F.freqUpperBoundLong(col("sketch"), item) &&
-            F.freqUpperBoundLong(col("sketch"), item) -
-              F.freqLowerBoundLong(col("sketch"), item) <=
-              F.freqMaxError(col("sketch"))).as("est_ok"))
-        .orderBy("window_start", "user_id")
-    })),
-
-    // ordered-funnel conversion (batch twin of the horizon-bounded
-    // streaming funnel, EventStream.funnelStream): the earliest strictly-
-    // increasing view→click→purchase chain per user plus the stage
-    // reached. Every step's min is a window aggregate over the SAME
-    // user partitioning and the final collapse groups by the same key —
-    // ONE exchange total regardless of step count.
-    "e17_funnel" -> ((s, dir) => rt(s,
-      streaming.EventStream.funnelBatch(t(s, dir, "events"))
-        .select("user_id", "t_view", "t_click", "t_purchase", "stage")
-        .orderBy("user_id"))),
-
-    // DATA-DEPENDENT session gap (round 9): session_window(ts, gapCol) —
-    // clicks close after 4h, high-value events after 12h, the rest after
-    // 2h. The per-row gap rides the wire as a string-typed expression in
-    // the ExtSessionWindow detail (Spark's own gap contract); the oracle
-    // replays interval-overlap merging as gaps-and-islands with a running
-    // max of window ends.
-    "e11_dynamic_gap_sessions" -> ((s, dir) => rt(s, {
-      val ev = t(s, dir, "events")
-      ev.groupBy(col("user_id"),
-          session_window(col("ts"), expr(
-            """CASE WHEN event_type = 'click' THEN '4 hours'
-              |WHEN value >= 100 THEN '12 hours'
-              |ELSE '2 hours' END""".stripMargin)).as("sw"))
-        .agg(count(lit(1)).as("n_events"),
-          round(sum(col("value").cast(DecimalType(18, 4))).cast("double"), 6)
-            .as("total_value"))
-        .select(col("user_id"), col("sw.start").as("session_start"),
-          col("n_events"), col("total_value"))
-        .orderBy("user_id", "session_start")
-    })),
-
-    // bounded-state LEFT OUTER interval join (round 9): "errors with no
-    // click within the preceding hour" — the streaming twin emits the null
-    // rows on watermark expiry (EventStreamSpec drives it with a sentinel
-    // advance); this batch twin rides the wire as a left JoinRel whose
-    // condition carries the equality AND both time bounds
-    // streaming AS-OF join (round 12): each error enriched with the LATEST
-    // click in the hour before it — the interval join chained into a
-    // latest-per-left event-time aggregate (two stateful operators in one
-    // append-mode query; the streaming==batch spec drives the stream path,
-    // this batch twin certifies values on the wire). max(struct(ts, id))
-    // makes equal-ts ties deterministic; the oracle replays max-ts-then-
-    // max-id explicitly rather than DuckDB's tie-unspecified ASOF JOIN.
-    "e15_stream_asof_join" -> ((s, dir) => rt(s, {
-      val ev = t(s, dir, "events")
-      val e = ev.filter(col("event_type") === "error")
-        .select(col("user_id").as("e_user"), col("event_id").as("e_id"),
-          col("ts").as("e_ts"))
-      val c = ev.filter(col("event_type") === "click")
-        .select(col("user_id").as("c_user"), col("event_id").as("c_id"),
-          col("ts").as("c_ts"))
-      streaming.EventStream.asofJoinWithin(e, c, "e_user", "c_user",
-          "e_ts", "c_ts", horizonSeconds = 3600, payload = Seq("c_id"))
-        .select(col("e_id"), col("r_c_id")).orderBy("e_id")
-    })),
-
-    // LEFT OUTER streaming as-of (round 12): e15 with unmatched errors
-    // kept as null-enriched rows — the production enrichment shape (every
-    // event keeps its row; staleness shows as null). The null-row flush is
-    // the watermark-expiry mechanism e10 certifies; the latest-agg max
-    // ignores the null match struct, so unmatched groups emit nulls.
-    "e16_stream_asof_outer" -> ((s, dir) => rt(s, {
-      val ev = t(s, dir, "events")
-      val e = ev.filter(col("event_type") === "error")
-        .select(col("user_id").as("e_user"), col("event_id").as("e_id"),
-          col("ts").as("e_ts"))
-      val c = ev.filter(col("event_type") === "click")
-        .select(col("user_id").as("c_user"), col("event_id").as("c_id"),
-          col("ts").as("c_ts"))
-      streaming.EventStream.asofJoinWithinOuter(e, c, "e_user", "c_user",
-          "e_ts", "c_ts", horizonSeconds = 3600, payload = Seq("c_id"))
-        .select(col("e_id"), col("r_c_id")).orderBy("e_id")
-    })),
-
-    "e10_outer_interval_join" -> ((s, dir) => rt(s, {
-      val ev = t(s, dir, "events")
-      val e = ev.filter(col("event_type") === "error")
-        .select(col("user_id").as("e_user"), col("event_id").as("e_id"),
-          col("ts").as("e_ts"))
-      val c = ev.filter(col("event_type") === "click")
-        .select(col("user_id").as("c_user"), col("event_id").as("c_id"),
-          col("ts").as("c_ts"))
-      streaming.EventStream.intervalJoinOuter(e, c, "e_user", "c_user",
-          "e_ts", "c_ts", horizonSeconds = 3600)
-        .select("e_id", "c_id").orderBy("e_id", "c_id")
-    })),
-
-    // per-doc contamination fraction vs the pseudo eval set — d09's any-hit
-    // rule generalized to the thresholdable report (zero-hit docs at 0.0)
-    "t28_contamination_score" -> ((s, dir) => rt(s, {
-      val d = t(s, dir, "documents")
-      ops.TextOps.contaminationScore(
-        d.filter(col("doc_id") % 7 =!= 0), d.filter(col("doc_id") % 7 === 0),
-        n = 5)
-        .orderBy("doc_id")
-    })),
-  )
-
-  private def parityQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // S1/S2: scan + projection mask (pruned columns reach the parquet reader)
-    "q01_scan_project" -> ((s, dir) => rt(s,
-      t(s, dir, "lineitem").select("l_orderkey", "l_extendedprice", "l_discount"))),
-
-    // F1/F2 + E3 binary predicates + mod
-    "q02_filter_ops" -> ((s, dir) => rt(s,
-      t(s, dir, "lineitem")
-        .filter(col("l_discount") > 0.05 && col("l_quantity") < 30.0 &&
-          col("l_returnflag") =!= "N" && col("l_orderkey") % 7 =!= 0)
-        .select("l_orderkey", "l_linenumber", "l_quantity", "l_discount"))),
-
-    // O1-O4: sort (desc) + limit + offset fused into one FetchRel
-    "q03_sort_limit_offset" -> ((s, dir) => rt(s,
-      t(s, dir, "orders")
-        .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-        .offset(5).limit(10)
-        .select("o_orderkey", "o_totalprice"))),
-
-    // A1-A3: TPC-H Q1-style pricing summary (multi-measure group-by)
-    "q04_pricing_summary" -> ((s, dir) => rt(s,
-      t(s, dir, "lineitem")
-        .filter(col("l_shipdate") <= lit(LocalDateTime.of(1998, 9, 2, 0, 0)))
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          dsum(col("l_quantity")).as("sum_qty"),
-          dsum(col("l_extendedprice")).as("sum_base_price"),
-          dsum4(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("sum_disc_price"),
-          count(lit(1)).as("count_order"))
-        .orderBy("l_returnflag", "l_linestatus"))),
-
-    // A1: DISTINCT invocation + measure FILTER
-    "q05_agg_distinct_filter" -> ((s, dir) => rt(s,
-      t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"))
-        .agg(
-          countDistinct(col("l_partkey")).as("distinct_parts"),
-          expr("count(l_orderkey) FILTER (WHERE l_quantity > 25)").as("big_cnt"),
-          sum_distinct(col("l_linenumber")).as("sum_distinct_ln"))
-        .orderBy("l_returnflag"))),
-
-    // A4: DISTINCT-as-groupBy
-    "q06_distinct" -> ((s, dir) => rt(s,
-      t(s, dir, "customer").select("c_mktsegment").distinct().orderBy("c_mktsegment"))),
-
-    // J1/J2: the six join types
-    "q07_join_inner" -> ((s, dir) => rt(s, {
-      val o = t(s, dir, "orders"); val c = t(s, dir, "customer")
-      o.join(c, o("o_custkey") === c("c_custkey"), "inner")
-        .filter(col("c_acctbal") > 1000.0)
-        .select("o_orderkey", "o_totalprice", "c_name", "c_mktsegment")
-    })),
-    "q08_join_left" -> ((s, dir) => rt(s, {
-      val c = t(s, dir, "customer"); val o = t(s, dir, "orders")
-      c.join(o, c("c_custkey") === o("o_custkey"), "left")
-        .select("c_custkey", "c_name", "o_orderkey", "o_totalprice")
-    })),
-    "q09_join_right" -> ((s, dir) => rt(s, {
-      val o = t(s, dir, "orders"); val c = t(s, dir, "customer")
-      o.join(c, o("o_custkey") === c("c_custkey"), "right")
-        .select("o_orderkey", "c_custkey", "c_name")
-    })),
-    "q10_join_full" -> ((s, dir) => rt(s, {
-      val c = t(s, dir, "customer"); val o = t(s, dir, "orders")
-      c.join(o, c("c_custkey") === o("o_custkey"), "full")
-        .select("c_custkey", "c_name", "o_orderkey")
-    })),
-    "q11_join_semi" -> ((s, dir) => rt(s, {
-      val c = t(s, dir, "customer"); val o = t(s, dir, "orders")
-      c.join(o, c("c_custkey") === o("o_custkey"), "left_semi")
-        .select("c_custkey", "c_name", "c_acctbal")
-    })),
-    "q12_join_anti" -> ((s, dir) => rt(s, {
-      val c = t(s, dir, "customer")
-      val o = t(s, dir, "orders").filter(col("o_orderstatus") === "F")
-      c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
-        .select("c_custkey", "c_name", "c_acctbal")
-    })),
-
-    // flagship: 3-way join + aggregate
-    "q13_revenue_by_segment" -> ((s, dir) => rt(s, {
-      val li = t(s, dir, "lineitem"); val o = t(s, dir, "orders")
-      val c = t(s, dir, "customer")
-      li.join(o, li("l_orderkey") === o("o_orderkey"))
-        .join(c, o("o_custkey") === c("c_custkey"))
-        .groupBy(col("c_mktsegment"))
-        .agg(
-          dsum4(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("revenue"),
-          count(lit(1)).as("n_lines"))
-        .orderBy("c_mktsegment")
-    })),
-
-    // E5 CASE + E3 arithmetic
-    "q14_case_arith" -> ((s, dir) => rt(s,
-      t(s, dir, "lineitem").select(
-        col("l_orderkey"), col("l_linenumber"),
-        when(col("l_quantity") < 10.0, "small")
-          .when(col("l_quantity") < 30.0, "mid")
-          .otherwise("big").as("qty_bucket"),
-        (col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("disc_price"),
-        (col("l_quantity") - 5.0).as("qty_minus"),
-        (col("l_quantity") / 2.0).as("qty_half")))),
-
-    // SetRel: INTERSECT / UNION-distinct / EXCEPT
-    "q15_setops" -> ((s, dir) => rt(s, {
-      val ck = t(s, dir, "customer").select(col("c_nationkey").as("k"))
-      val sk = t(s, dir, "supplier").select(col("s_nationkey").as("k"))
-      val rk = t(s, dir, "region").select(col("r_regionkey").as("k"))
-      val nk = t(s, dir, "nation").filter(col("n_nationkey") > 20)
-        .select(col("n_nationkey").as("k"))
-      ck.intersect(sk).union(rk).distinct().except(nk).orderBy("k")
-    })),
-
-    // O1: null ordering over outer-join nulls
-    "q16_sort_nulls" -> ((s, dir) => rt(s, {
-      val c = t(s, dir, "customer"); val o = t(s, dir, "orders")
-      c.join(o, c("c_custkey") === o("o_custkey"), "left")
-        .select(col("c_custkey"), col("o_totalprice"))
-        .orderBy(col("o_totalprice").asc_nulls_first, col("c_custkey").asc)
-        .limit(100)
-    })),
-
-    // HAVING = Filter above Aggregate (post-agg attribute resolution)
-    "q17_having" -> ((s, dir) => rt(s,
-      t(s, dir, "lineitem")
-        .groupBy(col("l_partkey"))
-        .agg(count(lit(1)).as("n"), dsum(col("l_quantity")).as("total_qty"))
-        .filter(col("n") > 3)
-        .orderBy("l_partkey"))),
-
-    // E8 BETWEEN desugar + LIKE
-    "q18_between_like" -> ((s, dir) => rt(s,
-      t(s, dir, "orders")
-        .filter(col("o_totalprice").between(1000.0, 5000.0) &&
-          col("o_orderpriority").like("1%"))
-        .select("o_orderkey", "o_totalprice", "o_orderpriority"))),
-
-    // timestamp literals + predicates (timestamp_ntz ≡ DuckDB naive TIMESTAMP)
-    "q19_ts_filter" -> ((s, dir) => rt(s,
-      t(s, dir, "orders")
-        .filter(col("o_orderdate") >= lit(LocalDateTime.of(1997, 1, 1, 0, 0)) &&
-          col("o_orderdate") < lit(LocalDateTime.of(1998, 1, 1, 0, 0)))
-        .select("o_orderkey", "o_orderdate", "o_totalprice"))),
-
-    // E6/E7: decimal cast + decimal literal comparison. The decimal cast and
-    // decimal literal ride the wire; the OUTPUT is cast back to double because
-    // the driver's oracle materializes DECIMAL columns as float64 (a raw
-    // decimal output hash-mismatches on representation, not value).
-    "q20_decimal_cast" -> ((s, dir) => rt(s,
-      t(s, dir, "orders")
-        .select(col("o_orderkey"),
-          col("o_totalprice").cast(DecimalType(12, 2)).as("dec_tmp"))
-        .filter(col("dec_tmp") > lit(new java.math.BigDecimal("50000.00")))
-        .select(col("o_orderkey"),
-          col("dec_tmp").cast("double").as("price_dec")))),
-
-    // E3: bitwise and shift operators
-    "q21_bitwise" -> ((s, dir) => rt(s,
-      t(s, dir, "lineitem").select(
-        col("l_orderkey"),
-        (col("l_orderkey").bitwiseAND(lit(255L))).as("b_and"),
-        (col("l_orderkey").bitwiseOR(lit(7L))).as("b_or"),
-        (col("l_orderkey").bitwiseXOR(lit(42L))).as("b_xor"),
-        shiftleft(col("l_linenumber"), 2).as("shl"),
-        shiftright(col("l_orderkey"), 3).as("shr")))),
-
-    // E3: str_concat + regex_match
-    "q22_string_ops" -> ((s, dir) => rt(s,
-      t(s, dir, "orders")
-        .filter(col("o_orderpriority").rlike("^[12]"))
-        .select(col("o_orderkey"),
-          concat(col("o_orderstatus"), lit("_"), col("o_orderpriority")).as("status_prio")))),
-
-    // remaining E3 operators: or, not_like, is_distinct_from,
-    // regex_not_match, negate, is_null (via nullif), base-form CASE
-    "q24_misc_ops" -> ((s, dir) => rt(s,
-      t(s, dir, "orders").select(
-        col("o_orderkey"),
-        (col("o_orderstatus") === "F" || col("o_totalprice") > 100000.0).as("flag_or"),
-        (!col("o_orderpriority").like("3%")).as("not_like3"),
-        (!(col("o_orderstatus") <=> col("o_orderpriority"))).as("distinct_sp"),
-        (!col("o_orderpriority").rlike("^[45]")).as("not_prio45"),
-        (-col("o_totalprice")).as("neg_price"),
-        nullif(col("o_orderstatus"), lit("F")).isNull.as("is_f"),
-        when(col("o_orderstatus") === "F", "finished")
-          .when(col("o_orderstatus") === "O", "open")
-          .otherwise("pending").as("status_name")))),
-
-    // A2 aggregate-name coverage: min/max/avg/median/stddev/var/corr/covar +
-    // order-normalized array_agg
-    "q25_agg_stats" -> ((s, dir) => rt(s,
-      t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"))
-        .agg(
-          min(col("l_extendedprice")).as("min_price"),
-          max(col("l_extendedprice")).as("max_price"),
-          (sum(col("l_quantity").cast(DecimalType(18, 2))).cast(DoubleType) /
-            count(col("l_quantity"))).as("avg_qty"),
-          median(col("l_tax")).as("med_tax"),
-          round(stddev_samp(col("l_discount")), 6).as("sd_disc"),
-          round(var_pop(col("l_discount")), 6).as("vp_disc"),
-          round(corr(col("l_quantity"), col("l_extendedprice")), 6).as("corr_qp"),
-          round(covar_samp(col("l_quantity"), col("l_discount")), 6).as("cov_qd"),
-          array_join(sort_array(collect_list(col("l_linestatus"))), "").as("statuses"))
-        .orderBy("l_returnflag"))),
-
-    // A2 approximate aggregates through the wire (sketch values are
-    // engine-specific → deterministic rows-only check, no DuckDB oracle)
-    // multiple grouping sets through the wire (AggregateRel with n groupings;
-    // beyond the reference, which allows exactly one — consumer.rs:230-235).
-    // One Expand-fed hash aggregate, not one job per set.
-    "q27_rollup" -> ((s, dir) => rt(s,
-      t(s, dir, "lineitem")
-        .rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(dsum(col("l_quantity")).as("sum_qty"), count(lit(1)).as("n"))
-        .orderBy(asc_nulls_first("l_returnflag"), asc_nulls_first("l_linestatus")))),
-    "q28_cube" -> ((s, dir) => rt(s,
-      t(s, dir, "orders")
-        .cube(col("o_orderstatus"), col("o_orderpriority"))
-        .agg(dsum(col("o_totalprice")).as("total"), count(lit(1)).as("n"))
-        .orderBy(asc_nulls_first("o_orderstatus"), asc_nulls_first("o_orderpriority")))),
-    "q29_grouping_sets" -> ((s, dir) => rt(s,
-      t(s, dir, "orders")
-        .groupingSets(
-          Seq(Seq(col("o_orderpriority")),
-            Seq(col("o_orderstatus"), col("o_orderpriority")), Seq()),
-          col("o_orderstatus"), col("o_orderpriority"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(asc_nulls_first("o_orderstatus"), asc_nulls_first("o_orderpriority")))),
-
-    // window functions through the wire: ranking + offset + ROWS-frame
-    // aggregate in one pass over a single hash-partitioned sort
-    "q31_window" -> ((s, dir) => rt(s, {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("o_custkey")
-        .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-      val wsum = w.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-      t(s, dir, "orders")
-        .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
-        .withColumn("rn", row_number().over(w))
-        .withColumn("rnk", dense_rank().over(w))
-        .withColumn("prev_price", lag("o_totalprice", 1).over(w))
-        .withColumn("run_spend",
-          sum(col("o_totalprice").cast(DecimalType(18, 2))).over(wsum)
-            .cast("double"))
-        .filter(col("rn") <= 3)
-        .orderBy("o_custkey", "rn")
-    })),
-
-    // uncorrelated IN subquery → semi JoinRel on the wire
-    "q32_in_subquery" -> ((s, dir) => {
-      t(s, dir, "orders") // ensure view registration before spark.sql
-      rt(s, s.sql(
-        """SELECT o_orderkey, o_totalprice FROM orders
-          |WHERE o_custkey IN (SELECT c_custkey FROM customer
-          |                    WHERE c_mktsegment = 'BUILDING')
-          |ORDER BY o_orderkey""".stripMargin))
-    }),
-
-    // correlated EXISTS (TPC-H Q4 shape) → decorrelated semi JoinRel
-    "q34_exists_correlated" -> ((s, dir) => {
-      t(s, dir, "orders"); t(s, dir, "lineitem")
-      rt(s, s.sql(
-        """SELECT o_orderpriority, count(*) AS order_count
-          |FROM orders
-          |WHERE EXISTS (SELECT 1 FROM lineitem
-          |              WHERE l_orderkey = o_orderkey AND l_discount > 0.05)
-          |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin))
-    }),
-
-    // correlated scalar aggregate (TPC-H Q17 shape) → grouped left join
-    // NOT IN with a NULLABLE probe side: the anti JoinRel's null-aware
-    // condition (eq OR is_null(eq)) crosses the wire; NULL probes drop
-    // (SQL three-valued logic), non-null probes anti-join
-    "q37_not_in_subquery" -> ((s, dir) => {
-      t(s, dir, "orders"); t(s, dir, "customer")
-      rt(s, s.sql(
-        """SELECT o_orderkey, o_totalprice FROM (
-          |  SELECT o_orderkey, o_totalprice,
-          |    CASE WHEN o_orderstatus = 'P' THEN NULL ELSE o_custkey END AS probe
-          |  FROM orders)
-          |WHERE probe NOT IN (SELECT c_custkey FROM customer WHERE c_acctbal < 0.0)
-          |ORDER BY o_orderkey""".stripMargin))
-    }),
-
-    // LATERAL aggregate subquery: decorrelates on the wire into the grouped
-    // left join (bare COUNT coalesces to 0 on group misses)
-    "q38_lateral" -> ((s, dir) => {
-      t(s, dir, "customer"); t(s, dir, "orders")
-      rt(s, s.sql(
-        """SELECT c.c_custkey, l.n_orders, l.max_price
-          |FROM customer c,
-          |LATERAL (SELECT count(*) AS n_orders, max(o_totalprice) AS max_price
-          |         FROM orders o WHERE o.o_custkey = c.c_custkey) l
-          |ORDER BY c.c_custkey""".stripMargin))
-    }),
-
-    // multi-reference CTE: WithCTE/CTERelationRef inline per reference on
-    // the wire (substrait has no subplan sharing)
-    "q39_cte" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-      rt(s, s.sql(
-        """WITH t AS (SELECT l_partkey,
-          |             CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS q
-          |           FROM lineitem GROUP BY l_partkey)
-          |SELECT t1.l_partkey, t1.q
-          |FROM t t1 JOIN t t2 ON t1.l_partkey = t2.l_partkey + 1
-          |WHERE t1.q > t2.q ORDER BY t1.l_partkey""".stripMargin))
-    }),
-
-    // PIVOT: pivotfirst rewritten on the wire into per-value first measures
-    "q40_pivot" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-      rt(s, s.sql(
-        """SELECT * FROM (SELECT l_returnflag, l_linestatus,
-          |                      CAST(l_quantity AS DECIMAL(18,2)) AS q
-          |               FROM lineitem)
-          |PIVOT (CAST(sum(q) AS DOUBLE) FOR l_linestatus IN ('O' AS o, 'F' AS f))
-          |ORDER BY l_returnflag""".stripMargin))
-    }),
-
-    // multiset set operations (SetRel IntersectionMultiset / MinusMultiset):
-    // duplicates preserved per multiset semantics — q15 certifies the
-    // PRIMARY variants, this the ALL variants
-    "q41_setops_all" -> ((s, dir) => rt(s, {
-      val ck = t(s, dir, "customer").select(col("c_nationkey").as("k"))
-      val sk = t(s, dir, "supplier").select(col("s_nationkey").as("k"))
-      val nk = t(s, dir, "nation").filter(col("n_nationkey") >= 10)
-        .select(col("n_nationkey").as("k"))
-      ck.intersectAll(sk).exceptAll(nk).groupBy("k")
-        .agg(count(lit(1)).as("n")).orderBy("k")
-    })),
-
-    // IGNORE NULLS window offsets over outer-join nulls (the
-    // first_ignore_nulls/last_ignore_nulls extension names on the wire)
-    "q42_window_ignore_nulls" -> ((s, dir) => {
-      t(s, dir, "customer"); t(s, dir, "orders")
-      rt(s, s.sql(
-        """SELECT c_custkey,
-          |  last_value(o_orderkey) IGNORE NULLS OVER
-          |    (ORDER BY c_custkey ASC, o_orderkey ASC NULLS FIRST
-          |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-          |    AS last_seen_order
-          |FROM (SELECT c_custkey, o_orderkey
-          |      FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-          |        AND o_orderkey % 50 = 0)
-          |ORDER BY c_custkey, last_seen_order""".stripMargin))
-    }),
-
-    "q35_scalar_correlated" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-      rt(s, s.sql(
-        """SELECT l1.l_orderkey, l1.l_linenumber, l1.l_quantity
-          |FROM lineitem l1
-          |WHERE l1.l_quantity > 1.9 * (SELECT avg(l2.l_quantity)
-          |                             FROM lineitem l2
-          |                             WHERE l2.l_partkey = l1.l_partkey)
-          |ORDER BY l1.l_orderkey, l1.l_linenumber""".stripMargin))
-    }),
-
-    // correlated COUNT inside a WIDER scalar expression (the r9-rejected
-    // shape): the count decorrelates to a grouped LEFT join whose miss rows
-    // coalesce to 0 at the AGGREGATE level, then the enclosing ×2 evaluates
-    // outside the join — parts with zero qualifying lines see 0, not NULL,
-    // so `p_size < 0` correctly drops them instead of NULL-filtering by
-    // accident. One hash aggregate + one equi left join; both scans pruned.
-    "q69_corr_count_expr" -> ((s, dir) => {
-      t(s, dir, "part"); t(s, dir, "lineitem")
-      rt(s, s.sql(
-        """SELECT p.p_partkey, p.p_size
-          |FROM part p
-          |WHERE p.p_size < (SELECT count(*) * 2 FROM lineitem l
-          |                  WHERE l.l_partkey = p.p_partkey
-          |                    AND l.l_quantity > 45)
-          |ORDER BY p.p_partkey""".stripMargin))
-    }),
-
-    // TPC-H Q2 shape: multi-level correlated MIN — the scalar subquery joins
-    // four tables and correlates on the outer part key; decorrelates into a
-    // grouped min over the same join tree, then an equi-join back on
-    // (partkey, price). lineitem stands in for partsupp (this schema's
-    // part-supplier association); min unit price ≡ min supplycost.
-    "q47_tpch_q2_mincost" -> ((s, dir) => {
-      t(s, dir, "part"); t(s, dir, "supplier"); t(s, dir, "lineitem")
-      t(s, dir, "nation"); t(s, dir, "region")
-      rt(s, s.sql(
-        """SELECT s.s_acctbal, s.s_name, n.n_name, p.p_partkey, p.p_type,
-          |  l.l_extendedprice AS min_price
-          |FROM part p, supplier s, lineitem l, nation n, region r
-          |WHERE p.p_partkey = l.l_partkey AND s.s_suppkey = l.l_suppkey
-          |  AND s.s_nationkey = n.n_nationkey AND n.n_regionkey = r.r_regionkey
-          |  AND r.r_name = 'ASIA' AND p.p_size < 5
-          |  AND l.l_extendedprice = (
-          |    SELECT min(l2.l_extendedprice)
-          |    FROM lineitem l2, supplier s2, nation n2, region r2
-          |    WHERE l2.l_partkey = p.p_partkey AND s2.s_suppkey = l2.l_suppkey
-          |      AND s2.s_nationkey = n2.n_nationkey AND n2.n_regionkey = r2.r_regionkey
-          |      AND r2.r_name = 'ASIA')
-          |ORDER BY s.s_acctbal DESC, n.n_name, s.s_name, p.p_partkey""".stripMargin))
-    }),
-
-    // TPC-H Q21 shape: EXISTS and NOT EXISTS over the SAME table as the
-    // outer (two decorrelated self-joins — semi + anti — on l_orderkey with
-    // a non-equi residual l_suppkey <> l1.l_suppkey). returnflag 'R'
-    // stands in for the receipt-late predicate this schema doesn't carry.
-    "q48_tpch_q21_waiting" -> ((s, dir) => {
-      t(s, dir, "supplier"); t(s, dir, "lineitem")
-      t(s, dir, "orders"); t(s, dir, "nation")
-      rt(s, s.sql(
-        """SELECT s.s_name, count(*) AS numwait
-          |FROM supplier s, lineitem l1, orders o, nation n
-          |WHERE s.s_suppkey = l1.l_suppkey AND o.o_orderkey = l1.l_orderkey
-          |  AND o.o_orderstatus = 'F' AND l1.l_returnflag = 'R'
-          |  AND s.s_nationkey = n.n_nationkey
-          |  AND n.n_name IN ('NATION_1', 'NATION_3')
-          |  AND EXISTS (SELECT 1 FROM lineitem l2
-          |              WHERE l2.l_orderkey = l1.l_orderkey
-          |                AND l2.l_suppkey <> l1.l_suppkey)
-          |  AND NOT EXISTS (SELECT 1 FROM lineitem l3
-          |                  WHERE l3.l_orderkey = l1.l_orderkey
-          |                    AND l3.l_suppkey <> l1.l_suppkey
-          |                    AND l3.l_returnflag = 'R')
-          |GROUP BY s.s_name ORDER BY numwait DESC, s_name""".stripMargin))
-    }),
-
-    // TPC-H Q20 shape: IN-subquery whose HAVING holds a scalar subquery
-    // CORRELATED ON A GROUPING KEY (the excess-stock pattern) nested inside
-    // another IN — decorrelation must thread the correlation through the
-    // group-by
-    "q50_tpch_q20_excess" -> ((s, dir) => {
-      t(s, dir, "supplier"); t(s, dir, "lineitem"); t(s, dir, "part")
-      rt(s, s.sql(
-        """SELECT s_name, s_acctbal FROM supplier
-          |WHERE s_suppkey IN (
-          |  SELECT l1.l_suppkey FROM lineitem l1
-          |  WHERE l1.l_partkey IN (SELECT p_partkey FROM part
-          |                         WHERE p_type = 'PROMO')
-          |  GROUP BY l1.l_suppkey, l1.l_partkey
-          |  HAVING sum(l1.l_quantity) >
-          |    (SELECT 4.0 * avg(l2.l_quantity) FROM lineitem l2
-          |     WHERE l2.l_partkey = l1.l_partkey))
-          |ORDER BY s_name""".stripMargin))
-    }),
-
-    // TPC-H Q11 shape: HAVING compares each group's aggregate against a
-    // scalar subquery running the SAME join+aggregate globally
-    "q51_tpch_q11_value" -> ((s, dir) => {
-      t(s, dir, "lineitem"); t(s, dir, "supplier"); t(s, dir, "nation")
-      rt(s, s.sql(
-        """SELECT l_partkey,
-          |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS value
-          |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-          |  JOIN nation ON s_nationkey = n_nationkey
-          |WHERE n_name = 'NATION_3'
-          |GROUP BY l_partkey
-          |HAVING sum(CAST(l_extendedprice AS DECIMAL(18,2))) >
-          |  (SELECT 2.5 * sum(CAST(l_extendedprice AS DECIMAL(18,2)))
-          |     / count(DISTINCT l_partkey)
-          |   FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-          |     JOIN nation ON s_nationkey = n_nationkey
-          |   WHERE n_name = 'NATION_3')
-          |ORDER BY value DESC, l_partkey""".stripMargin))
-    }),
-
-    // TPC-H Q15 shape: multi-reference CTE + scalar MAX over it (top
-    // revenue supplier); decimal-exact revenue so ties are exact
-    "q52_tpch_q15_topsupp" -> ((s, dir) => {
-      t(s, dir, "supplier"); t(s, dir, "lineitem")
-      rt(s, s.sql(
-        """WITH revenue AS (
-          |  SELECT l_suppkey AS supplier_no,
-          |    sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4)))
-          |      AS total
-          |  FROM lineitem GROUP BY l_suppkey)
-          |SELECT s_suppkey, s_name, CAST(total AS DOUBLE) AS total_revenue
-          |FROM supplier, revenue
-          |WHERE s_suppkey = supplier_no
-          |  AND total = (SELECT max(total) FROM revenue)
-          |ORDER BY s_suppkey""".stripMargin))
-    }),
-
-    // TPC-H Q13 shape: aggregate OF an aggregate (customer order-count
-    // distribution) over a LEFT JOIN whose ON clause carries a residual
-    // non-key predicate on the right side — the predicate must stay IN the
-    // join (filtering before/after changes left-join semantics)
-    "q53_tpch_q13_custdist" -> ((s, dir) => {
-      t(s, dir, "customer"); t(s, dir, "orders")
-      rt(s, s.sql(
-        """SELECT c_count, count(*) AS custdist FROM (
-          |  SELECT c_custkey, count(o_orderkey) AS c_count
-          |  FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-          |    AND o_orderpriority <> '1-URGENT'
-          |  GROUP BY c_custkey) cc
-          |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin))
-    }),
-
-    // TPC-H Q22 shape: substring bucketing + uncorrelated scalar AVG
-    // subquery + correlated NOT EXISTS, then a global group-aggregate.
-    // c_name digits stand in for the phone country code; the urgent-order
-    // anti-condition keeps the anti-join non-vacuous on this data.
-    "q49_tpch_q22_global" -> ((s, dir) => {
-      t(s, dir, "customer"); t(s, dir, "orders")
-      rt(s, s.sql(
-        """SELECT cntrycode, count(*) AS numcust,
-          |  CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS totacctbal
-          |FROM (SELECT substring(c_name, 17, 2) AS cntrycode, c_acctbal, c_custkey
-          |      FROM customer
-          |      WHERE substring(c_name, 17, 2) IN ('10','11','12','13','14','15','16')
-          |        AND c_acctbal > (SELECT avg(c_acctbal) FROM customer
-          |                         WHERE c_acctbal > 0.0)) c
-          |WHERE NOT EXISTS (SELECT 1 FROM orders o
-          |                  WHERE o.o_custkey = c.c_custkey
-          |                    AND o.o_orderpriority = '1-URGENT')
-          |GROUP BY cntrycode ORDER BY cntrycode""".stripMargin))
-    }),
-
-    // TPC-H Q18 shape: semi join against a grouped-HAVING subquery (large
-    // IN over aggregated keys) feeding a second aggregation over the
-    // 3-table join — the IN-subquery decorrelates to a semi join on the
-    // grouped orderkeys, and the big join stays key-partitioned
-    "q54_tpch_q18_bigorders" -> ((s, dir) => {
-      t(s, dir, "customer"); t(s, dir, "orders"); t(s, dir, "lineitem")
-      rt(s, s.sql(
-        """SELECT c.c_name, c.c_custkey, o.o_orderkey, o.o_orderdate,
-          |  o.o_totalprice, CAST(sum(l.l_quantity) AS BIGINT) AS total_qty
-          |FROM customer c, orders o, lineitem l
-          |WHERE o.o_orderkey IN (
-          |    SELECT l_orderkey FROM lineitem GROUP BY l_orderkey
-          |    HAVING sum(l_quantity) > 250)
-          |  AND c.c_custkey = o.o_custkey AND o.o_orderkey = l.l_orderkey
-          |GROUP BY c.c_name, c.c_custkey, o.o_orderkey, o.o_orderdate,
-          |  o.o_totalprice
-          |ORDER BY o.o_totalprice DESC, o.o_orderdate, o.o_orderkey
-          |LIMIT 100""".stripMargin))
-    }),
-
-    // TPC-H Q19 shape: disjunctive OR-of-ANDs join predicate — each
-    // disjunct repeats the p_partkey = l_partkey equi conjunct, which the
-    // optimizer must factor out (CNF extraction) so the join plans as an
-    // EQUI join carrying the OR as a residual condition, never a
-    // cartesian/nested-loop; the whole condition rides the wire inside
-    // JoinRel. Brand/size/quantity bands stand in for TPC-H's
-    // container+shipmode bands this schema doesn't carry.
-    "q55_tpch_q19_disjunct" -> ((s, dir) => {
-      t(s, dir, "lineitem"); t(s, dir, "part")
-      rt(s, s.sql(
-        """SELECT CAST(sum(CAST(l_extendedprice * (1.0 - l_discount)
-          |    AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
-          |  count(*) AS n_lines
-          |FROM lineitem l, part p
-          |WHERE (p.p_partkey = l.l_partkey AND p.p_brand = 'Brand#12'
-          |       AND l.l_quantity BETWEEN 1 AND 25 AND p.p_size BETWEEN 1 AND 25)
-          |   OR (p.p_partkey = l.l_partkey AND p.p_brand = 'Brand#23'
-          |       AND l.l_quantity BETWEEN 10 AND 35 AND p.p_size BETWEEN 1 AND 35)
-          |   OR (p.p_partkey = l.l_partkey AND p.p_brand = 'Brand#7'
-          |       AND l.l_quantity BETWEEN 20 AND 50 AND p.p_size BETWEEN 1 AND 50)""".stripMargin))
-    }),
-
-    // TPC-H Q16 shape: COUNT(DISTINCT) per multi-column group over a join
-    // whose probe side carries a NOT IN subquery (null-aware anti join on
-    // the non-null key) plus NOT-LIKE and IN-list part predicates
-    "q57_tpch_q16_suppcnt" -> ((s, dir) => {
-      t(s, dir, "lineitem"); t(s, dir, "part"); t(s, dir, "supplier")
-      rt(s, s.sql(
-        """SELECT p.p_brand, p.p_type, p.p_size,
-          |  count(DISTINCT l.l_suppkey) AS supplier_cnt
-          |FROM lineitem l, part p
-          |WHERE p.p_partkey = l.l_partkey
-          |  AND p.p_brand <> 'Brand#5'
-          |  AND p.p_type NOT LIKE 'MEDIUM%'
-          |  AND p.p_size IN (1, 4, 9, 14, 19, 23, 36, 45)
-          |  AND l.l_suppkey NOT IN (SELECT s_suppkey FROM supplier
-          |                          WHERE s_acctbal < 0.0)
-          |GROUP BY p.p_brand, p.p_type, p.p_size
-          |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin))
-    }),
-
-    // TPC-H Q14 shape: promo revenue share — two conditional SUMs over the
-    // same join feed a scalar ratio (single-row result). Per-row DECIMAL
-    // cast before the sums keeps both engines' totals bit-exact; the ratio
-    // is then two correctly-rounded IEEE ops over equal inputs. The date
-    // band must reach the scan as PushedFilters on l_shipdate.
-    "q58_tpch_q14_promo" -> ((s, dir) => {
-      t(s, dir, "lineitem"); t(s, dir, "part")
-      rt(s, s.sql(
-        """SELECT CAST(100.0 * CAST(sum(CASE WHEN p.p_type = 'PROMO'
-          |      THEN CAST(l.l_extendedprice * (1.0 - l.l_discount)
-          |        AS DECIMAL(18,4))
-          |      ELSE CAST(0.0 AS DECIMAL(18,4)) END) AS DOUBLE)
-          |    / CAST(sum(CAST(l.l_extendedprice * (1.0 - l.l_discount)
-          |        AS DECIMAL(18,4))) AS DOUBLE)
-          |  AS DOUBLE) AS promo_revenue,
-          |  count(*) AS n_lines
-          |FROM lineitem l, part p
-          |WHERE l.l_partkey = p.p_partkey
-          |  AND l.l_shipdate >= TIMESTAMP '1995-03-01 00:00:00'
-          |  AND l.l_shipdate <  TIMESTAMP '1995-06-01 00:00:00'""".stripMargin))
-    }),
-
-    // TPC-H Q3 shape: shipping-priority top-k — segment-filtered 3-table
-    // join, grouped revenue, ORDER BY ... LIMIT fuses to
-    // TakeOrderedAndProject (no global sort at scale)
-    "q59_tpch_q3_shipping" -> ((s, dir) => {
-      t(s, dir, "customer"); t(s, dir, "orders"); t(s, dir, "lineitem")
-      rt(s, s.sql(
-        """SELECT l.l_orderkey,
-          |  CAST(sum(CAST(l.l_extendedprice * (1.0 - l.l_discount)
-          |    AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
-          |  o.o_orderdate
-          |FROM customer c, orders o, lineitem l
-          |WHERE c.c_mktsegment = 'BUILDING' AND c.c_custkey = o.o_custkey
-          |  AND l.l_orderkey = o.o_orderkey
-          |  AND o.o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
-          |  AND l.l_shipdate > TIMESTAMP '1997-01-01 00:00:00'
-          |GROUP BY l.l_orderkey, o.o_orderdate
-          |ORDER BY revenue DESC, o.o_orderdate, l.l_orderkey
-          |LIMIT 10""".stripMargin))
-    }),
-
-    // TPC-H Q5 shape: local-supplier volume — six-table snowflake join
-    // with the customer-nation = supplier-nation co-location constraint;
-    // region/nation dims must broadcast, never shuffle the fact
-    "q60_tpch_q5_localsupp" -> ((s, dir) => {
-      t(s, dir, "customer"); t(s, dir, "orders"); t(s, dir, "lineitem")
-      t(s, dir, "supplier"); t(s, dir, "nation"); t(s, dir, "region")
-      rt(s, s.sql(
-        """SELECT n.n_name,
-          |  CAST(sum(CAST(l.l_extendedprice * (1.0 - l.l_discount)
-          |    AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-          |FROM customer c, orders o, lineitem l, supplier s, nation n, region r
-          |WHERE c.c_custkey = o.o_custkey AND l.l_orderkey = o.o_orderkey
-          |  AND l.l_suppkey = s.s_suppkey AND c.c_nationkey = s.s_nationkey
-          |  AND s.s_nationkey = n.n_nationkey AND n.n_regionkey = r.r_regionkey
-          |  AND r.r_name = 'ASIA'
-          |  AND o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-          |  AND o.o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-          |GROUP BY n.n_name ORDER BY revenue DESC, n_name""".stripMargin))
-    }),
-
-    // TPC-H Q9 shape: product-type profit by nation and year — LIKE-
-    // filtered part dim joined into the fact, year() bucketing on the
-    // order date (no partsupp table in this schema; profit = revenue)
-    "q61_tpch_q9_profit" -> ((s, dir) => {
-      t(s, dir, "part"); t(s, dir, "supplier"); t(s, dir, "lineitem")
-      t(s, dir, "orders"); t(s, dir, "nation")
-      rt(s, s.sql(
-        """SELECT n.n_name AS nation, CAST(year(o.o_orderdate) AS INT) AS o_year,
-          |  CAST(sum(CAST(l.l_extendedprice * (1.0 - l.l_discount)
-          |    AS DECIMAL(18,4))) AS DOUBLE) AS profit
-          |FROM part p, supplier s, lineitem l, orders o, nation n
-          |WHERE s.s_suppkey = l.l_suppkey AND p.p_partkey = l.l_partkey
-          |  AND o.o_orderkey = l.l_orderkey AND s.s_nationkey = n.n_nationkey
-          |  AND p.p_name LIKE '%red%'
-          |GROUP BY n.n_name, year(o.o_orderdate)
-          |ORDER BY nation, o_year DESC""".stripMargin))
-    }),
-
-    // TPC-H Q10 shape: returned-item ranking — returnflag-filtered fact,
-    // date band on orders, top-20 customers by lost revenue
-    "q62_tpch_q10_returns" -> ((s, dir) => {
-      t(s, dir, "customer"); t(s, dir, "orders"); t(s, dir, "lineitem")
-      t(s, dir, "nation")
-      rt(s, s.sql(
-        """SELECT c.c_custkey, c.c_name,
-          |  CAST(sum(CAST(l.l_extendedprice * (1.0 - l.l_discount)
-          |    AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
-          |  c.c_acctbal, n.n_name
-          |FROM customer c, orders o, lineitem l, nation n
-          |WHERE c.c_custkey = o.o_custkey AND l.l_orderkey = o.o_orderkey
-          |  AND o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-          |  AND o.o_orderdate < TIMESTAMP '1996-07-01 00:00:00'
-          |  AND l.l_returnflag = 'R' AND c.c_nationkey = n.n_nationkey
-          |GROUP BY c.c_custkey, c.c_name, c.c_acctbal, n.n_name
-          |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin))
-    }),
-
-    // TPC-H Q12 shape: priority class counts via conditional SUMs over an
-    // order/lineitem join with a ship-date band (o_orderpriority classes
-    // stand in for l_shipmode, which this schema doesn't carry)
-    "q63_tpch_q12_priority" -> ((s, dir) => {
-      t(s, dir, "orders"); t(s, dir, "lineitem")
-      rt(s, s.sql(
-        """SELECT l.l_linestatus,
-          |  sum(CASE WHEN o.o_orderpriority = '1-URGENT'
-          |        OR o.o_orderpriority = '2-HIGH'
-          |      THEN 1 ELSE 0 END) AS high_line_count,
-          |  sum(CASE WHEN o.o_orderpriority <> '1-URGENT'
-          |        AND o.o_orderpriority <> '2-HIGH'
-          |      THEN 1 ELSE 0 END) AS low_line_count
-          |FROM orders o, lineitem l
-          |WHERE o.o_orderkey = l.l_orderkey
-          |  AND l.l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-          |  AND l.l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
-          |GROUP BY l.l_linestatus ORDER BY l_linestatus""".stripMargin))
-    }),
-
-    // TPC-H Q7 shape: volume shipping between two nations, both
-    // directions — the nation dim joins TWICE (supplier side and customer
-    // side) under an OR-of-nation-pairs predicate; the consumer's
-    // fresh-name scheme must keep the two nation scans distinct
-    "q64_tpch_q7_volume" -> ((s, dir) => {
-      t(s, dir, "supplier"); t(s, dir, "lineitem"); t(s, dir, "orders")
-      t(s, dir, "customer"); t(s, dir, "nation")
-      rt(s, s.sql(
-        """SELECT supp_nation, cust_nation, l_year,
-          |  CAST(sum(volume_dec) AS DOUBLE) AS revenue
-          |FROM (SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-          |        CAST(year(l.l_shipdate) AS INT) AS l_year,
-          |        CAST(l.l_extendedprice * (1.0 - l.l_discount)
-          |          AS DECIMAL(18,4)) AS volume_dec
-          |      FROM supplier s, lineitem l, orders o, customer c,
-          |        nation n1, nation n2
-          |      WHERE s.s_suppkey = l.l_suppkey AND o.o_orderkey = l.l_orderkey
-          |        AND c.c_custkey = o.o_custkey
-          |        AND s.s_nationkey = n1.n_nationkey
-          |        AND c.c_nationkey = n2.n_nationkey
-          |        AND ((n1.n_name = 'NATION_7' AND n2.n_name = 'NATION_17')
-          |          OR (n1.n_name = 'NATION_17' AND n2.n_name = 'NATION_7'))
-          |        AND l.l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-          |        AND l.l_shipdate < TIMESTAMP '1998-01-01 00:00:00') shipping
-          |GROUP BY supp_nation, cust_nation, l_year
-          |ORDER BY supp_nation, cust_nation, l_year""".stripMargin))
-    }),
-
-    // TPC-H Q8 shape: national market share — eight-table join (nation
-    // twice: customer-region gate and supplier-nation tag) feeding a
-    // conditional-share ratio per year; all dims must broadcast
-    "q65_tpch_q8_mktshare" -> ((s, dir) => {
-      t(s, dir, "part"); t(s, dir, "supplier"); t(s, dir, "lineitem")
-      t(s, dir, "orders"); t(s, dir, "customer"); t(s, dir, "nation")
-      t(s, dir, "region")
-      rt(s, s.sql(
-        """SELECT o_year,
-          |  CAST(CAST(sum(CASE WHEN nation = 'NATION_7' THEN volume
-          |      ELSE CAST(0.0 AS DECIMAL(18,4)) END) AS DOUBLE)
-          |    / CAST(sum(volume) AS DOUBLE) AS DOUBLE) AS mkt_share
-          |FROM (SELECT CAST(year(o.o_orderdate) AS INT) AS o_year,
-          |        CAST(l.l_extendedprice * (1.0 - l.l_discount)
-          |          AS DECIMAL(18,4)) AS volume,
-          |        n2.n_name AS nation
-          |      FROM part p, supplier s, lineitem l, orders o, customer c,
-          |        nation n1, nation n2, region r
-          |      WHERE p.p_partkey = l.l_partkey AND s.s_suppkey = l.l_suppkey
-          |        AND l.l_orderkey = o.o_orderkey AND o.o_custkey = c.c_custkey
-          |        AND c.c_nationkey = n1.n_nationkey
-          |        AND n1.n_regionkey = r.r_regionkey
-          |        AND r.r_name = 'ASIA' AND s.s_nationkey = n2.n_nationkey
-          |        AND p.p_type = 'PROMO') all_nations
-          |GROUP BY o_year ORDER BY o_year""".stripMargin))
-    }),
-
-    // TPC-H Q4 shape: order-priority checking — quarter-banded orders with
-    // an EXISTS semi-join against late lineitems (this schema has no
-    // l_commitdate/l_receiptdate, so "late" = shipped >60 days after the
-    // order date; timestamp + INTERVAL arithmetic rides the wire inside
-    // the decorrelated semi-join condition)
-    "q66_tpch_q4_late" -> ((s, dir) => {
-      t(s, dir, "orders"); t(s, dir, "lineitem")
-      rt(s, s.sql(
-        """SELECT o.o_orderpriority, count(*) AS order_count
-          |FROM orders o
-          |WHERE o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-          |  AND o.o_orderdate < TIMESTAMP '1996-04-01 00:00:00'
-          |  AND EXISTS (SELECT 1 FROM lineitem l
-          |              WHERE l.l_orderkey = o.o_orderkey
-          |                AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY)
-          |GROUP BY o.o_orderpriority ORDER BY o.o_orderpriority""".stripMargin))
-    }),
-
-    // TPC-H Q6 shape: forecasting revenue change — pure scan-filter-agg,
-    // every predicate must reach the parquet scan as PushedFilters; the
-    // discount band compares exact integers (round(d*100)) so the double
-    // column never meets a decimal literal at a representability edge
-    "q67_tpch_q6_forecast" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-      rt(s, s.sql(
-        """SELECT CAST(sum(CAST(l_extendedprice * l_discount
-          |    AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
-          |  count(*) AS n_lines
-          |FROM lineitem
-          |WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-          |  AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
-          |  AND CAST(round(l_discount * 100) AS INT) BETWEEN 5 AND 7
-          |  AND l_quantity < 24""".stripMargin))
-    }),
-
-    // TPC-H Q17 shape: small-quantity-order revenue — correlated scalar
-    // AVG subquery per part (decorrelates to an aggregate + join); the
-    // threshold 0.2*avg is deterministic cross-engine because quantities
-    // are integral doubles (exact sums within 2^53, correctly-rounded
-    // divide), and the revenue sum crosses engines as exact DECIMAL
-    "q68_tpch_q17_smallqty" -> ((s, dir) => {
-      t(s, dir, "lineitem"); t(s, dir, "part")
-      rt(s, s.sql(
-        """SELECT CAST(CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,4)))
-          |    AS DOUBLE) / 7.0 AS DOUBLE) AS avg_yearly,
-          |  count(*) AS n_lines
-          |FROM lineitem l, part p
-          |WHERE p.p_partkey = l.l_partkey AND p.p_type = 'MEDIUM'
-          |  AND l.l_quantity < (SELECT 0.2 * avg(l2.l_quantity)
-          |                      FROM lineitem l2
-          |                      WHERE l2.l_partkey = p.p_partkey)""".stripMargin))
-    }),
-
-    // TPC-DS q36/q67 shape (round-11 verdict task 8): CTE aggregate, then
-    // TWO window functions over different frames of the same partition —
-    // revenue share within manufacturer and rank of brand within
-    // manufacturer — with a rank predicate on top. One shuffle for the CTE
-    // aggregate, ONE window sort per partition key (both windows share the
-    // PARTITION BY p_type exchange); share arithmetic stays exact (decimal
-    // window sum, one double division at the end)
-    "q70_ds_category_share" -> ((s, dir) => {
-      t(s, dir, "lineitem"); t(s, dir, "part")
-      rt(s, s.sql(
-        """WITH rev AS (
-          |  SELECT p_type, p_brand,
-          |    sum(CAST(l_extendedprice * (1.0 - l_discount)
-          |        AS DECIMAL(18,4))) AS rev0
-          |  FROM lineitem JOIN part ON l_partkey = p_partkey
-          |  GROUP BY p_type, p_brand)
-          |SELECT p_type, p_brand, brand_rev, type_share, rnk FROM (
-          |  SELECT p_type, p_brand,
-          |    CAST(rev0 AS DOUBLE) AS brand_rev,
-          |    CAST(CAST(rev0 AS DOUBLE) /
-          |      CAST(sum(rev0) OVER (PARTITION BY p_type) AS DOUBLE)
-          |      AS DOUBLE) AS type_share,
-          |    rank() OVER (PARTITION BY p_type
-          |                 ORDER BY rev0 DESC, p_brand) AS rnk
-          |  FROM rev) r
-          |WHERE rnk <= 3
-          |ORDER BY p_type, rnk, p_brand""".stripMargin))
-    }),
-
-    // TPC-DS q36 shape: ROLLUP gross-total hierarchy + rank within parent —
-    // the window PARTITION BY is an expression over grouping() outputs
-    // (detail rows rank within their status; subtotal rows rank against
-    // each other). One Expand-fed aggregate, one window sort
-    "q71_ds_rollup_window" -> ((s, dir) => {
-      t(s, dir, "orders")
-      rt(s, s.sql(
-        """SELECT status, prio, total, lochierarchy,
-          |  rank() OVER (
-          |    PARTITION BY lochierarchy,
-          |      CASE WHEN lochierarchy = 0 THEN status END
-          |    ORDER BY total DESC, coalesce(prio, '')) AS rank_within_parent
-          |FROM (
-          |  SELECT o_orderstatus AS status, o_orderpriority AS prio,
-          |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-          |      AS total,
-          |    CAST(grouping(o_orderstatus) + grouping(o_orderpriority)
-          |      AS BIGINT) AS lochierarchy
-          |  FROM orders
-          |  GROUP BY ROLLUP(o_orderstatus, o_orderpriority)) x
-          |ORDER BY lochierarchy DESC, status, rank_within_parent""".stripMargin))
-    }),
-
-    // TPC-DS q2 shape: UNION ALL of two per-channel aggregates, then
-    // offset + sliding-frame windows over the union — month-over-month and
-    // trailing-3-month spend per channel. The frame sum stays decimal
-    // (exact) until the final cast
-    "q72_ds_union_window" -> ((s, dir) => {
-      t(s, dir, "orders")
-      rt(s, s.sql(
-        """WITH sales AS (
-          |  SELECT substring(CAST(o_orderdate AS STRING), 1, 7) AS ym,
-          |    'hi' AS channel,
-          |    sum(CAST(o_totalprice AS DECIMAL(18,2))) AS amt0
-          |  FROM orders WHERE o_orderpriority IN ('1-URGENT', '2-HIGH')
-          |  GROUP BY 1
-          |  UNION ALL
-          |  SELECT substring(CAST(o_orderdate AS STRING), 1, 7) AS ym,
-          |    'lo' AS channel,
-          |    sum(CAST(o_totalprice AS DECIMAL(18,2))) AS amt0
-          |  FROM orders WHERE o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-          |  GROUP BY 1)
-          |SELECT ym, channel, CAST(amt0 AS DOUBLE) AS amt,
-          |  CAST(lag(amt0) OVER (PARTITION BY channel ORDER BY ym)
-          |    AS DOUBLE) AS prev_amt,
-          |  CAST(sum(amt0) OVER (PARTITION BY channel ORDER BY ym
-          |      ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
-          |    AS DOUBLE) AS amt_3m
-          |FROM sales
-          |ORDER BY channel, ym""".stripMargin))
-    }),
-
-    // TPC-DS q4 shape: MULTI-REFERENCE CTE self-joined across adjacent
-    // years — year-over-year growth with a cross-reference predicate.
-    // Substrait 0.3 has no common-subplan sharing, so each CTE reference
-    // re-produces the definition's subtree on the wire; the consumer's
-    // rebuilt self-join must keep the two references distinct (the E1/E2
-    // fresh-name scheme) while ReuseExchange de-duplicates the physical
-    // aggregate underneath
-    "q73_ds_cte_yoy" -> ((s, dir) => {
-      t(s, dir, "orders")
-      rt(s, s.sql(
-        """WITH yearly AS (
-          |  SELECT o_custkey,
-          |    CAST(substring(CAST(o_orderdate AS STRING), 1, 4) AS INT)
-          |      AS yr,
-          |    sum(CAST(o_totalprice AS DECIMAL(18,2))) AS tot0
-          |  FROM orders GROUP BY 1, 2)
-          |SELECT a.o_custkey, a.yr AS yr_prev,
-          |  CAST(a.tot0 AS DOUBLE) AS spend_prev,
-          |  CAST(b.tot0 AS DOUBLE) AS spend_next,
-          |  CAST(CAST(b.tot0 AS DOUBLE) / CAST(a.tot0 AS DOUBLE) AS DOUBLE)
-          |    AS growth
-          |FROM yearly a JOIN yearly b
-          |  ON a.o_custkey = b.o_custkey AND b.yr = a.yr + 1
-          |WHERE b.tot0 > a.tot0 * 2
-          |ORDER BY a.o_custkey, yr_prev""".stripMargin))
-    }),
-
-    // UNPIVOT / melt (round 12): the DataFrame unpivot API resolves to a
-    // standalone Catalyst Expand, which the producer encodes as a SetRel
-    // UnionAll of one ProjectRel per measure branch (substrait 0.3 has no
-    // expand relation) — this is the first driver query to exercise that
-    // path. Exact decimal sums per the q04 convention; the consumed plan's
-    // per-branch scans prune to each branch's two columns.
-    "q74_unpivot" -> ((s, dir) => rt(s, {
-      import org.apache.spark.sql.types.DecimalType
-      t(s, dir, "lineitem")
-        .select("l_orderkey", "l_quantity", "l_extendedprice", "l_discount",
-          "l_tax")
-        .unpivot(
-          Array(col("l_orderkey")),
-          Array(col("l_quantity"), col("l_extendedprice"), col("l_discount"),
-            col("l_tax")),
-          "measure", "value")
-        .groupBy("measure")
-        .agg(
-          sum(col("value").cast(DecimalType(18, 4))).cast("double")
-            .as("total"),
-          count(lit(1)).as("n"),
-          countDistinct(col("l_orderkey")).as("n_orders"))
-        .orderBy("measure")
-    })),
-
-    // TPC-DS q27/q36 composite shape (round 14): windowed SHARE-OF-TOTAL
-    // over GROUPING SETS — the share window partitions by the grouping
-    // LEVEL (an expression over grouping() outputs), so detail rows share
-    // against the detail total and each subtotal stratum against its own.
-    // One Expand-fed aggregate + one window sort; the Expand rides the
-    // wire as the SetRel union-of-projects encoding
-    "q75_ds_gsets_share" -> ((s, dir) => {
-      t(s, dir, "orders"); t(s, dir, "customer")
-      rt(s, s.sql(
-        """SELECT mkt, prio, spend, lvl,
-          |  CAST(spend / CAST(sum(spend0) OVER (PARTITION BY lvl)
-          |    AS DOUBLE) AS DOUBLE) AS share_within_level,
-          |  rank() OVER (PARTITION BY lvl
-          |    ORDER BY spend0 DESC, coalesce(mkt, ''), coalesce(prio, ''))
-          |    AS rnk
-          |FROM (
-          |  SELECT c_mktsegment AS mkt, o_orderpriority AS prio,
-          |    sum(CAST(o_totalprice AS DECIMAL(18,2))) AS spend0,
-          |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-          |      AS spend,
-          |    CAST(grouping(c_mktsegment) * 2 + grouping(o_orderpriority)
-          |      AS BIGINT) AS lvl
-          |  FROM orders JOIN customer ON o_custkey = c_custkey
-          |  GROUP BY GROUPING SETS ((c_mktsegment, o_orderpriority),
-          |    (c_mktsegment), ())) x
-          |ORDER BY lvl, rnk, mkt, prio""".stripMargin))
-    }),
-
-    // TPC-DS q4/q11 shape extended (round 14): a multi-reference CTE
-    // self-joined in a CHAIN across three adjacent years (a→a+1→a+2) with
-    // a cross-reference growth predicate. Substrait 0.3 has no common-
-    // subplan sharing, so the yearly aggregate re-produces THREE times on
-    // the wire and the consumer must keep all three references distinct
-    // while ReuseExchange de-duplicates the physical aggregate
-    "q76_ds_cte_chain" -> ((s, dir) => {
-      t(s, dir, "orders")
-      rt(s, s.sql(
-        """WITH yearly AS (
-          |  SELECT o_custkey,
-          |    CAST(substring(CAST(o_orderdate AS STRING), 1, 4) AS INT)
-          |      AS yr,
-          |    sum(CAST(o_totalprice AS DECIMAL(18,2))) AS tot0
-          |  FROM orders GROUP BY 1, 2)
-          |SELECT a.o_custkey, a.yr AS yr_base,
-          |  CAST(ROUND(CAST(b.tot0 AS DOUBLE) / CAST(a.tot0 AS DOUBLE), 6)
-          |    AS DOUBLE) AS growth_1,
-          |  CAST(ROUND(CAST(c.tot0 AS DOUBLE) / CAST(b.tot0 AS DOUBLE), 6)
-          |    AS DOUBLE) AS growth_2
-          |FROM yearly a
-          |JOIN yearly b ON a.o_custkey = b.o_custkey AND b.yr = a.yr + 1
-          |JOIN yearly c ON a.o_custkey = c.o_custkey AND c.yr = a.yr + 2
-          |WHERE CAST(c.tot0 AS DOUBLE) / CAST(b.tot0 AS DOUBLE) >
-          |      CAST(b.tot0 AS DOUBLE) / CAST(a.tot0 AS DOUBLE)
-          |ORDER BY a.o_custkey, yr_base""".stripMargin))
-    }),
-
-    // TPC-DS q10/q35 composite shape (round 14): correlated EXISTS
-    // (returns-channel membership) feeding a ranking WINDOW — the
-    // decorrelated semi-join must land BELOW the aggregate and the rank
-    // above it, a produce/consume layering no TPC-H query exercises
-    "q77_ds_exists_window" -> ((s, dir) => {
-      t(s, dir, "customer"); t(s, dir, "orders"); t(s, dir, "lineitem")
-      rt(s, s.sql(
-        """SELECT c_custkey, c_mktsegment, spend, seg_rank FROM (
-          |  SELECT c_custkey, c_mktsegment,
-          |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-          |      AS spend,
-          |    rank() OVER (PARTITION BY c_mktsegment
-          |      ORDER BY sum(CAST(o_totalprice AS DECIMAL(18,2))) DESC,
-          |        c_custkey) AS seg_rank
-          |  FROM customer JOIN orders ON c_custkey = o_custkey
-          |  WHERE EXISTS (SELECT 1 FROM lineitem
-          |    WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
-          |  GROUP BY c_custkey, c_mktsegment) ranked
-          |WHERE seg_rank <= 5
-          |ORDER BY c_mktsegment, seg_rank, c_custkey""".stripMargin))
-    }),
-
-    // TPC-DS q75/q80 catalog-returns shape (round 14): TWO fact tables
-    // (orders = header channel, lineitem = line channel) unioned into one
-    // per-channel fact stream against the same dimension chain, then
-    // pivoted back out per nation — the multi-fact union-aggregate that
-    // hides produce/consume bugs single-fact TPC-H never hits
-    "q78_ds_multifact_union" -> ((s, dir) => {
-      t(s, dir, "orders"); t(s, dir, "customer"); t(s, dir, "nation")
-      t(s, dir, "lineitem")
-      rt(s, s.sql(
-        """WITH facts AS (
-          |  SELECT n_name AS nation, 'order' AS channel,
-          |    CAST(o_totalprice AS DECIMAL(18,4)) AS amt0
-          |  FROM orders
-          |  JOIN customer ON o_custkey = c_custkey
-          |  JOIN nation ON c_nationkey = n_nationkey
-          |  UNION ALL
-          |  SELECT n_name AS nation, 'line' AS channel,
-          |    CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))
-          |      AS amt0
-          |  FROM lineitem
-          |  JOIN orders ON l_orderkey = o_orderkey
-          |  JOIN customer ON o_custkey = c_custkey
-          |  JOIN nation ON c_nationkey = n_nationkey)
-          |SELECT nation,
-          |  CAST(sum(CASE WHEN channel = 'order' THEN amt0 END) AS DOUBLE)
-          |    AS order_amt,
-          |  CAST(sum(CASE WHEN channel = 'line' THEN amt0 END) AS DOUBLE)
-          |    AS line_amt,
-          |  count(CASE WHEN channel = 'order' THEN 1 END) AS n_orders,
-          |  count(CASE WHEN channel = 'line' THEN 1 END) AS n_lines
-          |FROM facts GROUP BY nation
-          |ORDER BY nation""".stripMargin))
-    }),
-
-    // TPC-DS q14 cross-channel shape (round 14): INTERSECT of two
-    // channels' key sets inside a CTE, joined back to the dimension and
-    // aggregated — set-op composition BELOW a join, not at the root as in
-    // q15/q41
-    "q79_ds_channel_intersect" -> ((s, dir) => {
-      t(s, dir, "orders"); t(s, dir, "customer")
-      rt(s, s.sql(
-        """WITH both_cust AS (
-          |  SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'
-          |  INTERSECT
-          |  SELECT o_custkey FROM orders WHERE o_orderpriority = '5-LOW')
-          |SELECT c_mktsegment, count(*) AS n_cross_channel,
-          |  CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE)
-          |    AS tot_balance
-          |FROM customer JOIN both_cust ON c_custkey = o_custkey
-          |GROUP BY c_mktsegment
-          |ORDER BY c_mktsegment""".stripMargin))
-    }),
-
-    // TPC-DS q47 shape (round 14, the 10th DS pattern): monthly deviation
-    // screen — TWO window partitionings over ONE aggregate (a year-scoped
-    // share frame AND an ordered lag/lead frame), then a filter on the
-    // windowed ratio. The year average is sum/count of EXACT decimals
-    // (never avg-of-doubles — partition-order-dependent last-ulp drift is
-    // the hash trap); two window sort groups must both survive the wire
-    "q80_ds_moving_dev" -> ((s, dir) => {
-      t(s, dir, "orders")
-      rt(s, s.sql(
-        """WITH monthly AS (
-          |  SELECT o_orderstatus AS status,
-          |    substring(CAST(o_orderdate AS STRING), 1, 7) AS ym,
-          |    sum(CAST(o_totalprice AS DECIMAL(18,2))) AS amt0
-          |  FROM orders GROUP BY 1, 2)
-          |SELECT status, ym, CAST(amt0 AS DOUBLE) AS amt,
-          |  CAST(ROUND(avg_year, 6) AS DOUBLE) AS avg_year,
-          |  CAST(ROUND(CAST(amt0 AS DOUBLE) / avg_year, 6) AS DOUBLE)
-          |    AS dev,
-          |  CAST(lag_amt AS DOUBLE) AS prev_amt,
-          |  CAST(lead_amt AS DOUBLE) AS next_amt
-          |FROM (
-          |  SELECT status, ym, amt0,
-          |    CAST(sum(amt0) OVER (PARTITION BY status, substring(ym, 1, 4))
-          |      AS DOUBLE) /
-          |      count(amt0) OVER (PARTITION BY status, substring(ym, 1, 4))
-          |      AS avg_year,
-          |    lag(amt0) OVER (PARTITION BY status ORDER BY ym) AS lag_amt,
-          |    lead(amt0) OVER (PARTITION BY status ORDER BY ym) AS lead_amt
-          |  FROM monthly) x
-          |WHERE CAST(amt0 AS DOUBLE) > avg_year * 1.1
-          |ORDER BY status, ym""".stripMargin))
-    }),
-
-    // TPC-DS q8/q38 family shape (round 15, 11th DS pattern): EXCEPT
-    // under a WINDOWED CTE — a per-customer top-1 ranking (window inside
-    // the CTE) feeds set-difference against a channel predicate, and the
-    // surviving keys join back up into a dimension aggregate. The wire
-    // must carry window → set-op → join → agg stacked in one artifact
-    "q81_ds_except_window" -> ((s, dir) => {
-      t(s, dir, "orders"); t(s, dir, "customer")
-      rt(s, s.sql(
-        """WITH ranked AS (
-          |  SELECT o_custkey, CAST(o_totalprice AS DECIMAL(18,2)) AS price,
-          |    row_number() OVER (PARTITION BY o_custkey
-          |      ORDER BY CAST(o_totalprice AS DECIMAL(18,2)) DESC,
-          |        o_orderkey) AS rn
-          |  FROM orders),
-          |top1 AS (SELECT o_custkey FROM ranked
-          |         WHERE rn = 1 AND price > 200000),
-          |urgent AS (SELECT o_custkey FROM orders
-          |           WHERE o_orderpriority = '1-URGENT'),
-          |quiet AS (SELECT o_custkey FROM top1
-          |          EXCEPT SELECT o_custkey FROM urgent)
-          |SELECT c_mktsegment, count(*) AS n_cust,
-          |  CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS tot_bal
-          |FROM customer JOIN quiet ON c_custkey = o_custkey
-          |GROUP BY c_mktsegment
-          |ORDER BY c_mktsegment""".stripMargin))
-    }),
-
-    // TPC-DS q49-style quantile screen (12th DS pattern): PERCENTILE
-    // WINDOWS OVER GROUPING SETS — percent_rank + ntile partitioned by
-    // the grouping id, ranking the grouping-set rollup rows themselves.
-    // Exact decimal sums under the windows; full deterministic ordering
-    // (amt + coalesced keys) so rank ties cannot drift between engines
-    "q82_ds_percentile_gsets" -> ((s, dir) => {
-      t(s, dir, "orders")
-      rt(s, s.sql(
-        """WITH agg AS (
-          |  SELECT o_orderstatus AS status, o_orderpriority AS prio,
-          |    grouping(o_orderstatus) * 2 + grouping(o_orderpriority)
-          |      AS gid,
-          |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-          |      AS amt,
-          |    count(*) AS n
-          |  FROM orders
-          |  GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority),
-          |    (o_orderstatus), (o_orderpriority), ()))
-          |SELECT status, prio, gid, amt, n,
-          |  CAST(ROUND(percent_rank() OVER (PARTITION BY gid
-          |    ORDER BY amt, coalesce(status, '~'), coalesce(prio, '~')), 6)
-          |    AS DOUBLE) AS pr,
-          |  ntile(3) OVER (PARTITION BY gid
-          |    ORDER BY amt, coalesce(status, '~'), coalesce(prio, '~'))
-          |    AS tercile
-          |FROM agg
-          |ORDER BY gid, amt, coalesce(status, '~'), coalesce(prio, '~')"""
-          .stripMargin))
-    }),
-
-    // TPC-DS q92-style per-entity screen (13th DS pattern): MULTI-LEVEL
-    // LATERAL + WINDOW — the second lateral derives from the first
-    // (per-customer order stats → guarded average), and a segment window
-    // ranks the lateral output; only each segment's top-5 spenders
-    // survive. Decorrelation must stack: two laterals then a rank filter
-    "q83_ds_lateral_window" -> ((s, dir) => {
-      t(s, dir, "customer"); t(s, dir, "orders")
-      rt(s, s.sql(
-        """SELECT c_mktsegment, c_custkey, n_orders, spend, n_top,
-          |  seg_rank
-          |FROM (
-          |  SELECT c.c_mktsegment, c.c_custkey, l1.n_orders,
-          |    CAST(coalesce(l1.raw_spend, 0) AS DOUBLE) AS spend,
-          |    l2.n_top,
-          |    row_number() OVER (PARTITION BY c.c_mktsegment
-          |      ORDER BY CAST(coalesce(l1.raw_spend, 0) AS DOUBLE) DESC,
-          |        c.c_custkey) AS seg_rank
-          |  FROM customer c,
-          |  LATERAL (SELECT count(*) AS n_orders,
-          |           sum(CAST(o_totalprice AS DECIMAL(18,2))) AS raw_spend,
-          |           max(o_orderpriority) AS top_prio
-          |           FROM orders o WHERE o.o_custkey = c.c_custkey) l1,
-          |  LATERAL (SELECT count(*) AS n_top
-          |           FROM orders o WHERE o.o_custkey = c.c_custkey
-          |             AND o.o_orderpriority = l1.top_prio) l2
-          |  ) x
-          |WHERE seg_rank <= 5
-          |ORDER BY c_mktsegment, seg_rank""".stripMargin))
-    }),
-
-    // uncorrelated scalar subquery → cross-joined single-row AggregateRel
-    "q33_scalar_subquery" -> ((s, dir) => {
-      t(s, dir, "orders")
-      rt(s, s.sql(
-        """SELECT o_orderkey, o_totalprice FROM orders
-          |WHERE o_totalprice >
-          |  (SELECT CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-          |     / count(*) FROM orders)
-          |ORDER BY o_orderkey""".stripMargin))
-    }),
-
-    "q30_grouping_id" -> ((s, dir) => rt(s,
-      t(s, dir, "orders")
-        .cube(col("o_orderstatus"), col("o_orderpriority"))
-        .agg(count(lit(1)).as("n"), grouping_id().as("gid"))
-        .orderBy(col("gid"), asc_nulls_first("o_orderstatus"),
-          asc_nulls_first("o_orderpriority")))),
-
-    // approx aggregates, oracle-certified as PROPERTIES: the exact count /
-    // distinct-count cross-check engine-to-engine, and the approx values
-    // must land inside published error bounds (HLL++ rsd 0.05 → 3σ = 15%;
-    // percentile_approx accuracy 10000 → rank error ~n/10000, checked
-    // against the exact ±1% quantile window) — a wrong sketch flips a
-    // boolean and hash-mismatches
-    "q26_approx_aggs" -> ((s, dir) => rt(s,
-      t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"))
-        .agg(
-          count(lit(1)).as("n_rows"),
-          countDistinct(col("l_partkey")).as("nd_parts"),
-          approx_count_distinct(col("l_partkey")).as("apx_nd"),
-          percentile_approx(col("l_extendedprice"), lit(0.5), lit(10000))
-            .as("apx_med"),
-          expr("percentile(l_extendedprice, 0.49D)").as("med_lo"),
-          expr("percentile(l_extendedprice, 0.51D)").as("med_hi"))
-        .select(col("l_returnflag"), col("n_rows"), col("nd_parts"),
-          (abs(col("apx_nd") - col("nd_parts")) <=
-            col("nd_parts").cast("double") * 0.15).as("approx_parts_ok"),
-          (col("apx_med") >= col("med_lo") && col("apx_med") <= col("med_hi"))
-            .as("approx_median_ok"))
-        .orderBy("l_returnflag"))),
-
-    // map construction, element access, keys/size — map type + map literal
-    // (Literal.map field 26 / empty_map 32) certified through the wire; the
-    // output projects scalars so the oracle needs no map comparison
-    "q36_map_ops" -> ((s, dir) => rt(s, {
-      val li = t(s, dir, "lineitem").filter(col("l_orderkey") <= 200)
-      val m = map(lit("qty"), col("l_quantity").cast("double"),
-        lit("tax"), col("l_tax").cast("double"))
-      li.select(col("l_orderkey"), col("l_linenumber"),
-        m.getItem("qty").as("qty"),
-        element_at(m, "tax").as("tax"),
-        size(m).as("n_keys"),
-        array_join(map_keys(m), ",").as("keys"),
-        element_at(typedLit(Map("a" -> 1L, "b" -> 2L)), "b").as("lit_b"))
-        .orderBy("l_orderkey", "l_linenumber")
-    })),
-
-    // null-safe equality, coalesce, is_null over full-join nulls
-    "q23_null_ops" -> ((s, dir) => rt(s, {
-      val c = t(s, dir, "customer"); val o = t(s, dir, "orders")
-      c.join(o, c("c_custkey") === o("o_custkey"), "full")
-        .select(
-          (c("c_custkey") <=> o("o_custkey")).as("matched"),
-          coalesce(c("c_custkey"), o("o_custkey")).as("k"),
-          o("o_orderkey").isNull.as("no_order"))
-    })),
-  )
-
-  // --------------------------------------------------------------- oracle SQL
-  def oracleSql: Map[String, String] = parityOracles ++ pipelineOracles
-
-  /** DuckDB oracles for the pipeline ops that are hash-free and expressible
-    * in both dialects. xxhash64-based ops (minhash/simhash/sign-LSH) are
-    * engine-specific → rows-only checks (omitted here by design).
-    */
-  private def pipelineOracles: Map[String, String] = Map(
-    "d01_dedup_exact" ->
-      """SELECT md5(regexp_replace(lower(text), '\s+', ' ', 'g')) AS digest,
-        |  min(doc_id) AS keep_id, count(*) AS n_dups
-        |FROM documents GROUP BY 1 ORDER BY digest""".stripMargin,
-    "d07_incremental_dedup" ->
-      """WITH nd AS (SELECT doc_id,
-        |    md5(regexp_replace(lower(text), '\s+', ' ', 'g')) AS digest
-        |  FROM documents WHERE doc_id % 2 = 1),
-        |od AS (SELECT DISTINCT
-        |    md5(regexp_replace(lower(text), '\s+', ' ', 'g')) AS digest
-        |  FROM documents WHERE doc_id % 2 = 0)
-        |SELECT digest, min(doc_id) AS keep_id, count(*) AS n_dups
-        |FROM nd WHERE digest NOT IN (SELECT digest FROM od)
-        |GROUP BY digest ORDER BY digest""".stripMargin,
-    // identical semantics to d07 — the Bloom prefilter must not change one row
-    "d11_bloom_incremental_dedup" ->
-      """WITH nd AS (SELECT doc_id,
-        |    md5(regexp_replace(lower(text), '\s+', ' ', 'g')) AS digest
-        |  FROM documents WHERE doc_id % 2 = 1),
-        |od AS (SELECT DISTINCT
-        |    md5(regexp_replace(lower(text), '\s+', ' ', 'g')) AS digest
-        |  FROM documents WHERE doc_id % 2 = 0)
-        |SELECT digest, min(doc_id) AS keep_id, count(*) AS n_dups
-        |FROM nd WHERE digest NOT IN (SELECT digest FROM od)
-        |GROUP BY digest ORDER BY digest""".stripMargin,
-    // exact oracle for the LSH path: the testdata plants near-dup pairs at
-    // jaccard >= 0.9 and keeps everything else < 0.1, so a full-recall LSH at
-    // threshold 0.5 must return EXACTLY the unblocked all-pairs >= 0.5 set
-    // (OpsSpec asserts recall == exact on the same data)
-    "d02_minhash_pairs" ->
-      """WITH s AS (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents),
-        |sh AS (SELECT doc_id, CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-        |  ELSE list_distinct([array_to_string(toks[i:i+2], ' ') for i in range(1, len(toks)-1)]) END AS g
-        |  FROM s),
-        |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |  len(list_intersect(a.g, b.g))
-        |    / CAST(len(list_distinct(list_concat(a.g, b.g))) AS DOUBLE) AS j
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
-        |SELECT id_a, id_b, ROUND(j, 6) AS jaccard FROM p
-        |WHERE j >= 0.5 ORDER BY id_a, id_b""".stripMargin,
-    // t33: d02's exact-jaccard brute force composed with t31's md5 split
-    // replay; only cross-split pairs survive
-    "t33_split_leakage" ->
-      """WITH s AS (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents),
-        |sh AS (SELECT doc_id, CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-        |  ELSE list_distinct([array_to_string(toks[i:i+2], ' ') for i in range(1, len(toks)-1)]) END AS g
-        |  FROM s),
-        |sp AS (SELECT doc_id,
-        |    CASE WHEN hh < 'cd' THEN 'train'
-        |         WHEN hh < 'e7' THEN 'val' ELSE 'test' END AS split
-        |  FROM (SELECT doc_id,
-        |      substring(md5(CAST(doc_id AS VARCHAR) || ':' || text), 1, 2) AS hh
-        |    FROM documents)),
-        |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |  len(list_intersect(a.g, b.g))
-        |    / CAST(len(list_distinct(list_concat(a.g, b.g))) AS DOUBLE) AS j
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
-        |SELECT p.id_a, p.id_b, ROUND(p.j, 6) AS jaccard,
-        |  sa.split AS split_a, sb.split AS split_b
-        |FROM p JOIN sp sa ON p.id_a = sa.doc_id
-        |       JOIN sp sb ON p.id_b = sb.doc_id
-        |WHERE p.j >= 0.5 AND sa.split <> sb.split
-        |ORDER BY id_a, id_b""".stripMargin,
-    // exact all-pairs cosine over the base ∪ perturbed-twin union: the only
-    // pairs ≥ 0.8 are the planted twins, and the perturbation arithmetic
-    // (double widening + per-element scale) is bit-identical in both engines
-    "d05_embedding_neardup" ->
-      """WITH base AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |twin AS (SELECT vec_id + 100000000 AS vec_id,
-        |  [v[i] * (1.0 + 0.002 * (((i - 1) % 5) - 2)) for i in range(1, len(v) + 1)] AS v
-        |  FROM base),
-        |u AS (SELECT * FROM base UNION ALL SELECT * FROM twin),
-        |p AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |  list_dot_product(a.v, b.v)
-        |    / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))) AS s0
-        |  FROM u a JOIN u b ON a.vec_id < b.vec_id)
-        |SELECT id_a, id_b, ROUND(s0, 6) AS sim FROM p
-        |WHERE s0 >= 0.8 ORDER BY id_a, id_b""".stripMargin,
     // d03b: same salted-twin construction, exact all-pairs jaccard. The salt
     // interleave makes cross-doc pairs jaccard 0, so the ≥0.9 set is exactly
     // the planted twins — and every one has hamming 0 ≤ radius 3, so the
     // pigeonhole guarantee (not a measurement) makes the engine output equal
     // this ground truth.
-    "d03b_simhash_prod" ->
+    Query("d03b_simhash_prod",
       """WITH s0 AS (SELECT doc_id, string_split(lower(text), ' ') AS toks
         |  FROM documents WHERE doc_id % 5 = 0),
         |sal AS (SELECT doc_id, flatten([[toks[i], 's' || CAST(doc_id AS VARCHAR)]
@@ -3534,8 +295,20 @@ object SparkEntry {
         |    / CAST(len(list_distinct(list_concat(a.g, b.g))) AS DOUBLE) AS j
         |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
         |SELECT id_a, id_b, ROUND(j, 6) AS jaccard FROM p
-        |WHERE j >= 0.9 ORDER BY id_a, id_b""".stripMargin,
-    "d04_ngram_jaccard" ->
+        |WHERE j >= 0.9 ORDER BY id_a, id_b""".stripMargin)((s, dir) => {
+      val salted = t(s, dir, "documents").filter(col("doc_id") % 5 === 0)
+        .select(col("doc_id"),
+          expr("array_join(flatten(transform(split(lower(text), ' '), " +
+            "w -> array(w, concat('s', cast(doc_id AS STRING))))), ' ')").as("text"))
+      val twins = salted.select((col("doc_id") + 100000000L).as("doc_id"), col("text"))
+      ops.Dedup.simhashVerifiedNearDups(salted.unionAll(twins),
+          threshold = 0.9, numChunks = 4, maxHamming = 3)
+        .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
+        .orderBy("id_a", "id_b")
+    }),
+
+    // blocked exact n-gram Jaccard (no hashing — DuckDB-checkable)
+    Query("d04_ngram_jaccard",
       """WITH s AS (SELECT doc_id, lang, source, string_split(lower(text), ' ') AS toks FROM documents),
         |sh AS (SELECT doc_id, lang || '|' || source AS blk,
         |  CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
@@ -3546,8 +319,16 @@ object SparkEntry {
         |    / CAST(len(list_distinct(list_concat(a.g, b.g))) AS DOUBLE) AS j
         |  FROM sh a JOIN sh b ON a.blk = b.blk AND a.doc_id < b.doc_id)
         |SELECT blk, id_a, id_b, ROUND(j, 6) AS jaccard FROM p
-        |WHERE j >= 0.3 ORDER BY blk, id_a, id_b""".stripMargin,
-    "d12_prefix_jaccard" ->
+        |WHERE j >= 0.3 ORDER BY blk, id_a, id_b""".stripMargin)((s, dir) =>
+      ops.Dedup.ngramJaccardPairs(t(s, dir, "documents"), "doc_id", "text",
+        blockCols = Seq("lang", "source"), threshold = 0.3)
+        .select("blk", "id_a", "id_b", "jaccard").orderBy("blk", "id_a", "id_b")),
+
+    // EXACT unblocked all-pairs jaccard via prefix filtering (AllPairs/
+    // PPJoin family): rarest-first global gram order, per-doc prefix join,
+    // exact kernel verify — deterministic completeness where d02's LSH is
+    // probabilistic and d04 needs a blocking key
+    Query("d12_prefix_jaccard",
       """WITH s AS (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents),
         |sh AS (SELECT doc_id, CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
         |  ELSE list_distinct([array_to_string(toks[i:i+2], ' ') for i in range(1, len(toks)-1)]) END AS g
@@ -3558,211 +339,13 @@ object SparkEntry {
         |    / CAST(len(list_distinct(list_concat(a.g, b.g))) AS DOUBLE) AS j
         |  FROM sh2 a JOIN sh2 b ON a.doc_id < b.doc_id)
         |SELECT id_a, id_b, ROUND(j, 6) AS jaccard FROM p
-        |WHERE j >= 0.5 ORDER BY id_a, id_b""".stripMargin,
-    // NOT EXISTS, not NOT IN: the driver side is a left_anti join, and the
-    // two only agree when no NULL digests exist — anti-join semantics keep
-    // the oracle exact even if a NULL text ever enters the fixture
-    "e04_stream_incremental_dedup" ->
-      """WITH nd AS (SELECT DISTINCT md5(regexp_replace(lower(text), '\s+', ' ', 'g')) AS digest
-        |  FROM documents WHERE doc_id % 2 = 1),
-        |kd AS (SELECT DISTINCT md5(regexp_replace(lower(text), '\s+', ' ', 'g')) AS digest
-        |  FROM documents WHERE doc_id % 2 = 0)
-        |SELECT digest FROM nd
-        |WHERE NOT EXISTS (SELECT 1 FROM kd WHERE kd.digest = nd.digest)
-        |ORDER BY digest""".stripMargin,
-    // exact all-pairs jaccard across the odd/even split — the same
-    // certification technique as d02, restricted to cross pairs
-    "d10_incremental_neardup" ->
-      """WITH s AS (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents),
-        |sh AS (SELECT doc_id, CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-        |  ELSE list_distinct([array_to_string(toks[i:i+2], ' ') for i in range(1, len(toks)-1)]) END AS g
-        |  FROM s),
-        |p AS (SELECT a.doc_id AS new_id, b.doc_id AS kept_id,
-        |  len(list_intersect(a.g, b.g))
-        |    / CAST(len(list_distinct(list_concat(a.g, b.g))) AS DOUBLE) AS j
-        |  FROM sh a JOIN sh b ON a.doc_id % 2 = 1 AND b.doc_id % 2 = 0)
-        |SELECT new_id, kept_id, ROUND(j, 6) AS jaccard FROM p
-        |WHERE j >= 0.5 ORDER BY new_id, kept_id""".stripMargin,
-    "e07_stream_enrich" ->
-      """SELECT coalesce(c.c_mktsegment, 'unknown') AS segment, e.event_type,
-        |  count(*) AS n_events,
-        |  ROUND(CAST(CAST(sum(CAST(round(e.value * 100) AS BIGINT)) AS BIGINT)
-        |    AS DOUBLE) / 100, 2) AS total_value
-        |FROM events e LEFT JOIN customer c ON e.user_id = c.c_custkey
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "t28_contamination_score" ->
-      """WITH g AS (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents),
-        |ng AS (SELECT doc_id, list_distinct(CASE WHEN len(toks) < 5 THEN [array_to_string(toks, ' ')]
-        |  ELSE [array_to_string(toks[i:i+4], ' ') for i in range(1, len(toks)-3)] END) AS grams FROM g),
-        |bench AS (SELECT DISTINCT unnest(grams) AS gr FROM ng WHERE doc_id % 7 = 0),
-        |corp AS (SELECT doc_id, CAST(len(grams) AS BIGINT) AS n_grams,
-        |  unnest(grams) AS gr FROM ng WHERE doc_id % 7 <> 0),
-        |h AS (SELECT c.doc_id, c.n_grams,
-        |  CAST(sum(CASE WHEN b.gr IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits
-        |  FROM corp c LEFT JOIN bench b ON c.gr = b.gr GROUP BY 1, 2)
-        |SELECT doc_id, n_grams, n_hits,
-        |  ROUND(CAST(n_hits AS DOUBLE) / n_grams, 6) AS contamination
-        |FROM h ORDER BY doc_id""".stripMargin,
-    "d09_decontaminate" ->
-      """WITH g AS (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents),
-        |ng AS (SELECT doc_id, list_distinct(CASE WHEN len(toks) < 5 THEN [array_to_string(toks, ' ')]
-        |  ELSE [array_to_string(toks[i:i+4], ' ') for i in range(1, len(toks)-3)] END) AS grams FROM g),
-        |bench AS (SELECT DISTINCT unnest(grams) AS gr FROM ng WHERE doc_id % 7 = 0),
-        |corp AS (SELECT doc_id, unnest(grams) AS gr FROM ng WHERE doc_id % 7 <> 0)
-        |SELECT corp.doc_id AS doc_id, count(*) AS n_hits
-        |FROM corp JOIN bench ON corp.gr = bench.gr
-        |GROUP BY corp.doc_id ORDER BY doc_id""".stripMargin,
-    "d08_neardup_clusters" ->
-      """WITH RECURSIVE s AS (SELECT doc_id, lang, source, string_split(lower(text), ' ') AS toks FROM documents),
-        |sh AS (SELECT doc_id, lang || '|' || source AS blk,
-        |  CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-        |  ELSE list_distinct([array_to_string(toks[i:i+2], ' ') for i in range(1, len(toks)-1)]) END AS g
-        |  FROM s),
-        |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |  len(list_intersect(a.g, b.g))
-        |    / CAST(len(list_distinct(list_concat(a.g, b.g))) AS DOUBLE) AS j
-        |  FROM sh a JOIN sh b ON a.blk = b.blk AND a.doc_id < b.doc_id),
-        |e AS (SELECT id_a AS u, id_b AS v FROM p WHERE j >= 0.1
-        |      UNION SELECT id_b, id_a FROM p WHERE j >= 0.1),
-        |r AS (SELECT u, u AS x FROM (SELECT DISTINCT u FROM e)
-        |      UNION SELECT r.u, e.v FROM r JOIN e ON r.x = e.u)
-        |SELECT u AS node, min(x) AS cluster_id FROM r GROUP BY u ORDER BY node""".stripMargin,
-    // d13: reachability ground truth over d12's UNBLOCKED 0.5-threshold
-    // pair set — the incremental path must equal the from-scratch answer
-    "d13_incremental_clusters" ->
-      """WITH RECURSIVE s AS (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents),
-        |sh AS (SELECT doc_id, CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-        |  ELSE list_distinct([array_to_string(toks[i:i+2], ' ') for i in range(1, len(toks)-1)]) END AS g
-        |  FROM s),
-        |sh2 AS (SELECT * FROM sh WHERE len(g) > 0),
-        |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |  len(list_intersect(a.g, b.g))
-        |    / CAST(len(list_distinct(list_concat(a.g, b.g))) AS DOUBLE) AS j
-        |  FROM sh2 a JOIN sh2 b ON a.doc_id < b.doc_id),
-        |e AS (SELECT id_a AS u, id_b AS v FROM p WHERE j >= 0.5
-        |      UNION SELECT id_b, id_a FROM p WHERE j >= 0.5),
-        |r AS (SELECT u, u AS x FROM (SELECT DISTINCT u FROM e)
-        |      UNION SELECT r.u, e.v FROM r JOIN e ON r.x = e.u)
-        |SELECT u AS node, min(x) AS cluster_id FROM r GROUP BY u ORDER BY node""".stripMargin,
-    // d16: exact shared-span replay — stride-1 20-token windows as STRINGS
-    // (engine uses xxhash64 digests; counts agree because per-doc windows
-    // are distinct and a cross-side 64-bit collision is ~1e-13-improbable,
-    // d17: supplier–part incidence edges, then 3 unrolled fixed-point
-    // power-iteration rounds — all-BIGINT arithmetic (// is floor
-    // division; operands are positive, so it equals Spark's truncating
-    // DIV), so the rank units match Spark exactly; the double view is one
-    // IEEE division
-    "d17_graph_rank" ->
-      """WITH pr AS (SELECT DISTINCT CAST(l_suppkey AS BIGINT) AS id_a,
-        |    CAST(l_partkey AS BIGINT) + 1000000000 AS id_b FROM lineitem),
-        |e AS (SELECT id_a AS u, id_b AS v FROM pr
-        |      UNION SELECT id_b, id_a FROM pr),
-        |dg AS (SELECT u, CAST(count(*) AS BIGINT) AS deg FROM e GROUP BY u),
-        |ed AS (SELECT e.u, e.v, dg.deg FROM e JOIN dg ON e.u = dg.u),
-        |r0 AS (SELECT u AS node, CAST(1048576 AS BIGINT) AS ru FROM dg),
-        |r1 AS (SELECT ed.v AS node,
-        |    157286 + (85 * CAST(sum(r0.ru // ed.deg) AS BIGINT)) // 100 AS ru
-        |  FROM ed JOIN r0 ON r0.node = ed.u GROUP BY ed.v),
-        |r2 AS (SELECT ed.v AS node,
-        |    157286 + (85 * CAST(sum(r1.ru // ed.deg) AS BIGINT)) // 100 AS ru
-        |  FROM ed JOIN r1 ON r1.node = ed.u GROUP BY ed.v),
-        |r3 AS (SELECT ed.v AS node,
-        |    157286 + (85 * CAST(sum(r2.ru // ed.deg) AS BIGINT)) // 100 AS ru
-        |  FROM ed JOIN r2 ON r2.node = ed.u GROUP BY ed.v)
-        |SELECT node, ru AS rank_units,
-        |  CAST(ru AS DOUBLE) / 1048576.0 AS rank
-        |FROM r3 ORDER BY node""".stripMargin,
-    // d18: brute-force all-pairs within each lang block — levenshtein is
-    // the same unit-cost edit distance in both engines; the engine's
-    // PassJoin chunk-signature candidate generation is provably complete
-    // (an edit script of ≤ k ops leaves one of k+1 chunks untouched), so
-    // filtering the brute-force set to dist ≤ 2 is the exact ground truth
-        // d19: the oracle builds the EXPECTED canonical url from the group
-    // arithmetic (group g = doc % 50 determines scheme g%2, host, path
-    // g%25; the canonical query is always a=1&b=2) — independent of the
-    // engine's normalization code path
-    "d19_url_dedup" ->
-      """WITH d AS (SELECT doc_id, doc_id % 50 AS g FROM documents),
-        |grp AS (SELECT g, count(*) AS n_docs, min(doc_id) AS first_doc
-        |  FROM d GROUP BY g HAVING count(*) >= 2)
-        |SELECT CASE WHEN g % 2 = 0 THEN 'http' ELSE 'https' END ||
-        |    '://www.site' || g || '.com/p/' || (g % 25) || '?a=1&b=2' AS curl,
-        |  CAST(n_docs AS BIGINT) AS n_docs, first_doc
-        |FROM grp ORDER BY curl""".stripMargin,
-"d18_editdist_neardup" ->
-      """WITH b AS (SELECT doc_id, lang, substr(lower(text), 1, 64) AS k
-        |  FROM documents WHERE doc_id % 7 = 0),
-        |u AS (SELECT doc_id, lang, k FROM b
-        |  UNION ALL SELECT doc_id + 100000000, lang, 'x' || substr(k, 2) FROM b
-        |  UNION ALL SELECT doc_id + 200000000, lang, k || 'z' FROM b),
-        |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |    CAST(levenshtein(a.k, b.k) AS INTEGER) AS dist
-        |  FROM u a JOIN u b ON a.lang = b.lang AND a.doc_id < b.doc_id)
-        |SELECT id_a, id_b, dist FROM p WHERE dist <= 2
-        |ORDER BY id_a, id_b""".stripMargin,
-    "d16_shared_spans" ->
-      """WITH u AS (SELECT doc_id, text FROM documents
-        |  UNION ALL SELECT doc_id + 300000,
-        |    array_to_string(string_split(text, ' ')[1:25], ' ')
-        |      || ' qz' || CAST(doc_id AS VARCHAR)
-        |      || ' unrelated salted tail content follows here'
-        |  FROM documents WHERE doc_id % 11 = 0),
-        |s AS (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM u),
-        |w AS (SELECT doc_id, list_distinct(
-        |    CASE WHEN len(toks) < 20 THEN [array_to_string(toks, ' ')]
-        |    ELSE [array_to_string(toks[i:i+19], ' ')
-        |          for i in range(1, len(toks) - 18)] END) AS spans FROM s),
-        |e AS (SELECT doc_id, unnest(spans) AS sp FROM w),
-        |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        |      FROM e a JOIN e b ON a.sp = b.sp AND a.doc_id < b.doc_id)
-        |SELECT id_a, id_b, count(*) AS n_shared_spans FROM p
-        |GROUP BY 1, 2 ORDER BY id_a, id_b""".stripMargin,
-    // d15: exact all-ordered-pairs containment over the base ∪ extended-
-    // twin union — same 3-token-shingle convention as d13, asymmetric
-    // denominator len(a.g)
-    "d15_containment_pairs" ->
-      """WITH u AS (SELECT doc_id, text FROM documents
-        |  UNION ALL SELECT doc_id + 200000000,
-        |    text || ' zq xv extension tail tokens appended here'
-        |  FROM documents WHERE doc_id % 7 = 0),
-        |s AS (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM u),
-        |sh AS (SELECT doc_id, CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-        |  ELSE list_distinct([array_to_string(toks[i:i+2], ' ') for i in range(1, len(toks)-1)]) END AS g
-        |  FROM s),
-        |sh2 AS (SELECT * FROM sh WHERE len(g) > 0),
-        |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |  len(list_intersect(a.g, b.g)) / CAST(len(a.g) AS DOUBLE) AS c
-        |  FROM sh2 a JOIN sh2 b ON a.doc_id <> b.doc_id)
-        |SELECT id_a, id_b, ROUND(c, 6) AS containment FROM p
-        |WHERE c >= 0.9 ORDER BY id_a, id_b""".stripMargin,
-    // d14: d13's exact pair set + reachability clusters, then keep the
-    // argmax-(n_chars, −doc_id) member per cluster; unpaired docs survive
-    "d14_keep_best_per_cluster" ->
-      """WITH RECURSIVE s AS (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents),
-        |sh AS (SELECT doc_id, CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-        |  ELSE list_distinct([array_to_string(toks[i:i+2], ' ') for i in range(1, len(toks)-1)]) END AS g
-        |  FROM s),
-        |sh2 AS (SELECT * FROM sh WHERE len(g) > 0),
-        |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |  len(list_intersect(a.g, b.g))
-        |    / CAST(len(list_distinct(list_concat(a.g, b.g))) AS DOUBLE) AS j
-        |  FROM sh2 a JOIN sh2 b ON a.doc_id < b.doc_id),
-        |e AS (SELECT id_a AS u, id_b AS v FROM p WHERE j >= 0.5
-        |      UNION SELECT id_b, id_a FROM p WHERE j >= 0.5),
-        |r AS (SELECT u, u AS x FROM (SELECT DISTINCT u FROM e)
-        |      UNION SELECT r.u, e.v FROM r JOIN e ON r.x = e.u),
-        |cl AS (SELECT u AS node, min(x) AS cluster_id FROM r GROUP BY u),
-        |m AS (SELECT cl.cluster_id, d.doc_id, d.n_chars
-        |      FROM cl JOIN documents d ON d.doc_id = cl.node),
-        |w AS (SELECT cluster_id, doc_id FROM m
-        |      QUALIFY row_number() OVER (PARTITION BY cluster_id
-        |        ORDER BY n_chars DESC, doc_id ASC) = 1),
-        |losers AS (SELECT doc_id FROM m
-        |           WHERE doc_id NOT IN (SELECT doc_id FROM w))
-        |SELECT doc_id, lang, n_chars FROM documents
-        |WHERE doc_id NOT IN (SELECT doc_id FROM losers)
-        |ORDER BY doc_id""".stripMargin,
-    "d06_prepare_corpus" ->
+        |WHERE j >= 0.5 ORDER BY id_a, id_b""".stripMargin)((s, dir) =>
+      ops.Dedup.prefixFilterJaccardPairs(t(s, dir, "documents"),
+          "doc_id", "text", threshold = 0.5)
+        .orderBy("id_a", "id_b")),
+
+    // composed corpus prep: quality filter → lang-ID → exact dedup
+    Query("d06_prepare_corpus",
       """WITH m AS (SELECT doc_id, text, lang,
         |    CAST(len(regexp_extract_all(text, '\S+')) AS INTEGER) AS n_tokens,
         |    CAST(len(regexp_extract_all(text, '[.,;:!?]')) AS DOUBLE)
@@ -3804,109 +387,560 @@ object SparkEntry {
         |SELECT k.doc_id, s.digest, s.n_dups, k.lang, k.lang_pred,
         |  k.n_tokens, k.quality_score
         |FROM surv s JOIN kept k ON s.doc_id = k.doc_id
-        |ORDER BY k.doc_id""".stripMargin,
-    "s01_knn_brute" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 8),
-        |s AS (SELECT q_id, e.vec_id AS n_id,
-        |  list_dot_product(qv, e.v)
-        |    / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(e.v, e.v))) AS sim0
-        |  FROM q CROSS JOIN e WHERE e.vec_id <> q_id),
-        |r AS (SELECT q_id, n_id, sim0,
-        |  row_number() OVER (PARTITION BY q_id ORDER BY sim0 DESC, n_id ASC) AS rank
-        |  FROM s)
-        |SELECT q_id, n_id, rank, ROUND(sim0, 6) AS sim FROM r
-        |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin,
+        |ORDER BY k.doc_id""".stripMargin)((s, dir) =>
+      ops.Pipeline.prepareCorpus(t(s, dir, "documents")).orderBy("doc_id")),
+
+    // incremental dedup: the "new batch" (odd ids) against the already-kept
+    // corpus (even ids) — digest anti-join, payloads never shuffle
+    Query("d07_incremental_dedup", IncrementalDedupOracle)((s, dir) => {
+      val d = t(s, dir, "documents")
+      ops.Dedup.incrementalDedup(
+        d.filter(col("doc_id") % 2 === 1), d.filter(col("doc_id") % 2 === 0))
+        .orderBy("digest")
+    }),
+
+    // d07 restructured for mostly-novel ingest: a broadcast Bloom filter of
+    // the kept corpus's digests drops the batch's definitely-new rows before
+    // the exact anti-join (no false negatives → byte-identical output,
+    // certified by the SAME oracle as d07). At 100 TB the anti-join probe
+    // side shrinks from |batch| to |dups| + fpp·|batch|.
+    // identical semantics to d07 — the Bloom prefilter must not change one row
+    Query("d11_bloom_incremental_dedup", IncrementalDedupOracle)((s, dir) => {
+      val d = t(s, dir, "documents")
+      ops.Dedup.bloomIncrementalDedup(
+        d.filter(col("doc_id") % 2 === 1), d.filter(col("doc_id") % 2 === 0))
+        .orderBy("digest")
+    }),
+
+    // near-dup clustering: connected components (pointer-doubling label
+    // propagation) over lang-blocked jaccard pairs — the "keep one per
+    // cluster" primitive. Round 10: the WHOLE fixpoint rides as ONE wire
+    // artifact (Rel.ExtIteration — init labels, double-hop body plan,
+    // round bound, multiset-fixpoint early exit all in the plan); the
+    // consumer runs the loop. substrait 0.3 itself has no iteration, so
+    // foreign consumers loud-reject the type_url — the extension contract.
+    Query("d08_neardup_clusters",
+      """WITH RECURSIVE s AS (SELECT doc_id, lang, source, string_split(lower(text), ' ') AS toks FROM documents),
+        |sh AS (SELECT doc_id, lang || '|' || source AS blk,
+        |  CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
+        |  ELSE list_distinct([array_to_string(toks[i:i+2], ' ') for i in range(1, len(toks)-1)]) END AS g
+        |  FROM s),
+        |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+        |  len(list_intersect(a.g, b.g))
+        |    / CAST(len(list_distinct(list_concat(a.g, b.g))) AS DOUBLE) AS j
+        |  FROM sh a JOIN sh b ON a.blk = b.blk AND a.doc_id < b.doc_id),
+        |e AS (SELECT id_a AS u, id_b AS v FROM p WHERE j >= 0.1
+        |      UNION SELECT id_b, id_a FROM p WHERE j >= 0.1),
+        |r AS (SELECT u, u AS x FROM (SELECT DISTINCT u FROM e)
+        |      UNION SELECT r.u, e.v FROM r JOIN e ON r.x = e.u)
+        |SELECT u AS node, min(x) AS cluster_id FROM r GROUP BY u ORDER BY node""".stripMargin,
+      wire = false)((s, dir) => {
+      // lang+source blocks keep pair generation bounded per block (the
+      // blocking contract) — lang-only blocks go quadratic at 10x the data
+      val pairs = ops.Dedup.ngramJaccardPairs(t(s, dir, "documents"),
+        "doc_id", "text", blockCols = Seq("lang", "source"), threshold = 0.1)
+      ops.Dedup.connectedComponents(pairs, stepThroughWire = true).orderBy("node")
+    }),
+
+    // incremental near-dup clustering: yesterday's cluster labels (from
+    // the even-doc corpus) fold star-edges + today's new-batch pairs into
+    // the SAME labels a from-scratch run over all pairs produces — the
+    // daily-ingest cluster maintenance path, cost ∝ batch not history
+    // d13: reachability ground truth over d12's UNBLOCKED 0.5-threshold
+    // pair set — the incremental path must equal the from-scratch answer
+    Query("d13_incremental_clusters",
+      """WITH RECURSIVE s AS (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents),
+        |sh AS (SELECT doc_id, CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
+        |  ELSE list_distinct([array_to_string(toks[i:i+2], ' ') for i in range(1, len(toks)-1)]) END AS g
+        |  FROM s),
+        |sh2 AS (SELECT * FROM sh WHERE len(g) > 0),
+        |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+        |  len(list_intersect(a.g, b.g))
+        |    / CAST(len(list_distinct(list_concat(a.g, b.g))) AS DOUBLE) AS j
+        |  FROM sh2 a JOIN sh2 b ON a.doc_id < b.doc_id),
+        |e AS (SELECT id_a AS u, id_b AS v FROM p WHERE j >= 0.5
+        |      UNION SELECT id_b, id_a FROM p WHERE j >= 0.5),
+        |r AS (SELECT u, u AS x FROM (SELECT DISTINCT u FROM e)
+        |      UNION SELECT r.u, e.v FROM r JOIN e ON r.x = e.u)
+        |SELECT u AS node, min(x) AS cluster_id FROM r GROUP BY u ORDER BY node""".stripMargin,
+      wire = false)((s, dir) => {
+      // the pair pipeline is referenced by both CC runs and both splits —
+      // localCheckpoint computes it once (a production ingest would read
+      // yesterday's labels and today's pairs from tables anyway)
+      val pairs = ops.Dedup.prefixFilterJaccardPairs(t(s, dir, "documents"),
+        "doc_id", "text", threshold = 0.5).localCheckpoint(true)
+      val oldPairs = pairs.filter(col("id_a") % 2 === 0 && col("id_b") % 2 === 0)
+      val newBatch = pairs.filter(!(col("id_a") % 2 === 0 && col("id_b") % 2 === 0))
+      val oldLabels = ops.Dedup.connectedComponents(oldPairs)
+      ops.Dedup.incrementalConnectedComponents(oldLabels, newBatch,
+        stepThroughWire = true).orderBy("node")
+    }),
+
+    // exact directed shingle-containment pairs (|A∩B|/|A| ≥ 0.9): the
+    // near-SUPERSET detector jaccard misses (B = A + extra content).
+    // Fixture plants supersets: every 7th doc gets an id+200000000 twin with
+    // an appended tail, so original→twin containment is exactly 1.0; the
+    // DuckDB all-ordered-pairs oracle certifies precision AND recall.
+    // d15: exact all-ordered-pairs containment over the base ∪ extended-
+    // twin union — same 3-token-shingle convention as d13, asymmetric
+    // denominator len(a.g)
+    Query("d15_containment_pairs",
+      """WITH u AS (SELECT doc_id, text FROM documents
+        |  UNION ALL SELECT doc_id + 200000000,
+        |    text || ' zq xv extension tail tokens appended here'
+        |  FROM documents WHERE doc_id % 7 = 0),
+        |s AS (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM u),
+        |sh AS (SELECT doc_id, CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
+        |  ELSE list_distinct([array_to_string(toks[i:i+2], ' ') for i in range(1, len(toks)-1)]) END AS g
+        |  FROM s),
+        |sh2 AS (SELECT * FROM sh WHERE len(g) > 0),
+        |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+        |  len(list_intersect(a.g, b.g)) / CAST(len(a.g) AS DOUBLE) AS c
+        |  FROM sh2 a JOIN sh2 b ON a.doc_id <> b.doc_id)
+        |SELECT id_a, id_b, ROUND(c, 6) AS containment FROM p
+        |WHERE c >= 0.9 ORDER BY id_a, id_b""".stripMargin)((s, dir) => {
+      val base = t(s, dir, "documents").select(col("doc_id"), col("text"))
+      val ext = base.filter(col("doc_id") % 7 === 0)
+        .select((col("doc_id") + 200000000L).as("doc_id"),
+          concat(col("text"),
+            lit(" zq xv extension tail tokens appended here")).as("text"))
+      ops.Dedup.containmentPairs(base.unionAll(ext), "doc_id", "text",
+          threshold = 0.9)
+        .orderBy("id_a", "id_b")
+    }),
+
+    // exact duplicate-SPAN pairs (Lee et al. 2022 exact-substring signal):
+    // docs sharing any contiguous 20-token substring, with the count of
+    // distinct shared spans. Fixture plants quoters: every 11th doc gets an
+    // id+300000 twin whose text = the original's first 25 tokens + a salted
+    // tail → exactly 6 stride-1 spans shared per planted pair (when the
+    // source has ≥25 tokens); jaccard at these lengths is far below any
+    // near-dup threshold — the span detector is the only op that sees it.
+    // d16: exact shared-span replay — stride-1 20-token windows as STRINGS
+    // (engine uses xxhash64 digests; counts agree because per-doc windows
+    // are distinct and a cross-side 64-bit collision is ~1e-13-improbable)
+    Query("d16_shared_spans",
+      """WITH u AS (SELECT doc_id, text FROM documents
+        |  UNION ALL SELECT doc_id + 300000,
+        |    array_to_string(string_split(text, ' ')[1:25], ' ')
+        |      || ' qz' || CAST(doc_id AS VARCHAR)
+        |      || ' unrelated salted tail content follows here'
+        |  FROM documents WHERE doc_id % 11 = 0),
+        |s AS (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM u),
+        |w AS (SELECT doc_id, list_distinct(
+        |    CASE WHEN len(toks) < 20 THEN [array_to_string(toks, ' ')]
+        |    ELSE [array_to_string(toks[i:i+19], ' ')
+        |          for i in range(1, len(toks) - 18)] END) AS spans FROM s),
+        |e AS (SELECT doc_id, unnest(spans) AS sp FROM w),
+        |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
+        |      FROM e a JOIN e b ON a.sp = b.sp AND a.doc_id < b.doc_id)
+        |SELECT id_a, id_b, count(*) AS n_shared_spans FROM p
+        |GROUP BY 1, 2 ORDER BY id_a, id_b""".stripMargin)((s, dir) => {
+      val base = t(s, dir, "documents").select(col("doc_id"), col("text"))
+      val quoters = base.filter(col("doc_id") % 11 === 0)
+        .select((col("doc_id") + 300000L).as("doc_id"),
+          concat(
+            expr("array_join(slice(split(text, ' '), 1, 25), ' ')"),
+            lit(" qz"), col("doc_id").cast("string"),
+            lit(" unrelated salted tail content follows here")).as("text"))
+      // onOverflow=fail: the DuckDB oracle has no bucket cap, so the
+      // certification run raises loudly if any fixture span bucket ever
+      // reaches maxBucket (it can't silently diverge from the oracle);
+      // production callers keep the default drop-the-hot-bucket guard
+      ops.Dedup.sharedSpanPairs(base.unionAll(quoters), "doc_id", "text",
+          spanTokens = 20, onOverflow = "fail")
+        .orderBy("id_a", "id_b")
+    }),
+
+    // damped centrality (exact fixed-point power iteration) over the
+    // supplier–part incidence graph — a naturally degree-skewed bipartite
+    // graph (suppliers touch many parts, parts few suppliers), so ranks
+    // genuinely separate hubs from periphery (the d08 near-dup graph is
+    // 2 regular nodes at this SF — vacuous for a rank test). The oracle
+    // unrolls the 3 rounds as plain SQL over the same edge list and
+    // matches bit-for-bit; every round's plan rides the wire (incl. the
+    // DIV operator). Same op over d08's pairs = content-farm scoring.
+    // d17: supplier–part incidence edges, then 3 unrolled fixed-point
+    // power-iteration rounds — all-BIGINT arithmetic (// is floor
+    // division; operands are positive, so it equals Spark's truncating
+    // DIV), so the rank units match Spark exactly; the double view is one
+    // IEEE division
+    Query("d17_graph_rank",
+      """WITH pr AS (SELECT DISTINCT CAST(l_suppkey AS BIGINT) AS id_a,
+        |    CAST(l_partkey AS BIGINT) + 1000000000 AS id_b FROM lineitem),
+        |e AS (SELECT id_a AS u, id_b AS v FROM pr
+        |      UNION SELECT id_b, id_a FROM pr),
+        |dg AS (SELECT u, CAST(count(*) AS BIGINT) AS deg FROM e GROUP BY u),
+        |ed AS (SELECT e.u, e.v, dg.deg FROM e JOIN dg ON e.u = dg.u),
+        |r0 AS (SELECT u AS node, CAST(1048576 AS BIGINT) AS ru FROM dg),
+        |r1 AS (SELECT ed.v AS node,
+        |    157286 + (85 * CAST(sum(r0.ru // ed.deg) AS BIGINT)) // 100 AS ru
+        |  FROM ed JOIN r0 ON r0.node = ed.u GROUP BY ed.v),
+        |r2 AS (SELECT ed.v AS node,
+        |    157286 + (85 * CAST(sum(r1.ru // ed.deg) AS BIGINT)) // 100 AS ru
+        |  FROM ed JOIN r1 ON r1.node = ed.u GROUP BY ed.v),
+        |r3 AS (SELECT ed.v AS node,
+        |    157286 + (85 * CAST(sum(r2.ru // ed.deg) AS BIGINT)) // 100 AS ru
+        |  FROM ed JOIN r2 ON r2.node = ed.u GROUP BY ed.v)
+        |SELECT node, ru AS rank_units,
+        |  CAST(ru AS DOUBLE) / 1048576.0 AS rank
+        |FROM r3 ORDER BY node""".stripMargin,
+      wire = false)((s, dir) => {
+      val pairs = t(s, dir, "lineitem")
+        .select(col("l_suppkey").cast("long").as("id_a"),
+          (col("l_partkey").cast("long") + 1000000000L).as("id_b"))
+        .distinct()
+      ops.Dedup.graphRank(pairs, stepThroughWire = true).orderBy("node")
+    }),
+
+    // canonical-URL dedup (d19): the same page crawled five different ways
+    // — scheme/host case, default ports, utm_* tracking params, parameter
+    // order, trailing slashes, fragments — collapses to ONE canonical key.
+    // URLs are synthesized messy from doc_id (the corpus has no url
+    // column); the oracle CONSTRUCTS the expected canonical string
+    // independently from the group arithmetic, so any normalization bug
+    // (a kept port, a surviving utm param, unsorted query) breaks string
+    // equality, not just group counts. Group-by-key: one digest-width
+    // shuffle, counts + min only — d01's exact-dedup scale shape.
+    // d19: the oracle builds the EXPECTED canonical url from the group
+    // arithmetic (group g = doc % 50 determines scheme g%2, host, path
+    // g%25; the canonical query is always a=1&b=2) — independent of the
+    // engine's normalization code path
+    Query("d19_url_dedup",
+      """WITH d AS (SELECT doc_id, doc_id % 50 AS g FROM documents),
+        |grp AS (SELECT g, count(*) AS n_docs, min(doc_id) AS first_doc
+        |  FROM d GROUP BY g HAVING count(*) >= 2)
+        |SELECT CASE WHEN g % 2 = 0 THEN 'http' ELSE 'https' END ||
+        |    '://www.site' || g || '.com/p/' || (g % 25) || '?a=1&b=2' AS curl,
+        |  CAST(n_docs AS BIGINT) AS n_docs, first_doc
+        |FROM grp ORDER BY curl""".stripMargin)((s, dir) => {
+      val d2 = col("doc_id") % 2
+      val url = concat(
+        when(d2 === 0, "HTTP").otherwise("https"), lit("://"),
+        when(col("doc_id") % 4 < 2,
+          concat(lit("WWW.Site"), (col("doc_id") % 50).cast("string"), lit(".COM")))
+          .otherwise(
+            concat(lit("www.site"), (col("doc_id") % 50).cast("string"), lit(".com"))),
+        when(col("doc_id") % 5 === 0 && d2 === 0, ":80")
+          .when(col("doc_id") % 5 === 1 && d2 =!= 0, ":443")
+          .otherwise(""),
+        lit("/p/"), (col("doc_id") % 25).cast("string"),
+        when(col("doc_id") % 3 === 0, "/").otherwise(""),
+        when(col("doc_id") % 7 < 3, "?b=2&utm_source=feed&a=1")
+          .otherwise("?a=1&b=2"),
+        // the fragment carries its own '?': a parser that takes the first
+        // '?' anywhere as the query start canonicalizes these differently
+        // and breaks the oracle's constructed string (the r13 review bug)
+        when(col("doc_id") % 11 === 0, "#frag?fx=9").otherwise(""))
+      t(s, dir, "documents").select(col("doc_id"))
+        .withColumn("curl", ops.TextOps.canonicalUrl(url))
+        .groupBy("curl")
+        .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("first_doc"))
+        .filter(col("n_docs") >= 2)
+        .orderBy("curl")
+    }),
+
+    // fuzzy near-dup by BOUNDED EDIT DISTANCE over a short keyed field
+    // (here: the 64-char lowercase prefix — the fuzzy-title/header dedup
+    // real pipelines run where token Jaccard is too coarse). Two planted
+    // perturbation families certify both verify AND blocking: a
+    // substitution twin (same length) and an append twin (length +1 —
+    // exercises the cross-length chunk probe on every boundary straddle).
+    // The oracle brute-forces all in-block pairs with DuckDB's levenshtein
+    // — the op's PassJoin pigeonhole candidate set (share one of k+1
+    // chunks verbatim at shift ≤ k) is provably complete, so the sets
+    // match exactly.
+    // d18: brute-force all-pairs within each lang block — levenshtein is
+    // the same unit-cost edit distance in both engines; the engine's
+    // PassJoin chunk-signature candidate generation is provably complete
+    // (an edit script of ≤ k ops leaves one of k+1 chunks untouched), so
+    // filtering the brute-force set to dist ≤ 2 is the exact ground truth
+    Query("d18_editdist_neardup",
+      """WITH b AS (SELECT doc_id, lang, substr(lower(text), 1, 64) AS k
+        |  FROM documents WHERE doc_id % 7 = 0),
+        |u AS (SELECT doc_id, lang, k FROM b
+        |  UNION ALL SELECT doc_id + 100000000, lang, 'x' || substr(k, 2) FROM b
+        |  UNION ALL SELECT doc_id + 200000000, lang, k || 'z' FROM b),
+        |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+        |    CAST(levenshtein(a.k, b.k) AS INTEGER) AS dist
+        |  FROM u a JOIN u b ON a.lang = b.lang AND a.doc_id < b.doc_id)
+        |SELECT id_a, id_b, dist FROM p WHERE dist <= 2
+        |ORDER BY id_a, id_b""".stripMargin)((s, dir) => {
+      val base = t(s, dir, "documents").filter(col("doc_id") % 7 === 0)
+        .select(col("doc_id"), col("lang"),
+          expr("substring(lower(text), 1, 64)").as("k"))
+      val sub = base.select((col("doc_id") + 100000000L).as("doc_id"),
+        col("lang"), concat(lit("x"), expr("substring(k, 2)")).as("k"))
+      val app = base.select((col("doc_id") + 200000000L).as("doc_id"),
+        col("lang"), concat(col("k"), lit("z")).as("k"))
+      ops.Dedup.editDistanceNearDups(base.unionAll(sub).unionAll(app),
+          "doc_id", "k", blockCols = Seq("lang"), maxDist = 2)
+        .orderBy("id_a", "id_b")
+    }),
+
+    // quality-aware cluster dedup: each near-dup cluster keeps its LONGEST
+    // member (ties → smallest id) instead of an arbitrary min-id keeper —
+    // the curation rule real pipelines want. One struct-max aggregate
+    // picks winners; only ids ride the anti-join.
+    // (CC materializes rounds, so wire = false; the heavy relational
+    // stage — exact pair generation — rides the wire instead, and the
+    // per-round wire hop is d08/d13's already-certified contract)
+    // d14: d13's exact pair set + reachability clusters, then keep the
+    // argmax-(n_chars, −doc_id) member per cluster; unpaired docs survive
+    Query("d14_keep_best_per_cluster",
+      """WITH RECURSIVE s AS (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents),
+        |sh AS (SELECT doc_id, CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
+        |  ELSE list_distinct([array_to_string(toks[i:i+2], ' ') for i in range(1, len(toks)-1)]) END AS g
+        |  FROM s),
+        |sh2 AS (SELECT * FROM sh WHERE len(g) > 0),
+        |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+        |  len(list_intersect(a.g, b.g))
+        |    / CAST(len(list_distinct(list_concat(a.g, b.g))) AS DOUBLE) AS j
+        |  FROM sh2 a JOIN sh2 b ON a.doc_id < b.doc_id),
+        |e AS (SELECT id_a AS u, id_b AS v FROM p WHERE j >= 0.5
+        |      UNION SELECT id_b, id_a FROM p WHERE j >= 0.5),
+        |r AS (SELECT u, u AS x FROM (SELECT DISTINCT u FROM e)
+        |      UNION SELECT r.u, e.v FROM r JOIN e ON r.x = e.u),
+        |cl AS (SELECT u AS node, min(x) AS cluster_id FROM r GROUP BY u),
+        |m AS (SELECT cl.cluster_id, d.doc_id, d.n_chars
+        |      FROM cl JOIN documents d ON d.doc_id = cl.node),
+        |w AS (SELECT cluster_id, doc_id FROM m
+        |      QUALIFY row_number() OVER (PARTITION BY cluster_id
+        |        ORDER BY n_chars DESC, doc_id ASC) = 1),
+        |losers AS (SELECT doc_id FROM m
+        |           WHERE doc_id NOT IN (SELECT doc_id FROM w))
+        |SELECT doc_id, lang, n_chars FROM documents
+        |WHERE doc_id NOT IN (SELECT doc_id FROM losers)
+        |ORDER BY doc_id""".stripMargin,
+      wire = false)((s, dir) => {
+      val d = t(s, dir, "documents")
+      val pairs = Serializer.roundtrip(s,
+        ops.Dedup.prefixFilterJaccardPairs(d, "doc_id", "text", threshold = 0.5))
+      ops.Dedup.keepBestPerCluster(d, pairs, col("n_chars"))
+        .select("doc_id", "lang", "n_chars").orderBy("doc_id")
+    }),
+
+    // streaming upsert sink, batch twin: the foreachBatch per-wave merges
+    // (bootstrap write, then a rewrite+insert wave) replayed sequentially —
+    // last writer wins per key; EventStreamSpec proves the ACTUAL
+    // readStream + Sinks.upsertSink path (incl. checkpoint restart) lands
+    // the identical final state
+    // e09: last-writer-wins replay of the two ingest waves
+    Query("e09_stream_upsert_sink",
+      """WITH w2 AS (
+        |  SELECT doc_id, upper(text) AS text, lang FROM documents
+        |  WHERE doc_id % 3 = 0
+        |  UNION ALL
+        |  SELECT doc_id + 5000000, text, lang FROM documents
+        |  WHERE doc_id % 97 = 5),
+        |merged AS (
+        |  SELECT doc_id, text, lang FROM w2
+        |  UNION ALL
+        |  SELECT doc_id, text, lang FROM documents
+        |  WHERE doc_id NOT IN (SELECT doc_id FROM w2))
+        |SELECT doc_id, lang, md5(text) AS text_md5 FROM merged
+        |ORDER BY doc_id""".stripMargin)((s, dir) => {
+      val out = scratch("upsink", dir)
+      val docs = t(s, dir, "documents")
+        .withColumn("len_band", floor(col("n_chars") / 100).cast("int"))
+        .select("doc_id", "text", "lang", "len_band")
+      sources.Sources.writeRangePartitioned(docs, "len_band", out,
+        sortCols = Seq("doc_id")) // wave 1 = the sink's bootstrap write
+      val wave2 = docs.filter(col("doc_id") % 3 === 0)
+        .withColumn("text", upper(col("text")))
+        .unionByName(docs.filter(col("doc_id") % 97 === 5)
+          .withColumn("doc_id", col("doc_id") + 5000000L))
+      sources.Sources.upsertRangePartitioned(s, out, wave2,
+        "len_band", Seq("doc_id"), sortCols = Seq("doc_id"))
+      s.read.parquet(out)
+        .select(col("doc_id"), col("lang"), md5(col("text")).as("text_md5"))
+        .orderBy("doc_id")
+    }),
+
+    // streaming-shaped incremental dedup as its batch twin: the new batch
+    // anti-joins a static kept-digest table, then dedups in-batch — the
+    // EXACT call EventStreamSpec runs on a readStream frame (stream-static
+    // left_anti). Output = the novel digest set (deterministic either way).
+    // NOT EXISTS, not NOT IN: the driver side is a left_anti join, and the
+    // two only agree when no NULL digests exist — anti-join semantics keep
+    // the oracle exact even if a NULL text ever enters the fixture
+    Query("e04_stream_incremental_dedup",
+      """WITH nd AS (SELECT DISTINCT md5(regexp_replace(lower(text), '\s+', ' ', 'g')) AS digest
+        |  FROM documents WHERE doc_id % 2 = 1),
+        |kd AS (SELECT DISTINCT md5(regexp_replace(lower(text), '\s+', ' ', 'g')) AS digest
+        |  FROM documents WHERE doc_id % 2 = 0)
+        |SELECT digest FROM nd
+        |WHERE NOT EXISTS (SELECT 1 FROM kd WHERE kd.digest = nd.digest)
+        |ORDER BY digest""".stripMargin)((s, dir) => {
+      val d = t(s, dir, "documents")
+      streaming.EventStream.streamingIncrementalDedup(
+        d.filter(col("doc_id") % 2 === 1),
+        d.filter(col("doc_id") % 2 === 0)
+          .select(ops.TextOps.fingerprint(col("text")).as("digest")))
+        .select("digest").orderBy("digest")
+    }),
+
+    // incremental NEAR-dup: the new batch (odd ids) LSH-checked against the
+    // kept corpus (even ids) — the near-dup companion to d07's exact-digest
+    // ingest. Banding params match d02 (measured-complete on the planted
+    // pairs at threshold 0.5), so the exact cross-pairs oracle certifies.
+    // exact all-pairs jaccard across the odd/even split — the same
+    // certification technique as d02, restricted to cross pairs
+    Query("d10_incremental_neardup",
+      """WITH s AS (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents),
+        |sh AS (SELECT doc_id, CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
+        |  ELSE list_distinct([array_to_string(toks[i:i+2], ' ') for i in range(1, len(toks)-1)]) END AS g
+        |  FROM s),
+        |p AS (SELECT a.doc_id AS new_id, b.doc_id AS kept_id,
+        |  len(list_intersect(a.g, b.g))
+        |    / CAST(len(list_distinct(list_concat(a.g, b.g))) AS DOUBLE) AS j
+        |  FROM sh a JOIN sh b ON a.doc_id % 2 = 1 AND b.doc_id % 2 = 0)
+        |SELECT new_id, kept_id, ROUND(j, 6) AS jaccard FROM p
+        |WHERE j >= 0.5 ORDER BY new_id, kept_id""".stripMargin)((s, dir) => {
+      val d = t(s, dir, "documents")
+      ops.Dedup.incrementalNearDups(
+        d.filter(col("doc_id") % 2 === 1), d.filter(col("doc_id") % 2 === 0),
+        threshold = 0.5)
+        .select(col("new_id"), col("kept_id"),
+          round(col("jaccard"), 6).as("jaccard"))
+        .orderBy("new_id", "kept_id")
+    }),
+
+    // benchmark decontamination: corpus docs sharing any 5-gram with the
+    // pseudo eval set (doc_id % 7 == 0); the eval side's distinct grams
+    // broadcast, corpus grams stream — text never shuffles
+    Query("d09_decontaminate",
+      """WITH g AS (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents),
+        |ng AS (SELECT doc_id, list_distinct(CASE WHEN len(toks) < 5 THEN [array_to_string(toks, ' ')]
+        |  ELSE [array_to_string(toks[i:i+4], ' ') for i in range(1, len(toks)-3)] END) AS grams FROM g),
+        |bench AS (SELECT DISTINCT unnest(grams) AS gr FROM ng WHERE doc_id % 7 = 0),
+        |corp AS (SELECT doc_id, unnest(grams) AS gr FROM ng WHERE doc_id % 7 <> 0)
+        |SELECT corp.doc_id AS doc_id, count(*) AS n_hits
+        |FROM corp JOIN bench ON corp.gr = bench.gr
+        |GROUP BY corp.doc_id ORDER BY doc_id""".stripMargin)((s, dir) => {
+      val d = t(s, dir, "documents")
+      ops.TextOps.contaminationHits(
+        d.filter(col("doc_id") % 7 =!= 0), d.filter(col("doc_id") % 7 === 0),
+        n = 5)
+        .orderBy("doc_id")
+    }),
+
+    // embedding-cosine near-dups via multi-table sign-LSH. The raw embeddings
+    // table has NO high-cosine pairs (max ≈ 0.51), so near-dups are PLANTED:
+    // each vector gets a deterministically perturbed twin (per-element scale
+    // 1 + 0.002·((i mod 5) − 2), identical double arithmetic in DuckDB), at
+    // cosine ≈ 0.99998 to its source. At threshold 0.8 the LSH output is
+    // exactly the 500 planted (id, id+100000000) pairs — certified against the
+    // exact all-pairs oracle; miss probability per pair ≈ 3e-12 with 6×6
+    // sign-LSH, and the seeded hyperplanes make the result deterministic.
+    // exact all-pairs cosine over the base ∪ perturbed-twin union: the only
+    // pairs ≥ 0.8 are the planted twins, and the perturbation arithmetic
+    // (double widening + per-element scale) is bit-identical in both engines
+    Query("d05_embedding_neardup", EmbeddingTwinOracle)((s, dir) => {
+      val e = t(s, dir, "embeddings")
+        .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
+      val twin = e.select((col("vec_id") + 100000000L).as("vec_id"),
+        expr("transform(embedding, (x, i) -> x * (1.0D + 0.002D * ((i % 5) - 2)))")
+          .as("embedding"))
+      // the plane-count sizing hint is a cheap COUNT(*) over the RAW parquet
+      // table (column-pruned metadata scan) — without it lshNearDups would
+      // run a full extra pass over the derived union+transform frame
+      val hint = 2L * t(s, dir, "embeddings").count()
+      ops.Dedup.embeddingNearDups(e.unionAll(twin), threshold = 0.8,
+          corpusSizeHint = hint)
+        .orderBy("id_a", "id_b")
+    }),
+
+    // exact brute-force cosine top-k (broadcast queries, one corpus scan) —
+    // wire-round-tripped: the codegen'd vec_cosine kernel travels as a named
+    // extension function, the broadcast hint re-derives on the consumer side
+    Query("s01_knn_brute", ExactKnnOracle)((s, dir) => {
+      val e = t(s, dir, "embeddings")
+      ops.Similarity.bruteForceKnn(e, e.filter(col("vec_id") < 8), k = 5)
+        .orderBy("q_id", "rank")
+    }),
+
+    // ANN top-k via multi-table sign-LSH (the 100 TB path). 16 tables × 3
+    // planes reach measured recall 1.0 on this fixture (verified at sf0.01
+    // AND sf0.1), so the output equals exact brute-force kNN and the s01
+    // oracle certifies it — tables is the recall/cost knob at scale.
+    // s02 uses the DERIVED index shape (occupancy + recall math, round 8):
+    // at this fixture's similarity floor the math proves sign-LSH cannot
+    // beat an exact scan (unclustered vectors → θ/π ≈ 1/3 → the recall-
+    // preserving table count saturates the candidate volume), so the
+    // builder's documented fallback takes the brute path — recall exactly
+    // 1.0, certified by the same exact-kNN oracle, and the 30× rehearsal
+    // cost follows the scan, not the saturated bucket explosion
     // s02/s03 certify against the SAME exact brute-force kNN ground truth as
     // s01: their LSH / IVF parameters are set to measured recall 1.0 on this
     // fixture, so approximate output == exact output, row for row
-    "s02_knn_lsh" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 8),
-        |s AS (SELECT q_id, e.vec_id AS n_id,
-        |  list_dot_product(qv, e.v)
-        |    / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(e.v, e.v))) AS sim0
-        |  FROM q CROSS JOIN e WHERE e.vec_id <> q_id),
-        |r AS (SELECT q_id, n_id, sim0,
-        |  row_number() OVER (PARTITION BY q_id ORDER BY sim0 DESC, n_id ASC) AS rank
-        |  FROM s)
-        |SELECT q_id, n_id, rank, ROUND(sim0, 6) AS sim FROM r
-        |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin,
+    Query("s02_knn_lsh", ExactKnnOracle)((s, dir) => {
+      val e = t(s, dir, "embeddings")
+      ops.Similarity.lshKnn(e, e.filter(col("vec_id") < 8), k = 5,
+          planesPerTable = 0, corpusSizeHint = 0L)
+        .orderBy("q_id", "rank")
+    }),
+
+    // the explicit-config LSH candidate path (tables=16, planes=3 —
+    // measured recall 1.0 on this fixture at both gated SFs) stays
+    // certified against the same exact-kNN oracle
     // s14: same exact-kNN ground truth — the explicit-config LSH path must
     // reach recall 1.0 on this fixture (measured property, FIXTURES.md)
-    "s14_knn_lsh_explicit" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 8),
-        |s AS (SELECT q_id, e.vec_id AS n_id,
-        |  list_dot_product(qv, e.v)
-        |    / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(e.v, e.v))) AS sim0
-        |  FROM q CROSS JOIN e WHERE e.vec_id <> q_id),
-        |r AS (SELECT q_id, n_id, sim0,
-        |  row_number() OVER (PARTITION BY q_id ORDER BY sim0 DESC, n_id ASC) AS rank
-        |  FROM s)
-        |SELECT q_id, n_id, rank, ROUND(sim0, 6) AS sim FROM r
-        |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin,
-    "s03_knn_ivf" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 8),
-        |s AS (SELECT q_id, e.vec_id AS n_id,
-        |  list_dot_product(qv, e.v)
-        |    / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(e.v, e.v))) AS sim0
-        |  FROM q CROSS JOIN e WHERE e.vec_id <> q_id),
-        |r AS (SELECT q_id, n_id, sim0,
-        |  row_number() OVER (PARTITION BY q_id ORDER BY sim0 DESC, n_id ASC) AS rank
-        |  FROM s)
-        |SELECT q_id, n_id, rank, ROUND(sim0, 6) AS sim FROM r
-        |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin,
-    // s16: brute force over the corpus MINUS the tombstoned ids (queries
-    // keep vec_id < 8 — a deleted vector can still ASK, it just can't be
-    // RETURNED)
-    "s16_knn_tombstone_delete" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 8),
-        |s AS (SELECT q_id, e.vec_id AS n_id,
-        |  list_dot_product(qv, e.v)
-        |    / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(e.v, e.v))) AS sim0
-        |  FROM q CROSS JOIN e WHERE e.vec_id <> q_id AND e.vec_id % 3 <> 0),
-        |r AS (SELECT q_id, n_id, sim0,
-        |  row_number() OVER (PARTITION BY q_id ORDER BY sim0 DESC, n_id ASC) AS rank
-        |  FROM s)
-        |SELECT q_id, n_id, rank, ROUND(sim0, 6) AS sim FROM r
-        |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin,
-    // s15: the same brute-force ground truth RESTRICTED to the predicate —
-    // the filter applies to the corpus side only (queries keep vec_id < 8)
-    "s15_filtered_knn" ->
-      """WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 8),
-        |s AS (SELECT q_id, e.vec_id AS n_id,
-        |  list_dot_product(qv, e.v)
-        |    / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(e.v, e.v))) AS sim0
-        |  FROM q CROSS JOIN e WHERE e.vec_id <> q_id AND e.label = 3),
-        |r AS (SELECT q_id, n_id, sim0,
-        |  row_number() OVER (PARTITION BY q_id ORDER BY sim0 DESC, n_id ASC) AS rank
-        |  FROM s)
-        |SELECT q_id, n_id, rank, ROUND(sim0, 6) AS sim FROM r
-        |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin,
+    Query("s14_knn_lsh_explicit", ExactKnnOracle)((s, dir) => {
+      val e = t(s, dir, "embeddings")
+      ops.Similarity.lshKnn(e, e.filter(col("vec_id") < 8), k = 5,
+          tables = 16, planesPerTable = 3)
+        .orderBy("q_id", "rank")
+    }),
+
+    // ANN top-k via IVF: KMeans coarse quantizer trained on a half sample
+    // (the 100 TB path — the quantizer never sees the full corpus).
+    // nprobe=12 of 16 cells reaches measured recall 1.0 on this fixture
+    // (both SFs), so the s01 exact-kNN oracle certifies the output; the
+    // high nprobe is a property of THIS fixture (uniform random embeddings
+    // have no cluster structure for the quantizer to exploit — real corpora
+    // cluster, and nprobe/nlist is the recall/latency knob).
+    Query("s03_knn_ivf", ExactKnnOracle)((s, dir) => {
+      val e = t(s, dir, "embeddings")
+      val idx = ops.Ivf.build(e, nlist = 16, trainSampleFraction = 0.5)
+      // the KMeans TRAINING is imperative (no wire form), but the search
+      // query over the assigned index is a plain plan — that rides the wire
+      ops.Ivf.search(idx, e.filter(col("vec_id") < 8), k = 5, nprobe = 12)
+        .orderBy("q_id", "rank")
+    }),
+
+    // the SAVED-index IVF path — build, save partitioned-by-cell, load,
+    // probe: the parquet layout IS the inverted file. searchPruned applies
+    // the probed cell set as a literal partition filter, so the scan reads
+    // only the probed cell directories (PlanQualitySpec asserts the
+    // PartitionFilters + pruned file count) — at a production nlist of
+    // thousands, a probe touches a vanishing fraction of the corpus bytes.
+    // Same fixture/params as s03 (measured recall 1.0) → exact-kNN oracle.
     // s06 certifies against the same exact brute-force kNN ground truth as
     // s01/s03: the saved+loaded index probes the same 12/16 cells (measured
     // recall 1.0), so approximate output == exact output, row for row
-    "s06_knn_ivf_saved" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 8),
-        |s AS (SELECT q_id, e.vec_id AS n_id,
-        |  list_dot_product(qv, e.v)
-        |    / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(e.v, e.v))) AS sim0
-        |  FROM q CROSS JOIN e WHERE e.vec_id <> q_id),
-        |r AS (SELECT q_id, n_id, sim0,
-        |  row_number() OVER (PARTITION BY q_id ORDER BY sim0 DESC, n_id ASC) AS rank
-        |  FROM s)
-        |SELECT q_id, n_id, rank, ROUND(sim0, 6) AS sim FROM r
-        |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin,
+    Query("s06_knn_ivf_saved", ExactKnnOracle)((s, dir) => {
+      val e = t(s, dir, "embeddings")
+      val idx = ops.Ivf.build(e, nlist = 16, trainSampleFraction = 0.5)
+      val path = scratch("ivf", dir)
+      ops.Ivf.save(idx, path)
+      idx.assigned.unpersist()
+      val loaded = ops.Ivf.load(s, path)
+      ops.Ivf.searchPruned(loaded, e.filter(col("vec_id") < 8), k = 5, nprobe = 12)
+        .orderBy("q_id", "rank")
+    }),
+
+    // MMR diversity rerank: greedy λ·rel − (1−λ)·max-sim-to-selected over
+    // each query's exact top-16 shortlist — the redundancy-suppressing
+    // rerank for RAG-style retrieval. Scaled-long integer scoring → the
+    // greedy trace is deterministic and the oracle replays it step by step
+    // (unrolled in SQL). The sequential loop runs as ONE per-query
+    // aggregate-HOF over ≤16-element arrays; queries parallelize freely.
     // s12: the greedy MMR trace replayed step by step — an UNROLLED loop of
     // (candidates = shortlist ∖ selected) → (score = 7·rel − 3·max-sim-to-
     // selected, all scaled-long ints) → argmax, one CTE block per step;
     // integer scoring makes every pick order-deterministic in both engines
-    "s12_mmr_rerank" -> {
+    Query("s12_mmr_rerank", {
       val base =
         """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
           |q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 4),
@@ -3946,54 +980,201 @@ object SparkEntry {
          |SELECT s.q_id, s.n_id, s.mmr_rank, t.sim
          |FROM sel6 s JOIN top t ON s.q_id = t.q_id AND s.n_id = t.n_id
          |ORDER BY s.q_id, s.mmr_rank""".stripMargin
-    },
+    })((s, dir) =>
+      ops.Similarity.mmrRerank(t(s, dir, "embeddings"),
+          t(s, dir, "embeddings").filter(col("vec_id") < 4),
+          shortlistK = 16, k = 6)
+        .orderBy("q_id", "mmr_rank")),
+
+    // incremental IVF index ingest: build on half the corpus, save, APPEND
+    // the second half against the SAVED quantizer (no retraining, no
+    // re-assignment — old cell files untouched, ingest cost ∝ batch), then
+    // answer queries from the grown index. Certified against the exact
+    // brute-force kNN oracle over the FULL corpus at nprobe = nlist (all
+    // cells — exact by construction at any SF), so any row the ingest
+    // dropped or duplicated breaks the oracle; partition-PRUNED probing is
+    // s06's contract, ingest completeness is this one's.
     // s13: the grown (half-built, half-appended) index must answer exactly
     // like brute force over the FULL corpus — ingest loses nothing
-    "s13_ivf_incremental_ingest" ->
+    Query("s13_ivf_incremental_ingest", ExactKnnOracle)((s, dir) => {
+      val e = t(s, dir, "embeddings")
+      val idx = ops.Ivf.build(e.filter(col("vec_id") % 2 === 0),
+        nlist = 16, trainSampleFraction = 0.5)
+      val path = scratch("ivfgrow", dir)
+      ops.Ivf.save(idx, path)
+      idx.assigned.unpersist()
+      val grown = ops.Ivf.appendToSaved(s, path, e.filter(col("vec_id") % 2 === 1))
+      ops.Ivf.searchPruned(grown, e.filter(col("vec_id") < 8),
+          k = 5, nprobe = 16)
+        .orderBy("q_id", "rank")
+    }),
+
+    // tombstone DELETES on the saved index (s16): vectors retire by
+    // appending ids to a tombstone set — zero cell files touched (the
+    // delete twin of s13's append ingest); load anti-joins them out and
+    // compactSaved folds them in later. Full probe → the brute-force
+    // oracle over the corpus MINUS the deleted ids certifies exactness.
+    // s16: brute force over the corpus MINUS the tombstoned ids (queries
+    // keep vec_id < 8 — a deleted vector can still ASK, it just can't be
+    // RETURNED)
+    Query("s16_knn_tombstone_delete",
       """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 8),
         |s AS (SELECT q_id, e.vec_id AS n_id,
         |  list_dot_product(qv, e.v)
         |    / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(e.v, e.v))) AS sim0
-        |  FROM q CROSS JOIN e WHERE e.vec_id <> q_id),
+        |  FROM q CROSS JOIN e WHERE e.vec_id <> q_id AND e.vec_id % 3 <> 0),
         |r AS (SELECT q_id, n_id, sim0,
         |  row_number() OVER (PARTITION BY q_id ORDER BY sim0 DESC, n_id ASC) AS rank
         |  FROM s)
         |SELECT q_id, n_id, rank, ROUND(sim0, 6) AS sim FROM r
-        |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin,
+        |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin)((s, dir) => {
+      val e = t(s, dir, "embeddings")
+      val path = scratch("ivfdel", dir)
+      val idx = ops.Ivf.build(e, nlist = 16, trainSampleFraction = 0.5)
+      ops.Ivf.save(idx, path)
+      idx.assigned.unpersist()
+      val afterDelete = ops.Ivf.deleteFromSaved(s, path,
+        e.filter(col("vec_id") % 3 === 0).select("vec_id"))
+      ops.Ivf.search(afterDelete, e.filter(col("vec_id") < 8),
+          k = 5, nprobe = 16)
+        .orderBy("q_id", "rank")
+    }),
+
+    // metadata-FILTERED ANN: nearest neighbors among only the vectors
+    // satisfying a predicate (label = 3 here) — the retrieval shape
+    // curation pipelines issue ("nearest docs in THIS language/source").
+    // The index carries the label via metaCols, so the predicate filters
+    // the assigned frame BEFORE the probe join (and pushes down beside the
+    // cell partition filters on the saved layout). A ~10%-selective filter
+    // needs a wider probe than the unfiltered 12/16 (recall note at
+    // Ivf.searchFiltered); exactness vs the brute-force filtered oracle is
+    // the gate.
+    // s15: the same brute-force ground truth RESTRICTED to the predicate —
+    // the filter applies to the corpus side only (queries keep vec_id < 8)
+    Query("s15_filtered_knn",
+      """WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        |q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 8),
+        |s AS (SELECT q_id, e.vec_id AS n_id,
+        |  list_dot_product(qv, e.v)
+        |    / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(e.v, e.v))) AS sim0
+        |  FROM q CROSS JOIN e WHERE e.vec_id <> q_id AND e.label = 3),
+        |r AS (SELECT q_id, n_id, sim0,
+        |  row_number() OVER (PARTITION BY q_id ORDER BY sim0 DESC, n_id ASC) AS rank
+        |  FROM s)
+        |SELECT q_id, n_id, rank, ROUND(sim0, 6) AS sim FROM r
+        |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin)((s, dir) => {
+      val e = t(s, dir, "embeddings")
+      val idx = ops.Ivf.build(e, nlist = 16, trainSampleFraction = 0.5,
+        metaCols = Seq("label"))
+      ops.Ivf.searchFiltered(idx, e.filter(col("vec_id") < 8),
+          k = 5, nprobe = 16, pred = col("label") === 3)
+        .orderBy("q_id", "rank")
+    }),
+
+    // ANN top-k via product quantization + exact rerank: the corpus scans
+    // as m=16 codes per vector (16x fewer bytes than raw floats — the
+    // bandwidth knob of the ANN family, composable with IVF's cell
+    // pruning); per-query ADC lookup tables shortlist 200 candidates, an
+    // exact-cosine rerank of the shortlist restores exact ordering
+    // (measured worst true-neighbor ADC rank: 49 at sf0.01, 71 at sf0.1 —
+    // ~3x margin), so the s01 exact-kNN oracle certifies the output.
+    // KMeans codebook training is imperative; the encode+search rides the
+    // wire as a plain plan.
     // s08: the exact-rerank shortlist provably contains the true top-5
     // (measured ~3x ADC-rank margin), so PQ output == exact kNN and the
     // same brute-force ground truth certifies it
-    "s08_knn_pq" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 8),
-        |s AS (SELECT q_id, e.vec_id AS n_id,
-        |  list_dot_product(qv, e.v)
-        |    / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(e.v, e.v))) AS sim0
-        |  FROM q CROSS JOIN e WHERE e.vec_id <> q_id),
-        |r AS (SELECT q_id, n_id, sim0,
-        |  row_number() OVER (PARTITION BY q_id ORDER BY sim0 DESC, n_id ASC) AS rank
-        |  FROM s)
-        |SELECT q_id, n_id, rank, ROUND(sim0, 6) AS sim FROM r
-        |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin,
+    Query("s08_knn_pq", ExactKnnOracle)((s, dir) => {
+      val e = t(s, dir, "embeddings")
+      val model = ops.Pq.train(e, m = 16, k = 64)
+      val enc = ops.Pq.encode(e, model)
+      ops.Pq.search(enc, e, model, e.filter(col("vec_id") < 8),
+          k = 5, shortlist = 200)
+        .orderBy("q_id", "rank")
+    }),
+
+    // ANN top-k via scalar int8 quantization (s17, round 14): the corpus
+    // scans as array<tinyint> codes (4x fewer bytes than float32) against
+    // ONE global symmetric scale from a single max-abs aggregate — no
+    // codebook training, the first rung of the quantization ladder below
+    // s08's PQ. Quantized-cosine shortlist + exact rerank restores exact
+    // ordering (SqSpec measures the worst true-neighbor quantized rank:
+    // ~k on these fixtures, far under the 64 shortlist), so the s01
+    // exact-kNN oracle certifies the output.
+    // s17: the SQ8 shortlist+rerank is EXACT by the measured margin, so
+    // the oracle is the same exact-kNN replay as s01/s08
+    Query("s17_knn_sq8", ExactKnnOracle)((s, dir) => {
+      val e = t(s, dir, "embeddings")
+      val scale = ops.Sq.trainScale(e)
+      val enc = ops.Sq.encode(e, scale)
+      ops.Sq.search(enc, e, e.filter(col("vec_id") < 8), scale,
+          k = 5, shortlist = 64)
+        .orderBy("q_id", "rank")
+    }),
+
+    // ANN top-k via SIGN-BIT quantization (s18, round 14): the extreme
+    // rung of the ladder — 64-dim vectors pack into ONE bigint (32x fewer
+    // bytes than float32), candidates rank by Hamming distance (xor +
+    // bit_count, a monotone angular proxy for sign codes), and the exact
+    // rerank restores exact order. One-bit codes are a corpus-FRACTION
+    // pre-filter (worst true-neighbor Hamming rank a stable ~1/3 of the
+    // corpus across fixtures; SqSpec pins 40%): the economics are
+    // scanning 32x fewer bytes to halve exact-cosine work, so the
+    // shortlist is corpus/2 and s01's exact-kNN oracle certifies the
+    // output at every SF.
     // s18: sign-bit shortlist+rerank, exact by the measured Hamming-rank
     // margin — same exact-kNN replay
-    "s18_knn_signbit" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 8),
-        |s AS (SELECT q_id, e.vec_id AS n_id,
-        |  list_dot_product(qv, e.v)
-        |    / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(e.v, e.v))) AS sim0
-        |  FROM q CROSS JOIN e WHERE e.vec_id <> q_id),
-        |r AS (SELECT q_id, n_id, sim0,
-        |  row_number() OVER (PARTITION BY q_id ORDER BY sim0 DESC, n_id ASC) AS rank
-        |  FROM s)
-        |SELECT q_id, n_id, rank, ROUND(sim0, 6) AS sim FROM r
-        |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin,
+    Query("s18_knn_signbit", ExactKnnOracle)((s, dir) => {
+      val e = t(s, dir, "embeddings")
+      val signs = ops.Sq.signEncode(e)
+      val shortlist = math.max(128L, e.count() / 2).toInt
+      ops.Sq.searchSign(signs, e, e.filter(col("vec_id") < 8),
+          k = 5, shortlist = shortlist)
+        .orderBy("q_id", "rank")
+    }),
+
+    // IVF-SQ8 (s19, round 15): int8 codes INSIDE the cell-pruned inverted
+    // file — closes r14's "s17/s18 don't partition-prune" boundary. The
+    // saved layout partitions tinyint codes by cell, searchPruned applies
+    // the probed-cell set as a literal partition filter (PlanQualitySpec
+    // asserts PartitionFilters + a codes-only ReadSchema), the quantized-
+    // cosine shortlist ranks probed codes, exact rerank restores exact
+    // order → the s01 exact-kNN oracle certifies end-to-end (same
+    // nprobe-coverage fixture property as s03, same measured shortlist
+    // margin as s17 — IvfSqSpec pins it in-probe)
+    // s19: same exact-kNN ground truth as s01/s03/s11 — probed cells cover
+    // the true neighbors (the s03 fixture property; identical centroids
+    // and probe) and the in-probe quantized shortlist provably contains
+    // them (s17's margin argument, measured in IvfSqSpec)
+    Query("s19_knn_ivfsq", ExactKnnOracle)((s, dir) => {
+      val e = t(s, dir, "embeddings")
+      val idx = ops.IvfSq.build(e, nlist = 16, trainSampleFraction = 0.5)
+      val path = scratch("ivfsq", dir)
+      ops.IvfSq.save(idx, path)
+      val loaded = ops.IvfSq.load(s, path)
+      ops.IvfSq.searchPruned(loaded, e, e.filter(col("vec_id") < 8),
+          k = 5, nprobe = 12, shortlist = 64)
+        .orderBy("q_id", "rank")
+    }),
+
+    // large-queryset ANN (s20, round 15): the WHOLE corpus queries itself
+    // — the batch shape every other kNN entry point refuses (they
+    // broadcast the query side by contract; a 10^5-10^6-query batch needs
+    // the bucketed route). Corpus buckets to its nearest cell, queries to
+    // their nprobe cells, candidates meet in a plain shuffled cell join
+    // (neither side broadcast by construction), and rank-limit pushdown
+    // keeps the final per-query exchange at |Q|·nprobe·k skinny rows.
+    // Cells self-size from the corpus (s07's ~32/cell contract), so
+    // candidate volume stays LINEAR in |Q| as the corpus grows; at the
+    // oracle SF the self-sized nlist equals nprobe (full probe), so the
+    // exact-kNN oracle certifies EVERY query corpus-wide — above it the
+    // probe is partial and nprobe is the recall knob (the documented
+    // s02/s03 contract; BucketedKnnSpec's planted twins prove the
+    // partial-probe join).
     // s20: every vector queries the corpus — exact-kNN ground truth over
     // ALL queries (probe coverage certified corpus-wide, not just for a
     // handful of query ids)
-    "s20_knn_bucketed" ->
+    Query("s20_knn_bucketed",
       """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |s AS (SELECT q.vec_id AS q_id, e.vec_id AS n_id,
         |  list_dot_product(q.v, e.v)
@@ -4003,40 +1184,21 @@ object SparkEntry {
         |  row_number() OVER (PARTITION BY q_id ORDER BY sim0 DESC, n_id ASC) AS rank
         |  FROM s)
         |SELECT q_id, n_id, rank, ROUND(sim0, 6) AS sim FROM r
-        |WHERE rank <= 3 ORDER BY q_id, rank""".stripMargin,
-    // s19: same exact-kNN ground truth as s01/s03/s11 — probed cells cover
-    // the true neighbors (the s03 fixture property; identical centroids
-    // and probe) and the in-probe quantized shortlist provably contains
-    // them (s17's margin argument, measured in IvfSqSpec)
-    "s19_knn_ivfsq" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 8),
-        |s AS (SELECT q_id, e.vec_id AS n_id,
-        |  list_dot_product(qv, e.v)
-        |    / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(e.v, e.v))) AS sim0
-        |  FROM q CROSS JOIN e WHERE e.vec_id <> q_id),
-        |r AS (SELECT q_id, n_id, sim0,
-        |  row_number() OVER (PARTITION BY q_id ORDER BY sim0 DESC, n_id ASC) AS rank
-        |  FROM s)
-        |SELECT q_id, n_id, rank, ROUND(sim0, 6) AS sim FROM r
-        |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin,
-    // s17: the SQ8 shortlist+rerank is EXACT by the measured margin, so
-    // the oracle is the same exact-kNN replay as s01/s08
-    "s17_knn_sq8" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 8),
-        |s AS (SELECT q_id, e.vec_id AS n_id,
-        |  list_dot_product(qv, e.v)
-        |    / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(e.v, e.v))) AS sim0
-        |  FROM q CROSS JOIN e WHERE e.vec_id <> q_id),
-        |r AS (SELECT q_id, n_id, sim0,
-        |  row_number() OVER (PARTITION BY q_id ORDER BY sim0 DESC, n_id ASC) AS rank
-        |  FROM s)
-        |SELECT q_id, n_id, rank, ROUND(sim0, 6) AS sim FROM r
-        |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin,
+        |WHERE rank <= 3 ORDER BY q_id, rank""".stripMargin)((s, dir) => {
+      val e = t(s, dir, "embeddings")
+      ops.Similarity.bucketedKnn(e, e, k = 3,
+          trainSampleFraction = 0.5)
+        .orderBy("q_id", "rank")
+    }),
+
+    // weekly cohort retention (e18, round 14): users bucket into the week
+    // of their first event; each later activity week counts them at its
+    // offset, over the cohort's size. Integer epoch-weeks — no calendar
+    // convention for engines to disagree on; only narrow (user, week)
+    // pairs ever shuffle, and the cohort side joins user-keyed
     // e18: integer epoch-weeks replay; the retention window divides each
     // offset count by the cohort's offset-0 count
-    "e18_cohort_retention" ->
+    Query("e18_cohort_retention",
       """WITH wk AS (SELECT user_id,
         |    CAST(floor(epoch(ts) / 604800) AS BIGINT) AS w FROM events),
         |cohort AS (SELECT user_id, min(w) AS c0 FROM wk GROUP BY user_id),
@@ -4048,24 +1210,40 @@ object SparkEntry {
         |      ORDER BY (w - c0)) AS DOUBLE), 6) AS retention
         |FROM act JOIN cohort USING (user_id)
         |GROUP BY c0, (w - c0)
-        |ORDER BY cohort_week, week_offset""".stripMargin,
+        |ORDER BY cohort_week, week_offset""".stripMargin)((s, dir) =>
+      streaming.EventStream.cohortRetention(t(s, dir, "events"))
+        .orderBy("cohort_week", "week_offset")),
+
+    // semantic near-dup pairs via k-means cluster blocking (the SemDeDup
+    // shape): same planted-twin fixture as d05, but candidates come from
+    // data-adaptive quantizer cells (multi-probe 2) instead of random
+    // hyperplanes — the complementary scale path, with nlist as the direct
+    // occupancy knob. The exact-cosine verify makes precision exact; twins
+    // at cosine ≈ 0.99998 co-cluster under any trained centroid set (and a
+    // boundary straddle still meets via the second probe cell), so the
+    // output equals the exact all-pairs oracle. KMeans training is
+    // imperative (no wire form); the blocked pair query rides the wire.
     // s07: identical ground truth to d05 (exact all-pairs cosine over the
     // planted-twin union) — the k-means cluster blocking changes the compute
     // path, not the qualifying pair set: the exact-cosine verify pins
     // precision and the twins' co-clustering (multi-probe 2) pins recall
-    "s07_semantic_dedup" ->
-      """WITH base AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |twin AS (SELECT vec_id + 100000000 AS vec_id,
-        |  [v[i] * (1.0 + 0.002 * (((i - 1) % 5) - 2)) for i in range(1, len(v) + 1)] AS v
-        |  FROM base),
-        |u AS (SELECT * FROM base UNION ALL SELECT * FROM twin),
-        |p AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |  list_dot_product(a.v, b.v)
-        |    / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))) AS s0
-        |  FROM u a JOIN u b ON a.vec_id < b.vec_id)
-        |SELECT id_a, id_b, ROUND(s0, 6) AS sim FROM p
-        |WHERE s0 >= 0.8 ORDER BY id_a, id_b""".stripMargin,
-    "t01_langid" ->
+    Query("s07_semantic_dedup", EmbeddingTwinOracle)((s, dir) => {
+      val e = t(s, dir, "embeddings")
+        .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
+      val twin = e.select((col("vec_id") + 100000000L).as("vec_id"),
+        expr("transform(embedding, (x, i) -> x * (1.0D + 0.002D * ((i % 5) - 2)))")
+          .as("embedding"))
+      // corpus-derived nlist (~128 vectors/cell): the hint is a cheap
+      // metadata COUNT over the raw table; occupancy — and the quadratic
+      // in-cell pair count — stays bounded as the corpus grows
+      val hint = 2L * t(s, dir, "embeddings").count()
+      ops.Similarity.semanticNearDups(e.unionAll(twin), threshold = 0.8,
+          probeCells = 2, trainSampleFraction = 0.5, corpusSizeHint = hint)
+        .orderBy("id_a", "id_b")
+    }),
+
+    // language-ID heuristic + accuracy vs the labeled lang column
+    Query("t01_langid",
       """WITH sc AS (SELECT lang,
         |  (CASE WHEN text LIKE '% the %' THEN 1 ELSE 0 END +
         |   CASE WHEN text LIKE '% and %' THEN 1 ELSE 0 END +
@@ -4091,8 +1269,14 @@ object SparkEntry {
         |       ELSE 'de' END AS lang_pred
         | FROM sc)
         |SELECT lang, lang_pred, count(*) AS n FROM p
-        |GROUP BY lang, lang_pred ORDER BY lang, lang_pred""".stripMargin,
-    "t02_text_quality" ->
+        |GROUP BY lang, lang_pred ORDER BY lang, lang_pred""".stripMargin)((s, dir) =>
+      ops.TextOps.langId(t(s, dir, "documents"))
+        .groupBy(col("lang"), col("lang_pred"))
+        .agg(count(lit(1)).as("n"))
+        .orderBy("lang", "lang_pred")),
+
+    // per-document quality metrics
+    Query("t02_text_quality",
       """SELECT doc_id,
         |  CAST(len(regexp_extract_all(text, '\S+')) AS INTEGER) AS n_tokens,
         |  CAST(len(regexp_extract_all(text, '[.,;:!?]')) AS INTEGER) AS n_punct,
@@ -4111,8 +1295,111 @@ object SparkEntry {
         |        AND (CAST(length(text) AS DOUBLE)
         |          / GREATEST(len(regexp_extract_all(text, '\S+')), 1)) <= 10.0
         |      THEN 0.2 ELSE 0.0 END AS quality_score
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "t09_pack_sequences" ->
+        |FROM documents ORDER BY doc_id""".stripMargin)((s, dir) =>
+      ops.TextOps.qualityScore(t(s, dir, "documents"))
+        .select("doc_id", "n_tokens", "n_punct", "n_stopwords",
+          "punct_ratio", "stopword_ratio", "avg_token_len", "quality_score")
+        .orderBy("doc_id")),
+
+    // md5 fingerprint + whitespace and BPE-ish token counts
+    Query("t03_fingerprint",
+      """SELECT doc_id,
+        |  md5(regexp_replace(lower(text), '\s+', ' ', 'g')) AS digest,
+        |  CAST(len(regexp_extract_all(text, '\S+')) AS INTEGER) AS n_tokens,
+        |  CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS INTEGER) AS bpe_tokens
+        |FROM documents ORDER BY doc_id""".stripMargin)((s, dir) =>
+      t(s, dir, "documents").select(
+        col("doc_id"),
+        ops.TextOps.fingerprint(col("text")).as("digest"),
+        ops.TextOps.tokenCount(col("text")).as("n_tokens"),
+        ops.TextOps.bpeTokenCount(col("text")).as("bpe_tokens")).orderBy("doc_id")),
+
+    // top-k corpus vocabulary (map-side combined counts + TakeOrdered)
+    Query("t04_top_terms",
+      """SELECT term, count(*) AS n
+        |FROM (SELECT unnest(string_split(lower(text), ' ')) AS term
+        |      FROM documents)
+        |WHERE term <> ''
+        |GROUP BY term ORDER BY n DESC, term LIMIT 50""".stripMargin)((s, dir) =>
+      ops.TextOps.topTerms(t(s, dir, "documents"), k = 50)),
+
+    // exact per-language length quantiles (R-7 interpolation, = quantile_cont;
+    // exact percentile rides the wire as percentile_cont)
+    Query("t05_length_quantiles",
+      """SELECT lang,
+        |  quantile_cont(len(text), 0.25) AS p25,
+        |  quantile_cont(len(text), 0.5) AS p50,
+        |  quantile_cont(len(text), 0.75) AS p75,
+        |  count(*) AS n_docs
+        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin)((s, dir) =>
+      ops.TextOps.lengthQuantiles(t(s, dir, "documents")).orderBy("lang")),
+
+    // PII scrubbing: placeholder substitution + per-doc audit counts,
+    // certified through the wire (pure regex projection)
+    Query("t06_redact",
+      """SELECT doc_id,
+        |  CAST(len(regexp_extract_all(text,
+        |    '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}')) AS INTEGER) AS n_emails,
+        |  CAST(len(regexp_extract_all(text,
+        |    '\b\d{3}[-. ]\d{3}[-. ]\d{4}\b')) AS INTEGER) AS n_phones,
+        |  md5(regexp_replace(regexp_replace(text,
+        |    '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}', '[EMAIL]', 'g'),
+        |    '\b\d{3}[-. ]\d{3}[-. ]\d{4}\b', '[PHONE]', 'g')) AS redacted_digest
+        |FROM documents ORDER BY doc_id""".stripMargin)((s, dir) =>
+      ops.TextOps.redact(t(s, dir, "documents"))
+        .select(col("doc_id"), col("n_emails"), col("n_phones"),
+          md5(col("text_redacted")).as("redacted_digest"))
+        .orderBy("doc_id")),
+
+    // context-window chunking: fixed windows with overlap, chunk geometry
+    // and content both oracle-checked
+    Query("t07_chunking",
+      """WITH d AS (SELECT doc_id, text, len(text) AS n FROM documents),
+        |k AS (SELECT doc_id, text,
+        |        unnest(range(greatest(
+        |          CAST(ceil((n - 64) / 192.0) AS BIGINT), 1))) AS k
+        |      FROM d)
+        |SELECT doc_id, CAST(k AS INT) AS chunk_id,
+        |  CAST(len(substr(text, CAST(k * 192 + 1 AS BIGINT), 256)) AS INTEGER)
+        |    AS chunk_chars,
+        |  md5(substr(text, CAST(k * 192 + 1 AS BIGINT), 256)) AS chunk_digest
+        |FROM k ORDER BY doc_id, chunk_id""".stripMargin)((s, dir) =>
+      ops.TextOps.chunk(t(s, dir, "documents"), chunkChars = 256, overlap = 64)
+        .select(col("doc_id"), col("chunk_id"),
+          length(col("chunk")).as("chunk_chars"), md5(col("chunk")).as("chunk_digest"))
+        .orderBy("doc_id", "chunk_id")),
+
+    // per-group top-k curation: best 5 docs per language by quality score —
+    // the "keep the best N per stratum" selection step of corpus curation
+    Query("t08_top_docs_per_lang",
+      """WITH q AS (SELECT doc_id, lang,
+        |  LEAST(1.0, CAST(len(regexp_extract_all(text, '\S+')) AS DOUBLE) / 100.0) * 0.5
+        |    + LEAST(1.0, (CAST(len(regexp_extract_all(text, '\b(the|a|and|of|is|to)\b')) AS DOUBLE)
+        |        / GREATEST(len(regexp_extract_all(text, '\S+')), 1)) * 5.0) * 0.3
+        |    + CASE WHEN (CAST(length(text) AS DOUBLE)
+        |          / GREATEST(len(regexp_extract_all(text, '\S+')), 1)) >= 3.0
+        |        AND (CAST(length(text) AS DOUBLE)
+        |          / GREATEST(len(regexp_extract_all(text, '\S+')), 1)) <= 10.0
+        |      THEN 0.2 ELSE 0.0 END AS quality_score
+        |  FROM documents),
+        |r AS (SELECT lang, doc_id, quality_score,
+        |  row_number() OVER (PARTITION BY lang ORDER BY quality_score DESC, doc_id ASC) AS rk
+        |  FROM q)
+        |SELECT lang, doc_id, quality_score, rk FROM r WHERE rk <= 5
+        |ORDER BY lang, rk""".stripMargin)((s, dir) => {
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("lang").orderBy(col("quality_score").desc, col("doc_id").asc)
+      ops.TextOps.qualityScore(t(s, dir, "documents"))
+        .select(col("lang"), col("doc_id"), col("quality_score"),
+          row_number().over(w).as("rk"))
+        .filter(col("rk") <= 5)
+        .orderBy("lang", "rk")
+    }),
+
+    // sequence packing: deterministic (bin, token-offset) assignment in the
+    // per-language packed stream — the indexing step before writing packed
+    // pretraining shards; one window pass = one shuffle on the group key
+    Query("t09_pack_sequences",
       """WITH d AS (SELECT doc_id, lang,
         |  CAST(len(regexp_extract_all(text, '\S+')) AS INTEGER) AS n_tokens
         |  FROM documents),
@@ -4122,176 +1409,27 @@ object SparkEntry {
         |  FROM d)
         |SELECT doc_id, lang, n_tokens, stream_offset,
         |  CAST(FLOOR(stream_offset / 1024.0) AS BIGINT) AS bin_id
-        |FROM p ORDER BY lang, doc_id""".stripMargin,
-    // t30: the √n reweighting replayed step for step — the quantized
-    // integer weights make the normalizing sum exact in any order, and
-    // every later step is one correctly-rounded IEEE op in both engines
-    "t30_temperature_mix" ->
-      // the join key mirrors the engine's null-stratum sentinel
-      // (Pipeline.temperatureMix coalesces null domains to chr(0)||'null'
-      // so they form their own stratum instead of being dropped by the
-      // null-never-equals-null equi join)
-      """WITH c AS (SELECT COALESCE(lang, chr(0) || 'null') AS sk,
-        |             count(*) AS n FROM documents GROUP BY 1),
-        |w AS (SELECT sk, n,
-        |        CAST(floor(sqrt(CAST(n AS DOUBLE)) * 1048576) AS BIGINT) AS wq
-        |      FROM c),
-        |t AS (SELECT sum(wq) AS norm_q, sum(n) AS n_total FROM w),
-        |k AS (SELECT sk, CAST(floor(LEAST(1.0,
-        |        (0.5 * CAST(n_total AS DOUBLE)) * CAST(wq AS DOUBLE)
-        |          / (CAST(norm_q AS DOUBLE) * CAST(n AS DOUBLE))) * 65536)
-        |        AS INTEGER) AS cut
-        |      FROM w, t)
-        |SELECT d.lang, d.doc_id, k.cut
-        |FROM documents d JOIN k ON COALESCE(d.lang, chr(0) || 'null') = k.sk
-        |WHERE CAST(('0x' || substring(md5(CAST(d.doc_id AS VARCHAR)), 1, 4))
-        |    ::UBIGINT AS INTEGER) < k.cut
-        |ORDER BY lang, doc_id""".stripMargin,
-    // t31: same md5(id ':' text) rule verbatim; 2 lowercase hex chars
-    // compare identically as strings in both engines (fixed width, 0-9<a-f
-    // in ASCII); train < 'cd' = 205/256 buckets, val < 'e7' = 26, rest test
-    "t31_split_assign" ->
-      """WITH h AS (SELECT lang, n_chars,
-        |    substring(md5(CAST(doc_id AS VARCHAR) || ':' || text), 1, 2) AS hh
-        |  FROM documents),
-        |s AS (SELECT lang, n_chars,
-        |    CASE WHEN hh < 'cd' THEN 'train'
-        |         WHEN hh < 'e7' THEN 'val' ELSE 'test' END AS split
-        |  FROM h)
-        |SELECT lang, split, count(*) AS n_docs,
-        |  CAST(sum(n_chars) AS BIGINT) AS chars
-        |FROM s GROUP BY lang, split ORDER BY lang, split""".stripMargin,
-    // t32: replays the 3-token segmentation (t17's rule at n=3), computes
-    // exact per-segment doc frequency, drops segments with df >= 5, and
-    // reassembles in order; COALESCE('') matches Spark's empty array_join
-    // for fully-stripped docs
-    "t32_boilerplate_removal" ->
-      """WITH ws AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        |segl AS (SELECT doc_id,
-        |  [{'pos': k - 1, 'seg': array_to_string(w[(k-1)*3+1 : (k-1)*3+3], ' ')}
-        |   for k in range(1, GREATEST(CAST(ceil(len(w) / 3.0) AS INT), 1) + 1)] AS segs
-        |  FROM ws),
-        |seg AS (SELECT doc_id, u.pos AS pos, u.seg AS seg
-        |  FROM (SELECT doc_id, unnest(segs) AS u FROM segl)
-        |  WHERE len(u.seg) > 0),
-        |freq AS (SELECT md5(seg) AS digest, count(DISTINCT doc_id) AS dfd
-        |  FROM seg GROUP BY 1),
-        |flagged AS (SELECT s.doc_id, s.pos, s.seg,
-        |    (f.dfd < 5) AS keep
-        |  FROM seg s JOIN freq f ON md5(s.seg) = f.digest)
-        |SELECT doc_id,
-        |  COALESCE(string_agg(seg, ' ' ORDER BY pos) FILTER (WHERE keep), '')
-        |    AS text_clean,
-        |  CAST(count(*) FILTER (WHERE keep) AS BIGINT) AS n_kept,
-        |  CAST(count(*) FILTER (WHERE NOT keep) AS BIGINT) AS n_removed
-        |FROM flagged GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    // t34: the oracle replays the injection rule (chr() codepoints match the
-    // Scala \u escapes) and the same replace-diff counting verbatim
-    "t34_encoding_quality" ->
-      """WITH d AS (SELECT doc_id,
-        |  CASE WHEN doc_id % 7 = 0 THEN text || chr(195)||chr(169)||' '||
-        |    chr(226)||chr(8364)||chr(8482)||' '||chr(65533)||' '||chr(1)
-        |  ELSE text END AS t FROM documents),
-        |c AS (SELECT doc_id,
-        |  CAST(length(t) - length(replace(t, chr(65533), '')) AS BIGINT) AS n_replacement,
-        |  CAST((length(t) - length(replace(t, chr(0), ''))) +
-        |       (length(t) - length(replace(t, chr(1), ''))) +
-        |       (length(t) - length(replace(t, chr(8), ''))) AS BIGINT) AS n_ctrl,
-        |  CAST(length(t) - length(replace(t, chr(195), '')) AS BIGINT) AS n_latin1_mojibake,
-        |  CAST((length(t) - length(replace(t, chr(226)||chr(8364), ''))) // 2 AS BIGINT)
-        |    AS n_win1252_mojibake
-        |  FROM d)
-        |SELECT doc_id, n_replacement, n_ctrl, n_latin1_mojibake, n_win1252_mojibake,
-        |  (n_replacement + n_ctrl + n_latin1_mojibake + n_win1252_mojibake = 0) AS enc_ok
-        |FROM c ORDER BY doc_id""".stripMargin,
-    // t35: identical tokenization (split on single space, drop empties),
-    // every fold replayed with list functions; gopher_ok uses the UNROUNDED
-    // mean/fractions exactly as the engine does
-    "t35_gopher_quality" ->
-      """WITH w AS (SELECT doc_id,
-        |    list_filter(regexp_split_to_array(text, '\s+'), x -> len(x) > 0) AS ws,
-        |    CAST(length(text) - length(replace(text, '#', '')) AS BIGINT) +
-        |    CAST((length(text) - length(replace(text, '...', ''))) // 3 AS BIGINT)
-        |      AS n_symbols
-        |  FROM documents),
-        |m AS (SELECT doc_id,
-        |    CAST(len(ws) AS BIGINT) AS n_words,
-        |    CAST(COALESCE(list_sum(list_transform(ws, x -> len(x))), 0) AS DOUBLE)
-        |      / GREATEST(len(ws), 1) AS mean_word_len,
-        |    n_symbols,
-        |    CAST(len(list_filter(ws, x -> regexp_matches(x, '[A-Za-z]'))) AS BIGINT)
-        |      AS n_alpha,
-        |    CAST(len(list_filter(ws, x -> list_contains(
-        |      ['the','be','to','of','and','that','have','with'], lower(x)))) AS BIGINT)
-        |      AS n_stopwords
-        |  FROM w)
-        |SELECT doc_id, n_words, ROUND(mean_word_len, 6) AS mean_word_len,
-        |  n_symbols,
-        |  ROUND(CAST(n_alpha AS DOUBLE) / GREATEST(n_words, 1), 6) AS alpha_fraction,
-        |  n_stopwords,
-        |  (n_words BETWEEN 50 AND 100000
-        |   AND mean_word_len BETWEEN 3.0 AND 10.0
-        |   AND CAST(n_symbols AS DOUBLE) / GREATEST(n_words, 1) <= 0.1
-        |   AND CAST(n_alpha AS DOUBLE) / GREATEST(n_words, 1) >= 0.8
-        |   AND n_stopwords >= 2) AS gopher_ok
-        |FROM m ORDER BY doc_id""".stripMargin,
-    // t36: the BPE training replay — k rounds unrolled as chained CTEs,
-    // generated by bpeTrainOracle (same word-freq base, same wrapped-
-    // symbol seg strings, same replace semantics, same argmax tie-break)
-    "t36_bpe_train" -> bpeTrainOracle(BpeTrainRounds),
-    // t29b: the production-vocab replay — the oracle REGENERATES the 50k
-    // merge table from the same two-level construction rule (all 26×26
-    // bigrams rank i1·26+i2, then (bigram,bigram) pairs rank
-    // 676 + idx1·676 + idx2 capped at 50000), folds it into one MAP, and
-    // runs the same leftmost-lowest-rank recursion as t29. LEFT join +
-    // coalesce so a wordless document counts 0, matching the kernel.
-    "t29b_bpe_tokens_prod" ->
-      """WITH RECURSIVE
-        |letters AS (SELECT chr(97 + CAST(i AS INTEGER)) AS c,
-        |                   CAST(i AS INTEGER) AS i FROM range(26) t(i)),
-        |big AS (SELECT l1.c || l2.c AS sym, l1.i*26 + l2.i AS idx
-        |        FROM letters l1, letters l2),
-        |merges AS (
-        |  SELECT l1.c AS lhs, l2.c AS rhs, l1.i*26 + l2.i AS rk
-        |  FROM letters l1, letters l2
-        |  UNION ALL
-        |  SELECT b1.sym, b2.sym, 676 + b1.idx*676 + b2.idx
-        |  FROM big b1, big b2 WHERE 676 + b1.idx*676 + b2.idx < 50000),
-        |mm AS (SELECT MAP(list(lhs || ' ' || rhs ORDER BY rk),
-        |                  list(rk ORDER BY rk)) AS m FROM merges),
-        |w(word) AS (SELECT DISTINCT unnest(regexp_extract_all(text, '\S+'))
-        |            FROM documents),
-        |bpe(word, syms) AS (
-        |  SELECT word, regexp_extract_all(word, '.') FROM w
-        |  UNION ALL
-        |  SELECT word,
-        |    list_slice(syms, 1, best.pos - 1)
-        |      || [syms[best.pos] || syms[best.pos + 1]]
-        |      || list_slice(syms, best.pos + 2, len(syms))
-        |  FROM (
-        |    SELECT word, syms,
-        |      list_sort(list_filter(list_transform(range(1, len(syms)),
-        |        i -> struct_pack(
-        |               rk := map_extract(mm.m, syms[i] || ' ' || syms[i+1])[1],
-        |               pos := i)),
-        |        x -> x.rk IS NOT NULL))[1] AS best
-        |    FROM bpe, mm) b
-        |  WHERE best IS NOT NULL),
-        |cnt AS (SELECT word, CAST(min(len(syms)) AS INTEGER) AS nt
-        |        FROM bpe GROUP BY word),
-        |docw AS (SELECT doc_id, unnest(regexp_extract_all(text, '\S+')) AS word
-        |         FROM documents),
-        |dsum AS (SELECT doc_id, CAST(sum(nt) AS INTEGER) AS s
-        |         FROM docw JOIN cnt USING (word) GROUP BY doc_id)
-        |SELECT d.doc_id, COALESCE(dsum.s, 0) AS n_bpe2
-        |FROM documents d LEFT JOIN dsum USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
+        |FROM p ORDER BY lang, doc_id""".stripMargin)((s, dir) => {
+      val d = t(s, dir, "documents").select(col("doc_id"), col("lang"),
+        ops.TextOps.tokenCount(col("text")).as("n_tokens"))
+      ops.Pipeline.packSequences(d, "n_tokens", "doc_id",
+        budget = 1024, byCols = Seq("lang"))
+        .orderBy("lang", "doc_id")
+    }),
+
+    // Subword (BPE) tokenization (round 9): deterministic greedy merges
+    // over the compiled-in v1 table via the codegen'd bpe_count kernel
+    // (riding the wire as a named scalar fn), feeding packSequences so
+    // packing budgets count SUBWORDS, not whitespace tokens. The oracle
+    // replays the merge table as a recursive join-loop over the (bounded)
+    // distinct-word set — an independent SQL implementation of the same
+    // public algorithm.
     // t29: independent SQL replay of greedy BPE — the v1 merge table rides
     // as a literal MAP and each recursion step merges the leftmost
     // occurrence of the lowest-rank pair (equivalent to the kernel's batch
     // merge under the table's construction invariant; BpeSpec property-
     // checks that). Terminal count per word = min symbol-list length.
-    "t29_bpe_tokens" ->
+    Query("t29_bpe_tokens",
       """WITH RECURSIVE
         |w(word) AS (SELECT DISTINCT unnest(regexp_extract_all(text, '\S+'))
         |            FROM documents),
@@ -4332,264 +1470,404 @@ object SparkEntry {
         |      FROM d)
         |SELECT lang, doc_id, n_bpe,
         |  CAST(FLOOR(strm / 2048.0) AS BIGINT) AS bin_id
-        |FROM p ORDER BY lang, doc_id""".stripMargin,
-    "s05_quantize" ->
-      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-        |s AS (SELECT vec_id, e,
-        |        list_max(list_transform(e, x -> abs(x))) / 127.0 AS sc FROM v),
-        |x AS (SELECT vec_id, ROUND(sc, 9) AS scale,
-        |        unnest(CASE WHEN sc = 0 THEN list_transform(e, x -> 0)
-        |               ELSE list_transform(e, x -> CAST(round(x / sc) AS INTEGER)) END) AS q,
-        |        CAST(generate_subscripts(e, 1) AS INTEGER) AS idx
-        |      FROM s)
-        |SELECT vec_id, idx, q, scale FROM x ORDER BY vec_id, idx""".stripMargin,
-    "t13_tfidf" ->
-      """WITH toks AS (SELECT doc_id,
-        |    unnest(list_filter(string_split(lower(text), ' '), w -> w <> '')) AS term
-        |  FROM documents),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-        |n AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents),
-        |idf AS (SELECT term, count(*) AS df_t FROM tf GROUP BY 1),
-        |sc AS (SELECT f.doc_id, f.term, f.tf,
-        |        ROUND(f.tf * (ln((n.n_docs + 1) / CAST(i.df_t + 1 AS DOUBLE)) + 1.0), 6) AS score
-        |       FROM tf f, idf i, n WHERE f.term = i.term),
-        |rk AS (SELECT *, row_number() OVER (PARTITION BY doc_id
-        |         ORDER BY score DESC, term ASC) AS rnk FROM sc)
-        |SELECT doc_id, CAST(rnk AS INTEGER) AS rk, term, tf, score
-        |FROM rk WHERE rnk <= 3 ORDER BY doc_id, rk""".stripMargin,
-    "t15_pack_efficiency" ->
-      """WITH d AS (SELECT doc_id, lang,
-        |  CAST(len(regexp_extract_all(text, '\S+')) AS INTEGER) AS n_tokens
-        |  FROM documents),
-        |p AS (SELECT doc_id, lang, n_tokens,
-        |  CAST(COALESCE(SUM(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS stream_offset
-        |  FROM d),
-        |b AS (SELECT lang, CAST(FLOOR(stream_offset / 1024.0) AS BIGINT) AS bin_id,
-        |        count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS n_tokens
-        |      FROM p GROUP BY 1, 2)
-        |SELECT lang, bin_id, n_docs, n_tokens,
-        |  ROUND(LEAST(n_tokens, 1024) / 1024.0, 6) AS fill_frac
-        |FROM b ORDER BY lang, bin_id""".stripMargin,
-    "p03_corpus_diff" ->
-      """WITH od AS (SELECT DISTINCT
-        |    md5(regexp_replace(lower(text), '\s+', ' ', 'g')) AS digest
-        |  FROM documents WHERE doc_id % 3 <> 0),
-        |nd AS (SELECT DISTINCT
-        |    md5(regexp_replace(lower(text), '\s+', ' ', 'g')) AS digest
-        |  FROM documents WHERE doc_id % 3 <> 1)
-        |SELECT COALESCE(od.digest, nd.digest) AS digest,
-        |  CASE WHEN od.digest IS NULL THEN 'added'
-        |       WHEN nd.digest IS NULL THEN 'removed'
-        |       ELSE 'kept' END AS status
-        |FROM od FULL OUTER JOIN nd ON od.digest = nd.digest
-        |ORDER BY digest""".stripMargin,
-    "p02_skew_report" ->
-      """WITH c AS (SELECT l_suppkey AS key, count(*) AS n
-        |           FROM lineitem GROUP BY 1),
-        |t AS (SELECT sum(n) AS total FROM c)
-        |SELECT key, n, ROUND(n / CAST(total AS DOUBLE), 6) AS share
-        |FROM c, t ORDER BY n DESC, key ASC LIMIT 20""".stripMargin,
-    "p04_bucketed_join" ->
-      """SELECT c_nationkey, count(*) AS n_orders,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_nationkey ORDER BY c_nationkey""".stripMargin,
-    "p05_sketch_cardinality" ->
-      """SELECT lang, count(DISTINCT text) AS exact_distinct, TRUE AS est_ok
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-    "p06_sketch_quantiles" ->
-      "SELECT count(*) AS n, TRUE AS p50_ok, TRUE AS p95_ok FROM documents",
-    "p07_cms_heavy_hitters" ->
-      """WITH c AS (SELECT l_suppkey, count(*) AS exact_n
-        |           FROM lineitem GROUP BY 1)
-        |SELECT l_suppkey, exact_n, TRUE AS est_ok FROM c
-        |ORDER BY exact_n DESC, l_suppkey ASC LIMIT 20""".stripMargin,
-    "p20_freq_items" ->
-      """WITH c AS (SELECT l_suppkey, count(*) AS exact_n
-        |           FROM lineitem GROUP BY 1)
-        |SELECT l_suppkey, exact_n, TRUE AS est_ok FROM c
-        |ORDER BY exact_n DESC, l_suppkey ASC LIMIT 20""".stripMargin,
-    "p08_compaction" ->
-      "SELECT doc_id, lang, n_chars FROM documents ORDER BY doc_id",
-    "p09_range_layout" ->
-      """SELECT doc_id, lang, n_chars FROM documents
-        |WHERE floor(n_chars / 100) = 2 ORDER BY doc_id""".stripMargin,
-    // p10: the z-order rewrite must be row-lossless — a 2-D box filter over
-    // the relaid-out table equals the same filter over the source
-    "p10_zorder_layout" ->
-      """SELECT doc_id, lang, n_chars FROM documents
-        |WHERE doc_id BETWEEN 100 AND 300 AND n_chars BETWEEN 150 AND 350
-        |ORDER BY doc_id""".stripMargin,
-    "p19_skipping_report" ->
-      """WITH b AS (SELECT CAST(floor(n_chars / 100) AS INTEGER) AS band,
-        |    CAST(count(*) AS BIGINT) AS n_rows,
-        |    CAST(min(n_chars) AS DOUBLE) AS vmin,
-        |    CAST(max(n_chars) AS DOUBLE) AS vmax
-        |  FROM documents GROUP BY 1)
-        |SELECT band, n_rows, vmin, vmax,
-        |  (vmax < 250 OR vmin > 449) AS pruned,
-        |  CASE WHEN vmax < 250 OR vmin > 449 THEN 0 ELSE n_rows END
-        |    AS rows_scanned
-        |FROM b ORDER BY band""".stripMargin,
-    // p13: exact join sizes DuckDB-checked; the inner-product estimates are
-    // certified in-query against the formal CMS bound
-    // e09: last-writer-wins replay of the two ingest waves
-    "e09_stream_upsert_sink" ->
-      """WITH w2 AS (
-        |  SELECT doc_id, upper(text) AS text, lang FROM documents
-        |  WHERE doc_id % 3 = 0
+        |FROM p ORDER BY lang, doc_id""".stripMargin)((s, dir) => {
+      val d = t(s, dir, "documents").select(col("doc_id"), col("lang"),
+        graft.functions.BpeFunctions.bpeCount(col("text")).as("n_bpe"))
+      ops.Pipeline.packSequences(d, "n_bpe", "doc_id",
+          budget = 2048, byCols = Seq("lang"))
+        .select("lang", "doc_id", "n_bpe", "bin_id")
+        .orderBy("lang", "doc_id")
+    }),
+
+    // t29b: BPE counting at a PRODUCTION vocabulary (50,000 merges) — the
+    // table is deterministically generated (so the oracle regenerates the
+    // identical table in SQL), honors the same construction invariant as
+    // v1, and ships to executors as a Spark BROADCAST read by the
+    // codegen'd kernel — the side-channel pattern a real trained tokenizer
+    // needs at 1000 executors. Zero shuffle; the 50k-entry rank map
+    // exercises real hash-lookup behavior a 28-entry table never does.
+    // t29b: the production-vocab replay — the oracle REGENERATES the 50k
+    // merge table from the same two-level construction rule (all 26×26
+    // bigrams rank i1·26+i2, then (bigram,bigram) pairs rank
+    // 676 + idx1·676 + idx2 capped at 50000), folds it into one MAP, and
+    // runs the same leftmost-lowest-rank recursion as t29. LEFT join +
+    // coalesce so a wordless document counts 0, matching the kernel.
+    Query("t29b_bpe_tokens_prod",
+      """WITH RECURSIVE
+        |letters AS (SELECT chr(97 + CAST(i AS INTEGER)) AS c,
+        |                   CAST(i AS INTEGER) AS i FROM range(26) t(i)),
+        |big AS (SELECT l1.c || l2.c AS sym, l1.i*26 + l2.i AS idx
+        |        FROM letters l1, letters l2),
+        |merges AS (
+        |  SELECT l1.c AS lhs, l2.c AS rhs, l1.i*26 + l2.i AS rk
+        |  FROM letters l1, letters l2
         |  UNION ALL
-        |  SELECT doc_id + 5000000, text, lang FROM documents
-        |  WHERE doc_id % 97 = 5),
-        |merged AS (
-        |  SELECT doc_id, text, lang FROM w2
+        |  SELECT b1.sym, b2.sym, 676 + b1.idx*676 + b2.idx
+        |  FROM big b1, big b2 WHERE 676 + b1.idx*676 + b2.idx < 50000),
+        |mm AS (SELECT MAP(list(lhs || ' ' || rhs ORDER BY rk),
+        |                  list(rk ORDER BY rk)) AS m FROM merges),
+        |w(word) AS (SELECT DISTINCT unnest(regexp_extract_all(text, '\S+'))
+        |            FROM documents),
+        |bpe(word, syms) AS (
+        |  SELECT word, regexp_extract_all(word, '.') FROM w
         |  UNION ALL
-        |  SELECT doc_id, text, lang FROM documents
-        |  WHERE doc_id NOT IN (SELECT doc_id FROM w2))
-        |SELECT doc_id, lang, md5(text) AS text_md5 FROM merged
-        |ORDER BY doc_id""".stripMargin,
-    // p21: the MERGE rule replayed relationally — every change key leaves
-    // the base once, non-delete change rows re-insert (a U+D key conflict
-    // therefore keeps the updated row, the engine's documented resolution)
-    "p21_merge_into" ->
-      """WITH mods AS (SELECT doc_id, upper(text) AS text, lang, n_chars
-        |              FROM documents WHERE doc_id % 13 = 3),
-        |ins AS (SELECT doc_id + 10000000 AS doc_id, text, lang, n_chars
-        |        FROM documents WHERE doc_id % 101 = 7),
-        |delk AS (SELECT doc_id FROM documents WHERE doc_id % 17 = 5),
-        |bk AS (SELECT doc_id FROM mods UNION SELECT doc_id FROM ins
-        |       UNION SELECT doc_id FROM delk),
-        |final AS (
-        |  SELECT doc_id, text, lang, n_chars FROM documents
-        |  WHERE doc_id NOT IN (SELECT doc_id FROM bk)
-        |  UNION ALL SELECT * FROM mods UNION ALL SELECT * FROM ins)
-        |SELECT doc_id, lang, n_chars, md5(text) AS text_md5
-        |FROM final ORDER BY doc_id""".stripMargin,
-    // p24: identical closed form to p23 — the stream must land the same
-    // two version states the batch commits did
-    "p24_stream_delta_ingest" ->
-      """WITH v1 AS (SELECT doc_id, lang, n_chars FROM documents
-        |            WHERE doc_id % 3 <= 1),
-        |v2 AS (SELECT doc_id, lang,
-        |    CASE WHEN lang = 'en' AND doc_id % 3 = 1 AND doc_id % 5 = 0
-        |      THEN -n_chars ELSE n_chars END AS n_chars
-        |  FROM documents
-        |  WHERE (doc_id % 3 <= 1 AND NOT (lang = 'en' AND doc_id % 6 = 0))
-        |     OR (lang = 'en' AND doc_id % 3 = 2))
-        |SELECT doc_id, lang, n_chars, CAST(1 AS BIGINT) AS version FROM v1
-        |UNION ALL
-        |SELECT doc_id, lang, n_chars, CAST(2 AS BIGINT) AS version FROM v2
-        |ORDER BY version, doc_id""".stripMargin,
-    // p23: both delta-version reads replayed closed-form — v1 is the
-    // initial load, v2 applies the en-only I/U/D rules
-    "p23_delta_commits" ->
-      """WITH v1 AS (SELECT doc_id, lang, n_chars FROM documents
-        |            WHERE doc_id % 3 <= 1),
-        |v2 AS (SELECT doc_id, lang,
-        |    CASE WHEN lang = 'en' AND doc_id % 3 = 1 AND doc_id % 5 = 0
-        |      THEN -n_chars ELSE n_chars END AS n_chars
-        |  FROM documents
-        |  WHERE (doc_id % 3 <= 1 AND NOT (lang = 'en' AND doc_id % 6 = 0))
-        |     OR (lang = 'en' AND doc_id % 3 = 2))
-        |SELECT doc_id, lang, n_chars, CAST(1 AS BIGINT) AS version FROM v1
-        |UNION ALL
-        |SELECT doc_id, lang, n_chars, CAST(2 AS BIGINT) AS version FROM v2
-        |ORDER BY version, doc_id""".stripMargin,
-    // p25: the diff replayed as EXCEPT ALL pairs over the same two
-    // closed-form version states p23's oracle constructs
-    // p26: every labeled read replays from the base predicates — the
-    // storage mechanics (absolute-path manifest, divergence isolation)
-    // are exactly what make these four selections the right answers
-    "p26_shallow_clone" ->
-      """SELECT doc_id, lang, n_chars, 'clone_v1' AS which
-        |FROM documents WHERE doc_id % 3 = 0
-        |UNION ALL
-        |SELECT doc_id, lang, n_chars, 'clone_v2' AS which
-        |FROM documents WHERE doc_id % 3 = 0 OR doc_id % 7 = 1
-        |UNION ALL
-        |SELECT doc_id, lang, n_chars, 'src_v1' AS which
-        |FROM documents WHERE doc_id % 3 = 0
-        |UNION ALL
-        |SELECT doc_id, lang, n_chars, 'src_v2' AS which
-        |FROM documents WHERE doc_id % 3 <= 1
-        |ORDER BY which, doc_id""".stripMargin,
-    "p25_version_diff" ->
-      """WITH v1 AS (SELECT doc_id, lang, n_chars FROM documents
-        |            WHERE doc_id % 3 <= 1),
-        |v2 AS (SELECT doc_id, lang,
-        |    CASE WHEN lang = 'en' AND doc_id % 3 = 1 AND doc_id % 5 = 0
-        |      THEN -n_chars ELSE n_chars END AS n_chars
-        |  FROM documents
-        |  WHERE (doc_id % 3 <= 1 AND NOT (lang = 'en' AND doc_id % 6 = 0))
-        |     OR (lang = 'en' AND doc_id % 3 = 2)),
-        |a AS (SELECT * FROM v2 EXCEPT ALL SELECT * FROM v1),
-        |r AS (SELECT * FROM v1 EXCEPT ALL SELECT * FROM v2)
-        |SELECT doc_id, lang, n_chars, 'A' AS change FROM a
-        |UNION ALL
-        |SELECT doc_id, lang, n_chars, 'R' AS change FROM r
-        |ORDER BY change, doc_id""".stripMargin,
-    // p22: both version reads replayed closed-form from the commit rules
-    "p22_time_travel" ->
-      """SELECT doc_id, lang, n_chars, CAST(1 AS BIGINT) AS version
-        |FROM documents WHERE doc_id % 3 = 0
-        |UNION ALL
-        |SELECT doc_id, lang, n_chars, CAST(2 AS BIGINT) AS version
-        |FROM documents WHERE doc_id % 3 <= 1
-        |ORDER BY version, doc_id""".stripMargin,
-    "p14_cow_upsert" ->
-      """WITH mods AS (SELECT doc_id, upper(text) AS text, lang, n_chars
-        |              FROM documents WHERE doc_id % 13 = 3),
-        |ins AS (SELECT doc_id + 10000000 AS doc_id, text, lang, n_chars
-        |        FROM documents WHERE doc_id % 101 = 7),
-        |batch AS (SELECT * FROM mods UNION ALL SELECT * FROM ins),
-        |final AS (
-        |  SELECT doc_id, text, lang, n_chars FROM documents
-        |  WHERE doc_id NOT IN (SELECT doc_id FROM batch)
-        |  UNION ALL SELECT * FROM batch)
-        |SELECT doc_id, lang, n_chars, md5(text) AS text_md5
-        |FROM final ORDER BY doc_id""".stripMargin,
-    "p13_join_size_estimate" ->
-      """SELECT
-        |  (SELECT count(*) FROM lineitem JOIN orders ON l_orderkey = o_orderkey)
-        |    AS exact_join,
-        |  (SELECT CAST(sum(c * c) AS BIGINT) FROM
-        |    (SELECT count(*) AS c FROM lineitem GROUP BY l_suppkey)) AS exact_f2,
-        |  TRUE AS join_ok, TRUE AS f2_ok""".stripMargin,
-    // p12: exact version cardinalities DuckDB-checked; the sketch estimates
-    // are certified in-query (TRUE columns) — deterministic given the
-    // default datasketches seed
-    "p12_theta_overlap" ->
-      """SELECT
-        |  CAST(sum(CASE WHEN doc_id % 3 <> 0 THEN 1 ELSE 0 END) AS BIGINT) AS exact_a,
-        |  CAST(sum(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS exact_b,
-        |  CAST(sum(CASE WHEN doc_id % 3 <> 0 AND doc_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS exact_common,
-        |  TRUE AS a_ok, TRUE AS b_ok, TRUE AS common_ok, TRUE AS removed_ok
-        |FROM documents""".stripMargin,
-    // p11: the bloom-prefiltered join must equal the PLAIN inner join —
-    // the runtime filter is a pure shuffle reduction, never a semantics change
-    "p11_bloom_join" ->
-      """SELECT l_returnflag,
-        |  CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
-        |  count(*) AS n_lines
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE o_orderpriority = '1-URGENT'
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "t18_negative_pairs" ->
+        |  SELECT word,
+        |    list_slice(syms, 1, best.pos - 1)
+        |      || [syms[best.pos] || syms[best.pos + 1]]
+        |      || list_slice(syms, best.pos + 2, len(syms))
+        |  FROM (
+        |    SELECT word, syms,
+        |      list_sort(list_filter(list_transform(range(1, len(syms)),
+        |        i -> struct_pack(
+        |               rk := map_extract(mm.m, syms[i] || ' ' || syms[i+1])[1],
+        |               pos := i)),
+        |        x -> x.rk IS NOT NULL))[1] AS best
+        |    FROM bpe, mm) b
+        |  WHERE best IS NOT NULL),
+        |cnt AS (SELECT word, CAST(min(len(syms)) AS INTEGER) AS nt
+        |        FROM bpe GROUP BY word),
+        |docw AS (SELECT doc_id, unnest(regexp_extract_all(text, '\S+')) AS word
+        |         FROM documents),
+        |dsum AS (SELECT doc_id, CAST(sum(nt) AS INTEGER) AS s
+        |         FROM docw JOIN cnt USING (word) GROUP BY doc_id)
+        |SELECT d.doc_id, COALESCE(dsum.s, 0) AS n_bpe2
+        |FROM documents d LEFT JOIN dsum USING (doc_id)
+        |ORDER BY doc_id""".stripMargin)((s, dir) =>
+      t(s, dir, "documents")
+        .select(col("doc_id"),
+          graft.functions.BpeFunctions.bpeCountV2(col("text")).as("n_bpe2"))
+        .orderBy("doc_id")),
+
+    // temperature-based domain rebalance (round 9): per-language keep
+    // rates DERIVED from the corpus (∝ √n_d, τ = 0.5 Pile/DoReMi style,
+    // scaled to a 50% target) — the cut column certifies the rate
+    // derivation itself, the kept set certifies the md5-draw decision
+    // t30: the √n reweighting replayed step for step — the quantized
+    // integer weights make the normalizing sum exact in any order, and
+    // every later step is one correctly-rounded IEEE op in both engines
+    Query("t30_temperature_mix",
+      // the join key mirrors the engine's null-stratum sentinel
+      // (Pipeline.temperatureMix coalesces null domains to chr(0)||'null'
+      // so they form their own stratum instead of being dropped by the
+      // null-never-equals-null equi join)
+      """WITH c AS (SELECT COALESCE(lang, chr(0) || 'null') AS sk,
+        |             count(*) AS n FROM documents GROUP BY 1),
+        |w AS (SELECT sk, n,
+        |        CAST(floor(sqrt(CAST(n AS DOUBLE)) * 1048576) AS BIGINT) AS wq
+        |      FROM c),
+        |t AS (SELECT sum(wq) AS norm_q, sum(n) AS n_total FROM w),
+        |k AS (SELECT sk, CAST(floor(LEAST(1.0,
+        |        (0.5 * CAST(n_total AS DOUBLE)) * CAST(wq AS DOUBLE)
+        |          / (CAST(norm_q AS DOUBLE) * CAST(n AS DOUBLE))) * 65536)
+        |        AS INTEGER) AS cut
+        |      FROM w, t)
+        |SELECT d.lang, d.doc_id, k.cut
+        |FROM documents d JOIN k ON COALESCE(d.lang, chr(0) || 'null') = k.sk
+        |WHERE CAST(('0x' || substring(md5(CAST(d.doc_id AS VARCHAR)), 1, 4))
+        |    ::UBIGINT AS INTEGER) < k.cut
+        |ORDER BY lang, doc_id""".stripMargin)((s, dir) =>
+      ops.Pipeline.temperatureMix(
+          t(s, dir, "documents").select("doc_id", "lang"),
+          "doc_id", "lang", targetFraction = 0.5)
+        .select("lang", "doc_id", "cut")
+        .orderBy("lang", "doc_id")),
+
+    // deterministic leakage-free train/val/test split: assignment is a
+    // pure function of (id, text) content (md5 → 256 buckets → 80/10/10),
+    // replayable bit-identically on any engine/partitioning — the split
+    // rule itself is the operator, certified by per-(lang, split) counts
+    // and char totals (sum over ~256 buckets: any misassigned row moves a
+    // total). Per-row map work only: no shuffle, no stored seed.
+    // t31: same md5(id ':' text) rule verbatim; 2 lowercase hex chars
+    // compare identically as strings in both engines (fixed width, 0-9<a-f
+    // in ASCII); train < 'cd' = 205/256 buckets, val < 'e7' = 26, rest test
+    Query("t31_split_assign",
+      """WITH h AS (SELECT lang, n_chars,
+        |    substring(md5(CAST(doc_id AS VARCHAR) || ':' || text), 1, 2) AS hh
+        |  FROM documents),
+        |s AS (SELECT lang, n_chars,
+        |    CASE WHEN hh < 'cd' THEN 'train'
+        |         WHEN hh < 'e7' THEN 'val' ELSE 'test' END AS split
+        |  FROM h)
+        |SELECT lang, split, count(*) AS n_docs,
+        |  CAST(sum(n_chars) AS BIGINT) AS chars
+        |FROM s GROUP BY lang, split ORDER BY lang, split""".stripMargin)((s, dir) =>
+      ops.TextOps.splitAssign(t(s, dir, "documents"))
+        .groupBy("lang", "split")
+        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("chars"))
+        .orderBy("lang", "split")),
+
+    // CCNet-style boilerplate removal — the inverse of t17: 3-token segments
+    // whose corpus document-frequency reaches 5 are dropped from EVERY doc
+    // (cross-doc repetition = boilerplate); docs reassemble from survivors
+    // in order, keeping a row (empty text_clean) even when fully stripped.
+    // Exact two-level doc-freq agg + one digest-keyed flag join + one
+    // reassembly shuffle; the boilerplate set is tiny by construction.
+    // t32: replays the 3-token segmentation (t17's rule at n=3), computes
+    // exact per-segment doc frequency, drops segments with df >= 5, and
+    // reassembles in order; COALESCE('') matches Spark's empty array_join
+    // for fully-stripped docs
+    Query("t32_boilerplate_removal",
+      """WITH ws AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+        |segl AS (SELECT doc_id,
+        |  [{'pos': k - 1, 'seg': array_to_string(w[(k-1)*3+1 : (k-1)*3+3], ' ')}
+        |   for k in range(1, GREATEST(CAST(ceil(len(w) / 3.0) AS INT), 1) + 1)] AS segs
+        |  FROM ws),
+        |seg AS (SELECT doc_id, u.pos AS pos, u.seg AS seg
+        |  FROM (SELECT doc_id, unnest(segs) AS u FROM segl)
+        |  WHERE len(u.seg) > 0),
+        |freq AS (SELECT md5(seg) AS digest, count(DISTINCT doc_id) AS dfd
+        |  FROM seg GROUP BY 1),
+        |flagged AS (SELECT s.doc_id, s.pos, s.seg,
+        |    (f.dfd < 5) AS keep
+        |  FROM seg s JOIN freq f ON md5(s.seg) = f.digest)
+        |SELECT doc_id,
+        |  COALESCE(string_agg(seg, ' ' ORDER BY pos) FILTER (WHERE keep), '')
+        |    AS text_clean,
+        |  CAST(count(*) FILTER (WHERE keep) AS BIGINT) AS n_kept,
+        |  CAST(count(*) FILTER (WHERE NOT keep) AS BIGINT) AS n_removed
+        |FROM flagged GROUP BY doc_id ORDER BY doc_id""".stripMargin)((s, dir) =>
+      ops.TextOps.removeBoilerplate(t(s, dir, "documents"))
+        .orderBy("doc_id")),
+
+    // encoding-corruption screen (mojibake detector): corruption PLANTED
+    // deterministically on doc_id % 7 == 0 (the fixture corpus is clean
+    // ASCII, so unplanted rows certify the zero side) — one U+FFFD, one C0
+    // control, one Latin-1-mojibake lead, one windows-1252 pair appended.
+    // Counts are replace-diff arithmetic (length minus marker-stripped
+    // length), byte-identical across engines; a pure projection, zero
+    // shuffles at any scale.
+    // t34: the oracle replays the injection rule (chr() codepoints match the
+    // Scala \u escapes) and the same replace-diff counting verbatim
+    Query("t34_encoding_quality",
+      """WITH d AS (SELECT doc_id,
+        |  CASE WHEN doc_id % 7 = 0 THEN text || chr(195)||chr(169)||' '||
+        |    chr(226)||chr(8364)||chr(8482)||' '||chr(65533)||' '||chr(1)
+        |  ELSE text END AS t FROM documents),
+        |c AS (SELECT doc_id,
+        |  CAST(length(t) - length(replace(t, chr(65533), '')) AS BIGINT) AS n_replacement,
+        |  CAST((length(t) - length(replace(t, chr(0), ''))) +
+        |       (length(t) - length(replace(t, chr(1), ''))) +
+        |       (length(t) - length(replace(t, chr(8), ''))) AS BIGINT) AS n_ctrl,
+        |  CAST(length(t) - length(replace(t, chr(195), '')) AS BIGINT) AS n_latin1_mojibake,
+        |  CAST((length(t) - length(replace(t, chr(226)||chr(8364), ''))) // 2 AS BIGINT)
+        |    AS n_win1252_mojibake
+        |  FROM d)
+        |SELECT doc_id, n_replacement, n_ctrl, n_latin1_mojibake, n_win1252_mojibake,
+        |  (n_replacement + n_ctrl + n_latin1_mojibake + n_win1252_mojibake = 0) AS enc_ok
+        |FROM c ORDER BY doc_id""".stripMargin)((s, dir) =>
+      ops.TextOps.encodingQuality(
+        t(s, dir, "documents").withColumn("text",
+          when(col("doc_id") % 7 === 0,
+            concat(col("text"),
+              lit("\u00c3\u00a9 \u00e2\u20ac\u2122 \ufffd \u0001")))
+            .otherwise(col("text"))))
+        .orderBy("doc_id")),
+
+    // Gopher-style quality rules (Rae et al. A1.1): word-count bounds,
+    // mean word length, symbol-to-word ratio, alphabetic-word fraction,
+    // stop-word minimum, and the conjunction verdict -- the public filter
+    // battery crawl pipelines apply before anything expensive. One split,
+    // HOF folds, zero shuffles; the oracle replays every fold with DuckDB
+    // list functions over the identical tokenization.
+    // t35: identical tokenization (split on single space, drop empties),
+    // every fold replayed with list functions; gopher_ok uses the UNROUNDED
+    // mean/fractions exactly as the engine does
+    Query("t35_gopher_quality",
+      """WITH w AS (SELECT doc_id,
+        |    list_filter(regexp_split_to_array(text, '\s+'), x -> len(x) > 0) AS ws,
+        |    CAST(length(text) - length(replace(text, '#', '')) AS BIGINT) +
+        |    CAST((length(text) - length(replace(text, '...', ''))) // 3 AS BIGINT)
+        |      AS n_symbols
+        |  FROM documents),
+        |m AS (SELECT doc_id,
+        |    CAST(len(ws) AS BIGINT) AS n_words,
+        |    CAST(COALESCE(list_sum(list_transform(ws, x -> len(x))), 0) AS DOUBLE)
+        |      / GREATEST(len(ws), 1) AS mean_word_len,
+        |    n_symbols,
+        |    CAST(len(list_filter(ws, x -> regexp_matches(x, '[A-Za-z]'))) AS BIGINT)
+        |      AS n_alpha,
+        |    CAST(len(list_filter(ws, x -> list_contains(
+        |      ['the','be','to','of','and','that','have','with'], lower(x)))) AS BIGINT)
+        |      AS n_stopwords
+        |  FROM w)
+        |SELECT doc_id, n_words, ROUND(mean_word_len, 6) AS mean_word_len,
+        |  n_symbols,
+        |  ROUND(CAST(n_alpha AS DOUBLE) / GREATEST(n_words, 1), 6) AS alpha_fraction,
+        |  n_stopwords,
+        |  (n_words BETWEEN 50 AND 100000
+        |   AND mean_word_len BETWEEN 3.0 AND 10.0
+        |   AND CAST(n_symbols AS DOUBLE) / GREATEST(n_words, 1) <= 0.1
+        |   AND CAST(n_alpha AS DOUBLE) / GREATEST(n_words, 1) >= 0.8
+        |   AND n_stopwords >= 2) AS gopher_ok
+        |FROM m ORDER BY doc_id""".stripMargin)((s, dir) =>
+      ops.TextOps.gopherQuality(t(s, dir, "documents"))
+        .orderBy("doc_id")),
+
+    // t36: distributed BPE vocabulary TRAINING (round 15 — closes the r14
+    // "merges are synthetic" boundary): ONE corpus pass builds the
+    // word-frequency table, then k rounds of freq-weighted pair-count →
+    // deterministic argmax → merge, all vocabulary-sized. The WHOLE
+    // training loop rides the wire as ONE Rel.ExtIteration — init state,
+    // the per-round plan (pair count, relational sort+fetch-1 argmax,
+    // constant-key-join merge application, merge append), and the round
+    // count; the consumer runs the loop with zero driver round-trips
+    // (and measures FASTER than the per-round-collect host loop, which
+    // BpeTrainSpec pins bit-identical). The oracle replays the SAME k
+    // rounds as unrolled SQL CTEs (identical seg-string representation,
+    // left-to-right replace semantics, and count-desc/lexicographic
+    // tie-break), certifying every rank, operand pair, and winning count.
+    // t36: the BPE training replay — k rounds unrolled as chained CTEs,
+    // generated by bpeTrainOracle (same word-freq base, same wrapped-
+    // symbol seg strings, same replace semantics, same argmax tie-break)
+    Query("t36_bpe_train", bpeTrainOracle(BpeTrainRounds), wire = false)((s, dir) =>
+      ops.BpeTrain.trainMerges(t(s, dir, "documents"), "text",
+        numMerges = BpeTrainRounds, stepThroughWire = true)),
+
+    // Gopher-style repetition filters: zero-shuffle narrow fold per document
+    Query("t10_repetition",
+      """WITH toks AS (
+        |  SELECT doc_id, list_filter(string_split(lower(text), ' '), w -> w <> '') AS ws
+        |  FROM documents),
+        |w AS (SELECT doc_id, unnest(ws) AS word FROM toks),
+        |wc AS (SELECT doc_id, word, count(*) AS c FROM w GROUP BY 1, 2),
+        |wagg AS (SELECT doc_id, sum(c) AS n_words, count(*) AS n_distinct,
+        |                max(c) AS top_word_n FROM wc GROUP BY 1),
+        |bg AS (SELECT doc_id,
+        |         [ws[i] || ' ' || ws[i+1] FOR i IN range(1, len(ws))] AS bgs
+        |       FROM toks),
+        |bgu AS (SELECT doc_id, unnest(bgs) AS b FROM bg),
+        |bgc AS (SELECT doc_id, b, count(*) AS c FROM bgu GROUP BY 1, 2),
+        |bagg AS (SELECT doc_id, max(c) AS top_bigram_n FROM bgc GROUP BY 1),
+        |pos AS (SELECT doc_id, unnest(ws) AS word,
+        |               generate_subscripts(ws, 1) AS i FROM toks),
+        |isl AS (SELECT doc_id, word,
+        |          i - row_number() OVER (PARTITION BY doc_id, word ORDER BY i) AS g
+        |        FROM pos),
+        |runs AS (SELECT doc_id, count(*) AS rl FROM isl GROUP BY doc_id, word, g),
+        |ragg AS (SELECT doc_id, max(rl) AS max_token_run FROM runs GROUP BY 1)
+        |SELECT d.doc_id,
+        |  CAST(COALESCE(w.n_words, 0) AS INTEGER) AS n_words,
+        |  ROUND(CASE WHEN COALESCE(w.n_words, 0) = 0 THEN 0.0
+        |        ELSE 1.0 - w.n_distinct / CAST(w.n_words AS DOUBLE) END, 6) AS dup_word_frac,
+        |  ROUND(CASE WHEN COALESCE(w.n_words, 0) = 0 THEN 0.0
+        |        ELSE w.top_word_n / CAST(w.n_words AS DOUBLE) END, 6) AS top_word_frac,
+        |  ROUND(CASE WHEN COALESCE(w.n_words, 0) < 2 THEN 0.0
+        |        ELSE b.top_bigram_n / CAST(w.n_words - 1 AS DOUBLE) END, 6) AS top_bigram_frac,
+        |  CAST(COALESCE(r.max_token_run, 0) AS INTEGER) AS max_token_run,
+        |  (CASE WHEN COALESCE(w.n_words, 0) = 0 THEN 0.0
+        |        ELSE w.top_word_n / CAST(w.n_words AS DOUBLE) END > 0.2
+        |   OR CASE WHEN COALESCE(w.n_words, 0) < 2 THEN 0.0
+        |        ELSE b.top_bigram_n / CAST(w.n_words - 1 AS DOUBLE) END > 0.1
+        |   OR COALESCE(r.max_token_run, 0) >= 4) AS repetitive
+        |FROM documents d
+        |LEFT JOIN wagg w USING (doc_id)
+        |LEFT JOIN bagg b USING (doc_id)
+        |LEFT JOIN ragg r USING (doc_id)
+        |ORDER BY doc_id""".stripMargin)((s, dir) =>
+      ops.TextOps.repetitionStats(t(s, dir, "documents"))
+        .orderBy("doc_id")),
+
+    // one-pass ANALYZE-style column profile (corpus health check)
+    Query("t12_profile",
+      """WITH p AS (
+        |  SELECT 'doc_id' AS col_name, count(*) AS n_rows,
+        |    count(*) - count(doc_id) AS n_nulls,
+        |    count(DISTINCT doc_id) AS n_distinct,
+        |    CAST(min(doc_id) AS VARCHAR) AS min_value,
+        |    CAST(max(doc_id) AS VARCHAR) AS max_value FROM documents
+        |  UNION ALL
+        |  SELECT 'lang', count(*), count(*) - count(lang),
+        |    count(DISTINCT lang), CAST(min(lang) AS VARCHAR),
+        |    CAST(max(lang) AS VARCHAR) FROM documents
+        |  UNION ALL
+        |  SELECT 'source', count(*), count(*) - count(source),
+        |    count(DISTINCT source), CAST(min(source) AS VARCHAR),
+        |    CAST(max(source) AS VARCHAR) FROM documents
+        |  UNION ALL
+        |  SELECT 'n_chars', count(*), count(*) - count(n_chars),
+        |    count(DISTINCT n_chars), CAST(min(n_chars) AS VARCHAR),
+        |    CAST(max(n_chars) AS VARCHAR) FROM documents)
+        |SELECT * FROM p ORDER BY col_name""".stripMargin)((s, dir) =>
+      ops.Pipeline.profile(t(s, dir, "documents"),
+        Seq("doc_id", "lang", "source", "n_chars"))
+        .orderBy("col_name")),
+
+    // mixture-weighted resampling to a target language mix (md5-draw filter)
+    Query("t11_mixture_sample",
+      """SELECT doc_id, lang, source FROM documents
+        |WHERE CASE lang
+        |  WHEN 'en' THEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < '8000'
+        |  WHEN 'de' THEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < '4000'
+        |  WHEN 'fr' THEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < 'c000'
+        |  WHEN 'zh' THEN TRUE
+        |  ELSE substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < '2000' END
+        |ORDER BY doc_id""".stripMargin)((s, dir) =>
+      ops.Pipeline.mixtureSample(t(s, dir, "documents"), "doc_id", "lang",
+        rates = Map("en" -> 0.5, "de" -> 0.25, "fr" -> 0.75, "zh" -> 1.0),
+        default = 0.125)
+        .select("doc_id", "lang", "source")
+        .orderBy("doc_id")),
+
+    // segment-level dedup (RefinedWeb line-dedup): 20-token windows, each
+    // distinct window kept only at its first (doc, pos) occurrence, docs
+    // reassembled from their surviving segments
+    Query("t17_segment_dedup",
+      """WITH ws AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+        |segl AS (SELECT doc_id,
+        |  [{'pos': k - 1, 'seg': array_to_string(w[(k-1)*20+1 : (k-1)*20+20], ' ')}
+        |   for k in range(1, GREATEST(CAST(ceil(len(w) / 20.0) AS INT), 1) + 1)] AS segs
+        |  FROM ws),
+        |seg AS (SELECT doc_id, u.pos AS pos, u.seg AS seg
+        |  FROM (SELECT doc_id, unnest(segs) AS u FROM segl)
+        |  WHERE len(u.seg) > 0),
+        |kept AS (SELECT doc_id, pos, seg FROM seg
+        |  QUALIFY ROW_NUMBER() OVER (PARTITION BY md5(seg)
+        |    ORDER BY doc_id, pos) = 1)
+        |SELECT doc_id, string_agg(seg, ' ' ORDER BY pos) AS text_deduped,
+        |  count(*) AS n_segments_kept
+        |FROM kept GROUP BY doc_id ORDER BY doc_id""".stripMargin)((s, dir) =>
+      ops.TextOps.dedupSegments(t(s, dir, "documents"))
+        .orderBy("doc_id")),
+
+    // deterministic contrastive negative sampling: every doc draws 4
+    // hash-addressed partners (no RNG; stable across runs/partitionings).
+    // Properties certified in-query: every document anchors (n_anchors =
+    // |documents|, DuckDB-checked), no self-pairs, and every anchor keeps
+    // ≥ k−1 draws (self-collisions only). Raw pairs are hash-derived, so
+    // the oracle certifies the contract, not engine-specific hash values.
+    Query("t18_negative_pairs",
       """SELECT count(*) AS n_anchors, TRUE AS no_self, TRUE AS coverage_ok
-        |FROM documents""".stripMargin,
+        |FROM documents""".stripMargin)((s, dir) => {
+      val pairs = ops.Pipeline.negativePairs(t(s, dir, "documents"), k = 4)
+      pairs.agg(
+        countDistinct(col("anchor_id")).as("n_anchors"),
+        (sum(when(col("anchor_id") === col("neg_id"), 1).otherwise(0)) === 0)
+          .as("no_self"),
+        (count(lit(1)) >= countDistinct(col("anchor_id")) * 3).as("coverage_ok"))
+    }),
+
+    // deterministic weighted (PPS) sampling: inclusion probability ∝
+    // n_tokens, expected 80 docs — decided by IEEE-exact multiply/compare
+    // on md5 draws (no ln/exp), so DuckDB replays the member set exactly
     // t20: only IEEE-determined ops (52-bit md5 draw, exact 2^52 scaling,
     // multiply, compare) — DuckDB replays the weighted member set exactly
-    "t20_weighted_sample" ->
+    Query("t20_weighted_sample",
       """SELECT doc_id, lang, n_chars FROM documents
         |WHERE (('0x' || substring(md5('42:' || CAST(doc_id AS VARCHAR)), 1, 13))::UBIGINT
         |       / 4503599627370496.0)
         |      * (SELECT sum(CAST(n_chars AS DOUBLE)) FROM documents)
         |      < CAST(n_chars AS DOUBLE) * 80.0
-        |ORDER BY doc_id""".stripMargin,
-    // t19: the md5 draw convention is engine-portable — DuckDB reproduces
-    // the exact shard assignment and in-shard order
-    "t21_linear_classifier" ->
+        |ORDER BY doc_id""".stripMargin)((s, dir) =>
+      ops.Pipeline.weightedSample(t(s, dir, "documents"), "n_chars",
+          expectedK = 80.0)
+        .select("doc_id", "lang", "n_chars")
+        .orderBy("doc_id")),
+
+    // hashed linear classifier scoring (fastText shape): word uni+bigrams
+    // → 256 md5-prefix buckets → integer-weight sum from a literal map —
+    // zero-shuffle scoring whose exact integer score any engine replays
+    Query("t21_linear_classifier",
       """WITH w AS (SELECT printf('%02x', i) AS b,
         |    ((i * 1103515245 + 12345) % 2048) - 1024 AS wt FROM range(256) t(i)),
         |d AS (SELECT doc_id, lang,
@@ -4606,59 +1884,15 @@ object SparkEntry {
         |SELECT d.doc_id, d.lang,
         |  CAST(COALESCE(sc.n_features, 0) AS BIGINT) AS n_features,
         |  CAST(COALESCE(sc.score_num, 0) AS BIGINT) AS score_num
-        |FROM d LEFT JOIN sc USING (doc_id) ORDER BY d.doc_id""".stripMargin,
-    "p18_corpus_card" ->
-      """WITH top AS (SELECT lang AS top_lang, count(*) AS top_lang_docs
-        |  FROM documents GROUP BY 1
-        |  ORDER BY top_lang_docs DESC, top_lang ASC LIMIT 1)
-        |SELECT count(*) AS n_docs,
-        |  count(DISTINCT md5(text)) AS n_distinct_docs,
-        |  CAST(sum(CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT)) AS BIGINT) AS total_tokens,
-        |  quantile_cont(n_chars, 0.5) AS median_chars,
-        |  count(DISTINCT lang) AS n_langs,
-        |  top.top_lang, top.top_lang_docs
-        |FROM documents CROSS JOIN top
-        |GROUP BY top.top_lang, top.top_lang_docs""".stripMargin,
-    "p17_schema_evolution" ->
-      """SELECT doc_id, lang,
-        |  CASE WHEN doc_id % 2 = 0 THEN NULL ELSE source END AS source,
-        |  n_chars, md5(text) AS text_md5
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "p16_cdc_snapshot" ->
-      """WITH r AS (SELECT user_id, event_id, event_type, value,
-        |    row_number() OVER (PARTITION BY user_id
-        |                       ORDER BY ts DESC, event_id DESC) AS rn
-        |  FROM events)
-        |SELECT user_id, event_id, event_type, value FROM r
-        |WHERE rn = 1 AND event_type <> 'error' ORDER BY user_id""".stripMargin,
-    "p15_feature_drift" ->
-      """WITH d AS (SELECT doc_id,
-        |    list_filter(regexp_split_to_array(lower(text), '[^a-z]+'),
-        |                x -> x <> '') AS toks
-        |  FROM documents),
-        |f AS (SELECT doc_id, unnest(toks) AS feat FROM d
-        |  UNION ALL
-        |  SELECT doc_id, unnest(list_transform(range(1, len(toks)),
-        |    i -> toks[i] || '_' || toks[i + 1])) AS feat FROM d),
-        |fb AS (SELECT doc_id, substring(md5(feat), 1, 2) AS b FROM f),
-        |c AS (SELECT b, sum(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END) AS c1,
-        |    sum(CASE WHEN doc_id % 2 = 1 THEN 1 ELSE 0 END) AS c2
-        |  FROM fb GROUP BY 1),
-        |tot AS (SELECT CAST(sum(c1) AS DOUBLE) AS n1,
-        |    CAST(sum(c2) AS DOUBLE) AS n2 FROM c),
-        |fl AS (SELECT printf('%02x', i) AS b, COALESCE(c.c1, 0) AS c1,
-        |    COALESCE(c.c2, 0) AS c2
-        |  FROM range(256) t(i) LEFT JOIN c ON printf('%02x', i) = c.b),
-        |z AS (SELECT b, c1, c2,
-        |    (c1 + 1) / (tot.n1 + 256.0) AS p, (c2 + 1) / (tot.n2 + 256.0) AS q,
-        |    ((c1 + 1) / (tot.n1 + 256.0) + (c2 + 1) / (tot.n2 + 256.0)) / 2 AS m
-        |  FROM fl CROSS JOIN tot)
-        |SELECT b, CAST(c1 AS BIGINT) AS c1, CAST(c2 AS BIGINT) AS c2,
-        |  CAST(round(p * ln(p / q) * 1e12) AS BIGINT) AS t_pq,
-        |  CAST(round(q * ln(q / p) * 1e12) AS BIGINT) AS t_qp,
-        |  CAST(round((p / 2 * ln(p / m) + q / 2 * ln(q / m)) * 1e12) AS BIGINT) AS t_js
-        |FROM z ORDER BY b""".stripMargin,
-    "t26_stratified_pps" ->
+        |FROM d LEFT JOIN sc USING (doc_id) ORDER BY d.doc_id""".stripMargin)((s, dir) =>
+      ops.TextOps.hashedLinearScore(t(s, dir, "documents"))
+        .select("doc_id", "lang", "n_features", "score_num")
+        .orderBy("doc_id")),
+
+    // per-stratum weighted PPS sample: ≈25 docs per language, probability
+    // ∝ n_chars — the balanced-mixture sampler; per-stratum totals are a
+    // 5-row broadcast, the keep rule the same portable-md5 filter as t20
+    Query("t26_stratified_pps",
       """WITH w AS (SELECT lang, sum(CAST(n_chars AS DOUBLE)) AS wtot
         |  FROM documents GROUP BY 1)
         |SELECT doc_id, d.lang, n_chars
@@ -4666,14 +1900,29 @@ object SparkEntry {
         |WHERE (('0x' || substring(md5('42:' || CAST(doc_id AS VARCHAR)), 1, 13))::UBIGINT
         |       / 4503599627370496.0) * w.wtot
         |      < CAST(n_chars AS DOUBLE) * 25.0
-        |ORDER BY doc_id""".stripMargin,
-    "t25_curriculum_order" ->
+        |ORDER BY doc_id""".stripMargin)((s, dir) =>
+      ops.Pipeline.stratifiedWeightedSample(t(s, dir, "documents"),
+          "n_chars", "lang", expectedKPerStratum = 25.0)
+        .select("doc_id", "lang", "n_chars")
+        .orderBy("doc_id")),
+
+    // curriculum interleave: md5 rank within language; ORDER BY
+    // (rank, lang) is a round-robin mixture — every |strata|-window
+    // touches each stratum once, with no global window anywhere
+    Query("t25_curriculum_order",
       """SELECT doc_id, lang,
         |  row_number() OVER (PARTITION BY lang
         |    ORDER BY md5('42:' || CAST(doc_id AS VARCHAR)), doc_id)
         |    AS rank_in_stratum
-        |FROM documents ORDER BY rank_in_stratum, lang""".stripMargin,
-    "t24_bm25_search" ->
+        |FROM documents ORDER BY rank_in_stratum, lang""".stripMargin)((s, dir) =>
+      ops.Pipeline.curriculumOrder(t(s, dir, "documents"), "lang", "doc_id")
+        .select("doc_id", "lang", "rank_in_stratum")
+        .orderBy("rank_in_stratum", "lang")),
+
+    // BM25 lexical top-k search: one tf shuffle, broadcast df/query sides,
+    // scalar-subquery corpus stats, scaled-long per-term scores → the
+    // ranking is integer-exact and the oracle replays it bit-for-bit
+    Query("t24_bm25_search",
       """WITH d AS (SELECT doc_id,
         |    list_filter(string_split(lower(text), ' '), w -> w <> '') AS toks
         |  FROM documents),
@@ -4701,8 +1950,17 @@ object SparkEntry {
         |  FROM agg)
         |SELECT query_id, doc_id, rank,
         |  ROUND(CAST(score_num AS DOUBLE) / 1e9, 6) AS score
-        |FROM r WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin,
-    "t23_winsorized_stats" ->
+        |FROM r WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin)((s, dir) =>
+      ops.TextOps.bm25TopK(t(s, dir, "documents"),
+          Seq("q_hash_join" -> Seq("hash", "join"),
+            "q_scan" -> Seq("columnar", "scan", "filter"),
+            "q_stream" -> Seq("stream", "window")), k = 10)
+        .orderBy("query_id", "rank")),
+
+    // winsorized/trimmed robust stats per group: exact R-7 quantiles bound
+    // the trusted band (broadcast back), decimal-exact trimmed + clamped
+    // means — two aggregate passes, no wide join
+    Query("t23_winsorized_stats",
       """WITH q AS (SELECT lang, quantile_cont(n_chars, 0.05) AS q_lo,
         |    quantile_cont(n_chars, 0.95) AS q_hi
         |  FROM documents GROUP BY 1)
@@ -4717,8 +1975,15 @@ object SparkEntry {
         |  ROUND(CAST(sum(CAST(GREATEST(q_lo, LEAST(q_hi, CAST(n_chars AS DOUBLE)))
         |      AS DECIMAL(27,15))) AS DOUBLE) / count(*), 6) AS winsor_mean
         |FROM documents d JOIN q USING (lang)
-        |GROUP BY d.lang, q_lo, q_hi ORDER BY d.lang""".stripMargin,
-    "t22_dsir_score" ->
+        |GROUP BY d.lang, q_lo, q_hi ORDER BY d.lang""".stripMargin)((s, dir) =>
+      ops.TextOps.winsorizedStats(t(s, dir, "documents"))
+        .orderBy("lang")),
+
+    // DSIR-style importance scoring: per-bucket log-ratio weights of the
+    // target (en) vs raw feature distributions, fit as a 256-row sketch
+    // and collected into a literal map; scoring is the same zero-shuffle
+    // exact-integer fold as t21 (scaled-long ln, the t14 convention)
+    Query("t22_dsir_score",
       """WITH d AS (SELECT doc_id, lang,
         |    list_filter(regexp_split_to_array(lower(text), '[^a-z]+'),
         |                x -> x <> '') AS toks
@@ -4743,34 +2008,944 @@ object SparkEntry {
         |  CAST(COALESCE(sc.sn, 0) AS BIGINT) AS score_num,
         |  ROUND(CAST(COALESCE(sc.sn, 0) AS DOUBLE)
         |    / (1e9 * GREATEST(COALESCE(sc.n, 0), 1)), 6) AS avg_logratio
-        |FROM d LEFT JOIN sc USING (doc_id) ORDER BY d.doc_id""".stripMargin,
-    "t19_shuffle_shards" ->
+        |FROM d LEFT JOIN sc USING (doc_id) ORDER BY d.doc_id""".stripMargin)((s, dir) => {
+      val d = t(s, dir, "documents")
+      val w = ops.TextOps.dsirWeights(d, col("lang") === "en")
+      ops.TextOps.dsirScore(d, w)
+        .select(col("doc_id"), col("lang"), col("n_features"), col("score_num"),
+          round(col("score"), 6).as("avg_logratio"))
+        .orderBy("doc_id")
+    }),
+
+    // deterministic global training-order shuffle into shards: md5-keyed
+    // shard + in-shard rank — reproducible across engines/cluster sizes
+    // (one hash exchange + per-shard local sort; no global window)
+    // t19: the md5 draw convention is engine-portable — DuckDB reproduces
+    // the exact shard assignment and in-shard order
+    Query("t19_shuffle_shards",
       """WITH h AS (SELECT doc_id,
         |  md5('42:' || CAST(doc_id AS VARCHAR)) AS hk FROM documents),
         |s AS (SELECT doc_id, hk,
         |  CAST(('0x' || substring(hk, 1, 8))::UBIGINT % 8 AS INT) AS shard FROM h)
         |SELECT doc_id, shard,
         |  row_number() OVER (PARTITION BY shard ORDER BY hk, doc_id) AS pos
-        |FROM s ORDER BY shard, pos""".stripMargin,
-    "q41_setops_all" ->
-      """WITH x AS (
-        |  SELECT k FROM (SELECT c_nationkey AS k FROM customer
-        |                 INTERSECT ALL
-        |                 SELECT s_nationkey FROM supplier)
-        |  EXCEPT ALL
-        |  SELECT n_nationkey FROM nation WHERE n_nationkey >= 10)
-        |SELECT k, count(*) AS n FROM x GROUP BY k ORDER BY k""".stripMargin,
-    "q42_window_ignore_nulls" ->
-      """SELECT c_custkey,
-        |  last_value(o_orderkey IGNORE NULLS) OVER
-        |    (ORDER BY c_custkey ASC, o_orderkey ASC NULLS FIRST
-        |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |    AS last_seen_order
-        |FROM (SELECT c_custkey, o_orderkey
-        |      FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-        |        AND o_orderkey % 50 = 0)
-        |ORDER BY c_custkey, last_seen_order""".stripMargin,
-    "p01_curation_pipeline" ->
+        |FROM s ORDER BY shard, pos""".stripMargin)((s, dir) =>
+      ops.Pipeline.shuffleShards(t(s, dir, "documents"), numShards = 8)
+        .select("doc_id", "shard", "pos")
+        .orderBy("shard", "pos")),
+
+    // absolute token-budget mixture: md5-ordered prefix per language until
+    // each budget fills (the "build an N-token training mix" primitive)
+    Query("t16_token_budget",
+      """WITH tk AS (SELECT doc_id, lang,
+        |    CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT) AS n_tokens
+        |  FROM documents),
+        |c AS (SELECT doc_id, lang, n_tokens,
+        |    CAST(sum(n_tokens) OVER (PARTITION BY lang
+        |      ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_tokens
+        |  FROM tk)
+        |SELECT doc_id, lang, n_tokens, cum_tokens FROM c
+        |WHERE cum_tokens - n_tokens < CASE lang WHEN 'en' THEN 3000
+        |  WHEN 'de' THEN 2000 WHEN 'fr' THEN 1500 WHEN 'zh' THEN 1000
+        |  ELSE 0 END
+        |ORDER BY doc_id""".stripMargin)((s, dir) =>
+      ops.Pipeline.tokenBudgetSample(t(s, dir, "documents"),
+        budgets = Map("en" -> 3000L, "de" -> 2000L, "fr" -> 1500L, "zh" -> 1000L))
+        .select("doc_id", "lang", "n_tokens", "cum_tokens")
+        .orderBy("doc_id")),
+
+    // IVF-PQ: the composed billion-scale index — coarse cells cut touched
+    // vectors, residual PQ codes cut bytes per touched vector (16x); the
+    // saved layout partitions by cell so the probe partition-prunes, ADC
+    // shortlists via the codegen'd kernels, exact rerank restores exact
+    // ordering → the s01 exact-kNN oracle certifies end-to-end
+    // s11: same exact-kNN ground truth as s01/s03/s06/s08 — probed cells
+    // cover the true neighbors (measured, the s03 fixture property) and
+    // the rerank shortlist provably contains them (s08's margin argument,
+    // strengthened by residual quantization)
+    Query("s11_knn_ivfpq", ExactKnnOracle)((s, dir) => {
+      val e = t(s, dir, "embeddings")
+      val idx = ops.IvfPq.build(e, nlist = 16, m = 16, k = 64,
+        trainSampleFraction = 0.5)
+      val path = scratch("ivfpq", dir)
+      ops.IvfPq.save(idx, path)
+      val loaded = ops.IvfPq.load(s, path)
+      ops.IvfPq.searchPruned(loaded, e, e.filter(col("vec_id") < 8),
+          k = 5, nprobe = 12, shortlist = 200)
+        .orderBy("q_id", "rank")
+    }),
+
+    // retrieval evaluation: recall@k + reciprocal rank of the int8-
+    // quantized ranking against the exact one — the ANN tuning metric as
+    // a relational op, with BOTH rankings replayable by the oracle
+    Query("s10_ann_metrics",
+      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
+        |s AS (SELECT vec_id, e,
+        |    list_max(list_transform(e, x -> abs(x))) / 127.0 AS sc FROM v),
+        |dq AS (SELECT vec_id, CASE WHEN sc = 0 THEN list_transform(e, x -> 0.0)
+        |    ELSE list_transform(e, x -> CAST(round(x / sc) AS INTEGER) * sc) END AS d
+        |  FROM s),
+        |truth AS (SELECT q_id, n_id, rank FROM (
+        |  SELECT q.vec_id AS q_id, v.vec_id AS n_id,
+        |    row_number() OVER (PARTITION BY q.vec_id ORDER BY
+        |      list_dot_product(q.e, v.e)
+        |        / (sqrt(list_dot_product(q.e, q.e)) * sqrt(list_dot_product(v.e, v.e)))
+        |      DESC, v.vec_id ASC) AS rank
+        |  FROM v q CROSS JOIN v WHERE q.vec_id < 8 AND v.vec_id <> q.vec_id)
+        |  WHERE rank <= 5),
+        |pred AS (SELECT q_id, n_id, rank FROM (
+        |  SELECT q.vec_id AS q_id, c.vec_id AS n_id,
+        |    row_number() OVER (PARTITION BY q.vec_id ORDER BY
+        |      list_dot_product(q.d, c.d)
+        |        / (sqrt(list_dot_product(q.d, q.d)) * sqrt(list_dot_product(c.d, c.d)))
+        |      DESC, c.vec_id ASC) AS rank
+        |  FROM dq q CROSS JOIN dq c WHERE q.vec_id < 8 AND c.vec_id <> q.vec_id)
+        |  WHERE rank <= 5),
+        |tn AS (SELECT q_id, count(*) AS n_truth FROM truth GROUP BY 1),
+        |j AS (SELECT p.q_id, p.rank,
+        |    CASE WHEN t.n_id IS NOT NULL THEN 1 ELSE 0 END AS rel
+        |  FROM pred p LEFT JOIN truth t ON p.q_id = t.q_id AND p.n_id = t.n_id),
+        |m AS (SELECT q_id, sum(rel) AS hits,
+        |    CAST(min(CASE WHEN rel = 1 THEN rank END) AS INTEGER) AS frr
+        |  FROM j GROUP BY 1)
+        |SELECT m.q_id, CAST(tn.n_truth AS BIGINT) AS n_truth,
+        |  CAST(m.hits AS BIGINT) AS hits,
+        |  ROUND(CAST(m.hits AS DOUBLE) / tn.n_truth, 6) AS recall_k,
+        |  m.frr AS first_rel_rank,
+        |  CASE WHEN m.frr IS NOT NULL THEN ROUND(1.0 / m.frr, 6) ELSE 0.0 END AS rr
+        |FROM m JOIN tn USING (q_id) ORDER BY m.q_id""".stripMargin)((s, dir) => {
+      val e = t(s, dir, "embeddings")
+      val dq = ops.Embeddings.dequantized(ops.Embeddings.quantized(e))
+        .select(col("vec_id"), col("embedding_dq").as("embedding"))
+      val truth = ops.Similarity.bruteForceKnn(e, e.filter(col("vec_id") < 8), k = 5)
+      val pred = ops.Similarity.bruteForceKnn(dq, dq.filter(col("vec_id") < 8), k = 5)
+      ops.Similarity.retrievalMetrics(pred, truth).orderBy("q_id")
+    }),
+
+    // nearest-centroid (Rocchio) classification: decimal-exact per-label
+    // centroids rounded to 9 decimals (both engines classify against
+    // bit-identical literals), then one narrow codegen'd argmin pass
+    Query("s09_centroid_classify",
+      """WITH ev AS (SELECT vec_id, label, unnest(CAST(embedding AS DOUBLE[])) AS val,
+        |    generate_subscripts(embedding, 1) AS idx FROM embeddings),
+        |cent AS (SELECT label AS clabel, idx,
+        |    ROUND(CAST(sum(CAST(CAST(val AS DOUBLE) AS DECIMAL(27,15))) AS DOUBLE)
+        |      / count(*), 9) AS c
+        |  FROM ev GROUP BY 1, 2),
+        |dist AS (SELECT e.vec_id, c.clabel,
+        |    sum((e.val - c.c) * (e.val - c.c)) AS d2
+        |  FROM ev e JOIN cent c ON e.idx = c.idx GROUP BY 1, 2),
+        |r AS (SELECT vec_id, clabel,
+        |    row_number() OVER (PARTITION BY vec_id ORDER BY d2 ASC, clabel ASC) AS rn
+        |  FROM dist)
+        |SELECT e.vec_id, e.label, r.clabel AS pred, (e.label = r.clabel) AS correct
+        |FROM embeddings e JOIN r ON e.vec_id = r.vec_id AND r.rn = 1
+        |ORDER BY e.vec_id""".stripMargin)((s, dir) =>
+      ops.Embeddings.nearestCentroidClassify(t(s, dir, "embeddings"))
+        .select("vec_id", "label", "pred", "correct")
+        .orderBy("vec_id")),
+
+    // element-wise per-label centroid vectors, decimal-exact accumulation
+    Query("s04_label_centroids",
+      """SELECT label, idx,
+        |  ROUND(CAST(sum(CAST(CAST(val AS DOUBLE) AS DECIMAL(27,15))) AS DOUBLE)
+        |    / count(*), 9) AS centroid
+        |FROM (SELECT label, unnest(embedding) AS val,
+        |        generate_subscripts(embedding, 1) AS idx
+        |      FROM embeddings)
+        |GROUP BY label, idx ORDER BY label, idx""".stripMargin)((s, dir) =>
+      ops.Embeddings.centroids(t(s, dir, "embeddings"))
+        .select(col("label"), col("idx"), round(col("centroid"), 9).as("centroid"))
+        .orderBy("label", "idx")),
+
+    // symmetric int8 quantization (4x storage cut for an embedding store)
+    Query("s05_quantize",
+      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
+        |s AS (SELECT vec_id, e,
+        |        list_max(list_transform(e, x -> abs(x))) / 127.0 AS sc FROM v),
+        |x AS (SELECT vec_id, ROUND(sc, 9) AS scale,
+        |        unnest(CASE WHEN sc = 0 THEN list_transform(e, x -> 0)
+        |               ELSE list_transform(e, x -> CAST(round(x / sc) AS INTEGER)) END) AS q,
+        |        CAST(generate_subscripts(e, 1) AS INTEGER) AS idx
+        |      FROM s)
+        |SELECT vec_id, idx, q, scale FROM x ORDER BY vec_id, idx""".stripMargin)((s, dir) =>
+      ops.Embeddings.quantized(t(s, dir, "embeddings"))
+        .select(col("vec_id"), round(col("embedding_scale"), 9).as("scale"),
+          posexplode(col("embedding_q")).as(Seq("idx0", "q")))
+        .select(col("vec_id"), (col("idx0") + 1).as("idx"), col("q"), col("scale"))
+        .orderBy("vec_id", "idx")),
+
+    // per-document TF-IDF top-k terms (smoothed idf, deterministic ranking)
+    Query("t13_tfidf",
+      """WITH toks AS (SELECT doc_id,
+        |    unnest(list_filter(string_split(lower(text), ' '), w -> w <> '')) AS term
+        |  FROM documents),
+        |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
+        |n AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents),
+        |idf AS (SELECT term, count(*) AS df_t FROM tf GROUP BY 1),
+        |sc AS (SELECT f.doc_id, f.term, f.tf,
+        |        ROUND(f.tf * (ln((n.n_docs + 1) / CAST(i.df_t + 1 AS DOUBLE)) + 1.0), 6) AS score
+        |       FROM tf f, idf i, n WHERE f.term = i.term),
+        |rk AS (SELECT *, row_number() OVER (PARTITION BY doc_id
+        |         ORDER BY score DESC, term ASC) AS rnk FROM sc)
+        |SELECT doc_id, CAST(rnk AS INTEGER) AS rk, term, tf, score
+        |FROM rk WHERE rnk <= 3 ORDER BY doc_id, rk""".stripMargin)((s, dir) =>
+      ops.TextOps.tfidfTopTerms(t(s, dir, "documents"), k = 3)
+        .orderBy("doc_id", "rk")),
+
+    // CCNet-style LM quality score (char-bigram perplexity proxy)
+    Query("t14_lm_score",
+      """WITH t AS (SELECT doc_id, lower(text) AS tx FROM documents
+        |           WHERE length(text) >= 2),
+        |gi AS (SELECT doc_id, unnest(generate_series(1, len(tx) - 1)) AS i, tx FROM t),
+        |g2 AS (SELECT doc_id, substr(tx, CAST(i AS INTEGER), 2) AS g FROM gi),
+        |bc AS (SELECT g, count(*) AS bc FROM g2 GROUP BY 1),
+        |pc AS (SELECT substr(g, 1, 1) AS c1, sum(bc) AS pc FROM bc GROUP BY 1),
+        |model AS (SELECT g, bc / CAST(pc AS DOUBLE) AS p
+        |          FROM bc JOIN pc ON substr(bc.g, 1, 1) = pc.c1),
+        |sc AS (SELECT doc_id, count(*) AS n_bigrams,
+        |        ROUND(CAST(sum(CAST(round(ln(p) * 1e9) AS BIGINT)) AS DOUBLE)
+        |          / 1e9 / count(*), 6) AS avg_logp
+        |       FROM g2 JOIN model USING (g) GROUP BY 1)
+        |SELECT doc_id, n_bigrams, avg_logp FROM sc ORDER BY doc_id""".stripMargin)((s, dir) =>
+      ops.TextOps.charLmScore(t(s, dir, "documents"))
+        .orderBy("doc_id")),
+
+    // packing-efficiency report: per-bin fill and padding waste (the
+    // batch-efficiency audit over t09's packed stream)
+    Query("t15_pack_efficiency",
+      """WITH d AS (SELECT doc_id, lang,
+        |  CAST(len(regexp_extract_all(text, '\S+')) AS INTEGER) AS n_tokens
+        |  FROM documents),
+        |p AS (SELECT doc_id, lang, n_tokens,
+        |  CAST(COALESCE(SUM(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS stream_offset
+        |  FROM d),
+        |b AS (SELECT lang, CAST(FLOOR(stream_offset / 1024.0) AS BIGINT) AS bin_id,
+        |        count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS n_tokens
+        |      FROM p GROUP BY 1, 2)
+        |SELECT lang, bin_id, n_docs, n_tokens,
+        |  ROUND(LEAST(n_tokens, 1024) / 1024.0, 6) AS fill_frac
+        |FROM b ORDER BY lang, bin_id""".stripMargin)((s, dir) => {
+      val d = t(s, dir, "documents").select(col("doc_id"), col("lang"),
+        ops.TextOps.tokenCount(col("text")).as("n_tokens"))
+      ops.Pipeline.packSequences(d, "n_tokens", "doc_id",
+        budget = 1024, byCols = Seq("lang"))
+        .groupBy("lang", "bin_id")
+        .agg(count(lit(1)).as("n_docs"),
+          sum(col("n_tokens")).cast("long").as("n_tokens"))
+        .withColumn("fill_frac",
+          round(least(col("n_tokens"), lit(1024L)).cast("double") / 1024, 6))
+        .orderBy("lang", "bin_id")
+    }),
+
+    // CCNet-style perplexity bucketing: corpus char-LM fit splits every
+    // language into head/middle/tail thirds (ntile — integer-exact,
+    // engine-replayable); keep-head+middle is the standard pre-training
+    // curation gate. Scoring is t14's shuffle-free literal-model fold.
+    // t27: t14's char-LM model replayed, then per-lang thirds by ntile over
+    // (avg_logp DESC, doc_id) — integer-exact bucket assignment
+    Query("t27_ppl_buckets",
+      """WITH t AS (SELECT doc_id, lower(text) AS tx FROM documents
+        |           WHERE length(text) >= 2),
+        |gi AS (SELECT doc_id, unnest(generate_series(1, len(tx) - 1)) AS i, tx FROM t),
+        |g2 AS (SELECT doc_id, substr(tx, CAST(i AS INTEGER), 2) AS g FROM gi),
+        |bc AS (SELECT g, count(*) AS bc FROM g2 GROUP BY 1),
+        |pc AS (SELECT substr(g, 1, 1) AS c1, sum(bc) AS pc FROM bc GROUP BY 1),
+        |model AS (SELECT g, bc / CAST(pc AS DOUBLE) AS p
+        |          FROM bc JOIN pc ON substr(bc.g, 1, 1) = pc.c1),
+        |sc AS (SELECT doc_id, count(*) AS n_bigrams,
+        |        ROUND(CAST(sum(CAST(round(ln(p) * 1e9) AS BIGINT)) AS DOUBLE)
+        |          / 1e9 / count(*), 6) AS avg_logp
+        |       FROM g2 JOIN model USING (g) GROUP BY 1),
+        |nt AS (SELECT sc.doc_id, n_bigrams, avg_logp, d.lang,
+        |        ntile(3) OVER (PARTITION BY d.lang
+        |          ORDER BY avg_logp DESC, sc.doc_id) AS bucket
+        |       FROM sc JOIN documents d ON sc.doc_id = d.doc_id)
+        |SELECT doc_id, n_bigrams, avg_logp, lang, bucket,
+        |  CASE WHEN bucket = 1 THEN 'head' WHEN bucket = 3 THEN 'tail'
+        |    ELSE 'middle' END AS bucket_label
+        |FROM nt ORDER BY doc_id""".stripMargin)((s, dir) =>
+      ops.TextOps.perplexityBuckets(t(s, dir, "documents"))
+        .orderBy("doc_id")),
+
+    // corpus version diff by content digest (dataset-versioning audit)
+    Query("p03_corpus_diff",
+      """WITH od AS (SELECT DISTINCT
+        |    md5(regexp_replace(lower(text), '\s+', ' ', 'g')) AS digest
+        |  FROM documents WHERE doc_id % 3 <> 0),
+        |nd AS (SELECT DISTINCT
+        |    md5(regexp_replace(lower(text), '\s+', ' ', 'g')) AS digest
+        |  FROM documents WHERE doc_id % 3 <> 1)
+        |SELECT COALESCE(od.digest, nd.digest) AS digest,
+        |  CASE WHEN od.digest IS NULL THEN 'added'
+        |       WHEN nd.digest IS NULL THEN 'removed'
+        |       ELSE 'kept' END AS status
+        |FROM od FULL OUTER JOIN nd ON od.digest = nd.digest
+        |ORDER BY digest""".stripMargin)((s, dir) => {
+      val docs = t(s, dir, "documents")
+      ops.Dedup.corpusDiff(
+        docs.filter(col("doc_id") % 3 =!= 0),
+        docs.filter(col("doc_id") % 3 =!= 1))
+        .orderBy("digest")
+    }),
+
+    // heavy-hitter report: the pre-join skew diagnostic feeding saltedJoin
+    Query("p02_skew_report",
+      """WITH c AS (SELECT l_suppkey AS key, count(*) AS n
+        |           FROM lineitem GROUP BY 1),
+        |t AS (SELECT sum(n) AS total FROM c)
+        |SELECT key, n, ROUND(n / CAST(total AS DOUBLE), 6) AS share
+        |FROM c, t ORDER BY n DESC, key ASC LIMIT 20""".stripMargin)((s, dir) =>
+      ops.Pipeline.skewReport(t(s, dir, "lineitem"), "l_suppkey", k = 20)),
+
+    // co-located bucketed join: both sides pre-bucketed+sorted on the join
+    // key — the repeated-join layout for 100 TB fact tables (one shuffle
+    // paid at write, every later join on the key exchange-free on BOTH
+    // sides; PlanQualitySpec asserts the zero-exchange SMJ). Result is
+    // DuckDB-certified equal to the plain join.
+    Query("p04_bucketed_join",
+      """SELECT c_nationkey, count(*) AS n_orders,
+        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
+        |FROM orders JOIN customer ON o_custkey = c_custkey
+        |GROUP BY c_nationkey ORDER BY c_nationkey""".stripMargin)((s, dir) => {
+      val base = scratch("buck", dir)
+      val ob = "orders_bucketed"; val cb = "customer_bucketed"
+      sources.Sources.writeBucketed(
+        t(s, dir, "orders").select("o_orderkey", "o_custkey", "o_totalprice"),
+        ob, Seq("o_custkey"), buckets = 8, path = Some(s"$base/$ob"))
+      sources.Sources.writeBucketed(
+        t(s, dir, "customer").select("c_custkey", "c_nationkey"),
+        cb, Seq("c_custkey"), buckets = 8, path = Some(s"$base/$cb"))
+      s.table(ob).hint("merge")
+        .join(s.table(cb), col("o_custkey") === col("c_custkey"))
+        .groupBy("c_nationkey")
+        .agg(count(lit(1)).as("n_orders"),
+          dsum(col("o_totalprice")).as("total_price"))
+        .orderBy("c_nationkey")
+    }),
+
+    // mergeable-sketch cardinality: per-(lang, ingestion-shard) HLL
+    // sketches merged to per-lang distinct-text estimates — the
+    // incremental-statistics pattern at 100 TB (per-shard sketches computed
+    // once when a shard lands; a corpus-wide refresh merges KB-sized sketch
+    // rows instead of re-scanning corpus bytes). exact_distinct is
+    // DuckDB-verified; est_ok certifies the estimate within 5% (HLL lgK=12
+    // ≈ 1.6% se, deterministic given the data). Sketch aggregates and the
+    // estimate scalar ride the wire by name.
+    Query("p05_sketch_cardinality",
+      """SELECT lang, count(DISTINCT text) AS exact_distinct, TRUE AS est_ok
+        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin)((s, dir) => {
+      val d = t(s, dir, "documents")
+      val est = ops.Sketches.distinctEstimate(d, "text",
+        shardCol = col("doc_id") % 16, groupCols = Seq("lang"))
+      val exact = d.groupBy("lang")
+        .agg(countDistinct(col("text")).as("exact_distinct"))
+      exact.join(est, "lang")
+        .select(col("lang"), col("exact_distinct"),
+          (abs(col("distinct_est") - col("exact_distinct")) <=
+            col("exact_distinct") * 0.05).as("est_ok"))
+        .orderBy("lang")
+    }),
+
+    // small-file compaction: the documents table rewritten into evenly-sized
+    // files (repartition, not coalesce — even output beats narrow-but-skewed)
+    // and read back; the oracle certifies the rewrite is row-lossless.
+    Query("p08_compaction",
+      "SELECT doc_id, lang, n_chars FROM documents ORDER BY doc_id")((s, dir) => {
+      val out = scratch("compact", dir)
+      sources.Sources.compact(s, s"$dir/documents.parquet", out,
+        targetBytes = 4L * 1024 * 1024)
+      s.read.parquet(out).select("doc_id", "lang", "n_chars")
+        .orderBy("doc_id")
+    }),
+
+    // range-partitioned layout: documents laid out directory-per-length-band
+    // with in-file sort; the band filter prunes partitions at plan time
+    // (PlanQualitySpec asserts PartitionFilters + pruned file count) and the
+    // oracle certifies the surviving rows exactly.
+    Query("p09_range_layout",
+      """SELECT doc_id, lang, n_chars FROM documents
+        |WHERE floor(n_chars / 100) = 2 ORDER BY doc_id""".stripMargin)((s, dir) => {
+      val out = scratch("layout", dir)
+      sources.Sources.writeRangePartitioned(
+        t(s, dir, "documents").withColumn("len_band",
+          floor(col("n_chars") / 100).cast("int")),
+        bucketCol = "len_band", path = out, sortCols = Seq("n_chars"))
+      s.read.parquet(out).filter(col("len_band") === 2)
+        .select("doc_id", "lang", "n_chars").orderBy("doc_id")
+    }),
+
+    // Z-ordered layout: rows clustered by the Morton interleave of per-column
+    // quantile ranks, so file/row-group min-max stats skip on BOTH box
+    // dimensions — p09's single-column answer generalized to multi-column
+    // selective queries. The oracle certifies the rewrite is row-lossless
+    // under a 2-D box filter; SourcesSpec asserts the actual file-level
+    // skipping beats a single-column sort on the second dimension.
+    // p10: the z-order rewrite must be row-lossless — a 2-D box filter over
+    // the relaid-out table equals the same filter over the source
+    Query("p10_zorder_layout",
+      """SELECT doc_id, lang, n_chars FROM documents
+        |WHERE doc_id BETWEEN 100 AND 300 AND n_chars BETWEEN 150 AND 350
+        |ORDER BY doc_id""".stripMargin)((s, dir) => {
+      val out = scratch("zorder", dir)
+      sources.Sources.writeZOrdered(t(s, dir, "documents"),
+        Seq("doc_id", "n_chars"), out, numFiles = 16)
+      s.read.parquet(out)
+        .filter(col("doc_id").between(100, 300) && col("n_chars").between(150, 350))
+        .select("doc_id", "lang", "n_chars").orderBy("doc_id")
+    }),
+
+    // skipping-effectiveness report: per-band min/max envelope of the
+    // banded layout plus what a stats-pruning reader would scan for a
+    // range predicate — the quantitative "is this layout worth it" check
+    // before a 100 TB rewrite. One map-side-combining aggregate.
+    Query("p19_skipping_report",
+      """WITH b AS (SELECT CAST(floor(n_chars / 100) AS INTEGER) AS band,
+        |    CAST(count(*) AS BIGINT) AS n_rows,
+        |    CAST(min(n_chars) AS DOUBLE) AS vmin,
+        |    CAST(max(n_chars) AS DOUBLE) AS vmax
+        |  FROM documents GROUP BY 1)
+        |SELECT band, n_rows, vmin, vmax,
+        |  (vmax < 250 OR vmin > 449) AS pruned,
+        |  CASE WHEN vmax < 250 OR vmin > 449 THEN 0 ELSE n_rows END
+        |    AS rows_scanned
+        |FROM b ORDER BY band""".stripMargin)((s, dir) =>
+      sources.Sources.skippingReport(
+        t(s, dir, "documents").withColumn("len_band",
+          floor(col("n_chars") / 100).cast("int")),
+        bandCol = "len_band", valueCol = "n_chars", lo = 250, hi = 449)
+        .orderBy("band")),
+
+    // CMS inner-product join-size estimation (Cormode-Muthukrishnan §4.3):
+    // the size of lineitem ⨝ orders and the l_suppkey self-join size (the
+    // F₂ skew moment) estimated from KB-sized frequency sketches WITHOUT
+    // executing the joins — what prices a shuffle join before running it.
+    // Exact values are DuckDB-checked; the never-undercount + ε·N_a·N_b
+    // overcount bound is certified in-query (deterministic given the seed).
+    // schema-evolved corpus read: two generations written with drifted
+    // schemas (gen1 lacks `source` and stores n_chars as INT; gen2 is
+    // full-width) read back as ONE canonical frame — null back-fill +
+    // lossless widening casts, where bare mergeSchema would fail
+    Query("p17_schema_evolution",
+      """SELECT doc_id, lang,
+        |  CASE WHEN doc_id % 2 = 0 THEN NULL ELSE source END AS source,
+        |  n_chars, md5(text) AS text_md5
+        |FROM documents ORDER BY doc_id""".stripMargin)((s, dir) => {
+      import org.apache.spark.sql.types._
+      val base = scratch("evolve", dir)
+      val docs = t(s, dir, "documents")
+      docs.filter(col("doc_id") % 2 === 0)
+        .select(col("doc_id"), col("text"), col("lang"),
+          col("n_chars").cast("int").as("n_chars"))
+        .write.mode("overwrite").parquet(s"$base/gen1")
+      docs.filter(col("doc_id") % 2 === 1)
+        .write.mode("overwrite").parquet(s"$base/gen2")
+      val canonical = StructType(Seq(
+        StructField("doc_id", LongType), StructField("text", StringType),
+        StructField("lang", StringType), StructField("source", StringType),
+        StructField("n_chars", LongType)))
+      sources.Sources.readEvolved(s, Seq(s"$base/gen1", s"$base/gen2"), canonical)
+        .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
+          md5(col("text")).as("text_md5"))
+        .orderBy("doc_id")
+    }),
+
+    // copy-on-write upsert: a daily batch (replacements + inserts) merges
+    // into a range-partitioned corpus layout rewriting ONLY the touched
+    // band directories — untouched directories are never read or written
+    // (SourcesSpec asserts byte-identical files). The oracle recomputes
+    // the post-merge corpus from scratch in DuckDB.
+    // MERGE INTO (round 12): one change batch with inserts, updates, AND
+    // deletes applied in a single partition-swap pass over the CoW layout
+    // — p14's upsert extended with the delete path (the full Delta/Iceberg
+    // MERGE contract on plain parquet). Only affected bands are read
+    // (literal PartitionFilters) and rewritten; a key carrying both U and
+    // D resolves deterministically (anti-join removes once, the non-delete
+    // row re-inserts) and the oracle replays that rule.
+    // p21: the MERGE rule replayed relationally — every change key leaves
+    // the base once, non-delete change rows re-insert (a U+D key conflict
+    // therefore keeps the updated row, the engine's documented resolution)
+    Query("p21_merge_into",
+      """WITH mods AS (SELECT doc_id, upper(text) AS text, lang, n_chars
+        |              FROM documents WHERE doc_id % 13 = 3),
+        |ins AS (SELECT doc_id + 10000000 AS doc_id, text, lang, n_chars
+        |        FROM documents WHERE doc_id % 101 = 7),
+        |delk AS (SELECT doc_id FROM documents WHERE doc_id % 17 = 5),
+        |bk AS (SELECT doc_id FROM mods UNION SELECT doc_id FROM ins
+        |       UNION SELECT doc_id FROM delk),
+        |final AS (
+        |  SELECT doc_id, text, lang, n_chars FROM documents
+        |  WHERE doc_id NOT IN (SELECT doc_id FROM bk)
+        |  UNION ALL SELECT * FROM mods UNION ALL SELECT * FROM ins)
+        |SELECT doc_id, lang, n_chars, md5(text) AS text_md5
+        |FROM final ORDER BY doc_id""".stripMargin)((s, dir) => {
+      val out = scratch("merge", dir)
+      val docs = t(s, dir, "documents")
+        .withColumn("len_band", floor(col("n_chars") / 100).cast("int"))
+      sources.Sources.writeRangePartitioned(docs, "len_band", out,
+        sortCols = Seq("doc_id"))
+      val upd = docs.filter(col("doc_id") % 13 === 3)
+        .withColumn("text", upper(col("text"))).withColumn("op", lit("U"))
+      val ins = docs.filter(col("doc_id") % 101 === 7)
+        .withColumn("doc_id", col("doc_id") + 10000000L)
+        .withColumn("op", lit("I"))
+      val del = docs.filter(col("doc_id") % 17 === 5)
+        .withColumn("op", lit("D"))
+      sources.Sources.mergeRangePartitioned(s, out,
+        upd.unionByName(ins).unionByName(del), "len_band", Seq("doc_id"))
+      s.read.parquet(out)
+        .select(col("doc_id"), col("lang"), col("n_chars"),
+          md5(col("text")).as("text_md5"))
+        .orderBy("doc_id")
+    }),
+
+    Query("p14_cow_upsert",
+      """WITH mods AS (SELECT doc_id, upper(text) AS text, lang, n_chars
+        |              FROM documents WHERE doc_id % 13 = 3),
+        |ins AS (SELECT doc_id + 10000000 AS doc_id, text, lang, n_chars
+        |        FROM documents WHERE doc_id % 101 = 7),
+        |batch AS (SELECT * FROM mods UNION ALL SELECT * FROM ins),
+        |final AS (
+        |  SELECT doc_id, text, lang, n_chars FROM documents
+        |  WHERE doc_id NOT IN (SELECT doc_id FROM batch)
+        |  UNION ALL SELECT * FROM batch)
+        |SELECT doc_id, lang, n_chars, md5(text) AS text_md5
+        |FROM final ORDER BY doc_id""".stripMargin)((s, dir) => {
+      val out = scratch("upsert", dir)
+      val docs = t(s, dir, "documents")
+        .withColumn("len_band", floor(col("n_chars") / 100).cast("int"))
+      sources.Sources.writeRangePartitioned(docs, "len_band", out,
+        sortCols = Seq("doc_id"))
+      val mods = docs.filter(col("doc_id") % 13 === 3)
+        .withColumn("text", upper(col("text")))
+      val ins = docs.filter(col("doc_id") % 101 === 7)
+        .withColumn("doc_id", col("doc_id") + 10000000L)
+      sources.Sources.upsertRangePartitioned(s, out, mods.unionByName(ins),
+        "len_band", Seq("doc_id"), sortCols = Seq("doc_id"))
+      s.read.parquet(out)
+        .select(col("doc_id"), col("lang"), col("n_chars"),
+          md5(col("text")).as("text_md5"))
+        .orderBy("doc_id")
+    }),
+
+    // versioned snapshots + TIME TRAVEL (p22): two commits land, then v1
+    // is read back AFTER v2 exists — the read that in-place CoW cannot
+    // serve. The gate reads BOTH versions (tagged) row-for-row: a commit
+    // that leaked into an old version's files, a manifest that lists the
+    // wrong files, or a reader that "helpfully" merged versions all break
+    // the row sets. The v1 plan also proves snapshot isolation: its file
+    // list resolved at build time, so v2's commit can't move it.
+    // p22: both version reads replayed closed-form from the commit rules
+    Query("p22_time_travel",
+      """SELECT doc_id, lang, n_chars, CAST(1 AS BIGINT) AS version
+        |FROM documents WHERE doc_id % 3 = 0
+        |UNION ALL
+        |SELECT doc_id, lang, n_chars, CAST(2 AS BIGINT) AS version
+        |FROM documents WHERE doc_id % 3 <= 1
+        |ORDER BY version, doc_id""".stripMargin)((s, dir) => {
+      val base = scratch("tt", dir)
+      val docs = t(s, dir, "documents")
+        .select(col("doc_id"), col("lang"), col("n_chars"))
+      sources.Sources.commitVersion(docs.filter(col("doc_id") % 3 === 0), base)
+      sources.Sources.commitVersion(docs.filter(col("doc_id") % 3 <= 1), base)
+      val v1 = sources.Sources.readVersion(s, base, Some(1L))
+        .withColumn("version", lit(1L))
+      val v2 = sources.Sources.readVersion(s, base, None)
+        .withColumn("version", lit(2L))
+      v1.unionByName(v2).orderBy("version", "doc_id")
+    }),
+
+    // DELTA commits (p23): the full lakehouse CoW contract — version 2
+    // touches ONLY the 'en' band, so every other band's v1 files are
+    // REUSED verbatim in v2's manifest (commit cost ∝ delta, not table,
+    // and SourcesSpec asserts the file-set reuse). Both versions then read
+    // back row-for-row after v2 landed: time travel + snapshot isolation
+    // on band-partitioned plain parquet.
+    // p23: both delta-version reads replayed closed-form — v1 is the
+    // initial load, v2 applies the en-only I/U/D rules
+    Query("p23_delta_commits", DeltaVersionsOracle)((s, dir) => {
+      val base = scratch("delta", dir)
+      val docs = t(s, dir, "documents")
+        .select(col("doc_id"), col("lang"), col("n_chars"))
+      val init = docs.filter(col("doc_id") % 3 <= 1).withColumn("op", lit("I"))
+      sources.Sources.deltaCommit(s, base, init, "lang", Seq("lang", "doc_id"))
+      val en = docs.filter(col("lang") === "en")
+      val dels = en.filter(col("doc_id") % 6 === 0).withColumn("op", lit("D"))
+      val upds = en.filter(col("doc_id") % 3 === 1 && col("doc_id") % 5 === 0)
+        .withColumn("n_chars", -col("n_chars")).withColumn("op", lit("U"))
+      val ins = en.filter(col("doc_id") % 3 === 2).withColumn("op", lit("I"))
+      sources.Sources.deltaCommit(s, base,
+        dels.unionByName(upds).unionByName(ins), "lang", Seq("lang", "doc_id"))
+      val v1 = sources.Sources.deltaRead(s, base, Some(1L))
+        .withColumn("version", lit(1L))
+      val v2 = sources.Sources.deltaRead(s, base, None)
+        .withColumn("version", lit(2L))
+      v1.unionByName(v2)
+        .select("doc_id", "lang", "n_chars", "version")
+        .orderBy("version", "doc_id")
+    }),
+
+    // zero-copy SHALLOW CLONE (p26, round 15): fork a versioned table at a
+    // pinned version by publishing ONE manifest of absolute source-file
+    // paths — no data bytes move, cloning a petabyte costs a KB write.
+    // The query proves the full contract in one result: the clone reads
+    // the pinned snapshot, DIVERGES with its own commit (source never
+    // observes it), and the source's later commit never reaches the
+    // clone — four labeled reads, every row oracle-replayed from the
+    // base predicates
+    // p26: every labeled read replays from the base predicates — the
+    // storage mechanics (absolute-path manifest, divergence isolation)
+    // are exactly what make these four selections the right answers
+    Query("p26_shallow_clone",
+      """SELECT doc_id, lang, n_chars, 'clone_v1' AS which
+        |FROM documents WHERE doc_id % 3 = 0
+        |UNION ALL
+        |SELECT doc_id, lang, n_chars, 'clone_v2' AS which
+        |FROM documents WHERE doc_id % 3 = 0 OR doc_id % 7 = 1
+        |UNION ALL
+        |SELECT doc_id, lang, n_chars, 'src_v1' AS which
+        |FROM documents WHERE doc_id % 3 = 0
+        |UNION ALL
+        |SELECT doc_id, lang, n_chars, 'src_v2' AS which
+        |FROM documents WHERE doc_id % 3 <= 1
+        |ORDER BY which, doc_id""".stripMargin)((s, dir) => {
+      val src = scratch("clsrc", dir)
+      val dst = scratch("cldst", dir)
+      val docs = t(s, dir, "documents")
+        .select(col("doc_id"), col("lang"), col("n_chars"))
+      sources.Sources.commitVersion(docs.filter(col("doc_id") % 3 === 0), src)
+      sources.Sources.cloneVersion(s, src, dst)
+      // clone diverges: its own v2 (full snapshot, local files only)
+      sources.Sources.commitVersion(
+        docs.filter(col("doc_id") % 3 === 0 || col("doc_id") % 7 === 1), dst)
+      // source moves on independently: its v2 never reaches the clone
+      sources.Sources.commitVersion(docs.filter(col("doc_id") % 3 <= 1), src)
+      def tag(df: DataFrame, t: String) = df.withColumn("which", lit(t))
+      tag(sources.Sources.readVersion(s, dst, Some(1L)), "clone_v1")
+        .unionByName(tag(sources.Sources.readVersion(s, dst, None), "clone_v2"))
+        .unionByName(tag(sources.Sources.readVersion(s, src, Some(1L)), "src_v1"))
+        .unionByName(tag(sources.Sources.readVersion(s, src, None), "src_v2"))
+        .orderBy("which", "doc_id")
+    }),
+
+    // manifest-level version DIFF (p25, round 14): rows added ('A') and
+    // removed ('R') between two published versions, scanning ONLY the
+    // files the two manifests do not share — commits are O(delta), so
+    // diffs are too (the untouched de/fr/zh bands' carried files are
+    // never read; SourcesSpec pins that via inputFiles). Unchanged rows
+    // inside the rewritten band cancel through the EXCEPT ALL pair.
+    // p25: the diff replayed as EXCEPT ALL pairs over the same two
+    // closed-form version states p23's oracle constructs
+    Query("p25_version_diff",
+      """WITH v1 AS (SELECT doc_id, lang, n_chars FROM documents
+        |            WHERE doc_id % 3 <= 1),
+        |v2 AS (SELECT doc_id, lang,
+        |    CASE WHEN lang = 'en' AND doc_id % 3 = 1 AND doc_id % 5 = 0
+        |      THEN -n_chars ELSE n_chars END AS n_chars
+        |  FROM documents
+        |  WHERE (doc_id % 3 <= 1 AND NOT (lang = 'en' AND doc_id % 6 = 0))
+        |     OR (lang = 'en' AND doc_id % 3 = 2)),
+        |a AS (SELECT * FROM v2 EXCEPT ALL SELECT * FROM v1),
+        |r AS (SELECT * FROM v1 EXCEPT ALL SELECT * FROM v2)
+        |SELECT doc_id, lang, n_chars, 'A' AS change FROM a
+        |UNION ALL
+        |SELECT doc_id, lang, n_chars, 'R' AS change FROM r
+        |ORDER BY change, doc_id""".stripMargin)((s, dir) => {
+      val base = scratch("vdiff", dir)
+      val docs = t(s, dir, "documents")
+        .select(col("doc_id"), col("lang"), col("n_chars"))
+      val init = docs.filter(col("doc_id") % 3 <= 1).withColumn("op", lit("I"))
+      sources.Sources.deltaCommit(s, base, init, "lang", Seq("lang", "doc_id"))
+      val en = docs.filter(col("lang") === "en")
+      val dels = en.filter(col("doc_id") % 6 === 0).withColumn("op", lit("D"))
+      val upds = en.filter(col("doc_id") % 3 === 1 && col("doc_id") % 5 === 0)
+        .withColumn("n_chars", -col("n_chars")).withColumn("op", lit("U"))
+      val ins = en.filter(col("doc_id") % 3 === 2).withColumn("op", lit("I"))
+      sources.Sources.deltaCommit(s, base,
+        dels.unionByName(upds).unionByName(ins), "lang", Seq("lang", "doc_id"))
+      sources.Sources.deltaDiff(s, base, 1L, 2L)
+        .select("doc_id", "lang", "n_chars", "change")
+        .orderBy("change", "doc_id")
+    }),
+
+    // STREAMING ingestion into the versioned table (p24): each drained
+    // micro-batch lands as one immutable delta version through
+    // Sinks.deltaSink (foreachBatch + per-batch marker dedup), so the
+    // continuously-ingested table keeps the full time-travel/snapshot
+    // contract — the same I/U/D rules as p23, arriving as a stream, must
+    // produce the same two version states row-for-row.
+    // p24: identical closed form to p23 — the stream must land the same
+    // two version states the batch commits did
+    Query("p24_stream_delta_ingest", DeltaVersionsOracle)((s, dir) => {
+      val root = scratch("sdelta", dir)
+      val src = s"$root/changes"; val tbl = s"$root/tbl"; val ck = s"$root/ck"
+      val docs = t(s, dir, "documents")
+        .select(col("doc_id"), col("lang"), col("n_chars"))
+      val b1 = docs.filter(col("doc_id") % 3 <= 1).withColumn("op", lit("I"))
+      val en = docs.filter(col("lang") === "en")
+      val b2 = en.filter(col("doc_id") % 6 === 0).withColumn("op", lit("D"))
+        .unionByName(en.filter(col("doc_id") % 3 === 1 && col("doc_id") % 5 === 0)
+          .withColumn("n_chars", -col("n_chars")).withColumn("op", lit("U")))
+        .unionByName(en.filter(col("doc_id") % 3 === 2).withColumn("op", lit("I")))
+      val schema = b1.schema
+      def drain(): Unit = streaming.Sinks.deltaSink(
+        s.readStream.schema(schema).parquet(src), tbl, ck,
+        "lang", Seq("lang", "doc_id")).awaitTermination()
+      b1.coalesce(1).write.mode("append").parquet(src); drain()
+      b2.coalesce(1).write.mode("append").parquet(src); drain()
+      val v1 = sources.Sources.deltaRead(s, tbl, Some(1L))
+        .withColumn("version", lit(1L))
+      val vLast = sources.Sources.deltaRead(s, tbl, None)
+        .withColumn("version", lit(2L))
+      v1.unionByName(vLast)
+        .select("doc_id", "lang", "n_chars", "version")
+        .orderBy("version", "doc_id")
+    }),
+
+    // one-call corpus card: the dataset-release summary row from one full
+    // scan + a tiny top-language aggregate, every number exact
+    Query("p18_corpus_card",
+      """WITH top AS (SELECT lang AS top_lang, count(*) AS top_lang_docs
+        |  FROM documents GROUP BY 1
+        |  ORDER BY top_lang_docs DESC, top_lang ASC LIMIT 1)
+        |SELECT count(*) AS n_docs,
+        |  count(DISTINCT md5(text)) AS n_distinct_docs,
+        |  CAST(sum(CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT)) AS BIGINT) AS total_tokens,
+        |  quantile_cont(n_chars, 0.5) AS median_chars,
+        |  count(DISTINCT lang) AS n_langs,
+        |  top.top_lang, top.top_lang_docs
+        |FROM documents CROSS JOIN top
+        |GROUP BY top.top_lang, top.top_lang_docs""".stripMargin)((s, dir) =>
+      ops.Pipeline.corpusCard(t(s, dir, "documents"))),
+
+    // CDC log → snapshot: latest state per user from the event log, error
+    // events acting as delete markers — one window pass, WindowGroupLimit
+    // keeps per-key winners before the exchange
+    Query("p16_cdc_snapshot",
+      """WITH r AS (SELECT user_id, event_id, event_type, value,
+        |    row_number() OVER (PARTITION BY user_id
+        |                       ORDER BY ts DESC, event_id DESC) AS rn
+        |  FROM events)
+        |SELECT user_id, event_id, event_type, value FROM r
+        |WHERE rn = 1 AND event_type <> 'error' ORDER BY user_id""".stripMargin)((s, dir) => {
+      val ev = t(s, dir, "events").withColumn("ts", col("ts").cast("timestamp_ntz"))
+      ops.Pipeline.cdcSnapshot(ev, Seq("user_id"), "ts",
+          deleteWhen = col("event_type") === "error", tieCols = Seq("event_id"))
+        .select("user_id", "event_id", "event_type", "value")
+        .orderBy("user_id")
+    }),
+
+    // corpus drift report: per-bucket KL/JS divergence terms between two
+    // corpus versions' hashed-feature distributions — 256 integer rows
+    // (scaled-long ln, the t14 convention), one tagged-union aggregate,
+    // totals as scalar subqueries, bucket domain as an inline table
+    Query("p15_feature_drift",
+      """WITH d AS (SELECT doc_id,
+        |    list_filter(regexp_split_to_array(lower(text), '[^a-z]+'),
+        |                x -> x <> '') AS toks
+        |  FROM documents),
+        |f AS (SELECT doc_id, unnest(toks) AS feat FROM d
+        |  UNION ALL
+        |  SELECT doc_id, unnest(list_transform(range(1, len(toks)),
+        |    i -> toks[i] || '_' || toks[i + 1])) AS feat FROM d),
+        |fb AS (SELECT doc_id, substring(md5(feat), 1, 2) AS b FROM f),
+        |c AS (SELECT b, sum(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END) AS c1,
+        |    sum(CASE WHEN doc_id % 2 = 1 THEN 1 ELSE 0 END) AS c2
+        |  FROM fb GROUP BY 1),
+        |tot AS (SELECT CAST(sum(c1) AS DOUBLE) AS n1,
+        |    CAST(sum(c2) AS DOUBLE) AS n2 FROM c),
+        |fl AS (SELECT printf('%02x', i) AS b, COALESCE(c.c1, 0) AS c1,
+        |    COALESCE(c.c2, 0) AS c2
+        |  FROM range(256) t(i) LEFT JOIN c ON printf('%02x', i) = c.b),
+        |z AS (SELECT b, c1, c2,
+        |    (c1 + 1) / (tot.n1 + 256.0) AS p, (c2 + 1) / (tot.n2 + 256.0) AS q,
+        |    ((c1 + 1) / (tot.n1 + 256.0) + (c2 + 1) / (tot.n2 + 256.0)) / 2 AS m
+        |  FROM fl CROSS JOIN tot)
+        |SELECT b, CAST(c1 AS BIGINT) AS c1, CAST(c2 AS BIGINT) AS c2,
+        |  CAST(round(p * ln(p / q) * 1e12) AS BIGINT) AS t_pq,
+        |  CAST(round(q * ln(q / p) * 1e12) AS BIGINT) AS t_qp,
+        |  CAST(round((p / 2 * ln(p / m) + q / 2 * ln(q / m)) * 1e12) AS BIGINT) AS t_js
+        |FROM z ORDER BY b""".stripMargin)((s, dir) => {
+      val d = t(s, dir, "documents")
+      ops.TextOps.featureDrift(
+          d.filter(col("doc_id") % 2 === 0), d.filter(col("doc_id") % 2 === 1))
+        .orderBy("b")
+    }),
+
+    // p13: exact join sizes DuckDB-checked; the inner-product estimates are
+    // certified in-query against the formal CMS bound
+    Query("p13_join_size_estimate",
+      """SELECT
+        |  (SELECT count(*) FROM lineitem JOIN orders ON l_orderkey = o_orderkey)
+        |    AS exact_join,
+        |  (SELECT CAST(sum(c * c) AS BIGINT) FROM
+        |    (SELECT count(*) AS c FROM lineitem GROUP BY l_suppkey)) AS exact_f2,
+        |  TRUE AS join_ok, TRUE AS f2_ok""".stripMargin)((s, dir) => {
+      val li = t(s, dir, "lineitem"); val ord = t(s, dir, "orders")
+      val estJoin = ops.Sketches.joinSizeEstimate(li, "l_orderkey", ord, "o_orderkey")
+      val estF2 = ops.Sketches.joinSizeEstimate(li, "l_suppkey", li, "l_suppkey")
+      val exactF2 = li.groupBy("l_suppkey").agg(count(lit(1)).as("c"))
+        .agg(sum(col("c") * col("c")).as("f2"))
+      val nL = li.agg(count(lit(1)).as("n"))
+      val nO = ord.agg(count(lit(1)).as("n"))
+      // eps 1e-4 → width ≥ 2/eps = 20000 cells → bound ≤ 1e-4·N_a·N_b
+      def bound(na: Column, nb: Column): Column =
+        ceil(lit(1e-4) * na.cast("double") * nb.cast("double")).cast("long")
+      li.join(ord, col("l_orderkey") === col("o_orderkey"))
+        .agg(count(lit(1)).as("exact_join"))
+        .select(col("exact_join"), exactF2.scalar().as("exact_f2"),
+          (estJoin.scalar() >= col("exact_join") &&
+            estJoin.scalar() <= col("exact_join") +
+              bound(nL.scalar(), nO.scalar())).as("join_ok"),
+          (estF2.scalar() >= exactF2.scalar() &&
+            estF2.scalar() <= exactF2.scalar() +
+              bound(nL.scalar(), nL.scalar())).as("f2_ok"))
+    }),
+
+    // theta-sketch corpus overlap: per-shard theta sketches of two corpus
+    // versions merge mergeably (KB-sized rows), then union/intersection/
+    // difference cardinalities evaluate BETWEEN the merged sketches — the
+    // "how much does crawl N+1 overlap crawl N" question without a join.
+    // Exact counts are DuckDB-checked; each estimate is certified in-query
+    // within 5% (theta is in EXACT mode below 16,384 distinct keys, so at
+    // driver SF the estimates equal the exact counts outright).
+    // p12: exact version cardinalities DuckDB-checked; the sketch estimates
+    // are certified in-query (TRUE columns) — deterministic given the
+    // default datasketches seed
+    Query("p12_theta_overlap",
+      """SELECT
+        |  CAST(sum(CASE WHEN doc_id % 3 <> 0 THEN 1 ELSE 0 END) AS BIGINT) AS exact_a,
+        |  CAST(sum(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS exact_b,
+        |  CAST(sum(CASE WHEN doc_id % 3 <> 0 AND doc_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS exact_common,
+        |  TRUE AS a_ok, TRUE AS b_ok, TRUE AS common_ok, TRUE AS removed_ok
+        |FROM documents""".stripMargin)((s, dir) => {
+      import graft.functions.ThetaFunctions._
+      val d = t(s, dir, "documents")
+      val verA = d.filter(col("doc_id") % 3 =!= 0)
+      val verB = d.filter(col("doc_id") % 2 === 0)
+      val skA = ops.Sketches.thetaMerge(
+        ops.Sketches.thetaShards(verA, "doc_id", col("doc_id") % 8))
+      val skB = ops.Sketches.thetaMerge(
+        ops.Sketches.thetaShards(verB, "doc_id", col("doc_id") % 8))
+      def ok(est: Column, exact: Column): Column =
+        abs(est - exact) <= greatest(lit(2.0), exact * 0.05)
+      d.agg(
+          sum(when(col("doc_id") % 3 =!= 0, 1).otherwise(0)).as("exact_a"),
+          sum(when(col("doc_id") % 2 === 0, 1).otherwise(0)).as("exact_b"),
+          sum(when(col("doc_id") % 3 =!= 0 && col("doc_id") % 2 === 0, 1)
+            .otherwise(0)).as("exact_common"))
+        .select(col("exact_a"), col("exact_b"), col("exact_common"),
+          ok(thetaEstimate(skA.scalar()), col("exact_a")).as("a_ok"),
+          ok(thetaEstimate(skB.scalar()), col("exact_b")).as("b_ok"),
+          ok(thetaIntersectEstimate(skA.scalar(), skB.scalar()),
+            col("exact_common")).as("common_ok"),
+          ok(thetaANotBEstimate(skA.scalar(), skB.scalar()),
+            col("exact_a") - col("exact_common")).as("removed_ok"))
+    }),
+
+    // runtime-filter join: a bloom over the selective dim side's keys
+    // (scalar subquery — never driver-side) prefilters lineitem BEFORE the
+    // join shuffle, so the shuffle carries only rows that can join — the
+    // semi-join reduction every 100 TB fact-dim join wants when the dim is
+    // too big to broadcast. Output provably equals the plain inner join
+    // (no false negatives; false positives die in the join itself).
+    // p11: the bloom-prefiltered join must equal the PLAIN inner join —
+    // the runtime filter is a pure shuffle reduction, never a semantics change
+    Query("p11_bloom_join",
+      """SELECT l_returnflag,
+        |  CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
+        |  count(*) AS n_lines
+        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |WHERE o_orderpriority = '1-URGENT'
+        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)((s, dir) => {
+      val li = t(s, dir, "lineitem")
+      val urgent = t(s, dir, "orders")
+        .filter(col("o_orderpriority") === "1-URGENT")
+        .select("o_orderkey", "o_orderpriority")
+      ops.Pipeline.bloomPrefilteredJoin(li, urgent, "l_orderkey", "o_orderkey")
+        .groupBy(col("l_returnflag"))
+        .agg(dsum4(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
+          .as("revenue"), count(lit(1)).as("n_lines"))
+        .orderBy("l_returnflag")
+    }),
+
+    // mergeable-sketch heavy hitters: per-shard Count-Min frequency sketches
+    // merged (graft's cms_merge_agg) and probed for the exact top-20 keys —
+    // the refresh-without-rescan companion to p02's exact skew report.
+    // exact_n is DuckDB-verified; est_ok certifies the CMS guarantee
+    // exact ≤ est ≤ exact + ε·N in-query (deterministic given the seed).
+    // frequent-items sketch (round 9): DataSketches LongsSketch — the
+    // Misra-Gries member of the mergeable family; unlike p07's CMS it
+    // returns the heavy-hitter list itself (no probe universe). Per-shard
+    // sketches merge via freq_merge_agg; certification checks the
+    // deterministic contract on the exact top-20: lb ≤ exact ≤ ub and
+    // ub − lb ≤ the sketch's declared maximum error (the 64-counter map
+    // genuinely overflows on ~200 suppliers, so the bounds are non-trivial)
+    Query("p20_freq_items", SupplierCountsOracle)((s, dir) => {
+      val li = t(s, dir, "lineitem")
+      val merged = ops.Sketches.freqMerge(ops.Sketches.freqShards(
+        li, "l_suppkey", col("l_orderkey") % 16, maxMapSize = 64))
+      val top = li.groupBy("l_suppkey").agg(count(lit(1)).as("exact_n"))
+        .orderBy(col("exact_n").desc, col("l_suppkey").asc).limit(20)
+      top.select(col("l_suppkey"), col("exact_n"),
+          graft.functions.FreqFunctions.freqLowerBoundLong(
+            merged.scalar(), col("l_suppkey")).as("lb"),
+          graft.functions.FreqFunctions.freqUpperBoundLong(
+            merged.scalar(), col("l_suppkey")).as("ub"),
+          graft.functions.FreqFunctions.freqMaxError(merged.scalar()).as("me"))
+        .select(col("l_suppkey"), col("exact_n"),
+          (col("lb") <= col("exact_n") && col("exact_n") <= col("ub") &&
+            col("ub") - col("lb") <= col("me")).as("est_ok"))
+        .orderBy(col("exact_n").desc, col("l_suppkey").asc)
+    }),
+
+    Query("p07_cms_heavy_hitters", SupplierCountsOracle)((s, dir) => {
+      val li = t(s, dir, "lineitem")
+      val merged = ops.Sketches.cmsMerge(ops.Sketches.cmsShards(
+        li, "l_suppkey", col("l_orderkey") % 16))
+      val n = li.agg(count(lit(1)).as("n"))
+      val top = li.groupBy("l_suppkey").agg(count(lit(1)).as("exact_n"))
+        .orderBy(col("exact_n").desc, col("l_suppkey").asc).limit(20)
+      top.select(col("l_suppkey"), col("exact_n"),
+          graft.functions.CmsFunctions.cmsEstimateLong(
+            merged.scalar(), col("l_suppkey")).as("est"),
+          n.scalar().as("total"))
+        .select(col("l_suppkey"), col("exact_n"),
+          (col("est") >= col("exact_n") &&
+            col("est") <= col("exact_n") + ceil(col("total") * 1e-4)).as("est_ok"))
+        .orderBy(col("exact_n").desc, col("l_suppkey").asc)
+    }),
+
+    // mergeable-sketch quantiles: per-shard KLL sketches of the token-count
+    // distribution merged and read at p50/p95; certified by computing each
+    // estimate's EXACT rank interval in the same query. The KLL guarantee
+    // bounds the RANK of the returned item, and with duplicated values the
+    // item's rank is an INTERVAL [P(X<v), P(X≤v)] — the certification is
+    // that this interval overlaps target ± margin (k=200 ≈ 1.65% rank
+    // error; 2.5% margin), i.e. P(X<v) ≤ q+m AND P(X≤v) ≥ q−m. A strict
+    // CDF-at-v check would flag a correct sketch whenever ties at the
+    // quantile value exceed the margin. n itself is DuckDB-verified.
+    Query("p06_sketch_quantiles",
+      "SELECT count(*) AS n, TRUE AS p50_ok, TRUE AS p95_ok FROM documents")((s, dir) => {
+      val docs = t(s, dir, "documents").select(col("doc_id"),
+        ops.TextOps.tokenCount(col("text")).as("n_tokens"))
+      val q = ops.Sketches.kllQuantiles(
+        ops.Sketches.kllShards(docs, "n_tokens", col("doc_id") % 16),
+        quantiles = Seq(0.5, 0.95))
+      def rankOk(v: Column, target: Double, m: Double): Column =
+        (avg(when(col("n_tokens") < v, 1.0).otherwise(0.0)) <= target + m) &&
+          (avg(when(col("n_tokens") <= v, 1.0).otherwise(0.0)) >= target - m)
+      docs.crossJoin(broadcast(q)).agg(
+        count(lit(1)).as("n"),
+        rankOk(col("p50"), 0.5, 0.025).as("p50_ok"),
+        rankOk(col("p95"), 0.95, 0.025).as("p95_ok"))
+    }),
+
+    // the round-4 curation stages COMPOSED as one declarative plan:
+    // exact dedup → repetition filter → mixture resample → sequence pack
+    Query("p01_curation_pipeline",
       """WITH dedup AS (
         |  SELECT min(doc_id) AS doc_id FROM documents
         |  GROUP BY md5(regexp_replace(lower(text), '\s+', ' ', 'g'))),
@@ -4818,167 +2993,32 @@ object SparkEntry {
         |  FROM d)
         |SELECT doc_id, lang, n_tokens, stream_offset,
         |  CAST(FLOOR(stream_offset / 1024.0) AS BIGINT) AS bin_id
-        |FROM p ORDER BY lang, doc_id""".stripMargin,
-    "t14_lm_score" ->
-      """WITH t AS (SELECT doc_id, lower(text) AS tx FROM documents
-        |           WHERE length(text) >= 2),
-        |gi AS (SELECT doc_id, unnest(generate_series(1, len(tx) - 1)) AS i, tx FROM t),
-        |g2 AS (SELECT doc_id, substr(tx, CAST(i AS INTEGER), 2) AS g FROM gi),
-        |bc AS (SELECT g, count(*) AS bc FROM g2 GROUP BY 1),
-        |pc AS (SELECT substr(g, 1, 1) AS c1, sum(bc) AS pc FROM bc GROUP BY 1),
-        |model AS (SELECT g, bc / CAST(pc AS DOUBLE) AS p
-        |          FROM bc JOIN pc ON substr(bc.g, 1, 1) = pc.c1),
-        |sc AS (SELECT doc_id, count(*) AS n_bigrams,
-        |        ROUND(CAST(sum(CAST(round(ln(p) * 1e9) AS BIGINT)) AS DOUBLE)
-        |          / 1e9 / count(*), 6) AS avg_logp
-        |       FROM g2 JOIN model USING (g) GROUP BY 1)
-        |SELECT doc_id, n_bigrams, avg_logp FROM sc ORDER BY doc_id""".stripMargin,
-    // t27: t14's char-LM model replayed, then per-lang thirds by ntile over
-    // (avg_logp DESC, doc_id) — integer-exact bucket assignment
-    "t27_ppl_buckets" ->
-      """WITH t AS (SELECT doc_id, lower(text) AS tx FROM documents
-        |           WHERE length(text) >= 2),
-        |gi AS (SELECT doc_id, unnest(generate_series(1, len(tx) - 1)) AS i, tx FROM t),
-        |g2 AS (SELECT doc_id, substr(tx, CAST(i AS INTEGER), 2) AS g FROM gi),
-        |bc AS (SELECT g, count(*) AS bc FROM g2 GROUP BY 1),
-        |pc AS (SELECT substr(g, 1, 1) AS c1, sum(bc) AS pc FROM bc GROUP BY 1),
-        |model AS (SELECT g, bc / CAST(pc AS DOUBLE) AS p
-        |          FROM bc JOIN pc ON substr(bc.g, 1, 1) = pc.c1),
-        |sc AS (SELECT doc_id, count(*) AS n_bigrams,
-        |        ROUND(CAST(sum(CAST(round(ln(p) * 1e9) AS BIGINT)) AS DOUBLE)
-        |          / 1e9 / count(*), 6) AS avg_logp
-        |       FROM g2 JOIN model USING (g) GROUP BY 1),
-        |nt AS (SELECT sc.doc_id, n_bigrams, avg_logp, d.lang,
-        |        ntile(3) OVER (PARTITION BY d.lang
-        |          ORDER BY avg_logp DESC, sc.doc_id) AS bucket
-        |       FROM sc JOIN documents d ON sc.doc_id = d.doc_id)
-        |SELECT doc_id, n_bigrams, avg_logp, lang, bucket,
-        |  CASE WHEN bucket = 1 THEN 'head' WHEN bucket = 3 THEN 'tail'
-        |    ELSE 'middle' END AS bucket_label
-        |FROM nt ORDER BY doc_id""".stripMargin,
-    "t12_profile" ->
-      """WITH p AS (
-        |  SELECT 'doc_id' AS col_name, count(*) AS n_rows,
-        |    count(*) - count(doc_id) AS n_nulls,
-        |    count(DISTINCT doc_id) AS n_distinct,
-        |    CAST(min(doc_id) AS VARCHAR) AS min_value,
-        |    CAST(max(doc_id) AS VARCHAR) AS max_value FROM documents
-        |  UNION ALL
-        |  SELECT 'lang', count(*), count(*) - count(lang),
-        |    count(DISTINCT lang), CAST(min(lang) AS VARCHAR),
-        |    CAST(max(lang) AS VARCHAR) FROM documents
-        |  UNION ALL
-        |  SELECT 'source', count(*), count(*) - count(source),
-        |    count(DISTINCT source), CAST(min(source) AS VARCHAR),
-        |    CAST(max(source) AS VARCHAR) FROM documents
-        |  UNION ALL
-        |  SELECT 'n_chars', count(*), count(*) - count(n_chars),
-        |    count(DISTINCT n_chars), CAST(min(n_chars) AS VARCHAR),
-        |    CAST(max(n_chars) AS VARCHAR) FROM documents)
-        |SELECT * FROM p ORDER BY col_name""".stripMargin,
-    "t11_mixture_sample" ->
-      """SELECT doc_id, lang, source FROM documents
-        |WHERE CASE lang
-        |  WHEN 'en' THEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < '8000'
-        |  WHEN 'de' THEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < '4000'
-        |  WHEN 'fr' THEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < 'c000'
-        |  WHEN 'zh' THEN TRUE
-        |  ELSE substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < '2000' END
-        |ORDER BY doc_id""".stripMargin,
-    "t17_segment_dedup" ->
-      """WITH ws AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        |segl AS (SELECT doc_id,
-        |  [{'pos': k - 1, 'seg': array_to_string(w[(k-1)*20+1 : (k-1)*20+20], ' ')}
-        |   for k in range(1, GREATEST(CAST(ceil(len(w) / 20.0) AS INT), 1) + 1)] AS segs
-        |  FROM ws),
-        |seg AS (SELECT doc_id, u.pos AS pos, u.seg AS seg
-        |  FROM (SELECT doc_id, unnest(segs) AS u FROM segl)
-        |  WHERE len(u.seg) > 0),
-        |kept AS (SELECT doc_id, pos, seg FROM seg
-        |  QUALIFY ROW_NUMBER() OVER (PARTITION BY md5(seg)
-        |    ORDER BY doc_id, pos) = 1)
-        |SELECT doc_id, string_agg(seg, ' ' ORDER BY pos) AS text_deduped,
-        |  count(*) AS n_segments_kept
-        |FROM kept GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "t16_token_budget" ->
-      """WITH tk AS (SELECT doc_id, lang,
-        |    CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT) AS n_tokens
-        |  FROM documents),
-        |c AS (SELECT doc_id, lang, n_tokens,
-        |    CAST(sum(n_tokens) OVER (PARTITION BY lang
-        |      ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_tokens
-        |  FROM tk)
-        |SELECT doc_id, lang, n_tokens, cum_tokens FROM c
-        |WHERE cum_tokens - n_tokens < CASE lang WHEN 'en' THEN 3000
-        |  WHEN 'de' THEN 2000 WHEN 'fr' THEN 1500 WHEN 'zh' THEN 1000
-        |  ELSE 0 END
-        |ORDER BY doc_id""".stripMargin,
-    "t10_repetition" ->
-      """WITH toks AS (
-        |  SELECT doc_id, list_filter(string_split(lower(text), ' '), w -> w <> '') AS ws
-        |  FROM documents),
-        |w AS (SELECT doc_id, unnest(ws) AS word FROM toks),
-        |wc AS (SELECT doc_id, word, count(*) AS c FROM w GROUP BY 1, 2),
-        |wagg AS (SELECT doc_id, sum(c) AS n_words, count(*) AS n_distinct,
-        |                max(c) AS top_word_n FROM wc GROUP BY 1),
-        |bg AS (SELECT doc_id,
-        |         [ws[i] || ' ' || ws[i+1] FOR i IN range(1, len(ws))] AS bgs
-        |       FROM toks),
-        |bgu AS (SELECT doc_id, unnest(bgs) AS b FROM bg),
-        |bgc AS (SELECT doc_id, b, count(*) AS c FROM bgu GROUP BY 1, 2),
-        |bagg AS (SELECT doc_id, max(c) AS top_bigram_n FROM bgc GROUP BY 1),
-        |pos AS (SELECT doc_id, unnest(ws) AS word,
-        |               generate_subscripts(ws, 1) AS i FROM toks),
-        |isl AS (SELECT doc_id, word,
-        |          i - row_number() OVER (PARTITION BY doc_id, word ORDER BY i) AS g
-        |        FROM pos),
-        |runs AS (SELECT doc_id, count(*) AS rl FROM isl GROUP BY doc_id, word, g),
-        |ragg AS (SELECT doc_id, max(rl) AS max_token_run FROM runs GROUP BY 1)
-        |SELECT d.doc_id,
-        |  CAST(COALESCE(w.n_words, 0) AS INTEGER) AS n_words,
-        |  ROUND(CASE WHEN COALESCE(w.n_words, 0) = 0 THEN 0.0
-        |        ELSE 1.0 - w.n_distinct / CAST(w.n_words AS DOUBLE) END, 6) AS dup_word_frac,
-        |  ROUND(CASE WHEN COALESCE(w.n_words, 0) = 0 THEN 0.0
-        |        ELSE w.top_word_n / CAST(w.n_words AS DOUBLE) END, 6) AS top_word_frac,
-        |  ROUND(CASE WHEN COALESCE(w.n_words, 0) < 2 THEN 0.0
-        |        ELSE b.top_bigram_n / CAST(w.n_words - 1 AS DOUBLE) END, 6) AS top_bigram_frac,
-        |  CAST(COALESCE(r.max_token_run, 0) AS INTEGER) AS max_token_run,
-        |  (CASE WHEN COALESCE(w.n_words, 0) = 0 THEN 0.0
-        |        ELSE w.top_word_n / CAST(w.n_words AS DOUBLE) END > 0.2
-        |   OR CASE WHEN COALESCE(w.n_words, 0) < 2 THEN 0.0
-        |        ELSE b.top_bigram_n / CAST(w.n_words - 1 AS DOUBLE) END > 0.1
-        |   OR COALESCE(r.max_token_run, 0) >= 4) AS repetitive
-        |FROM documents d
-        |LEFT JOIN wagg w USING (doc_id)
-        |LEFT JOIN bagg b USING (doc_id)
-        |LEFT JOIN ragg r USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-    "t08_top_docs_per_lang" ->
-      """WITH q AS (SELECT doc_id, lang,
-        |  LEAST(1.0, CAST(len(regexp_extract_all(text, '\S+')) AS DOUBLE) / 100.0) * 0.5
-        |    + LEAST(1.0, (CAST(len(regexp_extract_all(text, '\b(the|a|and|of|is|to)\b')) AS DOUBLE)
-        |        / GREATEST(len(regexp_extract_all(text, '\S+')), 1)) * 5.0) * 0.3
-        |    + CASE WHEN (CAST(length(text) AS DOUBLE)
-        |          / GREATEST(len(regexp_extract_all(text, '\S+')), 1)) >= 3.0
-        |        AND (CAST(length(text) AS DOUBLE)
-        |          / GREATEST(len(regexp_extract_all(text, '\S+')), 1)) <= 10.0
-        |      THEN 0.2 ELSE 0.0 END AS quality_score
-        |  FROM documents),
-        |r AS (SELECT lang, doc_id, quality_score,
-        |  row_number() OVER (PARTITION BY lang ORDER BY quality_score DESC, doc_id ASC) AS rk
-        |  FROM q)
-        |SELECT lang, doc_id, quality_score, rk FROM r WHERE rk <= 5
-        |ORDER BY lang, rk""".stripMargin,
-    "t03_fingerprint" ->
-      """SELECT doc_id,
-        |  md5(regexp_replace(lower(text), '\s+', ' ', 'g')) AS digest,
-        |  CAST(len(regexp_extract_all(text, '\S+')) AS INTEGER) AS n_tokens,
-        |  CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS INTEGER) AS bpe_tokens
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM p ORDER BY lang, doc_id""".stripMargin)((s, dir) => {
+      val docs = t(s, dir, "documents")
+      val kept = ops.Dedup.exactDedup(docs).select(col("keep_id").as("doc_id"))
+      val surviving = docs.join(kept, "doc_id")
+      val cleanIds = ops.TextOps.repetitionStats(surviving)
+        .filter(!col("repetitive")).select("doc_id")
+      val mixed = ops.Pipeline.mixtureSample(
+        surviving.join(cleanIds, "doc_id"), "doc_id", "lang",
+        rates = Map("en" -> 0.5, "zh" -> 1.0), default = 0.25)
+      val d = mixed.select(col("doc_id"), col("lang"),
+        ops.TextOps.tokenCount(col("text")).as("n_tokens"))
+      ops.Pipeline.packSequences(d, "n_tokens", "doc_id",
+        budget = 1024, byCols = Seq("lang"))
+        .orderBy("lang", "doc_id")
+    }),
+
+    // REAL image decode (round 8): deterministic synthetic PNGs (actual
+    // ImageIO PNG encode) decoded back through the actual ImageIO codec —
+    // width/height from IHDR, channels from the raster, mean luma from
+    // inflated IDAT pixels. Both stages cross the wire as NAMED typed
+    // stages (graft.png_encode_v1 → graft.image_decode_v1); the oracle
+    // recomputes geometry+luma from the generation rule, so a decoder that
+    // mis-parses the PNG fails certification.
     // m01: replay of the deterministic image-generation rule — the Spark
     // side gets these values out of a REAL PNG encode+decode round-trip
-    "m01_media_features" ->
+    Query("m01_media_features",
       """WITH g AS (SELECT doc_id,
         |    CAST(1 + (doc_id % 7) * 2 AS INTEGER) AS width,
         |    CAST(1 + (doc_id % 5) * 3 AS INTEGER) AS height
@@ -4987,38 +3027,20 @@ object SparkEntry {
         |    unnest(range(CAST(width AS BIGINT) * height)) AS k FROM g)
         |SELECT doc_id, width, height, CAST(3 AS INTEGER) AS channels,
         |  ROUND(avg(CAST((doc_id * 31 + k) % 256 AS DOUBLE)), 6) AS mean_luma
-        |FROM px GROUP BY doc_id, width, height ORDER BY doc_id""".stripMargin,
-    // m06: replay of the synthetic-signal rule — the Spark side reads these
-    // values back out of a REAL WAV encode+decode round-trip
-    "m06_audio_features" ->
-      """WITH g AS (SELECT doc_id,
-        |    CAST(64 + doc_id % 129 AS INTEGER) AS n_samples FROM documents),
-        |sm AS (SELECT doc_id, n_samples, unnest(range(n_samples)) AS k FROM g)
-        |SELECT doc_id, CAST(8000 AS INTEGER) AS sample_rate,
-        |  CAST(1 AS INTEGER) AS channels, n_samples,
-        |  ROUND(avg(CAST(abs((doc_id * 7 + k * 13) % 2048 - 1024) AS DOUBLE)), 6)
-        |    AS mean_abs
-        |FROM sm GROUP BY doc_id, n_samples ORDER BY doc_id""".stripMargin,
-    // m08: the stride-2 sampling rule replayed over the image-generation
-    // rule — resized pixel k (row-major in the rw×rh output) samples
-    // original pixel (2·(k/rw))·w + 2·(k%rw)
-    "m08_image_resize" ->
-      """WITH g AS (SELECT doc_id,
-        |    CAST(1 + (doc_id % 7) * 2 AS BIGINT) AS w,
-        |    CAST(1 + (doc_id % 5) * 3 AS BIGINT) AS h
-        |  FROM documents),
-        |r AS (SELECT doc_id, w, (w + 1) // 2 AS rw, (h + 1) // 2 AS rh FROM g),
-        |px AS (SELECT doc_id, w, rw, rh, unnest(range(rw * rh)) AS k FROM r)
-        |SELECT doc_id, CAST(rw AS INTEGER) AS width,
-        |  CAST(rh AS INTEGER) AS height, CAST(3 AS INTEGER) AS channels,
-        |  ROUND(avg(CAST((doc_id * 31 +
-        |    ((k // rw) * 2 * w + (k % rw) * 2)) % 256 AS DOUBLE)), 6)
-        |    AS mean_luma
-        |FROM px GROUP BY doc_id, rw, rh ORDER BY doc_id""".stripMargin,
+        |FROM px GROUP BY doc_id, width, height ORDER BY doc_id""".stripMargin)((s, dir) =>
+      ops.Multimodal.imageFeatures(s, t(s, dir, "documents"))
+        .orderBy("doc_id")),
+
+    // REAL video decode (round 9, re-pointed from the byte-class stub):
+    // clip-level pooling over DECODED animated-GIF frames — frame count
+    // from the container's image descriptors, clip luma over real inflated
+    // LZW rasters; stages wire-named graft.gif_encode_v1 →
+    // graft.gif_frames_v1. The stub stage surface stays certified by the
+    // wire conformance specs (graft.media_features_v1 remains decodable).
     // m05/m07: replay of the deterministic clip-generation rule — the Spark
     // side reads these values back out of a REAL animated-GIF encode +
     // multi-frame decode round-trip
-    "m05_video_clip_features" ->
+    Query("m05_video_clip_features",
       """WITH g AS (SELECT doc_id,
         |    CAST(2 + doc_id % 4 AS INTEGER) AS nf,
         |    CAST(2 + (doc_id % 5) * 2 AS INTEGER) AS width,
@@ -5030,9 +3052,40 @@ object SparkEntry {
         |SELECT doc_id, nf AS n_frames, width, height,
         |  ROUND(avg(CAST((doc_id * 17 + f * 101 + k * 3) % 256 AS DOUBLE)), 6)
         |    AS clip_luma
-        |FROM px GROUP BY doc_id, nf, width, height ORDER BY doc_id""".stripMargin,
+        |FROM px GROUP BY doc_id, nf, width, height ORDER BY doc_id""".stripMargin)((s, dir) =>
+      ops.Multimodal.videoClipFeatures(s, t(s, dir, "documents"))
+        .orderBy("doc_id")),
+
+    // REAL multi-frame video decode (round 9): deterministic synthetic
+    // animated GIFs (actual JDK GIF ImageWriter sequence API — one LZW
+    // raster per frame) decoded back frame-by-frame through the actual
+    // multi-frame ImageReader (getNumImages walks image descriptors,
+    // read(f) inflates frame f); per-frame geometry + mean luma. The
+    // oracle replays the closed-form generation rule, so a codec that
+    // mis-parses descriptors, palettes, or LZW fails certification.
+    Query("m07_video_frames",
+      """WITH g AS (SELECT doc_id,
+        |    CAST(2 + doc_id % 4 AS INTEGER) AS nf,
+        |    CAST(2 + (doc_id % 5) * 2 AS INTEGER) AS width,
+        |    CAST(2 + (doc_id % 3) * 3 AS INTEGER) AS height
+        |  FROM documents),
+        |fr AS (SELECT doc_id, width, height, unnest(range(nf)) AS f FROM g),
+        |px AS (SELECT doc_id, width, height, f,
+        |    unnest(range(CAST(width AS BIGINT) * height)) AS k FROM fr)
+        |SELECT doc_id, CAST(f AS INTEGER) AS frame_idx, width, height,
+        |  ROUND(avg(CAST((doc_id * 17 + f * 101 + k * 3) % 256 AS DOUBLE)), 6)
+        |    AS mean_luma
+        |FROM px GROUP BY doc_id, f, width, height
+        |ORDER BY doc_id, frame_idx""".stripMargin)((s, dir) =>
+      ops.Multimodal.videoFrameFeatures(s, t(s, dir, "documents"))
+        .orderBy("doc_id", "frame_idx")),
+
+    // scene-change detection over DECODED frames: per-clip luma-delta lag
+    // (one window pass; only per-frame scalars shuffle) — frame 0 opens a
+    // scene, later frames cut when the mean luma jumps ≥ 90; the oracle
+    // replays the closed-form pixel rule and the lag
     // m09: m07's per-frame mean-luma replay + the same lag/threshold rule
-    "m09_scene_cuts" ->
+    Query("m09_scene_cuts",
       """WITH g AS (SELECT doc_id,
         |    CAST(2 + doc_id % 4 AS INTEGER) AS nf,
         |    CAST(2 + (doc_id % 5) * 2 AS INTEGER) AS width,
@@ -5051,59 +3104,60 @@ object SparkEntry {
         |SELECT doc_id, frame_idx, mean_luma,
         |  ROUND(abs(mean_luma - prev), 6) AS luma_delta,
         |  (prev IS NULL OR abs(mean_luma - prev) >= 90.0) AS is_cut
-        |FROM lg ORDER BY doc_id, frame_idx""".stripMargin,
-    "m07_video_frames" ->
+        |FROM lg ORDER BY doc_id, frame_idx""".stripMargin)((s, dir) =>
+      ops.Multimodal.videoSceneCuts(s, t(s, dir, "documents"))
+        .orderBy("doc_id", "frame_idx")),
+
+    // REAL audio decode (round 8): deterministic synthetic PCM signals
+    // encoded as actual RIFF/WAVE (AudioSystem.write) and decoded back
+    // through the actual container parser — sample rate/channels from the
+    // fmt chunk, sample count + mean |amplitude| from the PCM frames; both
+    // stages wire-named (graft.wav_encode_v1 → graft.audio_decode_v1)
+    // m06: replay of the synthetic-signal rule — the Spark side reads these
+    // values back out of a REAL WAV encode+decode round-trip
+    Query("m06_audio_features",
       """WITH g AS (SELECT doc_id,
-        |    CAST(2 + doc_id % 4 AS INTEGER) AS nf,
-        |    CAST(2 + (doc_id % 5) * 2 AS INTEGER) AS width,
-        |    CAST(2 + (doc_id % 3) * 3 AS INTEGER) AS height
+        |    CAST(64 + doc_id % 129 AS INTEGER) AS n_samples FROM documents),
+        |sm AS (SELECT doc_id, n_samples, unnest(range(n_samples)) AS k FROM g)
+        |SELECT doc_id, CAST(8000 AS INTEGER) AS sample_rate,
+        |  CAST(1 AS INTEGER) AS channels, n_samples,
+        |  ROUND(avg(CAST(abs((doc_id * 7 + k * 13) % 2048 - 1024) AS DOUBLE)), 6)
+        |    AS mean_abs
+        |FROM sm GROUP BY doc_id, n_samples ORDER BY doc_id""".stripMargin)((s, dir) =>
+      ops.Multimodal.audioFeatures(s, t(s, dir, "documents"))
+        .orderBy("doc_id")),
+
+    // REAL image resize (round 9): synth PNG → decode → stride-2 resample
+    // → re-encode as PNG → decode AGAIN; three wire-named codec stages
+    // (graft.png_encode_v1 → graft.image_resize_v1 → graft.image_decode_v1).
+    // The oracle replays the sampling rule (out(x,y) = in(2x,2y)) over the
+    // generation rule, so mis-indexed rasters or lossy re-encodes fail.
+    // m08: the stride-2 sampling rule replayed over the image-generation
+    // rule — resized pixel k (row-major in the rw×rh output) samples
+    // original pixel (2·(k/rw))·w + 2·(k%rw)
+    Query("m08_image_resize",
+      """WITH g AS (SELECT doc_id,
+        |    CAST(1 + (doc_id % 7) * 2 AS BIGINT) AS w,
+        |    CAST(1 + (doc_id % 5) * 3 AS BIGINT) AS h
         |  FROM documents),
-        |fr AS (SELECT doc_id, width, height, unnest(range(nf)) AS f FROM g),
-        |px AS (SELECT doc_id, width, height, f,
-        |    unnest(range(CAST(width AS BIGINT) * height)) AS k FROM fr)
-        |SELECT doc_id, CAST(f AS INTEGER) AS frame_idx, width, height,
-        |  ROUND(avg(CAST((doc_id * 17 + f * 101 + k * 3) % 256 AS DOUBLE)), 6)
+        |r AS (SELECT doc_id, w, (w + 1) // 2 AS rw, (h + 1) // 2 AS rh FROM g),
+        |px AS (SELECT doc_id, w, rw, rh, unnest(range(rw * rh)) AS k FROM r)
+        |SELECT doc_id, CAST(rw AS INTEGER) AS width,
+        |  CAST(rh AS INTEGER) AS height, CAST(3 AS INTEGER) AS channels,
+        |  ROUND(avg(CAST((doc_id * 31 +
+        |    ((k // rw) * 2 * w + (k % rw) * 2)) % 256 AS DOUBLE)), 6)
         |    AS mean_luma
-        |FROM px GROUP BY doc_id, f, width, height
-        |ORDER BY doc_id, frame_idx""".stripMargin,
-    "m03_clip_pooling" ->
-      """WITH d AS (SELECT doc_id, text, octet_length(encode(text)) AS b FROM documents),
-        |f AS (SELECT doc_id, text, b,
-        |    unnest(range(greatest(CAST(ceil(b / 192.0) AS BIGINT), 1))) AS k
-        |  FROM d),
-        |fr AS (SELECT doc_id,
-        |    CAST(least(256, b - k * 192) AS BIGINT) AS fb,
-        |    CAST(len(regexp_extract_all(
-        |      substring(text, CAST(k * 192 + 1 AS INT), 256), '[\x60-\x6f]'))
-        |      AS BIGINT) AS c6
-        |  FROM f)
-        |SELECT doc_id,
-        |  CASE WHEN doc_id % 3 = 0 THEN 'image'
-        |       WHEN doc_id % 3 = 1 THEN 'audio' ELSE 'video' END AS media_type,
-        |  count(*) AS n_frames,
-        |  ROUND(CAST(sum(CAST(CAST(fb AS DOUBLE) AS DECIMAL(27,15))) AS DOUBLE)
-        |    / count(*), 6) AS avg_frame_bytes,
-        |  ROUND(CAST(sum(CAST(CAST(c6 AS DOUBLE) / GREATEST(fb, 1)
-        |    AS DECIMAL(27,15))) AS DOUBLE) / count(*), 6) AS clip_b6
-        |FROM fr GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    // m04: the greedy streaming pack replayed over UTF-8 byte sizes per
-    // modality (strlen = bytes; payloads are the text's UTF-8 encoding)
-    "m04_media_batches" ->
-      """WITH m AS (SELECT doc_id,
-        |    CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
-        |      ELSE 'video' END AS media_type,
-        |    CAST(strlen(text) AS BIGINT) AS n_bytes FROM documents),
-        |p AS (SELECT *, COALESCE(CAST(sum(n_bytes) OVER (
-        |      PARTITION BY media_type ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT),
-        |    0) AS strm FROM m),
-        |b AS (SELECT media_type,
-        |    CAST(floor(strm / 4096.0) AS BIGINT) AS bin_id, n_bytes FROM p)
-        |SELECT media_type, bin_id, count(*) AS n_items,
-        |  CAST(sum(n_bytes) AS BIGINT) AS total_bytes,
-        |  ROUND(LEAST(CAST(CAST(sum(n_bytes) AS BIGINT) AS DOUBLE), 4096.0)
-        |    / 4096.0, 6) AS fill_frac
-        |FROM b GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+        |FROM px GROUP BY doc_id, rw, rh ORDER BY doc_id""".stripMargin)((s, dir) =>
+      ops.Multimodal.resizedImageFeatures(s, t(s, dir, "documents"))
+        .orderBy("doc_id")),
+
+    // FIRST LOSSY codec (round 10): real baseline JPEG at pinned quality
+    // 0.85 (graft.jpeg_encode_v1 → graft.image_decode_v1). Bit-exact
+    // replay is impossible BY DESIGN for a lossy codec, so certification
+    // is tolerance-based: geometry/channels exact, decoded mean luma
+    // within ±2.0 of the closed-form gradient mean as an in-plan boolean
+    // (the oracle emits TRUE; decode drift flips the hash) — the oracle
+    // methodology real JPEG/MP3/H.264 corpora need at 100 TB.
     // m10: the LOSSY-codec oracle — geometry and channel count replay
     // closed-form (exact), but the decoded mean luma is certified as an
     // error-bound BOOLEAN (|decoded − (base + (w−1)/2 + (h−1)/2)| ≤ 2.0),
@@ -5111,18 +3165,29 @@ object SparkEntry {
     // that drifts past the JPEG quantization budget flips the column and
     // fails the hash — tolerance-based certification, the only kind a
     // lossy codec admits.
-    "m10_jpeg_lossy" ->
+    Query("m10_jpeg_lossy",
       """SELECT doc_id,
         |  CAST(16 + (doc_id % 3) * 8 AS INTEGER) AS width,
         |  CAST(8 + (doc_id % 4) * 8 AS INTEGER) AS height,
         |  CAST(3 AS INTEGER) AS channels,
         |  TRUE AS luma_ok
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin)((s, dir) =>
+      ops.Multimodal.jpegImageFeatures(s, t(s, dir, "documents"))
+        .orderBy("doc_id")),
+
+    // SECOND lossy codec (round 10): G.711 μ-law telephony audio
+    // (graft.ulaw_encode_v1 → graft.ulaw_decode_v1, RIFF fmt tag 7 with a
+    // fact chunk). Unlike JPEG, companding is a FIXED piecewise mapping,
+    // so the oracle replays encode∘decode closed-form and certification is
+    // EXACT — together m10/m11 cover both lossy-oracle methodologies.
+    // Probe found a real JDK defect (|pcm| ≥ 32636 overflows the bias add:
+    // full-scale samples encode as SILENCE) — the encode stage loud-rejects
+    // that region; the JDK codec canaries every partition in-range.
     // m11: EXACT replay of G.711 companding over the signal rule — encode
     // (clip 32635, bias 132, segment exponent, 4-bit mantissa) then decode
     // (((mant·8 + 132) << e) − 132), both in integer arithmetic; the mean
     // divides one exact BIGINT sum, so both engines round the same double
-    "m11_ulaw_audio" ->
+    Query("m11_ulaw_audio",
       """WITH g AS (SELECT doc_id,
         |    CAST(64 + doc_id % 129 AS INTEGER) AS n_samples FROM documents),
         |sm AS (SELECT doc_id, n_samples, unnest(range(n_samples)) AS k FROM g),
@@ -5141,23 +3206,47 @@ object SparkEntry {
         |    AS mag FROM e)
         |SELECT doc_id, n_samples,
         |  ROUND(CAST(sum(mag) AS DOUBLE) / count(*), 6) AS mean_abs_q
-        |FROM dec GROUP BY doc_id, n_samples ORDER BY doc_id""".stripMargin,
+        |FROM dec GROUP BY doc_id, n_samples ORDER BY doc_id""".stripMargin)((s, dir) =>
+      ops.Multimodal.ulawAudioFeatures(s, t(s, dir, "documents"))
+        .orderBy("doc_id")),
+
+    // corpus-level duplicate-AUDIO detection (round 12): m12's re-upload
+    // model through the LOSSY μ-law codec — the methodology point a
+    // lossless codec can't make: content-exact dedup survives a
+    // deterministic lossy roundtrip, because the decoded (quantized)
+    // signal is hashable even though the original PCM is not recoverable.
+    // Clips decode through the real container walk + G.711 expansion and
+    // fingerprint by FNV-1a 64 over decoded samples; the oracle groups by
+    // the closed-form content key (n_samples = 64 + c % 129 is injective
+    // for c < 128, so (n_samples, digest) ≡ content).
     // m13: the audio re-upload rule replayed — content c = doc % 128 fixes
     // the whole decoded signal; n_samples = 64 + c % 129 is injective for
     // c in [0, 128), so grouping by c IS grouping by (n_samples, digest)
-    "m13_dup_audio" ->
+    Query("m13_dup_audio",
       """WITH g AS (SELECT doc_id, doc_id % 128 AS c FROM documents),
         |grp AS (SELECT CAST(64 + (c % 129) AS INTEGER) AS n_samples,
         |    count(*) AS n_docs, min(doc_id) AS first_doc
         |  FROM g GROUP BY c HAVING count(*) >= 2)
         |SELECT n_samples, CAST(n_docs AS BIGINT) AS n_docs, first_doc
-        |FROM grp ORDER BY n_samples, first_doc""".stripMargin,
+        |FROM grp ORDER BY n_samples, first_doc""".stripMargin)((s, dir) =>
+      ops.Multimodal.audioDuplicateClips(s, t(s, dir, "documents"))
+        .orderBy("n_samples", "first_doc")),
+
+    // PERCEPTUAL near-dup images across resolutions (m14): content keyed
+    // doc_id % 8, alternating doc blocks carry a REAL half-resolution
+    // re-encode — different bytes, dimensions, and raster; only the
+    // perceptual content matches, which is exactly what exact digests
+    // (m12) cannot catch. Decoded pixels pool into a 9x8 grid whose
+    // gradient signs form the 63-bit dHash; a group spanning two
+    // geometries (n_geoms = 2) is a cross-resolution catch. The oracle
+    // replays the cell rule and all 63 comparisons in SQL integer
+    // arithmetic — any decode/pooling corruption breaks the hash equality.
     // m14: full closed-form replay of the dHash — the cell gray is
     // (c·2654435761 + cx·40503 + cy·69061) mod 251 and the 63 gradient
     // comparisons rebuild the hash bit-for-bit in SQL integer arithmetic;
     // membership replays doc % 8, geometry count replays the alternating
     // (doc // 8) % 2 scale rule (both resolutions present per content)
-    "m14_phash_neardup" ->
+    Query("m14_phash_neardup",
       """WITH d AS (SELECT doc_id, doc_id % 8 AS c FROM documents),
         |cells AS (SELECT g.c, r1.cy, r2.cx,
         |    CASE WHEN (g.c * 2654435761 + (r2.cx + 1) * 40503 + r1.cy * 69061) % 251
@@ -5171,14 +3260,26 @@ object SparkEntry {
         |  FROM d GROUP BY c HAVING count(*) >= 2)
         |SELECT dh.dhash, CAST(grp.n_images AS BIGINT) AS n_images,
         |  CAST(grp.n_geoms AS BIGINT) AS n_geoms, grp.first_doc
-        |FROM dh JOIN grp USING (c) ORDER BY dhash""".stripMargin,
+        |FROM dh JOIN grp USING (c) ORDER BY dhash""".stripMargin)((s, dir) =>
+      ops.Multimodal.imageNearDupsPHash(s, t(s, dir, "documents"))
+        .orderBy("dhash")),
+
+    // corpus-level duplicate-FRAME detection (round 12): every doc carries
+    // a real GIF whose content is keyed doc_id % 256 (the re-upload model),
+    // frames are DECODED and fingerprinted (FNV-1a 64 over the raw raster),
+    // and (geometry, digest) groups with >= 2 members are the duplicate
+    // sets — d01 exact dedup, but over decoded video frames. Payloads never
+    // shuffle; only per-frame scalars ride the one grouping exchange. The
+    // oracle replays the closed-form pixel rule: content c = doc % 256,
+    // frames are pixel-identical iff (17c + 101f) mod 256 collides at the
+    // same geometry, so any decode/hash corruption breaks the match.
     // m12: closed-form replay of the re-upload rule — content c = doc % 256
     // fixes geometry and the pixel offset (17c + 101f) mod 256; frames are
     // pixel-identical iff (width, height, offset) match, so the oracle
     // groups on that key while the engine groups on the decoded-raster
     // digest (doc_id is unique within a group: same-doc frames can't
     // collide since 101·Δf ≢ 0 mod 256 for Δf < 256, so arg_min is safe)
-    "m12_dup_frames" ->
+    Query("m12_dup_frames",
       """WITH g AS (SELECT doc_id, doc_id % 256 AS c FROM documents),
         |p AS (SELECT doc_id, c,
         |    CAST(2 + (c % 5) * 2 AS INTEGER) AS width,
@@ -5194,10 +3295,52 @@ object SparkEntry {
         |  FROM k GROUP BY 1, 2, 3 HAVING count(*) >= 2)
         |SELECT width, height, CAST(n_frames AS BIGINT) AS n_frames,
         |  first_doc, CAST(first_frame AS INTEGER) AS first_frame
-        |FROM grp ORDER BY width, height, first_doc, first_frame""".stripMargin,
+        |FROM grp ORDER BY width, height, first_doc, first_frame""".stripMargin)((s, dir) =>
+      ops.Multimodal.videoDuplicateFrames(s, t(s, dir, "documents"))
+        .orderBy("width", "height", "first_doc", "first_frame")),
+
+    // GPU-inference batch packing: media rows pack into per-modality
+    // batches under a byte budget (t09's greedy streaming pack over binary
+    // payload sizes) — the batch-boundary layer between a media corpus and
+    // accelerator inference; one window pass per modality, payloads never
+    // shuffle (only their sizes do)
+    // m04: the greedy streaming pack replayed over UTF-8 byte sizes per
+    // modality (strlen = bytes; payloads are the text's UTF-8 encoding)
+    Query("m04_media_batches",
+      """WITH m AS (SELECT doc_id,
+        |    CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
+        |      ELSE 'video' END AS media_type,
+        |    CAST(strlen(text) AS BIGINT) AS n_bytes FROM documents),
+        |p AS (SELECT *, COALESCE(CAST(sum(n_bytes) OVER (
+        |      PARTITION BY media_type ORDER BY doc_id
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT),
+        |    0) AS strm FROM m),
+        |b AS (SELECT media_type,
+        |    CAST(floor(strm / 4096.0) AS BIGINT) AS bin_id, n_bytes FROM p)
+        |SELECT media_type, bin_id, count(*) AS n_items,
+        |  CAST(sum(n_bytes) AS BIGINT) AS total_bytes,
+        |  ROUND(LEAST(CAST(CAST(sum(n_bytes) AS BIGINT) AS DOUBLE), 4096.0)
+        |    / 4096.0, 6) AS fill_frac
+        |FROM b GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)((s, dir) => {
+      val media = ops.Multimodal.asMediaTable(t(s, dir, "documents"))
+        .withColumn("n_bytes", octet_length(col("payload")).cast("long"))
+      ops.Pipeline.packSequences(media, "n_bytes", "doc_id",
+          budget = 4096, byCols = Seq("media_type"))
+        .groupBy("media_type", "bin_id")
+        .agg(count(lit(1)).as("n_items"),
+          sum("n_bytes").cast("long").as("total_bytes"))
+        .withColumn("fill_frac",
+          round(least(col("total_bytes").cast("double"), lit(4096.0)) / 4096.0, 6))
+        .orderBy("media_type", "bin_id")
+    }),
+
+    // per-scanline stats over DECODED pixels (round 8): one row per image
+    // row of the real PNG decode — line byte-width from the raster band
+    // count, per-line mean luma from actual pixel values. The byte-level
+    // frame slicer remains certified through m03's frame geometry.
     // m02: per-scanline replay of the image rule (line y of a w×h image:
     // pixels k = y·w .. y·w+w−1); line_bytes = w · 3 bands
-    "m02_frame_stats" ->
+    Query("m02_frame_stats",
       """WITH g AS (SELECT doc_id,
         |    CAST(1 + (doc_id % 7) * 2 AS BIGINT) AS w,
         |    CAST(1 + (doc_id % 5) * 3 AS BIGINT) AS h
@@ -5208,118 +3351,56 @@ object SparkEntry {
         |  CAST(w * 3 AS INTEGER) AS line_bytes,
         |  ROUND(avg(CAST((doc_id * 31 + y * w + x) % 256 AS DOUBLE)), 6)
         |    AS line_luma
-        |FROM px GROUP BY doc_id, w, y ORDER BY doc_id, y""".stripMargin,
-    "t06_redact" ->
-      """SELECT doc_id,
-        |  CAST(len(regexp_extract_all(text,
-        |    '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}')) AS INTEGER) AS n_emails,
-        |  CAST(len(regexp_extract_all(text,
-        |    '\b\d{3}[-. ]\d{3}[-. ]\d{4}\b')) AS INTEGER) AS n_phones,
-        |  md5(regexp_replace(regexp_replace(text,
-        |    '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}', '[EMAIL]', 'g'),
-        |    '\b\d{3}[-. ]\d{3}[-. ]\d{4}\b', '[PHONE]', 'g')) AS redacted_digest
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "t07_chunking" ->
-      """WITH d AS (SELECT doc_id, text, len(text) AS n FROM documents),
-        |k AS (SELECT doc_id, text,
-        |        unnest(range(greatest(
-        |          CAST(ceil((n - 64) / 192.0) AS BIGINT), 1))) AS k
-        |      FROM d)
-        |SELECT doc_id, CAST(k AS INT) AS chunk_id,
-        |  CAST(len(substr(text, CAST(k * 192 + 1 AS BIGINT), 256)) AS INTEGER)
-        |    AS chunk_chars,
-        |  md5(substr(text, CAST(k * 192 + 1 AS BIGINT), 256)) AS chunk_digest
-        |FROM k ORDER BY doc_id, chunk_id""".stripMargin,
-    "t04_top_terms" ->
-      """SELECT term, count(*) AS n
-        |FROM (SELECT unnest(string_split(lower(text), ' ')) AS term
-        |      FROM documents)
-        |WHERE term <> ''
-        |GROUP BY term ORDER BY n DESC, term LIMIT 50""".stripMargin,
-    "t05_length_quantiles" ->
-      """SELECT lang,
-        |  quantile_cont(len(text), 0.25) AS p25,
-        |  quantile_cont(len(text), 0.5) AS p50,
-        |  quantile_cont(len(text), 0.75) AS p75,
-        |  count(*) AS n_docs
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-    // s11: same exact-kNN ground truth as s01/s03/s06/s08 — probed cells
-    // cover the true neighbors (measured, the s03 fixture property) and
-    // the rerank shortlist provably contains them (s08's margin argument,
-    // strengthened by residual quantization)
-    "s11_knn_ivfpq" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 8),
-        |s AS (SELECT q_id, e.vec_id AS n_id,
-        |  list_dot_product(qv, e.v)
-        |    / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(e.v, e.v))) AS sim0
-        |  FROM q CROSS JOIN e WHERE e.vec_id <> q_id),
-        |r AS (SELECT q_id, n_id, sim0,
-        |  row_number() OVER (PARTITION BY q_id ORDER BY sim0 DESC, n_id ASC) AS rank
-        |  FROM s)
-        |SELECT q_id, n_id, rank, ROUND(sim0, 6) AS sim FROM r
-        |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin,
-    "s10_ann_metrics" ->
-      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-        |s AS (SELECT vec_id, e,
-        |    list_max(list_transform(e, x -> abs(x))) / 127.0 AS sc FROM v),
-        |dq AS (SELECT vec_id, CASE WHEN sc = 0 THEN list_transform(e, x -> 0.0)
-        |    ELSE list_transform(e, x -> CAST(round(x / sc) AS INTEGER) * sc) END AS d
-        |  FROM s),
-        |truth AS (SELECT q_id, n_id, rank FROM (
-        |  SELECT q.vec_id AS q_id, v.vec_id AS n_id,
-        |    row_number() OVER (PARTITION BY q.vec_id ORDER BY
-        |      list_dot_product(q.e, v.e)
-        |        / (sqrt(list_dot_product(q.e, q.e)) * sqrt(list_dot_product(v.e, v.e)))
-        |      DESC, v.vec_id ASC) AS rank
-        |  FROM v q CROSS JOIN v WHERE q.vec_id < 8 AND v.vec_id <> q.vec_id)
-        |  WHERE rank <= 5),
-        |pred AS (SELECT q_id, n_id, rank FROM (
-        |  SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-        |    row_number() OVER (PARTITION BY q.vec_id ORDER BY
-        |      list_dot_product(q.d, c.d)
-        |        / (sqrt(list_dot_product(q.d, q.d)) * sqrt(list_dot_product(c.d, c.d)))
-        |      DESC, c.vec_id ASC) AS rank
-        |  FROM dq q CROSS JOIN dq c WHERE q.vec_id < 8 AND c.vec_id <> q.vec_id)
-        |  WHERE rank <= 5),
-        |tn AS (SELECT q_id, count(*) AS n_truth FROM truth GROUP BY 1),
-        |j AS (SELECT p.q_id, p.rank,
-        |    CASE WHEN t.n_id IS NOT NULL THEN 1 ELSE 0 END AS rel
-        |  FROM pred p LEFT JOIN truth t ON p.q_id = t.q_id AND p.n_id = t.n_id),
-        |m AS (SELECT q_id, sum(rel) AS hits,
-        |    CAST(min(CASE WHEN rel = 1 THEN rank END) AS INTEGER) AS frr
-        |  FROM j GROUP BY 1)
-        |SELECT m.q_id, CAST(tn.n_truth AS BIGINT) AS n_truth,
-        |  CAST(m.hits AS BIGINT) AS hits,
-        |  ROUND(CAST(m.hits AS DOUBLE) / tn.n_truth, 6) AS recall_k,
-        |  m.frr AS first_rel_rank,
-        |  CASE WHEN m.frr IS NOT NULL THEN ROUND(1.0 / m.frr, 6) ELSE 0.0 END AS rr
-        |FROM m JOIN tn USING (q_id) ORDER BY m.q_id""".stripMargin,
-    "s09_centroid_classify" ->
-      """WITH ev AS (SELECT vec_id, label, unnest(CAST(embedding AS DOUBLE[])) AS val,
-        |    generate_subscripts(embedding, 1) AS idx FROM embeddings),
-        |cent AS (SELECT label AS clabel, idx,
-        |    ROUND(CAST(sum(CAST(CAST(val AS DOUBLE) AS DECIMAL(27,15))) AS DOUBLE)
-        |      / count(*), 9) AS c
-        |  FROM ev GROUP BY 1, 2),
-        |dist AS (SELECT e.vec_id, c.clabel,
-        |    sum((e.val - c.c) * (e.val - c.c)) AS d2
-        |  FROM ev e JOIN cent c ON e.idx = c.idx GROUP BY 1, 2),
-        |r AS (SELECT vec_id, clabel,
-        |    row_number() OVER (PARTITION BY vec_id ORDER BY d2 ASC, clabel ASC) AS rn
-        |  FROM dist)
-        |SELECT e.vec_id, e.label, r.clabel AS pred, (e.label = r.clabel) AS correct
-        |FROM embeddings e JOIN r ON e.vec_id = r.vec_id AND r.rn = 1
-        |ORDER BY e.vec_id""".stripMargin,
-    "s04_label_centroids" ->
-      """SELECT label, idx,
-        |  ROUND(CAST(sum(CAST(CAST(val AS DOUBLE) AS DECIMAL(27,15))) AS DOUBLE)
-        |    / count(*), 9) AS centroid
-        |FROM (SELECT label, unnest(embedding) AS val,
-        |        generate_subscripts(embedding, 1) AS idx
-        |      FROM embeddings)
-        |GROUP BY label, idx ORDER BY label, idx""".stripMargin,
-    "j01_asof_join" ->
+        |FROM px GROUP BY doc_id, w, y ORDER BY doc_id, y""".stripMargin)((s, dir) =>
+      ops.Multimodal.imageScanlines(s, t(s, dir, "documents"))
+        .orderBy("doc_id", "y")),
+
+    // clip-level pooling over sampled frames: per-frame features (byte-
+    // class ratio over the m02 frame geometry) mean-pooled per clip with
+    // decimal-exact accumulation — the frame→clip aggregation layer of a
+    // video pipeline; frames never leave their partition before the one
+    // grouping exchange
+    Query("m03_clip_pooling",
+      """WITH d AS (SELECT doc_id, text, octet_length(encode(text)) AS b FROM documents),
+        |f AS (SELECT doc_id, text, b,
+        |    unnest(range(greatest(CAST(ceil(b / 192.0) AS BIGINT), 1))) AS k
+        |  FROM d),
+        |fr AS (SELECT doc_id,
+        |    CAST(least(256, b - k * 192) AS BIGINT) AS fb,
+        |    CAST(len(regexp_extract_all(
+        |      substring(text, CAST(k * 192 + 1 AS INT), 256), '[\x60-\x6f]'))
+        |      AS BIGINT) AS c6
+        |  FROM f)
+        |SELECT doc_id,
+        |  CASE WHEN doc_id % 3 = 0 THEN 'image'
+        |       WHEN doc_id % 3 = 1 THEN 'audio' ELSE 'video' END AS media_type,
+        |  count(*) AS n_frames,
+        |  ROUND(CAST(sum(CAST(CAST(fb AS DOUBLE) AS DECIMAL(27,15))) AS DOUBLE)
+        |    / count(*), 6) AS avg_frame_bytes,
+        |  ROUND(CAST(sum(CAST(CAST(c6 AS DOUBLE) / GREATEST(fb, 1)
+        |    AS DECIMAL(27,15))) AS DOUBLE) / count(*), 6) AS clip_b6
+        |FROM fr GROUP BY doc_id ORDER BY doc_id""".stripMargin)((s, dir) => {
+      val frames = ops.Multimodal.frameSample(
+        ops.Multimodal.asMediaTable(t(s, dir, "documents")),
+        frameLen = 256, stride = 192)
+      frames.select(col("doc_id"), col("media_type"),
+          octet_length(col("frame")).cast("long").as("fb"),
+          regexp_count(decode(col("frame"), "UTF-8"), lit("[\\x60-\\x6f]"))
+            .cast("long").as("c6"))
+        .groupBy("doc_id", "media_type")
+        .agg(count(lit(1)).as("n_frames"),
+          round(sum(col("fb").cast("double").cast(DecimalType(27, 15)))
+            .cast("double") / count(lit(1)), 6).as("avg_frame_bytes"),
+          round(sum((col("c6").cast("double") /
+              greatest(col("fb"), lit(1L)).cast("double"))
+            .cast(DecimalType(27, 15))).cast("double") / count(lit(1)), 6)
+            .as("clip_b6"))
+        .orderBy("doc_id")
+    }),
+
+    // as-of join: each click enriched with the user's most recent preceding
+    // purchase (union + running-max window: one shuffle, no join explosion)
+    Query("j01_asof_join",
       """SELECT c.event_id, c.user_id, c.ts,
         |  p.ts AS p_ts, p.event_id AS p_event_id, p.value AS p_value
         |FROM (SELECT event_id, user_id, ts FROM events
@@ -5327,8 +3408,21 @@ object SparkEntry {
         |ASOF LEFT JOIN (SELECT user_id, ts, event_id, value FROM events
         |                WHERE event_type = 'purchase') p
         |  ON c.user_id = p.user_id AND c.ts >= p.ts
-        |ORDER BY c.event_id""".stripMargin,
-    "j04_asof_within" ->
+        |ORDER BY c.event_id""".stripMargin)((s, dir) => {
+      val ev = t(s, dir, "events").withColumn("ts", col("ts").cast("timestamp_ntz"))
+      val clicks = ev.filter(col("event_type") === "click")
+        .select("event_id", "user_id", "ts")
+      val purchases = ev.filter(col("event_type") === "purchase")
+        .select("user_id", "ts", "event_id", "value")
+      ops.AsOfJoin.asofJoin(clicks, purchases, Seq("user_id"), "ts", "ts",
+        payload = Seq("event_id", "value"), prefix = "p_")
+        .orderBy("event_id")
+    }),
+
+    // as-of join with a staleness bound (feature-store read): enrichment
+    // older than 2 hours nulls out — consumers can never see an expired
+    // feature value; same join-free single-shuffle plan as j01
+    Query("j04_asof_within",
       """SELECT c.event_id, c.user_id, c.ts,
         |  CASE WHEN p.ts >= c.ts - INTERVAL 2 HOUR THEN p.ts END AS p_ts,
         |  CASE WHEN p.ts >= c.ts - INTERVAL 2 HOUR THEN p.event_id END AS p_event_id,
@@ -5338,8 +3432,21 @@ object SparkEntry {
         |ASOF LEFT JOIN (SELECT user_id, ts, event_id, value FROM events
         |                WHERE event_type = 'purchase') p
         |  ON c.user_id = p.user_id AND c.ts >= p.ts
-        |ORDER BY c.event_id""".stripMargin,
-    "j02_range_join" ->
+        |ORDER BY c.event_id""".stripMargin)((s, dir) => {
+      val ev = t(s, dir, "events").withColumn("ts", col("ts").cast("timestamp_ntz"))
+      val clicks = ev.filter(col("event_type") === "click")
+        .select("event_id", "user_id", "ts")
+      val purchases = ev.filter(col("event_type") === "purchase")
+        .select("user_id", "ts", "event_id", "value")
+      ops.AsOfJoin.asofJoinWithin(clicks, purchases, Seq("user_id"),
+          "ts", "ts", payload = Seq("event_id", "value"),
+          maxAgeSeconds = 7200L, prefix = "p_")
+        .orderBy("event_id")
+    }),
+
+    // binned range join: clicks within the hour before each error event
+    // (equi-join on (user, time-bin) + residual filter — never nested-loop)
+    Query("j02_range_join",
       """WITH e AS (SELECT event_id AS e_id, user_id, ts AS e_ts FROM events
         |           WHERE event_type = 'error'),
         |c AS (SELECT event_id AS c_id, user_id, ts AS c_ts FROM events
@@ -5347,8 +3454,33 @@ object SparkEntry {
         |SELECT e.e_id, e.user_id, e.e_ts, count(c.c_id) AS n_clicks_1h
         |FROM e LEFT JOIN c ON e.user_id = c.user_id
         |  AND c.c_ts BETWEEN e.e_ts - INTERVAL 1 HOUR AND e.e_ts
-        |GROUP BY 1, 2, 3 ORDER BY e.e_id""".stripMargin,
-    "q46_agg_extras" ->
+        |GROUP BY 1, 2, 3 ORDER BY e.e_id""".stripMargin)((s, dir) => {
+      val hourUs = 3600L * 1000000L
+      val ev = t(s, dir, "events").withColumn("ts", col("ts").cast("timestamp_ntz"))
+      val us = (c: Column) => unix_micros(c.cast("timestamp_ltz"))
+      val clicks = ev.filter(col("event_type") === "click")
+        .select(col("user_id"), col("event_id").as("c_id"),
+          us(col("ts")).as("pt"))
+      val errors = ev.filter(col("event_type") === "error")
+        .select(col("user_id"), col("event_id").as("e_id"),
+          col("ts").as("e_ts"), (us(col("ts")) - hourUs).as("lo"),
+          us(col("ts")).as("hi"))
+      val matched = ops.RangeJoin.pointInInterval(
+          clicks, errors, Seq("user_id"), "pt", "lo", "hi", binWidth = hourUs)
+        .groupBy("e_id", "user_id", "e_ts")
+        .agg(count(lit(1)).as("n_clicks_1h"))
+      errors.select("e_id", "user_id", "e_ts")
+        .join(matched, Seq("e_id", "user_id", "e_ts"), "left")
+        .select(col("e_id"), col("user_id"), col("e_ts"),
+          coalesce(col("n_clicks_1h"), lit(0L)).as("n_clicks_1h"))
+        .orderBy("e_id")
+    }),
+
+    // argmin/argmax + boolean/bit folds + regression aggregates through the
+    // wire (the composite key makes max_by/min_by tie-free → deterministic;
+    // skewness/kurtosis stay out of the ORACLE — DuckDB uses bias-corrected
+    // sample estimators where Spark uses population moments)
+    Query("q46_agg_extras",
       """SELECT lang,
         |  max_by(doc_id, n_chars * 10000000 + doc_id) AS longest_doc,
         |  min_by(doc_id, n_chars * 10000000 + doc_id) AS shortest_doc,
@@ -5357,8 +3489,59 @@ object SparkEntry {
         |  CAST(count_if(n_chars > 300) AS BIGINT) AS n_long,
         |  CAST(bit_xor(doc_id) AS BIGINT) AS xor_ids,
         |  ROUND(regr_slope(n_chars, doc_id), 6) AS slope
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-    "q45_time_range_window" ->
+        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin)((s, dir) =>
+      t(s, dir, "documents")
+        .groupBy("lang")
+        .agg(
+          expr("max_by(doc_id, n_chars * 10000000 + doc_id)").as("longest_doc"),
+          expr("min_by(doc_id, n_chars * 10000000 + doc_id)").as("shortest_doc"),
+          expr("bool_and(n_chars > 10)").as("all_nontrivial"),
+          expr("bool_or(n_chars > 900)").as("any_huge"),
+          expr("count_if(n_chars > 300)").as("n_long"),
+          expr("bit_xor(doc_id)").as("xor_ids"),
+          round(expr("regr_slope(n_chars, doc_id)"), 6).as("slope"))
+        .orderBy("lang")),
+
+    // q46-family: percentile_disc with BOTH within-group directions on the
+    // wire (ASC is the plain name; DESC rides as percentile_disc_desc —
+    // the first_ignore_nulls convention; a silent ASC flip would corrupt a
+    // consumer, so the direction is explicit). Oracle replays both via the
+    // cume_dist definition, so the wire decode is value-certified.
+    // percentile_disc replayed from its definition: the first value in
+    // within-group order whose cumulative distribution reaches p (ties
+    // share a cume_dist, so min_by is deterministic in value)
+    Query("q56_percentile_disc",
+      """WITH a AS (SELECT lang, n_chars,
+        |    cume_dist() OVER (PARTITION BY lang ORDER BY n_chars) AS cda,
+        |    cume_dist() OVER (PARTITION BY lang ORDER BY n_chars DESC) AS cdd
+        |  FROM documents)
+        |SELECT lang,
+        |  CAST(min_by(n_chars, CASE WHEN cda >= 0.25 THEN cda END) AS DOUBLE) AS p25_asc,
+        |  CAST(min_by(n_chars, CASE WHEN cdd >= 0.25 THEN cdd END) AS DOUBLE) AS p25_desc,
+        |  CAST(min_by(n_chars, CASE WHEN cda >= 0.5 THEN cda END) AS DOUBLE) AS p50_asc,
+        |  CAST(min_by(n_chars, CASE WHEN cdd >= 0.5 THEN cdd END) AS DOUBLE) AS p50_desc,
+        |  CAST(min_by(n_chars, CASE WHEN cdd >= 0.9 THEN cdd END) AS DOUBLE) AS p90_desc
+        |FROM a GROUP BY lang ORDER BY lang""".stripMargin)((s, dir) =>
+      t(s, dir, "documents")
+        .groupBy("lang")
+        .agg(
+          expr("percentile_disc(0.25) WITHIN GROUP (ORDER BY n_chars)")
+            .as("p25_asc"),
+          expr("percentile_disc(0.25) WITHIN GROUP (ORDER BY n_chars DESC)")
+            .as("p25_desc"),
+          expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY n_chars)")
+            .as("p50_asc"),
+          expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY n_chars DESC)")
+            .as("p50_desc"),
+          expr("percentile_disc(0.9) WITHIN GROUP (ORDER BY n_chars DESC)")
+            .as("p90_desc"))
+        .orderBy("lang")),
+
+    // time-INTERVAL RANGE window frame (trailing 1-hour per-user totals —
+    // THE sliding-metric shape): the bound has no i64 substrait form, so
+    // the producer re-keys the spec on unix_micros(ts) (monotone bijection;
+    // identical partitions/order/range sets) and ships microsecond offsets
+    Query("q45_time_range_window",
       """SELECT event_id, user_id, ts,
         |  count(*) OVER w AS n_1h,
         |  CAST(sum(CAST(round(value * 100) AS BIGINT)) OVER w AS BIGINT)
@@ -5366,38 +3549,39 @@ object SparkEntry {
         |FROM events
         |WINDOW w AS (PARTITION BY user_id ORDER BY ts
         |  RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, ts, event_id""".stripMargin,
-    "q43_json_ops" ->
+        |ORDER BY user_id, ts, event_id""".stripMargin)((s, dir) =>
+      t(s, dir, "events")
+        .select(col("event_id"), col("user_id"), col("ts"),
+          expr("""count(*) OVER (PARTITION BY user_id ORDER BY ts
+                 |  RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)"""
+            .stripMargin).as("n_1h"),
+          expr("""sum(cast(round(value * 100) AS BIGINT)) OVER (
+                 |  PARTITION BY user_id ORDER BY ts
+                 |  RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)"""
+            .stripMargin).as("cents_1h"))
+        .orderBy("user_id", "ts", "event_id")),
+
+    // semi-structured JSON payloads: extract + aggregate over the events
+    // props column — get_json_object rides the wire as a named scalar fn
+    Query("q43_json_ops",
       """SELECT event_type, count(*) AS n,
         |  CAST(sum(CAST(json_extract(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
         |  min(CAST(json_extract(props, '$.k') AS BIGINT)) AS min_k,
         |  max(CAST(json_extract(props, '$.k') AS BIGINT)) AS max_k
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "e06_resample_ff" ->
-      """WITH hourly AS (SELECT user_id, date_trunc('hour', ts) AS h,
-        |    CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS v,
-        |    count(*) AS n FROM events GROUP BY 1, 2),
-        |b AS (SELECT user_id, min(h) AS h0, max(h) AS h1 FROM hourly GROUP BY 1),
-        |grid AS (SELECT user_id,
-        |    unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS h FROM b),
-        |j AS (SELECT g.user_id, g.h, hourly.v, COALESCE(hourly.n, 0) AS n
-        |  FROM grid g LEFT JOIN hourly ON g.user_id = hourly.user_id
-        |    AND g.h = hourly.h)
-        |SELECT user_id, h, CAST(n AS BIGINT) AS n_events,
-        |  ROUND(last_value(v IGNORE NULLS) OVER (PARTITION BY user_id
-        |    ORDER BY h ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 4) AS v_ff
-        |FROM j ORDER BY user_id, h""".stripMargin,
-    "e05_behavior_sequences" ->
-      """WITH s AS (SELECT user_id,
-        |    list(event_type ORDER BY ts, event_id) AS seq
-        |  FROM events GROUP BY 1),
-        |w AS (SELECT user_id, i AS win_idx,
-        |    array_to_string(seq[i * 4 + 1 : i * 4 + 8], '|') AS seq,
-        |    len(seq[i * 4 + 1 : i * 4 + 8]) AS n
-        |  FROM s, unnest(range(0, CAST(ceil(len(seq) / 4.0) AS INT))) AS t(i))
-        |SELECT user_id, CAST(win_idx AS INT) AS win_idx, seq, CAST(n AS INT) AS n
-        |FROM w ORDER BY user_id, win_idx""".stripMargin,
-    "j03_interval_join" ->
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)((s, dir) =>
+      t(s, dir, "events")
+        .withColumn("k", get_json_object(col("props"), "$.k").cast("long"))
+        .groupBy("event_type")
+        .agg(count(lit(1)).as("n"), sum(col("k")).as("sum_k"),
+          min(col("k")).as("min_k"), max(col("k")).as("max_k"))
+        .orderBy("event_type")),
+
+    // interval-overlap join: purchase attention windows × error windows per
+    // user. Both sides replicate to time bins; the ownership-bin filter
+    // (bin of the intersection's left edge) emits each overlapping pair
+    // exactly once, so the result streams out of one equi-join shuffle
+    // with no dedup pass — never nested-loop.
+    Query("j03_interval_join",
       """WITH p AS (SELECT user_id, event_id AS p_id, ts AS p_ts FROM events
         |           WHERE event_type = 'purchase'),
         |e AS (SELECT user_id, event_id AS e_id, ts AS e_ts FROM events
@@ -5406,30 +3590,26 @@ object SparkEntry {
         |FROM p JOIN e ON p.user_id = e.user_id
         |  AND p.p_ts - INTERVAL 30 MINUTE <= e.e_ts
         |  AND e.e_ts - INTERVAL 45 MINUTE <= p.p_ts
-        |ORDER BY p.p_id, e.e_id""".stripMargin,
-    // e08: session_window semantics replayed — new session when the
-    // microsecond gap to the previous event reaches the 2h gap (Spark
-    // compares at microsecond precision; >= because window-start ==
-    // previous window-end does NOT overlap), end = last event + gap
-    "e08_session_window" ->
-      """WITH l AS (SELECT user_id, ts, event_id, value,
-        |    lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-        |  FROM events),
-        |f AS (SELECT user_id, ts, event_id, value,
-        |    CASE WHEN prev_ts IS NULL
-        |           OR epoch_us(ts) - epoch_us(prev_ts) >= 7200000000
-        |         THEN 1 ELSE 0 END AS new_s
-        |  FROM l),
-        |g AS (SELECT user_id, ts, value,
-        |    sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS sno
-        |  FROM f)
-        |SELECT user_id, min(ts) AS session_start,
-        |  max(ts) + INTERVAL 2 HOUR AS session_end,
-        |  count(*) AS n_events,
-        |  CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total_value
-        |FROM g GROUP BY user_id, sno
-        |ORDER BY user_id, session_start""".stripMargin,
-    "e01_sessions" ->
+        |ORDER BY p.p_id, e.e_id""".stripMargin)((s, dir) => {
+      val us = (c: Column) => unix_micros(c.cast("timestamp_ltz"))
+      val ev = t(s, dir, "events").withColumn("ts", col("ts").cast("timestamp_ntz"))
+      val purchases = ev.filter(col("event_type") === "purchase")
+        .select(col("user_id"), col("event_id").as("p_id"),
+          (us(col("ts")) - 1800000000L).as("p_lo"), us(col("ts")).as("p_hi"))
+      val errors = ev.filter(col("event_type") === "error")
+        .select(col("user_id"), col("event_id").as("e_id"),
+          (us(col("ts")) - 2700000000L).as("e_lo"), us(col("ts")).as("e_hi"))
+      ops.RangeJoin.intervalOverlapJoin(purchases, errors, Seq("user_id"),
+          "p_lo", "p_hi", "e_lo", "e_hi", binWidth = 1800000000L)
+        .select("user_id", "p_id", "e_id")
+        .orderBy("p_id", "e_id")
+    }),
+
+    // event-stream analytics, batch form (the same transformations run under
+    // Structured Streaming — graft.streaming.EventStream + its specs). Both
+    // round-trip through substrait: window functions (lag + running sum) and
+    // named scalar fns (date_trunc) are wire-representable.
+    Query("e01_sessions",
       """WITH l AS (SELECT user_id, ts, event_id, value,
         |    lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
         |  FROM events),
@@ -5446,44 +3626,216 @@ object SparkEntry {
         |  count(*) AS n_events,
         |  CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total_value
         |FROM g GROUP BY user_id, session_no
-        |ORDER BY user_id, session_start""".stripMargin,
-    "e02_windowed_counts" ->
+        |ORDER BY user_id, session_start""".stripMargin)((s, dir) =>
+      streaming.EventStream.sessionizeBatch(
+        t(s, dir, "events").withColumn("ts", col("ts").cast("timestamp_ntz")),
+        gapMinutes = 120)
+        .orderBy("user_id", "session_start")),
+
+    // native session_window sessionization (built-in-first twin of e01's
+    // custom-state path): input rides the wire, the session aggregate runs
+    // on the consumed frame (session merging hangs off attribute metadata
+    // the wire can't carry — see EventStream.sessionWindowAgg)
+    // the session AGGREGATE itself crosses the wire (ExtSessionWindow +
+    // plain AggregateRel + struct-field result projection), not just its
+    // input — a foreign consumer receives the full sessionization plan
+    // e08: session_window semantics replayed — new session when the
+    // microsecond gap to the previous event reaches the 2h gap (Spark
+    // compares at microsecond precision; >= because window-start ==
+    // previous window-end does NOT overlap), end = last event + gap
+    Query("e08_session_window",
+      """WITH l AS (SELECT user_id, ts, event_id, value,
+        |    lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
+        |  FROM events),
+        |f AS (SELECT user_id, ts, event_id, value,
+        |    CASE WHEN prev_ts IS NULL
+        |           OR epoch_us(ts) - epoch_us(prev_ts) >= 7200000000
+        |         THEN 1 ELSE 0 END AS new_s
+        |  FROM l),
+        |g AS (SELECT user_id, ts, value,
+        |    sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS sno
+        |  FROM f)
+        |SELECT user_id, min(ts) AS session_start,
+        |  max(ts) + INTERVAL 2 HOUR AS session_end,
+        |  count(*) AS n_events,
+        |  CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total_value
+        |FROM g GROUP BY user_id, sno
+        |ORDER BY user_id, session_start""".stripMargin)((s, dir) =>
+      streaming.EventStream.sessionWindowAgg(
+        t(s, dir, "events")
+          .withColumn("ts", col("ts").cast("timestamp_ntz"))
+          .select("event_id", "ts", "user_id", "value"))
+        .orderBy("user_id", "session_start")),
+
+    Query("e02_windowed_counts",
       """SELECT date_trunc('hour', ts) AS hour, event_type,
         |  count(*) AS n_events,
         |  CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total_value
-        |FROM events GROUP BY 1, 2 ORDER BY hour, event_type""".stripMargin,
-    "e03_stream_dedup" ->
+        |FROM events GROUP BY 1, 2 ORDER BY hour, event_type""".stripMargin)((s, dir) =>
+      t(s, dir, "events")
+        .withColumn("ts", col("ts").cast("timestamp_ntz"))
+        .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
+        .agg(count(lit(1)).as("n_events"), dsum4(col("value")).as("total_value"))
+        .orderBy("hour", "event_type")),
+
+    // hourly resample + forward-fill: each user's sparse event stream
+    // densified over its own hour range (per-key sequence generator, no
+    // driver calendar), gaps marked, value forward-filled by an IGNORE
+    // NULLS running last — the series shape time-series models assume
+    Query("e06_resample_ff",
+      """WITH hourly AS (SELECT user_id, date_trunc('hour', ts) AS h,
+        |    CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS v,
+        |    count(*) AS n FROM events GROUP BY 1, 2),
+        |b AS (SELECT user_id, min(h) AS h0, max(h) AS h1 FROM hourly GROUP BY 1),
+        |grid AS (SELECT user_id,
+        |    unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS h FROM b),
+        |j AS (SELECT g.user_id, g.h, hourly.v, COALESCE(hourly.n, 0) AS n
+        |  FROM grid g LEFT JOIN hourly ON g.user_id = hourly.user_id
+        |    AND g.h = hourly.h)
+        |SELECT user_id, h, CAST(n AS BIGINT) AS n_events,
+        |  ROUND(last_value(v IGNORE NULLS) OVER (PARTITION BY user_id
+        |    ORDER BY h ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 4) AS v_ff
+        |FROM j ORDER BY user_id, h""".stripMargin)((s, dir) =>
+      streaming.EventStream.resampleHourlyFF(
+          t(s, dir, "events").withColumn("ts", col("ts").cast("timestamp_ntz")))
+        .orderBy("user_id", "h")),
+
+    // behavior-sequence training windows: per-user event-type stream
+    // sliced into overlapping len-8/stride-4 windows — the sequence-model
+    // training-example builder, one groupBy shuffle + streamed generator
+    Query("e05_behavior_sequences",
+      """WITH s AS (SELECT user_id,
+        |    list(event_type ORDER BY ts, event_id) AS seq
+        |  FROM events GROUP BY 1),
+        |w AS (SELECT user_id, i AS win_idx,
+        |    array_to_string(seq[i * 4 + 1 : i * 4 + 8], '|') AS seq,
+        |    len(seq[i * 4 + 1 : i * 4 + 8]) AS n
+        |  FROM s, unnest(range(0, CAST(ceil(len(seq) / 4.0) AS INT))) AS t(i))
+        |SELECT user_id, CAST(win_idx AS INT) AS win_idx, seq, CAST(n AS INT) AS n
+        |FROM w ORDER BY user_id, win_idx""".stripMargin)((s, dir) =>
+      streaming.EventStream.behaviorSequences(
+          t(s, dir, "events").withColumn("ts", col("ts").cast("timestamp_ntz")))
+        .orderBy("user_id", "win_idx")),
+
+    // streaming exact dedup, batch twin: at-least-once redelivery (every
+    // event arrives twice) restored to exactly-once. idCols = the full
+    // event identity, so the Deduplicate rides the wire as the
+    // groupBy-all AggregateRel; the watermark node encodes transparently.
+    Query("e03_stream_dedup",
       """SELECT DISTINCT event_id, ts, user_id, event_type, value
         |FROM (SELECT * FROM events UNION ALL SELECT * FROM events)
-        |ORDER BY event_id""".stripMargin,
+        |ORDER BY event_id""".stripMargin)((s, dir) => {
+      val ev = t(s, dir, "events")
+        .withColumn("ts", col("ts").cast("timestamp_ntz"))
+        .select("event_id", "ts", "user_id", "event_type", "value")
+      streaming.EventStream.streamingDedup(ev.unionAll(ev),
+        Seq("event_id", "user_id", "event_type", "value"))
+        .orderBy("event_id")
+    }),
+
+    // stream-static dimension enrichment: events left-join the customer
+    // dim (unmatched → 'unknown'), totals per (segment, type) accumulate
+    // as scaled longs — order-independent, so streaming == batch == oracle
+    // (EventStreamSpec drives the same op through readStream)
+    Query("e07_stream_enrich",
+      """SELECT coalesce(c.c_mktsegment, 'unknown') AS segment, e.event_type,
+        |  count(*) AS n_events,
+        |  ROUND(CAST(CAST(sum(CAST(round(e.value * 100) AS BIGINT)) AS BIGINT)
+        |    AS DOUBLE) / 100, 2) AS total_value
+        |FROM events e LEFT JOIN customer c ON e.user_id = c.c_custkey
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)((s, dir) => {
+      val dim = t(s, dir, "customer")
+        .select(col("c_custkey").as("user_id"),
+          col("c_mktsegment").as("segment"))
+      streaming.EventStream.enrichedTypeTotals(t(s, dir, "events"), dim)
+        .orderBy("segment", "event_type")
+    }),
+
+    // within-watermark dedup, batch twin (round 9): the at-least-once →
+    // exactly-once shape tolerant of replays with jittered timestamps —
+    // state keys on the id ONLY (EventStreamSpec proves the streaming path
+    // drops +5-minute-skewed duplicates that ts-keyed dedup keeps); Spark
+    // forbids the within-watermark form on batch frames, so the twin
+    // dispatches to plain dropDuplicates(ids), riding the wire through the
+    // Deduplicate encoding
+    Query("e12_dedup_within_watermark",
+      """SELECT DISTINCT event_id FROM (
+        |  SELECT event_id FROM events
+        |  UNION ALL SELECT event_id FROM events)
+        |ORDER BY event_id""".stripMargin)((s, dir) => {
+      val ev = t(s, dir, "events")
+      val doubled = ev.unionByName(
+        ev.withColumn("ts", col("ts") + expr("INTERVAL 5 MINUTES")))
+      streaming.EventStream.streamingDedupWithinWatermark(doubled, Seq("event_id"))
+        .select("event_id").orderBy("event_id")
+    }),
+
+    // SLIDING windowed counts (batch twin): 2-hour windows sliding hourly —
+    // each event lands in 2 windows via Catalyst's Expand rewrite, which
+    // rides the wire as a union-of-projects SetRel; the oracle replays the
+    // two window starts per event with unnest
     // e14: each event replays into its two sliding-window starts
-    "e14_sliding_counts" ->
+    Query("e14_sliding_counts",
       """WITH w AS (SELECT event_type, value,
         |    unnest([date_trunc('hour', ts),
         |            date_trunc('hour', ts) - INTERVAL 1 HOUR]) AS window_start
         |  FROM events)
         |SELECT window_start, event_type, count(*) AS n_events,
         |  CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total_value
-        |FROM w GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin,
+        |FROM w GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin)((s, dir) =>
+      streaming.EventStream.slidingTypeCounts(t(s, dir, "events"))
+        .orderBy("window_start", "event_type")),
+
+    // streaming windowed heavy-hitters (batch twin): one Misra–Gries
+    // sketch per hour window (bounded state: ≤64 counters per window
+    // regardless of user cardinality), certified like p20 — the top-5
+    // exact users per window must land inside the sketch's [lb, ub] with
+    // ub−lb ≤ maxError (the oracle pins est_ok ≡ true; sketch bytes are
+    // merge-order-dependent, bounds are the contract). EventStreamSpec
+    // drives the same sketch through readStream and re-certifies.
     // e13: exact replay of the top-5-per-window side; est_ok pinned true —
     // the driver compare then certifies every Misra–Gries bound probe
-    "e13_stream_heavy_hitters" ->
+    Query("e13_stream_heavy_hitters",
       """WITH c AS (SELECT date_trunc('hour', ts) AS window_start, user_id,
         |    count(*) AS exact_n
         |  FROM events GROUP BY 1, 2),
         |r AS (SELECT c.*, row_number() OVER (PARTITION BY window_start
         |    ORDER BY exact_n DESC, user_id) AS rn FROM c)
         |SELECT window_start, user_id, exact_n, true AS est_ok
-        |FROM r WHERE rn <= 5 ORDER BY window_start, user_id""".stripMargin,
-    "e12_dedup_within_watermark" ->
-      """SELECT DISTINCT event_id FROM (
-        |  SELECT event_id FROM events
-        |  UNION ALL SELECT event_id FROM events)
-        |ORDER BY event_id""".stripMargin,
+        |FROM r WHERE rn <= 5 ORDER BY window_start, user_id""".stripMargin)((s, dir) => {
+      val ev = t(s, dir, "events")
+      val sk = streaming.EventStream.windowedHeavyHitters(ev)
+      val exact = ev.groupBy(window(col("ts"), "1 hour"), col("user_id"))
+        .agg(count(lit(1)).as("exact_n"))
+        .select(col("window.start").as("window_start"), col("user_id"),
+          col("exact_n"))
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("window_start")
+        .orderBy(col("exact_n").desc, col("user_id"))
+      val top = exact.withColumn("rn", row_number().over(w))
+        .filter(col("rn") <= 5).drop("rn")
+      val F = graft.functions.FreqFunctions
+      val item = col("user_id").cast("long")
+      top.join(sk, "window_start")
+        .select(col("window_start"), col("user_id"), col("exact_n"),
+          (F.freqLowerBoundLong(col("sketch"), item) <= col("exact_n") &&
+            col("exact_n") <= F.freqUpperBoundLong(col("sketch"), item) &&
+            F.freqUpperBoundLong(col("sketch"), item) -
+              F.freqLowerBoundLong(col("sketch"), item) <=
+              F.freqMaxError(col("sketch"))).as("est_ok"))
+        .orderBy("window_start", "user_id")
+    }),
+
+    // ordered-funnel conversion (batch twin of the horizon-bounded
+    // streaming funnel, EventStream.funnelStream): the earliest strictly-
+    // increasing view→click→purchase chain per user plus the stage
+    // reached. Every step's min is a window aggregate over the SAME
+    // user partitioning and the final collapse groups by the same key —
+    // ONE exchange total regardless of step count.
     // e17: the same layered window-min chain, one CTE per step (each layer
     // references the previous layer's min — DISTINCT collapses the
     // per-user-constant rows)
-    "e17_funnel" ->
+    Query("e17_funnel",
       """WITH a AS (SELECT user_id, ts, event_type,
         |  min(CASE WHEN event_type = 'view' THEN ts END)
         |    OVER (PARTITION BY user_id) AS t_view FROM events),
@@ -5495,11 +3847,21 @@ object SparkEntry {
         |  CAST(CASE WHEN t_view IS NULL THEN 0 ELSE 1 END +
         |       CASE WHEN t_click IS NULL THEN 0 ELSE 1 END +
         |       CASE WHEN t_purchase IS NULL THEN 0 ELSE 1 END AS BIGINT) AS stage
-        |FROM c WHERE t_view IS NOT NULL ORDER BY user_id""".stripMargin,
+        |FROM c WHERE t_view IS NOT NULL ORDER BY user_id""".stripMargin)((s, dir) =>
+      streaming.EventStream.funnelBatch(t(s, dir, "events"))
+        .select("user_id", "t_view", "t_click", "t_purchase", "stage")
+        .orderBy("user_id")),
+
+    // DATA-DEPENDENT session gap (round 9): session_window(ts, gapCol) —
+    // clicks close after 4h, high-value events after 12h, the rest after
+    // 2h. The per-row gap rides the wire as a string-typed expression in
+    // the ExtSessionWindow detail (Spark's own gap contract); the oracle
+    // replays interval-overlap merging as gaps-and-islands with a running
+    // max of window ends.
     // e11: Spark merges sessions whose [ts, ts + gap(row)) intervals
     // overlap-chain; the replay orders each user's events and opens a new
     // session exactly when ts reaches the running max of previous ends
-    "e11_dynamic_gap_sessions" ->
+    Query("e11_dynamic_gap_sessions",
       """WITH x AS (SELECT user_id, ts, event_id, value,
         |    ts + to_seconds(CASE WHEN event_type = 'click' THEN 14400
         |                         WHEN value >= 100 THEN 43200
@@ -5518,18 +3880,37 @@ object SparkEntry {
         |  ROUND(CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE), 6)
         |    AS total_value
         |FROM s GROUP BY user_id, sid
-        |ORDER BY user_id, session_start""".stripMargin,
-    "e10_outer_interval_join" ->
-      """SELECT e.event_id AS e_id, c.event_id AS c_id
-        |FROM (SELECT * FROM events WHERE event_type = 'error') e
-        |LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
-        |  ON c.user_id = e.user_id
-        |  AND c.ts >= e.ts - INTERVAL 1 HOUR AND c.ts <= e.ts
-        |ORDER BY e_id, c_id""".stripMargin,
+        |ORDER BY user_id, session_start""".stripMargin)((s, dir) => {
+      val ev = t(s, dir, "events")
+      ev.groupBy(col("user_id"),
+          session_window(col("ts"), expr(
+            """CASE WHEN event_type = 'click' THEN '4 hours'
+              |WHEN value >= 100 THEN '12 hours'
+              |ELSE '2 hours' END""".stripMargin)).as("sw"))
+        .agg(count(lit(1)).as("n_events"),
+          round(sum(col("value").cast(DecimalType(18, 4))).cast("double"), 6)
+            .as("total_value"))
+        .select(col("user_id"), col("sw.start").as("session_start"),
+          col("n_events"), col("total_value"))
+        .orderBy("user_id", "session_start")
+    }),
+
+    // bounded-state LEFT OUTER interval join (round 9): "errors with no
+    // click within the preceding hour" — the streaming twin emits the null
+    // rows on watermark expiry (EventStreamSpec drives it with a sentinel
+    // advance); this batch twin rides the wire as a left JoinRel whose
+    // condition carries the equality AND both time bounds
+    // streaming AS-OF join (round 12): each error enriched with the LATEST
+    // click in the hour before it — the interval join chained into a
+    // latest-per-left event-time aggregate (two stateful operators in one
+    // append-mode query; the streaming==batch spec drives the stream path,
+    // this batch twin certifies values on the wire). max(struct(ts, id))
+    // makes equal-ts ties deterministic; the oracle replays max-ts-then-
+    // max-id explicitly rather than DuckDB's tie-unspecified ASOF JOIN.
     // e15: explicit latest-click replay (max ts, then max id at equal ts —
     // the engine's max(struct(c_ts, c_id)) tie rule verbatim); inner as-of,
     // so errors with no click in the hour drop
-    "e15_stream_asof_join" ->
+    Query("e15_stream_asof_join",
       """WITH e AS (SELECT event_id AS e_id, user_id, ts FROM events
         |  WHERE event_type = 'error'),
         |c AS (SELECT event_id AS c_id, user_id, ts FROM events
@@ -5540,10 +3921,27 @@ object SparkEntry {
         |m AS (SELECT e_id, max(c_ts) AS mt FROM j GROUP BY 1)
         |SELECT j.e_id AS e_id, CAST(max(j.c_id) AS BIGINT) AS r_c_id
         |FROM j JOIN m ON j.e_id = m.e_id AND j.c_ts = m.mt
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+        |GROUP BY 1 ORDER BY 1""".stripMargin)((s, dir) => {
+      val ev = t(s, dir, "events")
+      val e = ev.filter(col("event_type") === "error")
+        .select(col("user_id").as("e_user"), col("event_id").as("e_id"),
+          col("ts").as("e_ts"))
+      val c = ev.filter(col("event_type") === "click")
+        .select(col("user_id").as("c_user"), col("event_id").as("c_id"),
+          col("ts").as("c_ts"))
+      streaming.EventStream.asofJoinWithin(e, c, "e_user", "c_user",
+          "e_ts", "c_ts", horizonSeconds = 3600, payload = Seq("c_id"))
+        .select(col("e_id"), col("r_c_id")).orderBy("e_id")
+    }),
+
+    // LEFT OUTER streaming as-of (round 12): e15 with unmatched errors
+    // kept as null-enriched rows — the production enrichment shape (every
+    // event keeps its row; staleness shows as null). The null-row flush is
+    // the watermark-expiry mechanism e10 certifies; the latest-agg max
+    // ignores the null match struct, so unmatched groups emit nulls.
     // e16: the LEFT JOIN form of e15's replay; IS NOT DISTINCT FROM keeps
     // the unmatched (all-null) group, whose max(c_id) is NULL
-    "e16_stream_asof_outer" ->
+    Query("e16_stream_asof_outer",
       """WITH e AS (SELECT event_id AS e_id, user_id, ts FROM events
         |  WHERE event_type = 'error'),
         |c AS (SELECT event_id AS c_id, user_id, ts FROM events
@@ -5555,72 +3953,217 @@ object SparkEntry {
         |SELECT j.e_id AS e_id, CAST(max(j.c_id) AS BIGINT) AS r_c_id
         |FROM j JOIN m ON j.e_id = m.e_id
         |  AND j.c_ts IS NOT DISTINCT FROM m.mt
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-  )
+        |GROUP BY 1 ORDER BY 1""".stripMargin)((s, dir) => {
+      val ev = t(s, dir, "events")
+      val e = ev.filter(col("event_type") === "error")
+        .select(col("user_id").as("e_user"), col("event_id").as("e_id"),
+          col("ts").as("e_ts"))
+      val c = ev.filter(col("event_type") === "click")
+        .select(col("user_id").as("c_user"), col("event_id").as("c_id"),
+          col("ts").as("c_ts"))
+      streaming.EventStream.asofJoinWithinOuter(e, c, "e_user", "c_user",
+          "e_ts", "c_ts", horizonSeconds = 3600, payload = Seq("c_id"))
+        .select(col("e_id"), col("r_c_id")).orderBy("e_id")
+    }),
 
-  private def parityOracles: Map[String, String] = Map(
-    "q01_scan_project" ->
-      "SELECT l_orderkey, l_extendedprice, l_discount FROM lineitem",
-    "q02_filter_ops" ->
+    Query("e10_outer_interval_join",
+      """SELECT e.event_id AS e_id, c.event_id AS c_id
+        |FROM (SELECT * FROM events WHERE event_type = 'error') e
+        |LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
+        |  ON c.user_id = e.user_id
+        |  AND c.ts >= e.ts - INTERVAL 1 HOUR AND c.ts <= e.ts
+        |ORDER BY e_id, c_id""".stripMargin)((s, dir) => {
+      val ev = t(s, dir, "events")
+      val e = ev.filter(col("event_type") === "error")
+        .select(col("user_id").as("e_user"), col("event_id").as("e_id"),
+          col("ts").as("e_ts"))
+      val c = ev.filter(col("event_type") === "click")
+        .select(col("user_id").as("c_user"), col("event_id").as("c_id"),
+          col("ts").as("c_ts"))
+      streaming.EventStream.intervalJoinOuter(e, c, "e_user", "c_user",
+          "e_ts", "c_ts", horizonSeconds = 3600)
+        .select("e_id", "c_id").orderBy("e_id", "c_id")
+    }),
+
+    // per-doc contamination fraction vs the pseudo eval set — d09's any-hit
+    // rule generalized to the thresholdable report (zero-hit docs at 0.0)
+    Query("t28_contamination_score",
+      """WITH g AS (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents),
+        |ng AS (SELECT doc_id, list_distinct(CASE WHEN len(toks) < 5 THEN [array_to_string(toks, ' ')]
+        |  ELSE [array_to_string(toks[i:i+4], ' ') for i in range(1, len(toks)-3)] END) AS grams FROM g),
+        |bench AS (SELECT DISTINCT unnest(grams) AS gr FROM ng WHERE doc_id % 7 = 0),
+        |corp AS (SELECT doc_id, CAST(len(grams) AS BIGINT) AS n_grams,
+        |  unnest(grams) AS gr FROM ng WHERE doc_id % 7 <> 0),
+        |h AS (SELECT c.doc_id, c.n_grams,
+        |  CAST(sum(CASE WHEN b.gr IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits
+        |  FROM corp c LEFT JOIN bench b ON c.gr = b.gr GROUP BY 1, 2)
+        |SELECT doc_id, n_grams, n_hits,
+        |  ROUND(CAST(n_hits AS DOUBLE) / n_grams, 6) AS contamination
+        |FROM h ORDER BY doc_id""".stripMargin)((s, dir) => {
+      val d = t(s, dir, "documents")
+      ops.TextOps.contaminationScore(
+        d.filter(col("doc_id") % 7 =!= 0), d.filter(col("doc_id") % 7 === 0),
+        n = 5)
+        .orderBy("doc_id")
+    }),
+    // ---- plan-interchange parity: one query per operator of SURVEY.md §2
+
+    // S1/S2: scan + projection mask (pruned columns reach the parquet reader)
+    Query("q01_scan_project",
+      "SELECT l_orderkey, l_extendedprice, l_discount FROM lineitem")((s, dir) =>
+      t(s, dir, "lineitem").select("l_orderkey", "l_extendedprice", "l_discount")),
+
+    // F1/F2 + E3 binary predicates + mod
+    Query("q02_filter_ops",
       """SELECT l_orderkey, l_linenumber, l_quantity, l_discount FROM lineitem
         |WHERE l_discount > 0.05 AND l_quantity < 30 AND l_returnflag <> 'N'
-        |  AND l_orderkey % 7 <> 0""".stripMargin,
-    "q03_sort_limit_offset" ->
+        |  AND l_orderkey % 7 <> 0""".stripMargin)((s, dir) =>
+      t(s, dir, "lineitem")
+        .filter(col("l_discount") > 0.05 && col("l_quantity") < 30.0 &&
+          col("l_returnflag") =!= "N" && col("l_orderkey") % 7 =!= 0)
+        .select("l_orderkey", "l_linenumber", "l_quantity", "l_discount")),
+
+    // O1-O4: sort (desc) + limit + offset fused into one FetchRel
+    Query("q03_sort_limit_offset",
       """SELECT o_orderkey, o_totalprice FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10 OFFSET 5""".stripMargin,
-    "q04_pricing_summary" ->
+        |ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10 OFFSET 5""".stripMargin)((s, dir) =>
+      t(s, dir, "orders")
+        .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
+        .offset(5).limit(10)
+        .select("o_orderkey", "o_totalprice")),
+
+    // A1-A3: TPC-H Q1-style pricing summary (multi-measure group-by)
+    Query("q04_pricing_summary",
       """SELECT l_returnflag, l_linestatus,
         |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
         |  CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS sum_disc_price,
         |  count(*) AS count_order
         |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-        |GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q05_agg_distinct_filter" ->
+        |GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""".stripMargin)((s, dir) =>
+      t(s, dir, "lineitem")
+        .filter(col("l_shipdate") <= lit(LocalDateTime.of(1998, 9, 2, 0, 0)))
+        .groupBy(col("l_returnflag"), col("l_linestatus"))
+        .agg(
+          dsum(col("l_quantity")).as("sum_qty"),
+          dsum(col("l_extendedprice")).as("sum_base_price"),
+          dsum4(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("sum_disc_price"),
+          count(lit(1)).as("count_order"))
+        .orderBy("l_returnflag", "l_linestatus")),
+
+    // A1: DISTINCT invocation + measure FILTER
+    Query("q05_agg_distinct_filter",
       """SELECT l_returnflag,
         |  count(DISTINCT l_partkey) AS distinct_parts,
         |  count(l_orderkey) FILTER (WHERE l_quantity > 25) AS big_cnt,
         |  CAST(sum(DISTINCT l_linenumber) AS BIGINT) AS sum_distinct_ln
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q06_distinct" ->
-      "SELECT DISTINCT c_mktsegment FROM customer ORDER BY c_mktsegment",
-    "q07_join_inner" ->
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)((s, dir) =>
+      t(s, dir, "lineitem")
+        .groupBy(col("l_returnflag"))
+        .agg(
+          countDistinct(col("l_partkey")).as("distinct_parts"),
+          expr("count(l_orderkey) FILTER (WHERE l_quantity > 25)").as("big_cnt"),
+          sum_distinct(col("l_linenumber")).as("sum_distinct_ln"))
+        .orderBy("l_returnflag")),
+
+    // A4: DISTINCT-as-groupBy
+    Query("q06_distinct",
+      "SELECT DISTINCT c_mktsegment FROM customer ORDER BY c_mktsegment")((s, dir) =>
+      t(s, dir, "customer").select("c_mktsegment").distinct().orderBy("c_mktsegment")),
+
+    // J1/J2: the six join types
+    Query("q07_join_inner",
       """SELECT o_orderkey, o_totalprice, c_name, c_mktsegment
         |FROM orders JOIN customer ON o_custkey = c_custkey
-        |WHERE c_acctbal > 1000""".stripMargin,
-    "q08_join_left" ->
+        |WHERE c_acctbal > 1000""".stripMargin)((s, dir) => {
+      val o = t(s, dir, "orders"); val c = t(s, dir, "customer")
+      o.join(c, o("o_custkey") === c("c_custkey"), "inner")
+        .filter(col("c_acctbal") > 1000.0)
+        .select("o_orderkey", "o_totalprice", "c_name", "c_mktsegment")
+    }),
+
+    Query("q08_join_left",
       """SELECT c_custkey, c_name, o_orderkey, o_totalprice
-        |FROM customer LEFT JOIN orders ON c_custkey = o_custkey""".stripMargin,
-    "q09_join_right" ->
+        |FROM customer LEFT JOIN orders ON c_custkey = o_custkey""".stripMargin)((s, dir) => {
+      val c = t(s, dir, "customer"); val o = t(s, dir, "orders")
+      c.join(o, c("c_custkey") === o("o_custkey"), "left")
+        .select("c_custkey", "c_name", "o_orderkey", "o_totalprice")
+    }),
+
+    Query("q09_join_right",
       """SELECT o_orderkey, c_custkey, c_name
-        |FROM orders RIGHT JOIN customer ON o_custkey = c_custkey""".stripMargin,
-    "q10_join_full" ->
+        |FROM orders RIGHT JOIN customer ON o_custkey = c_custkey""".stripMargin)((s, dir) => {
+      val o = t(s, dir, "orders"); val c = t(s, dir, "customer")
+      o.join(c, o("o_custkey") === c("c_custkey"), "right")
+        .select("o_orderkey", "c_custkey", "c_name")
+    }),
+
+    Query("q10_join_full",
       """SELECT c_custkey, c_name, o_orderkey
-        |FROM customer FULL JOIN orders ON c_custkey = o_custkey""".stripMargin,
-    "q11_join_semi" ->
+        |FROM customer FULL JOIN orders ON c_custkey = o_custkey""".stripMargin)((s, dir) => {
+      val c = t(s, dir, "customer"); val o = t(s, dir, "orders")
+      c.join(o, c("c_custkey") === o("o_custkey"), "full")
+        .select("c_custkey", "c_name", "o_orderkey")
+    }),
+
+    Query("q11_join_semi",
       """SELECT c_custkey, c_name, c_acctbal FROM customer
-        |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)""".stripMargin,
-    "q12_join_anti" ->
+        |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)""".stripMargin)((s, dir) => {
+      val c = t(s, dir, "customer"); val o = t(s, dir, "orders")
+      c.join(o, c("c_custkey") === o("o_custkey"), "left_semi")
+        .select("c_custkey", "c_name", "c_acctbal")
+    }),
+
+    Query("q12_join_anti",
       """SELECT c_custkey, c_name, c_acctbal FROM customer
         |WHERE NOT EXISTS (SELECT 1 FROM orders
-        |                  WHERE o_custkey = c_custkey AND o_orderstatus = 'F')""".stripMargin,
-    "q13_revenue_by_segment" ->
+        |                  WHERE o_custkey = c_custkey AND o_orderstatus = 'F')""".stripMargin)((s, dir) => {
+      val c = t(s, dir, "customer")
+      val o = t(s, dir, "orders").filter(col("o_orderstatus") === "F")
+      c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
+        .select("c_custkey", "c_name", "c_acctbal")
+    }),
+
+    // flagship: 3-way join + aggregate
+    Query("q13_revenue_by_segment",
       """SELECT c_mktsegment,
         |  CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
         |  count(*) AS n_lines
         |FROM lineitem
         |JOIN orders ON l_orderkey = o_orderkey
         |JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "q14_case_arith" ->
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin)((s, dir) => {
+      val li = t(s, dir, "lineitem"); val o = t(s, dir, "orders")
+      val c = t(s, dir, "customer")
+      li.join(o, li("l_orderkey") === o("o_orderkey"))
+        .join(c, o("o_custkey") === c("c_custkey"))
+        .groupBy(col("c_mktsegment"))
+        .agg(
+          dsum4(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("revenue"),
+          count(lit(1)).as("n_lines"))
+        .orderBy("c_mktsegment")
+    }),
+
+    // E5 CASE + E3 arithmetic
+    Query("q14_case_arith",
       """SELECT l_orderkey, l_linenumber,
         |  CASE WHEN l_quantity < 10 THEN 'small'
         |       WHEN l_quantity < 30 THEN 'mid' ELSE 'big' END AS qty_bucket,
         |  l_extendedprice * (1.0 - l_discount) AS disc_price,
         |  l_quantity - 5.0 AS qty_minus,
         |  l_quantity / 2.0 AS qty_half
-        |FROM lineitem""".stripMargin,
-    "q15_setops" ->
+        |FROM lineitem""".stripMargin)((s, dir) =>
+      t(s, dir, "lineitem").select(
+        col("l_orderkey"), col("l_linenumber"),
+        when(col("l_quantity") < 10.0, "small")
+          .when(col("l_quantity") < 30.0, "mid")
+          .otherwise("big").as("qty_bucket"),
+        (col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("disc_price"),
+        (col("l_quantity") - 5.0).as("qty_minus"),
+        (col("l_quantity") / 2.0).as("qty_half"))),
+
+    // SetRel: INTERSECT / UNION-distinct / EXCEPT
+    Query("q15_setops",
       """SELECT k FROM (
         |  SELECT k FROM (
         |    SELECT c_nationkey AS k FROM customer
@@ -5630,51 +4173,102 @@ object SparkEntry {
         |  SELECT r_regionkey AS k FROM region)
         |EXCEPT
         |SELECT n_nationkey AS k FROM nation WHERE n_nationkey > 20
-        |ORDER BY k""".stripMargin,
-    "q16_sort_nulls" ->
+        |ORDER BY k""".stripMargin)((s, dir) => {
+      val ck = t(s, dir, "customer").select(col("c_nationkey").as("k"))
+      val sk = t(s, dir, "supplier").select(col("s_nationkey").as("k"))
+      val rk = t(s, dir, "region").select(col("r_regionkey").as("k"))
+      val nk = t(s, dir, "nation").filter(col("n_nationkey") > 20)
+        .select(col("n_nationkey").as("k"))
+      ck.intersect(sk).union(rk).distinct().except(nk).orderBy("k")
+    }),
+
+    // O1: null ordering over outer-join nulls
+    Query("q16_sort_nulls",
       """SELECT c_custkey, o_totalprice
         |FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-        |ORDER BY o_totalprice ASC NULLS FIRST, c_custkey ASC LIMIT 100""".stripMargin,
-    "q17_having" ->
+        |ORDER BY o_totalprice ASC NULLS FIRST, c_custkey ASC LIMIT 100""".stripMargin)((s, dir) => {
+      val c = t(s, dir, "customer"); val o = t(s, dir, "orders")
+      c.join(o, c("c_custkey") === o("o_custkey"), "left")
+        .select(col("c_custkey"), col("o_totalprice"))
+        .orderBy(col("o_totalprice").asc_nulls_first, col("c_custkey").asc)
+        .limit(100)
+    }),
+
+    // HAVING = Filter above Aggregate (post-agg attribute resolution)
+    Query("q17_having",
       """SELECT l_partkey, count(*) AS n,
         |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS total_qty
         |FROM lineitem GROUP BY l_partkey HAVING count(*) > 3
-        |ORDER BY l_partkey""".stripMargin,
-    "q18_between_like" ->
+        |ORDER BY l_partkey""".stripMargin)((s, dir) =>
+      t(s, dir, "lineitem")
+        .groupBy(col("l_partkey"))
+        .agg(count(lit(1)).as("n"), dsum(col("l_quantity")).as("total_qty"))
+        .filter(col("n") > 3)
+        .orderBy("l_partkey")),
+
+    // E8 BETWEEN desugar + LIKE
+    Query("q18_between_like",
       """SELECT o_orderkey, o_totalprice, o_orderpriority FROM orders
-        |WHERE o_totalprice BETWEEN 1000 AND 5000 AND o_orderpriority LIKE '1%'""".stripMargin,
-    "q19_ts_filter" ->
+        |WHERE o_totalprice BETWEEN 1000 AND 5000 AND o_orderpriority LIKE '1%'""".stripMargin)((s, dir) =>
+      t(s, dir, "orders")
+        .filter(col("o_totalprice").between(1000.0, 5000.0) &&
+          col("o_orderpriority").like("1%"))
+        .select("o_orderkey", "o_totalprice", "o_orderpriority")),
+
+    // timestamp literals + predicates (timestamp_ntz ≡ DuckDB naive TIMESTAMP)
+    Query("q19_ts_filter",
       """SELECT o_orderkey, o_orderdate, o_totalprice FROM orders
         |WHERE o_orderdate >= TIMESTAMP '1997-01-01'
-        |  AND o_orderdate < TIMESTAMP '1998-01-01'""".stripMargin,
-    "q20_decimal_cast" ->
+        |  AND o_orderdate < TIMESTAMP '1998-01-01'""".stripMargin)((s, dir) =>
+      t(s, dir, "orders")
+        .filter(col("o_orderdate") >= lit(LocalDateTime.of(1997, 1, 1, 0, 0)) &&
+          col("o_orderdate") < lit(LocalDateTime.of(1998, 1, 1, 0, 0)))
+        .select("o_orderkey", "o_orderdate", "o_totalprice")),
+
+    // E6/E7: decimal cast + decimal literal comparison. The decimal cast and
+    // decimal literal ride the wire; the OUTPUT is cast back to double because
+    // the driver's oracle materializes DECIMAL columns as float64 (a raw
+    // decimal output hash-mismatches on representation, not value).
+    Query("q20_decimal_cast",
       """SELECT o_orderkey,
         |  CAST(CAST(o_totalprice AS DECIMAL(12,2)) AS DOUBLE) AS price_dec
-        |FROM orders WHERE CAST(o_totalprice AS DECIMAL(12,2)) > 50000.00""".stripMargin,
-    "q21_bitwise" ->
+        |FROM orders WHERE CAST(o_totalprice AS DECIMAL(12,2)) > 50000.00""".stripMargin)((s, dir) =>
+      t(s, dir, "orders")
+        .select(col("o_orderkey"),
+          col("o_totalprice").cast(DecimalType(12, 2)).as("dec_tmp"))
+        .filter(col("dec_tmp") > lit(new java.math.BigDecimal("50000.00")))
+        .select(col("o_orderkey"),
+          col("dec_tmp").cast("double").as("price_dec"))),
+
+    // E3: bitwise and shift operators
+    Query("q21_bitwise",
       """SELECT l_orderkey,
         |  l_orderkey & 255 AS b_and,
         |  l_orderkey | 7 AS b_or,
         |  xor(l_orderkey, 42) AS b_xor,
         |  l_linenumber << 2 AS shl,
         |  l_orderkey >> 3 AS shr
-        |FROM lineitem""".stripMargin,
-    "q22_string_ops" ->
+        |FROM lineitem""".stripMargin)((s, dir) =>
+      t(s, dir, "lineitem").select(
+        col("l_orderkey"),
+        (col("l_orderkey").bitwiseAND(lit(255L))).as("b_and"),
+        (col("l_orderkey").bitwiseOR(lit(7L))).as("b_or"),
+        (col("l_orderkey").bitwiseXOR(lit(42L))).as("b_xor"),
+        shiftleft(col("l_linenumber"), 2).as("shl"),
+        shiftright(col("l_orderkey"), 3).as("shr"))),
+
+    // E3: str_concat + regex_match
+    Query("q22_string_ops",
       """SELECT o_orderkey, o_orderstatus || '_' || o_orderpriority AS status_prio
-        |FROM orders WHERE regexp_matches(o_orderpriority, '^[12]')""".stripMargin,
-    "q36_map_ops" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  CAST(l_quantity AS DOUBLE) AS qty,
-        |  CAST(l_tax AS DOUBLE) AS tax,
-        |  2 AS n_keys, 'qty,tax' AS keys, CAST(2 AS BIGINT) AS lit_b
-        |FROM lineitem WHERE l_orderkey <= 200
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "q23_null_ops" ->
-      """SELECT c_custkey IS NOT DISTINCT FROM o_custkey AS matched,
-        |  coalesce(c_custkey, o_custkey) AS k,
-        |  o_orderkey IS NULL AS no_order
-        |FROM customer FULL JOIN orders ON c_custkey = o_custkey""".stripMargin,
-    "q24_misc_ops" ->
+        |FROM orders WHERE regexp_matches(o_orderpriority, '^[12]')""".stripMargin)((s, dir) =>
+      t(s, dir, "orders")
+        .filter(col("o_orderpriority").rlike("^[12]"))
+        .select(col("o_orderkey"),
+          concat(col("o_orderstatus"), lit("_"), col("o_orderpriority")).as("status_prio"))),
+
+    // remaining E3 operators: or, not_like, is_distinct_from,
+    // regex_not_match, negate, is_null (via nullif), base-form CASE
+    Query("q24_misc_ops",
       """SELECT o_orderkey,
         |  (o_orderstatus = 'F' OR o_totalprice > 100000) AS flag_or,
         |  o_orderpriority NOT LIKE '3%' AS not_like3,
@@ -5684,8 +4278,22 @@ object SparkEntry {
         |  nullif(o_orderstatus, 'F') IS NULL AS is_f,
         |  CASE o_orderstatus WHEN 'F' THEN 'finished'
         |       WHEN 'O' THEN 'open' ELSE 'pending' END AS status_name
-        |FROM orders""".stripMargin,
-    "q25_agg_stats" ->
+        |FROM orders""".stripMargin)((s, dir) =>
+      t(s, dir, "orders").select(
+        col("o_orderkey"),
+        (col("o_orderstatus") === "F" || col("o_totalprice") > 100000.0).as("flag_or"),
+        (!col("o_orderpriority").like("3%")).as("not_like3"),
+        (!(col("o_orderstatus") <=> col("o_orderpriority"))).as("distinct_sp"),
+        (!col("o_orderpriority").rlike("^[45]")).as("not_prio45"),
+        (-col("o_totalprice")).as("neg_price"),
+        nullif(col("o_orderstatus"), lit("F")).isNull.as("is_f"),
+        when(col("o_orderstatus") === "F", "finished")
+          .when(col("o_orderstatus") === "O", "open")
+          .otherwise("pending").as("status_name"))),
+
+    // A2 aggregate-name coverage: min/max/avg/median/stddev/var/corr/covar +
+    // order-normalized array_agg
+    Query("q25_agg_stats",
       """SELECT l_returnflag,
         |  min(l_extendedprice) AS min_price,
         |  max(l_extendedprice) AS max_price,
@@ -5697,33 +4305,65 @@ object SparkEntry {
         |  ROUND(corr(l_quantity, l_extendedprice), 6) AS corr_qp,
         |  ROUND(covar_samp(l_quantity, l_discount), 6) AS cov_qd,
         |  array_to_string(list_sort(list(l_linestatus)), '') AS statuses
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    // the booleans assert the approx sketches landed inside their error
-    // bounds (computed Spark-side against Spark's own exact aggregates);
-    // the exact n_rows / nd_parts cross-check engine-to-engine
-    "q26_approx_aggs" ->
-      """SELECT l_returnflag, count(*) AS n_rows,
-        |  CAST(count(DISTINCT l_partkey) AS BIGINT) AS nd_parts,
-        |  TRUE AS approx_parts_ok, TRUE AS approx_median_ok
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q27_rollup" ->
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)((s, dir) =>
+      t(s, dir, "lineitem")
+        .groupBy(col("l_returnflag"))
+        .agg(
+          min(col("l_extendedprice")).as("min_price"),
+          max(col("l_extendedprice")).as("max_price"),
+          (sum(col("l_quantity").cast(DecimalType(18, 2))).cast(DoubleType) /
+            count(col("l_quantity"))).as("avg_qty"),
+          median(col("l_tax")).as("med_tax"),
+          round(stddev_samp(col("l_discount")), 6).as("sd_disc"),
+          round(var_pop(col("l_discount")), 6).as("vp_disc"),
+          round(corr(col("l_quantity"), col("l_extendedprice")), 6).as("corr_qp"),
+          round(covar_samp(col("l_quantity"), col("l_discount")), 6).as("cov_qd"),
+          array_join(sort_array(collect_list(col("l_linestatus"))), "").as("statuses"))
+        .orderBy("l_returnflag")),
+
+    // A2 approximate aggregates through the wire (sketch values are
+    // engine-specific → deterministic rows-only check, no DuckDB oracle)
+    // multiple grouping sets through the wire (AggregateRel with n groupings;
+    // beyond the reference, which allows exactly one — consumer.rs:230-235).
+    // One Expand-fed hash aggregate, not one job per set.
+    Query("q27_rollup",
       """SELECT l_returnflag, l_linestatus,
         |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
         |  count(*) AS n
         |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin,
-    "q28_cube" ->
+        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin)((s, dir) =>
+      t(s, dir, "lineitem")
+        .rollup(col("l_returnflag"), col("l_linestatus"))
+        .agg(dsum(col("l_quantity")).as("sum_qty"), count(lit(1)).as("n"))
+        .orderBy(asc_nulls_first("l_returnflag"), asc_nulls_first("l_linestatus"))),
+
+    Query("q28_cube",
       """SELECT o_orderstatus, o_orderpriority,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total,
         |  count(*) AS n
         |FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
-        |ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin,
-    "q29_grouping_sets" ->
+        |ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin)((s, dir) =>
+      t(s, dir, "orders")
+        .cube(col("o_orderstatus"), col("o_orderpriority"))
+        .agg(dsum(col("o_totalprice")).as("total"), count(lit(1)).as("n"))
+        .orderBy(asc_nulls_first("o_orderstatus"), asc_nulls_first("o_orderpriority"))),
+
+    Query("q29_grouping_sets",
       """SELECT o_orderstatus, o_orderpriority, count(*) AS n
         |FROM orders GROUP BY GROUPING SETS
         |  ((o_orderpriority), (o_orderstatus, o_orderpriority), ())
-        |ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin,
-    "q31_window" ->
+        |ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin)((s, dir) =>
+      t(s, dir, "orders")
+        .groupingSets(
+          Seq(Seq(col("o_orderpriority")),
+            Seq(col("o_orderstatus"), col("o_orderpriority")), Seq()),
+          col("o_orderstatus"), col("o_orderpriority"))
+        .agg(count(lit(1)).as("n"))
+        .orderBy(asc_nulls_first("o_orderstatus"), asc_nulls_first("o_orderpriority"))),
+
+    // window functions through the wire: ranking + offset + ROWS-frame
+    // aggregate in one pass over a single hash-partitioned sort
+    Query("q31_window",
       """WITH w AS (SELECT o_custkey, o_orderkey, o_totalprice,
         |  row_number() OVER win AS rn,
         |  dense_rank() OVER win AS rnk,
@@ -5733,22 +4373,216 @@ object SparkEntry {
         |FROM orders
         |WINDOW win AS (PARTITION BY o_custkey
         |               ORDER BY o_totalprice DESC, o_orderkey ASC))
-        |SELECT * FROM w WHERE rn <= 3 ORDER BY o_custkey, rn""".stripMargin,
-    "q35_scalar_correlated" ->
+        |SELECT * FROM w WHERE rn <= 3 ORDER BY o_custkey, rn""".stripMargin)((s, dir) => {
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("o_custkey")
+        .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
+      val wsum = w.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
+      t(s, dir, "orders")
+        .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
+        .withColumn("rn", row_number().over(w))
+        .withColumn("rnk", dense_rank().over(w))
+        .withColumn("prev_price", lag("o_totalprice", 1).over(w))
+        .withColumn("run_spend",
+          sum(col("o_totalprice").cast(DecimalType(18, 2))).over(wsum)
+            .cast("double"))
+        .filter(col("rn") <= 3)
+        .orderBy("o_custkey", "rn")
+    }),
+
+    // uncorrelated IN subquery → semi JoinRel on the wire
+    Query("q32_in_subquery",
+      """SELECT o_orderkey, o_totalprice FROM orders
+        |WHERE o_custkey IN (SELECT c_custkey FROM customer
+        |                    WHERE c_mktsegment = 'BUILDING')
+        |ORDER BY o_orderkey""".stripMargin)((s, dir) => {
+      t(s, dir, "orders") // ensure view registration before spark.sql
+      s.sql(
+        """SELECT o_orderkey, o_totalprice FROM orders
+          |WHERE o_custkey IN (SELECT c_custkey FROM customer
+          |                    WHERE c_mktsegment = 'BUILDING')
+          |ORDER BY o_orderkey""".stripMargin)
+    }),
+
+    // correlated EXISTS (TPC-H Q4 shape) → decorrelated semi JoinRel
+    Query("q34_exists_correlated",
+      """SELECT o_orderpriority, count(*) AS order_count
+        |FROM orders
+        |WHERE EXISTS (SELECT 1 FROM lineitem
+        |              WHERE l_orderkey = o_orderkey AND l_discount > 0.05)
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)((s, dir) => {
+      t(s, dir, "orders"); t(s, dir, "lineitem")
+      s.sql(
+        """SELECT o_orderpriority, count(*) AS order_count
+          |FROM orders
+          |WHERE EXISTS (SELECT 1 FROM lineitem
+          |              WHERE l_orderkey = o_orderkey AND l_discount > 0.05)
+          |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)
+    }),
+
+    // correlated scalar aggregate (TPC-H Q17 shape) → grouped left join
+    // NOT IN with a NULLABLE probe side: the anti JoinRel's null-aware
+    // condition (eq OR is_null(eq)) crosses the wire; NULL probes drop
+    // (SQL three-valued logic), non-null probes anti-join
+    Query("q37_not_in_subquery",
+      """SELECT o_orderkey, o_totalprice FROM (
+        |  SELECT o_orderkey, o_totalprice,
+        |    CASE WHEN o_orderstatus = 'P' THEN NULL ELSE o_custkey END AS probe
+        |  FROM orders)
+        |WHERE probe NOT IN (SELECT c_custkey FROM customer WHERE c_acctbal < 0.0)
+        |ORDER BY o_orderkey""".stripMargin)((s, dir) => {
+      t(s, dir, "orders"); t(s, dir, "customer")
+      s.sql(
+        """SELECT o_orderkey, o_totalprice FROM (
+          |  SELECT o_orderkey, o_totalprice,
+          |    CASE WHEN o_orderstatus = 'P' THEN NULL ELSE o_custkey END AS probe
+          |  FROM orders)
+          |WHERE probe NOT IN (SELECT c_custkey FROM customer WHERE c_acctbal < 0.0)
+          |ORDER BY o_orderkey""".stripMargin)
+    }),
+
+    // LATERAL aggregate subquery: decorrelates on the wire into the grouped
+    // left join (bare COUNT coalesces to 0 on group misses)
+    Query("q38_lateral",
+      """SELECT c.c_custkey,
+        |  (SELECT count(*) FROM orders o WHERE o.o_custkey = c.c_custkey) AS n_orders,
+        |  (SELECT max(o_totalprice) FROM orders o WHERE o.o_custkey = c.c_custkey) AS max_price
+        |FROM customer c ORDER BY c.c_custkey""".stripMargin)((s, dir) => {
+      t(s, dir, "customer"); t(s, dir, "orders")
+      s.sql(
+        """SELECT c.c_custkey, l.n_orders, l.max_price
+          |FROM customer c,
+          |LATERAL (SELECT count(*) AS n_orders, max(o_totalprice) AS max_price
+          |         FROM orders o WHERE o.o_custkey = c.c_custkey) l
+          |ORDER BY c.c_custkey""".stripMargin)
+    }),
+
+    // multi-reference CTE: WithCTE/CTERelationRef inline per reference on
+    // the wire (substrait has no subplan sharing)
+    Query("q39_cte",
+      """WITH t AS (SELECT l_partkey,
+        |             CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS q
+        |           FROM lineitem GROUP BY l_partkey)
+        |SELECT t1.l_partkey, t1.q
+        |FROM t t1 JOIN t t2 ON t1.l_partkey = t2.l_partkey + 1
+        |WHERE t1.q > t2.q ORDER BY t1.l_partkey""".stripMargin)((s, dir) => {
+      t(s, dir, "lineitem")
+      s.sql(
+        """WITH t AS (SELECT l_partkey,
+          |             CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS q
+          |           FROM lineitem GROUP BY l_partkey)
+          |SELECT t1.l_partkey, t1.q
+          |FROM t t1 JOIN t t2 ON t1.l_partkey = t2.l_partkey + 1
+          |WHERE t1.q > t2.q ORDER BY t1.l_partkey""".stripMargin)
+    }),
+
+    // PIVOT: pivotfirst rewritten on the wire into per-value first measures
+    Query("q40_pivot",
+      """SELECT l_returnflag,
+        |  CAST(sum(CASE WHEN l_linestatus = 'O'
+        |           THEN CAST(l_quantity AS DECIMAL(18,2)) END) AS DOUBLE) AS o,
+        |  CAST(sum(CASE WHEN l_linestatus = 'F'
+        |           THEN CAST(l_quantity AS DECIMAL(18,2)) END) AS DOUBLE) AS f
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)((s, dir) => {
+      t(s, dir, "lineitem")
+      s.sql(
+        """SELECT * FROM (SELECT l_returnflag, l_linestatus,
+          |                      CAST(l_quantity AS DECIMAL(18,2)) AS q
+          |               FROM lineitem)
+          |PIVOT (CAST(sum(q) AS DOUBLE) FOR l_linestatus IN ('O' AS o, 'F' AS f))
+          |ORDER BY l_returnflag""".stripMargin)
+    }),
+
+    // multiset set operations (SetRel IntersectionMultiset / MinusMultiset):
+    // duplicates preserved per multiset semantics — q15 certifies the
+    // PRIMARY variants, this the ALL variants
+    Query("q41_setops_all",
+      """WITH x AS (
+        |  SELECT k FROM (SELECT c_nationkey AS k FROM customer
+        |                 INTERSECT ALL
+        |                 SELECT s_nationkey FROM supplier)
+        |  EXCEPT ALL
+        |  SELECT n_nationkey FROM nation WHERE n_nationkey >= 10)
+        |SELECT k, count(*) AS n FROM x GROUP BY k ORDER BY k""".stripMargin)((s, dir) => {
+      val ck = t(s, dir, "customer").select(col("c_nationkey").as("k"))
+      val sk = t(s, dir, "supplier").select(col("s_nationkey").as("k"))
+      val nk = t(s, dir, "nation").filter(col("n_nationkey") >= 10)
+        .select(col("n_nationkey").as("k"))
+      ck.intersectAll(sk).exceptAll(nk).groupBy("k")
+        .agg(count(lit(1)).as("n")).orderBy("k")
+    }),
+
+    // IGNORE NULLS window offsets over outer-join nulls (the
+    // first_ignore_nulls/last_ignore_nulls extension names on the wire)
+    Query("q42_window_ignore_nulls",
+      """SELECT c_custkey,
+        |  last_value(o_orderkey IGNORE NULLS) OVER
+        |    (ORDER BY c_custkey ASC, o_orderkey ASC NULLS FIRST
+        |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+        |    AS last_seen_order
+        |FROM (SELECT c_custkey, o_orderkey
+        |      FROM customer LEFT JOIN orders ON c_custkey = o_custkey
+        |        AND o_orderkey % 50 = 0)
+        |ORDER BY c_custkey, last_seen_order""".stripMargin)((s, dir) => {
+      t(s, dir, "customer"); t(s, dir, "orders")
+      s.sql(
+        """SELECT c_custkey,
+          |  last_value(o_orderkey) IGNORE NULLS OVER
+          |    (ORDER BY c_custkey ASC, o_orderkey ASC NULLS FIRST
+          |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+          |    AS last_seen_order
+          |FROM (SELECT c_custkey, o_orderkey
+          |      FROM customer LEFT JOIN orders ON c_custkey = o_custkey
+          |        AND o_orderkey % 50 = 0)
+          |ORDER BY c_custkey, last_seen_order""".stripMargin)
+    }),
+
+    Query("q35_scalar_correlated",
       """SELECT l1.l_orderkey, l1.l_linenumber, l1.l_quantity
         |FROM lineitem l1
         |WHERE l1.l_quantity > 1.9 * (SELECT avg(l2.l_quantity)
         |                             FROM lineitem l2
         |                             WHERE l2.l_partkey = l1.l_partkey)
-        |ORDER BY l1.l_orderkey, l1.l_linenumber""".stripMargin,
-    "q69_corr_count_expr" ->
+        |ORDER BY l1.l_orderkey, l1.l_linenumber""".stripMargin)((s, dir) => {
+      t(s, dir, "lineitem")
+      s.sql(
+        """SELECT l1.l_orderkey, l1.l_linenumber, l1.l_quantity
+          |FROM lineitem l1
+          |WHERE l1.l_quantity > 1.9 * (SELECT avg(l2.l_quantity)
+          |                             FROM lineitem l2
+          |                             WHERE l2.l_partkey = l1.l_partkey)
+          |ORDER BY l1.l_orderkey, l1.l_linenumber""".stripMargin)
+    }),
+
+    // correlated COUNT inside a WIDER scalar expression (the r9-rejected
+    // shape): the count decorrelates to a grouped LEFT join whose miss rows
+    // coalesce to 0 at the AGGREGATE level, then the enclosing ×2 evaluates
+    // outside the join — parts with zero qualifying lines see 0, not NULL,
+    // so `p_size < 0` correctly drops them instead of NULL-filtering by
+    // accident. One hash aggregate + one equi left join; both scans pruned.
+    Query("q69_corr_count_expr",
       """SELECT p.p_partkey, p.p_size
         |FROM part p
         |WHERE p.p_size < (SELECT count(*) * 2 FROM lineitem l
         |                  WHERE l.l_partkey = p.p_partkey
         |                    AND l.l_quantity > 45)
-        |ORDER BY p.p_partkey""".stripMargin,
-    "q47_tpch_q2_mincost" ->
+        |ORDER BY p.p_partkey""".stripMargin)((s, dir) => {
+      t(s, dir, "part"); t(s, dir, "lineitem")
+      s.sql(
+        """SELECT p.p_partkey, p.p_size
+          |FROM part p
+          |WHERE p.p_size < (SELECT count(*) * 2 FROM lineitem l
+          |                  WHERE l.l_partkey = p.p_partkey
+          |                    AND l.l_quantity > 45)
+          |ORDER BY p.p_partkey""".stripMargin)
+    }),
+
+    // TPC-H Q2 shape: multi-level correlated MIN — the scalar subquery joins
+    // four tables and correlates on the outer part key; decorrelates into a
+    // grouped min over the same join tree, then an equi-join back on
+    // (partkey, price). lineitem stands in for partsupp (this schema's
+    // part-supplier association); min unit price ≡ min supplycost.
+    Query("q47_tpch_q2_mincost",
       """SELECT s.s_acctbal, s.s_name, n.n_name, p.p_partkey, p.p_type,
         |  l.l_extendedprice AS min_price
         |FROM part p, supplier s, lineitem l, nation n, region r
@@ -5761,8 +4595,30 @@ object SparkEntry {
         |    WHERE l2.l_partkey = p.p_partkey AND s2.s_suppkey = l2.l_suppkey
         |      AND s2.s_nationkey = n2.n_nationkey AND n2.n_regionkey = r2.r_regionkey
         |      AND r2.r_name = 'ASIA')
-        |ORDER BY s.s_acctbal DESC, n.n_name, s.s_name, p.p_partkey""".stripMargin,
-    "q48_tpch_q21_waiting" ->
+        |ORDER BY s.s_acctbal DESC, n.n_name, s.s_name, p.p_partkey""".stripMargin)((s, dir) => {
+      t(s, dir, "part"); t(s, dir, "supplier"); t(s, dir, "lineitem")
+      t(s, dir, "nation"); t(s, dir, "region")
+      s.sql(
+        """SELECT s.s_acctbal, s.s_name, n.n_name, p.p_partkey, p.p_type,
+          |  l.l_extendedprice AS min_price
+          |FROM part p, supplier s, lineitem l, nation n, region r
+          |WHERE p.p_partkey = l.l_partkey AND s.s_suppkey = l.l_suppkey
+          |  AND s.s_nationkey = n.n_nationkey AND n.n_regionkey = r.r_regionkey
+          |  AND r.r_name = 'ASIA' AND p.p_size < 5
+          |  AND l.l_extendedprice = (
+          |    SELECT min(l2.l_extendedprice)
+          |    FROM lineitem l2, supplier s2, nation n2, region r2
+          |    WHERE l2.l_partkey = p.p_partkey AND s2.s_suppkey = l2.l_suppkey
+          |      AND s2.s_nationkey = n2.n_nationkey AND n2.n_regionkey = r2.r_regionkey
+          |      AND r2.r_name = 'ASIA')
+          |ORDER BY s.s_acctbal DESC, n.n_name, s.s_name, p.p_partkey""".stripMargin)
+    }),
+
+    // TPC-H Q21 shape: EXISTS and NOT EXISTS over the SAME table as the
+    // outer (two decorrelated self-joins — semi + anti — on l_orderkey with
+    // a non-equi residual l_suppkey <> l1.l_suppkey). returnflag 'R'
+    // stands in for the receipt-late predicate this schema doesn't carry.
+    Query("q48_tpch_q21_waiting",
       """SELECT s.s_name, count(*) AS numwait
         |FROM supplier s, lineitem l1, orders o, nation n
         |WHERE s.s_suppkey = l1.l_suppkey AND o.o_orderkey = l1.l_orderkey
@@ -5776,8 +4632,31 @@ object SparkEntry {
         |                  WHERE l3.l_orderkey = l1.l_orderkey
         |                    AND l3.l_suppkey <> l1.l_suppkey
         |                    AND l3.l_returnflag = 'R')
-        |GROUP BY s.s_name ORDER BY numwait DESC, s_name""".stripMargin,
-    "q50_tpch_q20_excess" ->
+        |GROUP BY s.s_name ORDER BY numwait DESC, s_name""".stripMargin)((s, dir) => {
+      t(s, dir, "supplier"); t(s, dir, "lineitem")
+      t(s, dir, "orders"); t(s, dir, "nation")
+      s.sql(
+        """SELECT s.s_name, count(*) AS numwait
+          |FROM supplier s, lineitem l1, orders o, nation n
+          |WHERE s.s_suppkey = l1.l_suppkey AND o.o_orderkey = l1.l_orderkey
+          |  AND o.o_orderstatus = 'F' AND l1.l_returnflag = 'R'
+          |  AND s.s_nationkey = n.n_nationkey
+          |  AND n.n_name IN ('NATION_1', 'NATION_3')
+          |  AND EXISTS (SELECT 1 FROM lineitem l2
+          |              WHERE l2.l_orderkey = l1.l_orderkey
+          |                AND l2.l_suppkey <> l1.l_suppkey)
+          |  AND NOT EXISTS (SELECT 1 FROM lineitem l3
+          |                  WHERE l3.l_orderkey = l1.l_orderkey
+          |                    AND l3.l_suppkey <> l1.l_suppkey
+          |                    AND l3.l_returnflag = 'R')
+          |GROUP BY s.s_name ORDER BY numwait DESC, s_name""".stripMargin)
+    }),
+
+    // TPC-H Q20 shape: IN-subquery whose HAVING holds a scalar subquery
+    // CORRELATED ON A GROUPING KEY (the excess-stock pattern) nested inside
+    // another IN — decorrelation must thread the correlation through the
+    // group-by
+    Query("q50_tpch_q20_excess",
       """SELECT s_name, s_acctbal FROM supplier
         |WHERE s_suppkey IN (
         |  SELECT l1.l_suppkey FROM lineitem l1
@@ -5787,8 +4666,24 @@ object SparkEntry {
         |  HAVING sum(l1.l_quantity) >
         |    (SELECT 4.0 * avg(l2.l_quantity) FROM lineitem l2
         |     WHERE l2.l_partkey = l1.l_partkey))
-        |ORDER BY s_name""".stripMargin,
-    "q51_tpch_q11_value" ->
+        |ORDER BY s_name""".stripMargin)((s, dir) => {
+      t(s, dir, "supplier"); t(s, dir, "lineitem"); t(s, dir, "part")
+      s.sql(
+        """SELECT s_name, s_acctbal FROM supplier
+          |WHERE s_suppkey IN (
+          |  SELECT l1.l_suppkey FROM lineitem l1
+          |  WHERE l1.l_partkey IN (SELECT p_partkey FROM part
+          |                         WHERE p_type = 'PROMO')
+          |  GROUP BY l1.l_suppkey, l1.l_partkey
+          |  HAVING sum(l1.l_quantity) >
+          |    (SELECT 4.0 * avg(l2.l_quantity) FROM lineitem l2
+          |     WHERE l2.l_partkey = l1.l_partkey))
+          |ORDER BY s_name""".stripMargin)
+    }),
+
+    // TPC-H Q11 shape: HAVING compares each group's aggregate against a
+    // scalar subquery running the SAME join+aggregate globally
+    Query("q51_tpch_q11_value",
       """SELECT l_partkey,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS value
         |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
@@ -5801,8 +4696,27 @@ object SparkEntry {
         |   FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
         |     JOIN nation ON s_nationkey = n_nationkey
         |   WHERE n_name = 'NATION_3')
-        |ORDER BY value DESC, l_partkey""".stripMargin,
-    "q52_tpch_q15_topsupp" ->
+        |ORDER BY value DESC, l_partkey""".stripMargin)((s, dir) => {
+      t(s, dir, "lineitem"); t(s, dir, "supplier"); t(s, dir, "nation")
+      s.sql(
+        """SELECT l_partkey,
+          |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS value
+          |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
+          |  JOIN nation ON s_nationkey = n_nationkey
+          |WHERE n_name = 'NATION_3'
+          |GROUP BY l_partkey
+          |HAVING sum(CAST(l_extendedprice AS DECIMAL(18,2))) >
+          |  (SELECT 2.5 * sum(CAST(l_extendedprice AS DECIMAL(18,2)))
+          |     / count(DISTINCT l_partkey)
+          |   FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
+          |     JOIN nation ON s_nationkey = n_nationkey
+          |   WHERE n_name = 'NATION_3')
+          |ORDER BY value DESC, l_partkey""".stripMargin)
+    }),
+
+    // TPC-H Q15 shape: multi-reference CTE + scalar MAX over it (top
+    // revenue supplier); decimal-exact revenue so ties are exact
+    Query("q52_tpch_q15_topsupp",
       """WITH revenue AS (
         |  SELECT l_suppkey AS supplier_no,
         |    sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4)))
@@ -5812,15 +4726,47 @@ object SparkEntry {
         |FROM supplier, revenue
         |WHERE s_suppkey = supplier_no
         |  AND total = (SELECT max(total) FROM revenue)
-        |ORDER BY s_suppkey""".stripMargin,
-    "q53_tpch_q13_custdist" ->
+        |ORDER BY s_suppkey""".stripMargin)((s, dir) => {
+      t(s, dir, "supplier"); t(s, dir, "lineitem")
+      s.sql(
+        """WITH revenue AS (
+          |  SELECT l_suppkey AS supplier_no,
+          |    sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4)))
+          |      AS total
+          |  FROM lineitem GROUP BY l_suppkey)
+          |SELECT s_suppkey, s_name, CAST(total AS DOUBLE) AS total_revenue
+          |FROM supplier, revenue
+          |WHERE s_suppkey = supplier_no
+          |  AND total = (SELECT max(total) FROM revenue)
+          |ORDER BY s_suppkey""".stripMargin)
+    }),
+
+    // TPC-H Q13 shape: aggregate OF an aggregate (customer order-count
+    // distribution) over a LEFT JOIN whose ON clause carries a residual
+    // non-key predicate on the right side — the predicate must stay IN the
+    // join (filtering before/after changes left-join semantics)
+    Query("q53_tpch_q13_custdist",
       """SELECT c_count, count(*) AS custdist FROM (
         |  SELECT c_custkey, count(o_orderkey) AS c_count
         |  FROM customer LEFT JOIN orders ON c_custkey = o_custkey
         |    AND o_orderpriority <> '1-URGENT'
         |  GROUP BY c_custkey) cc
-        |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin,
-    "q49_tpch_q22_global" ->
+        |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin)((s, dir) => {
+      t(s, dir, "customer"); t(s, dir, "orders")
+      s.sql(
+        """SELECT c_count, count(*) AS custdist FROM (
+          |  SELECT c_custkey, count(o_orderkey) AS c_count
+          |  FROM customer LEFT JOIN orders ON c_custkey = o_custkey
+          |    AND o_orderpriority <> '1-URGENT'
+          |  GROUP BY c_custkey) cc
+          |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin)
+    }),
+
+    // TPC-H Q22 shape: substring bucketing + uncorrelated scalar AVG
+    // subquery + correlated NOT EXISTS, then a global group-aggregate.
+    // c_name digits stand in for the phone country code; the urgent-order
+    // anti-condition keeps the anti-join non-vacuous on this data.
+    Query("q49_tpch_q22_global",
       """SELECT cntrycode, count(*) AS numcust,
         |  CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS totacctbal
         |FROM (SELECT substring(c_name, 17, 2) AS cntrycode, c_acctbal, c_custkey
@@ -5831,73 +4777,27 @@ object SparkEntry {
         |WHERE NOT EXISTS (SELECT 1 FROM orders o
         |                  WHERE o.o_custkey = c.c_custkey
         |                    AND o.o_orderpriority = '1-URGENT')
-        |GROUP BY cntrycode ORDER BY cntrycode""".stripMargin,
-    "q40_pivot" ->
-      """SELECT l_returnflag,
-        |  CAST(sum(CASE WHEN l_linestatus = 'O'
-        |           THEN CAST(l_quantity AS DECIMAL(18,2)) END) AS DOUBLE) AS o,
-        |  CAST(sum(CASE WHEN l_linestatus = 'F'
-        |           THEN CAST(l_quantity AS DECIMAL(18,2)) END) AS DOUBLE) AS f
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q38_lateral" ->
-      """SELECT c.c_custkey,
-        |  (SELECT count(*) FROM orders o WHERE o.o_custkey = c.c_custkey) AS n_orders,
-        |  (SELECT max(o_totalprice) FROM orders o WHERE o.o_custkey = c.c_custkey) AS max_price
-        |FROM customer c ORDER BY c.c_custkey""".stripMargin,
-    "q39_cte" ->
-      """WITH t AS (SELECT l_partkey,
-        |             CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS q
-        |           FROM lineitem GROUP BY l_partkey)
-        |SELECT t1.l_partkey, t1.q
-        |FROM t t1 JOIN t t2 ON t1.l_partkey = t2.l_partkey + 1
-        |WHERE t1.q > t2.q ORDER BY t1.l_partkey""".stripMargin,
-    "q37_not_in_subquery" ->
-      """SELECT o_orderkey, o_totalprice FROM (
-        |  SELECT o_orderkey, o_totalprice,
-        |    CASE WHEN o_orderstatus = 'P' THEN NULL ELSE o_custkey END AS probe
-        |  FROM orders)
-        |WHERE probe NOT IN (SELECT c_custkey FROM customer WHERE c_acctbal < 0.0)
-        |ORDER BY o_orderkey""".stripMargin,
-    "q34_exists_correlated" ->
-      """SELECT o_orderpriority, count(*) AS order_count
-        |FROM orders
-        |WHERE EXISTS (SELECT 1 FROM lineitem
-        |              WHERE l_orderkey = o_orderkey AND l_discount > 0.05)
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "q33_scalar_subquery" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-        |WHERE o_totalprice >
-        |  (SELECT CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-        |     / count(*) FROM orders)
-        |ORDER BY o_orderkey""".stripMargin,
-    // percentile_disc replayed from its definition: the first value in
-    // within-group order whose cumulative distribution reaches p (ties
-    // share a cume_dist, so min_by is deterministic in value)
-    "q56_percentile_disc" ->
-      """WITH a AS (SELECT lang, n_chars,
-        |    cume_dist() OVER (PARTITION BY lang ORDER BY n_chars) AS cda,
-        |    cume_dist() OVER (PARTITION BY lang ORDER BY n_chars DESC) AS cdd
-        |  FROM documents)
-        |SELECT lang,
-        |  CAST(min_by(n_chars, CASE WHEN cda >= 0.25 THEN cda END) AS DOUBLE) AS p25_asc,
-        |  CAST(min_by(n_chars, CASE WHEN cdd >= 0.25 THEN cdd END) AS DOUBLE) AS p25_desc,
-        |  CAST(min_by(n_chars, CASE WHEN cda >= 0.5 THEN cda END) AS DOUBLE) AS p50_asc,
-        |  CAST(min_by(n_chars, CASE WHEN cdd >= 0.5 THEN cdd END) AS DOUBLE) AS p50_desc,
-        |  CAST(min_by(n_chars, CASE WHEN cdd >= 0.9 THEN cdd END) AS DOUBLE) AS p90_desc
-        |FROM a GROUP BY lang ORDER BY lang""".stripMargin,
-    "q57_tpch_q16_suppcnt" ->
-      """SELECT p.p_brand, p.p_type, p.p_size,
-        |  count(DISTINCT l.l_suppkey) AS supplier_cnt
-        |FROM lineitem l, part p
-        |WHERE p.p_partkey = l.l_partkey
-        |  AND p.p_brand <> 'Brand#5'
-        |  AND p.p_type NOT LIKE 'MEDIUM%'
-        |  AND p.p_size IN (1, 4, 9, 14, 19, 23, 36, 45)
-        |  AND l.l_suppkey NOT IN (SELECT s_suppkey FROM supplier
-        |                          WHERE s_acctbal < 0.0)
-        |GROUP BY p.p_brand, p.p_type, p.p_size
-        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin,
-    "q54_tpch_q18_bigorders" ->
+        |GROUP BY cntrycode ORDER BY cntrycode""".stripMargin)((s, dir) => {
+      t(s, dir, "customer"); t(s, dir, "orders")
+      s.sql(
+        """SELECT cntrycode, count(*) AS numcust,
+          |  CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS totacctbal
+          |FROM (SELECT substring(c_name, 17, 2) AS cntrycode, c_acctbal, c_custkey
+          |      FROM customer
+          |      WHERE substring(c_name, 17, 2) IN ('10','11','12','13','14','15','16')
+          |        AND c_acctbal > (SELECT avg(c_acctbal) FROM customer
+          |                         WHERE c_acctbal > 0.0)) c
+          |WHERE NOT EXISTS (SELECT 1 FROM orders o
+          |                  WHERE o.o_custkey = c.c_custkey
+          |                    AND o.o_orderpriority = '1-URGENT')
+          |GROUP BY cntrycode ORDER BY cntrycode""".stripMargin)
+    }),
+
+    // TPC-H Q18 shape: semi join against a grouped-HAVING subquery (large
+    // IN over aggregated keys) feeding a second aggregation over the
+    // 3-table join — the IN-subquery decorrelates to a semi join on the
+    // grouped orderkeys, and the big join stays key-partitioned
+    Query("q54_tpch_q18_bigorders",
       """SELECT c.c_name, c.c_custkey, o.o_orderkey, o.o_orderdate,
         |  o.o_totalprice, CAST(sum(l.l_quantity) AS BIGINT) AS total_qty
         |FROM customer c, orders o, lineitem l
@@ -5908,8 +4808,30 @@ object SparkEntry {
         |GROUP BY c.c_name, c.c_custkey, o.o_orderkey, o.o_orderdate,
         |  o.o_totalprice
         |ORDER BY o.o_totalprice DESC, o.o_orderdate, o.o_orderkey
-        |LIMIT 100""".stripMargin,
-    "q55_tpch_q19_disjunct" ->
+        |LIMIT 100""".stripMargin)((s, dir) => {
+      t(s, dir, "customer"); t(s, dir, "orders"); t(s, dir, "lineitem")
+      s.sql(
+        """SELECT c.c_name, c.c_custkey, o.o_orderkey, o.o_orderdate,
+          |  o.o_totalprice, CAST(sum(l.l_quantity) AS BIGINT) AS total_qty
+          |FROM customer c, orders o, lineitem l
+          |WHERE o.o_orderkey IN (
+          |    SELECT l_orderkey FROM lineitem GROUP BY l_orderkey
+          |    HAVING sum(l_quantity) > 250)
+          |  AND c.c_custkey = o.o_custkey AND o.o_orderkey = l.l_orderkey
+          |GROUP BY c.c_name, c.c_custkey, o.o_orderkey, o.o_orderdate,
+          |  o.o_totalprice
+          |ORDER BY o.o_totalprice DESC, o.o_orderdate, o.o_orderkey
+          |LIMIT 100""".stripMargin)
+    }),
+
+    // TPC-H Q19 shape: disjunctive OR-of-ANDs join predicate — each
+    // disjunct repeats the p_partkey = l_partkey equi conjunct, which the
+    // optimizer must factor out (CNF extraction) so the join plans as an
+    // EQUI join carrying the OR as a residual condition, never a
+    // cartesian/nested-loop; the whole condition rides the wire inside
+    // JoinRel. Brand/size/quantity bands stand in for TPC-H's
+    // container+shipmode bands this schema doesn't carry.
+    Query("q55_tpch_q19_disjunct",
       """SELECT CAST(sum(CAST(l_extendedprice * (1.0 - l_discount)
         |    AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
         |  count(*) AS n_lines
@@ -5919,8 +4841,57 @@ object SparkEntry {
         |   OR (p.p_partkey = l.l_partkey AND p.p_brand = 'Brand#23'
         |       AND l.l_quantity BETWEEN 10 AND 35 AND p.p_size BETWEEN 1 AND 35)
         |   OR (p.p_partkey = l.l_partkey AND p.p_brand = 'Brand#7'
-        |       AND l.l_quantity BETWEEN 20 AND 50 AND p.p_size BETWEEN 1 AND 50)""".stripMargin,
-    "q58_tpch_q14_promo" ->
+        |       AND l.l_quantity BETWEEN 20 AND 50 AND p.p_size BETWEEN 1 AND 50)""".stripMargin)((s, dir) => {
+      t(s, dir, "lineitem"); t(s, dir, "part")
+      s.sql(
+        """SELECT CAST(sum(CAST(l_extendedprice * (1.0 - l_discount)
+          |    AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
+          |  count(*) AS n_lines
+          |FROM lineitem l, part p
+          |WHERE (p.p_partkey = l.l_partkey AND p.p_brand = 'Brand#12'
+          |       AND l.l_quantity BETWEEN 1 AND 25 AND p.p_size BETWEEN 1 AND 25)
+          |   OR (p.p_partkey = l.l_partkey AND p.p_brand = 'Brand#23'
+          |       AND l.l_quantity BETWEEN 10 AND 35 AND p.p_size BETWEEN 1 AND 35)
+          |   OR (p.p_partkey = l.l_partkey AND p.p_brand = 'Brand#7'
+          |       AND l.l_quantity BETWEEN 20 AND 50 AND p.p_size BETWEEN 1 AND 50)""".stripMargin)
+    }),
+
+    // TPC-H Q16 shape: COUNT(DISTINCT) per multi-column group over a join
+    // whose probe side carries a NOT IN subquery (null-aware anti join on
+    // the non-null key) plus NOT-LIKE and IN-list part predicates
+    Query("q57_tpch_q16_suppcnt",
+      """SELECT p.p_brand, p.p_type, p.p_size,
+        |  count(DISTINCT l.l_suppkey) AS supplier_cnt
+        |FROM lineitem l, part p
+        |WHERE p.p_partkey = l.l_partkey
+        |  AND p.p_brand <> 'Brand#5'
+        |  AND p.p_type NOT LIKE 'MEDIUM%'
+        |  AND p.p_size IN (1, 4, 9, 14, 19, 23, 36, 45)
+        |  AND l.l_suppkey NOT IN (SELECT s_suppkey FROM supplier
+        |                          WHERE s_acctbal < 0.0)
+        |GROUP BY p.p_brand, p.p_type, p.p_size
+        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin)((s, dir) => {
+      t(s, dir, "lineitem"); t(s, dir, "part"); t(s, dir, "supplier")
+      s.sql(
+        """SELECT p.p_brand, p.p_type, p.p_size,
+          |  count(DISTINCT l.l_suppkey) AS supplier_cnt
+          |FROM lineitem l, part p
+          |WHERE p.p_partkey = l.l_partkey
+          |  AND p.p_brand <> 'Brand#5'
+          |  AND p.p_type NOT LIKE 'MEDIUM%'
+          |  AND p.p_size IN (1, 4, 9, 14, 19, 23, 36, 45)
+          |  AND l.l_suppkey NOT IN (SELECT s_suppkey FROM supplier
+          |                          WHERE s_acctbal < 0.0)
+          |GROUP BY p.p_brand, p.p_type, p.p_size
+          |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin)
+    }),
+
+    // TPC-H Q14 shape: promo revenue share — two conditional SUMs over the
+    // same join feed a scalar ratio (single-row result). Per-row DECIMAL
+    // cast before the sums keeps both engines' totals bit-exact; the ratio
+    // is then two correctly-rounded IEEE ops over equal inputs. The date
+    // band must reach the scan as PushedFilters on l_shipdate.
+    Query("q58_tpch_q14_promo",
       """SELECT CAST(100.0 * CAST(sum(CASE WHEN p.p_type = 'PROMO'
         |      THEN CAST(l.l_extendedprice * (1.0 - l.l_discount)
         |        AS DECIMAL(18,4))
@@ -5932,8 +4903,27 @@ object SparkEntry {
         |FROM lineitem l, part p
         |WHERE l.l_partkey = p.p_partkey
         |  AND l.l_shipdate >= TIMESTAMP '1995-03-01 00:00:00'
-        |  AND l.l_shipdate <  TIMESTAMP '1995-06-01 00:00:00'""".stripMargin,
-    "q59_tpch_q3_shipping" ->
+        |  AND l.l_shipdate <  TIMESTAMP '1995-06-01 00:00:00'""".stripMargin)((s, dir) => {
+      t(s, dir, "lineitem"); t(s, dir, "part")
+      s.sql(
+        """SELECT CAST(100.0 * CAST(sum(CASE WHEN p.p_type = 'PROMO'
+          |      THEN CAST(l.l_extendedprice * (1.0 - l.l_discount)
+          |        AS DECIMAL(18,4))
+          |      ELSE CAST(0.0 AS DECIMAL(18,4)) END) AS DOUBLE)
+          |    / CAST(sum(CAST(l.l_extendedprice * (1.0 - l.l_discount)
+          |        AS DECIMAL(18,4))) AS DOUBLE)
+          |  AS DOUBLE) AS promo_revenue,
+          |  count(*) AS n_lines
+          |FROM lineitem l, part p
+          |WHERE l.l_partkey = p.p_partkey
+          |  AND l.l_shipdate >= TIMESTAMP '1995-03-01 00:00:00'
+          |  AND l.l_shipdate <  TIMESTAMP '1995-06-01 00:00:00'""".stripMargin)
+    }),
+
+    // TPC-H Q3 shape: shipping-priority top-k — segment-filtered 3-table
+    // join, grouped revenue, ORDER BY ... LIMIT fuses to
+    // TakeOrderedAndProject (no global sort at scale)
+    Query("q59_tpch_q3_shipping",
       """SELECT l.l_orderkey,
         |  CAST(sum(CAST(l.l_extendedprice * (1.0 - l.l_discount)
         |    AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
@@ -5945,8 +4935,27 @@ object SparkEntry {
         |  AND l.l_shipdate > TIMESTAMP '1997-01-01 00:00:00'
         |GROUP BY l.l_orderkey, o.o_orderdate
         |ORDER BY revenue DESC, o.o_orderdate, l.l_orderkey
-        |LIMIT 10""".stripMargin,
-    "q60_tpch_q5_localsupp" ->
+        |LIMIT 10""".stripMargin)((s, dir) => {
+      t(s, dir, "customer"); t(s, dir, "orders"); t(s, dir, "lineitem")
+      s.sql(
+        """SELECT l.l_orderkey,
+          |  CAST(sum(CAST(l.l_extendedprice * (1.0 - l.l_discount)
+          |    AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
+          |  o.o_orderdate
+          |FROM customer c, orders o, lineitem l
+          |WHERE c.c_mktsegment = 'BUILDING' AND c.c_custkey = o.o_custkey
+          |  AND l.l_orderkey = o.o_orderkey
+          |  AND o.o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
+          |  AND l.l_shipdate > TIMESTAMP '1997-01-01 00:00:00'
+          |GROUP BY l.l_orderkey, o.o_orderdate
+          |ORDER BY revenue DESC, o.o_orderdate, l.l_orderkey
+          |LIMIT 10""".stripMargin)
+    }),
+
+    // TPC-H Q5 shape: local-supplier volume — six-table snowflake join
+    // with the customer-nation = supplier-nation co-location constraint;
+    // region/nation dims must broadcast, never shuffle the fact
+    Query("q60_tpch_q5_localsupp",
       """SELECT n.n_name,
         |  CAST(sum(CAST(l.l_extendedprice * (1.0 - l.l_discount)
         |    AS DECIMAL(18,4))) AS DOUBLE) AS revenue
@@ -5957,8 +4966,27 @@ object SparkEntry {
         |  AND r.r_name = 'ASIA'
         |  AND o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
         |  AND o.o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-        |GROUP BY n.n_name ORDER BY revenue DESC, n_name""".stripMargin,
-    "q61_tpch_q9_profit" ->
+        |GROUP BY n.n_name ORDER BY revenue DESC, n_name""".stripMargin)((s, dir) => {
+      t(s, dir, "customer"); t(s, dir, "orders"); t(s, dir, "lineitem")
+      t(s, dir, "supplier"); t(s, dir, "nation"); t(s, dir, "region")
+      s.sql(
+        """SELECT n.n_name,
+          |  CAST(sum(CAST(l.l_extendedprice * (1.0 - l.l_discount)
+          |    AS DECIMAL(18,4))) AS DOUBLE) AS revenue
+          |FROM customer c, orders o, lineitem l, supplier s, nation n, region r
+          |WHERE c.c_custkey = o.o_custkey AND l.l_orderkey = o.o_orderkey
+          |  AND l.l_suppkey = s.s_suppkey AND c.c_nationkey = s.s_nationkey
+          |  AND s.s_nationkey = n.n_nationkey AND n.n_regionkey = r.r_regionkey
+          |  AND r.r_name = 'ASIA'
+          |  AND o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
+          |  AND o.o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
+          |GROUP BY n.n_name ORDER BY revenue DESC, n_name""".stripMargin)
+    }),
+
+    // TPC-H Q9 shape: product-type profit by nation and year — LIKE-
+    // filtered part dim joined into the fact, year() bucketing on the
+    // order date (no partsupp table in this schema; profit = revenue)
+    Query("q61_tpch_q9_profit",
       """SELECT n.n_name AS nation, CAST(year(o.o_orderdate) AS INT) AS o_year,
         |  CAST(sum(CAST(l.l_extendedprice * (1.0 - l.l_discount)
         |    AS DECIMAL(18,4))) AS DOUBLE) AS profit
@@ -5967,8 +4995,24 @@ object SparkEntry {
         |  AND o.o_orderkey = l.l_orderkey AND s.s_nationkey = n.n_nationkey
         |  AND p.p_name LIKE '%red%'
         |GROUP BY n.n_name, year(o.o_orderdate)
-        |ORDER BY nation, o_year DESC""".stripMargin,
-    "q62_tpch_q10_returns" ->
+        |ORDER BY nation, o_year DESC""".stripMargin)((s, dir) => {
+      t(s, dir, "part"); t(s, dir, "supplier"); t(s, dir, "lineitem")
+      t(s, dir, "orders"); t(s, dir, "nation")
+      s.sql(
+        """SELECT n.n_name AS nation, CAST(year(o.o_orderdate) AS INT) AS o_year,
+          |  CAST(sum(CAST(l.l_extendedprice * (1.0 - l.l_discount)
+          |    AS DECIMAL(18,4))) AS DOUBLE) AS profit
+          |FROM part p, supplier s, lineitem l, orders o, nation n
+          |WHERE s.s_suppkey = l.l_suppkey AND p.p_partkey = l.l_partkey
+          |  AND o.o_orderkey = l.l_orderkey AND s.s_nationkey = n.n_nationkey
+          |  AND p.p_name LIKE '%red%'
+          |GROUP BY n.n_name, year(o.o_orderdate)
+          |ORDER BY nation, o_year DESC""".stripMargin)
+    }),
+
+    // TPC-H Q10 shape: returned-item ranking — returnflag-filtered fact,
+    // date band on orders, top-20 customers by lost revenue
+    Query("q62_tpch_q10_returns",
       """SELECT c.c_custkey, c.c_name,
         |  CAST(sum(CAST(l.l_extendedprice * (1.0 - l.l_discount)
         |    AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
@@ -5979,8 +5023,27 @@ object SparkEntry {
         |  AND o.o_orderdate < TIMESTAMP '1996-07-01 00:00:00'
         |  AND l.l_returnflag = 'R' AND c.c_nationkey = n.n_nationkey
         |GROUP BY c.c_custkey, c.c_name, c.c_acctbal, n.n_name
-        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin,
-    "q63_tpch_q12_priority" ->
+        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin)((s, dir) => {
+      t(s, dir, "customer"); t(s, dir, "orders"); t(s, dir, "lineitem")
+      t(s, dir, "nation")
+      s.sql(
+        """SELECT c.c_custkey, c.c_name,
+          |  CAST(sum(CAST(l.l_extendedprice * (1.0 - l.l_discount)
+          |    AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
+          |  c.c_acctbal, n.n_name
+          |FROM customer c, orders o, lineitem l, nation n
+          |WHERE c.c_custkey = o.o_custkey AND l.l_orderkey = o.o_orderkey
+          |  AND o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
+          |  AND o.o_orderdate < TIMESTAMP '1996-07-01 00:00:00'
+          |  AND l.l_returnflag = 'R' AND c.c_nationkey = n.n_nationkey
+          |GROUP BY c.c_custkey, c.c_name, c.c_acctbal, n.n_name
+          |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin)
+    }),
+
+    // TPC-H Q12 shape: priority class counts via conditional SUMs over an
+    // order/lineitem join with a ship-date band (o_orderpriority classes
+    // stand in for l_shipmode, which this schema doesn't carry)
+    Query("q63_tpch_q12_priority",
       """SELECT l.l_linestatus,
         |  CAST(sum(CASE WHEN o.o_orderpriority = '1-URGENT'
         |        OR o.o_orderpriority = '2-HIGH'
@@ -5992,8 +5055,28 @@ object SparkEntry {
         |WHERE o.o_orderkey = l.l_orderkey
         |  AND l.l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
         |  AND l.l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
-        |GROUP BY l.l_linestatus ORDER BY l_linestatus""".stripMargin,
-    "q64_tpch_q7_volume" ->
+        |GROUP BY l.l_linestatus ORDER BY l_linestatus""".stripMargin)((s, dir) => {
+      t(s, dir, "orders"); t(s, dir, "lineitem")
+      s.sql(
+        """SELECT l.l_linestatus,
+          |  sum(CASE WHEN o.o_orderpriority = '1-URGENT'
+          |        OR o.o_orderpriority = '2-HIGH'
+          |      THEN 1 ELSE 0 END) AS high_line_count,
+          |  sum(CASE WHEN o.o_orderpriority <> '1-URGENT'
+          |        AND o.o_orderpriority <> '2-HIGH'
+          |      THEN 1 ELSE 0 END) AS low_line_count
+          |FROM orders o, lineitem l
+          |WHERE o.o_orderkey = l.l_orderkey
+          |  AND l.l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
+          |  AND l.l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
+          |GROUP BY l.l_linestatus ORDER BY l_linestatus""".stripMargin)
+    }),
+
+    // TPC-H Q7 shape: volume shipping between two nations, both
+    // directions — the nation dim joins TWICE (supplier side and customer
+    // side) under an OR-of-nation-pairs predicate; the consumer's
+    // fresh-name scheme must keep the two nation scans distinct
+    Query("q64_tpch_q7_volume",
       """SELECT supp_nation, cust_nation, l_year,
         |  CAST(sum(volume_dec) AS DOUBLE) AS revenue
         |FROM (SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
@@ -6011,8 +5094,34 @@ object SparkEntry {
         |        AND l.l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
         |        AND l.l_shipdate < TIMESTAMP '1998-01-01 00:00:00') shipping
         |GROUP BY supp_nation, cust_nation, l_year
-        |ORDER BY supp_nation, cust_nation, l_year""".stripMargin,
-    "q65_tpch_q8_mktshare" ->
+        |ORDER BY supp_nation, cust_nation, l_year""".stripMargin)((s, dir) => {
+      t(s, dir, "supplier"); t(s, dir, "lineitem"); t(s, dir, "orders")
+      t(s, dir, "customer"); t(s, dir, "nation")
+      s.sql(
+        """SELECT supp_nation, cust_nation, l_year,
+          |  CAST(sum(volume_dec) AS DOUBLE) AS revenue
+          |FROM (SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
+          |        CAST(year(l.l_shipdate) AS INT) AS l_year,
+          |        CAST(l.l_extendedprice * (1.0 - l.l_discount)
+          |          AS DECIMAL(18,4)) AS volume_dec
+          |      FROM supplier s, lineitem l, orders o, customer c,
+          |        nation n1, nation n2
+          |      WHERE s.s_suppkey = l.l_suppkey AND o.o_orderkey = l.l_orderkey
+          |        AND c.c_custkey = o.o_custkey
+          |        AND s.s_nationkey = n1.n_nationkey
+          |        AND c.c_nationkey = n2.n_nationkey
+          |        AND ((n1.n_name = 'NATION_7' AND n2.n_name = 'NATION_17')
+          |          OR (n1.n_name = 'NATION_17' AND n2.n_name = 'NATION_7'))
+          |        AND l.l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
+          |        AND l.l_shipdate < TIMESTAMP '1998-01-01 00:00:00') shipping
+          |GROUP BY supp_nation, cust_nation, l_year
+          |ORDER BY supp_nation, cust_nation, l_year""".stripMargin)
+    }),
+
+    // TPC-H Q8 shape: national market share — eight-table join (nation
+    // twice: customer-region gate and supplier-nation tag) feeding a
+    // conditional-share ratio per year; all dims must broadcast
+    Query("q65_tpch_q8_mktshare",
       """SELECT o_year,
         |  CAST(CAST(sum(CASE WHEN nation = 'NATION_7' THEN volume
         |      ELSE CAST(0.0 AS DECIMAL(18,4)) END) AS DOUBLE)
@@ -6029,8 +5138,36 @@ object SparkEntry {
         |        AND n1.n_regionkey = r.r_regionkey
         |        AND r.r_name = 'ASIA' AND s.s_nationkey = n2.n_nationkey
         |        AND p.p_type = 'PROMO') all_nations
-        |GROUP BY o_year ORDER BY o_year""".stripMargin,
-    "q66_tpch_q4_late" ->
+        |GROUP BY o_year ORDER BY o_year""".stripMargin)((s, dir) => {
+      t(s, dir, "part"); t(s, dir, "supplier"); t(s, dir, "lineitem")
+      t(s, dir, "orders"); t(s, dir, "customer"); t(s, dir, "nation")
+      t(s, dir, "region")
+      s.sql(
+        """SELECT o_year,
+          |  CAST(CAST(sum(CASE WHEN nation = 'NATION_7' THEN volume
+          |      ELSE CAST(0.0 AS DECIMAL(18,4)) END) AS DOUBLE)
+          |    / CAST(sum(volume) AS DOUBLE) AS DOUBLE) AS mkt_share
+          |FROM (SELECT CAST(year(o.o_orderdate) AS INT) AS o_year,
+          |        CAST(l.l_extendedprice * (1.0 - l.l_discount)
+          |          AS DECIMAL(18,4)) AS volume,
+          |        n2.n_name AS nation
+          |      FROM part p, supplier s, lineitem l, orders o, customer c,
+          |        nation n1, nation n2, region r
+          |      WHERE p.p_partkey = l.l_partkey AND s.s_suppkey = l.l_suppkey
+          |        AND l.l_orderkey = o.o_orderkey AND o.o_custkey = c.c_custkey
+          |        AND c.c_nationkey = n1.n_nationkey
+          |        AND n1.n_regionkey = r.r_regionkey
+          |        AND r.r_name = 'ASIA' AND s.s_nationkey = n2.n_nationkey
+          |        AND p.p_type = 'PROMO') all_nations
+          |GROUP BY o_year ORDER BY o_year""".stripMargin)
+    }),
+
+    // TPC-H Q4 shape: order-priority checking — quarter-banded orders with
+    // an EXISTS semi-join against late lineitems (this schema has no
+    // l_commitdate/l_receiptdate, so "late" = shipped >60 days after the
+    // order date; timestamp + INTERVAL arithmetic rides the wire inside
+    // the decorrelated semi-join condition)
+    Query("q66_tpch_q4_late",
       """SELECT o.o_orderpriority, CAST(count(*) AS BIGINT) AS order_count
         |FROM orders o
         |WHERE o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
@@ -6038,8 +5175,24 @@ object SparkEntry {
         |  AND EXISTS (SELECT 1 FROM lineitem l
         |              WHERE l.l_orderkey = o.o_orderkey
         |                AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY)
-        |GROUP BY o.o_orderpriority ORDER BY o.o_orderpriority""".stripMargin,
-    "q67_tpch_q6_forecast" ->
+        |GROUP BY o.o_orderpriority ORDER BY o.o_orderpriority""".stripMargin)((s, dir) => {
+      t(s, dir, "orders"); t(s, dir, "lineitem")
+      s.sql(
+        """SELECT o.o_orderpriority, count(*) AS order_count
+          |FROM orders o
+          |WHERE o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
+          |  AND o.o_orderdate < TIMESTAMP '1996-04-01 00:00:00'
+          |  AND EXISTS (SELECT 1 FROM lineitem l
+          |              WHERE l.l_orderkey = o.o_orderkey
+          |                AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY)
+          |GROUP BY o.o_orderpriority ORDER BY o.o_orderpriority""".stripMargin)
+    }),
+
+    // TPC-H Q6 shape: forecasting revenue change — pure scan-filter-agg,
+    // every predicate must reach the parquet scan as PushedFilters; the
+    // discount band compares exact integers (round(d*100)) so the double
+    // column never meets a decimal literal at a representability edge
+    Query("q67_tpch_q6_forecast",
       """SELECT CAST(sum(CAST(l_extendedprice * l_discount
         |    AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
         |  CAST(count(*) AS BIGINT) AS n_lines
@@ -6047,8 +5200,25 @@ object SparkEntry {
         |WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
         |  AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
         |  AND CAST(round(l_discount * 100) AS INT) BETWEEN 5 AND 7
-        |  AND l_quantity < 24""".stripMargin,
-    "q68_tpch_q17_smallqty" ->
+        |  AND l_quantity < 24""".stripMargin)((s, dir) => {
+      t(s, dir, "lineitem")
+      s.sql(
+        """SELECT CAST(sum(CAST(l_extendedprice * l_discount
+          |    AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
+          |  count(*) AS n_lines
+          |FROM lineitem
+          |WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
+          |  AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
+          |  AND CAST(round(l_discount * 100) AS INT) BETWEEN 5 AND 7
+          |  AND l_quantity < 24""".stripMargin)
+    }),
+
+    // TPC-H Q17 shape: small-quantity-order revenue — correlated scalar
+    // AVG subquery per part (decorrelates to an aggregate + join); the
+    // threshold 0.2*avg is deterministic cross-engine because quantities
+    // are integral doubles (exact sums within 2^53, correctly-rounded
+    // divide), and the revenue sum crosses engines as exact DECIMAL
+    Query("q68_tpch_q17_smallqty",
       """SELECT CAST(CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,4)))
         |    AS DOUBLE) / 7.0 AS DOUBLE) AS avg_yearly,
         |  CAST(count(*) AS BIGINT) AS n_lines
@@ -6056,19 +5226,27 @@ object SparkEntry {
         |WHERE p.p_partkey = l.l_partkey AND p.p_type = 'MEDIUM'
         |  AND l.l_quantity < (SELECT 0.2 * avg(l2.l_quantity)
         |                      FROM lineitem l2
-        |                      WHERE l2.l_partkey = p.p_partkey)""".stripMargin,
-    "q32_in_subquery" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-        |WHERE o_custkey IN (SELECT c_custkey FROM customer
-        |                    WHERE c_mktsegment = 'BUILDING')
-        |ORDER BY o_orderkey""".stripMargin,
-    "q30_grouping_id" ->
-      """SELECT o_orderstatus, o_orderpriority, count(*) AS n,
-        |  GROUPING_ID(o_orderstatus, o_orderpriority) AS gid
-        |FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
-        |ORDER BY gid, o_orderstatus NULLS FIRST,
-        |  o_orderpriority NULLS FIRST""".stripMargin,
-    "q70_ds_category_share" ->
+        |                      WHERE l2.l_partkey = p.p_partkey)""".stripMargin)((s, dir) => {
+      t(s, dir, "lineitem"); t(s, dir, "part")
+      s.sql(
+        """SELECT CAST(CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,4)))
+          |    AS DOUBLE) / 7.0 AS DOUBLE) AS avg_yearly,
+          |  count(*) AS n_lines
+          |FROM lineitem l, part p
+          |WHERE p.p_partkey = l.l_partkey AND p.p_type = 'MEDIUM'
+          |  AND l.l_quantity < (SELECT 0.2 * avg(l2.l_quantity)
+          |                      FROM lineitem l2
+          |                      WHERE l2.l_partkey = p.p_partkey)""".stripMargin)
+    }),
+
+    // TPC-DS q36/q67 shape (round-11 verdict task 8): CTE aggregate, then
+    // TWO window functions over different frames of the same partition —
+    // revenue share within manufacturer and rank of brand within
+    // manufacturer — with a rank predicate on top. One shuffle for the CTE
+    // aggregate, ONE window sort per partition key (both windows share the
+    // PARTITION BY p_type exchange); share arithmetic stays exact (decimal
+    // window sum, one double division at the end)
+    Query("q70_ds_category_share",
       """WITH rev AS (
         |  SELECT p_type, p_brand,
         |    sum(CAST(l_extendedprice * (1.0 - l_discount)
@@ -6085,8 +5263,33 @@ object SparkEntry {
         |                 ORDER BY rev0 DESC, p_brand) AS rnk
         |  FROM rev) r
         |WHERE rnk <= 3
-        |ORDER BY p_type, rnk, p_brand""".stripMargin,
-    "q71_ds_rollup_window" ->
+        |ORDER BY p_type, rnk, p_brand""".stripMargin)((s, dir) => {
+      t(s, dir, "lineitem"); t(s, dir, "part")
+      s.sql(
+        """WITH rev AS (
+          |  SELECT p_type, p_brand,
+          |    sum(CAST(l_extendedprice * (1.0 - l_discount)
+          |        AS DECIMAL(18,4))) AS rev0
+          |  FROM lineitem JOIN part ON l_partkey = p_partkey
+          |  GROUP BY p_type, p_brand)
+          |SELECT p_type, p_brand, brand_rev, type_share, rnk FROM (
+          |  SELECT p_type, p_brand,
+          |    CAST(rev0 AS DOUBLE) AS brand_rev,
+          |    CAST(CAST(rev0 AS DOUBLE) /
+          |      CAST(sum(rev0) OVER (PARTITION BY p_type) AS DOUBLE)
+          |      AS DOUBLE) AS type_share,
+          |    rank() OVER (PARTITION BY p_type
+          |                 ORDER BY rev0 DESC, p_brand) AS rnk
+          |  FROM rev) r
+          |WHERE rnk <= 3
+          |ORDER BY p_type, rnk, p_brand""".stripMargin)
+    }),
+
+    // TPC-DS q36 shape: ROLLUP gross-total hierarchy + rank within parent —
+    // the window PARTITION BY is an expression over grouping() outputs
+    // (detail rows rank within their status; subtotal rows rank against
+    // each other). One Expand-fed aggregate, one window sort
+    Query("q71_ds_rollup_window",
       """SELECT status, prio, total, lochierarchy,
         |  rank() OVER (
         |    PARTITION BY lochierarchy,
@@ -6100,41 +5303,30 @@ object SparkEntry {
         |      AS BIGINT) AS lochierarchy
         |  FROM orders
         |  GROUP BY ROLLUP(o_orderstatus, o_orderpriority)) x
-        |ORDER BY lochierarchy DESC, status, rank_within_parent""".stripMargin,
-    "q73_ds_cte_yoy" ->
-      """WITH yearly AS (
-        |  SELECT o_custkey,
-        |    CAST(substring(CAST(o_orderdate AS STRING), 1, 4) AS INT)
-        |      AS yr,
-        |    sum(CAST(o_totalprice AS DECIMAL(18,2))) AS tot0
-        |  FROM orders GROUP BY 1, 2)
-        |SELECT a.o_custkey, a.yr AS yr_prev,
-        |  CAST(a.tot0 AS DOUBLE) AS spend_prev,
-        |  CAST(b.tot0 AS DOUBLE) AS spend_next,
-        |  CAST(CAST(b.tot0 AS DOUBLE) / CAST(a.tot0 AS DOUBLE) AS DOUBLE)
-        |    AS growth
-        |FROM yearly a JOIN yearly b
-        |  ON a.o_custkey = b.o_custkey AND b.yr = a.yr + 1
-        |WHERE b.tot0 > a.tot0 * 2
-        |ORDER BY a.o_custkey, yr_prev""".stripMargin,
-    // q74: UNPIVOT replayed as the UNION ALL stack it desugars to; exact
-    // decimal sums cast to double per the q04 convention
-    "q74_unpivot" ->
-      """WITH u AS (
-        |  SELECT l_orderkey, 'l_quantity' AS measure, l_quantity AS value
-        |    FROM lineitem
-        |  UNION ALL
-        |  SELECT l_orderkey, 'l_extendedprice', l_extendedprice FROM lineitem
-        |  UNION ALL
-        |  SELECT l_orderkey, 'l_discount', l_discount FROM lineitem
-        |  UNION ALL
-        |  SELECT l_orderkey, 'l_tax', l_tax FROM lineitem)
-        |SELECT measure,
-        |  CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total,
-        |  count(*) AS n,
-        |  count(DISTINCT l_orderkey) AS n_orders
-        |FROM u GROUP BY measure ORDER BY measure""".stripMargin,
-    "q72_ds_union_window" ->
+        |ORDER BY lochierarchy DESC, status, rank_within_parent""".stripMargin)((s, dir) => {
+      t(s, dir, "orders")
+      s.sql(
+        """SELECT status, prio, total, lochierarchy,
+          |  rank() OVER (
+          |    PARTITION BY lochierarchy,
+          |      CASE WHEN lochierarchy = 0 THEN status END
+          |    ORDER BY total DESC, coalesce(prio, '')) AS rank_within_parent
+          |FROM (
+          |  SELECT o_orderstatus AS status, o_orderpriority AS prio,
+          |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+          |      AS total,
+          |    CAST(grouping(o_orderstatus) + grouping(o_orderpriority)
+          |      AS BIGINT) AS lochierarchy
+          |  FROM orders
+          |  GROUP BY ROLLUP(o_orderstatus, o_orderpriority)) x
+          |ORDER BY lochierarchy DESC, status, rank_within_parent""".stripMargin)
+    }),
+
+    // TPC-DS q2 shape: UNION ALL of two per-channel aggregates, then
+    // offset + sliding-frame windows over the union — month-over-month and
+    // trailing-3-month spend per channel. The frame sum stays decimal
+    // (exact) until the final cast
+    Query("q72_ds_union_window",
       """WITH sales AS (
         |  SELECT substring(CAST(o_orderdate AS STRING), 1, 7) AS ym,
         |    'hi' AS channel,
@@ -6154,8 +5346,121 @@ object SparkEntry {
         |      ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
         |    AS DOUBLE) AS amt_3m
         |FROM sales
-        |ORDER BY channel, ym""".stripMargin,
-    "q75_ds_gsets_share" ->
+        |ORDER BY channel, ym""".stripMargin)((s, dir) => {
+      t(s, dir, "orders")
+      s.sql(
+        """WITH sales AS (
+          |  SELECT substring(CAST(o_orderdate AS STRING), 1, 7) AS ym,
+          |    'hi' AS channel,
+          |    sum(CAST(o_totalprice AS DECIMAL(18,2))) AS amt0
+          |  FROM orders WHERE o_orderpriority IN ('1-URGENT', '2-HIGH')
+          |  GROUP BY 1
+          |  UNION ALL
+          |  SELECT substring(CAST(o_orderdate AS STRING), 1, 7) AS ym,
+          |    'lo' AS channel,
+          |    sum(CAST(o_totalprice AS DECIMAL(18,2))) AS amt0
+          |  FROM orders WHERE o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
+          |  GROUP BY 1)
+          |SELECT ym, channel, CAST(amt0 AS DOUBLE) AS amt,
+          |  CAST(lag(amt0) OVER (PARTITION BY channel ORDER BY ym)
+          |    AS DOUBLE) AS prev_amt,
+          |  CAST(sum(amt0) OVER (PARTITION BY channel ORDER BY ym
+          |      ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
+          |    AS DOUBLE) AS amt_3m
+          |FROM sales
+          |ORDER BY channel, ym""".stripMargin)
+    }),
+
+    // TPC-DS q4 shape: MULTI-REFERENCE CTE self-joined across adjacent
+    // years — year-over-year growth with a cross-reference predicate.
+    // Substrait 0.3 has no common-subplan sharing, so each CTE reference
+    // re-produces the definition's subtree on the wire; the consumer's
+    // rebuilt self-join must keep the two references distinct (the E1/E2
+    // fresh-name scheme) while ReuseExchange de-duplicates the physical
+    // aggregate underneath
+    Query("q73_ds_cte_yoy",
+      """WITH yearly AS (
+        |  SELECT o_custkey,
+        |    CAST(substring(CAST(o_orderdate AS STRING), 1, 4) AS INT)
+        |      AS yr,
+        |    sum(CAST(o_totalprice AS DECIMAL(18,2))) AS tot0
+        |  FROM orders GROUP BY 1, 2)
+        |SELECT a.o_custkey, a.yr AS yr_prev,
+        |  CAST(a.tot0 AS DOUBLE) AS spend_prev,
+        |  CAST(b.tot0 AS DOUBLE) AS spend_next,
+        |  CAST(CAST(b.tot0 AS DOUBLE) / CAST(a.tot0 AS DOUBLE) AS DOUBLE)
+        |    AS growth
+        |FROM yearly a JOIN yearly b
+        |  ON a.o_custkey = b.o_custkey AND b.yr = a.yr + 1
+        |WHERE b.tot0 > a.tot0 * 2
+        |ORDER BY a.o_custkey, yr_prev""".stripMargin)((s, dir) => {
+      t(s, dir, "orders")
+      s.sql(
+        """WITH yearly AS (
+          |  SELECT o_custkey,
+          |    CAST(substring(CAST(o_orderdate AS STRING), 1, 4) AS INT)
+          |      AS yr,
+          |    sum(CAST(o_totalprice AS DECIMAL(18,2))) AS tot0
+          |  FROM orders GROUP BY 1, 2)
+          |SELECT a.o_custkey, a.yr AS yr_prev,
+          |  CAST(a.tot0 AS DOUBLE) AS spend_prev,
+          |  CAST(b.tot0 AS DOUBLE) AS spend_next,
+          |  CAST(CAST(b.tot0 AS DOUBLE) / CAST(a.tot0 AS DOUBLE) AS DOUBLE)
+          |    AS growth
+          |FROM yearly a JOIN yearly b
+          |  ON a.o_custkey = b.o_custkey AND b.yr = a.yr + 1
+          |WHERE b.tot0 > a.tot0 * 2
+          |ORDER BY a.o_custkey, yr_prev""".stripMargin)
+    }),
+
+    // UNPIVOT / melt (round 12): the DataFrame unpivot API resolves to a
+    // standalone Catalyst Expand, which the producer encodes as a SetRel
+    // UnionAll of one ProjectRel per measure branch (substrait 0.3 has no
+    // expand relation) — this is the first driver query to exercise that
+    // path. Exact decimal sums per the q04 convention; the consumed plan's
+    // per-branch scans prune to each branch's two columns.
+    // q74: UNPIVOT replayed as the UNION ALL stack it desugars to; exact
+    // decimal sums cast to double per the q04 convention
+    Query("q74_unpivot",
+      """WITH u AS (
+        |  SELECT l_orderkey, 'l_quantity' AS measure, l_quantity AS value
+        |    FROM lineitem
+        |  UNION ALL
+        |  SELECT l_orderkey, 'l_extendedprice', l_extendedprice FROM lineitem
+        |  UNION ALL
+        |  SELECT l_orderkey, 'l_discount', l_discount FROM lineitem
+        |  UNION ALL
+        |  SELECT l_orderkey, 'l_tax', l_tax FROM lineitem)
+        |SELECT measure,
+        |  CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total,
+        |  count(*) AS n,
+        |  count(DISTINCT l_orderkey) AS n_orders
+        |FROM u GROUP BY measure ORDER BY measure""".stripMargin)((s, dir) => {
+      import org.apache.spark.sql.types.DecimalType
+      t(s, dir, "lineitem")
+        .select("l_orderkey", "l_quantity", "l_extendedprice", "l_discount",
+          "l_tax")
+        .unpivot(
+          Array(col("l_orderkey")),
+          Array(col("l_quantity"), col("l_extendedprice"), col("l_discount"),
+            col("l_tax")),
+          "measure", "value")
+        .groupBy("measure")
+        .agg(
+          sum(col("value").cast(DecimalType(18, 4))).cast("double")
+            .as("total"),
+          count(lit(1)).as("n"),
+          countDistinct(col("l_orderkey")).as("n_orders"))
+        .orderBy("measure")
+    }),
+
+    // TPC-DS q27/q36 composite shape (round 14): windowed SHARE-OF-TOTAL
+    // over GROUPING SETS — the share window partitions by the grouping
+    // LEVEL (an expression over grouping() outputs), so detail rows share
+    // against the detail total and each subtotal stratum against its own.
+    // One Expand-fed aggregate + one window sort; the Expand rides the
+    // wire as the SetRel union-of-projects encoding
+    Query("q75_ds_gsets_share",
       """SELECT mkt, prio, spend, lvl,
         |  CAST(spend / CAST(sum(spend0) OVER (PARTITION BY lvl)
         |    AS DOUBLE) AS DOUBLE) AS share_within_level,
@@ -6172,8 +5477,35 @@ object SparkEntry {
         |  FROM orders JOIN customer ON o_custkey = c_custkey
         |  GROUP BY GROUPING SETS ((c_mktsegment, o_orderpriority),
         |    (c_mktsegment), ())) x
-        |ORDER BY lvl, rnk, mkt, prio""".stripMargin,
-    "q76_ds_cte_chain" ->
+        |ORDER BY lvl, rnk, mkt, prio""".stripMargin)((s, dir) => {
+      t(s, dir, "orders"); t(s, dir, "customer")
+      s.sql(
+        """SELECT mkt, prio, spend, lvl,
+          |  CAST(spend / CAST(sum(spend0) OVER (PARTITION BY lvl)
+          |    AS DOUBLE) AS DOUBLE) AS share_within_level,
+          |  rank() OVER (PARTITION BY lvl
+          |    ORDER BY spend0 DESC, coalesce(mkt, ''), coalesce(prio, ''))
+          |    AS rnk
+          |FROM (
+          |  SELECT c_mktsegment AS mkt, o_orderpriority AS prio,
+          |    sum(CAST(o_totalprice AS DECIMAL(18,2))) AS spend0,
+          |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+          |      AS spend,
+          |    CAST(grouping(c_mktsegment) * 2 + grouping(o_orderpriority)
+          |      AS BIGINT) AS lvl
+          |  FROM orders JOIN customer ON o_custkey = c_custkey
+          |  GROUP BY GROUPING SETS ((c_mktsegment, o_orderpriority),
+          |    (c_mktsegment), ())) x
+          |ORDER BY lvl, rnk, mkt, prio""".stripMargin)
+    }),
+
+    // TPC-DS q4/q11 shape extended (round 14): a multi-reference CTE
+    // self-joined in a CHAIN across three adjacent years (a→a+1→a+2) with
+    // a cross-reference growth predicate. Substrait 0.3 has no common-
+    // subplan sharing, so the yearly aggregate re-produces THREE times on
+    // the wire and the consumer must keep all three references distinct
+    // while ReuseExchange de-duplicates the physical aggregate
+    Query("q76_ds_cte_chain",
       """WITH yearly AS (
         |  SELECT o_custkey,
         |    CAST(substring(CAST(o_orderdate AS STRING), 1, 4) AS INT)
@@ -6190,8 +5522,33 @@ object SparkEntry {
         |JOIN yearly c ON a.o_custkey = c.o_custkey AND c.yr = a.yr + 2
         |WHERE CAST(c.tot0 AS DOUBLE) / CAST(b.tot0 AS DOUBLE) >
         |      CAST(b.tot0 AS DOUBLE) / CAST(a.tot0 AS DOUBLE)
-        |ORDER BY a.o_custkey, yr_base""".stripMargin,
-    "q77_ds_exists_window" ->
+        |ORDER BY a.o_custkey, yr_base""".stripMargin)((s, dir) => {
+      t(s, dir, "orders")
+      s.sql(
+        """WITH yearly AS (
+          |  SELECT o_custkey,
+          |    CAST(substring(CAST(o_orderdate AS STRING), 1, 4) AS INT)
+          |      AS yr,
+          |    sum(CAST(o_totalprice AS DECIMAL(18,2))) AS tot0
+          |  FROM orders GROUP BY 1, 2)
+          |SELECT a.o_custkey, a.yr AS yr_base,
+          |  CAST(ROUND(CAST(b.tot0 AS DOUBLE) / CAST(a.tot0 AS DOUBLE), 6)
+          |    AS DOUBLE) AS growth_1,
+          |  CAST(ROUND(CAST(c.tot0 AS DOUBLE) / CAST(b.tot0 AS DOUBLE), 6)
+          |    AS DOUBLE) AS growth_2
+          |FROM yearly a
+          |JOIN yearly b ON a.o_custkey = b.o_custkey AND b.yr = a.yr + 1
+          |JOIN yearly c ON a.o_custkey = c.o_custkey AND c.yr = a.yr + 2
+          |WHERE CAST(c.tot0 AS DOUBLE) / CAST(b.tot0 AS DOUBLE) >
+          |      CAST(b.tot0 AS DOUBLE) / CAST(a.tot0 AS DOUBLE)
+          |ORDER BY a.o_custkey, yr_base""".stripMargin)
+    }),
+
+    // TPC-DS q10/q35 composite shape (round 14): correlated EXISTS
+    // (returns-channel membership) feeding a ranking WINDOW — the
+    // decorrelated semi-join must land BELOW the aggregate and the rank
+    // above it, a produce/consume layering no TPC-H query exercises
+    Query("q77_ds_exists_window",
       """SELECT c_custkey, c_mktsegment, spend, seg_rank FROM (
         |  SELECT c_custkey, c_mktsegment,
         |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
@@ -6204,8 +5561,30 @@ object SparkEntry {
         |    WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
         |  GROUP BY c_custkey, c_mktsegment) ranked
         |WHERE seg_rank <= 5
-        |ORDER BY c_mktsegment, seg_rank, c_custkey""".stripMargin,
-    "q78_ds_multifact_union" ->
+        |ORDER BY c_mktsegment, seg_rank, c_custkey""".stripMargin)((s, dir) => {
+      t(s, dir, "customer"); t(s, dir, "orders"); t(s, dir, "lineitem")
+      s.sql(
+        """SELECT c_custkey, c_mktsegment, spend, seg_rank FROM (
+          |  SELECT c_custkey, c_mktsegment,
+          |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+          |      AS spend,
+          |    rank() OVER (PARTITION BY c_mktsegment
+          |      ORDER BY sum(CAST(o_totalprice AS DECIMAL(18,2))) DESC,
+          |        c_custkey) AS seg_rank
+          |  FROM customer JOIN orders ON c_custkey = o_custkey
+          |  WHERE EXISTS (SELECT 1 FROM lineitem
+          |    WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
+          |  GROUP BY c_custkey, c_mktsegment) ranked
+          |WHERE seg_rank <= 5
+          |ORDER BY c_mktsegment, seg_rank, c_custkey""".stripMargin)
+    }),
+
+    // TPC-DS q75/q80 catalog-returns shape (round 14): TWO fact tables
+    // (orders = header channel, lineitem = line channel) unioned into one
+    // per-channel fact stream against the same dimension chain, then
+    // pivoted back out per nation — the multi-fact union-aggregate that
+    // hides produce/consume bugs single-fact TPC-H never hits
+    Query("q78_ds_multifact_union",
       """WITH facts AS (
         |  SELECT n_name AS nation, 'order' AS channel,
         |    CAST(o_totalprice AS DECIMAL(18,4)) AS amt0
@@ -6228,8 +5607,71 @@ object SparkEntry {
         |  count(CASE WHEN channel = 'order' THEN 1 END) AS n_orders,
         |  count(CASE WHEN channel = 'line' THEN 1 END) AS n_lines
         |FROM facts GROUP BY nation
-        |ORDER BY nation""".stripMargin,
-    "q80_ds_moving_dev" ->
+        |ORDER BY nation""".stripMargin)((s, dir) => {
+      t(s, dir, "orders"); t(s, dir, "customer"); t(s, dir, "nation")
+      t(s, dir, "lineitem")
+      s.sql(
+        """WITH facts AS (
+          |  SELECT n_name AS nation, 'order' AS channel,
+          |    CAST(o_totalprice AS DECIMAL(18,4)) AS amt0
+          |  FROM orders
+          |  JOIN customer ON o_custkey = c_custkey
+          |  JOIN nation ON c_nationkey = n_nationkey
+          |  UNION ALL
+          |  SELECT n_name AS nation, 'line' AS channel,
+          |    CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))
+          |      AS amt0
+          |  FROM lineitem
+          |  JOIN orders ON l_orderkey = o_orderkey
+          |  JOIN customer ON o_custkey = c_custkey
+          |  JOIN nation ON c_nationkey = n_nationkey)
+          |SELECT nation,
+          |  CAST(sum(CASE WHEN channel = 'order' THEN amt0 END) AS DOUBLE)
+          |    AS order_amt,
+          |  CAST(sum(CASE WHEN channel = 'line' THEN amt0 END) AS DOUBLE)
+          |    AS line_amt,
+          |  count(CASE WHEN channel = 'order' THEN 1 END) AS n_orders,
+          |  count(CASE WHEN channel = 'line' THEN 1 END) AS n_lines
+          |FROM facts GROUP BY nation
+          |ORDER BY nation""".stripMargin)
+    }),
+
+    // TPC-DS q14 cross-channel shape (round 14): INTERSECT of two
+    // channels' key sets inside a CTE, joined back to the dimension and
+    // aggregated — set-op composition BELOW a join, not at the root as in
+    // q15/q41
+    Query("q79_ds_channel_intersect",
+      """WITH both_cust AS (
+        |  SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'
+        |  INTERSECT
+        |  SELECT o_custkey FROM orders WHERE o_orderpriority = '5-LOW')
+        |SELECT c_mktsegment, count(*) AS n_cross_channel,
+        |  CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE)
+        |    AS tot_balance
+        |FROM customer JOIN both_cust ON c_custkey = o_custkey
+        |GROUP BY c_mktsegment
+        |ORDER BY c_mktsegment""".stripMargin)((s, dir) => {
+      t(s, dir, "orders"); t(s, dir, "customer")
+      s.sql(
+        """WITH both_cust AS (
+          |  SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'
+          |  INTERSECT
+          |  SELECT o_custkey FROM orders WHERE o_orderpriority = '5-LOW')
+          |SELECT c_mktsegment, count(*) AS n_cross_channel,
+          |  CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE)
+          |    AS tot_balance
+          |FROM customer JOIN both_cust ON c_custkey = o_custkey
+          |GROUP BY c_mktsegment
+          |ORDER BY c_mktsegment""".stripMargin)
+    }),
+
+    // TPC-DS q47 shape (round 14, the 10th DS pattern): monthly deviation
+    // screen — TWO window partitionings over ONE aggregate (a year-scoped
+    // share frame AND an ordered lag/lead frame), then a filter on the
+    // windowed ratio. The year average is sum/count of EXACT decimals
+    // (never avg-of-doubles — partition-order-dependent last-ulp drift is
+    // the hash trap); two window sort groups must both survive the wire
+    Query("q80_ds_moving_dev",
       """WITH monthly AS (
         |  SELECT o_orderstatus AS status,
         |    substring(CAST(o_orderdate AS STRING), 1, 7) AS ym,
@@ -6251,8 +5693,39 @@ object SparkEntry {
         |    lead(amt0) OVER (PARTITION BY status ORDER BY ym) AS lead_amt
         |  FROM monthly) x
         |WHERE CAST(amt0 AS DOUBLE) > avg_year * 1.1
-        |ORDER BY status, ym""".stripMargin,
-    "q81_ds_except_window" ->
+        |ORDER BY status, ym""".stripMargin)((s, dir) => {
+      t(s, dir, "orders")
+      s.sql(
+        """WITH monthly AS (
+          |  SELECT o_orderstatus AS status,
+          |    substring(CAST(o_orderdate AS STRING), 1, 7) AS ym,
+          |    sum(CAST(o_totalprice AS DECIMAL(18,2))) AS amt0
+          |  FROM orders GROUP BY 1, 2)
+          |SELECT status, ym, CAST(amt0 AS DOUBLE) AS amt,
+          |  CAST(ROUND(avg_year, 6) AS DOUBLE) AS avg_year,
+          |  CAST(ROUND(CAST(amt0 AS DOUBLE) / avg_year, 6) AS DOUBLE)
+          |    AS dev,
+          |  CAST(lag_amt AS DOUBLE) AS prev_amt,
+          |  CAST(lead_amt AS DOUBLE) AS next_amt
+          |FROM (
+          |  SELECT status, ym, amt0,
+          |    CAST(sum(amt0) OVER (PARTITION BY status, substring(ym, 1, 4))
+          |      AS DOUBLE) /
+          |      count(amt0) OVER (PARTITION BY status, substring(ym, 1, 4))
+          |      AS avg_year,
+          |    lag(amt0) OVER (PARTITION BY status ORDER BY ym) AS lag_amt,
+          |    lead(amt0) OVER (PARTITION BY status ORDER BY ym) AS lead_amt
+          |  FROM monthly) x
+          |WHERE CAST(amt0 AS DOUBLE) > avg_year * 1.1
+          |ORDER BY status, ym""".stripMargin)
+    }),
+
+    // TPC-DS q8/q38 family shape (round 15, 11th DS pattern): EXCEPT
+    // under a WINDOWED CTE — a per-customer top-1 ranking (window inside
+    // the CTE) feeds set-difference against a channel predicate, and the
+    // surviving keys join back up into a dimension aggregate. The wire
+    // must carry window → set-op → join → agg stacked in one artifact
+    Query("q81_ds_except_window",
       """WITH ranked AS (
         |  SELECT o_custkey, CAST(o_totalprice AS DECIMAL(18,2)) AS price,
         |    row_number() OVER (PARTITION BY o_custkey
@@ -6269,8 +5742,34 @@ object SparkEntry {
         |  CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS tot_bal
         |FROM customer JOIN quiet ON c_custkey = o_custkey
         |GROUP BY c_mktsegment
-        |ORDER BY c_mktsegment""".stripMargin,
-    "q82_ds_percentile_gsets" ->
+        |ORDER BY c_mktsegment""".stripMargin)((s, dir) => {
+      t(s, dir, "orders"); t(s, dir, "customer")
+      s.sql(
+        """WITH ranked AS (
+          |  SELECT o_custkey, CAST(o_totalprice AS DECIMAL(18,2)) AS price,
+          |    row_number() OVER (PARTITION BY o_custkey
+          |      ORDER BY CAST(o_totalprice AS DECIMAL(18,2)) DESC,
+          |        o_orderkey) AS rn
+          |  FROM orders),
+          |top1 AS (SELECT o_custkey FROM ranked
+          |         WHERE rn = 1 AND price > 200000),
+          |urgent AS (SELECT o_custkey FROM orders
+          |           WHERE o_orderpriority = '1-URGENT'),
+          |quiet AS (SELECT o_custkey FROM top1
+          |          EXCEPT SELECT o_custkey FROM urgent)
+          |SELECT c_mktsegment, count(*) AS n_cust,
+          |  CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS tot_bal
+          |FROM customer JOIN quiet ON c_custkey = o_custkey
+          |GROUP BY c_mktsegment
+          |ORDER BY c_mktsegment""".stripMargin)
+    }),
+
+    // TPC-DS q49-style quantile screen (12th DS pattern): PERCENTILE
+    // WINDOWS OVER GROUPING SETS — percent_rank + ntile partitioned by
+    // the grouping id, ranking the grouping-set rollup rows themselves.
+    // Exact decimal sums under the windows; full deterministic ordering
+    // (amt + coalesced keys) so rank ties cannot drift between engines
+    Query("q82_ds_percentile_gsets",
       """WITH agg AS (
         |  SELECT o_orderstatus AS status, o_orderpriority AS prio,
         |    grouping(o_orderstatus) * 2 + grouping(o_orderpriority)
@@ -6290,8 +5789,37 @@ object SparkEntry {
         |    AS tercile
         |FROM agg
         |ORDER BY gid, amt, coalesce(status, '~'), coalesce(prio, '~')"""
-        .stripMargin,
-    "q83_ds_lateral_window" ->
+        .stripMargin)((s, dir) => {
+      t(s, dir, "orders")
+      s.sql(
+        """WITH agg AS (
+          |  SELECT o_orderstatus AS status, o_orderpriority AS prio,
+          |    grouping(o_orderstatus) * 2 + grouping(o_orderpriority)
+          |      AS gid,
+          |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+          |      AS amt,
+          |    count(*) AS n
+          |  FROM orders
+          |  GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority),
+          |    (o_orderstatus), (o_orderpriority), ()))
+          |SELECT status, prio, gid, amt, n,
+          |  CAST(ROUND(percent_rank() OVER (PARTITION BY gid
+          |    ORDER BY amt, coalesce(status, '~'), coalesce(prio, '~')), 6)
+          |    AS DOUBLE) AS pr,
+          |  ntile(3) OVER (PARTITION BY gid
+          |    ORDER BY amt, coalesce(status, '~'), coalesce(prio, '~'))
+          |    AS tercile
+          |FROM agg
+          |ORDER BY gid, amt, coalesce(status, '~'), coalesce(prio, '~')"""
+          .stripMargin)
+    }),
+
+    // TPC-DS q92-style per-entity screen (13th DS pattern): MULTI-LEVEL
+    // LATERAL + WINDOW — the second lateral derives from the first
+    // (per-customer order stats → guarded average), and a segment window
+    // ranks the lateral output; only each segment's top-5 spenders
+    // survive. Decorrelation must stack: two laterals then a rank filter
+    Query("q83_ds_lateral_window",
       """SELECT c_mktsegment, c_custkey, n_orders, spend, n_top,
         |  seg_rank
         |FROM (
@@ -6311,17 +5839,145 @@ object SparkEntry {
         |             AND o.o_orderpriority = l1.top_prio) l2
         |  ) x
         |WHERE seg_rank <= 5
-        |ORDER BY c_mktsegment, seg_rank""".stripMargin,
-    "q79_ds_channel_intersect" ->
-      """WITH both_cust AS (
-        |  SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'
-        |  INTERSECT
-        |  SELECT o_custkey FROM orders WHERE o_orderpriority = '5-LOW')
-        |SELECT c_mktsegment, count(*) AS n_cross_channel,
-        |  CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE)
-        |    AS tot_balance
-        |FROM customer JOIN both_cust ON c_custkey = o_custkey
-        |GROUP BY c_mktsegment
-        |ORDER BY c_mktsegment""".stripMargin,
+        |ORDER BY c_mktsegment, seg_rank""".stripMargin)((s, dir) => {
+      t(s, dir, "customer"); t(s, dir, "orders")
+      s.sql(
+        """SELECT c_mktsegment, c_custkey, n_orders, spend, n_top,
+          |  seg_rank
+          |FROM (
+          |  SELECT c.c_mktsegment, c.c_custkey, l1.n_orders,
+          |    CAST(coalesce(l1.raw_spend, 0) AS DOUBLE) AS spend,
+          |    l2.n_top,
+          |    row_number() OVER (PARTITION BY c.c_mktsegment
+          |      ORDER BY CAST(coalesce(l1.raw_spend, 0) AS DOUBLE) DESC,
+          |        c.c_custkey) AS seg_rank
+          |  FROM customer c,
+          |  LATERAL (SELECT count(*) AS n_orders,
+          |           sum(CAST(o_totalprice AS DECIMAL(18,2))) AS raw_spend,
+          |           max(o_orderpriority) AS top_prio
+          |           FROM orders o WHERE o.o_custkey = c.c_custkey) l1,
+          |  LATERAL (SELECT count(*) AS n_top
+          |           FROM orders o WHERE o.o_custkey = c.c_custkey
+          |             AND o.o_orderpriority = l1.top_prio) l2
+          |  ) x
+          |WHERE seg_rank <= 5
+          |ORDER BY c_mktsegment, seg_rank""".stripMargin)
+    }),
+
+    // uncorrelated scalar subquery → cross-joined single-row AggregateRel
+    Query("q33_scalar_subquery",
+      """SELECT o_orderkey, o_totalprice FROM orders
+        |WHERE o_totalprice >
+        |  (SELECT CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+        |     / count(*) FROM orders)
+        |ORDER BY o_orderkey""".stripMargin)((s, dir) => {
+      t(s, dir, "orders")
+      s.sql(
+        """SELECT o_orderkey, o_totalprice FROM orders
+          |WHERE o_totalprice >
+          |  (SELECT CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+          |     / count(*) FROM orders)
+          |ORDER BY o_orderkey""".stripMargin)
+    }),
+
+    Query("q30_grouping_id",
+      """SELECT o_orderstatus, o_orderpriority, count(*) AS n,
+        |  GROUPING_ID(o_orderstatus, o_orderpriority) AS gid
+        |FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
+        |ORDER BY gid, o_orderstatus NULLS FIRST,
+        |  o_orderpriority NULLS FIRST""".stripMargin)((s, dir) =>
+      t(s, dir, "orders")
+        .cube(col("o_orderstatus"), col("o_orderpriority"))
+        .agg(count(lit(1)).as("n"), grouping_id().as("gid"))
+        .orderBy(col("gid"), asc_nulls_first("o_orderstatus"),
+          asc_nulls_first("o_orderpriority"))),
+
+    // approx aggregates, oracle-certified as PROPERTIES: the exact count /
+    // distinct-count cross-check engine-to-engine, and the approx values
+    // must land inside published error bounds (HLL++ rsd 0.05 → 3σ = 15%;
+    // percentile_approx accuracy 10000 → rank error ~n/10000, checked
+    // against the exact ±1% quantile window) — a wrong sketch flips a
+    // boolean and hash-mismatches
+    // the booleans assert the approx sketches landed inside their error
+    // bounds (computed Spark-side against Spark's own exact aggregates);
+    // the exact n_rows / nd_parts cross-check engine-to-engine
+    Query("q26_approx_aggs",
+      """SELECT l_returnflag, count(*) AS n_rows,
+        |  CAST(count(DISTINCT l_partkey) AS BIGINT) AS nd_parts,
+        |  TRUE AS approx_parts_ok, TRUE AS approx_median_ok
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)((s, dir) =>
+      t(s, dir, "lineitem")
+        .groupBy(col("l_returnflag"))
+        .agg(
+          count(lit(1)).as("n_rows"),
+          countDistinct(col("l_partkey")).as("nd_parts"),
+          approx_count_distinct(col("l_partkey")).as("apx_nd"),
+          percentile_approx(col("l_extendedprice"), lit(0.5), lit(10000))
+            .as("apx_med"),
+          expr("percentile(l_extendedprice, 0.49D)").as("med_lo"),
+          expr("percentile(l_extendedprice, 0.51D)").as("med_hi"))
+        .select(col("l_returnflag"), col("n_rows"), col("nd_parts"),
+          (abs(col("apx_nd") - col("nd_parts")) <=
+            col("nd_parts").cast("double") * 0.15).as("approx_parts_ok"),
+          (col("apx_med") >= col("med_lo") && col("apx_med") <= col("med_hi"))
+            .as("approx_median_ok"))
+        .orderBy("l_returnflag")),
+
+    // map construction, element access, keys/size — map type + map literal
+    // (Literal.map field 26 / empty_map 32) certified through the wire; the
+    // output projects scalars so the oracle needs no map comparison
+    Query("q36_map_ops",
+      """SELECT l_orderkey, l_linenumber,
+        |  CAST(l_quantity AS DOUBLE) AS qty,
+        |  CAST(l_tax AS DOUBLE) AS tax,
+        |  2 AS n_keys, 'qty,tax' AS keys, CAST(2 AS BIGINT) AS lit_b
+        |FROM lineitem WHERE l_orderkey <= 200
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin)((s, dir) => {
+      val li = t(s, dir, "lineitem").filter(col("l_orderkey") <= 200)
+      val m = map(lit("qty"), col("l_quantity").cast("double"),
+        lit("tax"), col("l_tax").cast("double"))
+      li.select(col("l_orderkey"), col("l_linenumber"),
+        m.getItem("qty").as("qty"),
+        element_at(m, "tax").as("tax"),
+        size(m).as("n_keys"),
+        array_join(map_keys(m), ",").as("keys"),
+        element_at(typedLit(Map("a" -> 1L, "b" -> 2L)), "b").as("lit_b"))
+        .orderBy("l_orderkey", "l_linenumber")
+    }),
+
+    // null-safe equality, coalesce, is_null over full-join nulls
+    Query("q23_null_ops",
+      """SELECT c_custkey IS NOT DISTINCT FROM o_custkey AS matched,
+        |  coalesce(c_custkey, o_custkey) AS k,
+        |  o_orderkey IS NULL AS no_order
+        |FROM customer FULL JOIN orders ON c_custkey = o_custkey""".stripMargin)((s, dir) => {
+      val c = t(s, dir, "customer"); val o = t(s, dir, "orders")
+      c.join(o, c("c_custkey") === o("o_custkey"), "full")
+        .select(
+          (c("c_custkey") <=> o("o_custkey")).as("matched"),
+          coalesce(c("c_custkey"), o("o_custkey")).as("k"),
+          o("o_orderkey").isNull.as("no_order"))
+    }),
   )
+
+  /** name → frame (wire hop applied): the driver contract that Verify,
+    * Bench, PlanDump, the gates, the specs and perfbench read. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    table.map(q => q.name -> (q.frame _)).toMap
+
+  /** name → DuckDB oracle SQL (Verify writes it as oracle_sql.json). */
+  val oracleSql: Map[String, String] = table.map(q => q.name -> q.oracle).toMap
+
+  /** The `queries` entries named by `names`, in their order, or all of them
+    * when `names` is empty. An unknown name throws IllegalArgumentException
+    * listing the unknown and the valid names, so a typo cannot pass as an
+    * empty run. */
+  def select(names: Seq[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val unknown = names.filterNot(queries.contains).distinct
+    if (unknown.nonEmpty)
+      throw new IllegalArgumentException(
+        s"unknown query name(s): ${unknown.mkString(", ")}; " +
+          s"valid names: ${queries.keys.toSeq.sorted.mkString(", ")}")
+    if (names.isEmpty) queries.toSeq else names.distinct.map(n => n -> queries(n))
+  }
 }

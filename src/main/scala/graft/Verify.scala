@@ -18,31 +18,21 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     // optional 3rd+ args: run only these query names (debug aid)
-    val only: Set[String] = args.drop(2).toSet
+    val selected = SparkEntry.select(args.drop(2).toSeq)
     val cpus = Session.envCpus(4)
-    // the 131-query sweep compiles >200 codegen stages; the 100-entry
-    // default class cache thrashes (see Bench.scala)
+    // the 220-query sweep compiles >200 codegen stages; the 100-entry default
+    // class cache thrashes (see Bench.scala)
     val spark = Session.local(cpus, "spark.sql.codegen.cache.maxEntries" -> "2000")
     new java.io.File(outDir).mkdirs()
 
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // escaped keys and SQL: a tab or CR in builder-authored SQL would
+    // otherwise make the driver's json.load fail and silently zero the
+    // round's correctness
+    def q(s: String): String = "\"" + graft.tools.GateJson.esc(s) + "\""
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
 
-    val selected = SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }.toSeq
     val t0 = System.nanoTime()
     def log(m: String): Unit =
       System.err.println(f"[verify +${(System.nanoTime() - t0) / 1e9}%.1fs] $m")

@@ -14,7 +14,10 @@ import model._
 object Wire {
 
   // ------------------------------------------------------------------ writer
-  private final class W {
+  /** `depth` counts message nesting exactly as the reader does: a
+    * sub-message one level deeper, an extension detail payload at its Any's
+    * level, a nested iteration body plan one level below its detail. */
+  private final class W(val depth: Int) {
     val out = new ByteArrayOutputStream(256)
     def varint(v0: Long): Unit = {
       var v = v0
@@ -39,12 +42,14 @@ object Wire {
     def bytes(f: Int, v: Array[Byte]): Unit = { tag(f, 2); varint(v.length.toLong); out.write(v) }
     def str(f: Int, v: String): Unit = bytes(f, v.getBytes("UTF-8"))
     def msg(f: Int, body: W => Unit): Unit = {
-      val w = new W; body(w); bytes(f, w.out.toByteArray)
+      if (depth >= MaxNestingDepth)
+        internalErr(s"message nesting deeper than $MaxNestingDepth")
+      val w = new W(depth + 1); body(w); bytes(f, w.out.toByteArray)
     }
   }
 
-  /** Deepest message nesting `decode` accepts. A nested-Rel (or nested
-    * expression) bomb fails here with `SubstraitException`, not as a
+  /** Deepest message nesting `decode` and `encode` accept. A nested-Rel (or
+    * nested expression) bomb fails here with `SubstraitException`, not as a
     * `StackOverflowError`: on a 1 MiB thread stack the recursive reader
     * itself overflowed near 1,100 levels. A Rel costs two levels (Rel + its
     * XxxRel), so this admits about 320 nested rels, well above the
@@ -780,7 +785,7 @@ object Wire {
           writeRel(ew, 2, in)
           ew.msg(3, any => {
             any.str(1, generateDetailUrl)
-            val dw = new W
+            val dw = new W(any.depth)
             dw.str(1, gen)
             writeExpr(dw, 2, arg)
             dw.bool(3, outer)
@@ -795,7 +800,7 @@ object Wire {
           writeRel(ew, 2, in)
           ew.msg(3, any => {
             any.str(1, exchangeDetailUrl)
-            val dw = new W
+            val dw = new W(any.depth)
             exprs.foreach(writeExpr(dw, 1, _))
             dw.int32(2, num)
             dw.bool(3, shuffle)
@@ -810,7 +815,7 @@ object Wire {
           writeRel(ew, 2, in)
           ew.msg(3, any => {
             any.str(1, sampleDetailUrl)
-            val dw = new W
+            val dw = new W(any.depth)
             dw.fixed64(1, java.lang.Double.doubleToLongBits(lo))
             dw.fixed64(2, java.lang.Double.doubleToLongBits(hi))
             dw.bool(3, wr)
@@ -824,7 +829,7 @@ object Wire {
           writeRel(ew, 2, in)
           ew.msg(3, any => {
             any.str(1, stageDetailUrl)
-            val dw = new W
+            val dw = new W(any.depth)
             dw.str(1, stage)
             any.bytes(2, dw.out.toByteArray)
           })
@@ -836,7 +841,7 @@ object Wire {
           writeRel(ew, 2, in)
           ew.msg(3, any => {
             any.str(1, sessionWindowDetailUrl)
-            val dw = new W
+            val dw = new W(any.depth)
             dw.int32(1, tsField)
             dw.int64(2, gapMicros)
             gapExpr.foreach(writeExpr(dw, 3, _))
@@ -850,7 +855,7 @@ object Wire {
           writeRel(ew, 2, in)
           ew.msg(3, any => {
             any.str(1, hintDetailUrl)
-            val dw = new W
+            val dw = new W(any.depth)
             dw.str(1, hint)
             any.bytes(2, dw.out.toByteArray)
           })
@@ -863,8 +868,8 @@ object Wire {
           writeRel(ew, 2, in)
           ew.msg(3, any => {
             any.str(1, iterationDetailUrl)
-            val dw = new W
-            dw.bytes(1, encode(bodyPlan))
+            val dw = new W(any.depth)
+            dw.bytes(1, encode(bodyPlan, dw.depth + 1))
             dw.int32(2, maxIters)
             dw.bool(3, checkFixpoint)
             // proto3 canonical: a false bool is omitted (decode default is
@@ -1296,8 +1301,10 @@ object Wire {
   }
 
   // -------------------------------------------------------------------- plan
-  def encode(plan: Plan): Array[Byte] = {
-    val w = new W
+  def encode(plan: Plan): Array[Byte] = encode(plan, 0)
+
+  private def encode(plan: Plan, depth: Int): Array[Byte] = {
+    val w = new W(depth)
     plan.extensions.foreach { ext =>
       // SimpleExtensionDeclaration{extension_function=3:{uri_ref=1, anchor=2, name=3}}
       w.msg(2, dw => dw.msg(3, fw => {

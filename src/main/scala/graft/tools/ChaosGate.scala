@@ -101,21 +101,15 @@ object ChaosGate {
     // warm the cluster: both executors registered before any scenario
     spark.range(100).count()
 
-    var failures = 0
-    def run(name: String)(body: => (Boolean, String)): Unit =
-      if (mode == "all" || mode == name) {
-        removed.set(0)
-        val t0 = System.nanoTime()
-        val (ok, detail) =
-          try body
-          catch { case e: Throwable =>
-            (false, s"${e.getClass.getSimpleName}: ${e.getMessage}") }
-        val secs = (System.nanoTime() - t0) / 1e9
+    val gate = new GateJson.Scenarios(mode)
+    // a scenario passes only if it also lost at least one executor
+    def run(name: String)(body: => (Boolean, String)): Unit = {
+      removed.set(0)
+      gate.run(name, { ok =>
         val lost = removed.get()
-        val pass = ok && lost >= 1
-        if (!pass) failures += 1
-        println(f"""{"scenario":"$name","ok":$ok,"executorsLost":$lost,"pass":$pass,"secs":$secs%.1f,"detail":"${GateJson.esc(detail)}"}""")
-      }
+        (Seq("ok" -> ok, "executorsLost" -> lost), ok && lost >= 1)
+      })(body)
+    }
 
     run("stage")(stageScenario(spark))
     run("fixpoint")(fixpointScenario(spark))
@@ -125,7 +119,7 @@ object ChaosGate {
     run("wipeout")(wipeoutScenario(spark))
 
     spark.stop()
-    if (failures > 0) sys.exit(1)
+    gate.exitOnFailure()
   }
 
   /** Deterministic in-task executor halt in the post-shuffle stage. */

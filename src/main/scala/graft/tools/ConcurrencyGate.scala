@@ -52,18 +52,8 @@ object ConcurrencyGate {
       "spark.sql.warehouse.dir" ->
         java.nio.file.Files.createTempDirectory("conc_wh").toString)
 
-    var failures = 0
-    def run(name: String)(body: => (Boolean, String)): Unit =
-      if (mode == "all" || mode == name) {
-        val t0 = System.nanoTime()
-        val (ok, detail) =
-          try body
-          catch { case e: Throwable =>
-            (false, s"${e.getClass.getSimpleName}: ${e.getMessage}") }
-        val secs = (System.nanoTime() - t0) / 1e9
-        if (!ok) failures += 1
-        println(f"""{"scenario":"$name","pass":$ok,"secs":$secs%.1f,"detail":"${GateJson.esc(detail)}"}""")
-      }
+    val gate = new GateJson.Scenarios(mode)
+    import gate.run
 
     run("parallel8")(parallel8(spark, sfDir))
     run("race_version")(raceVersion(spark))
@@ -71,7 +61,7 @@ object ConcurrencyGate {
     run("xproc_snapshot")(xprocRace(spark, "race-snapshot"))
     run("xproc_delta")(xprocRace(spark, "race-delta"))
     spark.stop()
-    if (failures > 0) sys.exit(1)
+    gate.exitOnFailure()
   }
 
   private def collectSorted(spark: SparkSession, sfDir: String,

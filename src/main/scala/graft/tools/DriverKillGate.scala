@@ -51,24 +51,14 @@ object DriverKillGate {
       "spark.sql.warehouse.dir" ->
         java.nio.file.Files.createTempDirectory("dkg_wh").toString)
 
-    var failures = 0
-    def run(name: String)(body: => (Boolean, String)): Unit =
-      if (mode == "all" || mode == name) {
-        val t0 = System.nanoTime()
-        val (ok, detail) =
-          try body
-          catch { case e: Throwable =>
-            (false, s"${e.getClass.getSimpleName}: ${e.getMessage}") }
-        val secs = (System.nanoTime() - t0) / 1e9
-        if (!ok) failures += 1
-        println(f"""{"scenario":"$name","pass":$ok,"secs":$secs%.1f,"detail":"${GateJson.esc(detail)}"}""")
-      }
+    val gate = new GateJson.Scenarios(mode)
+    import gate.run
 
     run("delta")(deltaScenario(spark))
     run("snapshot")(snapshotScenario(spark))
     run("merge")(mergeScenario(spark))
     spark.stop()
-    if (failures > 0) sys.exit(1)
+    gate.exitOnFailure()
   }
 
   /** Spawn ChaosChild, wait for its crash-window marker, SIGKILL it. */

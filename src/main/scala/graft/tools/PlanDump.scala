@@ -11,13 +11,12 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: PlanDump <sfDir> <query...> [run]")
     val run = args.length > 2 && args.last == "run"
-    val queries = args.slice(1, if (run) args.length - 1 else args.length)
-    val unknown = queries.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
+    val queries =
+      SparkEntry.select(args.slice(1, if (run) args.length - 1 else args.length).toSeq)
     val spark = Session.local(Session.envCpus(32))
-    queries.foreach { q =>
+    queries.foreach { case (q, build) =>
       println(s"######## $q")
-      val df = SparkEntry.queries(q)(spark, args(0))
+      val df = build(spark, args(0))
       println(df.queryExecution.executedPlan.toString)
       if (run) {
         val t0 = System.nanoTime()

@@ -43,23 +43,13 @@ object SkewGate {
     val spark = Session.local(Session.envCpus(8),
       "spark.app.name" -> "graft-skew-gate")
 
-    var failures = 0
-    def run(name: String)(body: => (Boolean, String)): Unit =
-      if (mode == "all" || mode == name) {
-        val t0 = System.nanoTime()
-        val (ok, detail) =
-          try body
-          catch { case e: Throwable =>
-            (false, s"${e.getClass.getSimpleName}: ${e.getMessage}") }
-        val secs = (System.nanoTime() - t0) / 1e9
-        if (!ok) failures += 1
-        println(f"""{"scenario":"$name","pass":$ok,"secs":$secs%.1f,"detail":"${GateJson.esc(detail)}"}""")
-      }
+    val gate = new GateJson.Scenarios(mode)
+    import gate.run
 
     run("join")(joinScenario(spark, factRows))
     run("cluster")(clusterScenario(spark, clusterRows))
     spark.stop()
-    if (failures > 0) sys.exit(1)
+    gate.exitOnFailure()
   }
 
   /** Zipf-head join: 50 % of fact rows on key 0; AQE must split it. */

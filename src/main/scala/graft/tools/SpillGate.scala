@@ -65,28 +65,22 @@ object SpillGate {
       }
     })
 
-    var failures = 0
+    val gate = new GateJson.Scenarios(mode)
     def run(name: String, requireSpill: Boolean)(
-        body: => (Boolean, String)): Unit =
-      if (mode == "all" || mode == name) {
-        memSpilled.set(0); diskSpilled.set(0)
-        val t0 = System.nanoTime()
-        val (ok, detail) =
-          try body
-          catch { case e: Throwable =>
-            (false, s"${e.getClass.getSimpleName}: ${e.getMessage}") }
-        val secs = (System.nanoTime() - t0) / 1e9
+        body: => (Boolean, String)): Unit = {
+      memSpilled.set(0); diskSpilled.set(0)
+      gate.run(name, { ok =>
         val mem = memSpilled.get(); val disk = diskSpilled.get()
-        val pass = ok && (!requireSpill || mem > 0)
-        if (!pass) failures += 1
-        println(f"""{"scenario":"$name","ok":$ok,"memoryBytesSpilled":$mem,"diskBytesSpilled":$disk,"spillObserved":${mem > 0},"pass":$pass,"secs":$secs%.1f,"detail":"${GateJson.esc(detail)}"}""")
-      }
+        (Seq("ok" -> ok, "memoryBytesSpilled" -> mem, "diskBytesSpilled" -> disk,
+          "spillObserved" -> (mem > 0)), ok && (!requireSpill || mem > 0))
+      })(body)
+    }
 
     run("agg", requireSpill = true)(aggScenario(spark))
     run("d04", requireSpill = true)(d04Scenario(spark))
     run("route", requireSpill = false)(routeScenario(spark))
     spark.stop()
-    if (failures > 0) sys.exit(1)
+    gate.exitOnFailure()
   }
 
   /** 30M distinct groups with ~64 B of grouping state each — the hash

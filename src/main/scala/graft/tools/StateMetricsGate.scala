@@ -35,18 +35,8 @@ object StateMetricsGate {
     val nBatches = 12
     val rows = 120000
 
-    var failures = 0
-    def run(name: String)(body: => (Boolean, String)): Unit =
-      if (mode == "all" || mode == name) {
-        val t0 = System.nanoTime()
-        val (ok, detail) =
-          try body
-          catch { case e: Throwable =>
-            (false, s"${e.getClass.getSimpleName}: ${e.getMessage}") }
-        val secs = (System.nanoTime() - t0) / 1e9
-        if (!ok) failures += 1
-        println(f"""{"scenario":"$name","pass":$ok,"secs":$secs%.1f,"detail":"${GateJson.esc(detail)}"}""")
-      }
+    val gate = new GateJson.Scenarios(mode)
+    import gate.run
 
     def measured(name: String, cap: Long,
                  transform: org.apache.spark.sql.DataFrame =>
@@ -128,6 +118,6 @@ object StateMetricsGate {
     }
 
     spark.stop()
-    if (failures > 0) sys.exit(1)
+    gate.exitOnFailure()
   }
 }

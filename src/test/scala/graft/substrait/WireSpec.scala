@@ -403,4 +403,26 @@ class WireSpec extends AnyFunSuite {
     val e = intercept[SubstraitException](Wire.decode(filterChain(50000)))
     assert(e.getMessage.contains(s"deeper than ${Wire.MaxNestingDepth}"))
   }
+
+  test("encode counts nesting as decode does: a deep Filter chain fails typed, and near the cap every plan that encodes decodes") {
+    def chain(depth: Int): Plan = {
+      var r: Rel = readT
+      for (_ <- 1 to depth) r = Rel.Filter(r, SExpr.Lit(LitVal.LBool(true)))
+      Plan(Nil, Seq(PlanRel.RelOnly(r)))
+    }
+    val e = intercept[SubstraitException](Wire.encode(chain(50000)))
+    assert(e.getMessage.contains(s"deeper than ${Wire.MaxNestingDepth}"))
+    // a Rel costs two levels (Rel + FilterRel): the cap falls near depth/2
+    val around = (Wire.MaxNestingDepth / 2 - 4) to (Wire.MaxNestingDepth / 2 + 4)
+    val encodes = around.map { d =>
+      val bytes = scala.util.Try(Wire.encode(chain(d))).toOption
+      bytes.foreach(b => assert(Wire.decode(b) == chain(d), s"depth $d"))
+      // the hand-framed chain of the same depth decodes exactly when the
+      // encoder accepts the plan
+      assert(scala.util.Try(Wire.decode(filterChain(d))).isSuccess == bytes.isDefined,
+        s"depth $d")
+      bytes.isDefined
+    }
+    assert(encodes.contains(true) && encodes.contains(false), around)
+  }
 }
