@@ -141,7 +141,9 @@ object SparkEntry {
 
   /** Exact top-5 cosine neighbours of vec_id < 8: the ground truth every
     * kNN/ANN entry point (brute, LSH, IVF, saved/grown IVF, PQ, SQ8,
-    * sign-bit, IVF-SQ, IVF-PQ) must reproduce. */
+    * sign-bit, IVF-SQ, IVF-PQ) must reproduce. It replays in SQL the one
+    * ranking contract those entry points share, `graft.ops.Similarity.topK`
+    * (sim desc, n_id asc, rank <= k, round(sim, 6)). */
   private val ExactKnnOracle =
     """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
       |q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 8),

@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import Similarity.asDouble
 
 /** IVF (inverted-file) approximate nearest neighbor: a KMeans coarse
   * quantizer partitions the corpus into nlist cells; queries probe only the
@@ -19,8 +20,6 @@ object Ivf {
 
   final case class IvfIndex(centroids: Seq[Seq[Double]], assigned: DataFrame)
 
-  private def asDouble(c: Column): Column = c.cast("array<double>")
-
   /** nearest-centroid id for a vector column, centroids as literals
     * (broadcast with the task binary — they are tiny by construction) */
   private[ops] def nearestCells(vec: Column, centroids: Seq[Seq[Double]], n: Int): Column = {
@@ -32,6 +31,51 @@ object Ivf {
         lit(i).as("cell"))
     }
     slice(array_sort(array(dists: _*)), 1, n).getField("cell")
+  }
+
+  /** One row per (query, probed cell): (q_id, q_vec, cell). */
+  private[ops] def probeRows(queries: DataFrame, centroids: Seq[Seq[Double]],
+                             nprobe: Int, idCol: String,
+                             vecCol: String): DataFrame = {
+    val qv = asDouble(col(vecCol))
+    queries.select(col(idCol).as("q_id"), qv.as("q_vec"),
+      explode(nearestCells(qv, centroids, nprobe)).as("cell"))
+  }
+
+  // ------------------------------------------------------ saved cell layout
+  // Shared by the IVF, IVF-SQ and IVF-PQ indexes: rows partitioned by cell
+  // under `cells`, the centroid table beside them under `centroids`.
+
+  /** Write `cells` partitioned by cell (a probe reads only its cell
+    * directories) and the few-KB centroid table beside it. */
+  private[ops] def saveLayout(cells: DataFrame, centroids: Seq[Seq[Double]],
+                              path: String): Unit = {
+    cells.write.mode("overwrite").partitionBy("cell").parquet(s"$path/cells")
+    val spark = cells.sparkSession
+    import spark.implicits._
+    centroids.zipWithIndex.map { case (c, i) => (i, c) }
+      .toDF("cell", "centroid")
+      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
+  }
+
+  private[ops] def loadCentroids(spark: SparkSession,
+                                 path: String): Seq[Seq[Double]] =
+    spark.read.parquet(s"$path/centroids").orderBy("cell").collect()
+      .map(r => r.getSeq[Double](r.fieldIndex("centroid")).toSeq).toSeq
+
+  /** The probed-cell prune: the nprobe nearest cells of every query,
+    * computed driver-side from the broadcast-small query side, land as a
+    * literal `cell IN (...)` filter — on a saved layout a PartitionFilter,
+    * so only the probed cell directories are read (robust to stats, no
+    * reliance on runtime DPP). */
+  private[ops] def pruneToProbed(cells: DataFrame, centroids: Seq[Seq[Double]],
+                                 queries: DataFrame, nprobe: Int,
+                                 vecCol: String): DataFrame = {
+    val probed = queries
+      .select(explode(nearestCells(asDouble(col(vecCol)), centroids, nprobe))
+        .as("cell"))
+      .distinct().collect().map(_.getInt(0)).sorted
+    cells.filter(col("cell").isin(probed.toIndexedSeq.map(Integer.valueOf): _*))
   }
 
   /** Train the coarse quantizer on a (bounded) sample of a pre-projected
@@ -140,13 +184,8 @@ object Ivf {
     * inverted-file lookup), centroids as a small parquet table beside them.
     * This is the corpus-scale path: build once, load per query job. */
   def save(index: IvfIndex, path: String): Unit = {
-    index.assigned.write.mode("overwrite")
-      .partitionBy("cell").parquet(s"$path/cells")
+    saveLayout(index.assigned, index.centroids, path)
     val spark = index.assigned.sparkSession
-    import spark.implicits._
-    index.centroids.zipWithIndex.map { case (c, i) => (i, c) }
-      .toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // advisory size counters: seed the O(1) auto-compaction trigger
@@ -185,8 +224,7 @@ object Ivf {
     * old vectors), the new batch maps in one narrow stage. */
   def assign(index: IvfIndex, newVectors: DataFrame, idCol: String = "vec_id",
              vecCol: String = "embedding"): DataFrame =
-    newVectors
-      .select(col(idCol).as("n_id"), asDouble(col(vecCol)).as("n_vec"))
+    Similarity.vectors(newVectors, idCol, vecCol, "n")
       .withColumn("cell", nearestCells(col("n_vec"), index.centroids, 1).getItem(0))
 
   /** Grow a SAVED index with a new vector batch: assign against the saved
@@ -195,7 +233,7 @@ object Ivf {
     * so the ingest cost is proportional to the batch, not the index, and a
     * concurrent reader keeps partition pruning. Returns the reloaded index.
     */
-  def appendToSaved(spark: org.apache.spark.sql.SparkSession, path: String,
+  def appendToSaved(spark: SparkSession, path: String,
                     newVectors: DataFrame, idCol: String = "vec_id",
                     vecCol: String = "embedding"): IvfIndex = {
     val idx = load(spark, path)
@@ -255,7 +293,7 @@ object Ivf {
     * same retention-style contract as vacuum), bounding the per-search
     * anti-join by default. Pass `autoCompactRatio = 0` for the pure
     * tombstone behavior (O(batch) always, compaction caller-owned). */
-  def deleteFromSaved(spark: org.apache.spark.sql.SparkSession, path: String,
+  def deleteFromSaved(spark: SparkSession, path: String,
                       ids: DataFrame, idCol: String = "vec_id",
                       autoCompactRatio: Double = 0.5): IvfIndex = {
     // NO cast: n_id keeps the corpus id column's own type (a silent
@@ -312,7 +350,7 @@ object Ivf {
     * rows are ALL tombstoned simply disappears (an absent partition dir
     * is a valid layout). The tombstone set drops last — re-running a
     * crashed compaction is idempotent. */
-  def compactSaved(spark: org.apache.spark.sql.SparkSession,
+  def compactSaved(spark: SparkSession,
                    path: String): IvfIndex = {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -385,13 +423,11 @@ object Ivf {
     * tombstoned ids are anti-joined out (the tombstone set is small by the
     * compaction contract — it broadcasts). Runs the compaction-crash
     * recovery sweep first (one metadata listing). */
-  def load(spark: org.apache.spark.sql.SparkSession, path: String): IvfIndex = {
+  def load(spark: SparkSession, path: String): IvfIndex = {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     recoverCompactBackups(fs, s"$path/cells")
-    val cents = spark.read.parquet(s"$path/centroids")
-      .orderBy("cell").collect()
-      .map(r => r.getSeq[Double](r.fieldIndex("centroid")).toSeq).toSeq
+    val cents = loadCentroids(spark, path)
     val cells = spark.read.parquet(s"$path/cells")
     val assigned =
       if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/tombstones")))
@@ -402,26 +438,18 @@ object Ivf {
     IvfIndex(cents, assigned)
   }
 
-  /** Top-k over a SAVED index with static partition pruning: the probed
-    * cell set is computed driver-side from the (small, broadcast-by-contract)
-    * query side and applied as a literal partition filter, so a scan over
-    * `save`'s cell-partitioned layout reads ONLY the probed cell directories
-    * — the inverted-file lookup expressed as partition pruning, robust to
-    * stats (no reliance on runtime DPP). At nprobe/nlist = 12/16 this fixture
+  /** Top-k over a SAVED index with static partition pruning
+    * ([[pruneToProbed]]): a scan over `save`'s cell-partitioned layout
+    * reads ONLY the probed cell directories — the inverted-file lookup
+    * expressed as partition pruning. At nprobe/nlist = 12/16 this fixture
     * reads 3/4 of the cells; a production nlist is thousands, so a probe
     * touches a vanishing fraction of the corpus bytes.
     */
   def searchPruned(index: IvfIndex, queries: DataFrame, k: Int, nprobe: Int,
                    idCol: String = "vec_id",
-                   vecCol: String = "embedding"): DataFrame = {
-    val probed = queries
-      .select(explode(nearestCells(asDouble(col(vecCol)), index.centroids, nprobe))
-        .as("cell"))
-      .distinct().collect().map(_.getInt(0)).sorted
-    val pruned = index.copy(assigned =
-      index.assigned.filter(col("cell").isin(probed.toIndexedSeq.map(Integer.valueOf): _*)))
-    search(pruned, queries, k, nprobe, idCol, vecCol)
-  }
+                   vecCol: String = "embedding"): DataFrame =
+    search(index.copy(assigned = pruneToProbed(index.assigned,
+      index.centroids, queries, nprobe, vecCol)), queries, k, nprobe, idCol, vecCol)
 
   /** FILTERED ANN: top-k cosine neighbors among only the corpus vectors
     * satisfying `pred` — metadata-filtered vector search ("nearest docs
@@ -445,7 +473,7 @@ object Ivf {
     * selectivity; recall 1.0 at the 3% cap; numbers in BASELINE.md).
     */
   def searchFiltered(index: IvfIndex, queries: DataFrame, k: Int, nprobe: Int,
-                     pred: org.apache.spark.sql.Column,
+                     pred: Column,
                      idCol: String = "vec_id",
                      vecCol: String = "embedding"): DataFrame =
     search(index.copy(assigned = index.assigned.filter(pred)),
@@ -454,16 +482,11 @@ object Ivf {
   /** Top-k cosine neighbors probing the nprobe nearest cells per query. */
   def search(index: IvfIndex, queries: DataFrame, k: Int, nprobe: Int,
              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val q = queries
-      .select(col(idCol).as("q_id"), asDouble(col(vecCol)).as("q_vec"))
+    val q = Similarity.vectors(queries, idCol, vecCol, "q")
       .withColumn("cell",
         explode(nearestCells(col("q_vec"), index.centroids, nprobe)))
-    val w = Window.partitionBy("q_id").orderBy(col("sim").desc, col("n_id").asc)
-    index.assigned.join(broadcast(q), "cell")
+    Similarity.topK(index.assigned.join(broadcast(q), "cell")
       .filter(col("n_id") =!= col("q_id"))
-      .withColumn("sim", Similarity.cosine(col("q_vec"), col("n_vec")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), col("rank"), round(col("sim"), 6).as("sim"))
+      .withColumn("sim", Similarity.cosine(col("q_vec"), col("n_vec"))), k)
   }
 }

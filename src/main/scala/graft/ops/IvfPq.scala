@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** IVF-PQ: the composed billion-scale ANN index (FAISS's workhorse layout)
@@ -25,8 +24,6 @@ object IvfPq {
   final case class IvfPqIndex(centroids: Seq[Seq[Double]], model: Pq.PqModel,
                               encoded: DataFrame)
 
-  private def asDouble(c: Column): Column = c.cast("array<double>")
-
   /** residual of `vec` against the centroid of `cell` (both literals-side:
     * cents rides as one nested literal, indexed per row) */
   private def residual(vec: Column, cents: Column, cell: Column): Column =
@@ -40,7 +37,7 @@ object IvfPq {
             idCol: String = "vec_id", vecCol: String = "embedding",
             trainSampleFraction: Double = 1.0, seed: Long = 42L,
             maxTrainRows: Int = 16384): IvfPqIndex = {
-    val base = corpus.select(col(idCol).as("n_id"), asDouble(col(vecCol)).as("n_vec"))
+    val base = Similarity.vectors(corpus, idCol, vecCol, "n")
     val sampled = (if (trainSampleFraction < 1.0)
       base.sample(withReplacement = false, trainSampleFraction, seed) else base)
       .orderBy("n_id").limit(maxTrainRows)
@@ -86,12 +83,9 @@ object IvfPq {
   /** Persist: codes partitioned by cell (probes partition-prune), plus the
     * few-KB centroid/codebook tables beside them. */
   def save(index: IvfPqIndex, path: String): Unit = {
-    index.encoded.write.mode("overwrite").partitionBy("cell").parquet(s"$path/cells")
+    Ivf.saveLayout(index.encoded, index.centroids, path)
     val spark = index.encoded.sparkSession
     import spark.implicits._
-    index.centroids.zipWithIndex.map { case (c, i) => (i, c) }
-      .toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
     index.model.codebooks.zipWithIndex
       .flatMap { case (book, j) => book.zipWithIndex.map { case (c, ci) => (j, ci, c) } }
       .toDF("subspace", "code", "centroid")
@@ -99,8 +93,7 @@ object IvfPq {
   }
 
   def load(spark: SparkSession, path: String): IvfPqIndex = {
-    val cents = spark.read.parquet(s"$path/centroids").orderBy("cell").collect()
-      .map(r => r.getSeq[Double](r.fieldIndex("centroid")).toSeq).toSeq
+    val cents = Ivf.loadCentroids(spark, path)
     val bookRows = spark.read.parquet(s"$path/books").collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toSeq))
     val m = bookRows.map(_._1).max + 1
@@ -123,11 +116,8 @@ object IvfPq {
     val model = index.model
     val cLit = typedLit(index.centroids)
     val books = typedLit(model.codebooks)
-    val qv = asDouble(col(vecCol))
     // one row per (query, probed cell), each with the residual ADC table
-    val q = queries
-      .select(col(idCol).as("q_id"), qv.as("q_vec"),
-        explode(Ivf.nearestCells(qv, index.centroids, nprobe)).as("cell"))
+    val q = Ivf.probeRows(queries, index.centroids, nprobe, idCol, vecCol)
       .withColumn("__res", residual(col("q_vec"), cLit, col("cell")))
       .withColumn("tables", transform(sequence(lit(0), lit(model.m - 1)), j =>
         transform(element_at(books, j + 1), cent =>
@@ -135,37 +125,21 @@ object IvfPq {
             slice(col("__res"), j * model.ds + 1, lit(model.ds)), cent,
             (x, y) => (x - y) * (x - y)), lit(0.0d), (acc, v) => acc + v))))
     val adc = graft.functions.PqFunctions.pqAdc(col("codes"), col("tables"))
-    val wS = Window.partitionBy("q_id").orderBy(col("adist").asc, col("n_id").asc)
-    val short = index.encoded
+    val short = Similarity.shortlistIds(index.encoded
       .join(broadcast(q.select("q_id", "cell", "tables")), "cell")
       .filter(col("n_id") =!= col("q_id"))
-      .withColumn("adist", adc)
-      .withColumn("srank", row_number().over(wS))
-      .filter(col("srank") <= shortlist)
-      .select("q_id", "n_id")
-    val c = corpus.select(col(idCol).as("n_id"), asDouble(col(vecCol)).as("n_vec"))
-    val wK = Window.partitionBy("q_id").orderBy(col("sim").desc, col("n_id").asc)
-    c.join(broadcast(short), "n_id")
-      .join(broadcast(queries.select(col(idCol).as("q_id"), qv.as("q_vec"))), "q_id")
-      .withColumn("sim", Similarity.cosine(col("q_vec"), col("n_vec")))
-      .withColumn("rank", row_number().over(wK))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), col("rank"), round(col("sim"), 6).as("sim"))
+      .withColumn("adist", adc), col("adist").asc, shortlist)
+    Similarity.rerankBroadcast(short, corpus,
+      Similarity.vectors(queries, idCol, vecCol, "q"), k, idCol, vecCol)
   }
 
-  /** Probe a SAVED index with static partition pruning: the probed cell
-    * set computes driver-side and lands as a literal partition filter on
-    * the cell layout — nprobe directories read, nothing else. */
+  /** Probe a SAVED index with static partition pruning
+    * ([[Ivf.pruneToProbed]]): nprobe directories read, nothing else. */
   def searchPruned(index: IvfPqIndex, corpus: DataFrame, queries: DataFrame,
                    k: Int, nprobe: Int, shortlist: Int,
                    idCol: String = "vec_id",
-                   vecCol: String = "embedding"): DataFrame = {
-    val probed = queries
-      .select(explode(Ivf.nearestCells(asDouble(col(vecCol)),
-        index.centroids, nprobe)).as("cell"))
-      .distinct().collect().map(_.getInt(0)).sorted
-    val pruned = index.copy(encoded =
-      index.encoded.filter(col("cell").isin(probed.toIndexedSeq.map(Integer.valueOf): _*)))
-    search(pruned, corpus, queries, k, nprobe, shortlist, idCol, vecCol)
-  }
+                   vecCol: String = "embedding"): DataFrame =
+    search(index.copy(encoded = Ivf.pruneToProbed(index.encoded,
+      index.centroids, queries, nprobe, vecCol)), corpus, queries, k, nprobe,
+      shortlist, idCol, vecCol)
 }

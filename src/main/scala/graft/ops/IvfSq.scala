@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** IVF-SQ8: int8 scalar-quantized codes INSIDE the cell-pruned inverted
@@ -39,9 +38,6 @@ object IvfSq {
   final case class IvfSqIndex(centroids: Seq[Seq[Double]], scale: Double,
                               encoded: DataFrame)
 
-  private def asDouble(c: org.apache.spark.sql.Column) =
-    c.cast("array<double>")
-
   /** Train coarse cells on a bounded sample + the global SQ8 scale (one
     * narrow aggregate), then encode the corpus in a single projection
     * pass: cell assignment → int8 codes. No raw vectors in the index. */
@@ -49,8 +45,7 @@ object IvfSq {
             vecCol: String = "embedding",
             trainSampleFraction: Double = 1.0, seed: Long = 42L,
             maxTrainRows: Int = 16384): IvfSqIndex = {
-    val base = corpus.select(col(idCol).as("n_id"),
-      asDouble(col(vecCol)).as("n_vec"))
+    val base = Similarity.vectors(corpus, idCol, vecCol, "n")
     val centroids = Ivf.trainCentroids(base, nlist, trainSampleFraction,
       seed, "n_vec", maxTrainRows)
     val scale = Sq.trainScale(corpus, vecCol)
@@ -65,23 +60,35 @@ object IvfSq {
   /** Persist: codes partitioned by cell (probes partition-prune), the
     * few-KB centroid table and the one-scalar scale beside them. */
   def save(index: IvfSqIndex, path: String): Unit = {
-    index.encoded.write.mode("overwrite")
-      .partitionBy("cell").parquet(s"$path/cells")
+    Ivf.saveLayout(index.encoded, index.centroids, path)
     val spark = index.encoded.sparkSession
     import spark.implicits._
-    index.centroids.zipWithIndex.map { case (c, i) => (i, c) }
-      .toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
     Seq(index.scale).toDF("scale")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/scale")
   }
 
   def load(spark: SparkSession, path: String): IvfSqIndex = {
-    val cents = spark.read.parquet(s"$path/centroids").orderBy("cell")
-      .collect()
-      .map(r => r.getSeq[Double](r.fieldIndex("centroid")).toSeq).toSeq
+    val cents = Ivf.loadCentroids(spark, path)
     val scale = spark.read.parquet(s"$path/scale").head.getDouble(0)
     IvfSqIndex(cents, scale, spark.read.parquet(s"$path/cells"))
+  }
+
+  /** Quantized-cosine score `sim_q` of every probed (query, code) pair:
+    * one row per (query, probed cell) rides the broadcast with the
+    * query's own int8 codes, so the probe join ranks from codes alone.
+    * The frame [[search]] shortlists and [[worstTrueNeighborRank]]
+    * measures. */
+  private def scored(index: IvfSqIndex, queries: DataFrame, nprobe: Int,
+                     idCol: String, vecCol: String): DataFrame = {
+    val q = Ivf.probeRows(queries, index.centroids, nprobe, idCol, vecCol)
+      .withColumn("q_code", Sq.codeExpr(col("q_vec"), index.scale))
+      .withColumn("q_norm",
+        sqrt(Sq.dotCodes(col("q_code"), col("q_code")).cast("double")))
+      .select("q_id", "cell", "q_code", "q_norm")
+    index.encoded.join(broadcast(q), "cell")
+      .filter(col("n_id") =!= col("q_id"))
+      .withColumn("sim_q", Sq.quantizedCosine(
+        col("n_code"), col("q_code"), col("q_norm")))
   }
 
   /** Top-k cosine neighbors probing the nprobe nearest cells per query:
@@ -96,55 +103,21 @@ object IvfSq {
              idCol: String = "vec_id",
              vecCol: String = "embedding"): DataFrame = {
     require(shortlist >= k, s"shortlist $shortlist < k $k")
-    val qv = asDouble(col(vecCol))
-    // one row per (query, probed cell): the query's own int8 codes ride
-    // the broadcast, so the probe join ranks from codes alone
-    val q = queries
-      .select(col(idCol).as("q_id"), qv.as("q_vec"),
-        explode(Ivf.nearestCells(qv, index.centroids, nprobe)).as("cell"))
-      .withColumn("q_code", Sq.codeExpr(col("q_vec"), index.scale))
-      .withColumn("q_norm",
-        sqrt(Sq.dotCodes(col("q_code"), col("q_code")).cast("double")))
-      .select("q_id", "cell", "q_code", "q_norm")
-    val wq = Window.partitionBy("q_id")
-      .orderBy(col("sim_q").desc, col("n_id").asc)
-    val short = index.encoded.join(broadcast(q), "cell")
-      .filter(col("n_id") =!= col("q_id"))
-      .withColumn("sim_q", Sq.quantizedCosine(
-        col("n_code"), col("q_code"), col("q_norm")))
-      .withColumn("qrank", row_number().over(wq))
-      .filter(col("qrank") <= shortlist)
-      .select("q_id", "n_id")
-    val rawC = corpus.select(col(idCol).as("n_id"),
-      asDouble(col(vecCol)).as("n_vec"))
-    val rawQ = broadcast(queries.select(col(idCol).as("q_id"),
-      qv.as("q_vec")))
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("sim").desc, col("n_id").asc)
-    short.join(rawC, "n_id").join(rawQ, "q_id")
-      .withColumn("sim", Similarity.cosine(col("q_vec"), col("n_vec")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), col("rank"),
-        round(col("sim"), 6).as("sim"))
+    Similarity.rerank(Similarity.shortlistIds(
+      scored(index, queries, nprobe, idCol, vecCol), col("sim_q").desc,
+      shortlist), corpus, queries, k, idCol, vecCol)
   }
 
-  /** Probe a SAVED index with static partition pruning: the probed cell
-    * set computes driver-side from the broadcast-small query side and
-    * lands as a literal partition filter on the cell layout — nprobe
-    * directories of int8 codes read, nothing else. */
+  /** Probe a SAVED index with static partition pruning
+    * ([[Ivf.pruneToProbed]]): nprobe directories of int8 codes read,
+    * nothing else. */
   def searchPruned(index: IvfSqIndex, corpus: DataFrame,
                    queries: DataFrame, k: Int, nprobe: Int, shortlist: Int,
                    idCol: String = "vec_id",
-                   vecCol: String = "embedding"): DataFrame = {
-    val probed = queries
-      .select(explode(Ivf.nearestCells(asDouble(col(vecCol)),
-        index.centroids, nprobe)).as("cell"))
-      .distinct().collect().map(_.getInt(0)).sorted
-    val pruned = index.copy(encoded = index.encoded.filter(
-      col("cell").isin(probed.toIndexedSeq.map(Integer.valueOf): _*)))
-    search(pruned, corpus, queries, k, nprobe, shortlist, idCol, vecCol)
-  }
+                   vecCol: String = "embedding"): DataFrame =
+    search(index.copy(encoded = Ivf.pruneToProbed(index.encoded,
+      index.centroids, queries, nprobe, vecCol)), corpus, queries, k, nprobe,
+      shortlist, idCol, vecCol)
 
   /** Measurement twin for the shortlist-margin claim, scoped to the
     * PROBED cells (the ordering [[search]] actually shortlists from):
@@ -157,27 +130,7 @@ object IvfSq {
   def worstTrueNeighborRank(index: IvfSqIndex, corpus: DataFrame,
                             queries: DataFrame, k: Int, nprobe: Int,
                             idCol: String = "vec_id",
-                            vecCol: String = "embedding"): Int = {
-    val truth = Similarity.bruteForceKnn(corpus, queries, k, idCol, vecCol)
-      .select("q_id", "n_id")
-    val qv = asDouble(col(vecCol))
-    val q = queries
-      .select(col(idCol).as("q_id"), qv.as("q_vec"),
-        explode(Ivf.nearestCells(qv, index.centroids, nprobe)).as("cell"))
-      .withColumn("q_code", Sq.codeExpr(col("q_vec"), index.scale))
-      .withColumn("q_norm",
-        sqrt(Sq.dotCodes(col("q_code"), col("q_code")).cast("double")))
-      .select("q_id", "cell", "q_code", "q_norm")
-    val ranked = index.encoded.join(broadcast(q), "cell")
-      .filter(col("n_id") =!= col("q_id"))
-      .withColumn("sim_q", Sq.quantizedCosine(
-        col("n_code"), col("q_code"), col("q_norm")))
-      .withColumn("qrank", row_number().over(Window.partitionBy("q_id")
-        .orderBy(col("sim_q").desc, col("n_id").asc)))
-    val row = ranked.join(truth, Seq("q_id", "n_id")).agg(max("qrank")).head
-    require(!row.isNullAt(0),
-      "IvfSq margin: empty truth join (no queries, empty corpus, or the " +
-        "probe missed every true neighbor — raise nprobe)")
-    row.getInt(0)
-  }
+                            vecCol: String = "embedding"): Int =
+    Similarity.worstTrueRank(scored(index, queries, nprobe, idCol, vecCol),
+      col("sim_q").desc, corpus, queries, k, idCol, vecCol, "IvfSq")
 }

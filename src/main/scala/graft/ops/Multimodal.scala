@@ -271,14 +271,23 @@ object Multimodal {
     }
   }
 
-  /** Chunk-walking RIFF parse: RIFF/WAVE header, then fmt (format tag,
-    * channels, sample rate, bits) and data chunks in any order, unknown
-    * chunks skipped with word alignment — what any WAV codec does. Loud on
-    * non-PCM, non-16-bit, or truncated containers.
+  /** The fmt fields and data chunk of a RIFF/WAVE payload. */
+  private final case class RiffWave(fmtTag: Int, channels: Int,
+                                    sampleRate: Int, bits: Int,
+                                    data: Array[Byte])
+
+  private def badWav(msg: String, ctx: String): Nothing =
+    throw new IllegalArgumentException(s"$msg ($ctx)")
+
+  /** The one chunk walker every WAV decode stage shares: RIFF/WAVE header,
+    * then fmt (format tag, channels, sample rate, bits) and data chunks in
+    * any order, unknown chunks skipped with word alignment — what any WAV
+    * codec does. Loud on truncated containers, a missing fmt or data
+    * chunk, and a fmt chunk declaring 0 channels; each stage checks its
+    * own format tag and bit depth.
     */
-  private def riffParse(b: Array[Byte], ctx: => String): WavFeature = {
-    def fail(msg: String): Nothing =
-      throw new IllegalArgumentException(s"$msg ($ctx)")
+  private def riffWalk(b: Array[Byte], ctx: => String): RiffWave = {
+    def fail(msg: String): Nothing = badWav(msg, ctx)
     val buf = java.nio.ByteBuffer.wrap(b).order(java.nio.ByteOrder.LITTLE_ENDIAN)
     def tag(): String = {
       val t = new Array[Byte](4); buf.get(t); new String(t, "US-ASCII")
@@ -310,15 +319,32 @@ object Multimodal {
     }
     if (fmtTag == -1) fail("missing fmt chunk")
     if (data == null) fail("missing data chunk")
-    if (fmtTag != 1 || bits != 16) fail(s"unsupported WAV layout (tag=$fmtTag bits=$bits)")
-    val n = data.length / (2 * channels)
+    if (channels == 0) fail("fmt chunk declares 0 channels")
+    RiffWave(fmtTag, channels, sampleRate, bits, data)
+  }
+
+  /** 16-bit PCM decode over [[riffWalk]]: loud on non-PCM or non-16-bit. */
+  private def riffParse(b: Array[Byte], ctx: => String): WavFeature = {
+    val w = riffWalk(b, ctx)
+    if (w.fmtTag != 1 || w.bits != 16)
+      badWav(s"unsupported WAV layout (tag=${w.fmtTag} bits=${w.bits})", ctx)
+    val data = w.data
+    val n = data.length / (2 * w.channels)
     var sum = 0.0
     var k = 0
     while (k + 1 < data.length) {
       sum += math.abs(((data(k) & 0xff) | (data(k + 1) << 8)).toShort.toInt)
       k += 2
     }
-    WavFeature(-1L, sampleRate, channels, n, sum / math.max(n * channels, 1))
+    WavFeature(-1L, w.sampleRate, w.channels, n, sum / math.max(n * w.channels, 1))
+  }
+
+  /** The μ-law data chunk of a payload: loud on anything but 8-bit μ-law. */
+  private def ulawData(b: Array[Byte], docId: Long): Array[Byte] = {
+    val w = riffWalk(b, s"doc $docId")
+    if (w.fmtTag != 7 || w.bits != 8)
+      badWav(s"not μ-law WAV (tag=${w.fmtTag} bits=${w.bits})", s"doc $docId")
+    w.data
   }
 
   private def jdkDecode(payload: Array[Byte]): WavFeature = {
@@ -787,37 +813,7 @@ object Multimodal {
   val ulawDecodeFn: Iterator[ImgRow] => Iterator[UlawFeature] = rows => {
     var canaryDone = false
     rows.map { r =>
-      def fail(msg: String): Nothing =
-        throw new IllegalArgumentException(s"$msg (doc ${r.doc_id})")
-      val buf = java.nio.ByteBuffer.wrap(r.payload)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      def tag(): String = {
-        val t = new Array[Byte](4); buf.get(t); new String(t, "US-ASCII")
-      }
-      if (r.payload.length < 12 || tag() != "RIFF") fail("not a RIFF container")
-      buf.getInt
-      if (tag() != "WAVE") fail("not a WAVE form")
-      var fmtTag = -1; var bits = -1
-      var data: Array[Byte] = null
-      while (buf.remaining() >= 8) {
-        val ck = tag(); val len = buf.getInt
-        if (len < 0 || len > buf.remaining()) fail(s"truncated '$ck' chunk")
-        ck match {
-          case "fmt " =>
-            if (len < 16) fail("fmt chunk too short")
-            val p = buf.position()
-            fmtTag = buf.getShort & 0xffff
-            buf.getShort; buf.getInt; buf.getInt; buf.getShort
-            bits = buf.getShort & 0xffff
-            buf.position(p + len + (len & 1))
-          case "data" =>
-            data = new Array[Byte](len); buf.get(data)
-            if ((len & 1) == 1 && buf.remaining() > 0) buf.get
-          case _ => buf.position(buf.position() + len + (len & 1))
-        }
-      }
-      if (fmtTag != 7 || bits != 8) fail(s"not μ-law WAV (tag=$fmtTag bits=$bits)")
-      if (data == null) fail("missing data chunk")
+      val data = ulawData(r.payload, r.doc_id)
       var sum = 0L
       var k = 0
       while (k < data.length) {
@@ -876,37 +872,7 @@ object Multimodal {
     */
   val ulawDecodeHashFn: Iterator[ImgRow] => Iterator[AudioHash] = rows => {
     rows.map { r =>
-      def fail(msg: String): Nothing =
-        throw new IllegalArgumentException(s"$msg (doc ${r.doc_id})")
-      val buf = java.nio.ByteBuffer.wrap(r.payload)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      def tag(): String = {
-        val t = new Array[Byte](4); buf.get(t); new String(t, "US-ASCII")
-      }
-      if (r.payload.length < 12 || tag() != "RIFF") fail("not a RIFF container")
-      buf.getInt
-      if (tag() != "WAVE") fail("not a WAVE form")
-      var fmtTag = -1; var bits = -1
-      var data: Array[Byte] = null
-      while (buf.remaining() >= 8) {
-        val ck = tag(); val len = buf.getInt
-        if (len < 0 || len > buf.remaining()) fail(s"truncated '$ck' chunk")
-        ck match {
-          case "fmt " =>
-            if (len < 16) fail("fmt chunk too short")
-            val p = buf.position()
-            fmtTag = buf.getShort & 0xffff
-            buf.getShort; buf.getInt; buf.getInt; buf.getShort
-            bits = buf.getShort & 0xffff
-            buf.position(p + len + (len & 1))
-          case "data" =>
-            data = new Array[Byte](len); buf.get(data)
-            if ((len & 1) == 1 && buf.remaining() > 0) buf.get
-          case _ => buf.position(buf.position() + len + (len & 1))
-        }
-      }
-      if (fmtTag != 7 || bits != 8) fail(s"not μ-law WAV (tag=$fmtTag bits=$bits)")
-      if (data == null) fail("missing data chunk")
+      val data = ulawData(r.payload, r.doc_id)
       var hash = 0xcbf29ce484222325L // FNV-1a 64 offset basis
       var k = 0
       while (k < data.length) {

@@ -1,8 +1,9 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import Similarity.asDouble
 
 /** Product quantization (Jégou et al., "Product Quantization for Nearest
   * Neighbor Search", TPAMI 2011): each D-dim vector splits into m
@@ -34,8 +35,6 @@ object Pq {
                            codebooks: Seq[Seq[Seq[Double]]]) {
     def ds: Int = dim / m
   }
-
-  private def asDouble(c: Column): Column = c.cast("array<double>")
 
   /** Train m per-subspace codebooks on a bounded, id-ordered sample
     * collected to the driver (≤ `maxTrainRows` rows — 16k 64-dim vectors
@@ -131,23 +130,12 @@ object Pq {
     // approx distance = m lookups (no per-pair float math beyond the adds);
     // codegen'd kernel — stays inside the join stage's WholeStageCodegen
     val adc = graft.functions.PqFunctions.pqAdc(col("codes"), col("tables"))
-    val wS = Window.partitionBy("q_id").orderBy(col("adist").asc, col("n_id").asc)
-    val short = encoded.crossJoin(broadcast(q.select("q_id", "tables")))
-      .filter(col("n_id") =!= col("q_id"))
-      .withColumn("adist", adc)
-      .withColumn("srank", row_number().over(wS))
-      .filter(col("srank") <= shortlist)
-      .select("q_id", "n_id")
-    // exact rerank: shortlist ids (|Q|·shortlist rows) broadcast back into
-    // one corpus scan; ordering below here is exact cosine
-    val c = corpus.select(col(idCol).as("n_id"), asDouble(col(vecCol)).as("n_vec"))
-    val wK = Window.partitionBy("q_id").orderBy(col("sim").desc, col("n_id").asc)
-    c.join(broadcast(short), "n_id")
-      .join(broadcast(q.select(col("q_id"), col("q_vec"))), "q_id")
-      .withColumn("sim", Similarity.cosine(col("q_vec"), col("n_vec")))
-      .withColumn("rank", row_number().over(wK))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), col("rank"), round(col("sim"), 6).as("sim"))
+    val short = Similarity.shortlistIds(
+      encoded.crossJoin(broadcast(q.select("q_id", "tables")))
+        .filter(col("n_id") =!= col("q_id"))
+        .withColumn("adist", adc), col("adist").asc, shortlist)
+    Similarity.rerankBroadcast(short, corpus, q.select(col("q_id"), col("q_vec")),
+      k, idCol, vecCol)
   }
 
   /** Decode codes back to the reconstructed (quantized) vector — the

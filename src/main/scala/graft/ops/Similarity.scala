@@ -39,7 +39,14 @@ object Similarity {
   def cosineHof(a: Column, b: Column): Column =
     dotHof(a, b) / (sqrt(dotHof(a, a)) * sqrt(dotHof(b, b)))
 
-  private def asDouble(c: Column): Column = c.cast("array<double>")
+  /** The vector form every operator computes on. */
+  private[ops] def asDouble(c: Column): Column = c.cast("array<double>")
+
+  /** (`side`_id, `side`_vec) rows of an id/embedding frame. */
+  private[ops] def vectors(df: DataFrame, idCol: String, vecCol: String,
+                           side: String): DataFrame =
+    df.select(col(idCol).as(s"${side}_id"),
+      asDouble(col(vecCol)).as(s"${side}_vec"))
 
   /** Exact top-k cosine neighbors for each query vector. `queries` MUST be
     * small (it is broadcast); ranking ties break on neighbor id.
@@ -47,17 +54,75 @@ object Similarity {
     */
   def bruteForceKnn(corpus: DataFrame, queries: DataFrame, k: Int,
                     idCol: String = "vec_id",
-                    vecCol: String = "embedding"): DataFrame = {
-    val c = corpus.select(col(idCol).as("n_id"), asDouble(col(vecCol)).as("n_vec"))
-    val q = queries.select(col(idCol).as("q_id"), asDouble(col(vecCol)).as("q_vec"))
-    val w = Window.partitionBy("q_id").orderBy(col("sim").desc, col("n_id").asc)
-    c.crossJoin(broadcast(q))
+                    vecCol: String = "embedding"): DataFrame =
+    topK(vectors(corpus, idCol, vecCol, "n")
+      .crossJoin(broadcast(vectors(queries, idCol, vecCol, "q")))
       .filter(col("n_id") =!= col("q_id"))
-      .withColumn("sim", cosine(col("q_vec"), col("n_vec")))
-      .withColumn("rank", row_number().over(w))
+      .withColumn("sim", cosine(col("q_vec"), col("n_vec"))), k)
+
+  // --------------------------------------------------- kNN ranking contract
+  // Every kNN entry point in graft.ops (brute, LSH, IVF, PQ, SQ8, sign-bit,
+  // IVF-SQ, IVF-PQ; bucketedKnn past its TopKByKey aggregate, which keeps
+  // the same order) ranks through the helpers below, and SparkEntry's
+  // ExactKnnOracle replays [[topK]] in SQL. Each scheme keeps only how it
+  // scores candidates and how it trains.
+
+  /** The exact top-k tail: each query's candidates rank by `sim` desc,
+    * ties on `n_id` asc; ranks <= k leave as (q_id, n_id, rank,
+    * round(sim, 6)). */
+  private[ops] def topK(scored: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy("q_id").orderBy(col("sim").desc, col("n_id").asc)
+    scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("q_id"), col("n_id"), col("rank"), round(col("sim"), 6).as("sim"))
   }
+
+  /** The approximate shortlist rank: `qrank` numbers each query's
+    * candidates under the scheme's score order `by` (best first), ties on
+    * `n_id` asc. */
+  private[ops] def approxRank(scored: DataFrame, by: Column): DataFrame =
+    scored.withColumn("qrank", row_number().over(
+      Window.partitionBy("q_id").orderBy(by, col("n_id").asc)))
+
+  /** The (q_id, n_id) ids of each query's `n` best candidates under `by`. */
+  private[ops] def shortlistIds(scored: DataFrame, by: Column, n: Int): DataFrame =
+    approxRank(scored, by).filter(col("qrank") <= n).select("q_id", "n_id")
+
+  /** The margin twin of a shortlist search: the worst [[approxRank]] at
+    * which any TRUE top-k neighbor sits among `scored` — the search is
+    * exact while its shortlist is at least this. Null-safe: an empty
+    * truth join fails with the contract message, not an NPE. */
+  private[ops] def worstTrueRank(scored: DataFrame, by: Column,
+                                 corpus: DataFrame, queries: DataFrame,
+                                 k: Int, idCol: String, vecCol: String,
+                                 what: String): Int = {
+    val truth = bruteForceKnn(corpus, queries, k, idCol, vecCol)
+      .select("q_id", "n_id")
+    val row = approxRank(scored, by).join(truth, Seq("q_id", "n_id"))
+      .agg(max("qrank")).head
+    require(!row.isNullAt(0),
+      s"$what margin: empty truth join (no queries, empty corpus, or no " +
+        "true neighbor among the scored candidates — for IVF, raise nprobe)")
+    row.getInt(0)
+  }
+
+  /** Exact-cosine rerank of a (q_id, n_id) shortlist, then [[topK]].
+    * The shortlist is not broadcast: s18's holds corpus/2 rows per query. */
+  private[ops] def rerank(short: DataFrame, corpus: DataFrame,
+                          queries: DataFrame, k: Int, idCol: String,
+                          vecCol: String): DataFrame =
+    topK(short.join(vectors(corpus, idCol, vecCol, "n"), "n_id")
+      .join(broadcast(vectors(queries, idCol, vecCol, "q")), "q_id")
+      .withColumn("sim", cosine(col("q_vec"), col("n_vec"))), k)
+
+  /** [[rerank]] with the shortlist broadcast into one corpus scan (a PQ
+    * shortlist holds at most |Q|·shortlist rows); `qVecs` is (q_id, q_vec). */
+  private[ops] def rerankBroadcast(short: DataFrame, corpus: DataFrame,
+                                   qVecs: DataFrame, k: Int, idCol: String,
+                                   vecCol: String): DataFrame =
+    topK(vectors(corpus, idCol, vecCol, "n").join(broadcast(short), "n_id")
+      .join(broadcast(qVecs), "q_id")
+      .withColumn("sim", cosine(col("q_vec"), col("n_vec"))), k)
 
   /** Shared coarse-cell quantizer for cell-bucketed operators: trained
     * ONCE (on the corpus), assigns any frame — flat literal centroids
@@ -163,8 +228,7 @@ object Similarity {
                   idCol: String = "vec_id", vecCol: String = "embedding",
                   trainSampleFraction: Double = 1.0,
                   seed: Long = 42L): DataFrame = {
-    val c0 = corpus.select(col(idCol).as("n_id"),
-      asDouble(col(vecCol)).as("n_vec"))
+    val c0 = vectors(corpus, idCol, vecCol, "n")
     val cells =
       if (nlist > 0) nlist
       else {
@@ -207,7 +271,7 @@ object Similarity {
       c0.withColumn("n_nrm", sqrt(dot(col("n_vec"), col("n_vec")))),
       "n_id", "n_vec", 1)
     val q = withCells(
-      queries.select(col(idCol).as("q_id"), asDouble(col(vecCol)).as("q_vec"))
+      vectors(queries, idCol, vecCol, "q")
         .withColumn("q_nrm", sqrt(dot(col("q_vec"), col("q_vec")))),
       "q_id", "q_vec", probe)
     // deliberately NO broadcast() on either side: the cell join must plan
@@ -252,14 +316,7 @@ object Similarity {
         .select(col("q_id"), col("__t").getField("id").as("n_id"),
           (col("__pos") + 1).cast("int").as("rank"),
           round(col("__t").getField("key"), 6).as("sim"))
-    } else {
-      val w = Window.partitionBy("q_id").orderBy(col("sim").desc, col("n_id").asc)
-      cand
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select(col("q_id"), col("n_id"), col("rank"),
-          round(col("sim"), 6).as("sim"))
-    }
+    } else topK(cand, k)
   }
 
   /** Deterministic pseudo-random hyperplanes: seeded Gaussian components —
@@ -374,8 +431,8 @@ object Similarity {
           return bruteForceKnn(corpus, queries, k, idCol, vecCol)
         (t.toInt, planes)
       }
-    val cv = corpus.select(col(idCol).as("n_id"), asDouble(col(vecCol)).as("n_vec"))
-    val qv = queries.select(col(idCol).as("q_id"), asDouble(col(vecCol)).as("q_vec"))
+    val cv = vectors(corpus, idCol, vecCol, "n")
+    val qv = vectors(queries, idCol, vecCol, "q")
     val c = cv.select(col("n_id"),
       explode(lshBucketArray(col("n_vec"), nTables, nPlanes, dim)).as("bucket"))
     val q = qv.select(col("q_id"),
@@ -386,12 +443,8 @@ object Similarity {
     val candidates = c.join(broadcast(q), "bucket")
       .filter(col("n_id") =!= col("q_id"))
       .select("q_id", "n_id").distinct()
-    val w = Window.partitionBy("q_id").orderBy(col("sim").desc, col("n_id").asc)
-    candidates.join(broadcast(qv), "q_id").join(cv, "n_id")
-      .withColumn("sim", cosine(col("q_vec"), col("n_vec")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), col("rank"), round(col("sim"), 6).as("sim"))
+    topK(candidates.join(broadcast(qv), "q_id").join(cv, "n_id")
+      .withColumn("sim", cosine(col("q_vec"), col("n_vec"))), k)
   }
 
   /** All pairs with cosine ≥ threshold among vectors sharing any table-bucket
@@ -433,7 +486,7 @@ object Similarity {
       }
     // single-reference now (inline verify): no repartition — the old shape
     // pre-partitioned by id for the two verify joins this path no longer has
-    val vecs = df.select(col(idCol).as("nd_id"), asDouble(col(vecCol)).as("nd_vec"))
+    val vecs = vectors(df, idCol, vecCol, "nd")
     // one shuffle: members ride the table-bucket group WITH their vectors
     // and each bucket verifies its pairs inline in the cell_pairs kernel
     // (targetOcc = maxBucket ⇒ the kernel's sub-quantizer never engages —
@@ -516,7 +569,7 @@ object Similarity {
         val n = math.max(if (corpusSizeHint > 0) corpusSizeHint else df.count(), 1L)
         math.min(4096, math.max(16, math.ceil(n / targetOcc.toDouble).toInt))
       }
-    val vecs = df.select(col(idCol).as("nd_id"), asDouble(col(vecCol)).as("nd_vec"))
+    val vecs = vectors(df, idCol, vecCol, "nd")
       .repartition(col("nd_id"))
     // Assignment path splits on nlist: the flat literal-centroid scan is
     // the fastest shape while the per-row constant stays small, but it is

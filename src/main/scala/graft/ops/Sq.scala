@@ -1,8 +1,9 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import Similarity.asDouble
 
 /** Scalar quantization (SQ8): every embedding component rounds to a
   * signed int8 against ONE global symmetric scale — the simplest, most
@@ -29,8 +30,6 @@ import org.apache.spark.sql.functions._
   * the codes scan + an id-keyed hash join for the rerank's raw vectors.
   */
 object Sq {
-
-  private def asDouble(c: Column): Column = c.cast("array<double>")
 
   /** 127 / max|component| over the corpus — one distributed scalar. */
   def trainScale(corpus: DataFrame, vecCol: String = "embedding"): Double = {
@@ -75,6 +74,21 @@ object Sq {
       .otherwise(dotCodes(nCode, qCode).cast("double") / (nNorm * qNorm))
   }
 
+  /** Quantized-cosine score `sim_q` of every (query, corpus) pair from
+    * codes alone (scale cancels in the ratio): the frame [[search]]
+    * shortlists and [[worstTrueNeighborRank]] measures. */
+  private def scored(encoded: DataFrame, queries: DataFrame, scale: Double,
+                     idCol: String, vecCol: String): DataFrame = {
+    val qCodes = encode(queries, scale, idCol, vecCol)
+      .select(col("n_id").as("q_id"), col("n_code").as("q_code"))
+    val qn = broadcast(qCodes.withColumn("q_norm",
+      sqrt(dotCodes(col("q_code"), col("q_code")).cast("double"))))
+    encoded.crossJoin(qn)
+      .filter(col("n_id") =!= col("q_id"))
+      .withColumn("sim_q", quantizedCosine(
+        col("n_code"), col("q_code"), col("q_norm")))
+  }
+
   /** Top-k cosine neighbors: quantized-cosine shortlist from the codes
     * scan, exact rerank of the shortlist against the raw vectors. Output
     * (q_id, n_id, rank, sim) — s01's shape, certified exact as long as
@@ -85,33 +99,12 @@ object Sq {
              idCol: String = "vec_id",
              vecCol: String = "embedding"): DataFrame = {
     require(shortlist >= k, s"shortlist $shortlist < k $k")
-    val qCodes = encode(queries, scale, idCol, vecCol)
-      .select(col("n_id").as("q_id"), col("n_code").as("q_code"))
-    // quantized cosine: scale cancels in the ratio, so codes alone rank
-    val qn = broadcast(qCodes.withColumn("q_norm",
-      sqrt(dotCodes(col("q_code"), col("q_code")).cast("double"))))
-    val simQ = encoded.crossJoin(qn)
-      .filter(col("n_id") =!= col("q_id"))
-      .withColumn("sim_q", quantizedCosine(
-        col("n_code"), col("q_code"), col("q_norm")))
-    val wq = Window.partitionBy("q_id")
-      .orderBy(col("sim_q").desc, col("n_id").asc)
-    val short = simQ.withColumn("qrank", row_number().over(wq))
-      .filter(col("qrank") <= shortlist)
-      .select("q_id", "n_id", "qrank")
-    // exact rerank: raw vectors join back by id (broadcast query side)
-    val rawC = corpus.select(col(idCol).as("n_id"),
-      asDouble(col(vecCol)).as("n_vec"))
-    val rawQ = broadcast(queries.select(col(idCol).as("q_id"),
-      asDouble(col(vecCol)).as("q_vec")))
-    val exact = short.join(rawC, "n_id").join(rawQ, "q_id")
-      .withColumn("sim", Similarity.cosine(col("q_vec"), col("n_vec")))
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("sim").desc, col("n_id").asc)
-    exact.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), col("rank"),
-        round(col("sim"), 6).as("sim"))
+    // qrank rides into the rerank join unused: s17's wire plan numbers
+    // its columns by this projection
+    val short = Similarity.approxRank(
+      scored(encoded, queries, scale, idCol, vecCol), col("sim_q").desc)
+      .filter(col("qrank") <= shortlist).select("q_id", "n_id", "qrank")
+    Similarity.rerank(short, corpus, queries, k, idCol, vecCol)
   }
 
   // ------------------------------------------------------------- sign-bit
@@ -139,6 +132,18 @@ object Sq {
       (x, y) => bit_count(x.bitwiseXOR(y)).cast("long")),
       lit(0L), (acc, x) => acc + x)
 
+  /** Hamming distance `ham` of every (query, corpus) pair of sign codes:
+    * the frame [[searchSign]] shortlists and
+    * [[worstTrueNeighborSignRank]] measures. */
+  private def signScored(signs: DataFrame, queries: DataFrame, idCol: String,
+                         vecCol: String): DataFrame = {
+    val qSigns = broadcast(signEncode(queries, idCol, vecCol)
+      .select(col("n_id").as("q_id"), col("n_sign").as("q_sign")))
+    signs.crossJoin(qSigns)
+      .filter(col("n_id") =!= col("q_id"))
+      .withColumn("ham", hamming(col("n_sign"), col("q_sign")))
+  }
+
   /** Top-k cosine neighbors from a Hamming shortlist over sign codes +
     * exact rerank. One-bit codes are a COARSE proxy: the measured worst
     * true-neighbor Hamming rank sits at a stable ~1/3 of the corpus
@@ -153,28 +158,9 @@ object Sq {
                  k: Int, shortlist: Int, idCol: String = "vec_id",
                  vecCol: String = "embedding"): DataFrame = {
     require(shortlist >= k, s"shortlist $shortlist < k $k")
-    val qSigns = broadcast(signEncode(queries, idCol, vecCol)
-      .select(col("n_id").as("q_id"), col("n_sign").as("q_sign")))
-    val shortHam = signs.crossJoin(qSigns)
-      .filter(col("n_id") =!= col("q_id"))
-      .withColumn("ham", hamming(col("n_sign"), col("q_sign")))
-    val wq = Window.partitionBy("q_id")
-      .orderBy(col("ham").asc, col("n_id").asc)
-    val short = shortHam.withColumn("qrank", row_number().over(wq))
-      .filter(col("qrank") <= shortlist)
-      .select("q_id", "n_id")
-    val rawC = corpus.select(col(idCol).as("n_id"),
-      asDouble(col(vecCol)).as("n_vec"))
-    val rawQ = broadcast(queries.select(col(idCol).as("q_id"),
-      asDouble(col(vecCol)).as("q_vec")))
-    val exact = short.join(rawC, "n_id").join(rawQ, "q_id")
-      .withColumn("sim", Similarity.cosine(col("q_vec"), col("n_vec")))
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("sim").desc, col("n_id").asc)
-    exact.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), col("rank"),
-        round(col("sim"), 6).as("sim"))
+    Similarity.rerank(Similarity.shortlistIds(
+      signScored(signs, queries, idCol, vecCol), col("ham").asc, shortlist),
+      corpus, queries, k, idCol, vecCol)
   }
 
   /** The sign-code margin twin of [[worstTrueNeighborRank]]: the worst
@@ -182,27 +168,9 @@ object Sq {
   def worstTrueNeighborSignRank(signs: DataFrame, corpus: DataFrame,
                                 queries: DataFrame, k: Int,
                                 idCol: String = "vec_id",
-                                vecCol: String = "embedding"): Int = {
-    val truth = Similarity.bruteForceKnn(corpus, queries, k, idCol, vecCol)
-      .select("q_id", "n_id")
-    val qSigns = broadcast(signEncode(queries, idCol, vecCol)
-      .select(col("n_id").as("q_id"), col("n_sign").as("q_sign")))
-    val ranked = signs.crossJoin(qSigns)
-      .filter(col("n_id") =!= col("q_id"))
-      .withColumn("ham", hamming(col("n_sign"), col("q_sign")))
-      .withColumn("qrank", row_number().over(Window.partitionBy("q_id")
-        .orderBy(col("ham").asc, col("n_id").asc)))
-    maxRank(ranked.join(truth, Seq("q_id", "n_id")), "sign")
-  }
-
-  /** Null-safe max over the truth join: empty queries/corpus aggregate to
-    * NULL — surface the loud contract message, not an NPE. */
-  private def maxRank(joined: DataFrame, what: String): Int = {
-    val row = joined.agg(max("qrank")).head
-    require(!row.isNullAt(0),
-      s"SQ $what margin: empty truth join (no queries or empty corpus)")
-    row.getInt(0)
-  }
+                                vecCol: String = "embedding"): Int =
+    Similarity.worstTrueRank(signScored(signs, queries, idCol, vecCol),
+      col("ham").asc, corpus, queries, k, idCol, vecCol, "SQ sign")
 
   /** Measurement twin for the shortlist-margin claim: the worst quantized
     * rank (qrank) at which any TRUE top-k neighbor sits — `shortlist`
@@ -210,21 +178,7 @@ object Sq {
   def worstTrueNeighborRank(encoded: DataFrame, corpus: DataFrame,
                             queries: DataFrame, scale: Double, k: Int,
                             idCol: String = "vec_id",
-                            vecCol: String = "embedding"): Int = {
-    val truth = Similarity.bruteForceKnn(corpus, queries, k, idCol, vecCol)
-      .select("q_id", "n_id")
-    // rank in the QUANTIZED ordering of each true neighbor
-    val qCodes = encode(queries, scale, idCol, vecCol)
-      .select(col("n_id").as("q_id"), col("n_code").as("q_code"))
-    val qn = broadcast(qCodes.withColumn("q_norm",
-      sqrt(dotCodes(col("q_code"), col("q_code")).cast("double"))))
-    val simQ = encoded.crossJoin(qn)
-      .filter(col("n_id") =!= col("q_id"))
-      .withColumn("sim_q", quantizedCosine(
-        col("n_code"), col("q_code"), col("q_norm")))
-    val wq = Window.partitionBy("q_id")
-      .orderBy(col("sim_q").desc, col("n_id").asc)
-    val ranked = simQ.withColumn("qrank", row_number().over(wq))
-    maxRank(ranked.join(truth, Seq("q_id", "n_id")), "sq8")
-  }
+                            vecCol: String = "embedding"): Int =
+    Similarity.worstTrueRank(scored(encoded, queries, scale, idCol, vecCol),
+      col("sim_q").desc, corpus, queries, k, idCol, vecCol, "SQ sq8")
 }

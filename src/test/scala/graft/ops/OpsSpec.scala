@@ -864,6 +864,25 @@ class OpsSpec extends SparkTestBase {
       e3.getMessage)
   }
 
+  test("a PCM WAV whose fmt chunk declares 0 channels fails typed") {
+    val pcm = Array.fill[Byte](8)(1)
+    val b = java.nio.ByteBuffer.allocate(44 + pcm.length)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    b.put("RIFF".getBytes("US-ASCII")).putInt(36 + pcm.length)
+      .put("WAVE".getBytes("US-ASCII"))
+    b.put("fmt ".getBytes("US-ASCII")).putInt(16)
+      .putShort(1.toShort)    // PCM
+      .putShort(0.toShort)    // channels = 0
+      .putInt(8000).putInt(0) // sample rate, byte rate
+      .putShort(0.toShort)    // block align
+      .putShort(16.toShort)   // bits per sample
+    b.put("data".getBytes("US-ASCII")).putInt(pcm.length).put(pcm)
+    val e = intercept[IllegalArgumentException] {
+      Multimodal.audioDecodeFn(Iterator(Multimodal.ImgRow(1L, b.array()))).toList
+    }
+    assert(e.getMessage.contains("0 channels"), e.getMessage)
+  }
+
   test("real image resize: stride-2 resample through the codec matches the rule") {
     import spark.implicits._
     // doc 10: w = 1 + (10%7)*2 = 7, h = 1 + (10%5)*3 = 1 → resized 4×1
