@@ -23,15 +23,7 @@ object KmeansKernel {
       val sums = Array.fill(k)(new Array[Double](d))
       val counts = new Array[Long](k)
       pts.foreach { p =>
-        var best = 0; var bestD = Double.MaxValue
-        var c = 0
-        while (c < k) {
-          var dist = 0.0; var i = 0
-          val cent = cents(c)
-          while (i < d) { val t = p(i) - cent(i); dist += t * t; i += 1 }
-          if (dist < bestD) { bestD = dist; best = c }
-          c += 1
-        }
+        val best = nearest(cents, p)
         val s = sums(best); var i = 0
         while (i < d) { s(i) += p(i); i += 1 }
         counts(best) += 1
@@ -41,6 +33,20 @@ object KmeansKernel {
         else sums(c).map(_ / counts(c)))
     }
     cents
+  }
+
+  /** Index of the centroid nearest `p` by squared L2 (the first on ties). */
+  def nearest(cents: Array[Array[Double]], p: Array[Double]): Int = {
+    var best = 0; var bestD = Double.MaxValue
+    var c = 0
+    while (c < cents.length) {
+      var dist = 0.0; var i = 0
+      val cent = cents(c)
+      while (i < p.length) { val t = p(i) - cent(i); dist += t * t; i += 1 }
+      if (dist < bestD) { bestD = dist; best = c }
+      c += 1
+    }
+    best
   }
 }
 

@@ -95,13 +95,8 @@ object Ivf {
                                   trainSampleFraction: Double,
                                   seed: Long, vecField: String,
                                   maxTrainRows: Int = 16384): Seq[Seq[Double]] = {
-    val idCol = base.columns.head
-    val sampled = (if (trainSampleFraction < 1.0)
-      base.sample(withReplacement = false, trainSampleFraction, seed) else base)
-      .orderBy(col(idCol)).limit(maxTrainRows) // TakeOrdered: bounded + stable
-    val rows = sampled.select(col(vecField)).collect()
-      .map(_.getSeq[Double](0).toArray)
-    require(rows.nonEmpty, "empty training sample")
+    val rows = Pq.trainingSample(base, base.columns.head, vecField,
+      trainSampleFraction, seed, maxTrainRows)
     Pq.lloyd(rows, nlist, iters = 5).map(_.toSeq).toSeq
   }
 
@@ -125,26 +120,11 @@ object Ivf {
                                      vecField: String,
                                      maxTrainRows: Int = 16384)
       : (Seq[Seq[Double]], Seq[(Int, Int, Seq[Double])]) = {
-    val idCol = base.columns.head
-    val sampled = (if (trainSampleFraction < 1.0)
-      base.sample(withReplacement = false, trainSampleFraction, seed) else base)
-      .orderBy(col(idCol)).limit(maxTrainRows)
-    val rows = sampled.select(col(vecField)).collect()
-      .map(_.getSeq[Double](0).toArray)
-    require(rows.nonEmpty, "empty training sample")
+    val rows = Pq.trainingSample(base, base.columns.head, vecField,
+      trainSampleFraction, seed, maxTrainRows)
     val k1 = math.min(64, math.max(8, math.ceil(math.sqrt(nlist.toDouble)).toInt))
     val coarse = Pq.lloyd(rows, k1, iters = 5)
-    def nearest(p: Array[Double]): Int = {
-      var best = 0; var bestD = Double.MaxValue; var c = 0
-      while (c < coarse.length) {
-        var dist = 0.0; var i = 0; val cent = coarse(c)
-        while (i < p.length) { val t = p(i) - cent(i); dist += t * t; i += 1 }
-        if (dist < bestD) { bestD = dist; best = c }
-        c += 1
-      }
-      best
-    }
-    val byCoarse = rows.groupBy(nearest)
+    val byCoarse = rows.groupBy(graft.functions.KmeansKernel.nearest(coarse, _))
     var fid = 0
     val fine = (0 until coarse.length).flatMap { c =>
       byCoarse.get(c) match {

@@ -38,26 +38,15 @@ object IvfPq {
             trainSampleFraction: Double = 1.0, seed: Long = 42L,
             maxTrainRows: Int = 16384): IvfPqIndex = {
     val base = Similarity.vectors(corpus, idCol, vecCol, "n")
-    val sampled = (if (trainSampleFraction < 1.0)
-      base.sample(withReplacement = false, trainSampleFraction, seed) else base)
-      .orderBy("n_id").limit(maxTrainRows)
-    val rows = sampled.select(col("n_vec")).collect()
-      .map(_.getSeq[Double](0).toArray)
-    require(rows.nonEmpty, "empty training sample")
+    val rows = Pq.trainingSample(base, "n_id", "n_vec", trainSampleFraction, seed,
+      maxTrainRows)
     val dim = rows(0).length
     require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
     val cents = Pq.lloyd(rows, nlist, iters = 5)
     // residuals of the SAME sample against their assigned cells train the
     // codebooks — all driver-side, bounded by the sample
     val residuals = rows.map { v =>
-      var best = 0; var bestD = Double.MaxValue
-      var c = 0
-      while (c < cents.length) {
-        var d = 0.0; var i = 0
-        while (i < dim) { val t = v(i) - cents(c)(i); d += t * t; i += 1 }
-        if (d < bestD) { bestD = d; best = c }
-        c += 1
-      }
+      val best = graft.functions.KmeansKernel.nearest(cents, v)
       val r = new Array[Double](dim)
       var i = 0
       while (i < dim) { r(i) = v(i) - cents(best)(i); i += 1 }

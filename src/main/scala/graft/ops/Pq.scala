@@ -48,12 +48,7 @@ object Pq {
             vecCol: String = "embedding", sampleFraction: Double = 1.0,
             seed: Long = 42L, maxTrainRows: Int = 16384): PqModel = {
     val base = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-    val sampled = (if (sampleFraction < 1.0)
-      base.sample(withReplacement = false, sampleFraction, seed) else base)
-      .orderBy("id").limit(maxTrainRows) // TakeOrdered: bounded + stable
-    val rows: Array[Array[Double]] = sampled.collect()
-      .map(r => r.getSeq[Double](1).toArray)
-    require(rows.nonEmpty, "empty training sample")
+    val rows = trainingSample(base, "id", "v", sampleFraction, seed, maxTrainRows)
     val dim = rows(0).length
     require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
     val ds = dim / m
@@ -62,6 +57,21 @@ object Pq {
       lloyd(subs, k, iters = 10).map(_.toSeq).toSeq
     }
     PqModel(m, k, dim, books)
+  }
+
+  /** The bounded, id-ordered training sample every quantizer trains on:
+    * `base` sampled when `fraction` < 1, then its first `maxTrainRows` rows
+    * by `idCol` (TakeOrdered: bounded + stable) with `vecCol` collected to
+    * the driver. */
+  private[ops] def trainingSample(base: DataFrame, idCol: String, vecCol: String,
+                                  fraction: Double, seed: Long,
+                                  maxTrainRows: Int): Array[Array[Double]] = {
+    val sampled = (if (fraction < 1.0)
+      base.sample(withReplacement = false, fraction, seed) else base)
+      .orderBy(col(idCol)).limit(maxTrainRows)
+    val rows = sampled.select(col(vecCol)).collect().map(_.getSeq[Double](0).toArray)
+    require(rows.nonEmpty, "empty training sample")
+    rows
   }
 
   /** Deterministic Lloyd's: evenly-spaced initial centroids over the

@@ -2,21 +2,26 @@ package graft.substrait
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{plans => cp}
+import org.apache.spark.sql.catalyst.analysis.{MultiAlias, UnresolvedExtractValue,
+  UnresolvedFunction, UnresolvedRelation}
 import org.apache.spark.sql.catalyst.expressions.{Add, Alias, And, Ascending, Attribute,
-  CaseWhen, Cast, CreateArray, CreateMap, Descending, Divide, EqualNullSafe, EqualTo, ExprId,
-  Expression, GetStructField, GreaterThan, GreaterThanOrEqual, GroupingSets, IsNotNull, IsNull,
-  LessThan, LessThanOrEqual, Literal, Multiply, NamedExpression, Not, NullsFirst, NullsLast, Or,
-  Remainder, ScalarSubquery, SortOrder, Subtract, UnaryMinus}
+  BitwiseAnd, BitwiseOr, BitwiseXor, CaseWhen, Cast, Coalesce, Concat, CreateArray, CreateMap,
+  CurrentRow, Descending, Divide, EqualNullSafe, EqualTo, Explode, ExprId, Expression,
+  ExtractValue, GeneratorOuter, GetStructField, GreaterThan, GreaterThanOrEqual, Grouping,
+  GroupingID, GroupingSets, Inline, IsNotNull, IsNull, LambdaFunction, LessThan,
+  LessThanOrEqual, Like, Literal, Multiply, NamedExpression, Not, NullsFirst, NullsLast, Or,
+  PosExplode, RLike, RangeFrame, Remainder, RowFrame, ScalarSubquery, SortOrder,
+  SpecifiedWindowFrame, Subtract, UnaryMinus, UnboundedFollowing, UnboundedPreceding,
+  UnresolvedNamedLambdaVariable, UnspecifiedFrame, WindowExpression, WindowSpecDefinition}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateFunction, Average, Count,
-  Max, Min, Mode, PercentileDisc, Sum}
+  First, Last, Max, Min, Mode, PercentileDisc, Sum}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Deduplicate, Except, Intersect,
   Join, JoinHint, Limit, LocalRelation, LogicalPlan, Offset, Repartition,
   RepartitionByExpression, Sample, UnresolvedHint, Union, Project => PProject,
   Filter => PFilter, Sort => PSort}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
@@ -28,7 +33,7 @@ import model._
   *
   * Spark-native rebuild of the reference consumer (src/consumer.rs:74-380),
   * which turns each Rel into a DataFusion `LogicalPlan` node: here each Rel
-  * becomes a resolved Catalyst `LogicalPlan` node over its already-resolved
+  * becomes a Catalyst `LogicalPlan` node over its already-resolved
   * children, and the root is wrapped ONCE with `Dataset.ofRows`; Catalyst
   * then optimizes (pushdown, pruning, join strategy) and executes it.
   *
@@ -40,17 +45,20 @@ import model._
   * keeps the two sides of a self-join apart. The user-visible names come
   * from `RelRoot.names` at the root (consumer.rs:92-111).
   *
-  * Comparisons, arithmetic, boolean ops, null tests, literals, casts and
-  * the graft kernels ([[Kernels]], straight from their bound arguments,
-  * with no registry write) are built as Catalyst expressions directly.
-  * Everything else (registry-resolved functions, windows, lambdas,
-  * grouping sets, session windows) is built with the Column API over
-  * Columns that wrap the resolved arguments; a node holding such an
-  * expression, or one that comes out unresolved (a foreign plan that
-  * needs type coercion), is analyzed on its own against LocalRelation
-  * stubs of its children's output ([[ColumnBridge.analyzeNode]]).
-  * Analyzing each node once, instead of re-analyzing the growing plan at
-  * every DataFrame call, keeps consume linear in plan depth.
+  * Every wire expression is built as a Catalyst expression by one builder
+  * (`Ctx.toExpr`), as the reference builds every one as a DataFusion
+  * `Expr`. Operators, literals, casts, the graft kernels ([[Kernels]],
+  * straight from their bound arguments) and the structural nodes (LIKE,
+  * bitwise ops, constructors, field access) are built resolved; a
+  * registry-named function is an `UnresolvedFunction` the analyzer looks
+  * up, windows are `WindowExpression`s and lambdas `LambdaFunction`s over
+  * fresh variables. A node Catalyst reports unresolved (one holding such a
+  * function, a window or a generator, or a foreign plan that needs type
+  * coercion) is analyzed on its own against LocalRelation stubs of its
+  * children's output ([[ColumnBridge.analyzeNode]]); every other node is
+  * used as built. Analyzing each node once, instead of re-analyzing the
+  * growing plan at every DataFrame call, keeps consume linear in plan
+  * depth.
   */
 object Consumer {
 
@@ -113,27 +121,45 @@ object Consumer {
       ColumnBridge.ofRows(spark, root)
     }
 
+  /** Aggregates resolved through the session registry by their Spark name
+    * with the wire arguments as they are: plain-children aggregates whose
+    * builders take exactly the wire arguments (argmin/argmax, boolean/bit
+    * folds, robust moments, the linear-regression family — the producer
+    * guards the two with hidden flags: mode's within-group ordering and
+    * percentile_disc DESC), and the mergeable datasketches aggregates
+    * (ops.Sketches; value [, k/allowDiff]). */
+  private val registryAggregates: Set[String] = Set(
+    "median", "approx_count_distinct", "collect_list", "collect_set",
+    // exact interpolated percentile (substrait quantile/percentile_cont;
+    // Spark's percentile takes an optional frequency third arg)
+    "percentile",
+    "stddev_samp", "stddev_pop", "var_samp", "var_pop",
+    "covar_samp", "covar_pop", "corr",
+    "max_by", "min_by", "bool_and", "bool_or", "count_if",
+    "bit_and", "bit_or", "bit_xor", "skewness", "kurtosis", "mode",
+    "regr_slope", "regr_intercept", "regr_r2", "regr_avgx", "regr_avgy",
+    "regr_count", "every", "any", "some",
+    "hll_sketch_agg", "hll_union_agg",
+    "kll_sketch_agg_bigint", "kll_sketch_agg_double", "kll_sketch_agg_float",
+    "kll_merge_agg_bigint", "kll_merge_agg_double", "kll_merge_agg_float",
+    "count_min_sketch")
+
   private final class Ctx(spark: SparkSession, extMap: Map[Int, String],
                           stateBinding: Option[DataFrame] = None,
                           reliableIteration: Option[Boolean] = None) {
     private def name(ref: Int): String =
       extMap.getOrElse(ref, internalErr(s"unregistered function anchor $ref"))
 
-    /** analyzed catalog reads, by table name: a table read twice is looked
-      * up (and analyzed) once */
-    private val tables = mutable.Map.empty[String, LogicalPlan]
+    /** analyzed catalog reads, by multipart table name: a table read twice
+      * is looked up (and analyzed) once */
+    private val tables = mutable.Map.empty[Seq[String], LogicalPlan]
     /** every attribute a leaf of this consume has handed out */
     private val leafIds = mutable.HashSet.empty[ExprId]
-    /** set when the node being built holds a Column-API expression */
-    private var viaColumns = false
 
-    /** `p` as a resolved node: as built when it already is, else analyzed
-      * on its own over stubs of its children. */
-    private def node(p: LogicalPlan): LogicalPlan = {
-      val columns = viaColumns
-      viaColumns = false
-      if (p.resolved && !columns) p else ColumnBridge.analyzeNode(spark, p)
-    }
+    /** `p` as a resolved node: as built when Catalyst reports it resolved,
+      * else analyzed on its own over stubs of its children. */
+    private def node(p: LogicalPlan): LogicalPlan =
+      if (p.resolved) p else ColumnBridge.analyzeNode(spark, p)
 
     /** A leaf whose attributes another leaf of this consume already uses
       * (the same table read twice, the iteration state bound twice) is
@@ -204,8 +230,10 @@ object Consumer {
             // resolves like any named table (loud if absent)
             if (tableNames == Seq(IterationStateTable) && stateBinding.isDefined)
               stateBinding.get.queryExecution.analyzed
-            else tables.getOrElseUpdate(tableNames.mkString("."),
-              spark.table(tableNames.mkString(".")).queryExecution.analyzed)
+            // the wire name's parts ARE the identifier: joining them with
+            // "." and parsing again would split `a.b` and reject `t-1`
+            else tables.getOrElseUpdate(tableNames, ColumnBridge.ofRows(spark,
+              UnresolvedRelation(tableNames)).queryExecution.analyzed)
         })
         if (schema != null && schema.names.nonEmpty &&
             schema.names.size != base.output.size)
@@ -271,20 +299,18 @@ object Consumer {
 
       case Rel.ExtGenerate(input, gen, arg, outer, genArity) =>
         val in = build(input)
-        val c = toCol(arg, in.output)
-        val gcol = (gen, outer) match {
-          case ("explode", false) => explode(c)
-          case ("explode", true) => explode_outer(c)
-          case ("posexplode", false) => posexplode(c)
-          case ("posexplode", true) => posexplode_outer(c)
-          case ("inline", false) => inline(c)
-          case ("inline", true) => inline_outer(c)
-          case other => notImplemented(s"generator $other")
+        val c = toExpr(arg, in.output)
+        val g = gen match {
+          case "explode" => Explode(c)
+          case "posexplode" => PosExplode(c)
+          case "inline" => Inline(c)
+          case _ => notImplemented(s"generator ${(gen, outer)}")
         }
         // output schema is input columns ++ generator columns (one
-        // multi-alias), matching the producer's attrs
+        // multi-alias), matching the producer's attrs; the analyzer turns
+        // the Project into a Generate
         val names = Seq.tabulate(genArity)(j => s"_${in.output.size + j}")
-        node(PProject(in.output :+ fromCol(gcol.as(names)).asInstanceOf[NamedExpression], in))
+        node(PProject(in.output :+ MultiAlias(if (outer) GeneratorOuter(g) else g, names), in))
 
       case Rel.ExtExchange(input, exprs, num, shuffle, rangeDirs) =>
         val in = build(input)
@@ -331,13 +357,12 @@ object Consumer {
         // the same CalendarIntervalType Spark's analyzer derives from the
         // user's string gap column, which also re-adds the end > start
         // guard for non-positive per-row gaps.
-        val tsCol = ColumnBridge.column(in.output(tsField))
-        val sess = gapExpr match {
-          case Some(ge) =>
-            session_window(tsCol, toCol(ge, in.output).cast("interval"))
-          case None => session_window(tsCol, s"$gapMicros microseconds")
+        val gap = gapExpr match {
+          case Some(ge) => cast(toExpr(ge, in.output), CalendarIntervalType)
+          case None => Literal(s"$gapMicros microseconds")
         }
-        node(PProject(in.output :+ Alias(fromCol(sess), s"_${in.output.size}")(), in))
+        node(PProject(in.output :+ Alias(fn("session_window", Seq(in.output(tsField), gap)),
+          s"_${in.output.size}")(), in))
 
       case Rel.ExtIteration(input, bodyPlan, maxIters, checkFixpoint,
                             requireFixpoint) =>
@@ -424,6 +449,7 @@ object Consumer {
           val hook = Consumer.roundPlanHook
           if (hook != null) hook(next0)
           if (checkFixpoint) {
+            import org.apache.spark.sql.functions.{col, lit, sum}
             // exact multiset fixpoint in ONE job: union with +1/−1 weights,
             // group on the full row — any group with a nonzero weight sum is
             // a difference in either direction (two exceptAll passes would
@@ -458,7 +484,7 @@ object Consumer {
             s"columns, got ${in.output.size}")
         // the stage's input contract is positional: name the columns by
         // position before rebuilding
-        st.rebuild(spark, ColumnBridge.ofRows(spark, in).toDF(st.inputCols: _*))
+        st.rebuild(ColumnBridge.ofRows(spark, in).toDF(st.inputCols: _*))
           .queryExecution.analyzed
 
       case Rel.Set(inputs, op) =>
@@ -533,13 +559,11 @@ object Consumer {
             case (e, j) if !g.contains(e) => 1L << (union.size - 1 - j)
           }.sum
         }
-        val gid = grouping_id(keys.map(ColumnBridge.column): _*)
-        val setIdx = masks.zipWithIndex.tail
-          .foldLeft(when(gid === masks.head, 0)) {
-            case (acc, (m, i)) => acc.when(gid === m, i)
-          }.cast("int")
+        val gid = GroupingID(keys)
+        val setIdx = cast(CaseWhen(masks.zipWithIndex.map { case (m, i) =>
+          (EqualTo(gid, Literal(m)), Literal(i)) }), IntegerType)
         return node(Aggregate(Seq(GroupingSets(sets, keys)),
-          keys ++ aggs :+ Alias(fromCol(setIdx), s"_${keys.size + aggs.size}")(), base))
+          keys ++ aggs :+ Alias(setIdx, s"_${keys.size + aggs.size}")(), base))
       }
 
       val groups = named(groupings.headOption.getOrElse(Nil).map(toExpr(_, in.output)))
@@ -588,8 +612,12 @@ object Consumer {
         Alias(aggExpr(fname, args, distinct), s"_${from + j}")()
       }
 
-    /** The core aggregates and the kernel table's aggregates as Catalyst
-      * nodes; the rest through [[aggColumn]]'s Column table. */
+    /** A measure's aggregate: the core aggregates, the kernel table's and
+      * the structural ones as Catalyst nodes, the rest as registry calls
+      * under their Spark names ([[Producer.aggregateNames]] renames the
+      * DataFusion 15 names, consumer.rs:383-415 / SURVEY.md §2.4 A2). All
+      * run as native partial-agg (map-side combine) operators.
+      */
     private def aggExpr(fname: String, args: Seq[Expression], distinct: Boolean): Expression = {
       def agg(f: AggregateFunction, d: Boolean = distinct) = f.toAggregateExpression(d)
       (fname, distinct) match {
@@ -609,73 +637,24 @@ object Consumer {
         case (n @ ("mode_asc" | "mode_desc"), false) =>
           agg(Mode(args(0), 0, 0, Some(n == "mode_desc")))
         case (n, false) if Kernels.aggregates.contains(n) => kernel(Kernels.aggregates(n), args)
-        case _ => fromCol(aggColumn(fname, args.map(ColumnBridge.column), distinct))
-      }
-    }
-
-    /** DataFusion 15 aggregate names → Spark built-ins (consumer.rs:383-415 /
-      * SURVEY.md §2.4 A2). All run as native partial-agg (map-side combine)
-      * operators — no custom Aggregator needed.
-      */
-    private def aggColumn(fname: String, args: Seq[Column], distinct: Boolean): Column = {
-      def one: Column = args.head
-      if (distinct) fname match {
+        case (n @ ("first" | "first_ignore_nulls"), false) => agg(First(args.head, n != "first"))
+        case (n @ ("last" | "last_ignore_nulls"), false) => agg(Last(args.head, n != "last"))
+        case ("grouping", false) => Grouping(args.head)
         // array_agg(DISTINCT x) = the distinct value set in unspecified
         // order — exactly collect_set's contract
-        case "array_agg" => collect_set(one)
-        case other => notImplemented(s"DISTINCT aggregate $other")
-      } else fname match {
-        case "median" => median(one)
-        case "approx_distinct" => approx_count_distinct(one)
-        case "approx_median" => percentile_approx(one, lit(0.5), lit(10000))
-        case "approx_percentile_cont" =>
-          val acc = if (args.size > 2) args(2) else lit(10000)
-          percentile_approx(args.head, args(1), acc)
-        case "array_agg" => collect_list(one)
-        // exact interpolated percentile (substrait quantile/percentile_cont;
-        // Spark's percentile takes an optional frequency third arg)
-        case "percentile_cont" | "percentile" =>
-          if (args.size > 2) percentile(args.head, args(1), args(2))
-          else percentile(args.head, args(1))
-        case "stddev" | "stddev_samp" => stddev_samp(one)
-        case "stddev_pop" => stddev_pop(one)
-        case "variance" | "var_samp" => var_samp(one)
-        case "var_pop" => var_pop(one)
-        case "covariance" | "covar_samp" => covar_samp(args.head, args(1))
-        case "covariance_pop" | "covar_pop" => covar_pop(args.head, args(1))
-        case "correlation" | "corr" => corr(args.head, args(1))
-        case "grouping" => grouping(one)
-        case "collect_set" => collect_set(one)
-        // plain-children aggregates whose SQL-registry builders take exactly
-        // the wire arguments (argmin/argmax, boolean/bit folds, robust
-        // moments, linear-regression family) — no hidden flags (the producer
-        // guards the two that have them: mode's within-group ordering and
-        // percentile_disc DESC)
-        case n @ ("max_by" | "min_by" | "bool_and" | "bool_or" | "count_if" |
-                  "bit_and" | "bit_or" | "bit_xor" | "skewness" | "kurtosis" |
-                  "mode" | "regr_slope" | "regr_intercept" | "regr_r2" |
-                  "regr_avgx" | "regr_avgy" | "regr_count" | "every" | "any" |
-                  "some") =>
-          call_function(n, args: _*)
-        case "first" => first(one)
-        case "last" => last(one)
-        case "first_ignore_nulls" => first(one, ignoreNulls = true)
-        case "last_ignore_nulls" => last(one, ignoreNulls = true)
-        // mergeable datasketches aggregates (ops.Sketches) — beyond the
-        // reference's name list; arity rides as-is (value [, k/allowDiff])
-        // and the names resolve through the session function registry
-        case n @ ("hll_sketch_agg" | "hll_union_agg" |
-                  "kll_sketch_agg_bigint" | "kll_sketch_agg_double" |
-                  "kll_sketch_agg_float" | "kll_merge_agg_bigint" |
-                  "kll_merge_agg_double" | "kll_merge_agg_float" |
-                  "count_min_sketch") =>
-          call_function(n, args: _*)
-        case other => notImplemented(s"aggregate function $other")
+        case ("array_agg", true) => fn("collect_set", args.take(1))
+        case (n, true) => notImplemented(s"DISTINCT aggregate $n")
+        case ("approx_median", false) =>
+          fn("percentile_approx", Seq(args.head, Literal(0.5), Literal(10000)))
+        case (n, false) => Producer.sparkAggName(n) match {
+          case "percentile_approx" =>
+            fn("percentile_approx", Seq(args(0), args(1),
+              if (args.size > 2) args(2) else Literal(10000)))
+          case s if registryAggregates.contains(s) => fn(s, args)
+          case _ => notImplemented(s"aggregate function $n")
+        }
       }
     }
-
-    // ------------------------------------------------------------ expressions
-    private def toCol(e: SExpr, in: Seq[Attribute]): Column = ColumnBridge.column(toExpr(e, in))
 
     /** A [[Kernels]] table entry built straight from its bound arguments
       * (a bad constructor argument is the plan's fault). */
@@ -683,12 +662,17 @@ object Consumer {
       try build(args)
       catch { case e: IllegalArgumentException => notImplemented(e.getMessage) }
 
-    /** A Column-API expression, converted; marks the node being built for
-      * analysis. */
-    private def fromCol(c: Column): Expression = {
-      viaColumns = true
-      ColumnBridge.expression(spark, c)
-    }
+    /** A session-registry function the analyzer resolves (what
+      * `call_function` builds, without re-parsing the name). */
+    private def fn(name: String, args: Seq[Expression]): Expression =
+      UnresolvedFunction(Seq(name), args, isDistinct = false)
+
+    /** `child[key]` as the analyzer resolves it: a struct field, array
+      * item or map value by the child's type, left to the analyzer while
+      * the child is unresolved. */
+    private def extract(child: Expression, key: Expression): Expression =
+      if (child.resolved) ExtractValue(child, key, SQLConf.get.resolver)
+      else UnresolvedExtractValue(child, key)
 
     private def cast(e: Expression, t: DataType): Expression =
       Cast(e, t, Option(SQLConf.get.sessionLocalTimeZone))
@@ -734,29 +718,30 @@ object Consumer {
     private val lambdaEnv = mutable.Map.empty[Int, Expression]
     private var lambdaDepth = 0
 
-    /** arity of a wire lambda (__lambda(arity, body)), None if not one */
-    private def lambdaArity(e: SExpr): Option[Int] = e match {
-      case SExpr.ScalarFn(ref, args)
-          if extMap.get(ref).contains("__lambda") && args.size == 2 =>
-        Some(litInt(args.head))
+    /** (arity, body) of a wire lambda __lambda(arity, body), None if not one */
+    private def wireLambda(e: SExpr): Option[(Int, SExpr)] = e match {
+      case SExpr.ScalarFn(ref, Seq(arity, body)) if extMap.get(ref).contains("__lambda") =>
+        Some((litInt(arity), body))
       case _ => None
     }
 
-    /** Convert a wire lambda's body with `xs` bound to its variables. */
-    private def bindLambda(e: SExpr, in: Seq[Attribute], xs: Seq[Column]): Column =
-      e match {
-        case SExpr.ScalarFn(ref, Seq(_, body))
-            if extMap.get(ref).contains("__lambda") =>
-          val base = lambdaDepth
-          xs.zipWithIndex.foreach { case (x, i) => lambdaEnv(base + i) = fromCol(x) }
-          lambdaDepth += xs.size
-          try toCol(body, in)
-          finally {
-            lambdaDepth -= xs.size
-            xs.indices.foreach(i => lambdaEnv.remove(base + i))
-          }
-        case other => notImplemented(s"expected lambda argument, got $other")
+    private def freshVar(n: String): UnresolvedNamedLambdaVariable =
+      UnresolvedNamedLambdaVariable(Seq(UnresolvedNamedLambdaVariable.freshVarName(n)))
+
+    /** A wire lambda as a LambdaFunction over fresh variables (x, y, z),
+      * bound to the next slots while its body converts. */
+    private def lambda(arity: Int, body: SExpr, in: Seq[Attribute]): Expression = {
+      if (arity < 1 || arity > 3) notImplemented(s"lambda arity $arity")
+      val xs = Seq("x", "y", "z").take(arity).map(freshVar)
+      val base = lambdaDepth
+      xs.zipWithIndex.foreach { case (x, i) => lambdaEnv(base + i) = x }
+      lambdaDepth += arity
+      try LambdaFunction(toExpr(body, in), xs)
+      finally {
+        lambdaDepth -= arity
+        xs.indices.foreach(i => lambdaEnv.remove(base + i))
       }
+    }
 
     /** FieldRef ordinals index the flattened child output; for joins that
       * is left.output ++ right.output (consumer.rs:282-317). */
@@ -797,13 +782,15 @@ object Consumer {
         }
         CaseWhen(branches, elseExpr.map(toExpr(_, in)))
 
-      case w: SExpr.WindowFn => fromCol(windowColumn(w, in))
+      case w: SExpr.WindowFn => window(w, in)
 
       case SExpr.ScalarFn(ref, args) =>
         def x(i: Int) = toExpr(args(i), in)
+        def all = args.map(toExpr(_, in))
+        def pattern(prefix: String) = Literal(prefix + litString(args(1)))
         name(ref) match {
           // comparisons, arithmetic, boolean ops and null tests of
-          // name_to_op's 26 operators (consumer.rs:37-71), built directly
+          // name_to_op's 26 operators (consumer.rs:37-71)
           case "equal" => EqualTo(x(0), x(1))
           case "not_equal" => Not(EqualTo(x(0), x(1)))
           case "lt" => LessThan(x(0), x(1))
@@ -824,156 +811,108 @@ object Consumer {
           case "is_distinct_from" => Not(EqualNullSafe(x(0), x(1)))
           case "is_not_distinct_from" => EqualNullSafe(x(0), x(1))
           case "negate" => UnaryMinus(x(0))
+          case "like" => Like(x(0), pattern(""), '\\')
+          case "not_like" => Not(Like(x(0), pattern(""), '\\'))
+          case "regex_match" => RLike(x(0), pattern(""))
+          case "regex_imatch" => RLike(x(0), pattern("(?i)"))
+          case "regex_not_match" => Not(RLike(x(0), pattern("")))
+          case "regex_not_imatch" => Not(RLike(x(0), pattern("(?i)")))
+          case "bitwise_and" => BitwiseAnd(x(0), x(1))
+          case "bitwise_or" => BitwiseOr(x(0), x(1))
+          case "bitwise_xor" => BitwiseXor(x(0), x(1))
+          case "str_concat" => Concat(all)
+          case "coalesce" => Coalesce(all)
+          case "array" => CreateArray(all)
+          case "map" => CreateMap(all)
+          case "get_array_item" | "get_map_value" => extract(x(0), x(1))
+          // struct field access (producer's get_field extension): the field
+          // name is a string literal
+          case "get_field" => args(1) match {
+            case SExpr.Lit(LitVal.LStr(f)) => extract(x(0), Literal(f))
+            case other => notImplemented(s"get_field name $other")
+          }
+          case "get_array_field" => args(1) match {
+            case SExpr.Lit(LitVal.LStr(f)) =>
+              val v = freshVar("x")
+              fn("transform", Seq(x(0), LambdaFunction(UnresolvedExtractValue(v, Literal(f)),
+                Seq(v))))
+            case other => notImplemented(s"get_array_field name $other")
+          }
+          // integer division — registry-resolved so operand types drive the
+          // IntegralDivide node exactly as SQL `a DIV b` would
+          case "div" => fn("div", Seq(x(0), x(1)))
+          case "raise_error" => fn("raise_error", Seq(x(0)))
+          case "bitwise_shift_right" => fn("shiftright", Seq(x(0), x(1)))
+          case "bitwise_shift_left" => fn("shiftleft", Seq(x(0), x(1)))
+
+          // higher-order functions: lambda args arrive as __lambda(arity,
+          // body) and bind positionally
+          case "__lambda" => notImplemented("lambda outside a higher-order function")
+          case "__lambda_var" =>
+            lambdaEnv.getOrElse(litInt(args.head),
+              internalErr(s"lambda variable slot ${litInt(args.head)} unbound"))
+          case n if Producer.hofFns.contains(n) &&
+              (n != "array_sort" || args.size == 2 && wireLambda(args(1)).isDefined) =>
+            fn(n, args.map(a => wireLambda(a).fold(toExpr(a, in)) {
+              case (arity, body) => lambda(arity, body, in)
+            }))
+
           case n => Kernels.scalars.get(n) match {
-            case Some(build) => kernel(build, args.map(toExpr(_, in)))
-            case None => fromCol(scalarColumn(n, args, in))
+            case Some(build) => kernel(build, all)
+            // named scalar functions (Producer.namedScalarFns) resolve
+            // through the session function registry
+            case None if Producer.namedScalarFns.contains(n) => fn(n, all)
+            case None => notImplemented(s"scalar function $n")
           }
         }
     }
 
-    private def windowColumn(w: SExpr.WindowFn, in: Seq[Attribute]): Column = {
-      import org.apache.spark.sql.expressions.{Window, WindowSpec}
+    /** A window function over its spec, in the form `Column.over` builds:
+      * ranking/offset functions take no frame, the rest the frame
+      * `rowsBetween`/`rangeBetween` build from the wire bounds. A Project
+      * holding one is unresolved, so the analyzer extracts the Window. */
+    private def window(w: SExpr.WindowFn, in: Seq[Attribute]): Expression = {
       val SExpr.WindowFn(ref, args, partitions, sorts, lower, upper, rowFrame) = w
-      def c(e: SExpr) = toCol(e, in)
-      val sortCols = sorts.map { s =>
-        val o = c(s.expr)
-        s.direction match {
-          case SortDirection.AscNullsFirst => o.asc_nulls_first
-          case SortDirection.AscNullsLast => o.asc_nulls_last
-          case SortDirection.DescNullsFirst => o.desc_nulls_first
-          case SortDirection.DescNullsLast => o.desc_nulls_last
-          case other => notImplemented(s"window sort direction $other")
-        }
-      }
-      def bound(b: WBound, isLower: Boolean): Long = b match {
-        case WBound.Unbounded =>
-          if (isLower) Window.unboundedPreceding else Window.unboundedFollowing
-        case WBound.CurrentRow => Window.currentRow
+      def x(i: Int) = toExpr(args(i), in)
+      val orders = sorts.map(s =>
+        sortOrder(toExpr(s.expr, in), s.direction, "window sort direction"))
+      // Long.MinValue/MaxValue are unbounded, 0 the current row; a row
+      // offset is an int literal, a range offset a long one
+      def bound(b: WBound, isLower: Boolean): Expression = (b match {
+        case WBound.Unbounded => if (isLower) Long.MinValue else Long.MaxValue
+        case WBound.CurrentRow => 0L
         case WBound.Preceding(n) => -n
         case WBound.Following(n) => n
+      }) match {
+        case 0L => CurrentRow
+        case Long.MinValue if isLower => UnboundedPreceding
+        case Long.MaxValue if !isLower => UnboundedFollowing
+        case v if !rowFrame => Literal(v)
+        case v if v.isValidInt => Literal(v.toInt)
+        case v => notImplemented(s"row frame offset $v")
       }
-      val base0 = Window.partitionBy(partitions.map(c): _*)
-      val base = if (sortCols.nonEmpty) base0.orderBy(sortCols: _*) else base0
       val fname = name(ref).toLowerCase
       val ranking = Set("row_number", "rank", "dense_rank", "percent_rank",
         "cume_dist", "ntile", "lag", "lead")
-      // ranking/offset functions reject explicit frames; aggregates need them
-      val spec: WindowSpec =
-        if (ranking.contains(fname)) base
-        else if (rowFrame) base.rowsBetween(bound(lower, true), bound(upper, false))
-        else base.rangeBetween(bound(lower, true), bound(upper, false))
-      val fnCol = fname match {
-        case "row_number" => row_number()
-        case "rank" => rank()
-        case "dense_rank" => dense_rank()
-        case "percent_rank" => percent_rank()
-        case "cume_dist" => cume_dist()
-        case "ntile" => ntile(litInt(args.head))
-        case "lag" =>
+      val frame =
+        if (ranking.contains(fname)) UnspecifiedFrame
+        else SpecifiedWindowFrame(if (rowFrame) RowFrame else RangeFrame,
+          bound(lower, isLower = true), bound(upper, isLower = false))
+      val f = fname match {
+        case "row_number" | "rank" | "dense_rank" | "percent_rank" | "cume_dist" =>
+          fn(fname, Nil)
+        case "ntile" => fn(fname, Seq(Literal(litInt(args.head))))
+        case "lag" | "lead" =>
           val off = if (args.size > 1) litInt(args(1)) else 1
-          if (args.size > 2) lag(c(args.head), off, lit2(args(2)))
-          else lag(c(args.head), off)
-        case "lead" =>
-          val off = if (args.size > 1) litInt(args(1)) else 1
-          if (args.size > 2) lead(c(args.head), off, lit2(args(2)))
-          else lead(c(args.head), off)
-        case "first_value" => first(c(args.head), ignoreNulls = litBool(args, 1))
-        case "last_value" => last(c(args.head), ignoreNulls = litBool(args, 1))
+          val default = if (args.size > 2) lit2(args(2)) else null
+          fn(fname, Seq(x(0), Literal(off), Literal(default), Literal(false)))
+        case "first_value" => fn("first", Seq(x(0), Literal(litBool(args, 1))))
+        case "last_value" => fn("last", Seq(x(0), Literal(litBool(args, 1))))
         case "nth_value" =>
-          nth_value(c(args.head), litInt(args(1)), ignoreNulls = litBool(args, 2))
-        case aggName => ColumnBridge.column(
-          aggExpr(aggName, args.map(toExpr(_, in)), distinct = false))
+          fn(fname, Seq(x(0), Literal(litInt(args(1))), Literal(litBool(args, 2))))
+        case aggName => aggExpr(aggName, args.map(toExpr(_, in)), distinct = false)
       }
-      fnCol.over(spec)
-    }
-
-    /** The scalar functions outside the core operators: the Column table. */
-    private def scalarColumn(n: String, args: Seq[SExpr], in: Seq[Attribute]): Column = {
-      def a0 = toCol(args(0), in)
-      def a1 = toCol(args(1), in)
-      def all = args.map(toCol(_, in))
-      n match {
-        // struct field access (producer's get_field extension): the field
-        // name is a string literal, consumed raw — not a Column
-        case "get_field" => args(1) match {
-          case SExpr.Lit(LitVal.LStr(fieldName)) => a0.getField(fieldName)
-          case other => notImplemented(s"get_field name $other")
-        }
-        case "get_array_field" => args(1) match {
-          case SExpr.Lit(LitVal.LStr(fieldName)) =>
-            transform(a0, x => x.getField(fieldName))
-          case other => notImplemented(s"get_array_field name $other")
-        }
-        case "get_array_item" => a0.getItem(a1)
-        // integer division — registry-resolved so operand types drive the
-        // IntegralDivide node exactly as SQL `a DIV b` would
-        case "div" => call_function("div", a0, a1)
-        case "like" => a0.like(litString(args(1)))
-        case "not_like" => !a0.like(litString(args(1)))
-        case "regex_match" => a0.rlike(litString(args(1)))
-        case "regex_imatch" => a0.rlike("(?i)" + litString(args(1)))
-        case "regex_not_match" => !a0.rlike(litString(args(1)))
-        case "regex_not_imatch" => !a0.rlike("(?i)" + litString(args(1)))
-        case "bitwise_and" => a0.bitwiseAND(a1)
-        case "bitwise_or" => a0.bitwiseOR(a1)
-        case "bitwise_xor" => a0.bitwiseXOR(a1)
-        // shift amounts may be expressions (e.g. a lambda variable), which
-        // the Int-typed functions API can't take — resolve via the registry
-        case "bitwise_shift_right" => call_function("shiftright", a0, a1)
-        case "bitwise_shift_left" => call_function("shiftleft", a0, a1)
-        case "str_concat" => concat(all: _*)
-        // variadic extensions (Producer.scala)
-        case "coalesce" => coalesce(all: _*)
-        case "raise_error" => raise_error(a0)
-        case "array" => array(all: _*)
-        case "map" => map(all: _*)
-        case "get_map_value" => a0.getItem(a1)
-
-        // higher-order functions: lambda args arrive as __lambda(arity,
-        // body) and bind positionally via bindLambda
-        case "__lambda" => notImplemented("lambda outside a higher-order function")
-        case "__lambda_var" =>
-          ColumnBridge.column(lambdaEnv.getOrElse(litInt(args.head),
-            internalErr(s"lambda variable slot ${litInt(args.head)} unbound")))
-        case "transform" => lambdaArity(args(1)) match {
-          case Some(1) => transform(a0, x => bindLambda(args(1), in, Seq(x)))
-          case Some(2) => transform(a0, (x, i) => bindLambda(args(1), in, Seq(x, i)))
-          case _ => notImplemented("transform lambda arity")
-        }
-        case "filter" => lambdaArity(args(1)) match {
-          case Some(1) => filter(a0, x => bindLambda(args(1), in, Seq(x)))
-          case Some(2) => filter(a0, (x, i) => bindLambda(args(1), in, Seq(x, i)))
-          case _ => notImplemented("filter lambda arity")
-        }
-        case "exists" => exists(a0, x => bindLambda(args(1), in, Seq(x)))
-        case "forall" => forall(a0, x => bindLambda(args(1), in, Seq(x)))
-        case "aggregate" =>
-          if (args.size == 4)
-            aggregate(a0, a1,
-              (acc, x) => bindLambda(args(2), in, Seq(acc, x)),
-              fin => bindLambda(args(3), in, Seq(fin)))
-          else aggregate(a0, a1,
-            (acc, x) => bindLambda(args(2), in, Seq(acc, x)))
-        case "zip_with" =>
-          zip_with(a0, a1, (x, y) => bindLambda(args(2), in, Seq(x, y)))
-        case "transform_keys" =>
-          transform_keys(a0, (k, v) => bindLambda(args(1), in, Seq(k, v)))
-        case "transform_values" =>
-          transform_values(a0, (k, v) => bindLambda(args(1), in, Seq(k, v)))
-        case "map_filter" =>
-          map_filter(a0, (k, v) => bindLambda(args(1), in, Seq(k, v)))
-        case "map_zip_with" =>
-          map_zip_with(a0, a1,
-            (k, v1, v2) => bindLambda(args(2), in, Seq(k, v1, v2)))
-        case "array_sort" if args.size == 2 && lambdaArity(args(1)).isDefined =>
-          array_sort(a0, (x, y) => bindLambda(args(1), in, Seq(x, y)))
-
-        // named scalar functions (Producer.namedScalarFns) resolve through
-        // the session function registry
-        case other if Producer.namedScalarFns.contains(other) =>
-          call_function(other, all: _*)
-        case other => notImplemented(s"scalar function $other")
-      }
+      WindowExpression(f, WindowSpecDefinition(partitions.map(toExpr(_, in)), orders, frame))
     }
 
     /** LitVal → external row value for LocalRelation rows (VirtualTable) */

@@ -1178,7 +1178,7 @@ object Producer {
           // ignoreNulls flag is a constructor param, carried by name
           case a: org.apache.spark.sql.catalyst.expressions.aggregate.AnyValue =>
             if (a.ignoreNulls) "first_ignore_nulls" else "first"
-          case f => dataFusionAggName(f.prettyName)
+          case f => Producer.wireAggName(f.prettyName)
         }
         val args = ae.aggregateFunction.children.map(c => toSExpr(c, inAttrs))
         Measure(
@@ -1275,21 +1275,6 @@ object Producer {
       // never identity: the trailing set-index column must be projected away
       val rel = Rel.Project(aggRel, resultExprs)
       Produced(rel, agg.aggregateExpressions.map(_.toAttribute))
-    }
-
-    /** Spark prettyName → DataFusion 15 aggregate name (consumer.rs:383-415). */
-    private def dataFusionAggName(n: String): String = n match {
-      case "avg" | "mean" => "avg"
-      case "approx_count_distinct" => "approx_distinct"
-      case "percentile_approx" | "approx_percentile" => "approx_percentile_cont"
-      case "percentile" => "percentile_cont"
-      case "collect_list" => "array_agg"
-      case "stddev" | "stddev_samp" => "stddev"
-      case "variance" | "var_samp" => "variance"
-      case "covar_samp" => "covariance"
-      case "covar_pop" => "covariance_pop"
-      case "corr" => "correlation"
-      case other => other
     }
 
     // ----------------------------------------------------------- expressions
@@ -1489,7 +1474,7 @@ object Producer {
             ("last_value", Seq(f.child, Literal(f.ignoreNulls)))
           case ae: AggregateExpression =>
             if (ae.isDistinct) notImplemented("DISTINCT window aggregate")
-            (dataFusionAggName(ae.aggregateFunction.prettyName),
+            (Producer.wireAggName(ae.aggregateFunction.prettyName),
               ae.aggregateFunction.children)
           case _: RowNumber => ("row_number", Nil)
           case _: Rank => ("rank", Nil)
@@ -1504,7 +1489,7 @@ object Producer {
           case other => notImplemented(s"window function ${other.prettyName}")
         }
         // Time-INTERVAL range bounds have no substrait offset form (bounds
-        // are i64), and Spark's Column API cannot rebuild them on consume.
+        // are i64), and the consumer rebuilds range bounds as i64 offsets.
         // Rewrite the SPEC instead: order by unix_micros(ts) — a strictly
         // monotone bijection, so partitions/order/range sets are identical —
         // and carry the bound as plain microseconds. NTZ order columns cast
@@ -1829,6 +1814,34 @@ object Producer {
     // graft's own kernels, carried as substrait extension functions by name
     // (the three with constructor parameters are matched above)
     graft.functions.Kernels.scalars.keySet
+
+  /** Aggregates whose wire name (DataFusion 15's, consumer.rs:383-415 /
+    * SURVEY.md §2.4 A2) differs from Spark's: each wire name with the
+    * Spark names it stands for, the first being the registry name the
+    * consumer resolves. The producer reads it Spark → wire
+    * ([[wireAggName]]), the consumer wire → Spark ([[sparkAggName]]).
+    */
+  val aggregateNames: Seq[(String, Seq[String])] = Seq(
+    "avg" -> Seq("avg", "mean"),
+    "approx_distinct" -> Seq("approx_count_distinct"),
+    "approx_percentile_cont" -> Seq("percentile_approx", "approx_percentile"),
+    "percentile_cont" -> Seq("percentile"),
+    "array_agg" -> Seq("collect_list"),
+    "stddev" -> Seq("stddev_samp", "stddev"),
+    "variance" -> Seq("var_samp", "variance"),
+    "covariance" -> Seq("covar_samp"),
+    "covariance_pop" -> Seq("covar_pop"),
+    "correlation" -> Seq("corr"))
+
+  private val toWireAgg: Map[String, String] =
+    aggregateNames.flatMap { case (w, ss) => ss.map(_ -> w) }.toMap
+  private val toSparkAgg: Map[String, String] =
+    aggregateNames.map { case (w, ss) => w -> ss.head }.toMap
+
+  /** Spark prettyName → wire aggregate name */
+  def wireAggName(spark: String): String = toWireAgg.getOrElse(spark, spark)
+  /** wire aggregate name → Spark registry name */
+  def sparkAggName(wire: String): String = toSparkAgg.getOrElse(wire, wire)
 
   /** Higher-order functions whose Catalyst children order is
     * (collection args…, lambda args…), matching the SQL argument order.

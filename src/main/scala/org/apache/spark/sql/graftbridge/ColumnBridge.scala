@@ -1,35 +1,26 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.QueryPlanningTracker
-import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
 import org.apache.spark.sql.catalyst.trees.CurrentOrigin
 import org.apache.spark.sql.classic
 
-/** Package bridge into the sql-private Column and Dataset factories.
+/** Package bridge into the sql-private Dataset factory and analyzer.
   *
-  * Spark 4 hides `Column(expr)` behind `private[sql]`
-  * (`org.apache.spark.sql.classic.ExpressionUtils.column`); the supported
-  * public routes are `functions.lit` (rejects collection values) and
-  * `typedlit` (needs a compile-time TypeTag, unavailable for wire-decoded
-  * types). The Consumer builds Catalyst plan nodes directly, and needs the
-  * two-way Column ⇄ Expression conversion plus `Dataset.ofRows` to wrap
-  * them. A sql-subpackage object is the standard OSS escape hatch for this
-  * (Delta Lake, spark-excel et al. ship the same shim).
+  * The Consumer builds Catalyst plan nodes directly; wrapping one as a
+  * DataFrame (`Dataset.ofRows`) and analyzing a node on its own need the
+  * classic session, which Spark 4 keeps `private[sql]`. A sql-subpackage
+  * object is the standard OSS escape hatch for this (Delta Lake,
+  * spark-excel et al. ship the same shim).
   */
 object ColumnBridge {
-  def column(e: Expression): Column = classic.ExpressionUtils.column(e)
-
-  /** The Catalyst expression a Column API call built (session parser/conf). */
-  def expression(spark: SparkSession, c: Column): Expression =
-    spark.asInstanceOf[classic.SparkSession].converter(c.node)
-
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
   /** Runs `f` with `spark` active and ONE DataFrame query origin: without
-    * it, every Column built inside captures its own stack trace. */
+    * it, every DataFrame or Column built inside captures its own stack
+    * trace. */
   def consuming[T](spark: SparkSession)(f: => T): T =
     spark.withActive(CurrentOrigin.withOrigin(f))
 

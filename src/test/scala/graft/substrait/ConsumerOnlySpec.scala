@@ -399,4 +399,69 @@ class ConsumerOnlySpec extends SparkTestBase {
         .as("cells"))
     assertSameRows(want, consume(plan))
   }
+
+  // ------------------------------------------------ one expression builder
+
+  private lazy val coerceScan: Rel = {
+    import spark.implicits._
+    Seq((1, 0.5, "a"), (2, 1.5, "bb"), (3, 2.5, "ccc"))
+      .toDF("i", "d", "s").createOrReplaceTempView("coerce_data")
+    Rel.Read(NamedStruct(Seq("i", "d", "s"),
+      Seq((SType.SI32, false), (SType.SFp64, false), (SType.SStr, true))),
+      Seq("coerce_data"), None)
+  }
+
+  test("a foreign plan that needs type coercion consumes like its DataFrame") {
+    // equal(i32, i64 literal) in a filter, add(i32, fp64) and sqrt(i32)
+    // in a project: the analyzer inserts the casts Spark's producer would
+    val plan = Plan(Seq(ext(0, "equal"), ext(1, "add"), ext(2, "sqrt")),
+      Seq(PlanRel.Root(Rel.Project(
+        Rel.Filter(coerceScan,
+          SExpr.ScalarFn(0, Seq(SExpr.FieldRef(0), SExpr.Lit(LitVal.LI64(2L))))),
+        Seq(SExpr.ScalarFn(1, Seq(SExpr.FieldRef(0), SExpr.FieldRef(1))),
+          SExpr.ScalarFn(2, Seq(SExpr.FieldRef(0))))),
+        Seq("sum", "root"))))
+    val want = spark.table("coerce_data").filter(col("i") === 2L)
+      .select((col("i") + col("d")).as("sum"), sqrt(col("i")).as("root"))
+    assertSameRows(want, consume(plan))
+  }
+
+  test("unknown scalar, aggregate and window function names fail naming the function") {
+    def rejects(plan: Plan, fname: String): Unit = {
+      val err = intercept[SubstraitException](consume(plan))
+      assert(err.getMessage.contains(fname), err.getMessage)
+    }
+    def project(e: SExpr) = Plan(Seq(ext(0, "no_such_fn")),
+      Seq(PlanRel.Root(Rel.Project(coerceScan, Seq(e)), Seq("x"))))
+    rejects(project(SExpr.ScalarFn(0, Seq(SExpr.FieldRef(0)))), "no_such_fn")
+    rejects(project(SExpr.WindowFn(0, Seq(SExpr.FieldRef(0)), Seq(SExpr.FieldRef(2)),
+      Seq(SortField(SExpr.FieldRef(0), SortDirection.AscNullsFirst)),
+      WBound.Unbounded, WBound.CurrentRow, rowFrame = true)), "no_such_fn")
+    rejects(Plan(Seq(ext(0, "no_such_fn")), Seq(PlanRel.Root(
+      Rel.Aggregate(coerceScan, Seq(Seq(SExpr.FieldRef(2))),
+        Seq(Measure(AggFunction(0, Seq(SExpr.FieldRef(0)), AggInvocation.All), None))),
+      Seq("s", "x")))), "no_such_fn")
+  }
+
+  test("the consumer builds Catalyst expressions only: no Column ⇄ Expression bridge") {
+    def code(path: String): String = {
+      val src = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(path)), "UTF-8")
+      src.replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
+    }
+    val bridge = code("src/main/scala/org/apache/spark/sql/graftbridge/ColumnBridge.scala")
+    assert("\\bColumn\\b".r.findFirstIn(bridge).isEmpty, "ColumnBridge names Column")
+    assert(!bridge.contains("converter"), "ColumnBridge converts Columns")
+    // the one Column use left is the ExtIteration fixpoint check, which
+    // runs on materialized DataFrames
+    val consumer = code("src/main/scala/graft/substrait/Consumer.scala")
+    assert("\\bColumn\\b".r.findFirstIn(consumer).isEmpty, "Consumer names Column")
+    val fnImports = "import org\\.apache\\.spark\\.sql\\.functions\\S*".r
+      .findAllMatchIn(consumer).toSeq
+    assert(fnImports.map(_.matched) == Seq("import org.apache.spark.sql.functions.{col,"),
+      fnImports.map(_.matched))
+    assert(consumer.lastIndexOf("checkFixpoint", fnImports.head.start) >
+      consumer.lastIndexOf("case Rel.", fnImports.head.start),
+      "functions import outside the fixpoint check")
+  }
 }

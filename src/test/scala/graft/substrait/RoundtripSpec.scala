@@ -156,6 +156,17 @@ class RoundtripSpec extends SparkTestBase {
     sqlRt("SELECT * FROM data l LEFT ANTI JOIN data r ON l.a > r.a")
   }
 
+  // a view name is one identifier part, whatever it contains: the read
+  // resolves the wire's parts as they are, never by re-parsing them
+  // joined with "." (which splits `a.b` and rejects `t-1`)
+  test("temp views named `t-1` and `a.b` round-trip as named reads") {
+    fixture
+    spark.table("data").createOrReplaceTempView("`t-1`")
+    spark.table("data2").createOrReplaceTempView("`a.b`")
+    sqlRt("SELECT a, b FROM `t-1` WHERE a > 1")
+    sqlRt("SELECT x.a, y.c FROM `a.b` x JOIN `t-1` y ON x.a = y.a")
+  }
+
   // --- tests/serialize.rs:13-36: wire-format file round-trip
   test("serialize_simple_select") {
     fixture
