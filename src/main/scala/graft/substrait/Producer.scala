@@ -85,41 +85,21 @@ object Producer {
   /** Rewrite every ReadRel/NamedTable of `from` (matched on the final name
     * segment, case-insensitively — Spark lowercases temp-view identifiers)
     * to the single-segment reserved name `to`, across the whole plan
-    * including nested iteration bodies. Exhaustive over the sealed Rel ADT
-    * so a new rel case fails compilation here instead of silently keeping
-    * the scratch name on the wire. */
+    * including nested iteration bodies. */
   private def renameTable(plan: Plan, from: String, to: String): Plan =
     Plan(plan.extensions, plan.relations.map {
       case PlanRel.Root(r, names) => PlanRel.Root(renameTable(r, from, to), names)
       case PlanRel.RelOnly(r) => PlanRel.RelOnly(renameTable(r, from, to))
     })
 
-  private def renameTable(rel: Rel, from: String, to: String): Rel = {
-    def go(r: Rel): Rel = renameTable(r, from, to)
-    rel match {
-      case r: Rel.Read
-        if r.tableNames.nonEmpty &&
-           r.tableNames.last.equalsIgnoreCase(from) =>
-        r.copy(tableNames = Seq(to))
-      case r: Rel.Read => r
-      case r: Rel.Project => r.copy(input = go(r.input))
-      case r: Rel.Filter => r.copy(input = go(r.input))
-      case r: Rel.Fetch => r.copy(input = go(r.input))
-      case r: Rel.Sort => r.copy(input = go(r.input))
-      case r: Rel.Aggregate => r.copy(input = go(r.input))
-      case r: Rel.Join => r.copy(left = go(r.left), right = go(r.right))
-      case r: Rel.Cross => r.copy(left = go(r.left), right = go(r.right))
-      case r: Rel.Set => r.copy(inputs = r.inputs.map(go))
-      case r: Rel.ExtGenerate => r.copy(input = go(r.input))
-      case r: Rel.ExtExchange => r.copy(input = go(r.input))
-      case r: Rel.ExtSample => r.copy(input = go(r.input))
-      case r: Rel.ExtStage => r.copy(input = go(r.input))
-      case r: Rel.ExtSessionWindow => r.copy(input = go(r.input))
-      case r: Rel.ExtIteration =>
-        r.copy(input = go(r.input),
-          bodyPlan = renameTable(r.bodyPlan, from, to))
-      case r: Rel.ExtHint => r.copy(input = go(r.input))
-    }
+  private def renameTable(rel: Rel, from: String, to: String): Rel = rel match {
+    case r: Rel.Read
+      if r.tableNames.nonEmpty && r.tableNames.last.equalsIgnoreCase(from) =>
+      r.copy(tableNames = Seq(to))
+    case r: Rel.ExtIteration =>
+      r.copy(input = renameTable(r.input, from, to),
+        bodyPlan = renameTable(r.bodyPlan, from, to))
+    case r => Rel.withInputs(r, Rel.inputs(r).map(renameTable(_, from, to)))
   }
 
   /** A produced relation plus the attribute list its FieldRef ordinals index. */
@@ -266,45 +246,13 @@ object Producer {
         }
         Produced(readRel(names, attrs, mask), list.map(_.toAttribute))
 
+      // scalar subqueries in a projection join the child (see
+      // scalarSubqueries); the Rel.Project emits exactly `list`, so the
+      // appended join columns never leak downstream
       case logical.Project(list, child) =>
-        var in = toRel(child)
-        // uncorrelated scalar subqueries in a PROJECTION (e.g. probing a
-        // bloom_filter_agg subquery with might_contain) ride the same way
-        // as in filters: cross-join the provably-one-row subplan and
-        // replace the subquery expression with its appended column. The
-        // Rel.Project emits exactly `list`, so the appended column never
-        // leaks downstream.
-        val scalarSubs = mutable.ArrayBuffer.empty[ScalarSubquery]
-        list.foreach(_.foreach {
-          case s: ScalarSubquery if s.outerAttrs.isEmpty &&
-              !scalarSubs.exists(_.exprId == s.exprId) => scalarSubs += s
-          case _ => ()
-        })
-        val replaced: Seq[NamedExpression] =
-          if (scalarSubs.isEmpty) list
-          else {
-            def oneRow(p: LogicalPlan): Boolean = p match {
-              case agg: logical.Aggregate => agg.groupingExpressions.isEmpty
-              case prj: logical.Project => oneRow(prj.child)
-              case _ => false
-            }
-            val replacement = mutable.Map.empty[ExprId, Expression]
-            scalarSubs.foreach { s =>
-              if (!oneRow(s.plan)) notImplemented(
-                "projected scalar subquery whose plan is not a global aggregate " +
-                  "(cannot guarantee exactly one row on the wire)")
-              val sub = toRel(s.plan)
-              if (sub.attrs.size != 1) notImplemented("scalar subquery arity != 1")
-              replacement(s.exprId) = sub.attrs.head
-              in = Produced(Rel.Cross(in.rel, sub.rel), in.attrs ++ sub.attrs)
-            }
-            list.map(_.transform {
-              case s: ScalarSubquery if replacement.contains(s.exprId) =>
-                replacement(s.exprId)
-            }.asInstanceOf[NamedExpression])
-          }
-        val exprs = replaced.map(e => toSExpr(e, in.attrs))
-        Produced(Rel.Project(in.rel, exprs), list.map(_.toAttribute))
+        val (in, values) = scalarSubqueries(toRel(child), list)
+        Produced(Rel.Project(in.rel, values.map(toSExpr(_, in.attrs))),
+          list.map(_.toAttribute))
 
       case logical.Filter(cond, child) =>
         produceFilter(cond, child)
@@ -499,96 +447,21 @@ object Producer {
         val op = if (e.isAll) SetOp.MinusMultiset else SetOp.MinusPrimary
         Produced(Rel.Set(Seq(l.rel, r.rel), op), l.attrs)
 
-      // LATERAL (SELECT <aggregates> ... WHERE <equality correlation>): a
-      // correlated apply whose subquery is a GLOBAL aggregate yields exactly
-      // one row per probe row, so it decorrelates into the same grouped LEFT
-      // join as the correlated-scalar-subquery path (group the aggregate by
-      // the lifted keys, left-join, project the aggregate columns; bare
-      // COUNT columns coalesce to 0 on group misses). Multi-row laterals
-      // have no relational wire form — rejected loudly.
+      // LATERAL over a global aggregate yields exactly one row per probe
+      // row, so it joins like a scalar subquery with many outputs (see
+      // subqueryJoin); multi-row laterals have no relational wire form
       case lj: logical.LateralJoin
           if lj.condition.isEmpty &&
             (lj.joinType == plans.Inner || lj.joinType == plans.LeftOuter) =>
-        def peel(p: LogicalPlan): LogicalPlan = p match {
-          case a: logical.SubqueryAlias => peel(a.child)
-          case v: logical.View => peel(v.child)
-          case other => other
-        }
-        peel(lj.right.plan) match {
-          case agg: logical.Aggregate if agg.groupingExpressions.isEmpty =>
-            val left = toRel(lj.left)
-            // the grouped-left-join rewrite yields NULL on a group miss; a
-            // GLOBAL aggregate over empty input yields NULL only for a BARE
-            // non-count aggregate. Anything non-null-on-empty — coalesce
-            // wraps, literals, count buried in wider expressions — would
-            // silently diverge, so only bare aggregates are accepted: exact
-            // counts coalesce to 0, everything else must be NULL-on-empty.
-            def aggFn(ne: NamedExpression): Option[String] = ne match {
-              case Alias(ae: AggregateExpression, _) =>
-                Some(ae.aggregateFunction.prettyName)
-              case ae: AggregateExpression =>
-                Some(ae.aggregateFunction.prettyName)
-              case _ => None
-            }
-            val bareCountNames = Set("count", "count_if")
-            // aggregates whose GLOBAL form yields NULL on empty input — the
-            // only ones whose semantics a join miss reproduces (collect_list
-            // gives [], count_min_sketch an empty sketch, etc.: those would
-            // silently diverge and are rejected)
-            val nullOnEmpty = Set("min", "max", "sum", "avg", "mean", "first",
-              "last", "any_value", "stddev", "stddev_samp", "stddev_pop",
-              "variance", "var_samp", "var_pop", "corr", "covar_samp",
-              "covar_pop", "median", "percentile", "percentile_approx",
-              "approx_percentile", "mode", "skewness", "kurtosis", "bool_and",
-              "bool_or", "every", "max_by", "min_by", "bit_and", "bit_or",
-              "bit_xor")
-            def isBareCount(ne: NamedExpression): Boolean =
-              aggFn(ne).exists(bareCountNames.contains)
-            if (lj.right.outerAttrs.isEmpty) {
-              // uncorrelated lateral aggregate = one-row cross join; the
-              // global aggregate always yields its row, so there is no
-              // group-miss hazard and any output expression is fine
-              val sub = toRel(agg)
-              Produced(Rel.Cross(left.rel, sub.rel), lj.left.output ++ agg.output)
-            } else {
-              agg.aggregateExpressions.foreach { ne =>
-                val ok = aggFn(ne).exists(n =>
-                  nullOnEmpty.contains(n) || bareCountNames.contains(n))
-                if (!ok) notImplemented(
-                  s"lateral output $ne: only bare NULL-on-empty aggregates (or " +
-                    "bare counts) survive the grouped-join rewrite — anything " +
-                    "non-null on an empty group would silently diverge")
-              }
-              val (core, _, corr, _) = decorrelateRaw(agg.child, lj.right.outerAttrs)
-              val keyPairs = correlationKeyPairs(corr, lj.right.outerAttrs, "lateral")
-              if (keyPairs.isEmpty)
-                notImplemented("correlated lateral aggregate without equality keys")
-              val innerKeys = keyPairs.map(_._2).distinctBy(_.exprId)
-              val newAgg = logical.Aggregate(innerKeys,
-                (innerKeys: Seq[NamedExpression]) ++ agg.aggregateExpressions, core)
-              val sub = toRel(newAgg)
-              val both = left.attrs ++ sub.attrs
-              val cond = keyPairs.map { case (o, i) =>
-                SExpr.ScalarFn(anchor("equal"),
-                  Seq(toSExpr(o, left.attrs), toSExpr(i, both)))
-              }.reduceLeft((a, b) => SExpr.ScalarFn(anchor("and"), Seq(a, b)))
-              val joined = Rel.Join(left.rel, sub.rel, cond, JoinType.Left)
-              val nL = left.attrs.size
-              val nK = innerKeys.size
-              val aggAttrs = sub.attrs.drop(nK)
-              val outCols: Seq[SExpr] =
-                left.attrs.indices.map(i => SExpr.FieldRef(i): SExpr) ++
-                  agg.aggregateExpressions.zipWithIndex.map { case (ne, i) =>
-                    if (isBareCount(ne))
-                      toSExpr(Coalesce(Seq(aggAttrs(i), Literal(0L, LongType))), both)
-                    else SExpr.FieldRef(nL + nK + i): SExpr
-                  }
-              Produced(Rel.Project(joined, outCols),
-                lj.left.output ++ lj.right.plan.output)
-            }
-          case _ =>
-            notImplemented("LATERAL subquery that is not a global aggregate")
-        }
+        val left = toRel(lj.left)
+        val (joined, values) = subqueryJoin(left, lj.right, "LATERAL subquery")
+        // an uncorrelated cross join already emits left ++ values
+        val rel =
+          if (values == joined.attrs.drop(left.attrs.size)) joined.rel
+          else Rel.Project(joined.rel,
+            left.attrs.indices.map(SExpr.FieldRef(_)) ++
+              values.map(toSExpr(_, joined.attrs)))
+        Produced(rel, lj.left.output ++ lj.right.plan.output)
 
       // WITH ... : register the definitions, produce the main plan; each
       // CTERelationRef inlines its definition's subtree with the REF's
@@ -809,181 +682,21 @@ object Producer {
       Produced(rel, agg.aggregateExpressions.map(_.toAttribute))
     }
 
-    /** Filter production. Uncorrelated IN/EXISTS subquery conjuncts become
-      * SEMI JoinRels (the same rewrite Spark's own optimizer applies) — the
-      * wire has no subquery-expression message in the reference's subset, and
-      * the semi join preserves IN's null semantics exactly (a NULL probe
-      * value matches nothing in both). NOT IN becomes an ANTI JoinRel whose
-      * condition is `eq OR is_null(eq)` — Spark's own null-aware rewrite,
-      * expressible with plain JoinRel + scalar functions, so it crosses the
-      * wire with exact SQL semantics (NULL probe → dropped; any NULL in the
-      * subquery side → nothing survives). On consume, Spark's planner
-      * recognizes the single-column shape as a null-aware anti join
-      * (broadcast hash); multi-column falls back to nested-loop — fine for
-      * the dimension-sized subqueries NOT IN is used with.
-      * Remaining conjuncts fold into a ReadRel scan filter when the child is
-      * a leaf scan (algebra.proto field 3), else a FilterRel.
+    /** Filter production. Scalar subqueries in the conjuncts join the child
+      * first (see [[scalarSubqueries]]), then every [NOT] IN / [NOT] EXISTS
+      * conjunct becomes a semi/anti join ([[semiJoin]]). Remaining
+      * conjuncts fold into a ReadRel scan filter when the child is a leaf
+      * scan (algebra.proto field 3), else a FilterRel.
       */
     private def produceFilter(cond: Expression, child: LogicalPlan): Produced = {
-      def conjuncts(e: Expression): Seq[Expression] = e match {
-        case And(l, r) => conjuncts(l) ++ conjuncts(r)
-        case other => Seq(other)
-      }
-      val (subq, plain0) = conjuncts(cond).partition {
-        case InSubquery(_, _: ListQuery) => true
-        case Not(InSubquery(_, _: ListQuery)) => true // null-aware anti join
-        case _: Exists => true
-        case Not(_: Exists) => true // NOT EXISTS = plain anti join
+      val (semi, plain0) = conjuncts(cond).partition {
+        case InSubquery(_, _: ListQuery) | Not(InSubquery(_, _: ListQuery)) |
+             _: Exists | Not(_: Exists) => true
         case _ => false
       }
-      var cur = toRel(child)
-      val nLeft = cur.attrs.size
-      // SCALAR subqueries in the remaining conjuncts become joins whose
-      // single result column replaces the subquery expression:
-      // - uncorrelated → cross join of the one-row result (1-row broadcast);
-      // - correlated equality over a global Aggregate (the TPC-H Q17 shape)
-      //   → group the aggregate by the lifted keys and LEFT join on them
-      //     (a key with no group yields NULL, and NULL comparisons filter
-      //     out — exactly the empty-subquery semantics; COUNT is rejected,
-      //     whose empty-group value is 0, not NULL).
-      // The appended columns are projected away below.
-      val scalarSubs = mutable.ArrayBuffer.empty[ScalarSubquery]
-      plain0.foreach(_.foreach {
-        case s: ScalarSubquery
-            if !scalarSubs.exists(_.exprId == s.exprId) => scalarSubs += s
-        case _ => ()
-      })
-      val replacement = mutable.Map.empty[ExprId, Expression]
-      // A cross join only preserves scalar-subquery semantics when the
-      // subplan yields EXACTLY one row: 0 rows would drop every probe row
-      // (SQL says the value is NULL) and >1 would duplicate them (SQL says
-      // runtime error). Only a global Aggregate (no grouping) proves that,
-      // possibly under Projects — anything else is loud-rejected.
-      def provablySingleRow(p: LogicalPlan): Boolean = p match {
-        case agg: logical.Aggregate => agg.groupingExpressions.isEmpty
-        case prj: logical.Project => provablySingleRow(prj.child)
-        case _ => false
-      }
-      scalarSubs.foreach { s =>
-        if (s.outerAttrs.isEmpty) {
-          if (!provablySingleRow(s.plan)) notImplemented(
-            "uncorrelated scalar subquery whose plan is not a global aggregate " +
-              "(cannot guarantee exactly one row on the wire)")
-          val sub = toRel(s.plan)
-          if (sub.attrs.size != 1) notImplemented("scalar subquery arity != 1")
-          replacement(s.exprId) = sub.attrs.head
-          cur = Produced(Rel.Cross(cur.rel, sub.rel), cur.attrs ++ sub.attrs)
-        } else s.plan match {
-          case agg: logical.Aggregate
-              if agg.groupingExpressions.isEmpty &&
-                agg.aggregateExpressions.size == 1 =>
-            // COUNT of an empty group is 0, but a left-join miss yields
-            // NULL. The fix-up must happen at the AGGREGATE level, not the
-            // expression top: each embedded AggregateExpression becomes its
-            // own inner output column, count-rooted columns coalesce to 0
-            // after the join, and the wider scalar expression (if any) is
-            // rebuilt OUTSIDE the join over the fixed-up columns — so
-            // `(SELECT count(*) … WHERE corr) > n` and
-            // `(SELECT count(*) + 1 …)` both get empty-group semantics
-            // right (NULL-propagating aggs like sum/avg stay NULL on a
-            // miss, exactly SQL's empty-set value for them).
-            val headExpr = agg.aggregateExpressions.head match {
-              case Alias(e, _) => e
-              case e => e
-            }
-            val aggParts = mutable.ArrayBuffer.empty[AggregateExpression]
-            headExpr.foreach {
-              case ae: AggregateExpression
-                  if !aggParts.exists(_.resultId == ae.resultId) =>
-                aggParts += ae
-              case _ => ()
-            }
-            if (aggParts.isEmpty) notImplemented(
-              "correlated scalar subquery without an aggregate function")
-            val (core, _, corr, _) = decorrelateRaw(agg.child, s.outerAttrs)
-            val keyPairs = correlationKeyPairs(corr, s.outerAttrs, "scalar subquery")
-            if (keyPairs.isEmpty) notImplemented(
-              "correlated scalar subquery without equality keys")
-            val innerKeys = keyPairs.map(_._2).distinctBy(_.exprId)
-            val aliased: Seq[NamedExpression] = aggParts.toSeq.zipWithIndex
-              .map { case (ae, i) => Alias(ae, s"__graft_agg_$i")() }
-            val newAgg = logical.Aggregate(innerKeys,
-              (innerKeys: Seq[NamedExpression]) ++ aliased, core)
-            val sub = toRel(newAgg)
-            val aggAttrs = sub.attrs.takeRight(aggParts.size)
-            val fixed = aggParts.toSeq.zip(aggAttrs).map { case (ae, attr) =>
-              ae.resultId ->
-                (if (ae.aggregateFunction.prettyName.startsWith("count"))
-                   Coalesce(Seq(attr, Literal(0L, LongType)))
-                 else attr)
-            }.toMap
-            replacement(s.exprId) = headExpr.transform {
-              case ae: AggregateExpression => fixed(ae.resultId)
-            }
-            val both = cur.attrs ++ sub.attrs
-            val cond = keyPairs.map { case (o, i) =>
-              SExpr.ScalarFn(anchor("equal"),
-                Seq(toSExpr(o, cur.attrs), toSExpr(i, both)))
-            }.reduceLeft((a, b) => SExpr.ScalarFn(anchor("and"), Seq(a, b)))
-            cur = Produced(Rel.Join(cur.rel, sub.rel, cond, JoinType.Left),
-              cur.attrs ++ sub.attrs)
-          case _ => notImplemented(
-            "correlated scalar subquery outside the single-aggregate shape")
-        }
-      }
-      val plain = plain0.map(_.transform {
-        case s: ScalarSubquery if replacement.contains(s.exprId) =>
-          // stand-in attr: resolves via the appended join columns
-          replacement(s.exprId)
-      })
-      subq.foreach {
-        case InSubquery(values, l: ListQuery) =>
-          // keep the subquery's output exprs in front, then the inner attrs
-          // the lifted correlated predicates need
-          val (subPlan, corr, needed) =
-            decorrelate(l.plan, l.outerAttrs, keepOutput = true)
-          val sub = toRel(subPlan)
-          val nL = cur.attrs.size
-          val nOut = sub.attrs.size - needed.size
-          val both = cur.attrs ++ sub.attrs
-          val eqs = values.zipWithIndex.map { case (v, i) =>
-            if (i >= nOut) internalErr("IN value arity > subquery output")
-            SExpr.ScalarFn(anchor("equal"),
-              Seq(toSExpr(v, cur.attrs), SExpr.FieldRef(nL + i)))
-          }
-          val corrS = corr.map(e => toSExpr(stripOuter(e), both))
-          val c = (eqs ++ corrS).reduceLeft((a, b) =>
-            SExpr.ScalarFn(anchor("and"), Seq(a, b)))
-          cur = Produced(Rel.Join(cur.rel, sub.rel, c, JoinType.Semi), cur.attrs)
-        case Not(InSubquery(values, l: ListQuery)) =>
-          // NOT IN: anti join on (eqs AND …) OR is_null(eqs AND …) — the
-          // null-aware form. Correlated predicates AND on the outside (they
-          // gate WHICH right rows participate, exactly as in the semi case).
-          val (subPlan, corr, needed) =
-            decorrelate(l.plan, l.outerAttrs, keepOutput = true)
-          val sub = toRel(subPlan)
-          val nL = cur.attrs.size
-          val nOut = sub.attrs.size - needed.size
-          val both = cur.attrs ++ sub.attrs
-          val eqs = values.zipWithIndex.map { case (v, i) =>
-            if (i >= nOut) internalErr("NOT IN value arity > subquery output")
-            SExpr.ScalarFn(anchor("equal"),
-              Seq(toSExpr(v, cur.attrs), SExpr.FieldRef(nL + i)))
-          }
-          val eqConj = eqs.reduceLeft((a, b) =>
-            SExpr.ScalarFn(anchor("and"), Seq(a, b)))
-          val nullAware = SExpr.ScalarFn(anchor("or"),
-            Seq(eqConj, SExpr.ScalarFn(anchor("is_null"), Seq(eqConj))))
-          val corrS = corr.map(e => toSExpr(stripOuter(e), both))
-          val c = (nullAware +: corrS).reduceLeft((a, b) =>
-            SExpr.ScalarFn(anchor("and"), Seq(a, b)))
-          cur = Produced(Rel.Join(cur.rel, sub.rel, c, JoinType.Anti), cur.attrs)
-        case ex: Exists =>
-          cur = existsJoin(cur, ex, JoinType.Semi)
-        case Not(ex: Exists) =>
-          cur = existsJoin(cur, ex, JoinType.Anti)
-        case other => internalErr(s"subquery partition leak: $other")
-      }
+      val in = toRel(child)
+      val (joined, plain) = scalarSubqueries(in, plain0)
+      val cur = semi.foldLeft(joined)(semiJoin)
       val filtered: Produced =
         if (plain.isEmpty) cur
         else {
@@ -1008,63 +721,210 @@ object Producer {
               Produced(Rel.Filter(cur.rel, c), cur.attrs)
           }
         }
-      // strip the scalar-subquery helper columns back off the output
-      if (scalarSubs.isEmpty) filtered
+      // strip the scalar-subquery join columns back off the output
+      if (joined.attrs.size == in.attrs.size) filtered
       else Produced(
-        Rel.Project(filtered.rel, (0 until nLeft).map(SExpr.FieldRef(_))),
-        filtered.attrs.take(nLeft))
+        Rel.Project(filtered.rel, in.attrs.indices.map(SExpr.FieldRef(_))),
+        in.attrs)
     }
 
-    /** [NOT] EXISTS → semi/anti join. EXISTS ignores the subquery's output,
-      * so the subplan is replaced with exactly the inner attrs the lifted
-      * correlated predicates reference; uncorrelated EXISTS joins on TRUE.
+    private def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => conjuncts(l) ++ conjuncts(r)
+      case other => Seq(other)
+    }
+
+    // ------------------------------------------------------------ subqueries
+    // The analyzed plan still holds its subqueries, and the wire has no
+    // subquery expression, so each becomes a join here — the rewrite Spark's
+    // own optimizer applies. One decorrelation (decorrelateRaw) feeds two
+    // builders: semiJoin for [NOT] IN / [NOT] EXISTS conjuncts, and
+    // groupedJoin for correlated scalar and LATERAL subqueries.
+
+    /** Replaces each distinct scalar subquery in `exprs` (first appearance
+      * order) with its value over a join appended to `in` (see
+      * [[subqueryJoin]]). Returns the joined input and the rewritten
+      * expressions; the caller projects the appended columns away. */
+    private def scalarSubqueries(in: Produced, exprs: Seq[Expression])
+        : (Produced, Seq[Expression]) = {
+      val subs = mutable.ArrayBuffer.empty[ScalarSubquery]
+      exprs.foreach(_.foreach {
+        case s: ScalarSubquery if !subs.exists(_.exprId == s.exprId) => subs += s
+        case _ => ()
+      })
+      if (subs.isEmpty) (in, exprs)
+      else {
+        var cur = in
+        val value = subs.map { s =>
+          val (joined, values) = subqueryJoin(cur, s, "scalar subquery")
+          cur = joined
+          s.exprId -> values.head
+        }.toMap
+        (cur, exprs.map(_.transform {
+          case s: ScalarSubquery if value.contains(s.exprId) => value(s.exprId)
+        }))
+      }
+    }
+
+    /** A scalar or LATERAL subquery joined to `left`: returns the join and
+      * the subquery's output values over the join's attrs.
+      * - Uncorrelated: the plan must provably yield exactly one row, and is
+      *   cross-joined. 0 rows would drop every probe row (SQL says the
+      *   value is NULL) and >1 would duplicate them (SQL says runtime
+      *   error); only a global aggregate, possibly under Projects, proves
+      *   one row.
+      * - Correlated: the plan must be a global aggregate, and becomes the
+      *   grouped LEFT join ([[groupedJoin]]).
       */
-    private def existsJoin(cur: Produced, ex: Exists, joinType: Int): Produced = {
-      val (subPlan, corr, _) =
-        decorrelate(ex.plan, ex.outerAttrs, keepOutput = false)
-      val sub = toRel(subPlan)
-      val both = cur.attrs ++ sub.attrs
-      val c =
-        if (corr.isEmpty) SExpr.Lit(LitVal.LBool(true))
-        else corr.map(e => toSExpr(stripOuter(e), both))
-          .reduceLeft((a, b) => SExpr.ScalarFn(anchor("and"), Seq(a, b)))
-      Produced(Rel.Join(cur.rel, sub.rel, c, joinType), cur.attrs)
+    private def subqueryJoin(left: Produced, sub: SubqueryExpression, what: String)
+        : (Produced, Seq[Expression]) = {
+      def unaliased(p: LogicalPlan): LogicalPlan = p match {
+        case a: logical.SubqueryAlias => unaliased(a.child)
+        case v: logical.View => unaliased(v.child)
+        case other => other
+      }
+      def provablySingleRow(p: LogicalPlan): Boolean = unaliased(p) match {
+        case agg: logical.Aggregate => agg.groupingExpressions.isEmpty
+        case prj: logical.Project => provablySingleRow(prj.child)
+        case _ => false
+      }
+      if (sub.getOuterAttrs.isEmpty) {
+        if (!provablySingleRow(sub.plan)) notImplemented(
+          s"uncorrelated $what whose plan is not a global aggregate " +
+            "(cannot guarantee exactly one row on the wire)")
+        val r = toRel(sub.plan)
+        (Produced(Rel.Cross(left.rel, r.rel), left.attrs ++ r.attrs), r.attrs)
+      } else unaliased(sub.plan) match {
+        case agg: logical.Aggregate if agg.groupingExpressions.isEmpty =>
+          groupedJoin(left, agg, sub.getOuterAttrs, what)
+        case _ => notImplemented(s"correlated $what that is not a global aggregate")
+      }
     }
 
-    /** Correlated-subquery decorrelation (the same rewrite Spark's optimizer
-      * applies): correlated conjuncts are lifted out of the subplan's Filter
-      * nodes into the enclosing semi-join condition. Lifting is only legal
-      * across Filter/Project/alias layers — an Aggregate/Limit/Window between
-      * the correlation and the top would change semantics, so any
-      * OuterReference below such a node fails loudly.
+    /** Correlated global aggregate → grouped LEFT join: the aggregate is
+      * grouped by the inner side of the lifted `outer = inner` keys and
+      * left-joined on them, so each probe row meets its own group. Returns
+      * the join and, per output of `agg`, its value over the join's attrs.
       *
-      * Returns (rebuilt subplan, lifted correlated conjuncts, appended inner
-      * attrs). The rebuilt plan's output = (original output exprs when
-      * `keepOutput`, for IN) ++ the inner attributes the lifted predicates
-      * reference — a semi join ignores extra right-side columns.
+      * Empty-group rule: a probe row whose group is empty meets no row, so
+      * every inner column reads NULL there, while the global aggregate over
+      * an empty input yields each aggregate's own empty value. So every
+      * aggregate inside an output gets its own inner column, fixed up by
+      * [[emptyGroupValue]], and the wider output expression is rebuilt
+      * outside the join over the fixed columns: `count(*) + 1` reads 1 and
+      * `coalesce(max(b), -1.0)` reads -1.0 on an empty group, as in Spark.
       */
-    private def decorrelate(plan: LogicalPlan, outerAttrs: Seq[Expression],
-                            keepOutput: Boolean)
-        : (LogicalPlan, Seq[Expression], Seq[Attribute]) = {
-      val (core, outExprs, corr, needed) = decorrelateRaw(plan, outerAttrs)
-      val out: Seq[NamedExpression] =
-        (if (keepOutput) outExprs.getOrElse(core.output) else Nil) ++ needed
-      (logical.Project(out, core), corr, needed)
+    private def groupedJoin(left: Produced, agg: logical.Aggregate,
+                            outerAttrs: Seq[Expression], what: String)
+        : (Produced, Seq[Expression]) = {
+      val outs = agg.aggregateExpressions.map {
+        case Alias(e, _) => e
+        case e => e
+      }
+      val parts = mutable.ArrayBuffer.empty[AggregateExpression]
+      outs.foreach(_.foreach {
+        case ae: AggregateExpression if !parts.exists(_.resultId == ae.resultId) =>
+          parts += ae
+        case _ => ()
+      })
+      if (parts.isEmpty) notImplemented(s"correlated $what without an aggregate function")
+      val (core, _, corr, _) = decorrelateRaw(agg.child, outerAttrs)
+      val keyPairs = correlationKeyPairs(corr, outerAttrs, what)
+      if (keyPairs.isEmpty) notImplemented(s"correlated $what without equality keys")
+      val innerKeys = keyPairs.map(_._2).distinctBy(_.exprId)
+      val aliased: Seq[NamedExpression] = parts.toSeq.zipWithIndex
+        .map { case (ae, i) => Alias(ae, s"__graft_agg_$i")() }
+      val sub = toRel(logical.Aggregate(innerKeys,
+        (innerKeys: Seq[NamedExpression]) ++ aliased, core))
+      val fixed = parts.toSeq.zip(sub.attrs.drop(innerKeys.size)).map {
+        case (ae, col) => ae.resultId -> emptyGroupValue(ae, col)
+      }.toMap
+      val both = left.attrs ++ sub.attrs
+      val cond = keyPairs.map { case (o, i) =>
+        SExpr.ScalarFn(anchor("equal"),
+          Seq(toSExpr(o, left.attrs), toSExpr(i, both)))
+      }.reduceLeft((a, b) => SExpr.ScalarFn(anchor("and"), Seq(a, b)))
+      (Produced(Rel.Join(left.rel, sub.rel, cond, JoinType.Left), both),
+        outs.map(_.transform { case ae: AggregateExpression => fixed(ae.resultId) }))
     }
 
-    /** peel Filter/Project/alias layers (stopping at catalog leaves), lift
-      * correlated conjuncts, keep local filters in place. Returns
-      * (core plan, top-level output exprs if any, lifted conjuncts, inner
-      * attrs those conjuncts reference).
+    /** The empty-group rule of [[groupedJoin]]: the value of aggregate `ae`
+      * given its inner join column `col`. count and count_if of an empty
+      * group are 0, so they coalesce to 0. The aggregates listed next are
+      * NULL over an empty input, exactly what the join miss reads, so they
+      * pass through. Any other aggregate has an empty value the join cannot
+      * give (collect_list's [], count_min_sketch's empty sketch,
+      * approx_count_distinct's 0) and is rejected. */
+    private def emptyGroupValue(ae: AggregateExpression, col: Attribute): Expression =
+      ae.aggregateFunction.prettyName match {
+        case "count" | "count_if" => Coalesce(Seq(col, Literal(0L, LongType)))
+        case "min" | "max" | "sum" | "avg" | "mean" | "first" | "last" |
+             "any_value" | "stddev" | "stddev_samp" | "stddev_pop" | "variance" |
+             "var_samp" | "var_pop" | "corr" | "covar_samp" | "covar_pop" |
+             "median" | "percentile" | "percentile_approx" | "approx_percentile" |
+             "mode" | "skewness" | "kurtosis" | "bool_and" | "bool_or" | "every" |
+             "max_by" | "min_by" | "bit_and" | "bit_or" | "bit_xor" => col
+        case other => notImplemented(
+          s"correlated aggregate $other: only count, count_if and NULL-on-empty " +
+            "aggregates survive the grouped-join rewrite (a group miss reads " +
+            s"NULL, and $other of an empty group does not)")
+      }
+
+    /** [NOT] IN / [NOT] EXISTS conjunct → semi/anti join of `cur` with the
+      * decorrelated subplan, whose output is (IN's compared columns, then)
+      * the inner attrs the lifted correlated conjuncts read; the conjuncts
+      * AND into the join condition. IN's semi join keeps its null semantics
+      * exactly (a NULL probe matches nothing). NOT IN's anti join is
+      * null-aware — `eq OR is_null(eq)`, Spark's own rewrite in plain
+      * scalar functions: a NULL probe is dropped, and any NULL on the
+      * subquery side drops every row. Spark plans the single-column form
+      * as a null-aware broadcast anti join; multi-column falls back to a
+      * nested loop, fine for the dimension-sized subqueries NOT IN is used
+      * with. EXISTS has no compared columns; uncorrelated, it joins on TRUE.
+      */
+    private def semiJoin(cur: Produced, conjunct: Expression): Produced = {
+      val (sub, values, anti) = conjunct match {
+        case InSubquery(vs, l: ListQuery) => (l, vs, false)
+        case Not(InSubquery(vs, l: ListQuery)) => (l, vs, true)
+        case ex: Exists => (ex, Nil, false)
+        case Not(ex: Exists) => (ex, Nil, true)
+        case other => internalErr(s"not a semi-join subquery: $other")
+      }
+      val (core, outExprs, corr, needed) = decorrelateRaw(sub.plan, sub.getOuterAttrs)
+      val compared = if (values.isEmpty) Nil else outExprs.getOrElse(core.output)
+      val r = toRel(logical.Project(compared ++ needed, core))
+      val both = cur.attrs ++ r.attrs
+      val eqs = values.zipWithIndex.map { case (v, i) =>
+        if (i >= compared.size) internalErr("IN value arity > subquery output")
+        SExpr.ScalarFn(anchor("equal"),
+          Seq(toSExpr(v, cur.attrs), SExpr.FieldRef(cur.attrs.size + i)))
+      }
+      val keys =
+        if (!anti || eqs.isEmpty) eqs
+        else {
+          val eq = eqs.reduceLeft((a, b) => SExpr.ScalarFn(anchor("and"), Seq(a, b)))
+          Seq(SExpr.ScalarFn(anchor("or"),
+            Seq(eq, SExpr.ScalarFn(anchor("is_null"), Seq(eq)))))
+        }
+      val c = (keys ++ corr.map(e => toSExpr(stripOuter(e), both)))
+        .reduceLeftOption((a, b) => SExpr.ScalarFn(anchor("and"), Seq(a, b)))
+        .getOrElse(SExpr.Lit(LitVal.LBool(true)))
+      Produced(Rel.Join(cur.rel, r.rel, c, if (anti) JoinType.Anti else JoinType.Semi),
+        cur.attrs)
+    }
+
+    /** The one decorrelation (the same rewrite Spark's optimizer applies):
+      * peel Filter/Project/alias layers (stopping at catalog leaves), lift
+      * the correlated conjuncts out of the Filters, keep local filters in
+      * place. Lifting is only legal across these layers — an
+      * Aggregate/Limit/Window between the correlation and the top would
+      * change semantics, so any OuterReference below such a node fails
+      * loudly. Returns (core plan, top-level output exprs if any, lifted
+      * conjuncts, inner attrs those conjuncts reference).
       */
     private def decorrelateRaw(plan: LogicalPlan, outerAttrs: Seq[Expression])
         : (LogicalPlan, Option[Seq[NamedExpression]], Seq[Expression], Seq[Attribute]) = {
       def hasOuter(e: Expression): Boolean =
         e.exists(_.isInstanceOf[OuterReference])
-      def conjuncts(e: Expression): Seq[Expression] = e match {
-        case And(l, r) => conjuncts(l) ++ conjuncts(r)
-        case other => Seq(other)
-      }
       // peel Filter/Project/alias layers, collecting correlated conjuncts;
       // keep local filters, remember the top-level output exprs
       var outExprs: Option[Seq[NamedExpression]] = None
@@ -1103,11 +963,8 @@ object Producer {
       (core, outExprs, corr.toSeq, needed)
     }
 
-    /** OuterReference(a) → a, so the lifted predicate resolves over the
-      * combined (left ++ right) join schema */
-    /** Lifted correlation conjuncts → (outer, inner) equality key pairs —
-      * shared by the correlated-scalar-subquery and LATERAL decorrelations;
-      * anything but `outer = inner` rejects loudly. */
+    /** Lifted correlation conjuncts → (outer, inner) equality key pairs of
+      * the grouped join; anything but `outer = inner` rejects loudly. */
     private def correlationKeyPairs(corr: Seq[Expression],
                                     outerAttrs: Seq[Expression],
                                     what: String): Seq[(Attribute, Attribute)] = {
@@ -1126,6 +983,8 @@ object Producer {
       }
     }
 
+    /** OuterReference(a) → a, so the lifted predicate resolves over the
+      * combined (left ++ right) join schema */
     private def stripOuter(e: Expression): Expression = e.transform {
       case OuterReference(a) => a
     }
@@ -1180,7 +1039,17 @@ object Producer {
             if (a.ignoreNulls) "first_ignore_nulls" else "first"
           case f => Producer.wireAggName(f.prettyName)
         }
-        val args = ae.aggregateFunction.children.map(c => toSExpr(c, inAttrs))
+        // approx_count_distinct's relativeSD is a constructor param, not a
+        // child: it rides as a literal second argument (the SQL form the
+        // consumer's registry rebuilds), left off at the default so default
+        // calls keep their one-argument form
+        val params = ae.aggregateFunction match {
+          case h: aggregate.HyperLogLogPlusPlus
+              if h.relativeSD != aggregate.HyperLogLogPlusPlus(h.child).relativeSD =>
+            Seq(Literal(h.relativeSD))
+          case _ => Nil
+        }
+        val args = (ae.aggregateFunction.children ++ params).map(c => toSExpr(c, inAttrs))
         Measure(
           AggFunction(anchor(name.toLowerCase), args,
             if (ae.isDistinct) AggInvocation.Distinct else AggInvocation.All),

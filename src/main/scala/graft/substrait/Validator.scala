@@ -28,7 +28,10 @@ object Validator {
       issues += Issue("plan", s"${plan.relations.size} relation trees; expected 1")
 
     /** returns the rel's output arity, or -1 when unknowable */
-    def walkRel(rel: Rel, path: String): Int = rel match {
+    def walkRel(rel: Rel, path: String): Int = Rel.arity(rel, walkInputs(rel, path))
+
+    /** checks `rel`, walks its inputs and returns their arities */
+    def walkInputs(rel: Rel, path: String): Seq[Int] = rel match {
       case Rel.Read(schema, names, projection, filter, vrows, localFiles) =>
         if (names.isEmpty && vrows.isEmpty && localFiles.isEmpty)
           issues += Issue(path,
@@ -50,25 +53,22 @@ object Validator {
         })
         // scan filter indexes the BASE schema, before the projection mask
         filter.foreach(walkExpr(_, width, s"$path/read.filter"))
-        projection match {
-          case Some(idxs) =>
-            if (width >= 0) idxs.filter(i => i < 0 || i >= width).foreach(i =>
-              issues += Issue(path, s"projection index $i out of range [0, $width)"))
-            idxs.size
-          case None => width
-        }
+        projection.foreach(idxs => if (width >= 0)
+          idxs.filter(i => i < 0 || i >= width).foreach(i =>
+            issues += Issue(path, s"projection index $i out of range [0, $width)")))
+        Nil
       case Rel.Project(input, exprs) =>
         val w = walkRel(input, s"$path/project")
         exprs.zipWithIndex.foreach { case (e, i) => walkExpr(e, w, s"$path/project[$i]") }
-        exprs.size
+        Seq(w)
       case Rel.Filter(input, cond) =>
         val w = walkRel(input, s"$path/filter")
         walkExpr(cond, w, s"$path/filter.cond")
-        w
+        Seq(w)
       case Rel.Fetch(input, offset, count) =>
         if (offset < 0) issues += Issue(path, s"negative offset $offset")
         if (count < 0) issues += Issue(path, s"negative count $count")
-        walkRel(input, s"$path/fetch")
+        Seq(walkRel(input, s"$path/fetch"))
       case Rel.Sort(input, sorts) =>
         val w = walkRel(input, s"$path/sort")
         sorts.zipWithIndex.foreach { case (s, i) =>
@@ -76,7 +76,7 @@ object Validator {
             issues += Issue(s"$path/sort[$i]", s"bad direction ${s.direction}")
           walkExpr(s.expr, w, s"$path/sort[$i]")
         }
-        w
+        Seq(w)
       case Rel.Aggregate(input, groupings, measures) =>
         val w = walkRel(input, s"$path/agg")
         if (groupings.size > 1 && measures.isEmpty)
@@ -91,38 +91,32 @@ object Validator {
           m.function.args.foreach(walkExpr(_, w, s"$path/agg.measure[$i]"))
           m.filter.foreach(walkExpr(_, w, s"$path/agg.measure[$i].filter"))
         }
-        // multi-set output = distinct group exprs (first appearance) ++
-        // measures ++ trailing grouping-set index (multi-set only)
-        groupings.flatten.distinct.size + measures.size +
-          (if (groupings.size > 1) 1 else 0)
+        Seq(w)
       case Rel.Join(left, right, cond, jt) =>
         val lw = walkRel(left, s"$path/join.left")
         val rw = walkRel(right, s"$path/join.right")
         val both = if (lw < 0 || rw < 0) -1 else lw + rw
         walkExpr(cond, both, s"$path/join.cond")
         if (jt < 1 || jt > 6) issues += Issue(path, s"unsupported join type $jt")
-        jt match {
-          case JoinType.Semi | JoinType.Anti => lw
-          case _ => both
-        }
+        Seq(lw, rw)
       case Rel.Cross(left, right) =>
         val lw = walkRel(left, s"$path/cross.left")
         val rw = walkRel(right, s"$path/cross.right")
-        if (lw < 0 || rw < 0) -1 else lw + rw
+        Seq(lw, rw)
       case Rel.Set(inputs, op) =>
         if (inputs.size < 2) issues += Issue(path, "SetRel with < 2 inputs")
         if (op < 1 || op > 6) issues += Issue(path, s"bad set op $op")
         val ws = inputs.zipWithIndex.map { case (in, i) => walkRel(in, s"$path/set[$i]") }
         if (ws.forall(_ >= 0) && ws.distinct.size > 1)
           issues += Issue(path, s"set inputs have differing arities $ws")
-        ws.headOption.getOrElse(-1)
+        ws
       case Rel.ExtGenerate(input, gen, arg, _, genArity) =>
         val w = walkRel(input, s"$path/generate")
         if (!Set("explode", "posexplode", "inline").contains(gen))
           issues += Issue(path, s"unknown generator '$gen'")
         if (genArity < 1) issues += Issue(path, s"generator arity $genArity < 1")
         walkExpr(arg, w, s"$path/generate.arg")
-        if (w < 0) -1 else w + genArity
+        Seq(w)
       case Rel.ExtExchange(input, exprs, num, _, rangeDirs) =>
         val w = walkRel(input, s"$path/exchange")
         if (num < 0) issues += Issue(path, s"negative partition count $num")
@@ -131,18 +125,18 @@ object Validator {
             s"${rangeDirs.size} range directions for ${exprs.size} exprs")
         exprs.zipWithIndex.foreach { case (e, i) =>
           walkExpr(e, w, s"$path/exchange[$i]") }
-        w
+        Seq(w)
       case Rel.ExtSample(input, lo, hi, _, _) =>
         val w = walkRel(input, s"$path/sample")
         if (lo < 0.0 || hi > 1.0 || lo > hi)
           issues += Issue(path, s"bad sample bounds [$lo, $hi]")
-        w
+        Seq(w)
       case Rel.ExtHint(input, hint) =>
         val w = walkRel(input, s"$path/hint")
         if (!Set("broadcast", "merge", "shuffle_hash",
             "shuffle_replicate_nl").contains(hint))
           issues += Issue(path, s"unknown join-strategy hint '$hint'")
-        w
+        Seq(w)
 
       case Rel.ExtSessionWindow(input, tsField, gapMicros, gapExpr) =>
         val w = walkRel(input, s"$path/session_window")
@@ -155,20 +149,19 @@ object Validator {
         if (gapExpr.isDefined && gapMicros != 0L)
           issues += Issue(path,
             s"session gap has both literal ($gapMicros) and dynamic forms")
-        if (w < 0) -1 else w + 1
+        Seq(w)
 
       case Rel.ExtStage(input, stage) =>
         val w = walkRel(input, s"$path/stage")
         Stages.registry.get(stage) match {
           case None =>
             issues += Issue(path, s"unknown typed stage '$stage'")
-            -1
           case Some(st) =>
             if (w >= 0 && w != st.inputCols.size)
               issues += Issue(path, s"stage '$stage' expects " +
                 s"${st.inputCols.size} inputs, plan provides $w")
-            st.outputArity
         }
+        Seq(w)
 
       case Rel.ExtIteration(input, bodyPlan, maxIters, checkFp, requireFp) =>
         val w = walkRel(input, s"$path/iteration")
@@ -193,7 +186,7 @@ object Validator {
         // it in its own scope and surface its issues under this path
         validate(bodyPlan).foreach(i =>
           issues += Issue(s"$path/iteration-body/${i.path}", i.msg))
-        w // schema-preserving over the state
+        Seq(w)
     }
 
     def walkExpr(e: SExpr, width: Int, path: String): Unit = e match {
@@ -245,21 +238,7 @@ object Validator {
 
   private def containsIteration(rel: Rel): Boolean = rel match {
     case _: Rel.ExtIteration => true
-    case r: Rel.Project => containsIteration(r.input)
-    case r: Rel.Filter => containsIteration(r.input)
-    case r: Rel.Fetch => containsIteration(r.input)
-    case r: Rel.Sort => containsIteration(r.input)
-    case r: Rel.Aggregate => containsIteration(r.input)
-    case r: Rel.Join => containsIteration(r.left) || containsIteration(r.right)
-    case r: Rel.Cross => containsIteration(r.left) || containsIteration(r.right)
-    case r: Rel.Set => r.inputs.exists(containsIteration)
-    case r: Rel.ExtGenerate => containsIteration(r.input)
-    case r: Rel.ExtExchange => containsIteration(r.input)
-    case r: Rel.ExtSample => containsIteration(r.input)
-    case r: Rel.ExtStage => containsIteration(r.input)
-    case r: Rel.ExtSessionWindow => containsIteration(r.input)
-    case r: Rel.ExtHint => containsIteration(r.input)
-    case _: Rel.Read => false
+    case r => Rel.inputs(r).exists(containsIteration)
   }
 
   /** throw on the first report (convenience for consume-time gating) */

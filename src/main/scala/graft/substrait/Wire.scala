@@ -899,41 +899,6 @@ object Wire {
   /** Any.type_url for graft's bounded-iteration extension rel detail. */
   val iterationDetailUrl = "graft.dev/IterationRelDetail"
 
-  /** Output arity of a decoded rel — needed to resolve RelCommon.emit on a
-    * ProjectRel, whose mapping indexes the concatenated (input ++
-    * expressions) space per the substrait spec. */
-  private def relArity(rel: Rel): Int = rel match {
-    case Rel.Read(schema, _, proj, _, _, _) =>
-      proj.map(_.size).getOrElse(if (schema == null) -1 else schema.names.size)
-    case Rel.Project(_, exprs) => exprs.size
-    case Rel.Filter(in, _) => relArity(in)
-    case Rel.Fetch(in, _, _) => relArity(in)
-    case Rel.Sort(in, _) => relArity(in)
-    case Rel.Aggregate(_, groupings, measures) =>
-      groupings.flatten.distinct.size + measures.size +
-        (if (groupings.size > 1) 1 else 0)
-    case Rel.Join(l, rr, _, jt) => jt match {
-      case JoinType.Semi | JoinType.Anti => relArity(l)
-      case _ =>
-        val (a, b) = (relArity(l), relArity(rr))
-        if (a < 0 || b < 0) -1 else a + b
-    }
-    case Rel.Cross(l, rr) =>
-      val (a, b) = (relArity(l), relArity(rr))
-      if (a < 0 || b < 0) -1 else a + b
-    case Rel.Set(inputs, _) => inputs.headOption.map(relArity).getOrElse(-1)
-    case Rel.ExtGenerate(in, _, _, _, k) =>
-      val a = relArity(in); if (a < 0) -1 else a + k
-    case Rel.ExtExchange(in, _, _, _, _) => relArity(in)
-    case Rel.ExtSample(in, _, _, _, _) => relArity(in)
-    case Rel.ExtHint(in, _) => relArity(in)
-    case Rel.ExtStage(_, stage) =>
-      Stages.registry.get(stage).map(_.outputArity).getOrElse(-1)
-    case Rel.ExtSessionWindow(in, _, _, _) =>
-      val a = relArity(in); if (a < 0) -1 else a + 1
-    case Rel.ExtIteration(in, _, _, _, _) => relArity(in) // schema-preserving
-  }
-
   /** RelCommon{emit=2{repeated int32 output_mapping=1}} → the mapping.
     * direct=1 (or absent) means identity output. */
   private def readCommonEmit(cr: R): Option[Seq[Int]] = {
@@ -1287,7 +1252,7 @@ object Wire {
       case Some(mapping) =>
         res match {
           case Rel.Project(in, exprs) =>
-            val inA = relArity(in)
+            val inA = Rel.arity(in)
             if (inA < 0) notImplemented("emit on a project with unknowable input arity")
             Rel.Project(in, mapping.map { i =>
               if (i < inA) SExpr.FieldRef(i)

@@ -281,6 +281,56 @@ object model {
       * side, stream the small one) and collapse downstream parallelism:
       * measured 90 s raw vs 398 s hint-stripped on the sf1 d03 pipeline. */
     final case class ExtHint(input: Rel, hint: String) extends Rel
+
+    /** A rel's input relations, left to right, and the rebuild that swaps
+      * them — one exhaustive match, so a new rel case fails to compile here
+      * until its inputs are named. An iteration's body is a nested plan,
+      * not an input. */
+    private def shape(rel: Rel): (Seq[Rel], Seq[Rel] => Rel) = rel match {
+      case r: Read => (Nil, _ => r)
+      case r: Project => (Seq(r.input), in => r.copy(input = in.head))
+      case r: Filter => (Seq(r.input), in => r.copy(input = in.head))
+      case r: Fetch => (Seq(r.input), in => r.copy(input = in.head))
+      case r: Sort => (Seq(r.input), in => r.copy(input = in.head))
+      case r: Aggregate => (Seq(r.input), in => r.copy(input = in.head))
+      case r: Join => (Seq(r.left, r.right), in => r.copy(left = in(0), right = in(1)))
+      case r: Cross => (Seq(r.left, r.right), in => r.copy(left = in(0), right = in(1)))
+      case r: Set => (r.inputs, in => r.copy(inputs = in))
+      case r: ExtGenerate => (Seq(r.input), in => r.copy(input = in.head))
+      case r: ExtExchange => (Seq(r.input), in => r.copy(input = in.head))
+      case r: ExtSample => (Seq(r.input), in => r.copy(input = in.head))
+      case r: ExtStage => (Seq(r.input), in => r.copy(input = in.head))
+      case r: ExtSessionWindow => (Seq(r.input), in => r.copy(input = in.head))
+      case r: ExtIteration => (Seq(r.input), in => r.copy(input = in.head))
+      case r: ExtHint => (Seq(r.input), in => r.copy(input = in.head))
+    }
+
+    def inputs(rel: Rel): Seq[Rel] = shape(rel)._1
+    def withInputs(rel: Rel, inputs: Seq[Rel]): Rel = shape(rel)._2(inputs)
+
+    /** Output arity of `rel` given its inputs' arities, -1 when unknowable.
+      * A multi-grouping AggregateRel emits the distinct group expressions
+      * (first appearance), its measures, then a trailing grouping-set index. */
+    def arity(rel: Rel, in: Seq[Int]): Int = {
+      def plus(k: Int): Int = if (in.head < 0) -1 else in.head + k
+      rel match {
+        case r: Read => r.projection.map(_.size)
+          .getOrElse(if (r.baseSchema == null) -1 else r.baseSchema.names.size)
+        case r: Project => r.expressions.size
+        case r: Aggregate => r.groupings.flatten.distinct.size + r.measures.size +
+          (if (r.groupings.size > 1) 1 else 0)
+        case r: Join if r.joinType == JoinType.Semi || r.joinType == JoinType.Anti => in.head
+        case _: Join | _: Cross => if (in.exists(_ < 0)) -1 else in.sum
+        case _: Set => in.headOption.getOrElse(-1)
+        case r: ExtGenerate => plus(r.genArity)
+        case _: ExtSessionWindow => plus(1)
+        case r: ExtStage => Stages.registry.get(r.stage).map(_.outputArity).getOrElse(-1)
+        case _: Filter | _: Fetch | _: Sort | _: ExtExchange | _: ExtSample |
+             _: ExtIteration | _: ExtHint => in.head
+      }
+    }
+
+    def arity(rel: Rel): Int = arity(rel, inputs(rel).map(arity))
   }
 
   /** algebra.proto JoinRel.JoinType values. */

@@ -205,13 +205,15 @@ class CteProbeSpec extends SparkTestBase {
 
   test("lateral outputs that are not NULL-on-empty aggregates reject loudly") {
     fixture
-    // coalesce(max(b), -1) is -1.0 on an empty group in Spark but NULL after
-    // the grouped-join rewrite — silently diverging, so it must reject
-    val e = intercept[Exception](Serializer.roundtrip(spark, spark.sql(
+    // coalesce(max(b), -1) is -1.0 on an empty group: the grouped join
+    // passes max's NULL through and rebuilds the coalesce outside the join,
+    // so the miss reads -1.0 exactly as in Spark
+    val defaulted = spark.sql(
       """SELECT c.a, l.p FROM cte_data c,
         |LATERAL (SELECT coalesce(max(b), -1.0) AS p FROM cte_data i
-        |         WHERE i.a = c.a AND i.b > 100) l""".stripMargin)))
-    assert(e.getMessage.contains("NULL-on-empty"), e.getMessage)
+        |         WHERE i.a = c.a AND i.b > 100) l""".stripMargin)
+    assert(defaulted.collect().forall(_.getDouble(1) == -1.0))
+    assertRoundtrip(defaulted)
     // collect_list gives [] on empty — also not representable by a join miss
     val e2 = intercept[Exception](Serializer.roundtrip(spark, spark.sql(
       """SELECT c.a, l.vs FROM cte_data c,
@@ -239,6 +241,17 @@ class CteProbeSpec extends SparkTestBase {
         |       percentile_disc(0.3) WITHIN GROUP (ORDER BY b) AS a2
         |FROM cte_data WHERE a = 3""".stripMargin)).collect()(0)
     assert(got.getDouble(0) == 4.5 && got.getDouble(1) == 1.5, got.toString)
+  }
+
+  test("approx_count_distinct keeps a non-default rsd across the wire") {
+    // rsd is a constructor param of HyperLogLogPlusPlus, not a child
+    def estimate(rsd: String) = spark.sql(
+      s"""SELECT approx_count_distinct(id % 5000$rsd) AS n
+         |FROM (SELECT explode(sequence(0, 19999)) AS id)""".stripMargin)
+    val coarse = estimate(", 0.3")
+    assert(coarse.head().getLong(0) != estimate("").head().getLong(0),
+      "the probe must tell rsd 0.3 from the default")
+    assertRoundtrip(coarse)
   }
 
   test("session_window aggregate rides the wire with merge semantics intact") {
