@@ -105,11 +105,31 @@ object SparkEntry {
     * its builder. With `wire` (the default) the table sends the built frame
     * through Serializer.roundtrip; the five `wire = false` queries carry their
     * own hop (d08, d13, d17 and t36 ship their loop as one ExtIteration, d14
-    * round-trips its pair stage). */
+    * round-trips its pair stage).
+    *
+    * A query whose Spark SQL is also valid DuckDB SQL with the same rows and
+    * types is `Query.sql(name, text)`: one text is both oracle and builder. A
+    * SQL-built query keeps two texts only where the dialects differ, with the
+    * reason on its record: q40 (PIVOT), q42 (IGNORE NULLS placement), q38
+    * (the LATERAL form is what it tests), and q63/q66/q67/q68, whose oracle
+    * casts to BIGINT for DuckDB while the wire carries the analyzed plan of
+    * the builder's text. */
   final case class Query(name: String, oracle: String, wire: Boolean = true)(
       val build: (SparkSession, String) => DataFrame) {
     def frame(s: SparkSession, dir: String): DataFrame =
       if (wire) Serializer.roundtrip(s, build(s, dir)) else build(s, dir)
+  }
+
+  object Query {
+    def sql(name: String, text: String): Query = Query(name, text)(SqlBuild(text))
+  }
+
+  /** The builder of a `Query.sql` record: registers the tables, runs `text`. */
+  final case class SqlBuild(text: String) extends ((SparkSession, String) => DataFrame) {
+    def apply(s: SparkSession, dir: String): DataFrame = {
+      Tables.register(s, dir)
+      s.sql(text)
+    }
   }
 
   /** d07 and d11: the Bloom prefilter must not change one row. */
@@ -4393,64 +4413,41 @@ object SparkEntry {
     }),
 
     // uncorrelated IN subquery → semi JoinRel on the wire
-    Query("q32_in_subquery",
+    Query.sql("q32_in_subquery",
       """SELECT o_orderkey, o_totalprice FROM orders
         |WHERE o_custkey IN (SELECT c_custkey FROM customer
         |                    WHERE c_mktsegment = 'BUILDING')
-        |ORDER BY o_orderkey""".stripMargin)((s, dir) => {
-      t(s, dir, "orders") // ensure view registration before spark.sql
-      s.sql(
-        """SELECT o_orderkey, o_totalprice FROM orders
-          |WHERE o_custkey IN (SELECT c_custkey FROM customer
-          |                    WHERE c_mktsegment = 'BUILDING')
-          |ORDER BY o_orderkey""".stripMargin)
-    }),
+        |ORDER BY o_orderkey""".stripMargin),
 
     // correlated EXISTS (TPC-H Q4 shape) → decorrelated semi JoinRel
-    Query("q34_exists_correlated",
+    Query.sql("q34_exists_correlated",
       """SELECT o_orderpriority, count(*) AS order_count
         |FROM orders
         |WHERE EXISTS (SELECT 1 FROM lineitem
         |              WHERE l_orderkey = o_orderkey AND l_discount > 0.05)
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)((s, dir) => {
-      t(s, dir, "orders"); t(s, dir, "lineitem")
-      s.sql(
-        """SELECT o_orderpriority, count(*) AS order_count
-          |FROM orders
-          |WHERE EXISTS (SELECT 1 FROM lineitem
-          |              WHERE l_orderkey = o_orderkey AND l_discount > 0.05)
-          |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)
-    }),
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
 
-    // correlated scalar aggregate (TPC-H Q17 shape) → grouped left join
     // NOT IN with a NULLABLE probe side: the anti JoinRel's null-aware
     // condition (eq OR is_null(eq)) crosses the wire; NULL probes drop
     // (SQL three-valued logic), non-null probes anti-join
-    Query("q37_not_in_subquery",
+    Query.sql("q37_not_in_subquery",
       """SELECT o_orderkey, o_totalprice FROM (
         |  SELECT o_orderkey, o_totalprice,
         |    CASE WHEN o_orderstatus = 'P' THEN NULL ELSE o_custkey END AS probe
         |  FROM orders)
         |WHERE probe NOT IN (SELECT c_custkey FROM customer WHERE c_acctbal < 0.0)
-        |ORDER BY o_orderkey""".stripMargin)((s, dir) => {
-      t(s, dir, "orders"); t(s, dir, "customer")
-      s.sql(
-        """SELECT o_orderkey, o_totalprice FROM (
-          |  SELECT o_orderkey, o_totalprice,
-          |    CASE WHEN o_orderstatus = 'P' THEN NULL ELSE o_custkey END AS probe
-          |  FROM orders)
-          |WHERE probe NOT IN (SELECT c_custkey FROM customer WHERE c_acctbal < 0.0)
-          |ORDER BY o_orderkey""".stripMargin)
-    }),
+        |ORDER BY o_orderkey""".stripMargin),
 
     // LATERAL aggregate subquery: decorrelates on the wire into the grouped
     // left join (bare COUNT coalesces to 0 on group misses)
+    // Two texts: the builder is the LATERAL form on purpose; the oracle is
+    // DuckDB's equivalent pair of projected scalar subqueries
     Query("q38_lateral",
       """SELECT c.c_custkey,
         |  (SELECT count(*) FROM orders o WHERE o.o_custkey = c.c_custkey) AS n_orders,
         |  (SELECT max(o_totalprice) FROM orders o WHERE o.o_custkey = c.c_custkey) AS max_price
         |FROM customer c ORDER BY c.c_custkey""".stripMargin)((s, dir) => {
-      t(s, dir, "customer"); t(s, dir, "orders")
+      Tables.register(s, dir)
       s.sql(
         """SELECT c.c_custkey, l.n_orders, l.max_price
           |FROM customer c,
@@ -4461,24 +4458,17 @@ object SparkEntry {
 
     // multi-reference CTE: WithCTE/CTERelationRef inline per reference on
     // the wire (substrait has no subplan sharing)
-    Query("q39_cte",
+    Query.sql("q39_cte",
       """WITH t AS (SELECT l_partkey,
         |             CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS q
         |           FROM lineitem GROUP BY l_partkey)
         |SELECT t1.l_partkey, t1.q
         |FROM t t1 JOIN t t2 ON t1.l_partkey = t2.l_partkey + 1
-        |WHERE t1.q > t2.q ORDER BY t1.l_partkey""".stripMargin)((s, dir) => {
-      t(s, dir, "lineitem")
-      s.sql(
-        """WITH t AS (SELECT l_partkey,
-          |             CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS q
-          |           FROM lineitem GROUP BY l_partkey)
-          |SELECT t1.l_partkey, t1.q
-          |FROM t t1 JOIN t t2 ON t1.l_partkey = t2.l_partkey + 1
-          |WHERE t1.q > t2.q ORDER BY t1.l_partkey""".stripMargin)
-    }),
+        |WHERE t1.q > t2.q ORDER BY t1.l_partkey""".stripMargin),
 
     // PIVOT: pivotfirst rewritten on the wire into per-value first measures
+    // Two texts: the builder uses Spark's PIVOT syntax; the oracle spells
+    // the pivot as conditional sums
     Query("q40_pivot",
       """SELECT l_returnflag,
         |  CAST(sum(CASE WHEN l_linestatus = 'O'
@@ -4486,7 +4476,7 @@ object SparkEntry {
         |  CAST(sum(CASE WHEN l_linestatus = 'F'
         |           THEN CAST(l_quantity AS DECIMAL(18,2)) END) AS DOUBLE) AS f
         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)((s, dir) => {
-      t(s, dir, "lineitem")
+      Tables.register(s, dir)
       s.sql(
         """SELECT * FROM (SELECT l_returnflag, l_linestatus,
           |                      CAST(l_quantity AS DECIMAL(18,2)) AS q
@@ -4516,6 +4506,7 @@ object SparkEntry {
 
     // IGNORE NULLS window offsets over outer-join nulls (the
     // first_ignore_nulls/last_ignore_nulls extension names on the wire)
+    // Two texts: Spark writes IGNORE NULLS after the call, DuckDB inside it
     Query("q42_window_ignore_nulls",
       """SELECT c_custkey,
         |  last_value(o_orderkey IGNORE NULLS) OVER
@@ -4526,7 +4517,7 @@ object SparkEntry {
         |      FROM customer LEFT JOIN orders ON c_custkey = o_custkey
         |        AND o_orderkey % 50 = 0)
         |ORDER BY c_custkey, last_seen_order""".stripMargin)((s, dir) => {
-      t(s, dir, "customer"); t(s, dir, "orders")
+      Tables.register(s, dir)
       s.sql(
         """SELECT c_custkey,
           |  last_value(o_orderkey) IGNORE NULLS OVER
@@ -4539,22 +4530,14 @@ object SparkEntry {
           |ORDER BY c_custkey, last_seen_order""".stripMargin)
     }),
 
-    Query("q35_scalar_correlated",
+    // correlated scalar aggregate (TPC-H Q17 shape) → grouped left join
+    Query.sql("q35_scalar_correlated",
       """SELECT l1.l_orderkey, l1.l_linenumber, l1.l_quantity
         |FROM lineitem l1
         |WHERE l1.l_quantity > 1.9 * (SELECT avg(l2.l_quantity)
         |                             FROM lineitem l2
         |                             WHERE l2.l_partkey = l1.l_partkey)
-        |ORDER BY l1.l_orderkey, l1.l_linenumber""".stripMargin)((s, dir) => {
-      t(s, dir, "lineitem")
-      s.sql(
-        """SELECT l1.l_orderkey, l1.l_linenumber, l1.l_quantity
-          |FROM lineitem l1
-          |WHERE l1.l_quantity > 1.9 * (SELECT avg(l2.l_quantity)
-          |                             FROM lineitem l2
-          |                             WHERE l2.l_partkey = l1.l_partkey)
-          |ORDER BY l1.l_orderkey, l1.l_linenumber""".stripMargin)
-    }),
+        |ORDER BY l1.l_orderkey, l1.l_linenumber""".stripMargin),
 
     // correlated COUNT inside a WIDER scalar expression (the r9-rejected
     // shape): the count decorrelates to a grouped LEFT join whose miss rows
@@ -4562,29 +4545,20 @@ object SparkEntry {
     // outside the join — parts with zero qualifying lines see 0, not NULL,
     // so `p_size < 0` correctly drops them instead of NULL-filtering by
     // accident. One hash aggregate + one equi left join; both scans pruned.
-    Query("q69_corr_count_expr",
+    Query.sql("q69_corr_count_expr",
       """SELECT p.p_partkey, p.p_size
         |FROM part p
         |WHERE p.p_size < (SELECT count(*) * 2 FROM lineitem l
         |                  WHERE l.l_partkey = p.p_partkey
         |                    AND l.l_quantity > 45)
-        |ORDER BY p.p_partkey""".stripMargin)((s, dir) => {
-      t(s, dir, "part"); t(s, dir, "lineitem")
-      s.sql(
-        """SELECT p.p_partkey, p.p_size
-          |FROM part p
-          |WHERE p.p_size < (SELECT count(*) * 2 FROM lineitem l
-          |                  WHERE l.l_partkey = p.p_partkey
-          |                    AND l.l_quantity > 45)
-          |ORDER BY p.p_partkey""".stripMargin)
-    }),
+        |ORDER BY p.p_partkey""".stripMargin),
 
     // TPC-H Q2 shape: multi-level correlated MIN — the scalar subquery joins
     // four tables and correlates on the outer part key; decorrelates into a
     // grouped min over the same join tree, then an equi-join back on
     // (partkey, price). lineitem stands in for partsupp (this schema's
     // part-supplier association); min unit price ≡ min supplycost.
-    Query("q47_tpch_q2_mincost",
+    Query.sql("q47_tpch_q2_mincost",
       """SELECT s.s_acctbal, s.s_name, n.n_name, p.p_partkey, p.p_type,
         |  l.l_extendedprice AS min_price
         |FROM part p, supplier s, lineitem l, nation n, region r
@@ -4597,30 +4571,13 @@ object SparkEntry {
         |    WHERE l2.l_partkey = p.p_partkey AND s2.s_suppkey = l2.l_suppkey
         |      AND s2.s_nationkey = n2.n_nationkey AND n2.n_regionkey = r2.r_regionkey
         |      AND r2.r_name = 'ASIA')
-        |ORDER BY s.s_acctbal DESC, n.n_name, s.s_name, p.p_partkey""".stripMargin)((s, dir) => {
-      t(s, dir, "part"); t(s, dir, "supplier"); t(s, dir, "lineitem")
-      t(s, dir, "nation"); t(s, dir, "region")
-      s.sql(
-        """SELECT s.s_acctbal, s.s_name, n.n_name, p.p_partkey, p.p_type,
-          |  l.l_extendedprice AS min_price
-          |FROM part p, supplier s, lineitem l, nation n, region r
-          |WHERE p.p_partkey = l.l_partkey AND s.s_suppkey = l.l_suppkey
-          |  AND s.s_nationkey = n.n_nationkey AND n.n_regionkey = r.r_regionkey
-          |  AND r.r_name = 'ASIA' AND p.p_size < 5
-          |  AND l.l_extendedprice = (
-          |    SELECT min(l2.l_extendedprice)
-          |    FROM lineitem l2, supplier s2, nation n2, region r2
-          |    WHERE l2.l_partkey = p.p_partkey AND s2.s_suppkey = l2.l_suppkey
-          |      AND s2.s_nationkey = n2.n_nationkey AND n2.n_regionkey = r2.r_regionkey
-          |      AND r2.r_name = 'ASIA')
-          |ORDER BY s.s_acctbal DESC, n.n_name, s.s_name, p.p_partkey""".stripMargin)
-    }),
+        |ORDER BY s.s_acctbal DESC, n.n_name, s.s_name, p.p_partkey""".stripMargin),
 
     // TPC-H Q21 shape: EXISTS and NOT EXISTS over the SAME table as the
     // outer (two decorrelated self-joins — semi + anti — on l_orderkey with
     // a non-equi residual l_suppkey <> l1.l_suppkey). returnflag 'R'
     // stands in for the receipt-late predicate this schema doesn't carry.
-    Query("q48_tpch_q21_waiting",
+    Query.sql("q48_tpch_q21_waiting",
       """SELECT s.s_name, count(*) AS numwait
         |FROM supplier s, lineitem l1, orders o, nation n
         |WHERE s.s_suppkey = l1.l_suppkey AND o.o_orderkey = l1.l_orderkey
@@ -4634,31 +4591,13 @@ object SparkEntry {
         |                  WHERE l3.l_orderkey = l1.l_orderkey
         |                    AND l3.l_suppkey <> l1.l_suppkey
         |                    AND l3.l_returnflag = 'R')
-        |GROUP BY s.s_name ORDER BY numwait DESC, s_name""".stripMargin)((s, dir) => {
-      t(s, dir, "supplier"); t(s, dir, "lineitem")
-      t(s, dir, "orders"); t(s, dir, "nation")
-      s.sql(
-        """SELECT s.s_name, count(*) AS numwait
-          |FROM supplier s, lineitem l1, orders o, nation n
-          |WHERE s.s_suppkey = l1.l_suppkey AND o.o_orderkey = l1.l_orderkey
-          |  AND o.o_orderstatus = 'F' AND l1.l_returnflag = 'R'
-          |  AND s.s_nationkey = n.n_nationkey
-          |  AND n.n_name IN ('NATION_1', 'NATION_3')
-          |  AND EXISTS (SELECT 1 FROM lineitem l2
-          |              WHERE l2.l_orderkey = l1.l_orderkey
-          |                AND l2.l_suppkey <> l1.l_suppkey)
-          |  AND NOT EXISTS (SELECT 1 FROM lineitem l3
-          |                  WHERE l3.l_orderkey = l1.l_orderkey
-          |                    AND l3.l_suppkey <> l1.l_suppkey
-          |                    AND l3.l_returnflag = 'R')
-          |GROUP BY s.s_name ORDER BY numwait DESC, s_name""".stripMargin)
-    }),
+        |GROUP BY s.s_name ORDER BY numwait DESC, s_name""".stripMargin),
 
     // TPC-H Q20 shape: IN-subquery whose HAVING holds a scalar subquery
     // CORRELATED ON A GROUPING KEY (the excess-stock pattern) nested inside
     // another IN — decorrelation must thread the correlation through the
     // group-by
-    Query("q50_tpch_q20_excess",
+    Query.sql("q50_tpch_q20_excess",
       """SELECT s_name, s_acctbal FROM supplier
         |WHERE s_suppkey IN (
         |  SELECT l1.l_suppkey FROM lineitem l1
@@ -4668,24 +4607,11 @@ object SparkEntry {
         |  HAVING sum(l1.l_quantity) >
         |    (SELECT 4.0 * avg(l2.l_quantity) FROM lineitem l2
         |     WHERE l2.l_partkey = l1.l_partkey))
-        |ORDER BY s_name""".stripMargin)((s, dir) => {
-      t(s, dir, "supplier"); t(s, dir, "lineitem"); t(s, dir, "part")
-      s.sql(
-        """SELECT s_name, s_acctbal FROM supplier
-          |WHERE s_suppkey IN (
-          |  SELECT l1.l_suppkey FROM lineitem l1
-          |  WHERE l1.l_partkey IN (SELECT p_partkey FROM part
-          |                         WHERE p_type = 'PROMO')
-          |  GROUP BY l1.l_suppkey, l1.l_partkey
-          |  HAVING sum(l1.l_quantity) >
-          |    (SELECT 4.0 * avg(l2.l_quantity) FROM lineitem l2
-          |     WHERE l2.l_partkey = l1.l_partkey))
-          |ORDER BY s_name""".stripMargin)
-    }),
+        |ORDER BY s_name""".stripMargin),
 
     // TPC-H Q11 shape: HAVING compares each group's aggregate against a
     // scalar subquery running the SAME join+aggregate globally
-    Query("q51_tpch_q11_value",
+    Query.sql("q51_tpch_q11_value",
       """SELECT l_partkey,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS value
         |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
@@ -4698,27 +4624,11 @@ object SparkEntry {
         |   FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
         |     JOIN nation ON s_nationkey = n_nationkey
         |   WHERE n_name = 'NATION_3')
-        |ORDER BY value DESC, l_partkey""".stripMargin)((s, dir) => {
-      t(s, dir, "lineitem"); t(s, dir, "supplier"); t(s, dir, "nation")
-      s.sql(
-        """SELECT l_partkey,
-          |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS value
-          |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-          |  JOIN nation ON s_nationkey = n_nationkey
-          |WHERE n_name = 'NATION_3'
-          |GROUP BY l_partkey
-          |HAVING sum(CAST(l_extendedprice AS DECIMAL(18,2))) >
-          |  (SELECT 2.5 * sum(CAST(l_extendedprice AS DECIMAL(18,2)))
-          |     / count(DISTINCT l_partkey)
-          |   FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-          |     JOIN nation ON s_nationkey = n_nationkey
-          |   WHERE n_name = 'NATION_3')
-          |ORDER BY value DESC, l_partkey""".stripMargin)
-    }),
+        |ORDER BY value DESC, l_partkey""".stripMargin),
 
     // TPC-H Q15 shape: multi-reference CTE + scalar MAX over it (top
     // revenue supplier); decimal-exact revenue so ties are exact
-    Query("q52_tpch_q15_topsupp",
+    Query.sql("q52_tpch_q15_topsupp",
       """WITH revenue AS (
         |  SELECT l_suppkey AS supplier_no,
         |    sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4)))
@@ -4728,47 +4638,25 @@ object SparkEntry {
         |FROM supplier, revenue
         |WHERE s_suppkey = supplier_no
         |  AND total = (SELECT max(total) FROM revenue)
-        |ORDER BY s_suppkey""".stripMargin)((s, dir) => {
-      t(s, dir, "supplier"); t(s, dir, "lineitem")
-      s.sql(
-        """WITH revenue AS (
-          |  SELECT l_suppkey AS supplier_no,
-          |    sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4)))
-          |      AS total
-          |  FROM lineitem GROUP BY l_suppkey)
-          |SELECT s_suppkey, s_name, CAST(total AS DOUBLE) AS total_revenue
-          |FROM supplier, revenue
-          |WHERE s_suppkey = supplier_no
-          |  AND total = (SELECT max(total) FROM revenue)
-          |ORDER BY s_suppkey""".stripMargin)
-    }),
+        |ORDER BY s_suppkey""".stripMargin),
 
     // TPC-H Q13 shape: aggregate OF an aggregate (customer order-count
     // distribution) over a LEFT JOIN whose ON clause carries a residual
     // non-key predicate on the right side — the predicate must stay IN the
     // join (filtering before/after changes left-join semantics)
-    Query("q53_tpch_q13_custdist",
+    Query.sql("q53_tpch_q13_custdist",
       """SELECT c_count, count(*) AS custdist FROM (
         |  SELECT c_custkey, count(o_orderkey) AS c_count
         |  FROM customer LEFT JOIN orders ON c_custkey = o_custkey
         |    AND o_orderpriority <> '1-URGENT'
         |  GROUP BY c_custkey) cc
-        |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin)((s, dir) => {
-      t(s, dir, "customer"); t(s, dir, "orders")
-      s.sql(
-        """SELECT c_count, count(*) AS custdist FROM (
-          |  SELECT c_custkey, count(o_orderkey) AS c_count
-          |  FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-          |    AND o_orderpriority <> '1-URGENT'
-          |  GROUP BY c_custkey) cc
-          |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin)
-    }),
+        |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin),
 
     // TPC-H Q22 shape: substring bucketing + uncorrelated scalar AVG
     // subquery + correlated NOT EXISTS, then a global group-aggregate.
     // c_name digits stand in for the phone country code; the urgent-order
     // anti-condition keeps the anti-join non-vacuous on this data.
-    Query("q49_tpch_q22_global",
+    Query.sql("q49_tpch_q22_global",
       """SELECT cntrycode, count(*) AS numcust,
         |  CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS totacctbal
         |FROM (SELECT substring(c_name, 17, 2) AS cntrycode, c_acctbal, c_custkey
@@ -4779,27 +4667,13 @@ object SparkEntry {
         |WHERE NOT EXISTS (SELECT 1 FROM orders o
         |                  WHERE o.o_custkey = c.c_custkey
         |                    AND o.o_orderpriority = '1-URGENT')
-        |GROUP BY cntrycode ORDER BY cntrycode""".stripMargin)((s, dir) => {
-      t(s, dir, "customer"); t(s, dir, "orders")
-      s.sql(
-        """SELECT cntrycode, count(*) AS numcust,
-          |  CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS totacctbal
-          |FROM (SELECT substring(c_name, 17, 2) AS cntrycode, c_acctbal, c_custkey
-          |      FROM customer
-          |      WHERE substring(c_name, 17, 2) IN ('10','11','12','13','14','15','16')
-          |        AND c_acctbal > (SELECT avg(c_acctbal) FROM customer
-          |                         WHERE c_acctbal > 0.0)) c
-          |WHERE NOT EXISTS (SELECT 1 FROM orders o
-          |                  WHERE o.o_custkey = c.c_custkey
-          |                    AND o.o_orderpriority = '1-URGENT')
-          |GROUP BY cntrycode ORDER BY cntrycode""".stripMargin)
-    }),
+        |GROUP BY cntrycode ORDER BY cntrycode""".stripMargin),
 
     // TPC-H Q18 shape: semi join against a grouped-HAVING subquery (large
     // IN over aggregated keys) feeding a second aggregation over the
     // 3-table join — the IN-subquery decorrelates to a semi join on the
     // grouped orderkeys, and the big join stays key-partitioned
-    Query("q54_tpch_q18_bigorders",
+    Query.sql("q54_tpch_q18_bigorders",
       """SELECT c.c_name, c.c_custkey, o.o_orderkey, o.o_orderdate,
         |  o.o_totalprice, CAST(sum(l.l_quantity) AS BIGINT) AS total_qty
         |FROM customer c, orders o, lineitem l
@@ -4810,21 +4684,7 @@ object SparkEntry {
         |GROUP BY c.c_name, c.c_custkey, o.o_orderkey, o.o_orderdate,
         |  o.o_totalprice
         |ORDER BY o.o_totalprice DESC, o.o_orderdate, o.o_orderkey
-        |LIMIT 100""".stripMargin)((s, dir) => {
-      t(s, dir, "customer"); t(s, dir, "orders"); t(s, dir, "lineitem")
-      s.sql(
-        """SELECT c.c_name, c.c_custkey, o.o_orderkey, o.o_orderdate,
-          |  o.o_totalprice, CAST(sum(l.l_quantity) AS BIGINT) AS total_qty
-          |FROM customer c, orders o, lineitem l
-          |WHERE o.o_orderkey IN (
-          |    SELECT l_orderkey FROM lineitem GROUP BY l_orderkey
-          |    HAVING sum(l_quantity) > 250)
-          |  AND c.c_custkey = o.o_custkey AND o.o_orderkey = l.l_orderkey
-          |GROUP BY c.c_name, c.c_custkey, o.o_orderkey, o.o_orderdate,
-          |  o.o_totalprice
-          |ORDER BY o.o_totalprice DESC, o.o_orderdate, o.o_orderkey
-          |LIMIT 100""".stripMargin)
-    }),
+        |LIMIT 100""".stripMargin),
 
     // TPC-H Q19 shape: disjunctive OR-of-ANDs join predicate — each
     // disjunct repeats the p_partkey = l_partkey equi conjunct, which the
@@ -4833,7 +4693,7 @@ object SparkEntry {
     // cartesian/nested-loop; the whole condition rides the wire inside
     // JoinRel. Brand/size/quantity bands stand in for TPC-H's
     // container+shipmode bands this schema doesn't carry.
-    Query("q55_tpch_q19_disjunct",
+    Query.sql("q55_tpch_q19_disjunct",
       """SELECT CAST(sum(CAST(l_extendedprice * (1.0 - l_discount)
         |    AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
         |  count(*) AS n_lines
@@ -4843,25 +4703,12 @@ object SparkEntry {
         |   OR (p.p_partkey = l.l_partkey AND p.p_brand = 'Brand#23'
         |       AND l.l_quantity BETWEEN 10 AND 35 AND p.p_size BETWEEN 1 AND 35)
         |   OR (p.p_partkey = l.l_partkey AND p.p_brand = 'Brand#7'
-        |       AND l.l_quantity BETWEEN 20 AND 50 AND p.p_size BETWEEN 1 AND 50)""".stripMargin)((s, dir) => {
-      t(s, dir, "lineitem"); t(s, dir, "part")
-      s.sql(
-        """SELECT CAST(sum(CAST(l_extendedprice * (1.0 - l_discount)
-          |    AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
-          |  count(*) AS n_lines
-          |FROM lineitem l, part p
-          |WHERE (p.p_partkey = l.l_partkey AND p.p_brand = 'Brand#12'
-          |       AND l.l_quantity BETWEEN 1 AND 25 AND p.p_size BETWEEN 1 AND 25)
-          |   OR (p.p_partkey = l.l_partkey AND p.p_brand = 'Brand#23'
-          |       AND l.l_quantity BETWEEN 10 AND 35 AND p.p_size BETWEEN 1 AND 35)
-          |   OR (p.p_partkey = l.l_partkey AND p.p_brand = 'Brand#7'
-          |       AND l.l_quantity BETWEEN 20 AND 50 AND p.p_size BETWEEN 1 AND 50)""".stripMargin)
-    }),
+        |       AND l.l_quantity BETWEEN 20 AND 50 AND p.p_size BETWEEN 1 AND 50)""".stripMargin),
 
     // TPC-H Q16 shape: COUNT(DISTINCT) per multi-column group over a join
     // whose probe side carries a NOT IN subquery (null-aware anti join on
     // the non-null key) plus NOT-LIKE and IN-list part predicates
-    Query("q57_tpch_q16_suppcnt",
+    Query.sql("q57_tpch_q16_suppcnt",
       """SELECT p.p_brand, p.p_type, p.p_size,
         |  count(DISTINCT l.l_suppkey) AS supplier_cnt
         |FROM lineitem l, part p
@@ -4872,28 +4719,14 @@ object SparkEntry {
         |  AND l.l_suppkey NOT IN (SELECT s_suppkey FROM supplier
         |                          WHERE s_acctbal < 0.0)
         |GROUP BY p.p_brand, p.p_type, p.p_size
-        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin)((s, dir) => {
-      t(s, dir, "lineitem"); t(s, dir, "part"); t(s, dir, "supplier")
-      s.sql(
-        """SELECT p.p_brand, p.p_type, p.p_size,
-          |  count(DISTINCT l.l_suppkey) AS supplier_cnt
-          |FROM lineitem l, part p
-          |WHERE p.p_partkey = l.l_partkey
-          |  AND p.p_brand <> 'Brand#5'
-          |  AND p.p_type NOT LIKE 'MEDIUM%'
-          |  AND p.p_size IN (1, 4, 9, 14, 19, 23, 36, 45)
-          |  AND l.l_suppkey NOT IN (SELECT s_suppkey FROM supplier
-          |                          WHERE s_acctbal < 0.0)
-          |GROUP BY p.p_brand, p.p_type, p.p_size
-          |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin)
-    }),
+        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin),
 
     // TPC-H Q14 shape: promo revenue share — two conditional SUMs over the
     // same join feed a scalar ratio (single-row result). Per-row DECIMAL
     // cast before the sums keeps both engines' totals bit-exact; the ratio
     // is then two correctly-rounded IEEE ops over equal inputs. The date
     // band must reach the scan as PushedFilters on l_shipdate.
-    Query("q58_tpch_q14_promo",
+    Query.sql("q58_tpch_q14_promo",
       """SELECT CAST(100.0 * CAST(sum(CASE WHEN p.p_type = 'PROMO'
         |      THEN CAST(l.l_extendedprice * (1.0 - l.l_discount)
         |        AS DECIMAL(18,4))
@@ -4905,27 +4738,12 @@ object SparkEntry {
         |FROM lineitem l, part p
         |WHERE l.l_partkey = p.p_partkey
         |  AND l.l_shipdate >= TIMESTAMP '1995-03-01 00:00:00'
-        |  AND l.l_shipdate <  TIMESTAMP '1995-06-01 00:00:00'""".stripMargin)((s, dir) => {
-      t(s, dir, "lineitem"); t(s, dir, "part")
-      s.sql(
-        """SELECT CAST(100.0 * CAST(sum(CASE WHEN p.p_type = 'PROMO'
-          |      THEN CAST(l.l_extendedprice * (1.0 - l.l_discount)
-          |        AS DECIMAL(18,4))
-          |      ELSE CAST(0.0 AS DECIMAL(18,4)) END) AS DOUBLE)
-          |    / CAST(sum(CAST(l.l_extendedprice * (1.0 - l.l_discount)
-          |        AS DECIMAL(18,4))) AS DOUBLE)
-          |  AS DOUBLE) AS promo_revenue,
-          |  count(*) AS n_lines
-          |FROM lineitem l, part p
-          |WHERE l.l_partkey = p.p_partkey
-          |  AND l.l_shipdate >= TIMESTAMP '1995-03-01 00:00:00'
-          |  AND l.l_shipdate <  TIMESTAMP '1995-06-01 00:00:00'""".stripMargin)
-    }),
+        |  AND l.l_shipdate <  TIMESTAMP '1995-06-01 00:00:00'""".stripMargin),
 
     // TPC-H Q3 shape: shipping-priority top-k — segment-filtered 3-table
     // join, grouped revenue, ORDER BY ... LIMIT fuses to
     // TakeOrderedAndProject (no global sort at scale)
-    Query("q59_tpch_q3_shipping",
+    Query.sql("q59_tpch_q3_shipping",
       """SELECT l.l_orderkey,
         |  CAST(sum(CAST(l.l_extendedprice * (1.0 - l.l_discount)
         |    AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
@@ -4937,27 +4755,12 @@ object SparkEntry {
         |  AND l.l_shipdate > TIMESTAMP '1997-01-01 00:00:00'
         |GROUP BY l.l_orderkey, o.o_orderdate
         |ORDER BY revenue DESC, o.o_orderdate, l.l_orderkey
-        |LIMIT 10""".stripMargin)((s, dir) => {
-      t(s, dir, "customer"); t(s, dir, "orders"); t(s, dir, "lineitem")
-      s.sql(
-        """SELECT l.l_orderkey,
-          |  CAST(sum(CAST(l.l_extendedprice * (1.0 - l.l_discount)
-          |    AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
-          |  o.o_orderdate
-          |FROM customer c, orders o, lineitem l
-          |WHERE c.c_mktsegment = 'BUILDING' AND c.c_custkey = o.o_custkey
-          |  AND l.l_orderkey = o.o_orderkey
-          |  AND o.o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
-          |  AND l.l_shipdate > TIMESTAMP '1997-01-01 00:00:00'
-          |GROUP BY l.l_orderkey, o.o_orderdate
-          |ORDER BY revenue DESC, o.o_orderdate, l.l_orderkey
-          |LIMIT 10""".stripMargin)
-    }),
+        |LIMIT 10""".stripMargin),
 
     // TPC-H Q5 shape: local-supplier volume — six-table snowflake join
     // with the customer-nation = supplier-nation co-location constraint;
     // region/nation dims must broadcast, never shuffle the fact
-    Query("q60_tpch_q5_localsupp",
+    Query.sql("q60_tpch_q5_localsupp",
       """SELECT n.n_name,
         |  CAST(sum(CAST(l.l_extendedprice * (1.0 - l.l_discount)
         |    AS DECIMAL(18,4))) AS DOUBLE) AS revenue
@@ -4968,27 +4771,12 @@ object SparkEntry {
         |  AND r.r_name = 'ASIA'
         |  AND o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
         |  AND o.o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-        |GROUP BY n.n_name ORDER BY revenue DESC, n_name""".stripMargin)((s, dir) => {
-      t(s, dir, "customer"); t(s, dir, "orders"); t(s, dir, "lineitem")
-      t(s, dir, "supplier"); t(s, dir, "nation"); t(s, dir, "region")
-      s.sql(
-        """SELECT n.n_name,
-          |  CAST(sum(CAST(l.l_extendedprice * (1.0 - l.l_discount)
-          |    AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-          |FROM customer c, orders o, lineitem l, supplier s, nation n, region r
-          |WHERE c.c_custkey = o.o_custkey AND l.l_orderkey = o.o_orderkey
-          |  AND l.l_suppkey = s.s_suppkey AND c.c_nationkey = s.s_nationkey
-          |  AND s.s_nationkey = n.n_nationkey AND n.n_regionkey = r.r_regionkey
-          |  AND r.r_name = 'ASIA'
-          |  AND o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-          |  AND o.o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-          |GROUP BY n.n_name ORDER BY revenue DESC, n_name""".stripMargin)
-    }),
+        |GROUP BY n.n_name ORDER BY revenue DESC, n_name""".stripMargin),
 
     // TPC-H Q9 shape: product-type profit by nation and year — LIKE-
     // filtered part dim joined into the fact, year() bucketing on the
     // order date (no partsupp table in this schema; profit = revenue)
-    Query("q61_tpch_q9_profit",
+    Query.sql("q61_tpch_q9_profit",
       """SELECT n.n_name AS nation, CAST(year(o.o_orderdate) AS INT) AS o_year,
         |  CAST(sum(CAST(l.l_extendedprice * (1.0 - l.l_discount)
         |    AS DECIMAL(18,4))) AS DOUBLE) AS profit
@@ -4997,24 +4785,11 @@ object SparkEntry {
         |  AND o.o_orderkey = l.l_orderkey AND s.s_nationkey = n.n_nationkey
         |  AND p.p_name LIKE '%red%'
         |GROUP BY n.n_name, year(o.o_orderdate)
-        |ORDER BY nation, o_year DESC""".stripMargin)((s, dir) => {
-      t(s, dir, "part"); t(s, dir, "supplier"); t(s, dir, "lineitem")
-      t(s, dir, "orders"); t(s, dir, "nation")
-      s.sql(
-        """SELECT n.n_name AS nation, CAST(year(o.o_orderdate) AS INT) AS o_year,
-          |  CAST(sum(CAST(l.l_extendedprice * (1.0 - l.l_discount)
-          |    AS DECIMAL(18,4))) AS DOUBLE) AS profit
-          |FROM part p, supplier s, lineitem l, orders o, nation n
-          |WHERE s.s_suppkey = l.l_suppkey AND p.p_partkey = l.l_partkey
-          |  AND o.o_orderkey = l.l_orderkey AND s.s_nationkey = n.n_nationkey
-          |  AND p.p_name LIKE '%red%'
-          |GROUP BY n.n_name, year(o.o_orderdate)
-          |ORDER BY nation, o_year DESC""".stripMargin)
-    }),
+        |ORDER BY nation, o_year DESC""".stripMargin),
 
     // TPC-H Q10 shape: returned-item ranking — returnflag-filtered fact,
     // date band on orders, top-20 customers by lost revenue
-    Query("q62_tpch_q10_returns",
+    Query.sql("q62_tpch_q10_returns",
       """SELECT c.c_custkey, c.c_name,
         |  CAST(sum(CAST(l.l_extendedprice * (1.0 - l.l_discount)
         |    AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
@@ -5025,26 +4800,14 @@ object SparkEntry {
         |  AND o.o_orderdate < TIMESTAMP '1996-07-01 00:00:00'
         |  AND l.l_returnflag = 'R' AND c.c_nationkey = n.n_nationkey
         |GROUP BY c.c_custkey, c.c_name, c.c_acctbal, n.n_name
-        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin)((s, dir) => {
-      t(s, dir, "customer"); t(s, dir, "orders"); t(s, dir, "lineitem")
-      t(s, dir, "nation")
-      s.sql(
-        """SELECT c.c_custkey, c.c_name,
-          |  CAST(sum(CAST(l.l_extendedprice * (1.0 - l.l_discount)
-          |    AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
-          |  c.c_acctbal, n.n_name
-          |FROM customer c, orders o, lineitem l, nation n
-          |WHERE c.c_custkey = o.o_custkey AND l.l_orderkey = o.o_orderkey
-          |  AND o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-          |  AND o.o_orderdate < TIMESTAMP '1996-07-01 00:00:00'
-          |  AND l.l_returnflag = 'R' AND c.c_nationkey = n.n_nationkey
-          |GROUP BY c.c_custkey, c.c_name, c.c_acctbal, n.n_name
-          |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin)
-    }),
+        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin),
 
     // TPC-H Q12 shape: priority class counts via conditional SUMs over an
     // order/lineitem join with a ship-date band (o_orderpriority classes
     // stand in for l_shipmode, which this schema doesn't carry)
+    // Two texts: the oracle's CAST(... AS BIGINT) pins DuckDB's integer
+    // aggregates (a sum of INTEGER is HUGEINT there) to Spark's LongType;
+    // the Producer ships the analyzed plan, so the builder leaves it out
     Query("q63_tpch_q12_priority",
       """SELECT l.l_linestatus,
         |  CAST(sum(CASE WHEN o.o_orderpriority = '1-URGENT'
@@ -5058,7 +4821,7 @@ object SparkEntry {
         |  AND l.l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
         |  AND l.l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
         |GROUP BY l.l_linestatus ORDER BY l_linestatus""".stripMargin)((s, dir) => {
-      t(s, dir, "orders"); t(s, dir, "lineitem")
+      Tables.register(s, dir)
       s.sql(
         """SELECT l.l_linestatus,
           |  sum(CASE WHEN o.o_orderpriority = '1-URGENT'
@@ -5078,7 +4841,7 @@ object SparkEntry {
     // directions — the nation dim joins TWICE (supplier side and customer
     // side) under an OR-of-nation-pairs predicate; the consumer's
     // fresh-name scheme must keep the two nation scans distinct
-    Query("q64_tpch_q7_volume",
+    Query.sql("q64_tpch_q7_volume",
       """SELECT supp_nation, cust_nation, l_year,
         |  CAST(sum(volume_dec) AS DOUBLE) AS revenue
         |FROM (SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
@@ -5096,34 +4859,12 @@ object SparkEntry {
         |        AND l.l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
         |        AND l.l_shipdate < TIMESTAMP '1998-01-01 00:00:00') shipping
         |GROUP BY supp_nation, cust_nation, l_year
-        |ORDER BY supp_nation, cust_nation, l_year""".stripMargin)((s, dir) => {
-      t(s, dir, "supplier"); t(s, dir, "lineitem"); t(s, dir, "orders")
-      t(s, dir, "customer"); t(s, dir, "nation")
-      s.sql(
-        """SELECT supp_nation, cust_nation, l_year,
-          |  CAST(sum(volume_dec) AS DOUBLE) AS revenue
-          |FROM (SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-          |        CAST(year(l.l_shipdate) AS INT) AS l_year,
-          |        CAST(l.l_extendedprice * (1.0 - l.l_discount)
-          |          AS DECIMAL(18,4)) AS volume_dec
-          |      FROM supplier s, lineitem l, orders o, customer c,
-          |        nation n1, nation n2
-          |      WHERE s.s_suppkey = l.l_suppkey AND o.o_orderkey = l.l_orderkey
-          |        AND c.c_custkey = o.o_custkey
-          |        AND s.s_nationkey = n1.n_nationkey
-          |        AND c.c_nationkey = n2.n_nationkey
-          |        AND ((n1.n_name = 'NATION_7' AND n2.n_name = 'NATION_17')
-          |          OR (n1.n_name = 'NATION_17' AND n2.n_name = 'NATION_7'))
-          |        AND l.l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-          |        AND l.l_shipdate < TIMESTAMP '1998-01-01 00:00:00') shipping
-          |GROUP BY supp_nation, cust_nation, l_year
-          |ORDER BY supp_nation, cust_nation, l_year""".stripMargin)
-    }),
+        |ORDER BY supp_nation, cust_nation, l_year""".stripMargin),
 
     // TPC-H Q8 shape: national market share — eight-table join (nation
     // twice: customer-region gate and supplier-nation tag) feeding a
     // conditional-share ratio per year; all dims must broadcast
-    Query("q65_tpch_q8_mktshare",
+    Query.sql("q65_tpch_q8_mktshare",
       """SELECT o_year,
         |  CAST(CAST(sum(CASE WHEN nation = 'NATION_7' THEN volume
         |      ELSE CAST(0.0 AS DECIMAL(18,4)) END) AS DOUBLE)
@@ -5140,35 +4881,16 @@ object SparkEntry {
         |        AND n1.n_regionkey = r.r_regionkey
         |        AND r.r_name = 'ASIA' AND s.s_nationkey = n2.n_nationkey
         |        AND p.p_type = 'PROMO') all_nations
-        |GROUP BY o_year ORDER BY o_year""".stripMargin)((s, dir) => {
-      t(s, dir, "part"); t(s, dir, "supplier"); t(s, dir, "lineitem")
-      t(s, dir, "orders"); t(s, dir, "customer"); t(s, dir, "nation")
-      t(s, dir, "region")
-      s.sql(
-        """SELECT o_year,
-          |  CAST(CAST(sum(CASE WHEN nation = 'NATION_7' THEN volume
-          |      ELSE CAST(0.0 AS DECIMAL(18,4)) END) AS DOUBLE)
-          |    / CAST(sum(volume) AS DOUBLE) AS DOUBLE) AS mkt_share
-          |FROM (SELECT CAST(year(o.o_orderdate) AS INT) AS o_year,
-          |        CAST(l.l_extendedprice * (1.0 - l.l_discount)
-          |          AS DECIMAL(18,4)) AS volume,
-          |        n2.n_name AS nation
-          |      FROM part p, supplier s, lineitem l, orders o, customer c,
-          |        nation n1, nation n2, region r
-          |      WHERE p.p_partkey = l.l_partkey AND s.s_suppkey = l.l_suppkey
-          |        AND l.l_orderkey = o.o_orderkey AND o.o_custkey = c.c_custkey
-          |        AND c.c_nationkey = n1.n_nationkey
-          |        AND n1.n_regionkey = r.r_regionkey
-          |        AND r.r_name = 'ASIA' AND s.s_nationkey = n2.n_nationkey
-          |        AND p.p_type = 'PROMO') all_nations
-          |GROUP BY o_year ORDER BY o_year""".stripMargin)
-    }),
+        |GROUP BY o_year ORDER BY o_year""".stripMargin),
 
     // TPC-H Q4 shape: order-priority checking — quarter-banded orders with
     // an EXISTS semi-join against late lineitems (this schema has no
     // l_commitdate/l_receiptdate, so "late" = shipped >60 days after the
     // order date; timestamp + INTERVAL arithmetic rides the wire inside
     // the decorrelated semi-join condition)
+    // Two texts: the oracle's CAST(... AS BIGINT) pins DuckDB's integer
+    // aggregates (a sum of INTEGER is HUGEINT there) to Spark's LongType;
+    // the Producer ships the analyzed plan, so the builder leaves it out
     Query("q66_tpch_q4_late",
       """SELECT o.o_orderpriority, CAST(count(*) AS BIGINT) AS order_count
         |FROM orders o
@@ -5178,7 +4900,7 @@ object SparkEntry {
         |              WHERE l.l_orderkey = o.o_orderkey
         |                AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY)
         |GROUP BY o.o_orderpriority ORDER BY o.o_orderpriority""".stripMargin)((s, dir) => {
-      t(s, dir, "orders"); t(s, dir, "lineitem")
+      Tables.register(s, dir)
       s.sql(
         """SELECT o.o_orderpriority, count(*) AS order_count
           |FROM orders o
@@ -5194,6 +4916,9 @@ object SparkEntry {
     // every predicate must reach the parquet scan as PushedFilters; the
     // discount band compares exact integers (round(d*100)) so the double
     // column never meets a decimal literal at a representability edge
+    // Two texts: the oracle's CAST(... AS BIGINT) pins DuckDB's integer
+    // aggregates (a sum of INTEGER is HUGEINT there) to Spark's LongType;
+    // the Producer ships the analyzed plan, so the builder leaves it out
     Query("q67_tpch_q6_forecast",
       """SELECT CAST(sum(CAST(l_extendedprice * l_discount
         |    AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
@@ -5203,7 +4928,7 @@ object SparkEntry {
         |  AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
         |  AND CAST(round(l_discount * 100) AS INT) BETWEEN 5 AND 7
         |  AND l_quantity < 24""".stripMargin)((s, dir) => {
-      t(s, dir, "lineitem")
+      Tables.register(s, dir)
       s.sql(
         """SELECT CAST(sum(CAST(l_extendedprice * l_discount
           |    AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
@@ -5220,6 +4945,9 @@ object SparkEntry {
     // threshold 0.2*avg is deterministic cross-engine because quantities
     // are integral doubles (exact sums within 2^53, correctly-rounded
     // divide), and the revenue sum crosses engines as exact DECIMAL
+    // Two texts: the oracle's CAST(... AS BIGINT) pins DuckDB's integer
+    // aggregates (a sum of INTEGER is HUGEINT there) to Spark's LongType;
+    // the Producer ships the analyzed plan, so the builder leaves it out
     Query("q68_tpch_q17_smallqty",
       """SELECT CAST(CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,4)))
         |    AS DOUBLE) / 7.0 AS DOUBLE) AS avg_yearly,
@@ -5229,7 +4957,7 @@ object SparkEntry {
         |  AND l.l_quantity < (SELECT 0.2 * avg(l2.l_quantity)
         |                      FROM lineitem l2
         |                      WHERE l2.l_partkey = p.p_partkey)""".stripMargin)((s, dir) => {
-      t(s, dir, "lineitem"); t(s, dir, "part")
+      Tables.register(s, dir)
       s.sql(
         """SELECT CAST(CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,4)))
           |    AS DOUBLE) / 7.0 AS DOUBLE) AS avg_yearly,
@@ -5248,7 +4976,7 @@ object SparkEntry {
     // aggregate, ONE window sort per partition key (both windows share the
     // PARTITION BY p_type exchange); share arithmetic stays exact (decimal
     // window sum, one double division at the end)
-    Query("q70_ds_category_share",
+    Query.sql("q70_ds_category_share",
       """WITH rev AS (
         |  SELECT p_type, p_brand,
         |    sum(CAST(l_extendedprice * (1.0 - l_discount)
@@ -5265,33 +4993,13 @@ object SparkEntry {
         |                 ORDER BY rev0 DESC, p_brand) AS rnk
         |  FROM rev) r
         |WHERE rnk <= 3
-        |ORDER BY p_type, rnk, p_brand""".stripMargin)((s, dir) => {
-      t(s, dir, "lineitem"); t(s, dir, "part")
-      s.sql(
-        """WITH rev AS (
-          |  SELECT p_type, p_brand,
-          |    sum(CAST(l_extendedprice * (1.0 - l_discount)
-          |        AS DECIMAL(18,4))) AS rev0
-          |  FROM lineitem JOIN part ON l_partkey = p_partkey
-          |  GROUP BY p_type, p_brand)
-          |SELECT p_type, p_brand, brand_rev, type_share, rnk FROM (
-          |  SELECT p_type, p_brand,
-          |    CAST(rev0 AS DOUBLE) AS brand_rev,
-          |    CAST(CAST(rev0 AS DOUBLE) /
-          |      CAST(sum(rev0) OVER (PARTITION BY p_type) AS DOUBLE)
-          |      AS DOUBLE) AS type_share,
-          |    rank() OVER (PARTITION BY p_type
-          |                 ORDER BY rev0 DESC, p_brand) AS rnk
-          |  FROM rev) r
-          |WHERE rnk <= 3
-          |ORDER BY p_type, rnk, p_brand""".stripMargin)
-    }),
+        |ORDER BY p_type, rnk, p_brand""".stripMargin),
 
     // TPC-DS q36 shape: ROLLUP gross-total hierarchy + rank within parent —
     // the window PARTITION BY is an expression over grouping() outputs
     // (detail rows rank within their status; subtotal rows rank against
     // each other). One Expand-fed aggregate, one window sort
-    Query("q71_ds_rollup_window",
+    Query.sql("q71_ds_rollup_window",
       """SELECT status, prio, total, lochierarchy,
         |  rank() OVER (
         |    PARTITION BY lochierarchy,
@@ -5305,30 +5013,13 @@ object SparkEntry {
         |      AS BIGINT) AS lochierarchy
         |  FROM orders
         |  GROUP BY ROLLUP(o_orderstatus, o_orderpriority)) x
-        |ORDER BY lochierarchy DESC, status, rank_within_parent""".stripMargin)((s, dir) => {
-      t(s, dir, "orders")
-      s.sql(
-        """SELECT status, prio, total, lochierarchy,
-          |  rank() OVER (
-          |    PARTITION BY lochierarchy,
-          |      CASE WHEN lochierarchy = 0 THEN status END
-          |    ORDER BY total DESC, coalesce(prio, '')) AS rank_within_parent
-          |FROM (
-          |  SELECT o_orderstatus AS status, o_orderpriority AS prio,
-          |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-          |      AS total,
-          |    CAST(grouping(o_orderstatus) + grouping(o_orderpriority)
-          |      AS BIGINT) AS lochierarchy
-          |  FROM orders
-          |  GROUP BY ROLLUP(o_orderstatus, o_orderpriority)) x
-          |ORDER BY lochierarchy DESC, status, rank_within_parent""".stripMargin)
-    }),
+        |ORDER BY lochierarchy DESC, status, rank_within_parent""".stripMargin),
 
     // TPC-DS q2 shape: UNION ALL of two per-channel aggregates, then
     // offset + sliding-frame windows over the union — month-over-month and
     // trailing-3-month spend per channel. The frame sum stays decimal
     // (exact) until the final cast
-    Query("q72_ds_union_window",
+    Query.sql("q72_ds_union_window",
       """WITH sales AS (
         |  SELECT substring(CAST(o_orderdate AS STRING), 1, 7) AS ym,
         |    'hi' AS channel,
@@ -5348,30 +5039,7 @@ object SparkEntry {
         |      ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
         |    AS DOUBLE) AS amt_3m
         |FROM sales
-        |ORDER BY channel, ym""".stripMargin)((s, dir) => {
-      t(s, dir, "orders")
-      s.sql(
-        """WITH sales AS (
-          |  SELECT substring(CAST(o_orderdate AS STRING), 1, 7) AS ym,
-          |    'hi' AS channel,
-          |    sum(CAST(o_totalprice AS DECIMAL(18,2))) AS amt0
-          |  FROM orders WHERE o_orderpriority IN ('1-URGENT', '2-HIGH')
-          |  GROUP BY 1
-          |  UNION ALL
-          |  SELECT substring(CAST(o_orderdate AS STRING), 1, 7) AS ym,
-          |    'lo' AS channel,
-          |    sum(CAST(o_totalprice AS DECIMAL(18,2))) AS amt0
-          |  FROM orders WHERE o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-          |  GROUP BY 1)
-          |SELECT ym, channel, CAST(amt0 AS DOUBLE) AS amt,
-          |  CAST(lag(amt0) OVER (PARTITION BY channel ORDER BY ym)
-          |    AS DOUBLE) AS prev_amt,
-          |  CAST(sum(amt0) OVER (PARTITION BY channel ORDER BY ym
-          |      ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
-          |    AS DOUBLE) AS amt_3m
-          |FROM sales
-          |ORDER BY channel, ym""".stripMargin)
-    }),
+        |ORDER BY channel, ym""".stripMargin),
 
     // TPC-DS q4 shape: MULTI-REFERENCE CTE self-joined across adjacent
     // years — year-over-year growth with a cross-reference predicate.
@@ -5380,7 +5048,7 @@ object SparkEntry {
     // rebuilt self-join must keep the two references distinct (the E1/E2
     // fresh-name scheme) while ReuseExchange de-duplicates the physical
     // aggregate underneath
-    Query("q73_ds_cte_yoy",
+    Query.sql("q73_ds_cte_yoy",
       """WITH yearly AS (
         |  SELECT o_custkey,
         |    CAST(substring(CAST(o_orderdate AS STRING), 1, 4) AS INT)
@@ -5395,25 +5063,7 @@ object SparkEntry {
         |FROM yearly a JOIN yearly b
         |  ON a.o_custkey = b.o_custkey AND b.yr = a.yr + 1
         |WHERE b.tot0 > a.tot0 * 2
-        |ORDER BY a.o_custkey, yr_prev""".stripMargin)((s, dir) => {
-      t(s, dir, "orders")
-      s.sql(
-        """WITH yearly AS (
-          |  SELECT o_custkey,
-          |    CAST(substring(CAST(o_orderdate AS STRING), 1, 4) AS INT)
-          |      AS yr,
-          |    sum(CAST(o_totalprice AS DECIMAL(18,2))) AS tot0
-          |  FROM orders GROUP BY 1, 2)
-          |SELECT a.o_custkey, a.yr AS yr_prev,
-          |  CAST(a.tot0 AS DOUBLE) AS spend_prev,
-          |  CAST(b.tot0 AS DOUBLE) AS spend_next,
-          |  CAST(CAST(b.tot0 AS DOUBLE) / CAST(a.tot0 AS DOUBLE) AS DOUBLE)
-          |    AS growth
-          |FROM yearly a JOIN yearly b
-          |  ON a.o_custkey = b.o_custkey AND b.yr = a.yr + 1
-          |WHERE b.tot0 > a.tot0 * 2
-          |ORDER BY a.o_custkey, yr_prev""".stripMargin)
-    }),
+        |ORDER BY a.o_custkey, yr_prev""".stripMargin),
 
     // UNPIVOT / melt (round 12): the DataFrame unpivot API resolves to a
     // standalone Catalyst Expand, which the producer encodes as a SetRel
@@ -5462,7 +5112,7 @@ object SparkEntry {
     // against the detail total and each subtotal stratum against its own.
     // One Expand-fed aggregate + one window sort; the Expand rides the
     // wire as the SetRel union-of-projects encoding
-    Query("q75_ds_gsets_share",
+    Query.sql("q75_ds_gsets_share",
       """SELECT mkt, prio, spend, lvl,
         |  CAST(spend / CAST(sum(spend0) OVER (PARTITION BY lvl)
         |    AS DOUBLE) AS DOUBLE) AS share_within_level,
@@ -5479,27 +5129,7 @@ object SparkEntry {
         |  FROM orders JOIN customer ON o_custkey = c_custkey
         |  GROUP BY GROUPING SETS ((c_mktsegment, o_orderpriority),
         |    (c_mktsegment), ())) x
-        |ORDER BY lvl, rnk, mkt, prio""".stripMargin)((s, dir) => {
-      t(s, dir, "orders"); t(s, dir, "customer")
-      s.sql(
-        """SELECT mkt, prio, spend, lvl,
-          |  CAST(spend / CAST(sum(spend0) OVER (PARTITION BY lvl)
-          |    AS DOUBLE) AS DOUBLE) AS share_within_level,
-          |  rank() OVER (PARTITION BY lvl
-          |    ORDER BY spend0 DESC, coalesce(mkt, ''), coalesce(prio, ''))
-          |    AS rnk
-          |FROM (
-          |  SELECT c_mktsegment AS mkt, o_orderpriority AS prio,
-          |    sum(CAST(o_totalprice AS DECIMAL(18,2))) AS spend0,
-          |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-          |      AS spend,
-          |    CAST(grouping(c_mktsegment) * 2 + grouping(o_orderpriority)
-          |      AS BIGINT) AS lvl
-          |  FROM orders JOIN customer ON o_custkey = c_custkey
-          |  GROUP BY GROUPING SETS ((c_mktsegment, o_orderpriority),
-          |    (c_mktsegment), ())) x
-          |ORDER BY lvl, rnk, mkt, prio""".stripMargin)
-    }),
+        |ORDER BY lvl, rnk, mkt, prio""".stripMargin),
 
     // TPC-DS q4/q11 shape extended (round 14): a multi-reference CTE
     // self-joined in a CHAIN across three adjacent years (a→a+1→a+2) with
@@ -5507,7 +5137,7 @@ object SparkEntry {
     // subplan sharing, so the yearly aggregate re-produces THREE times on
     // the wire and the consumer must keep all three references distinct
     // while ReuseExchange de-duplicates the physical aggregate
-    Query("q76_ds_cte_chain",
+    Query.sql("q76_ds_cte_chain",
       """WITH yearly AS (
         |  SELECT o_custkey,
         |    CAST(substring(CAST(o_orderdate AS STRING), 1, 4) AS INT)
@@ -5524,33 +5154,13 @@ object SparkEntry {
         |JOIN yearly c ON a.o_custkey = c.o_custkey AND c.yr = a.yr + 2
         |WHERE CAST(c.tot0 AS DOUBLE) / CAST(b.tot0 AS DOUBLE) >
         |      CAST(b.tot0 AS DOUBLE) / CAST(a.tot0 AS DOUBLE)
-        |ORDER BY a.o_custkey, yr_base""".stripMargin)((s, dir) => {
-      t(s, dir, "orders")
-      s.sql(
-        """WITH yearly AS (
-          |  SELECT o_custkey,
-          |    CAST(substring(CAST(o_orderdate AS STRING), 1, 4) AS INT)
-          |      AS yr,
-          |    sum(CAST(o_totalprice AS DECIMAL(18,2))) AS tot0
-          |  FROM orders GROUP BY 1, 2)
-          |SELECT a.o_custkey, a.yr AS yr_base,
-          |  CAST(ROUND(CAST(b.tot0 AS DOUBLE) / CAST(a.tot0 AS DOUBLE), 6)
-          |    AS DOUBLE) AS growth_1,
-          |  CAST(ROUND(CAST(c.tot0 AS DOUBLE) / CAST(b.tot0 AS DOUBLE), 6)
-          |    AS DOUBLE) AS growth_2
-          |FROM yearly a
-          |JOIN yearly b ON a.o_custkey = b.o_custkey AND b.yr = a.yr + 1
-          |JOIN yearly c ON a.o_custkey = c.o_custkey AND c.yr = a.yr + 2
-          |WHERE CAST(c.tot0 AS DOUBLE) / CAST(b.tot0 AS DOUBLE) >
-          |      CAST(b.tot0 AS DOUBLE) / CAST(a.tot0 AS DOUBLE)
-          |ORDER BY a.o_custkey, yr_base""".stripMargin)
-    }),
+        |ORDER BY a.o_custkey, yr_base""".stripMargin),
 
     // TPC-DS q10/q35 composite shape (round 14): correlated EXISTS
     // (returns-channel membership) feeding a ranking WINDOW — the
     // decorrelated semi-join must land BELOW the aggregate and the rank
     // above it, a produce/consume layering no TPC-H query exercises
-    Query("q77_ds_exists_window",
+    Query.sql("q77_ds_exists_window",
       """SELECT c_custkey, c_mktsegment, spend, seg_rank FROM (
         |  SELECT c_custkey, c_mktsegment,
         |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
@@ -5563,30 +5173,14 @@ object SparkEntry {
         |    WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
         |  GROUP BY c_custkey, c_mktsegment) ranked
         |WHERE seg_rank <= 5
-        |ORDER BY c_mktsegment, seg_rank, c_custkey""".stripMargin)((s, dir) => {
-      t(s, dir, "customer"); t(s, dir, "orders"); t(s, dir, "lineitem")
-      s.sql(
-        """SELECT c_custkey, c_mktsegment, spend, seg_rank FROM (
-          |  SELECT c_custkey, c_mktsegment,
-          |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-          |      AS spend,
-          |    rank() OVER (PARTITION BY c_mktsegment
-          |      ORDER BY sum(CAST(o_totalprice AS DECIMAL(18,2))) DESC,
-          |        c_custkey) AS seg_rank
-          |  FROM customer JOIN orders ON c_custkey = o_custkey
-          |  WHERE EXISTS (SELECT 1 FROM lineitem
-          |    WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
-          |  GROUP BY c_custkey, c_mktsegment) ranked
-          |WHERE seg_rank <= 5
-          |ORDER BY c_mktsegment, seg_rank, c_custkey""".stripMargin)
-    }),
+        |ORDER BY c_mktsegment, seg_rank, c_custkey""".stripMargin),
 
     // TPC-DS q75/q80 catalog-returns shape (round 14): TWO fact tables
     // (orders = header channel, lineitem = line channel) unioned into one
     // per-channel fact stream against the same dimension chain, then
     // pivoted back out per nation — the multi-fact union-aggregate that
     // hides produce/consume bugs single-fact TPC-H never hits
-    Query("q78_ds_multifact_union",
+    Query.sql("q78_ds_multifact_union",
       """WITH facts AS (
         |  SELECT n_name AS nation, 'order' AS channel,
         |    CAST(o_totalprice AS DECIMAL(18,4)) AS amt0
@@ -5609,40 +5203,13 @@ object SparkEntry {
         |  count(CASE WHEN channel = 'order' THEN 1 END) AS n_orders,
         |  count(CASE WHEN channel = 'line' THEN 1 END) AS n_lines
         |FROM facts GROUP BY nation
-        |ORDER BY nation""".stripMargin)((s, dir) => {
-      t(s, dir, "orders"); t(s, dir, "customer"); t(s, dir, "nation")
-      t(s, dir, "lineitem")
-      s.sql(
-        """WITH facts AS (
-          |  SELECT n_name AS nation, 'order' AS channel,
-          |    CAST(o_totalprice AS DECIMAL(18,4)) AS amt0
-          |  FROM orders
-          |  JOIN customer ON o_custkey = c_custkey
-          |  JOIN nation ON c_nationkey = n_nationkey
-          |  UNION ALL
-          |  SELECT n_name AS nation, 'line' AS channel,
-          |    CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))
-          |      AS amt0
-          |  FROM lineitem
-          |  JOIN orders ON l_orderkey = o_orderkey
-          |  JOIN customer ON o_custkey = c_custkey
-          |  JOIN nation ON c_nationkey = n_nationkey)
-          |SELECT nation,
-          |  CAST(sum(CASE WHEN channel = 'order' THEN amt0 END) AS DOUBLE)
-          |    AS order_amt,
-          |  CAST(sum(CASE WHEN channel = 'line' THEN amt0 END) AS DOUBLE)
-          |    AS line_amt,
-          |  count(CASE WHEN channel = 'order' THEN 1 END) AS n_orders,
-          |  count(CASE WHEN channel = 'line' THEN 1 END) AS n_lines
-          |FROM facts GROUP BY nation
-          |ORDER BY nation""".stripMargin)
-    }),
+        |ORDER BY nation""".stripMargin),
 
     // TPC-DS q14 cross-channel shape (round 14): INTERSECT of two
     // channels' key sets inside a CTE, joined back to the dimension and
     // aggregated — set-op composition BELOW a join, not at the root as in
     // q15/q41
-    Query("q79_ds_channel_intersect",
+    Query.sql("q79_ds_channel_intersect",
       """WITH both_cust AS (
         |  SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'
         |  INTERSECT
@@ -5652,20 +5219,7 @@ object SparkEntry {
         |    AS tot_balance
         |FROM customer JOIN both_cust ON c_custkey = o_custkey
         |GROUP BY c_mktsegment
-        |ORDER BY c_mktsegment""".stripMargin)((s, dir) => {
-      t(s, dir, "orders"); t(s, dir, "customer")
-      s.sql(
-        """WITH both_cust AS (
-          |  SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'
-          |  INTERSECT
-          |  SELECT o_custkey FROM orders WHERE o_orderpriority = '5-LOW')
-          |SELECT c_mktsegment, count(*) AS n_cross_channel,
-          |  CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE)
-          |    AS tot_balance
-          |FROM customer JOIN both_cust ON c_custkey = o_custkey
-          |GROUP BY c_mktsegment
-          |ORDER BY c_mktsegment""".stripMargin)
-    }),
+        |ORDER BY c_mktsegment""".stripMargin),
 
     // TPC-DS q47 shape (round 14, the 10th DS pattern): monthly deviation
     // screen — TWO window partitionings over ONE aggregate (a year-scoped
@@ -5673,7 +5227,7 @@ object SparkEntry {
     // windowed ratio. The year average is sum/count of EXACT decimals
     // (never avg-of-doubles — partition-order-dependent last-ulp drift is
     // the hash trap); two window sort groups must both survive the wire
-    Query("q80_ds_moving_dev",
+    Query.sql("q80_ds_moving_dev",
       """WITH monthly AS (
         |  SELECT o_orderstatus AS status,
         |    substring(CAST(o_orderdate AS STRING), 1, 7) AS ym,
@@ -5695,39 +5249,14 @@ object SparkEntry {
         |    lead(amt0) OVER (PARTITION BY status ORDER BY ym) AS lead_amt
         |  FROM monthly) x
         |WHERE CAST(amt0 AS DOUBLE) > avg_year * 1.1
-        |ORDER BY status, ym""".stripMargin)((s, dir) => {
-      t(s, dir, "orders")
-      s.sql(
-        """WITH monthly AS (
-          |  SELECT o_orderstatus AS status,
-          |    substring(CAST(o_orderdate AS STRING), 1, 7) AS ym,
-          |    sum(CAST(o_totalprice AS DECIMAL(18,2))) AS amt0
-          |  FROM orders GROUP BY 1, 2)
-          |SELECT status, ym, CAST(amt0 AS DOUBLE) AS amt,
-          |  CAST(ROUND(avg_year, 6) AS DOUBLE) AS avg_year,
-          |  CAST(ROUND(CAST(amt0 AS DOUBLE) / avg_year, 6) AS DOUBLE)
-          |    AS dev,
-          |  CAST(lag_amt AS DOUBLE) AS prev_amt,
-          |  CAST(lead_amt AS DOUBLE) AS next_amt
-          |FROM (
-          |  SELECT status, ym, amt0,
-          |    CAST(sum(amt0) OVER (PARTITION BY status, substring(ym, 1, 4))
-          |      AS DOUBLE) /
-          |      count(amt0) OVER (PARTITION BY status, substring(ym, 1, 4))
-          |      AS avg_year,
-          |    lag(amt0) OVER (PARTITION BY status ORDER BY ym) AS lag_amt,
-          |    lead(amt0) OVER (PARTITION BY status ORDER BY ym) AS lead_amt
-          |  FROM monthly) x
-          |WHERE CAST(amt0 AS DOUBLE) > avg_year * 1.1
-          |ORDER BY status, ym""".stripMargin)
-    }),
+        |ORDER BY status, ym""".stripMargin),
 
     // TPC-DS q8/q38 family shape (round 15, 11th DS pattern): EXCEPT
     // under a WINDOWED CTE — a per-customer top-1 ranking (window inside
     // the CTE) feeds set-difference against a channel predicate, and the
     // surviving keys join back up into a dimension aggregate. The wire
     // must carry window → set-op → join → agg stacked in one artifact
-    Query("q81_ds_except_window",
+    Query.sql("q81_ds_except_window",
       """WITH ranked AS (
         |  SELECT o_custkey, CAST(o_totalprice AS DECIMAL(18,2)) AS price,
         |    row_number() OVER (PARTITION BY o_custkey
@@ -5744,34 +5273,14 @@ object SparkEntry {
         |  CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS tot_bal
         |FROM customer JOIN quiet ON c_custkey = o_custkey
         |GROUP BY c_mktsegment
-        |ORDER BY c_mktsegment""".stripMargin)((s, dir) => {
-      t(s, dir, "orders"); t(s, dir, "customer")
-      s.sql(
-        """WITH ranked AS (
-          |  SELECT o_custkey, CAST(o_totalprice AS DECIMAL(18,2)) AS price,
-          |    row_number() OVER (PARTITION BY o_custkey
-          |      ORDER BY CAST(o_totalprice AS DECIMAL(18,2)) DESC,
-          |        o_orderkey) AS rn
-          |  FROM orders),
-          |top1 AS (SELECT o_custkey FROM ranked
-          |         WHERE rn = 1 AND price > 200000),
-          |urgent AS (SELECT o_custkey FROM orders
-          |           WHERE o_orderpriority = '1-URGENT'),
-          |quiet AS (SELECT o_custkey FROM top1
-          |          EXCEPT SELECT o_custkey FROM urgent)
-          |SELECT c_mktsegment, count(*) AS n_cust,
-          |  CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS tot_bal
-          |FROM customer JOIN quiet ON c_custkey = o_custkey
-          |GROUP BY c_mktsegment
-          |ORDER BY c_mktsegment""".stripMargin)
-    }),
+        |ORDER BY c_mktsegment""".stripMargin),
 
     // TPC-DS q49-style quantile screen (12th DS pattern): PERCENTILE
     // WINDOWS OVER GROUPING SETS — percent_rank + ntile partitioned by
     // the grouping id, ranking the grouping-set rollup rows themselves.
     // Exact decimal sums under the windows; full deterministic ordering
     // (amt + coalesced keys) so rank ties cannot drift between engines
-    Query("q82_ds_percentile_gsets",
+    Query.sql("q82_ds_percentile_gsets",
       """WITH agg AS (
         |  SELECT o_orderstatus AS status, o_orderpriority AS prio,
         |    grouping(o_orderstatus) * 2 + grouping(o_orderpriority)
@@ -5791,37 +5300,14 @@ object SparkEntry {
         |    AS tercile
         |FROM agg
         |ORDER BY gid, amt, coalesce(status, '~'), coalesce(prio, '~')"""
-        .stripMargin)((s, dir) => {
-      t(s, dir, "orders")
-      s.sql(
-        """WITH agg AS (
-          |  SELECT o_orderstatus AS status, o_orderpriority AS prio,
-          |    grouping(o_orderstatus) * 2 + grouping(o_orderpriority)
-          |      AS gid,
-          |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-          |      AS amt,
-          |    count(*) AS n
-          |  FROM orders
-          |  GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority),
-          |    (o_orderstatus), (o_orderpriority), ()))
-          |SELECT status, prio, gid, amt, n,
-          |  CAST(ROUND(percent_rank() OVER (PARTITION BY gid
-          |    ORDER BY amt, coalesce(status, '~'), coalesce(prio, '~')), 6)
-          |    AS DOUBLE) AS pr,
-          |  ntile(3) OVER (PARTITION BY gid
-          |    ORDER BY amt, coalesce(status, '~'), coalesce(prio, '~'))
-          |    AS tercile
-          |FROM agg
-          |ORDER BY gid, amt, coalesce(status, '~'), coalesce(prio, '~')"""
-          .stripMargin)
-    }),
+        .stripMargin),
 
     // TPC-DS q92-style per-entity screen (13th DS pattern): MULTI-LEVEL
     // LATERAL + WINDOW — the second lateral derives from the first
     // (per-customer order stats → guarded average), and a segment window
     // ranks the lateral output; only each segment's top-5 spenders
     // survive. Decorrelation must stack: two laterals then a rank filter
-    Query("q83_ds_lateral_window",
+    Query.sql("q83_ds_lateral_window",
       """SELECT c_mktsegment, c_custkey, n_orders, spend, n_top,
         |  seg_rank
         |FROM (
@@ -5841,46 +5327,15 @@ object SparkEntry {
         |             AND o.o_orderpriority = l1.top_prio) l2
         |  ) x
         |WHERE seg_rank <= 5
-        |ORDER BY c_mktsegment, seg_rank""".stripMargin)((s, dir) => {
-      t(s, dir, "customer"); t(s, dir, "orders")
-      s.sql(
-        """SELECT c_mktsegment, c_custkey, n_orders, spend, n_top,
-          |  seg_rank
-          |FROM (
-          |  SELECT c.c_mktsegment, c.c_custkey, l1.n_orders,
-          |    CAST(coalesce(l1.raw_spend, 0) AS DOUBLE) AS spend,
-          |    l2.n_top,
-          |    row_number() OVER (PARTITION BY c.c_mktsegment
-          |      ORDER BY CAST(coalesce(l1.raw_spend, 0) AS DOUBLE) DESC,
-          |        c.c_custkey) AS seg_rank
-          |  FROM customer c,
-          |  LATERAL (SELECT count(*) AS n_orders,
-          |           sum(CAST(o_totalprice AS DECIMAL(18,2))) AS raw_spend,
-          |           max(o_orderpriority) AS top_prio
-          |           FROM orders o WHERE o.o_custkey = c.c_custkey) l1,
-          |  LATERAL (SELECT count(*) AS n_top
-          |           FROM orders o WHERE o.o_custkey = c.c_custkey
-          |             AND o.o_orderpriority = l1.top_prio) l2
-          |  ) x
-          |WHERE seg_rank <= 5
-          |ORDER BY c_mktsegment, seg_rank""".stripMargin)
-    }),
+        |ORDER BY c_mktsegment, seg_rank""".stripMargin),
 
     // uncorrelated scalar subquery → cross-joined single-row AggregateRel
-    Query("q33_scalar_subquery",
+    Query.sql("q33_scalar_subquery",
       """SELECT o_orderkey, o_totalprice FROM orders
         |WHERE o_totalprice >
         |  (SELECT CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
         |     / count(*) FROM orders)
-        |ORDER BY o_orderkey""".stripMargin)((s, dir) => {
-      t(s, dir, "orders")
-      s.sql(
-        """SELECT o_orderkey, o_totalprice FROM orders
-          |WHERE o_totalprice >
-          |  (SELECT CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-          |     / count(*) FROM orders)
-          |ORDER BY o_orderkey""".stripMargin)
-    }),
+        |ORDER BY o_orderkey""".stripMargin),
 
     Query("q30_grouping_id",
       """SELECT o_orderstatus, o_orderpriority, count(*) AS n,
@@ -5971,7 +5426,7 @@ object SparkEntry {
   val oracleSql: Map[String, String] = table.map(q => q.name -> q.oracle).toMap
 
   /** The `queries` entries named by `names`, in their order, or all of them
-    * when `names` is empty. An unknown name throws IllegalArgumentException
+    * in table order when `names` is empty. An unknown name throws IllegalArgumentException
     * listing the unknown and the valid names, so a typo cannot pass as an
     * empty run. */
   def select(names: Seq[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
@@ -5980,6 +5435,6 @@ object SparkEntry {
       throw new IllegalArgumentException(
         s"unknown query name(s): ${unknown.mkString(", ")}; " +
           s"valid names: ${queries.keys.toSeq.sorted.mkString(", ")}")
-    if (names.isEmpty) queries.toSeq else names.distinct.map(n => n -> queries(n))
+    (if (names.isEmpty) table.map(_.name) else names.distinct).map(n => n -> queries(n))
   }
 }

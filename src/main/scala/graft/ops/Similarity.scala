@@ -585,18 +585,6 @@ object Similarity {
     // bucketedKnn's corpus-vs-queryset assignment)
     val bucketed = assignCells(vecs,
       trainCellQuantizer(vecs, cells, trainSampleFraction, seed), probeCells)
-    // env-gated rehearsal instrumentation (GRAFT_S07_DEBUG): occupancy and
-    // candidate-volume stats, the numbers scale diagnoses need
-    if (sys.env.contains("GRAFT_S07_DEBUG")) {
-      val t0 = System.nanoTime()
-      val occ = bucketed.groupBy("cell").agg(count(lit(1)).as("n"))
-        .agg(count(lit(1)).as("cells"), avg(col("n")).as("avg"),
-          max(col("n")).as("max"),
-          sum(col("n") * (col("n") - 1) / 2).as("pairsUB")).head()
-      println(s"[s07debug] cellsRequested=$cells cellsUsed=${occ.get(0)} " +
-        s"avgOcc=${occ.get(1)} maxOcc=${occ.get(2)} inCellPairsUB=${occ.get(3)} " +
-        f"(${(System.nanoTime() - t0) / 1e9}%.1f s)")
-    }
     // Inline verify: members ride the ONE cell shuffle with their vectors
     // and each cell emits its qualifying pairs directly from the codegen'd
     // cell_pairs kernel (recursive in-task sub-quantization above

@@ -115,15 +115,4 @@ object Sinks {
         ()
       }
       .start()
-
-  /** Append-mode CSV sink (same checkpoint/manifest contract). */
-  def csvSink(df: DataFrame, path: String, checkpoint: String,
-              trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    df.writeStream.format("csv")
-      .option("path", path)
-      .option("checkpointLocation", checkpoint)
-      .option("header", "true")
-      .outputMode("append")
-      .trigger(trigger)
-      .start()
 }

@@ -2,15 +2,15 @@ package graft.tools
 
 import graft.{Session, SparkEntry}
 
-/** Dump the executed physical plan (and optionally run+time) of one or more
-  * driver queries in one JVM:
-  * `runMain graft.tools.PlanDump <sfDir> <query...> [run]`. Each plan
-  * follows a `######## <query>` header; redirect stdout to keep them.
+/** Dump the executed physical plan (and optionally run+time) of driver
+  * queries in one JVM: `runMain graft.tools.PlanDump <sfDir> [query...] [run]`;
+  * no query names dumps all of them. Each plan follows a `######## <query>`
+  * header; redirect stdout to keep them.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: PlanDump <sfDir> <query...> [run]")
-    val run = args.length > 2 && args.last == "run"
+    require(args.nonEmpty, "usage: PlanDump <sfDir> [query...] [run]")
+    val run = args.length > 1 && args.last == "run"
     val queries =
       SparkEntry.select(args.slice(1, if (run) args.length - 1 else args.length).toSeq)
     val spark = Session.local(Session.envCpus(32))

@@ -87,7 +87,6 @@ object SkewGate {
           sum(col("dk")).as("sdk"), sum(length(col("pad"))).as("sp"))
       val row = joined.collect()(0)
       val plan = joined.queryExecution.executedPlan.toString
-      if (sys.env.contains("SKEW_DEBUG")) System.err.println(plan)
       val skewSplit = plan.contains("skew=true")
       val cnt = row.getLong(0); val sv = row.getLong(1)
       // closed form: every fact row joins exactly one dim row;

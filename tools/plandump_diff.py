@@ -4,7 +4,7 @@
 Usage: tools/plandump_diff.py <a> <b>
 
 <a> and <b> are stdout captures of
-`graft.tools.PlanDump <sfDir> <query...>`: one executed physical plan per
+`graft.tools.PlanDump <sfDir> [query...]`: one executed physical plan per
 `######## <query>` header. Before comparing, both sides drop the tokens
 that differ between two runs of the same code:
 
