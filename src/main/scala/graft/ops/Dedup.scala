@@ -1122,10 +1122,6 @@ object Dedup {
     val edges =
       if (stepThroughWire || checkpointDir.isDefined) materialize(edges0)
       else edges0.persist()
-    // the labels frame is referenced three times per iteration (both pointer
-    // directions + the join side), so each generation is checkpointed —
-    // dropping this recomputes the distinct per reference and costs more
-    // than the checkpoint job does
     // Init = min(u, min neighbor) — ONE free propagation hop (opt round 16):
     // the old identity init paid the same |E|-row exchange for a distinct();
     // a groupBy/min over the symmetric edge list costs the same shuffle and
@@ -1133,8 +1129,9 @@ object Dedup {
     // compounds (a star/pair cluster is already converged at init). The
     // fixpoint is init-independent for any valid state (label(u) ≤ u and
     // ≥ the component minimum), so results are unchanged.
-    var labels = materialize(edges.groupBy(col("u")).agg(min(col("v")).as("mv"))
-      .select(col("u").as("node"), least(col("mv"), col("u")).as("label")))
+    def initLabels(ed: DataFrame): DataFrame =
+      ed.groupBy(col("u")).agg(min(col("v")).as("mv"))
+        .select(col("u").as("node"), least(col("mv"), col("u")).as("label"))
     // Round-15 REFUTATION (the d17 co-partitioning mechanism does NOT
     // transfer here): the edge list enters this join through a UNION with
     // the per-round pointer frames, and a union of a cached co-partitioned
@@ -1168,7 +1165,7 @@ object Dedup {
         .groupBy("u").agg(min(col("label")).as("label"))
         .select(col("u").as("node"), col("label"))
     }
-    if (stepThroughWire) {
+    val labels = if (stepThroughWire) {
       // ONE wire artifact (round 10): the pointer-doubling fixpoint ships
       // as a single Rel.ExtIteration — double-hop body (halves the fixed
       // per-round materialization cost), bounded rounds, and the consumer's
@@ -1178,16 +1175,11 @@ object Dedup {
       val edgesView = "graft_cc_edges_" +
         java.util.UUID.randomUUID.toString.replace("-", "").take(12)
       edges.createOrReplaceTempView(edgesView)
-      val initialLabels = labels // superseded by the consumed fixpoint
       try {
         // init derives from the SAME named read so the whole artifact —
-        // initial labels included — is plan, not host state (min-neighbor
-        // head-start init, same as the host loop's — see above)
-        val init = spark.table(edgesView)
-          .groupBy(col("u")).agg(min(col("v")).as("mv"))
-          .select(col("u").as("node"), least(col("mv"), col("u")).as("label"))
+        // initial labels included — is plan, not host state
         val plan = graft.substrait.Producer.produceIteration(
-          init,
+          initLabels(spark.table(edgesView)),
           l => { val e = spark.table(edgesView); step(e)(step(e)(l)) },
           maxIters = maxIter, checkFixpoint = true,
           // pointer-doubling label propagation converges within the bound
@@ -1198,23 +1190,23 @@ object Dedup {
         // the reliability of the consumed rounds is THIS call's
         // checkpointDir choice, scoped explicitly — not whatever dir an
         // earlier caller left configured on the sticky context
-        labels = graft.substrait.Consumer.consume(spark,
+        graft.substrait.Consumer.consume(spark,
             graft.substrait.Wire.decode(graft.substrait.Wire.encode(plan)),
             reliableIteration = Some(checkpointDir.isDefined))
           .toDF("node", "label")
       } finally {
         spark.catalog.dropTempView(edgesView)
-        // released in finally, not only on the success path: on success
-        // initialLabels is superseded by the consumed fixpoint; if consume
-        // throws (e.g. the require_fixpoint divergence guard) the method
-        // returns nothing, so the frame is dead either way and must not
-        // stay pinned for the session
-        releaseLocalCheckpoint(initialLabels)
-        // all rounds consumed; the result is its own checkpoint (no-op for
-        // the reliable/disk-backed form when checkpointDir is set)
+        // all rounds consumed (or consume threw); the result is its own
+        // checkpoint (no-op for the reliable/disk-backed form when
+        // checkpointDir is set)
         releaseLocalCheckpoint(edges)
       }
     } else {
+      // the labels frame is referenced three times per iteration (both
+      // pointer directions + the join side), so each generation is
+      // checkpointed — dropping this recomputes the distinct per reference
+      // and costs more than the checkpoint job does
+      var labels = materialize(initLabels(edges))
       var prevSum: java.math.BigDecimal = null
       var iter = 0
       var done = false
@@ -1236,6 +1228,7 @@ object Dedup {
         // consumer's ExtIteration loop, r11)
         releaseLocalCheckpoint(superseded)
       }
+      labels
     }
     if (!(stepThroughWire || checkpointDir.isDefined)) edges.unpersist()
     // (the wire path releases edges in its own finally block above)

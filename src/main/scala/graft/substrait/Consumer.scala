@@ -4,8 +4,8 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{plans => cp}
-import org.apache.spark.sql.catalyst.analysis.{MultiAlias, UnresolvedExtractValue,
-  UnresolvedFunction, UnresolvedRelation}
+import org.apache.spark.sql.catalyst.analysis.{MultiAlias, MultiInstanceRelation,
+  UnresolvedExtractValue, UnresolvedFunction, UnresolvedRelation}
 import org.apache.spark.sql.catalyst.expressions.{Add, Alias, And, Ascending, Attribute,
   BitwiseAnd, BitwiseOr, BitwiseXor, CaseWhen, Cast, Coalesce, Concat, CreateArray, CreateMap,
   CurrentRow, Descending, Divide, EqualNullSafe, EqualTo, Explode, ExprId, Expression,
@@ -17,10 +17,10 @@ import org.apache.spark.sql.catalyst.expressions.{Add, Alias, And, Ascending, At
   UnresolvedNamedLambdaVariable, UnspecifiedFrame, WindowExpression, WindowSpecDefinition}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateFunction, Average, Count,
   First, Last, Max, Min, Mode, PercentileDisc, Sum}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Deduplicate, Except, Intersect,
-  Join, JoinHint, Limit, LocalRelation, LogicalPlan, Offset, Repartition,
-  RepartitionByExpression, Sample, UnresolvedHint, Union, Project => PProject,
-  Filter => PFilter, Sort => PSort}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Deduplicate, Except, Expand,
+  Generate, HintInfo, Intersect, Join, JoinHint, JoinStrategyHint, Limit, LocalRelation,
+  LogicalPlan, Offset, Repartition, RepartitionByExpression, ResolvedHint, Sample,
+  SerializeFromObject, Union, Window, Project => PProject, Filter => PFilter, Sort => PSort}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.internal.SQLConf
@@ -34,30 +34,33 @@ import model._
   * Spark-native rebuild of the reference consumer (src/consumer.rs:74-380),
   * which turns each Rel into a DataFusion `LogicalPlan` node: here each Rel
   * becomes a Catalyst `LogicalPlan` node over its already-resolved
-  * children, and the root is wrapped ONCE with `Dataset.ofRows`; Catalyst
-  * then optimizes (pushdown, pruning, join strategy) and executes it.
+  * children, so the root reaches Spark already analyzed. It is wrapped ONCE
+  * by [[ColumnBridge.analyzed]]: one `checkAnalysis` pass, no analyzer rule
+  * batch; Catalyst then optimizes (pushdown, pruning, join strategy) and
+  * executes it.
   *
   * Positional field references index the node's flattened output
   * (consumer.rs:449-468) and bind to the child's output ATTRIBUTES, so they
   * resolve by exprId, never by name: self-joins and duplicate column names
   * need no renaming. Every Read gets attributes no other Read of the same
-  * consume has (a second read of one table is re-aliased), which is what
-  * keeps the two sides of a self-join apart. The user-visible names come
-  * from `RelRoot.names` at the root (consumer.rs:92-111).
+  * consume has (a second read of one table is a fresh instance of it, as
+  * the analyzer's DeduplicateRelations would make), which is what keeps the
+  * two sides of a self-join apart. The user-visible names come from
+  * `RelRoot.names` at the root (consumer.rs:92-111).
   *
   * Every wire expression is built as a Catalyst expression by one builder
   * (`Ctx.toExpr`), as the reference builds every one as a DataFusion
   * `Expr`. Operators, literals, casts, the graft kernels ([[Kernels]],
-  * straight from their bound arguments) and the structural nodes (LIKE,
-  * bitwise ops, constructors, field access) are built resolved; a
-  * registry-named function is an `UnresolvedFunction` the analyzer looks
-  * up, windows are `WindowExpression`s and lambdas `LambdaFunction`s over
-  * fresh variables. A node Catalyst reports unresolved (one holding such a
-  * function, a window or a generator, or a foreign plan that needs type
-  * coercion) is analyzed on its own against LocalRelation stubs of its
-  * children's output ([[ColumnBridge.analyzeNode]]); every other node is
-  * used as built. Analyzing each node once, instead of re-analyzing the
-  * growing plan at every DataFrame call, keeps consume linear in plan
+  * straight from their bound arguments), the structural nodes (LIKE,
+  * bitwise ops, constructors, field access), join-strategy hints and
+  * registry-named functions (looked up in the session's function registry
+  * once their arguments are resolved) are built resolved; windows are
+  * `WindowExpression`s and lambdas `LambdaFunction`s over fresh variables.
+  * A node Catalyst reports unresolved (one holding a window, a generator,
+  * grouping sets, a lambda, or a function that needs type coercion) is
+  * analyzed on its own against LocalRelation stubs of its children's output
+  * ([[ColumnBridge.analyzeNode]]); every other node is used as built.
+  * Analyzing only those nodes, each once, keeps consume linear in plan
   * depth.
   */
 object Consumer {
@@ -75,6 +78,12 @@ object Consumer {
     * the REAL consumed loop, not a reconstruction). A no-op in
     * production. */
   @volatile private[graft] var roundPlanHook: org.apache.spark.sql.DataFrame => Unit = null
+
+  /** Test-only observer: when non-null, sees every consumed root as built,
+    * before [[ColumnBridge.analyzed]] checks and marks it (AnalyzedConsumeSpec
+    * runs Spark's analyzer over it and expects it back unchanged). A no-op
+    * in production. */
+  @volatile private[graft] var rootHook: LogicalPlan => Unit = null
 
   def consume(spark: SparkSession, plan: Plan): DataFrame =
     consumeInternal(spark, plan, binding = None, validate = true,
@@ -118,7 +127,9 @@ object Consumer {
           }, b)
         case PlanRel.RelOnly(rel) => ctx.build(rel)
       }
-      ColumnBridge.ofRows(spark, root)
+      val hook = rootHook
+      if (hook != null) hook(root)
+      ColumnBridge.analyzed(spark, root)
     }
 
   /** Aggregates resolved through the session registry by their Spark name
@@ -163,13 +174,35 @@ object Consumer {
 
     /** A leaf whose attributes another leaf of this consume already uses
       * (the same table read twice, the iteration state bound twice) is
-      * re-aliased, so positional refs on either side bind apart. The alias
-      * takes a new name: a same-name alias is optimized away, and the two
-      * leaves' shared exprIds would meet again above it. */
-    private def unique(leaf: LogicalPlan): LogicalPlan =
-      if (leaf.output.forall(a => !leafIds.contains(a.exprId))) {
-        leafIds ++= leaf.output.map(_.exprId); leaf
-      } else PProject(leaf.output.map(a => Alias(a, a.name + "_")()), leaf)
+      * [[fresh]], so positional refs on either side bind apart. */
+    private def unique(leaf: LogicalPlan): LogicalPlan = {
+      val l = if (leaf.output.exists(a => leafIds.contains(a.exprId))) fresh(leaf) else leaf
+      leafIds ++= l.output.map(_.exprId)
+      l
+    }
+
+    /** A new instance of `leaf`, as the analyzer's DeduplicateRelations
+      * renews a repeated relation: each MultiInstanceRelation is a new
+      * instance, and the aliases and generated columns a view holds get new
+      * ids, carried up through the nodes above them. */
+    private def fresh(leaf: LogicalPlan): LogicalPlan = {
+      def renewed(old: LogicalPlan, n: LogicalPlan) = n -> old.output.zip(n.output)
+      def aliases(es: Seq[NamedExpression]) = es.map {
+        case a: Alias => a.newInstance()
+        case e => e
+      }
+      leaf.transformUpWithNewOutput {
+        case m: MultiInstanceRelation => renewed(m, m.newInstance())
+        case p: PProject => renewed(p, p.copy(projectList = aliases(p.projectList)))
+        case a: Aggregate =>
+          renewed(a, a.copy(aggregateExpressions = aliases(a.aggregateExpressions)))
+        case w: Window => renewed(w, w.copy(windowExpressions = aliases(w.windowExpressions)))
+        case g: Generate =>
+          renewed(g, g.copy(generatorOutput = g.generatorOutput.map(_.newInstance())))
+        case e: Expand => renewed(e, e.copy(output = e.output.map(_.newInstance())))
+        case s: SerializeFromObject => renewed(s, s.copy(serializer = aliases(s.serializer)))
+      }
+    }
 
     private def at(in: Seq[Attribute], i: Int, what: String = "field reference"): Attribute =
       if (i < 0 || i >= in.size) internalErr(s"$what $i out of range ${in.size}")
@@ -334,11 +367,14 @@ object Consumer {
 
       case Rel.ExtHint(input, hint) =>
         val in = build(input)
-        // resolves through Catalyst's hint-alias table, so the canonical
-        // names the producer writes (broadcast / merge / shuffle_hash /
-        // shuffle_replicate_nl) all re-resolve; an unknown name would be
-        // dropped with Spark's own analyzer warning
-        node(UnresolvedHint(hint, Nil, in))
+        // the analyzer's join-strategy hint lookup: the canonical names the
+        // producer writes (broadcast / merge / shuffle_hash /
+        // shuffle_replicate_nl) and their aliases resolve; an unknown name
+        // is dropped with Spark's own warning
+        JoinStrategyHint.strategies.find(_.hintAliases.exists(_.equalsIgnoreCase(hint))) match {
+          case Some(s) => ResolvedHint(in, HintInfo(strategy = Some(s)))
+          case None => SQLConf.get.hintErrorHandler.hintNotRecognized(hint, Nil); in
+        }
 
       case Rel.ExtSessionWindow(input, tsField, gapMicros, gapExpr) =>
         val in = build(input)
@@ -361,8 +397,10 @@ object Consumer {
           case Some(ge) => cast(toExpr(ge, in.output), CalendarIntervalType)
           case None => Literal(s"$gapMicros microseconds")
         }
-        node(PProject(in.output :+ Alias(fn("session_window", Seq(in.output(tsField), gap)),
-          s"_${in.output.size}")(), in))
+        // built unresolved on purpose: a resolved session_window would make
+        // the Project resolved and skip that analysis
+        node(PProject(in.output :+ Alias(UnresolvedFunction(Seq("session_window"),
+          Seq(in.output(tsField), gap), isDistinct = false), s"_${in.output.size}")(), in))
 
       case Rel.ExtIteration(input, bodyPlan, maxIters, checkFixpoint,
                             requireFixpoint) =>
@@ -434,7 +472,7 @@ object Consumer {
             }
         val init = build(input)
         val width = init.output.size
-        var state = materialize(ColumnBridge.ofRows(spark, init))
+        var state = materialize(ColumnBridge.analyzed(spark, init))
         var k = 0
         var done = false
         while (k < maxIters && !done) {
@@ -484,7 +522,7 @@ object Consumer {
             s"columns, got ${in.output.size}")
         // the stage's input contract is positional: name the columns by
         // position before rebuilding
-        st.rebuild(ColumnBridge.ofRows(spark, in).toDF(st.inputCols: _*))
+        st.rebuild(ColumnBridge.analyzed(spark, in).toDF(st.inputCols: _*))
           .queryExecution.analyzed
 
       case Rel.Set(inputs, op) =>
@@ -662,10 +700,14 @@ object Consumer {
       try build(args)
       catch { case e: IllegalArgumentException => notImplemented(e.getMessage) }
 
-    /** A session-registry function the analyzer resolves (what
-      * `call_function` builds, without re-parsing the name). */
+    /** A session-registry function (what `call_function` builds, without
+      * re-parsing the name), looked up as the analyzer would once its
+      * arguments are resolved; a lookup that still needs coercion leaves
+      * its node to be analyzed. An unresolved argument (a lambda, say)
+      * leaves it an `UnresolvedFunction` for that analysis. */
     private def fn(name: String, args: Seq[Expression]): Expression =
-      UnresolvedFunction(Seq(name), args, isDistinct = false)
+      Option.when(args.forall(_.resolved))(ColumnBridge.function(spark, name, args)).flatten
+        .getOrElse(UnresolvedFunction(Seq(name), args, isDistinct = false))
 
     /** `child[key]` as the analyzer resolves it: a struct field, array
       * item or map value by the child's type, left to the analyzer while

@@ -9,10 +9,14 @@ Usage: tools/plandump_diff.py <a> <b>
 that differ between two runs of the same code:
 
 - expression ids (`q_id#123L` -> `q_id#L`)
+- the counters of generated lambda-variable names (`lambda x_12#` ->
+  `lambda x_<n>#`) and of common subexpressions (`_common_expr_2#`),
+  which depend on how many were made before
 - `plan_id=<n>`
 - the `-p<pid>` suffix of scratch directories
-- commit and part file names under a scratch directory (and the tail of
-  a scratch path that Spark truncated with `...`)
+- commit and part file names under a scratch directory, also a part file
+  named after its commit (and the tail of a scratch path that Spark
+  truncated with `...`)
 - `$Lambda$<n>/0x<addr>@<hash>` of lambda-backed nodes
 - `Broadcast(<id>)`
 
@@ -25,12 +29,17 @@ import sys
 
 REWRITES = [
     (re.compile(r"#\d+"), "#"),
+    (re.compile(r"(lambda \w+?)_\d+#"), r"\1_<n>#"),
+    (re.compile(r"_common_expr_\d+#"), "_common_expr_<n>#"),
     (re.compile(r"plan_id=\d+"), "plan_id=<n>"),
     (re.compile(r"(/graft-[\w.]+-[0-9a-f]+)-p\d+"), r"\1-p<pid>"),
     # a location Spark cut short ends wherever the pid's width puts the cut
     (re.compile(r"(/graft-[^\s,\]]*/)[^/\s,\]]*\.\.\."), r"\1..."),
     (re.compile(r"(/graft-[^\s,\]]*?/)(v\d+)-[0-9a-f]{8}"), r"\1\2-<commit>"),
     (re.compile(r"(/graft-[^\s,\]]*?/)part-[^/\s,\]]*"), r"\1part-<file>"),
+    # a part file named after its commit (`v1-<commit>-0-part-00000-<uuid>`)
+    (re.compile(r"(/graft-[^\s,\]]*?/v\d+-<commit>-\d+-)part-[^/\s,\]]*"),
+     r"\1part-<file>"),
     (re.compile(r"\$Lambda\$\d+/0x[0-9a-f]+@[0-9a-f]+"), "$Lambda$<n>"),
     (re.compile(r"Broadcast\(\d+\)"), "Broadcast(<id>)"),
 ]
