@@ -93,12 +93,13 @@ object Dedup {
     val newD = newDocs.select(col(idCol),
       TextOps.fingerprint(col(textCol)).as("digest"))
     // the corpus digest set is read up to three times (count fallback,
-    // bloom build, anti-join build side) — persist so text normalization +
-    // the distinct shuffle run once, not per consumer. At 100 TB the
-    // production shape passes a pre-computed digest TABLE as `existing`
-    // plus `expectedItems`, making this cache a digests-only frame.
+    // bloom build, anti-join build side) and recomputed by each reader. It
+    // is not cached: a session cache entry would outlive this call and be
+    // picked up by every later query that builds the same digest frame. At
+    // 100 TB the production shape passes a pre-computed digest TABLE as
+    // `existing` plus `expectedItems`.
     val oldD = existing.select(
-      TextOps.fingerprint(col(textCol)).as("digest")).distinct().persist()
+      TextOps.fingerprint(col(textCol)).as("digest")).distinct()
     val nItems = math.max(1L,
       if (expectedItems > 0) expectedItems else oldD.count())
     // might_contain requires the filter as a constant or scalar subquery —

@@ -375,7 +375,12 @@ object model {
 
   /** Unsupported Catalyst node / Substrait message → typed failure, never a
     * silent drop (reference contract, SURVEY.md §2.11). */
-  final case class SubstraitException(msg: String) extends RuntimeException(msg)
+  case class SubstraitException(msg: String) extends RuntimeException(msg)
+  /** Plan bytes `Wire.decode` cannot read: `what` went wrong at byte
+    * `offset` while reading `fieldPath`, e.g.
+    * `plan.relations[0].root.input.filter.condition`. */
+  final class WireDecodeError(val offset: Int, val fieldPath: String, val what: String)
+      extends SubstraitException(s"$what at byte offset $offset in $fieldPath")
   def notImplemented(what: String): Nothing =
     throw SubstraitException(s"NotImplemented: $what")
   def internalErr(what: String): Nothing =

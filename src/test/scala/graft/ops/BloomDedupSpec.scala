@@ -40,6 +40,17 @@ class BloomDedupSpec extends SparkTestBase {
     assert(fp <= 300, s"false-positive rate too high: $fp of 10000")
   }
 
+  test("the corpus digest set is not left cached in the session") {
+    val newB = docs.filter(col("doc_id") % 2 === 1)
+    val kept = docs.filter(col("doc_id") % 2 === 0)
+    Dedup.bloomIncrementalDedup(newB, kept).collect()
+    // the frame d07/e04-style queries build: a leftover cache entry for it
+    // would make their plans depend on whether this ran first
+    val digests = kept.select(TextOps.fingerprint(col("text")).as("digest")).distinct()
+    assert(spark.sharedState.cacheManager.lookupCachedData(
+      digests.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isEmpty)
+  }
+
   test("bloom dedup rides the wire") {
     val newB = docs.filter(col("doc_id") % 2 === 1)
     val kept = docs.filter(col("doc_id") % 2 === 0)

@@ -538,4 +538,40 @@ class WireConformanceSpec extends AnyFunSuite {
     val e2 = intercept[SubstraitException](Wire.decode(arrow))
     assert(e2.getMessage.contains("arrow"), e2.getMessage)
   }
+
+  test("foreign ExchangeRelDetail with PACKED range_directions decodes like unpacked") {
+    // a proto3 runtime packs repeated enums by default: range_directions=4
+    // arrives as ONE length-delimited run of varints
+    def exchange(packed: Boolean): Array[Byte] = {
+      val w = new PW
+      w.msg(3, pr => pr.msg(1, rel => rel.msg(9, ext => {
+        ext.msg(2, in => in.msg(1, rd => {
+          rd.msg(2, ns => { ns.str(1, "x"); ns.str(1, "y")
+            ns.msg(2, st => { i32Type(st, 1); i32Type(st, 1) }) })
+          rd.msg(7, nt => nt.str(1, "t"))
+        }))
+        ext.msg(3, any => {
+          any.str(1, Wire.exchangeDetailUrl)
+          any.msg(2, d => {
+            // exprs: column 0 (empty StructField, proto3) and column 1
+            d.msg(1, ex => ex.msg(2, fr => fr.msg(1, seg => seg.msg(2, _ => ()))))
+            d.msg(1, ex => ex.msg(2, fr => fr.msg(1, seg => seg.msg(2, sf => sf.int(1, 1)))))
+            d.int(2, 8)
+            d.int(3, 1)
+            if (packed) d.msg(4, p => { p.varint(2); p.varint(3) })
+            else { d.int(4, 2); d.int(4, 3) }
+          })
+        })
+      })))
+      w.bytes
+    }
+    val expected = Rel.ExtExchange(
+      Rel.Read(NamedStruct(Seq("x", "y"), Seq((SType.SI32, true), (SType.SI32, true))),
+        Seq("t"), None),
+      Seq(SExpr.FieldRef(0), SExpr.FieldRef(1)), 8, shuffle = true,
+      Seq(SortDirection.AscNullsLast, SortDirection.DescNullsFirst))
+    for (packed <- Seq(false, true))
+      assert(Wire.decode(exchange(packed)).relations.head ==
+        PlanRel.RelOnly(expected), s"packed=$packed")
+  }
 }

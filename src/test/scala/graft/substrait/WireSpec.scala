@@ -294,11 +294,22 @@ class WireSpec extends AnyFunSuite {
       Rel.Read(NamedStruct(Seq("a"), Seq((SType.SI64, true))), Seq("t"), None)))))
     for (cut <- 1 until bytes.length) {
       val t = java.util.Arrays.copyOfRange(bytes, 0, cut)
-      intercept[Exception](Wire.decode(t))
+      located(intercept[SubstraitException](Wire.decode(t)), t)
     }
   }
 
   // ---- malformed frames: every one must fail with the typed error
+
+  /** `e` is the decode error of `bytes`: it names a byte offset inside them
+    * and a field path from the plan root. */
+  private def located(e: SubstraitException, bytes: Array[Byte]): WireDecodeError = e match {
+    case d: WireDecodeError =>
+      assert(d.offset >= 0 && d.offset <= bytes.length, d.getMessage)
+      assert(d.fieldPath == "plan" || d.fieldPath.startsWith("plan."), d.getMessage)
+      assert(d.getMessage.contains(s"at byte offset ${d.offset} in ${d.fieldPath}"))
+      d
+    case other => fail(s"not a WireDecodeError: $other")
+  }
 
   private def vint(v0: Long): Array[Byte] = {
     val out = Array.newBuilder[Byte]; var v = v0
@@ -327,6 +338,7 @@ class WireSpec extends AnyFunSuite {
     val cut = bytes.clone(); cut(at + 1) = 0x03
     val e = intercept[SubstraitException](Wire.decode(cut))
     assert(e.getMessage.contains("truncated"))
+    located(e, cut)
   }
 
   test("fixed64 at the end of the buffer fails typed, not out of bounds") {
@@ -337,6 +349,8 @@ class WireSpec extends AnyFunSuite {
       lenField(1, lit)))))
     val e = intercept[SubstraitException](Wire.decode(bytes))
     assert(e.getMessage.contains("truncated"))
+    assert(located(e, bytes).fieldPath ==
+      "plan.relations[0].rel.project.expressions[0].literal.fp64")
   }
 
   private val wrap = 1L << 32
@@ -347,6 +361,8 @@ class WireSpec extends AnyFunSuite {
     val e = intercept[SubstraitException](
       Wire.decode(lenField(3, planRel, wrap + planRel.length)))
     assert(e.getMessage.contains(s"length ${wrap + planRel.length} "))
+    assert(located(e, lenField(3, planRel, wrap + planRel.length)).fieldPath ==
+      "plan.relations[0]")
   }
 
   test("a string length above Int.MaxValue is rejected, not wrapped") {
@@ -358,6 +374,8 @@ class WireSpec extends AnyFunSuite {
     val e = intercept[SubstraitException](
       Wire.decode(ext(wrap + 3) ++ relOnly(readT)))
     assert(e.getMessage.contains(s"length ${wrap + 3} "))
+    assert(located(e, ext(wrap + 3)).fieldPath ==
+      "plan.extensions[0].extension_function.name")
   }
 
   test("a skipped field's length above Int.MaxValue is rejected, not wrapped") {
@@ -366,6 +384,7 @@ class WireSpec extends AnyFunSuite {
     val e = intercept[SubstraitException](
       Wire.decode(unknown(wrap + 1) ++ relOnly(readT)))
     assert(e.getMessage.contains(s"length ${wrap + 1} "))
+    assert(located(e, unknown(wrap + 1)).fieldPath == "plan")
   }
 
   /** Plan bytes of a FilterRel chain `depth` deep over `readT`, built
@@ -402,6 +421,8 @@ class WireSpec extends AnyFunSuite {
     assert(depthOf(ok.relations.head.asInstanceOf[PlanRel.RelOnly].rel) == 128)
     val e = intercept[SubstraitException](Wire.decode(filterChain(50000)))
     assert(e.getMessage.contains(s"deeper than ${Wire.MaxNestingDepth}"))
+    assert(located(e, filterChain(50000)).fieldPath.startsWith(
+      "plan.relations[0].rel.filter.input.filter.input."))
   }
 
   test("encode counts nesting as decode does: a deep Filter chain fails typed, and near the cap every plan that encodes decodes") {
@@ -425,4 +446,46 @@ class WireSpec extends AnyFunSuite {
     }
     assert(encodes.contains(true) && encodes.contains(false), around)
   }
+
+  // ---- a required sub-message that is missing fails the decode itself,
+  //      naming the field, instead of leaving a null for the Validator
+
+  private val readRel = relOnly(readT).drop(4) // Rel{read=1}, headers stripped
+  private val trueExpr = lenField(1, Array[Byte](0x08, 0x01)) // Expression{literal true}
+  private val i64Type = lenField(7, Array[Byte](0x10, 0x01)) // Type{i64{nullable}}
+  private def planOf(rel: Array[Byte]) = lenField(3, lenField(1, rel))
+  private def projectOf(e: Array[Byte]) = lenField(7, lenField(2, readRel) ++ lenField(3, e))
+  private val exprs = "plan.relations[0].rel.project.expressions[0]"
+
+  private val missingRequired = Seq(
+    "Cast without a type" ->
+      (planOf(projectOf(lenField(11, lenField(2, trueExpr)))), s"$exprs.cast.type"),
+    "Cast without an input" ->
+      (planOf(projectOf(lenField(11, lenField(1, i64Type)))), s"$exprs.cast.input"),
+    "Filter without an input" ->
+      (planOf(lenField(2, lenField(3, trueExpr))), "plan.relations[0].rel.filter.input"),
+    "Filter without a condition" ->
+      (planOf(lenField(2, lenField(2, readRel))), "plan.relations[0].rel.filter.condition"),
+    "IfThen clause without a condition" ->
+      (planOf(projectOf(lenField(6, lenField(1, lenField(2, trueExpr))))),
+        s"$exprs.if_then.ifs[0].if"),
+    "Join without a right side" ->
+      (planOf(lenField(6, lenField(2, readRel) ++ lenField(4, trueExpr) ++ vint(0x30) ++ vint(1))),
+        "plan.relations[0].rel.join.right"),
+    "SortField without an expression" ->
+      (planOf(lenField(5, lenField(2, readRel) ++ lenField(3, vint(0x10) ++ vint(1)))),
+        "plan.relations[0].rel.sort.sorts[0].expr"),
+    "RelRoot without an input" ->
+      (lenField(3, lenField(2, lenField(2, "x".getBytes("UTF-8")))),
+        "plan.relations[0].root.input"),
+    "Measure without a function" ->
+      (planOf(lenField(4, lenField(2, readRel) ++ lenField(4, lenField(2, trueExpr)))),
+        "plan.relations[0].rel.aggregate.measures[0].measure"))
+
+  for ((shape, (bytes, path)) <- missingRequired)
+    test(s"$shape fails the decode with its field path") {
+      val e = intercept[SubstraitException](Validator.validateOrThrow(Wire.decode(bytes)))
+      assert(located(e, bytes).fieldPath == path)
+      assert(e.getMessage.contains("missing required field"), e.getMessage)
+    }
 }
