@@ -268,8 +268,7 @@ object Consumer {
             else tables.getOrElseUpdate(tableNames, ColumnBridge.ofRows(spark,
               UnresolvedRelation(tableNames)).queryExecution.analyzed)
         })
-        if (schema != null && schema.names.nonEmpty &&
-            schema.names.size != base.output.size)
+        if (schema.names.nonEmpty && schema.names.size != base.output.size)
           internalErr(s"table ${tableNames.mkString(".")}: plan schema arity " +
             s"${schema.names.size} != catalog arity ${base.output.size}")
         // scan filter references the BASE schema (pre-mask); Catalyst pushes

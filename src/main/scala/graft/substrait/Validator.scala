@@ -42,12 +42,12 @@ object Validator {
           if (!Set("parquet", "orc", "csv").contains(item.format))
             issues += Issue(path, s"local file item $i format ${item.format}")
         })
-        val width = if (schema == null) -1 else schema.names.size
-        if (schema != null && schema.names.size != schema.types.size)
+        val width = schema.names.size
+        if (schema.names.size != schema.types.size)
           issues += Issue(path,
             s"schema has ${schema.names.size} names but ${schema.types.size} types")
         vrows.foreach(_.zipWithIndex.foreach { case (row, i) =>
-          if (width >= 0 && row.size != width)
+          if (row.size != width)
             issues += Issue(path,
               s"virtual row $i has ${row.size} cells; schema width $width")
         })

@@ -65,6 +65,7 @@ object Wire {
 
   /** Type{kind}: a type with its nullability. */
   private lazy val tpe: Msg[(SType, Boolean)] = msg(new OneOf[(SType, Boolean)]("kind") {
+    override protected def key(v: (SType, Boolean)): Any = v._1.getClass
     // simple kinds: {type_variation_reference=1, nullability=2}
     private def simple(num: Int, name: String, t: SType): Unit =
       br(num, name, msg(nullability(2)))((t, _)) { case (`t`, n) => n }
@@ -144,8 +145,13 @@ object Wire {
     * names remain as a self-describing fallback. */
   private lazy val namedStruct: Msg[NamedStruct] =
     msg(rep(1, "names", string), field(2, "struct", msg(rep(1, "types", tpe)), Nil))
-      .map((namedStructOf _).tupled)(s => (s.names.zip(s.types).flatMap {
-        case (n, (t, _)) => n +: nestedNames(t) }, s.types))
+      .map((namedStructOf _).tupled)(s => (flatNames(s), s.types))
+
+  /** The depth-first flattened name list of `s`: its own names when no
+    * field nests a struct. */
+  private def flatNames(s: NamedStruct): Seq[String] =
+    if (s.types.forall { case (t, _) => nestedArity(t) == 0 }) s.names
+    else s.names.zip(s.types).flatMap { case (n, (t, _)) => n +: nestedNames(t) }
 
   // ------------------------------------------------------------- expressions
   /** Infer a literal's substrait type — used to recover a list literal's
@@ -185,6 +191,12 @@ object Wire {
     * consumer infers them from the values; empty ones are empty_list (31,
     * a Type.List) and empty_map (32, a Type.Map), which do carry them. */
   private lazy val literal: Msg[LitVal] = msg(new OneOf[LitVal]("literal_type") {
+    // an empty list or map takes its own branch
+    override protected def key(v: LitVal): Any = v match {
+      case l: LitVal.LList => (l.getClass, l.values.isEmpty)
+      case m: LitVal.LMap => (m.getClass, m.entries.isEmpty)
+      case _ => v.getClass
+    }
     br(1, "boolean", bool)(LitVal.LBool) { case LitVal.LBool(v) => v }
     br(2, "i8", int32)(LitVal.LI8) { case LitVal.LI8(v) => v }
     br(3, "i16", int32)(LitVal.LI16) { case LitVal.LI16(v) => v }
@@ -331,6 +343,7 @@ object Wire {
     * duplicate rows. */
   private lazy val fileItem: Msg[FileItem] = msg(
     new OneOf[(Int, String)]("path_type") {
+      override protected def key(v: (Int, String)): Any = v._1
       for ((num, name) <- Seq(1 -> "uri_path", 2 -> "uri_path_glob", 3 -> "uri_file",
                               4 -> "uri_folder"))
         br(num, name, string)((num, _)) { case (`num`, path) => path }
@@ -338,6 +351,7 @@ object Wire {
     field(7, "start", int64, 0L, omitDefault = true),
     field(8, "length", int64, 0L, omitDefault = true),
     new OneOf[(String, Option[String], Long)]("file_format") {
+      override protected def key(v: (String, Option[String], Long)): Any = v._1
       br(9, "parquet", msg())(_ => ("parquet", None, 0L)) { case ("parquet", _, _) => () }
       br(11, "orc", msg())(_ => ("orc", None, 0L)) { case ("orc", _, _) => () }
       // DelimiterSeparatedTextReadOptions{field_delimiter=1, header_lines_to_skip=4}
@@ -355,6 +369,7 @@ object Wire {
     * of Rel.Read. */
   private type Source = (Seq[String], Option[Seq[Seq[LitVal]]], Option[Seq[FileItem]])
   private def readType: Part[Source] = new OneOf[Source]("read_type") {
+    override protected def key(v: Source): Any = (v._2.isDefined, v._3.isDefined)
     br(5, "virtual_table", msg(rep(1, "values", msg(rep(1, "fields", literal)))))(
       rows => (Nil, Some(rows), None)) { case (_, Some(rows), _) => rows }
     br(6, "local_files", msg(rep(1, "items", fileItem)))(items => (Nil, None, Some(items))) {

@@ -1,6 +1,8 @@
 package graft.substrait
 
-import java.io.ByteArrayOutputStream
+import java.nio.charset.StandardCharsets.UTF_8
+import java.util.Arrays
+import java.util.concurrent.ConcurrentHashMap
 
 import scala.collection.mutable.{ArrayBuffer, ListBuffer}
 
@@ -19,13 +21,24 @@ private[substrait] object WireCodec {
   // ------------------------------------------------------------------ writer
   /** `depth` counts message nesting exactly as the reader does: a
     * sub-message one level deeper, an extension detail payload at its Any's
-    * level, a nested iteration body plan one level below its detail. */
+    * level, a nested iteration body plan one level below its detail. The
+    * bytes go to a plain growable array: a `ByteArrayOutputStream` takes its
+    * monitor once per byte written. */
   final class W(val depth: Int) {
-    val out = new ByteArrayOutputStream(256)
+    private var buf = new Array[Byte](256)
+    private var n = 0
+    private def room(k: Int): Unit =
+      if (k > buf.length - n) buf = Arrays.copyOf(buf, math.max(buf.length * 2, n + k))
+    private def byte(b: Int): Unit = { room(1); buf(n) = b.toByte; n += 1 }
+    /** `len` bytes of `a` from `off`, as they are. */
+    def raw(a: Array[Byte], off: Int, len: Int): Unit = {
+      room(len); System.arraycopy(a, off, buf, n, len); n += len
+    }
+    def toByteArray: Array[Byte] = Arrays.copyOf(buf, n)
     def varint(v0: Long): Unit = {
       var v = v0
-      while ((v & ~0x7fL) != 0) { out.write(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
-      out.write(v.toInt)
+      while ((v & ~0x7fL) != 0) { byte(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
+      byte(v.toInt)
     }
     def tag(field: Int, wt: Int): Unit = varint((field.toLong << 3) | wt)
     def int64(f: Int, v: Long): Unit = { tag(f, 0); varint(v) }
@@ -34,19 +47,20 @@ private[substrait] object WireCodec {
     def bool(f: Int, v: Boolean): Unit = { tag(f, 0); varint(if (v) 1 else 0) }
     def fixed32(f: Int, v: Int): Unit = {
       tag(f, 5)
-      out.write(v & 0xff); out.write((v >>> 8) & 0xff)
-      out.write((v >>> 16) & 0xff); out.write((v >>> 24) & 0xff)
+      byte(v & 0xff); byte((v >>> 8) & 0xff)
+      byte((v >>> 16) & 0xff); byte((v >>> 24) & 0xff)
     }
     def fixed64(f: Int, v: Long): Unit = {
       tag(f, 1)
-      var i = 0; while (i < 8) { out.write(((v >>> (8 * i)) & 0xff).toInt); i += 1 }
+      var i = 0; while (i < 8) { byte(((v >>> (8 * i)) & 0xff).toInt); i += 1 }
     }
-    def bytes(f: Int, v: Array[Byte]): Unit = { tag(f, 2); varint(v.length.toLong); out.write(v) }
-    def str(f: Int, v: String): Unit = bytes(f, v.getBytes("UTF-8"))
+    def bytes(f: Int, v: Array[Byte]): Unit = { tag(f, 2); varint(v.length.toLong); raw(v, 0, v.length) }
+    def str(f: Int, v: String): Unit = bytes(f, v.getBytes(UTF_8))
     def msg(f: Int, body: W => Unit): Unit = {
       if (depth >= Wire.MaxNestingDepth)
         internalErr(s"message nesting deeper than ${Wire.MaxNestingDepth}")
-      val w = new W(depth + 1); body(w); bytes(f, w.out.toByteArray)
+      val w = new W(depth + 1); body(w)
+      tag(f, 2); varint(w.n.toLong); raw(w.buf, 0, w.n)
     }
   }
 
@@ -94,11 +108,20 @@ private[substrait] object WireCodec {
       val len = length()
       val r = new R(buf, pos, pos + len, depth + 1); pos += len; r
     }
+    /** A length-delimited value as a reader over the same bytes at `depth`:
+      * offsets met while reading it stay offsets in the input. */
+    def window(depth: Int): R = {
+      val len = length()
+      val r = new R(buf, pos, pos + len, depth); pos += len; r
+    }
     def rawBytes(): Array[Byte] = {
       val len = length()
-      val a = java.util.Arrays.copyOfRange(buf, pos, pos + len); pos += len; a
+      val a = Arrays.copyOfRange(buf, pos, pos + len); pos += len; a
     }
-    def str(): String = new String(rawBytes(), "UTF-8")
+    def str(): String = {
+      val len = length()
+      val s = new String(buf, pos, len, UTF_8); pos += len; s
+    }
     def skip(wt: Int): Unit = wt match {
       case 0 => varint()
       case 1 => fixed64()
@@ -154,7 +177,33 @@ private[substrait] object WireCodec {
   /** A whole message carried in a bytes field, one nesting level down. */
   def embedded[T](m: => Msg[T]): Codec[T] = new Codec[T](2) {
     def write(w: W, f: Int, v: T): Unit = w.bytes(f, m.toBytes(v, w.depth + 1))
-    def read(r: R): T = m.fromBytes(r.rawBytes(), r.depth + 1)
+    def read(r: R): T = m.readAll(r.window(r.depth + 1))
+  }
+
+  /** A bytes field kept as a window on the input rather than copied, so a
+    * payload decoded from it later reports offsets in the input. */
+  private val payload: Codec[R] = new Codec[R](2) {
+    def write(w: W, f: Int, v: R): Unit = {
+      w.tag(f, 2); w.varint((v.end - v.pos).toLong); w.raw(v.buf, v.pos, v.end - v.pos)
+    }
+    def read(r: R): R = r.window(r.depth)
+  }
+  private def whole(b: Array[Byte], depth: Int): R = new R(b, 0, b.length, depth)
+
+  /** Remembers, per key, which of several alternatives serves a value: the
+    * first whose `un` is defined at the first value seen with that key. A
+    * key must therefore fix the alternative. */
+  private final class Picker[T, B <: AnyRef](alts: => Seq[B], un: B => PartialFunction[T, Any]) {
+    private val byKey = new ConcurrentHashMap[Any, B]()
+    /** The alternative for `v`, or null if none has a form for it. */
+    def apply(key: Any, v: T): B = {
+      val hit = byKey.get(key)
+      if (hit != null) hit
+      else alts.find(un(_).isDefinedAt(v)) match {
+        case Some(b) => byKey.put(key, b); b
+        case None => null.asInstanceOf[B]
+      }
+    }
   }
 
   // ------------------------------------------------------------------ fields
@@ -224,10 +273,11 @@ private[substrait] object WireCodec {
 
   /** A oneof: each branch, declared with `br` in the body, is one field
     * carrying one case of `T`. `mk` builds the case from the field's value;
-    * `un` both selects the branch a value is written through (branches must
-    * not overlap: at most one `un` matches any value) and takes the field's
-    * value back out. Absent, the oneof reads as `default`, or fails when it
-    * has none. */
+    * `un` takes the field's value back out, and is defined exactly at the
+    * values written through its branch. Which branch that is follows from
+    * `key(v)` — the value's class unless overridden — and is looked up, not
+    * searched, once a key has been seen. Absent, the oneof reads as
+    * `default`, or fails when it has none. */
   abstract class OneOf[T](name: String, default: Option[T] = None) extends Part[T](name) {
     private final class Branch(val num: Int, val name: String, codec: => Codec[Any],
                                val mk: Any => T, val un: PartialFunction[T, Any]) {
@@ -253,32 +303,22 @@ private[substrait] object WireCodec {
     override def seg(num: Int, acc: Any): String = byNum(num).name
     def done(acc: Any): T =
       if (isSet(acc)) acc.asInstanceOf[T] else default.getOrElse(missing)
-    /** The branch last written through, tried first: neighbouring values
-      * often share it. */
-    @volatile private var last: Branch = null
+    /** What fixes a value's branch: values with equal keys take one branch. */
+    protected def key(v: T): Any = v.asInstanceOf[AnyRef].getClass
+    private val pick = new Picker[T, Branch](branches.toSeq, _.un)
     def write(w: W, v: T): Unit = {
-      val hint = last
-      if (hint != null) {
-        val x = hint.un.applyOrElse(v, NoMatch)
-        if (x.asInstanceOf[AnyRef] ne NoMatch) { hint.c.write(w, hint.num, x); return }
-      }
-      val branches = this.branches
-      var i = 0
-      while (i < branches.length) {
-        val b = branches(i)
-        val x = b.un.applyOrElse(v, NoMatch)
-        if (x.asInstanceOf[AnyRef] ne NoMatch) { last = b; b.c.write(w, b.num, x); return }
-        i += 1
-      }
-      notImplemented(s"$name has no wire form for $v")
+      val b = pick(key(v), v)
+      val x = if (b == null) NoMatch else b.un.applyOrElse(v, NoMatch)
+      if (x.asInstanceOf[AnyRef] eq NoMatch) notImplemented(s"$name has no wire form for $v")
+      b.c.write(w, b.num, x)
     }
   }
   private object NoMatch extends (Any => Any) { def apply(v: Any): Any = this }
 
   /** google.protobuf.Any{type_url=1, value=2} whose value is one of the
     * messages declared with `detail` in the body, keyed by its type URL;
-    * `mk`/`un` are as for a oneof branch. The value message sits at the
-    * Any's own nesting level. */
+    * `mk`/`un` are as for a oneof branch, and the value's class fixes its
+    * detail. The value message sits at the Any's own nesting level. */
   abstract class AnyOf[T](what: String) extends Codec[T](2) {
     private final class Detail(val url: String, m: => Msg[Any], val mk: Any => T,
                                val un: PartialFunction[T, Any]) {
@@ -288,21 +328,23 @@ private[substrait] object WireCodec {
     protected def detail[A](url: String, m: => Msg[A])(mk: A => T)(
         un: PartialFunction[T, A]): Unit =
       details += new Detail(url, m.asInstanceOf[Msg[Any]], mk.asInstanceOf[Any => T], un)
-    private lazy val any =
-      msg(field(1, "type_url", string, ""), field(2, "value", bytes, Array.emptyByteArray))
+    private lazy val any = msg(field(1, "type_url", string, ""),
+      field(2, "value", payload, whole(Array.emptyByteArray, 0)))
+    private val pick = new Picker[T, Detail](details.toSeq, _.un)
 
-    def covers(v: T): Boolean = details.exists(_.un.isDefinedAt(v))
+    def covers(v: T): Boolean = pick(v.asInstanceOf[AnyRef].getClass, v) != null
     def write(w: W, f: Int, v: T): Unit = {
-      val d = details.find(_.un.isDefinedAt(v))
-        .getOrElse(notImplemented(s"$what has no wire form for $v"))
-      any.write(w, f, (d.url, d.msg.toBytes(d.un(v), w.depth + 1)))
+      val d = pick(v.asInstanceOf[AnyRef].getClass, v)
+      if (d == null) notImplemented(s"$what has no wire form for $v")
+      any.write(w, f, (d.url, whole(d.msg.toBytes(d.un(v), w.depth + 1), 0)))
     }
     def read(r: R): T = {
       val (url, value) = any.read(r)
       val d = details.find(_.url == url)
         .getOrElse(notImplemented(s"$what with foreign detail '$url'"))
-      try d.mk(d.msg.fromBytes(value, r.depth + 1))
-      catch { case e: RuntimeException => throw trail(e, 0, "value") }
+      val start = value.pos
+      try d.mk(d.msg.readAll(value))
+      catch { case e: RuntimeException => throw trail(e, start, "value") }
     }
   }
 
@@ -334,9 +376,10 @@ private[substrait] object WireCodec {
     def write(w: W, f: Int, v: T): Unit = w.msg(f, writeBody(_, v))
     def read(r: R): T = readBody(r.lenDelim())
     def toBytes(v: T, depth: Int): Array[Byte] = {
-      val w = new W(depth); writeBody(w, v); w.out.toByteArray
+      val w = new W(depth); writeBody(w, v); w.toByteArray
     }
-    def fromBytes(b: Array[Byte], depth: Int): T = readBody(new R(b, 0, b.length, depth))
+    /** Reads the whole of `r` as one message. */
+    def readAll(r: R): T = readBody(r)
 
     /** `un` gives a single part's value itself, several parts' as a tuple;
       * `Same` when `T` already is that. */
@@ -351,7 +394,7 @@ private[substrait] object WireCodec {
     private def readBody(r: R): T = {
       val start = r.pos
       val acc = new Array[Any](parts.length)
-      java.util.Arrays.fill(acc.asInstanceOf[Array[AnyRef]], Unset)
+      Arrays.fill(acc.asInstanceOf[Array[AnyRef]], Unset)
       while (r.hasMore) {
         val at = r.pos; var i = -1; var num = 0
         try {
@@ -429,6 +472,6 @@ private[substrait] object WireCodec {
 
   /** Reads `bytes` as a whole `m` message, its field paths rooted at `root`. */
   def decode[T](m: Msg[T], bytes: Array[Byte], root: String): T =
-    try m.fromBytes(bytes, 0)
+    try m.readAll(whole(bytes, 0))
     catch { case t: Trail => throw t.error(root) }
 }

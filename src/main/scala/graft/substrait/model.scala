@@ -314,8 +314,7 @@ object model {
     def arity(rel: Rel, in: Seq[Int]): Int = {
       def plus(k: Int): Int = if (in.head < 0) -1 else in.head + k
       rel match {
-        case r: Read => r.projection.map(_.size)
-          .getOrElse(if (r.baseSchema == null) -1 else r.baseSchema.names.size)
+        case r: Read => r.projection.map(_.size).getOrElse(r.baseSchema.names.size)
         case r: Project => r.expressions.size
         case r: Aggregate => r.groupings.flatten.distinct.size + r.measures.size +
           (if (r.groupings.size > 1) 1 else 0)

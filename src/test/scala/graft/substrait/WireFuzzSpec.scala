@@ -145,7 +145,9 @@ class WireFuzzSpec extends SparkTestBase {
       }
     } catch {
       case e: WireDecodeError =>
-        if (e.offset < 0 || !e.fieldPath.startsWith("plan")) Some(s"unlocated $e") else None
+        if (e.offset < 0 || e.offset > bytes.length || !e.fieldPath.startsWith("plan"))
+          Some(s"unlocated $e")
+        else None
       case t: Throwable => Some(s"decode threw $t")
     }
 

@@ -447,6 +447,33 @@ class WireSpec extends AnyFunSuite {
     assert(encodes.contains(true) && encodes.contains(false), around)
   }
 
+  // ---- a payload decoded apart from its parent (an extension rel detail, an
+  //      iteration body plan) reports offsets in the input, not in the payload
+
+  private def extensionOf(url: String, value: Array[Byte]) =
+    planOf(lenField(9, lenField(2, readRel) ++
+      lenField(3, lenField(1, url.getBytes("UTF-8")) ++ lenField(2, value))))
+  /** fixed64 tag of field 1 and 4 of its 8 bytes, recognizable in a plan */
+  private val cutFixed64 = Array[Byte](0x09, 0x71, 0x72, 0x73, 0x74)
+  private val detail = "plan.relations[0].rel.extension_single.detail.value"
+
+  test("a malformed detail payload names its offset in the input") {
+    val bytes = extensionOf(Wire.sampleDetailUrl, cutFixed64)
+    val e = located(intercept[SubstraitException](Wire.decode(bytes)), bytes)
+    assert(e.fieldPath == s"$detail.lower", e.getMessage)
+    assert(e.offset == bytes.indexOfSlice(cutFixed64), e.getMessage)
+  }
+
+  test("a malformed iteration body plan names its offset in the input") {
+    val lit = Array[Byte](0x59) ++ cutFixed64.drop(1) // Literal{fp64: 4 of 8 bytes}
+    val body = planOf(projectOf(lenField(1, lit)))
+    val bytes = extensionOf(Wire.iterationDetailUrl, lenField(1, body))
+    val e = located(intercept[SubstraitException](Wire.decode(bytes)), bytes)
+    assert(e.fieldPath ==
+      s"$detail.body_plan.relations[0].rel.project.expressions[0].literal.fp64", e.getMessage)
+    assert(e.offset == bytes.indexOfSlice(lit), e.getMessage)
+  }
+
   // ---- a required sub-message that is missing fails the decode itself,
   //      naming the field, instead of leaving a null for the Validator
 
